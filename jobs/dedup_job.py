@@ -16,12 +16,13 @@ duplicates. Methods: exact | canonical | wordset | minhash | simhash | cc
 | cc_best (cc_best keeps the LONGEST member per near-dup cluster).
 
 Scale notes live with each operator; this job adds only lifecycle:
-  * the output dir is run-scoped and written atomically per run
-    (overwrite) — re-running a failed job never leaves half output
-    visible next to old survivors;
-  * the report is computed from the SAME lazy plan (input count folds on
-    the scan; survivor count on the written result), no extra corpus
-    pass;
+  * survivors go to the fixed ``<output>/deduped`` dir, replaced per run
+    (overwrite), so a rerun never leaves old survivors next to new ones;
+    the dir is not scoped to ``--run-id``, so two concurrent runs into
+    one ``--output`` clobber each other;
+  * the report's input count is a separate ``count()`` over the input
+    (one more scan of the corpus, without the dedup work), and its
+    survivor count is read back from the written survivors;
   * ``--max-bucket`` forwards the LSH bucket cap (bounded-recall mode,
     logged by the operator — see dedup.cap_band_buckets).
 """

@@ -60,7 +60,7 @@ def main(argv: list[str]) -> int:
         resume_filter,
     )
     from xdan_dqa_spark.pipeline import with_doc_id
-    from xdan_dqa_spark.sources.sinks import write_scored_bucketed
+    from xdan_dqa_spark.sources.sinks import appended_files, write_scored_bucketed
 
     from xdan_dqa_spark.config import JobConfig, load_config
 
@@ -121,13 +121,19 @@ def main(argv: list[str]) -> int:
         cfg = replace(cfg, allowed_langs=tuple(x for x in args.langs.split(",") if x))
     scored = score_webtext(df, cfg)
 
+    # Score once: the write runs the scoring plan, and the lineage rows
+    # are read back from the part files that write committed (three small
+    # columns; part_id from each file's write task number) — never from a
+    # second evaluation of `scored`.
     if args.bucketed_table:
-        write_scored_bucketed(scored, args.bucketed_table)
+        written = appended_files(
+            lambda: write_scored_bucketed(scored, args.bucketed_table),
+            spark, table=args.bucketed_table)
     else:
-        scored.write.mode("append").parquet(out_scored)
-    # Lineage from the same deterministic plan (pure UDFs + pure exprs →
-    # re-evaluation yields identical rows to what was just committed).
-    pm = partition_metrics(scored, args.run_id).persist()
+        written = appended_files(
+            lambda: scored.write.mode("append").parquet(out_scored),
+            spark, path=out_scored)
+    pm = partition_metrics(scored, args.run_id, written_files=written).persist()
     pm.write.mode("append").parquet(out_metrics)
 
     from pyspark.sql import functions as F

@@ -146,3 +146,177 @@ def test_dedup_job_subprocess_end_to_end(tmp_path):
         f"SELECT n_input, n_kept, n_dropped FROM '{dd}/report/*.parquet'"
     ).fetchone()
     assert rep == (400, n_kept, 400 - n_kept)
+
+
+# --- lineage from the written files: one scoring pass per run --------------
+
+def _job():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "quality_filter_job", os.path.join(REPO, "jobs", "quality_filter_job.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _run_in_process(monkeypatch, capsys, argv):
+    """quality_filter_job.main in this process, on the test session (the
+    job's closing spark.stop() is a no-op here). Returns its stdout."""
+    from pyspark.sql import SparkSession
+
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    assert _job().main([*argv, "--master", "local[4]"]) == 0
+    return capsys.readouterr().out
+
+
+def _total_items(stdout):
+    return int(re.search(r"Total Items\s+(\d+)", stdout).group(1))
+
+
+def _webtext_inputs(webtext, tmp_path):
+    """A 200-url parquet and its 300-url superset, 4 files each."""
+    base = webtext.select("url", "warc_ts", "html", "text", "lang").orderBy("url")
+    paths = {}
+    for n in (200, 300):
+        paths[n] = str(tmp_path / f"in{n}")
+        base.limit(n).repartition(4, "url").write.parquet(paths[n])
+    return paths
+
+
+def _part_tables(path):
+    """Each parquet part file under ``path`` as a pyarrow table (the
+    per-file schema keeps the nullability Spark wrote)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    return [pq.read_table(f) for f in sorted(glob.glob(f"{path}/*.parquet"))]
+
+
+def _lineage_rows(tables, run_id):
+    return sorted(
+        tuple(r.values())
+        for t in tables
+        for r in t.drop(["committed_at"]).to_pylist()
+        if r["run_id"] == run_id
+    )
+
+
+def test_job_lineage_equals_plan_lineage(spark, webtext, tmp_path, monkeypatch, capsys):
+    """The job's metrics/ rows — read back from the files its write
+    committed — equal partition_metrics evaluated on the same scored plan
+    (part_id, every aggregate and the parquet schema, committed_at aside),
+    on a fresh run and on a --resume run that adds new docs."""
+    from xdan_dqa_spark.operators import metrics
+
+    plans = {}
+    orig = metrics.partition_metrics
+
+    def spy(scored, run_id, written_files=None):
+        plans[run_id] = scored
+        return orig(scored, run_id, written_files)
+
+    monkeypatch.setattr(metrics, "partition_metrics", spy)
+    inputs = _webtext_inputs(webtext, tmp_path)
+    out = str(tmp_path / "out")
+    fresh = _run_in_process(monkeypatch, capsys, [
+        "--input", inputs[200], "--output", out, "--run-id", "fresh"])
+    resumed = _run_in_process(monkeypatch, capsys, [
+        "--input", inputs[300], "--output", out, "--run-id", "resume", "--resume"])
+    assert (_total_items(fresh), _total_items(resumed)) == (200, 100)
+
+    job_tables = _part_tables(f"{out}/metrics")
+    for run_id, n_docs in (("fresh", 200), ("resume", 100)):
+        # a plan's input file listing is fixed when the plan is built, so
+        # evaluating it again after the write scores this run's docs only
+        ref = str(tmp_path / f"ref-{run_id}")
+        orig(plans[run_id], run_id).write.parquet(ref)
+        ref_tables = _part_tables(ref)
+        got = _lineage_rows(job_tables, run_id)
+        assert got == _lineage_rows(ref_tables, run_id)
+        assert len(got) > 1                      # several partitions, each its part_id
+        assert sum(r[2] for r in got) == n_docs
+        want_schema = ref_tables[0].schema.remove_metadata()
+        assert all(t.schema.remove_metadata().equals(want_schema) for t in job_tables)
+
+
+def _sql_executions(spark):
+    """(id, physical plan text) of every SQL execution this session ran,
+    from its SQL status store (listener bus drained first)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [(e.executionId(), e.physicalPlanDescription())
+            for e in (execs.apply(i) for i in range(execs.size()))]
+
+
+def test_job_scores_each_document_once(spark, webtext, tmp_path, monkeypatch, capsys):
+    """Exactly one executed SQL plan per job run holds the fused Arrow UDF:
+    the write. Lineage, the summary and the RESULT read-back must not
+    evaluate the scoring plan again."""
+    inputs = _webtext_inputs(webtext, tmp_path)
+    before = {i for i, _ in _sql_executions(spark)}
+    out = _run_in_process(monkeypatch, capsys, [
+        "--input", inputs[200], "--output", str(tmp_path / "out"), "--run-id", "once"])
+    assert _total_items(out) == 200
+    plans = [p for i, p in _sql_executions(spark) if i not in before]
+    assert len(plans) > 1
+    assert sum("ArrowEvalPython" in p for p in plans) == 1
+
+
+def test_job_lineage_empty_runs(spark, webtext, tmp_path, monkeypatch, capsys):
+    """A --resume run with no new docs and a run over an empty input each
+    write zero lineage rows and print "Total Items 0"; every metrics file
+    keeps the lineage schema (part_id int32 not null)."""
+    from xdan_dqa_spark.operators.metrics import partition_metrics
+    from xdan_dqa_spark.pipeline import score_webtext, with_doc_id
+
+    inputs = _webtext_inputs(webtext, tmp_path)
+    empty = str(tmp_path / "empty")
+    webtext.select("url", "warc_ts", "html", "text", "lang").limit(0).write.parquet(empty)
+    out = str(tmp_path / "out")
+    runs = [("first", inputs[200], []), ("again", inputs[200], ["--resume"]),
+            ("none", empty, ["--resume"])]
+    for run_id, inp, extra in runs:
+        stdout = _run_in_process(monkeypatch, capsys, [
+            "--input", inp, "--output", out, "--run-id", run_id, *extra])
+        assert _total_items(stdout) == (200 if run_id == "first" else 0)
+    tables = _part_tables(f"{out}/metrics")
+    assert sum(r[2] for r in _lineage_rows(tables, "first")) == 200
+    assert _lineage_rows(tables, "again") == _lineage_rows(tables, "none") == []
+    assert len({str(t.schema.remove_metadata()) for t in tables}) == 1
+    part_id = tables[0].schema.field("part_id")
+    assert str(part_id.type) == "int32" and not part_id.nullable
+
+    # nothing written at all: zero rows, no read of an empty path list
+    scored = score_webtext(with_doc_id(webtext.limit(0)))
+    pm = partition_metrics(scored, "r", written_files=[])
+    assert pm.count() == 0
+    assert pm.schema == partition_metrics(scored, "r").schema
+
+
+def test_bucketed_job_lineage_sums_to_appended_rows(webtext, tmp_path):
+    """--bucketed-table: each run's lineage (from the bucket files its
+    write added, grouped by write task) sums to the rows it appended."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    inputs = _webtext_inputs(webtext, tmp_path)
+    wh = tmp_path / "wh"
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "4", "XDAN_DQA_WAREHOUSE": str(wh)}
+    out = str(tmp_path / "out")
+    for run_id, n, extra in (("b1", 200, []), ("b2", 300, ["--resume"])):
+        r = subprocess.run(
+            [sys.executable, os.path.join(REPO, "jobs", "quality_filter_job.py"),
+             "--input", inputs[n], "--output", out, "--run-id", run_id,
+             "--bucketed-table", "scored_bkt", "--master", "local[4]", *extra],
+            capture_output=True, text=True, timeout=600, env=env, cwd=REPO,
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+        assert f"RESULT run_id={run_id} committed_docs={n} " in r.stdout
+    tables = _part_tables(f"{out}/metrics")
+    assert sum(r[2] for r in _lineage_rows(tables, "b1")) == 200
+    assert sum(r[2] for r in _lineage_rows(tables, "b2")) == 100
+    bucket_files = glob.glob(str(wh / "warehouse" / "scored_bkt" / "*.parquet"))
+    assert sum(pq.read_metadata(f).num_rows for f in bucket_files) == 300

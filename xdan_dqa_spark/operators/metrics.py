@@ -3,7 +3,7 @@
 Re-expresses the reference's batch metrics (``calculate_batch_metrics``
 ``src/processor.py:404-421``: average/min/max score, success rate) and its
 run-summary stats (``src/cli.py:119-139``) as ONE aggregation over the
-scored DataFrame, grouped by physical partition id — each Spark partition
+scored rows, grouped by physical partition id — each Spark partition
 is the analogue of a reference "batch", so lineage is per-unit-of-work
 and a resumed run can prove which partitions committed.
 """
@@ -13,12 +13,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+_LINEAGE_COLS = ("keep", "score", "scrub_count")
 
-def partition_metrics(scored: DataFrame, run_id: str) -> DataFrame:
-    """One lineage row per physical partition of the scored output."""
+
+def _write_task(file_name: F.Column) -> F.Column:
+    """The write task number in a Spark part file name (``part-NNNNN-…``,
+    bucketed ``part-NNNNN-<uuid>_BBBBB…``): the partition index of the
+    plan that was written. A string→int cast is typed nullable; ANSI mode
+    fails on a name without a number, so the coalesce only restores the
+    ``int not null`` type that ``spark_partition_id()`` has."""
+    n = F.regexp_extract(file_name, r"^part-(\d+)", 1).cast("int")
+    return F.coalesce(n, F.lit(-1))
+
+
+def partition_metrics(scored: DataFrame, run_id: str,
+                      written_files: list[str] | None = None) -> DataFrame:
+    """One lineage row per physical partition of the scored output.
+
+    Without ``written_files`` the rows come from evaluating ``scored``,
+    with ``part_id = spark_partition_id()`` — a full run of its plan.
+
+    A job that has just written ``scored`` passes the part files that
+    write committed instead: only ``_LINEAGE_COLS`` are read back from
+    them, and ``part_id`` is the write task number in each file name,
+    which equals ``spark_partition_id()`` in the written plan. The
+    scoring plan then runs once, in the write. Rows and schema match the
+    plan-evaluated form; ``avg_score`` can differ in the last bit only
+    when one task's rows are split over several files or read splits
+    (summation order). An empty list — nothing written — gives zero rows
+    of the same schema.
+    """
+    if written_files is None:
+        rows = scored.withColumn("part_id", F.spark_partition_id())
+    else:
+        spark = scored.sparkSession
+        schema = scored.select(*_LINEAGE_COLS).schema
+        if written_files:
+            rows = (spark.read.schema(schema).parquet(*written_files)
+                    .withColumn("part_id", _write_task(F.col("_metadata.file_name"))))
+        else:
+            rows = spark.createDataFrame([], schema.add("part_id", "integer", False))
     return (
-        scored.withColumn("part_id", F.spark_partition_id())
-        .groupBy("part_id")
+        rows.groupBy("part_id")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum(F.col("keep").cast("long")).alias("n_keep"),

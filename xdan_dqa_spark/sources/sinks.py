@@ -21,8 +21,9 @@ from __future__ import annotations
 
 import re
 import time
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -111,6 +112,33 @@ def write_scored_bucketed(scored: DataFrame, table: str, n_buckets: int = 64,
     (scored.write.mode(mode).format(fmt)
      .bucketBy(n_buckets, "doc_id").sortBy("doc_id").saveAsTable(table))
     return table
+
+
+def output_files(spark: SparkSession, path: str | None = None,
+                 table: str | None = None) -> set[str]:
+    """The data files committed under a parquet ``path`` or a managed
+    ``table``; empty before the first write."""
+    if table is not None:
+        if not spark.catalog.tableExists(table):
+            return set()
+        spark.catalog.refreshTable(table)  # the catalog caches file listings
+        return set(spark.table(table).inputFiles())
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p):
+        return set()
+    # a given schema skips the footer read that inference would cost
+    return set(spark.read.schema("doc_id long").parquet(path).inputFiles())
+
+
+def appended_files(write: Callable[[], object], spark: SparkSession,
+                   path: str | None = None, table: str | None = None) -> list[str]:
+    """Run ``write`` (an append to ``path`` or ``table``) and return the
+    part files it committed: the output's listing after, minus before.
+    Another writer appending to the same output at the same time would
+    have its files counted too."""
+    before = output_files(spark, path, table)
+    write()
+    return sorted(output_files(spark, path, table) - before)
 
 
 def write_keep_drop(scored: DataFrame, out_dir: str, fmt: str = "parquet") -> None:

@@ -29,6 +29,7 @@ from ..operators.metrics import partition_metrics
 from ..operators.score import QualityConfig
 from ..pipeline import score_webtext, with_doc_id
 from ..schemas import WEBTEXT_SCHEMA
+from ..sources.sinks import appended_files
 
 
 def webtext_stream(spark: SparkSession, input_dir: str,
@@ -52,17 +53,20 @@ def score_stream(
     run_id: str = "stream",
 ) -> StreamingQuery:
     """Score every new file that lands in ``input_dir``; append scored rows
-    + per-partition lineage under ``output_dir``. Restart-safe via the
-    streaming checkpoint (exactly-once file tracking + idempotent appends).
+    + per-partition lineage under ``output_dir``. Each micro-batch is
+    scored once: its lineage is read back from the part files its write
+    committed. Restart-safe via the streaming checkpoint (exactly-once
+    file tracking + idempotent appends).
     """
     cfg = cfg or QualityConfig()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         scored = score_webtext(with_doc_id(batch_df), cfg)
-        scored.write.mode("append").parquet(f"{output_dir}/scored")
-        partition_metrics(scored, f"{run_id}-b{batch_id}").write.mode(
-            "append"
-        ).parquet(f"{output_dir}/metrics")
+        out = f"{output_dir}/scored"
+        written = appended_files(lambda: scored.write.mode("append").parquet(out),
+                                 spark, path=out)
+        pm = partition_metrics(scored, f"{run_id}-b{batch_id}", written_files=written)
+        pm.write.mode("append").parquet(f"{output_dir}/metrics")
 
     writer = (
         webtext_stream(spark, input_dir)
