@@ -1,9 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship deterministic quality pipeline on
-sf0.001; ``queries()``/``oracle_sql()`` cover every SQL-expressible
-operator from SURVEY.md §2 plus the dedup/similarity/text-analysis stack
-(non-SQL-expressible ops ship without an oracle → rows-only check).
+sf0.001. ``queries()`` returns the 254 queries: the operators of
+SURVEY.md §2 plus the dedup/similarity/text-analysis stack.
+``oracle_sql()`` returns the DuckDB twin of each of them except the
+flagship ``pipeline_score_documents`` (rows-only); it builds the SQL
+strings without a SparkSession. Both come from the one registry table
+in ``xdan_dqa_spark/plans/entry_queries.py``.
 """
 
 from __future__ import annotations

@@ -682,7 +682,6 @@ def main() -> None:
         "p2_category",
         "f1_category_filter",
         "a1_batch_metrics",
-        "a5_lineitem_summary",
         "j1_anti_join_resume",
         "j2_last_wins_dedup",
         "dedup_exact",

@@ -3,7 +3,9 @@
 the same parquet, compare row count, column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted).
 
-Usage: python scripts/check_oracles.py [sf_dir] [only_query_name]
+Usage: SPARK_GRAFT_CPUS=$(nproc) python scripts/check_oracles.py [sf_dir] [only_query_name]
+
+The session is get_spark's default, local[$SPARK_GRAFT_CPUS].
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ def main() -> int:
     import __spark_entry__ as e
     from xdan_dqa_spark.session import get_spark
 
-    spark = get_spark("check_oracles", master="local[8]")
+    spark = get_spark("check_oracles")
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"

@@ -956,6 +956,28 @@ def test_theta_estimate_within_error_band(spark, keys10k):
     assert abs(row["theta_estimate"] - 10_000) < 4 * 0.08 * 10_000
 
 
+def test_theta_set_overlap_counts_at_hash_grain(spark):
+    """Two distinct values with one 32-bit theta hash are one sample
+    element: the counts are of distinct hashes, as in theta_distinct_by
+    and the DuckDB twin, not of distinct values."""
+    import hashlib
+
+    from xdan_dqa_spark.operators.sketches import theta_set_overlap
+
+    x, y = "w29709", "w46597"
+
+    def h32(v):
+        return int(hashlib.md5(f"th:{v}".encode()).hexdigest()[:8], 16)
+
+    assert x != y and h32(x) == h32(y)
+    a = spark.createDataFrame([(x,), (y,)], "v string")
+    b = spark.createDataFrame([(x,)], "v string")
+    row = theta_set_overlap(a, b, "v", lg_theta=0).collect()[0]
+    assert row["est_a"] == 1 and row["est_b"] == 1
+    assert row["est_intersect"] == 1 and row["est_a_only"] == 0
+    assert row["exact_intersect"] == 1
+
+
 def test_theta_repartition_invariance(spark, keys10k):
     """Map-side filter + hash-grain distinct: the estimate is a pure
     function of the value SET, so any repartitioning gives bit-identical

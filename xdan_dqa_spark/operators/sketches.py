@@ -815,8 +815,10 @@ def theta_set_overlap(df_a: DataFrame, df_b: DataFrame, col: str,
     approximation; the only estimation error is the sampling itself.
     Scale: two map-side filters + hash-grain distincts, then set ops on
     ~1/2^lg_theta of the vocabulary."""
-    sa = theta_sample(df_a, col, lg_theta).select("h")
-    sb = theta_sample(df_b, col, lg_theta).select("h")
+    # Count at hash grain: two values whose hashes collide are one sample
+    # element, as in theta_distinct_by and the DuckDB twin.
+    sa = theta_sample(df_a, col, lg_theta).select("h").distinct()
+    sb = theta_sample(df_b, col, lg_theta).select("h").distinct()
     m = F.lit(1 << lg_theta).cast("long")
     na = sa.agg(F.count("*").alias("na"))
     nb = sb.agg(F.count("*").alias("nb"))

@@ -719,33 +719,6 @@ FROM c JOIN e ON c.user_id = e.user_id
              AND c.tus BETWEEN e.start_us AND e.end_us
 """
 
-# J3 star-schema dim join with EXPLICIT broadcast hints: region and
-# nation are bounded dims (25/5 rows at any scale), so both joins are
-# map-side BroadcastHashJoins — zero shuffle of the fact table.
-
-def q_j3_dim_broadcast(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer")
-    nat = _t(spark, sf_dir, "nation")
-    reg = _t(spark, sf_dir, "region")
-    return (
-        cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.count("*").alias("n_customers"),
-            _dec_sum(F.col("c_acctbal"), "total_acctbal"),
-        )
-    )
-
-
-SQL_J3_DIM = """
-SELECT r_name, n_name, COUNT(*) AS n_customers,
-       CAST(SUM(CAST(c_acctbal AS DECIMAL(20,6))) AS DOUBLE) AS total_acctbal
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-              JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name, n_name
-"""
-
 # Rolling time-range aggregate: per-user trailing-1-hour mean of
 # `value` at each event — a RANGE-frame window (rangeBetween on
 # epoch-µs), the streaming-features primitive for rate/velocity
@@ -1175,37 +1148,9 @@ SELECT event_type, COUNT(*) AS n_events,
 FROM events GROUP BY event_type
 """
 
-# TPC-H-Q1-style pricing summary (A1 at warehouse scale)
-
-def q_a5_lineitem_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            _dec_sum(F.col("l_quantity"), "sum_qty"),
-            _dec_sum(F.col("l_extendedprice"), "sum_base_price"),
-            _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-SQL_A5 = """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(20,6))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(20,6))) AS DOUBLE) AS sum_base_price,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(20,6))) AS DOUBLE) AS sum_disc_price,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-# ------------------------------------------------------- rows-only queries
-# (non-SQL-expressible: pandas UDFs / engine-specific hashing — the driver
-# records a weaker rows-only check for these.)
+# ------------------------------------------------- UDF- and hash-backed queries
+# (pandas UDFs / engine-specific hashing. Each has a DuckDB twin except the
+# flagship pipeline_score_documents, which is checked on rows only.)
 
 # P6 error-default row (reference src/processor.py:122-146): rows that fail
 # validation get zeroed scores + category 'ERROR' instead of being dropped.
@@ -2415,7 +2360,7 @@ SELECT CASE WHEN c.c_custkey IS NULL THEN 'order_only'
             WHEN oa.o_custkey IS NULL THEN 'customer_only'
             ELSE 'both' END AS segment,
        COUNT(*) AS n_keys,
-       COALESCE(SUM(n_orders), 0) AS n_orders,
+       CAST(COALESCE(SUM(n_orders), 0) AS BIGINT) AS n_orders,
        COALESCE(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 0.0) AS order_value
 FROM customer c FULL OUTER JOIN oa ON c.c_custkey = oa.o_custkey
 GROUP BY 1
@@ -3553,94 +3498,8 @@ FROM n GROUP BY label
 
 
 # ------------------------------------------------------------ round-5 batch 10
-# Classic warehouse shapes over the TPC-H-ish tables (three-way
-# shipping-priority join, EXISTS-style late-shipment census) and the
-# cross-source near-dup contamination matrix composed from the verified
-# LSH pair machinery.
-
-
-def q_o3_shipping_priority(spark, sf_dir):
-    # TPC-H Q3 shape: segment-filtered customer ⋈ orders ⋈ lineitem,
-    # top-10 open orders by discounted revenue. Both date filters reach
-    # the scans (pushdown); the joins shuffle on their keys and AQE picks
-    # broadcast for whichever side dwarfs — neither is forced, because at
-    # 100 TB the customer side is NOT broadcastable. Revenue terms ride
-    # the DECIMAL(20,6) cast-sum discipline (order-free, matches DuckDB's
-    # cast rounding bit-for-bit, see a5/j4). Timestamps are emitted as
-    # integral epoch-µs so the value hash is tz/format-free.
-    cutoff = F.lit("1998-01-01").cast("timestamp")
-    c = (
-        _t(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff).select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff).select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey",
-                 F.unix_micros(F.col("o_orderdate").cast("timestamp"))
-                 .alias("order_date_us"),
-                 "o_orderpriority")
-        .agg(_dec_sum(rev, "revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(10)
-    )
-
-
-SQL_O3_SHIPPING = """
-SELECT l.l_orderkey, epoch_us(o.o_orderdate) AS order_date_us,
-       o.o_orderpriority,
-       CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(20,6))) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01'
-  AND l.l_shipdate > TIMESTAMP '1998-01-01'
-GROUP BY 1, 2, 3
-ORDER BY revenue DESC, l.l_orderkey ASC
-LIMIT 10
-"""
-
-
-def q_a22_late_ship_priority(spark, sf_dir):
-    # TPC-H Q4 shape: per order priority, how many orders had at least
-    # one line item shipped more than 90 days after the order date — the
-    # EXISTS pattern as a LEFT SEMI join (one shuffle on orderkey, the
-    # lineitem side folds to distinct matching keys map-side; no
-    # count-distinct state, no row explosion on multi-line orders).
-    # Timestamp + interval arithmetic is integral µs in both engines.
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    late = o.join(
-        li,
-        (o.o_orderkey == li.l_orderkey)
-        & (li.l_shipdate > o.o_orderdate + F.expr("INTERVAL 90 DAYS")),
-        "left_semi",
-    )
-    return late.groupBy("o_orderpriority").agg(F.count("*").alias("n_orders"))
-
-
-SQL_A22_LATE_SHIP = """
-SELECT o_orderpriority, COUNT(*) AS n_orders
-FROM orders o
-WHERE EXISTS (
-  SELECT 1 FROM lineitem l
-  WHERE l.l_orderkey = o.o_orderkey
-    AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
-)
-GROUP BY o_orderpriority
-"""
+# The cross-source near-dup contamination matrix composed from the
+# verified LSH pair machinery.
 
 
 def q_dup_cross_source(spark, sf_dir):
@@ -3682,131 +3541,8 @@ GROUP BY 1, 2
 
 
 # ------------------------------------------------------------ round-5 batch 11
-# Remaining classic warehouse join shapes (TPC-H Q5 six-way regional
-# volume, Q14 promo share, Q19 disjunctive pushdown) plus three event/
-# document sequence reports (min_by/max_by endpoints, lag-based
-# transition matrix, integer-exact per-language deciles).
-
-
-def q_o4_regional_volume(spark, sf_dir):
-    # TPC-H Q5 shape: customer ⋈ orders ⋈ lineitem ⋈ supplier ⋈ nation
-    # ⋈ region with the "local supplier" constraint s_nationkey ==
-    # c_nationkey, revenue per nation for one region. nation/region are
-    # tiny and broadcast for free; customer/orders/lineitem shuffle on
-    # their join keys, and the region filter prunes the nation (and
-    # therefore supplier) side BEFORE the big joins — at 100 TB that
-    # predicate transitively removes ~4/5 of the probe side. DECIMAL
-    # cast-sum keeps the revenue order-free and DuckDB-bit-identical.
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AFRICA")
-    nr = F.broadcast(
-        n.join(r, n.n_regionkey == r.r_regionkey).select("n_nationkey", "n_name")
-    )
-    sn = s.join(nr, s.s_nationkey == nr.n_nationkey).select(
-        "s_suppkey", "s_nationkey", "n_name"
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(sn, (li.l_suppkey == sn.s_suppkey)
-                  & (c.c_nationkey == sn.s_nationkey))
-        .groupBy("n_name")
-        .agg(_dec_sum(rev, "revenue"))
-    )
-
-
-SQL_O4_REGIONAL_VOLUME = """
-SELECT n.n_name,
-       CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(20,6))) AS DOUBLE) AS revenue
-FROM customer c
-JOIN orders o ON o.o_custkey = c.c_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey AND s.s_nationkey = c.c_nationkey
-JOIN nation n ON n.n_nationkey = s.s_nationkey
-JOIN region r ON r.r_regionkey = n.n_regionkey
-WHERE r.r_name = 'AFRICA'
-GROUP BY 1
-"""
-
-
-def q_a23_promo_share(spark, sf_dir):
-    # TPC-H Q14 shape: what fraction of revenue comes from PROMO parts.
-    # The part side carries only (p_partkey, p_type) — column pruning
-    # reaches the scan — and both the conditional and total revenue ride
-    # ONE aggregate over the joined fact (no second pass). The final
-    # ratio is a single row; rounded at 6dp so the double division
-    # hashes identically across engines.
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_extendedprice", "l_discount"
-    )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .agg(_dec_sum(promo, "_promo"), _dec_sum(rev, "_total"))
-        .select(
-            F.round(F.col("_promo") / F.col("_total"), 6).alias("promo_share")
-        )
-    )
-
-
-SQL_A23_PROMO_SHARE = """
-SELECT round(
-  CAST(SUM(CAST(CASE WHEN p.p_type = 'PROMO'
-                     THEN l.l_extendedprice * (1.0 - l.l_discount)
-                     ELSE 0 END AS DECIMAL(20,6))) AS DOUBLE)
-  / CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                  AS DECIMAL(20,6))) AS DOUBLE), 6) AS promo_share
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-"""
-
-
-def q_f3_disjunctive_parts(spark, sf_dir):
-    # TPC-H Q19 shape: OR-of-ANDs over (brand, size, quantity). The
-    # brand/size conjuncts involve only part columns and the quantity
-    # ones only lineitem columns, so Catalyst derives the per-side
-    # residual filters (brand IN (...), quantity BETWEEN 1 AND 50) and
-    # pushes them below the join — .explain shows PushedFilters on both
-    # scans. At 100 TB that turns a join-then-filter into two pruned
-    # scans joined on a ~3-brand part slice.
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    j = li.join(p, li.l_partkey == p.p_partkey)
-    q, b, sz = F.col("l_quantity"), F.col("p_brand"), F.col("p_size")
-    cond = (
-        ((b == "Brand#1") & sz.between(1, 10) & q.between(1, 20))
-        | ((b == "Brand#2") & sz.between(11, 25) & q.between(10, 40))
-        | ((b == "Brand#3") & sz.between(26, 50) & q.between(20, 50))
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return j.filter(cond).agg(
-        _dec_sum(rev, "revenue"), F.count("*").alias("n_lines")
-    )
-
-
-SQL_F3_DISJUNCTIVE = """
-SELECT CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(20,6))) AS DOUBLE) AS revenue,
-       COUNT(*) AS n_lines
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 10
-       AND l.l_quantity BETWEEN 1 AND 20)
-   OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 11 AND 25
-       AND l.l_quantity BETWEEN 10 AND 40)
-   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 26 AND 50
-       AND l.l_quantity BETWEEN 20 AND 50)
-"""
+# Three event/document sequence reports (min_by/max_by endpoints,
+# lag-based transition matrix, integer-exact per-language deciles).
 
 
 def q_a24_first_last_event(spark, sf_dir):
@@ -3952,198 +3688,6 @@ FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 
-def q_o5_returned_revenue(spark, sf_dir):
-    # TPC-H Q10 shape: top-20 customers by revenue lost to RETURNED items
-    # in one quarter — c ⋈ o ⋈ l ⋈ n with both filters (order-date window,
-    # returnflag) pushed to their scans. nation (bounded dim) is
-    # explicitly broadcast; the customer join shuffles on its key and AQE
-    # may broadcast the quarter-filtered order side — neither fact side
-    # is forced. Revenue rides the DECIMAL(20,6) cast-sum; the date is
-    # epoch-µs so the hash is tz-free.
-    lo = F.lit("1997-01-01").cast("timestamp")
-    hi = F.lit("1997-04-01").cast("timestamp")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi)
-    ).select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    c = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_acctbal", "c_nationkey"
-    )
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(_dec_sum(rev, "revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(20)
-    )
-
-
-SQL_O5_RETURNED_REVENUE = """
-SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
-       CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(20,6))) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE l.l_returnflag = 'R'
-  AND o.o_orderdate >= TIMESTAMP '1997-01-01'
-  AND o.o_orderdate <  TIMESTAMP '1997-04-01'
-GROUP BY 1, 2, 3, 4
-ORDER BY revenue DESC, c.c_custkey ASC
-LIMIT 20
-"""
-
-
-def q_a27_linestatus_priority(spark, sf_dir):
-    # TPC-H Q12 shape: per line status, how many LATE-shipped lines
-    # (shipped > 60 days after order) belong to high- vs low-priority
-    # orders — the dual conditional aggregate rides ONE join + ONE
-    # map-side-combined fold; the lateness predicate lives in integral-µs
-    # interval arithmetic identical in both engines. (The canonical Q12
-    # groups by l_shipmode; this corpus carries no shipmode column, so
-    # l_linestatus stands in — the join/conditional-agg shape is the
-    # point.)
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linestatus", "l_shipdate"
-    )
-    late = (
-        F.unix_micros(F.col("l_shipdate").cast("timestamp"))
-        - F.unix_micros(F.col("o_orderdate").cast("timestamp"))
-        > F.lit(60 * 86400 * 1_000_000)
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .filter(late)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_priority_late"),
-            F.sum(F.when(high, 0).otherwise(1)).alias("low_priority_late"),
-        )
-    )
-
-
-SQL_A27_LINESTATUS_PRIORITY = """
-SELECT l.l_linestatus,
-       CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_priority_late,
-       CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 0 ELSE 1 END) AS BIGINT) AS low_priority_late
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE epoch_us(l.l_shipdate) - epoch_us(o.o_orderdate)
-      > CAST(60 AS BIGINT) * 86400 * 1000000
-GROUP BY 1
-"""
-
-
-def q_o6_large_orders(spark, sf_dir):
-    # TPC-H Q18 shape: orders whose TOTAL line-item quantity exceeds a
-    # threshold, with their customer — groupBy(orderkey) + HAVING first,
-    # so the expensive joins see only the tiny qualifying set (AQE
-    # broadcasts it against orders/customer at any scale; the raw
-    # lineitem table never joins unaggregated). Quantity sums ride
-    # DECIMAL(20,6).
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(_dec_sum(F.col("l_quantity"), "total_qty"))
-        .filter(F.col("total_qty") > 220.0)
-    )
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_custkey",
-            "c_name",
-            F.col("o_orderkey").alias("orderkey"),
-            F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("order_date_us"),
-            "o_totalprice",
-            "total_qty",
-        )
-    )
-
-
-SQL_O6_LARGE_ORDERS = """
-WITH big AS (
-  SELECT l_orderkey,
-         CAST(SUM(CAST(l_quantity AS DECIMAL(20,6))) AS DOUBLE) AS total_qty
-  FROM lineitem GROUP BY 1 HAVING total_qty > 220.0)
-SELECT c.c_custkey, c.c_name, o.o_orderkey AS orderkey,
-       epoch_us(o.o_orderdate) AS order_date_us, o.o_totalprice, b.total_qty
-FROM big b
-JOIN orders o ON b.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-"""
-
-
-def q_a29_nation_flows(spark, sf_dir):
-    # TPC-H Q7 shape: cross-nation trade flows — revenue shipped per
-    # (supplier nation → customer nation, year) for nation pairs that
-    # DIFFER. The two nation dims are bounded and explicitly broadcast
-    # (two BroadcastHashJoins); the inequality filter runs after the
-    # broadcast attach, map-side, never as a join condition blow-up. The
-    # fact joins shuffle on their keys; year extraction is integral in
-    # both engines.
-    lo = F.lit("1999-01-01").cast("timestamp")
-    hi = F.lit("2001-01-01").cast("timestamp")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi)
-    ).select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount", "l_shipdate")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sk"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("ck"), F.col("n_name").alias("cust_nation")
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year"))
-        .agg(_dec_sum(rev, "revenue"))
-    )
-
-
-SQL_A29_NATION_FLOWS = """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       CAST(date_part('year', l.l_shipdate) AS INT) AS ship_year,
-       CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(20,6))) AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-WHERE l.l_shipdate >= TIMESTAMP '1999-01-01'
-  AND l.l_shipdate <  TIMESTAMP '2001-01-01'
-  AND n1.n_name <> n2.n_name
-GROUP BY 1, 2, 3
-"""
-
-
 def q_a28_vocab_census(spark, sf_dir):
     # Corpus-grain vocabulary census per source (Heaps'-law probe): total
     # tokens, DISTINCT terms, and tokens-per-type. lexical_diversity is
@@ -4256,49 +3800,6 @@ SELECT w.doc_id,
        coalesce(a.n_tokens_kept, 0) AS n_tokens_kept,
        coalesce(a.text_scrubbed, '') AS text_scrubbed
 FROM words w LEFT JOIN agg a USING (doc_id)
-"""
-
-
-def q_o7_top_supplier(spark, sf_dir):
-    # TPC-H Q15 shape: the supplier(s) with MAX revenue in a quarter —
-    # the correlated scalar-subquery form re-expressed as an
-    # unpartitioned window max over the ALREADY-AGGREGATED supplier-grain
-    # table (bounded by #suppliers, never the fact table), so the single
-    # window task is O(#suppliers). Ties all surface (Q15 semantics).
-    lo = F.lit("1999-01-01").cast("timestamp")
-    hi = F.lit("1999-04-01").cast("timestamp")
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi)
-    ).select("l_suppkey", "l_extendedprice", "l_discount")
-    rev = (
-        li.groupBy("l_suppkey")
-        .agg(_dec_sum(
-            F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")),
-            "total_rev",
-        ))
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    w = Window.partitionBy()
-    return (
-        rev.withColumn("_mx", F.max("total_rev").over(w))
-        .filter(F.col("total_rev") == F.col("_mx"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "total_rev")
-    )
-
-
-SQL_O7_TOP_SUPPLIER = """
-WITH rev AS (
-  SELECT l_suppkey,
-         CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-                       AS DECIMAL(20,6))) AS DOUBLE) AS total_rev
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1999-01-01'
-    AND l_shipdate <  TIMESTAMP '1999-04-01'
-  GROUP BY 1)
-SELECT s.s_suppkey, s.s_name, r.total_rev
-FROM rev r JOIN supplier s ON r.l_suppkey = s.s_suppkey
-WHERE r.total_rev = (SELECT max(total_rev) FROM rev)
 """
 
 
@@ -4557,255 +4058,6 @@ FROM keyed GROUP BY canonical_url
 """
 
 
-def q_a30_cust_order_dist(spark, sf_dir):
-    """TPC-H Q13 shape: the customer-order-count distribution INCLUDING
-    zero-order customers — a LEFT join (anti-join-like zeros must
-    survive), count at customer grain, then a tiny second fold at count
-    grain. The priority predicate lives in the JOIN CONDITION, not a
-    WHERE (a WHERE would turn the left join inner and lose the zeros).
-    Scale: both sides shuffle on custkey once; the count fold is
-    map-side combinable; the distribution fold's key space is bounded
-    by max orders/customer."""
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    ).select("o_custkey", "o_orderkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    per = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
-    return per.groupBy("n_orders").agg(F.count("*").alias("n_customers"))
-
-
-SQL_A30_CUST_ORDER_DIST = """
-WITH per_cust AS (
-  SELECT c.c_custkey, COUNT(o.o_orderkey) AS n_orders
-  FROM customer c LEFT JOIN orders o
-    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-  GROUP BY c.c_custkey)
-SELECT n_orders, COUNT(*) AS n_customers FROM per_cust GROUP BY n_orders
-"""
-
-
-def q_a31_small_qty_revenue(spark, sf_dir):
-    """TPC-H Q17 shape: revenue lost to small-quantity orders — line
-    items whose quantity is under 20% of their part's average. The
-    correlated scalar subquery is re-expressed as ONE part-grain
-    aggregate joined back on partkey; the 0.2·avg comparison is integer
-    cross-multiplication (5·qty·cnt < sum — quantities are integral), so
-    the boundary can't flip on a float ULP in either engine. Part dim is
-    pruned to the probed brands BEFORE the join and the same filter
-    left-semi-prunes the fact via the partkey join; the terminal /7
-    division happens once on the final DECIMAL sum."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", F.col("l_quantity").cast("long").alias("qty"),
-        "l_extendedprice",
-    )
-    p = _t(spark, sf_dir, "part").filter(
-        F.col("p_brand").isin("Brand#23", "Brand#12")
-    ).select("p_partkey", "p_brand")
-    pa = li.groupBy("l_partkey").agg(
-        F.sum("qty").alias("s"), F.count("*").alias("c")
-    )
-    probe = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    small = probe.join(pa, "l_partkey").filter(
-        F.lit(5) * F.col("qty") * F.col("c") < F.col("s")
-    )
-    return small.groupBy("p_brand").agg(
-        F.round(
-            (F.sum(F.col("l_extendedprice").cast("decimal(20,6)"))
-             / F.lit(7).cast("decimal(20,6)")).cast("double"), 6
-        ).alias("avg_yearly"),
-        F.count("*").alias("n_small"),
-    )
-
-
-SQL_A31_SMALL_QTY_REVENUE = """
-WITH pa AS (
-  SELECT l_partkey, SUM(CAST(l_quantity AS BIGINT)) AS s, COUNT(*) AS c
-  FROM lineitem GROUP BY l_partkey)
-SELECT p.p_brand,
-       round(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(20,6)))
-                  / CAST(7 AS DECIMAL(20,6)) AS DOUBLE), 6) AS avg_yearly,
-       COUNT(*) AS n_small
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey AND p.p_brand IN ('Brand#23','Brand#12')
-JOIN pa ON pa.l_partkey = l.l_partkey
-WHERE 5 * CAST(l.l_quantity AS BIGINT) * pa.c < pa.s
-GROUP BY p.p_brand
-"""
-
-
-def q_a32_idle_rich_customers(spark, sf_dir):
-    """TPC-H Q22 shape: above-average-balance customers with no urgent
-    orders, per market segment. Balances become integer CENTS once
-    (round(bal·100) — the only rounding, identical in both engines on
-    2-decimal data); 'above average of the positive balances' is then
-    cents·n > sum — integer cross-multiplication against a 1-row
-    broadcast global, no float mean. The 'no urgent orders' test is a
-    LEFT ANTI join against the pre-filtered orders projection (the Q22
-    NOT EXISTS), which at scale left-semi-prunes orders to one column
-    before the shuffle."""
-    c = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cb"),
-    )
-    tot = c.filter(F.col("cb") > 0).agg(
-        F.sum("cb").alias("_s"), F.count("*").alias("_n")
-    )
-    rich = c.crossJoin(F.broadcast(tot)).filter(
-        F.col("cb") * F.col("_n") > F.col("_s")
-    )
-    urgent = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    ).select("o_custkey")
-    idle = rich.join(
-        urgent, rich.c_custkey == urgent.o_custkey, "left_anti"
-    )
-    return idle.groupBy("c_mktsegment").agg(
-        F.count("*").alias("n_customers"),
-        (F.sum("cb") / F.lit(100.0)).alias("total_bal"),
-    )
-
-
-SQL_A32_IDLE_RICH_CUSTOMERS = """
-WITH cents AS (
-  SELECT c_custkey, c_mktsegment, CAST(round(c_acctbal * 100) AS BIGINT) AS cb
-  FROM customer),
-pos AS (SELECT SUM(cb) AS s, COUNT(*) AS n FROM cents WHERE cb > 0)
-SELECT c_mktsegment, COUNT(*) AS n_customers, SUM(cb) / 100.0 AS total_bal
-FROM cents, pos
-WHERE cb * n > s
-  AND NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = cents.c_custkey
-                    AND o.o_orderpriority = '1-URGENT')
-GROUP BY c_mktsegment
-"""
-
-
-def q_a33_waiting_suppliers(spark, sf_dir):
-    """TPC-H Q21 shape: suppliers who were the SOLE late shipper in a
-    multi-supplier finished order (late = shipped >60 days after the
-    order date — this dataset has no commit/receipt dates). The classic
-    EXISTS + double NOT-EXISTS correlation is re-expressed as ONE
-    order-grain aggregate: n_supp (distinct suppliers), n_late_supp
-    (distinct late suppliers), and the culprit via max(late supplier) —
-    valid exactly when n_late_supp = 1, which the filter pins. One
-    orderkey join + one orderkey-grain fold replaces three correlated
-    subqueries; the supplier dim attaches AFTER the fold at supplier
-    grain (bounded rows). Lateness is integral-day interval arithmetic,
-    identical cross-engine."""
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "F"
-    ).select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    j = li.join(o, li.l_orderkey == o.o_orderkey)
-    late_supp = F.when(
-        F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),
-        F.col("l_suppkey"),
-    )
-    per = j.groupBy("l_orderkey").agg(
-        F.countDistinct("l_suppkey").alias("n_supp"),
-        F.countDistinct(late_supp).alias("n_late_supp"),
-        F.max(late_supp).alias("culprit"),
-    )
-    culprits = per.filter(
-        (F.col("n_supp") > 1) & (F.col("n_late_supp") == 1)
-    ).groupBy("culprit").agg(F.count("*").alias("numwait"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return culprits.join(s, culprits.culprit == s.s_suppkey).select(
-        "s_name", "numwait"
-    )
-
-
-SQL_A33_WAITING_SUPPLIERS = """
-WITH per AS (
-  SELECT l.l_orderkey,
-         COUNT(DISTINCT l.l_suppkey) AS n_supp,
-         COUNT(DISTINCT CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-                             THEN l.l_suppkey END) AS n_late_supp,
-         MAX(CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-                  THEN l.l_suppkey END) AS culprit
-  FROM lineitem l JOIN orders o
-    ON l.l_orderkey = o.o_orderkey AND o.o_orderstatus = 'F'
-  GROUP BY l.l_orderkey)
-SELECT s.s_name, COUNT(*) AS numwait
-FROM per JOIN supplier s ON per.culprit = s.s_suppkey
-WHERE per.n_supp > 1 AND per.n_late_supp = 1
-GROUP BY s.s_name
-"""
-
-
-def q_a34_market_share(spark, sf_dir):
-    """TPC-H Q8 shape: one nation's share of a region's revenue for one
-    part type, per order year. Both bounded dims (nation⋈region on the
-    customer side, nation on the supplier side) and the type-pruned part
-    projection are explicitly broadcast — the fact joins shuffle on
-    their own keys only; the share is a conditional/total pair riding
-    ONE aggregate (no second pass), divided once and rounded at 6 dp.
-    Revenue is the DECIMAL(20,6) cast-sum of extprice·(1−discount)."""
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    cn = n.join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey
-    ).select(F.col("n_nationkey").alias("c_nkey"))
-    sn = n.select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
-    )
-    p = _t(spark, sf_dir, "part").filter(
-        F.col("p_type") == "ECONOMY"
-    ).select("p_partkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(20,6)")
-    j = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), c.c_nationkey == F.col("c_nkey"))
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), s.s_nationkey == F.col("s_nkey"))
-    )
-    agg = j.groupBy(F.year("o_orderdate").alias("o_year")).agg(
-        F.sum(F.when(F.col("supp_nation") == "NATION_3", rev)
-              .otherwise(F.lit(0).cast("decimal(20,6)"))).alias("_n"),
-        F.sum(rev).alias("_d"),
-    )
-    return agg.select(
-        "o_year",
-        F.round((F.col("_n") / F.col("_d")).cast("double"), 6).alias("mkt_share"),
-        F.col("_d").cast("double").alias("total_rev"),
-    )
-
-
-SQL_A34_MARKET_SHARE = """
-SELECT year(o.o_orderdate) AS o_year,
-       round(CAST(SUM(CASE WHEN sn.n_name = 'NATION_3'
-                           THEN CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(20,6))
-                           ELSE CAST(0 AS DECIMAL(20,6)) END)
-                  / SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(20,6)))
-                  AS DOUBLE), 6) AS mkt_share,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(20,6))) AS DOUBLE)
-         AS total_rev
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey AND p.p_type = 'ECONOMY'
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-JOIN region r ON cn.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-GROUP BY year(o.o_orderdate)
-"""
-
-
 def q_split_leak_safe(spark, sf_dir):
     """Leakage-safe train/val/test assignment
     (operators/curation.py:leak_safe_split): the split key is the
@@ -4959,115 +4211,6 @@ SELECT coalesce(o.node, i.node) AS node,
        coalesce(out_degree, 0) AS out_degree,
        coalesce(in_degree, 0) AS in_degree
 FROM o FULL OUTER JOIN i ON o.node = i.node
-"""
-
-
-def q_a36_revenue_delta(spark, sf_dir):
-    """TPC-H Q6 shape: the what-if revenue delta from discounted small
-    orders — a pure scan-side query whose POINT is pushdown: every
-    predicate (date window, discount band, quantity cap) must reach the
-    parquet scan as PushedFilters with only 3 columns read; one
-    map-side-combined DECIMAL fold, no join, no second shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
-    lo = F.lit("1999-01-01").cast("timestamp")
-    hi = F.lit("2000-01-01").cast("timestamp")
-    sel = li.filter(
-        (F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi)
-        & (F.col("l_discount") >= 0.05) & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    )
-    return sel.agg(
-        _dec_sum(F.col("l_extendedprice") * F.col("l_discount"), "revenue_delta"),
-        F.count("*").alias("n_lines"),
-    )
-
-
-SQL_A36_REVENUE_DELTA = """
-SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(20,6))) AS DOUBLE)
-         AS revenue_delta,
-       COUNT(*) AS n_lines
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1999-01-01' AND l_shipdate < TIMESTAMP '2000-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-"""
-
-
-def q_a35_supplier_census(spark, sf_dir):
-    """TPC-H Q16 shape: distinct-supplier census per (brand, size band),
-    EXCLUDING a complained-about supplier set — the NOT IN subquery
-    becomes a broadcast LEFT ANTI on the bounded supplier dim before
-    the fact join; supply relationships come from observed lineitems
-    (this dataset has no partsupp). Exact COUNT(DISTINCT supplier) via
-    Spark's Expand planning — one shuffle, map-side partials."""
-    s_bad = _t(spark, sf_dir, "supplier").filter(
-        F.col("s_acctbal") < 0
-    ).select("s_suppkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    ok = li.join(
-        F.broadcast(s_bad), li.l_suppkey == s_bad.s_suppkey, "left_anti"
-    )
-    p = _t(spark, sf_dir, "part").select(
-        "p_partkey", "p_brand", (F.col("p_size") % 5).alias("size_band")
-    )
-    return (
-        ok.join(p, ok.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "size_band")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-SQL_A35_SUPPLIER_CENSUS = """
-SELECT p.p_brand, p.p_size % 5 AS size_band,
-       COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p.p_brand, p.p_size % 5
-"""
-
-
-def q_a37_dominant_suppliers(spark, sf_dir):
-    """TPC-H Q20 shape: suppliers who shipped more than TWICE a part's
-    average per-supplier volume (single-source risk / the excess-stock
-    probe reshaped to this schema). The nested correlated aggregate
-    becomes two folds of ONE scan grain apart — (part, supplier)
-    quantity, then part totals — joined at part grain; the 2×-average
-    test is integer cross-multiplication (sq·n_supp > 2·tq) on
-    integral-valued quantities, never a float mean. Supplier names
-    attach AFTER the dominance reduction at bounded supplier grain."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", F.col("l_quantity").cast("long").alias("qty")
-    )
-    ps = li.groupBy("l_partkey", "l_suppkey").agg(F.sum("qty").alias("sq"))
-    pt = ps.groupBy("l_partkey").agg(
-        F.sum("sq").alias("tq"), F.count("*").alias("n_supp")
-    )
-    dom = ps.join(pt, "l_partkey").filter(
-        (F.col("n_supp") > 1)
-        & (F.col("sq") * F.col("n_supp") > F.lit(2) * F.col("tq"))
-    )
-    per_s = dom.groupBy("l_suppkey").agg(
-        F.count("*").alias("n_dominated"),
-        F.sum("sq").alias("qty_dominated"),
-    )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return per_s.join(s, per_s.l_suppkey == s.s_suppkey).select(
-        "s_name", "n_dominated", "qty_dominated"
-    )
-
-
-SQL_A37_DOMINANT_SUPPLIERS = """
-WITH ps AS (
-  SELECT l_partkey, l_suppkey, SUM(CAST(l_quantity AS BIGINT)) AS sq
-  FROM lineitem GROUP BY l_partkey, l_suppkey),
-pt AS (SELECT l_partkey, SUM(sq) AS tq, COUNT(*) AS n_supp FROM ps GROUP BY l_partkey),
-dom AS (
-  SELECT ps.l_suppkey, ps.sq
-  FROM ps JOIN pt ON ps.l_partkey = pt.l_partkey
-  WHERE pt.n_supp > 1 AND ps.sq * pt.n_supp > 2 * pt.tq)
-SELECT s.s_name, COUNT(*) AS n_dominated, SUM(dom.sq) AS qty_dominated
-FROM dom JOIN supplier s ON dom.l_suppkey = s.s_suppkey
-GROUP BY s.s_name
 """
 
 
@@ -5312,56 +4455,6 @@ ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
             * sqrt(list_dot_product(q.qv, q.qv))) DESC,
          e.vec_id
 LIMIT {k}
-"""
-
-
-def q_a38_nation_profit(spark, sf_dir):
-    """TPC-H Q9 shape: product-line profit per supplier nation per order
-    year (this dataset has no partsupp, so cost is the retail-price
-    proxy 0.1·p_retailprice·qty). The per-row profit expression keeps
-    IDENTICAL operand order in both engines — same doubles — then rides
-    the DECIMAL(20,6) cast-sum; nation dim broadcast; part pruned by the
-    name predicate BEFORE its join."""
-    p = _t(spark, sf_dir, "part").filter(
-        F.col("p_name").contains("red")
-    ).select("p_partkey", "p_retailprice")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey"), F.col("n_name").alias("nation")
-    )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey",
-        "l_extendedprice", "l_discount", "l_quantity",
-    )
-    profit = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("p_retailprice") * F.col("l_quantity") * 0.1
-    ).cast("decimal(20,6)")
-    j = (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-    )
-    return j.groupBy("nation", F.year("o_orderdate").alias("o_year")).agg(
-        F.sum(profit).cast("double").alias("profit"),
-        F.count("*").alias("n_lines"),
-    )
-
-
-SQL_A38_NATION_PROFIT = """
-SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
-       CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                     - p.p_retailprice * l.l_quantity * 0.1
-                     AS DECIMAL(20,6))) AS DOUBLE) AS profit,
-       COUNT(*) AS n_lines
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey AND p.p_name LIKE '%red%'
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-GROUP BY n.n_name, year(o.o_orderdate)
 """
 
 
@@ -5773,72 +4866,6 @@ SELECT e.a, e.b, e.n_match,
                        / CAST(len(list_distinct(list_cat(sa.s, sb.s))) AS DOUBLE)
                   ELSE 0.0 END, 6) AS jaccard
 FROM est e JOIN shd sa ON sa.doc_id = e.a JOIN shd sb ON sb.doc_id = e.b
-"""
-
-
-def q_o8_min_cost_supplier(spark, sf_dir):
-    """TPC-H Q2 shape: for each qualifying part, the supplier offering
-    the MINIMUM observed price — the classic correlated-subquery
-    decorrelation (`WHERE cost = (SELECT min(cost) ... p_partkey =
-    outer)`) re-expressed as one argmin aggregation. Offers come from
-    observed lineitems (this schema has no partsupp).
-
-    Scale shape: the argmin is min(struct(price, suppkey)) — ONE
-    map-side-combined hash aggregate at part grain whose state is a
-    single struct, no per-part window sort and no self-join back for
-    the min (the naive decorrelation scans offers twice). The
-    tie-break is INTEGRAL (lowest suppkey at equal price) so the
-    selected row is deterministic in any engine; part and supplier
-    dims broadcast after their filters prune them. Struct-min picks
-    lexicographic (price, suppkey) order — exactly the `ORDER BY
-    price, suppkey LIMIT 1` semantics of the subquery form, which the
-    DuckDB twin spells with a row_number window (same total order, so
-    identical rows; windows per part are bounded fan-in there)."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice"
-    )
-    p = _t(spark, sf_dir, "part").filter(
-        (F.col("p_size") >= 10) & (F.col("p_size") <= 20)
-        & (F.col("p_type") == "STANDARD")
-    ).select("p_partkey", "p_brand", "p_size")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    offers = li.join(
-        F.broadcast(p), li.l_partkey == p.p_partkey
-    )
-    best = offers.groupBy("p_partkey", "p_brand", "p_size").agg(
-        F.min(F.struct(F.col("l_extendedprice"), F.col("l_suppkey"))).alias("_m")
-    ).select(
-        "p_partkey", "p_brand", "p_size",
-        F.col("_m.l_extendedprice").alias("best_price"),
-        F.col("_m.l_suppkey").alias("s_suppkey"),
-    )
-    return (
-        best.join(F.broadcast(s), "s_suppkey")
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .select("p_partkey", "p_brand", "p_size", "best_price",
-                "s_suppkey", "s_name", "n_name")
-    )
-
-
-SQL_O8_MIN_COST_SUPPLIER = """
-WITH p AS (
-  SELECT p_partkey, p_brand, p_size FROM part
-  WHERE p_size >= 10 AND p_size <= 20 AND p_type = 'STANDARD'
-),
-offers AS (
-  SELECT p.p_partkey, p.p_brand, p.p_size, l.l_suppkey, l.l_extendedprice,
-         row_number() OVER (PARTITION BY p.p_partkey
-                            ORDER BY l.l_extendedprice, l.l_suppkey) AS rn
-  FROM lineitem l JOIN p ON l.l_partkey = p.p_partkey
-)
-SELECT o.p_partkey, o.p_brand, o.p_size,
-       o.l_extendedprice AS best_price,
-       o.l_suppkey AS s_suppkey, s.s_name, n.n_name
-FROM offers o
-JOIN supplier s ON s.s_suppkey = o.l_suppkey
-JOIN nation n ON n.n_nationkey = s.s_nationkey
-WHERE o.rn = 1
 """
 
 
@@ -6902,9 +5929,9 @@ FROM pick WHERE rk = 1
 
 
 # ------------------------------------------------------------ round-5 batch 38
-# Graph authority scores, multi-objective skyline, Q11-shaped revenue
-# concentration, Spark's native session_window pinned against a
-# first-principles gap-logic twin, and a column-completeness profiler.
+# Graph authority scores, multi-objective skyline, Spark's native
+# session_window pinned against a first-principles gap-logic twin, and a
+# column-completeness profiler.
 
 
 def q_hits_scores(spark, sf_dir):
@@ -6996,51 +6023,6 @@ k AS (
 kept AS (SELECT x, gy FROM k WHERE prev IS NULL OR gy > prev)
 SELECT o.o_orderkey, o.o_totalprice, o.order_tus
 FROM o JOIN kept ON o.o_totalprice = kept.x AND o.order_tus = kept.gy
-"""
-
-
-def q_a40_revenue_concentration(spark, sf_dir):
-    """TPC-H Q11-shaped revenue concentration: parts whose discounted
-    revenue exceeds 1.5x the MEAN per-part share — the scale-free form
-    of Q11's SF-scaled fraction (a fixed basis-point cut empties or
-    floods as the part count grows; a mean-multiple is invariant). The
-    global-threshold HAVING shape: one fact fold to part grain, the
-    1-row (total, n_parts) broadcast back, and the threshold test is an
-    exact DECIMAL/BIGINT cross-multiplication (rev * n_parts * 2 >
-    tot * 3) so the boundary never rides a float ULP."""
-    li = _t(spark, sf_dir, "lineitem")
-    per = li.groupBy("l_partkey").agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            .cast("decimal(20,6)")
-        ).alias("_rev")
-    )
-    tot = per.agg(F.sum("_rev").alias("_tot"), F.count("*").alias("_np"))
-    out = per.crossJoin(F.broadcast(tot)).filter(
-        F.col("_rev") * F.col("_np") * 2 > F.col("_tot") * 3
-    )
-    return out.select(
-        "l_partkey",
-        F.col("_rev").cast("double").alias("revenue"),
-        F.round(
-            F.col("_rev").cast("double") * 10000.0 / F.col("_tot").cast("double"),
-            6,
-        ).alias("share_bp"),
-    )
-
-
-SQL_A40_REVENUE_CONCENTRATION = """
-WITH per AS (
-  SELECT l_partkey,
-         SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(20,6))) AS rev
-  FROM lineitem GROUP BY 1
-),
-tot AS (SELECT SUM(rev) AS tot, COUNT(*) AS np FROM per)
-SELECT l_partkey,
-       CAST(rev AS DOUBLE) AS revenue,
-       round(CAST(rev AS DOUBLE) * 10000.0 / CAST(tot AS DOUBLE), 6) AS share_bp
-FROM per CROSS JOIN tot
-WHERE rev * np * 2 > tot * 3
 """
 
 
@@ -8018,8 +7000,8 @@ FROM agg
 
 
 # ------------------------------------------------------------ round-5 batch 43
-# Sweep-line concurrency, source-profile cosine map, rolling windowed
-# HLL, and a referential-integrity census.
+# Sweep-line concurrency, source-profile cosine map, and rolling
+# windowed HLL.
 
 
 def q_concurrency_peak(spark, sf_dir):
@@ -8217,57 +7199,6 @@ FROM fin f JOIN exact e ON f.day = e.day
 
 
 SQL_ROLLING_USERS_HLL = SQL_ROLLING_USERS_HLL.replace("{HLLNUM}", _HLL_RAW_NUM)
-
-
-def q_fk_integrity(spark, sf_dir):
-    """Referential-integrity census over five warehouse FK edges:
-    (edge, n_child_rows, n_orphans) — the generalization of
-    j4_reconcile's single-pair audit to the whole schema; each edge is
-    one LEFT ANTI count against the parent's key projection (dims
-    broadcast; fact edges shuffle on the key)."""
-    edges = [
-        ("orders.custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
-        ("lineitem.orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("lineitem.partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
-        ("customer.nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-        ("supplier.nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
-    ]
-    outs = []
-    for label, child, ck, parent, pk in edges:
-        c = _t(spark, sf_dir, child).select(F.col(ck).alias("_k"))
-        p = _t(spark, sf_dir, parent).select(F.col(pk).alias("_k")).distinct()
-        orphans = c.join(p, "_k", "left_anti").agg(
-            F.count("*").alias("n_orphans")
-        )
-        total = c.agg(F.count("*").alias("n_child_rows"))
-        outs.append(
-            total.crossJoin(orphans).select(
-                F.lit(label).alias("edge"), "n_child_rows", "n_orphans"
-            )
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
-
-
-def _sql_fk_edge(label: str, child: str, ck: str, parent: str, pk: str) -> str:
-    return f"""
-SELECT '{label}' AS edge, COUNT(*) AS n_child_rows,
-       SUM(CASE WHEN p.{pk} IS NULL THEN 1 ELSE 0 END) AS n_orphans
-FROM {child} c LEFT JOIN (SELECT DISTINCT {pk} FROM {parent}) p
-ON c.{ck} = p.{pk}
-"""
-
-
-SQL_FK_INTEGRITY = "\nUNION ALL\n".join([
-    _sql_fk_edge("orders.custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
-    _sql_fk_edge("lineitem.orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-    _sql_fk_edge("lineitem.partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
-    _sql_fk_edge("customer.nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-    _sql_fk_edge("supplier.nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
-])
-
 
 
 # ------------------------------------------------------------ round-5 batch 44
@@ -9610,8 +8541,7 @@ SQL_EVENT_STATIONARY = _sql_event_stationary(4)
 
 
 # ------------------------------------------------------------ round-5 batch 51
-# Session entry/exit flow, inter-arrival quantiles, and an order-status
-# consistency audit.
+# Session entry/exit flow and inter-arrival quantiles.
 
 
 def q_session_entry_exit(spark, sf_dir):
@@ -9725,55 +8655,6 @@ SELECT g AS event_type,
        round(quantile_cont(v, 0.99), 6) AS p99_sec
 FROM gaps WHERE v IS NOT NULL GROUP BY 1
 """
-
-
-def q_order_status_audit(spark, sf_dir):
-    """Order-status consistency audit: per o_orderstatus, orders whose
-    lineitem statuses CONTRADICT it ('F' with any open item, 'O' with
-    every item finished) — the cross-table business-rule census
-    (fd_violations checks within one table; this checks the
-    TPC-H-semantic invariant across the join). One order-grain fold of
-    lineitem (map-side combinable), broadcast-free key join, bounded
-    final census."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    per_order = li.groupBy(F.col("l_orderkey").alias("o_orderkey")).agg(
-        F.count("*").alias("_n_items"),
-        F.sum(F.when(F.col("l_linestatus") == "O", 1).otherwise(0)).alias("_n_open"),
-    )
-    j = o.join(per_order, "o_orderkey", "left")
-    bad = (
-        ((F.col("o_orderstatus") == "F") & (F.coalesce(F.col("_n_open"), F.lit(0)) > 0))
-        | ((F.col("o_orderstatus") == "O")
-           & F.col("_n_items").isNotNull()
-           & (F.col("_n_open") == 0))
-    )
-    return j.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n_orders"),
-        F.sum(F.when(F.col("_n_items").isNull(), 1).otherwise(0)).alias("n_no_items"),
-        F.sum(F.when(bad, 1).otherwise(0)).alias("n_inconsistent"),
-    )
-
-
-SQL_ORDER_STATUS_AUDIT = """
-WITH per_order AS (
-  SELECT l_orderkey AS o_orderkey, COUNT(*) AS n_items,
-         SUM(CASE WHEN l_linestatus = 'O' THEN 1 ELSE 0 END) AS n_open
-  FROM lineitem GROUP BY 1
-),
-j AS (
-  SELECT o.o_orderstatus, p.n_items, p.n_open
-  FROM orders o LEFT JOIN per_order p ON o.o_orderkey = p.o_orderkey
-)
-SELECT o_orderstatus, COUNT(*) AS n_orders,
-       SUM(CASE WHEN n_items IS NULL THEN 1 ELSE 0 END) AS n_no_items,
-       SUM(CASE WHEN (o_orderstatus = 'F' AND coalesce(n_open, 0) > 0)
-                  OR (o_orderstatus = 'O' AND n_items IS NOT NULL
-                      AND n_open = 0)
-                THEN 1 ELSE 0 END) AS n_inconsistent
-FROM j GROUP BY 1
-"""
-
 
 
 # ------------------------------------------------------------ round-5 batch 52
@@ -10357,68 +9238,7 @@ SELECT n_versions, COUNT(*) AS n_pages FROM per_page GROUP BY 1
 
 
 # ------------------------------------------------------------ round-5 batch 56
-# Shuffle-skew audit and per-quantile drift table.
-
-
-def q_skew_audit(spark, sf_dir):
-    """Pre-shuffle SKEW AUDIT for a join key: simulate the P=32
-    partition assignment with an md5-derived bucket (Spark's internal
-    hash is not engine-portable; md5 is) over lineitem.l_orderkey and
-    report the partition-occupancy distribution — (n_partitions,
-    max_rows, min_rows, median_rows, skew_ratio) — the number a plan
-    review reads BEFORE a 100 TB shuffle ships: a skew_ratio near 1
-    means AQE has nothing to fix; >>1 names the hot key problem.
-    All-integer occupancy; the median comes from the bounded 32-row
-    occupancy table."""
-    li = _t(spark, sf_dir, "lineitem")
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 15),
-               16, 10).cast("long"),
-        F.lit(32),
-    )
-    occ = li.groupBy(bucket.alias("p")).agg(F.count("*").alias("rows"))
-    w = Window.orderBy("rows", "p")
-    ranked = occ.withColumn("_rk", F.row_number().over(w)).withColumn(
-        "_n", F.count("*").over(Window.partitionBy(F.lit(1)))
-    )
-    med = ranked.filter(
-        (F.col("_rk") == F.expr("(_n + 1) DIV 2"))
-    ).select(F.col("rows").alias("median_rows"))
-    agg = occ.agg(
-        F.count("*").alias("n_partitions"),
-        F.max("rows").alias("max_rows"),
-        F.min("rows").alias("min_rows"),
-    )
-    return agg.crossJoin(F.broadcast(med)).select(
-        "n_partitions", "max_rows", "min_rows", "median_rows",
-        F.round(
-            F.col("max_rows").cast("double") / F.col("median_rows").cast("double"),
-            6,
-        ).alias("skew_ratio"),
-    )
-
-
-SQL_SKEW_AUDIT = """
-WITH occ AS (
-  SELECT CAST('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15) AS BIGINT)
-         % 32 AS p,
-         COUNT(*) AS rows_n
-  FROM lineitem GROUP BY 1
-),
-ranked AS (
-  SELECT rows_n, row_number() OVER (ORDER BY rows_n, p) AS rk,
-         COUNT(*) OVER () AS n
-  FROM occ
-),
-med AS (SELECT rows_n AS median_rows FROM ranked WHERE rk = (n + 1) // 2)
-SELECT (SELECT COUNT(*) FROM occ) AS n_partitions,
-       (SELECT MAX(rows_n) FROM occ) AS max_rows,
-       (SELECT MIN(rows_n) FROM occ) AS min_rows,
-       median_rows,
-       round(CAST((SELECT MAX(rows_n) FROM occ) AS DOUBLE)
-             / CAST(median_rows AS DOUBLE), 6) AS skew_ratio
-FROM med
-"""
+# Per-quantile drift table.
 
 
 def q_qq_shift(spark, sf_dir):
@@ -10493,120 +9313,7 @@ SQL_QQ_SHIFT = _sql_qq_shift()
 
 
 # ------------------------------------------------------------ round-5 batch 57
-# Consistent-hash ring assignment and discriminative keep/drop
-# vocabulary.
-
-
-def q_consistent_hash(spark, sf_dir):
-    """Consistent-hashing ring vs naive mod-N, measured: assign every
-    customer key to 8 shards both ways, then grow to 9 shards and
-    count how many keys MOVE — the ring's whole point (≈1/(N+1) of
-    keys move vs ≈N/(N+1) under mod). Returns one row per scheme:
-    (scheme, n_keys, n_moved, moved_frac).
-
-    Ring construction, fully relational: each shard owns 16 md5-derived
-    virtual points; a key maps to the nearest point CLOCKWISE (the
-    smallest vnode position >= key position, wrapping to the global
-    minimum) — the wrap and the argmin are min() folds over the
-    BROADCAST vnode table (shards x 16 rows), never a sort of the key
-    space. Everything is exact 60-bit integer arithmetic."""
-    cust = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").cast("string").alias("k")
-    )
-    h = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
-    keys = cust.select("k", h(F.concat(F.lit("key:"), F.col("k"))).alias("kp"))
-
-    def ring_assign(n_shards):
-        spark_ = cust.sparkSession
-        vn = spark_.range(n_shards).select(F.col("id").alias("shard")).crossJoin(
-            spark_.range(16).select(F.col("id").alias("v"))
-        ).select(
-            "shard",
-            h(F.concat(F.lit("vn:"), F.col("shard").cast("string"),
-                       F.lit(":"), F.col("v").cast("string"))).alias("vp"),
-        )
-        # nearest clockwise vnode: min vp >= kp, else global min (wrap)
-        j = keys.crossJoin(F.broadcast(vn))
-        cand = j.groupBy("k", "kp").agg(
-            F.min(F.when(F.col("vp") >= F.col("kp"),
-                         F.struct("vp", "shard"))).alias("_ge"),
-            F.min(F.struct("vp", "shard")).alias("_wrap"),
-        )
-        return cand.select(
-            "k",
-            F.coalesce(F.col("_ge.shard"), F.col("_wrap.shard")).alias("shard"),
-        )
-
-    r8 = ring_assign(8).withColumnRenamed("shard", "s8")
-    r9 = ring_assign(9).withColumnRenamed("shard", "s9")
-    ring_moved = r8.join(r9, "k").agg(
-        F.lit("ring").alias("scheme"),
-        F.count("*").alias("n_keys"),
-        F.sum(F.when(F.col("s8") != F.col("s9"), 1).otherwise(0)).alias("n_moved"),
-    )
-    mod_moved = keys.agg(
-        F.lit("mod").alias("scheme"),
-        F.count("*").alias("n_keys"),
-        F.sum(
-            F.when(F.pmod(F.col("kp"), F.lit(8)) != F.pmod(F.col("kp"), F.lit(9)),
-                   1).otherwise(0)
-        ).alias("n_moved"),
-    )
-    return ring_moved.unionByName(mod_moved).select(
-        "scheme", "n_keys", "n_moved",
-        F.round(
-            F.col("n_moved").cast("double") / F.col("n_keys").cast("double"), 6
-        ).alias("moved_frac"),
-    )
-
-
-def _sql_ring(n_shards: int) -> str:
-    return f"""
-  SELECT k.k, coalesce(
-           (SELECT min(struct_pack(vp := v.vp, shard := v.shard))
-            FROM vn{n_shards} v WHERE v.vp >= k.kp).shard,
-           (SELECT min(struct_pack(vp := v.vp, shard := v.shard))
-            FROM vn{n_shards} v).shard) AS shard
-  FROM keys k"""
-
-
-SQL_CONSISTENT_HASH = f"""
-WITH keys AS (
-  SELECT CAST(c_custkey AS VARCHAR) AS k,
-         CAST('0x' || substr(md5('key:' || CAST(c_custkey AS VARCHAR)), 1, 15)
-              AS BIGINT) AS kp
-  FROM customer
-),
-vn8 AS (
-  SELECT s.shard, v.v,
-         CAST('0x' || substr(md5('vn:' || CAST(s.shard AS VARCHAR) || ':'
-                                 || CAST(v.v AS VARCHAR)), 1, 15) AS BIGINT) AS vp
-  FROM (SELECT unnest(generate_series(0, 7)) AS shard) s
-  CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS v) v
-),
-vn9 AS (
-  SELECT s.shard, v.v,
-         CAST('0x' || substr(md5('vn:' || CAST(s.shard AS VARCHAR) || ':'
-                                 || CAST(v.v AS VARCHAR)), 1, 15) AS BIGINT) AS vp
-  FROM (SELECT unnest(generate_series(0, 8)) AS shard) s
-  CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS v) v
-),
-r8 AS ({_sql_ring(8)}),
-r9 AS ({_sql_ring(9)}),
-ring AS (
-  SELECT 'ring' AS scheme, COUNT(*) AS n_keys,
-         SUM(CASE WHEN r8.shard <> r9.shard THEN 1 ELSE 0 END) AS n_moved
-  FROM r8 JOIN r9 ON r8.k = r9.k
-),
-modm AS (
-  SELECT 'mod' AS scheme, COUNT(*) AS n_keys,
-         SUM(CASE WHEN kp % 8 <> kp % 9 THEN 1 ELSE 0 END) AS n_moved
-  FROM keys
-)
-SELECT scheme, n_keys, n_moved,
-       round(CAST(n_moved AS DOUBLE) / CAST(n_keys AS DOUBLE), 6) AS moved_frac
-FROM (SELECT * FROM ring UNION ALL SELECT * FROM modm)
-"""
+# Discriminative keep/drop vocabulary.
 
 
 def q_keep_discriminative_terms(spark, sf_dir):
@@ -13117,574 +11824,277 @@ FROM r3
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "p1_validation_filter": q_p1_validation_filter,
-    "s7_field_mapping": q_s7_field_mapping,
-    "s7_metadata_absorb": q_s7_metadata_absorb,
-    "p3_normalization": q_p3_normalization,
-    "p4_weighted_score": q_p4_weighted_score,
-    "f1_keep_filter": q_f1_keep_filter,
-    "f2_drop_lane": q_f2_drop_lane,
-    "p6_error_default": q_p6_error_default,
-    "p8_cost": q_p8_cost,
-    "p9_format_conversion": q_p9_format_conversion,
-    "p2_category": q_p2_category,
-    "f1_category_filter": q_f1_category_filter,
-    "p10_improvement_suggestions": q_p10_improvement_suggestions,
-    "a1_batch_metrics": q_a1_batch_metrics,
-    "a2_event_totals": q_a2_event_totals,
-    "a3_source_distribution": q_a3_source_distribution,
-    "a4_token_stats": q_a4_token_stats,
-    "a5_lineitem_summary": q_a5_lineitem_summary,
-    "j1_anti_join_resume": q_j1_anti_join_resume,
-    "j2_last_wins_dedup": q_j2_last_wins_dedup,
-    "u1_union": q_u1_union,
-    "o1_sort_limit": q_o1_sort_limit,
-    "s3_sample": q_s3_sample,
-    "dedup_exact": q_dedup_exact,
-    "dedup_wordset": q_dedup_wordset,
-    "dedup_minhash_pairs": q_dedup_minhash_pairs,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_cc": q_dedup_cc,
-    "lang_id_heuristic": q_lang_id_heuristic,
-    "doc_fingerprint": q_doc_fingerprint,
-    "token_count": q_token_count,
-    "tf_top_terms": q_tf_top_terms,
-    "a6_token_quantiles": q_a6_token_quantiles,
-    "o2_topn_per_group": q_o2_topn_per_group,
-    "sessionize_events": q_sessionize_events,
-    "a7_event_pivot": q_a7_event_pivot,
-    "a8_langs_per_source": q_a8_langs_per_source,
-    "asof_purchase_attach": q_asof_purchase_attach,
-    "j3_dim_broadcast": q_j3_dim_broadcast,
-    "range_join_error_windows": q_range_join_error_windows,
-    "rolling_value_avg": q_rolling_value_avg,
-    "a9_rollup_report": q_a9_rollup_report,
-    "a10_quality_tiles": q_a10_quality_tiles,
-    "u2_set_ops": q_u2_set_ops,
-    "dedup_lev_pairs": q_dedup_lev_pairs,
-    "funnel_conversion": q_funnel_conversion,
-    "a11_feature_corr": q_a11_feature_corr,
-    "p11_json_props": q_p11_json_props,
-    "j4_reconcile": q_j4_reconcile,
-    "a12_distinct_exact": q_a12_distinct_exact,
-    "cohort_retention": q_cohort_retention,
-    "boilerplate_shingles": q_boilerplate_shingles,
-    "a13_trimmed_mean": q_a13_trimmed_mean,
-    "a14_source_share": q_a14_source_share,
-    "lexical_diversity": q_lexical_diversity,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "pmi_bigrams": q_pmi_bigrams,
-    "a15_zscore_outliers": q_a15_zscore_outliers,
-    "cc_cluster_histogram": q_cc_cluster_histogram,
-    "a16_daily_gapfill": q_a16_daily_gapfill,
-    "a17_user_percentile": q_a17_user_percentile,
-    "gopher_stats": q_gopher_stats,
-    "a18_median_mad": q_a18_median_mad,
-    "a19_event_lift": q_a19_event_lift,
-    "a20_length_log2_hist": q_a20_length_log2_hist,
-    "decon_benchmark_overlap": q_decon_benchmark_overlap,
-    "oov_rate": q_oov_rate,
-    "mixture_plan": q_mixture_plan,
-    "chunk_plan": q_chunk_plan,
-    "pack_bins": q_pack_bins,
-    "char_diversity": q_char_diversity,
-    "s3_weighted_sample": q_s3_weighted_sample,
-    "ngram_repetition": q_ngram_repetition,
-    "token_entropy": q_token_entropy,
-    "stopword_coverage": q_stopword_coverage,
-    "dedup_canonical": q_dedup_canonical,
-    "burst_users": q_burst_users,
-    "a21_length_band": q_a21_length_band,
-    "lang_confusion": q_lang_confusion,
-    "pii_prevalence": q_pii_prevalence,
-    "calibration_curve": q_calibration_curve,
-    "props_key_census": q_props_key_census,
-    "emb_norm_stats": q_emb_norm_stats,
-    "o3_shipping_priority": q_o3_shipping_priority,
-    "a22_late_ship_priority": q_a22_late_ship_priority,
-    "o4_regional_volume": q_o4_regional_volume,
-    "a23_promo_share": q_a23_promo_share,
-    "f3_disjunctive_parts": q_f3_disjunctive_parts,
-    "a24_first_last_event": q_a24_first_last_event,
-    "a25_event_transitions": q_a25_event_transitions,
-    "a26_lang_deciles": q_a26_lang_deciles,
-    "dedup_spans": q_dedup_spans,
-    "o5_returned_revenue": q_o5_returned_revenue,
-    "a27_linestatus_priority": q_a27_linestatus_priority,
-    "o6_large_orders": q_o6_large_orders,
-    "a29_nation_flows": q_a29_nation_flows,
-    "a28_vocab_census": q_a28_vocab_census,
-    "dedup_spans_within": q_dedup_spans_within,
-    "term_df_scrub": q_term_df_scrub,
-    "dedup_minhash_incr": q_dedup_minhash_incr,
-    "domain_blocklist_filter": q_domain_blocklist,
-    "host_quota_sample": q_host_quota_sample,
-    "url_dedup_lastwins": q_url_dedup,
-    "a30_cust_order_dist": q_a30_cust_order_dist,
-    "a31_small_qty_revenue": q_a31_small_qty_revenue,
-    "a32_idle_rich_customers": q_a32_idle_rich_customers,
-    "a33_waiting_suppliers": q_a33_waiting_suppliers,
-    "a34_market_share": q_a34_market_share,
-    "split_leak_safe": q_split_leak_safe,
-    "robots_filter": q_robots_filter,
-    "link_pagerank": q_link_pagerank,
-    "link_degree_census": q_link_degree_census,
-    "a35_supplier_census": q_a35_supplier_census,
-    "a36_revenue_delta": q_a36_revenue_delta,
-    "a37_dominant_suppliers": q_a37_dominant_suppliers,
-    "mixture_apply": q_mixture_apply,
-    "normalize_punct": q_normalize_punct,
-    "web_curation_e2e": q_web_curation_e2e,
-    "ivf_append_probe": q_ivf_append_probe,
-    "a38_nation_profit": q_a38_nation_profit,
-    "tok_bytes_ratio": q_tok_bytes_ratio,
-    "hapax_rate": q_hapax_rate,
-    "a39_salted_hot_agg": q_a39_salted_hot_agg,
-    "zipf_slope": q_zipf_slope,
-    "hll_vocab": q_hll_vocab,
-    "cms_terms": q_cms_terms,
-    "bloom_custkeys": q_bloom_custkeys,
-    "gini_sources": q_gini_sources,
-    "cusum_drift": q_cusum_drift,
-    "hits_scores": q_hits_scores,
-    "skyline_orders": q_skyline_orders,
-    "a40_revenue_concentration": q_a40_revenue_concentration,
-    "session_window_native": q_session_window_native,
-    "profile_documents": q_profile_documents,
-    "stream_hll": q_stream_hll,
-    "kcore_links": q_kcore_links,
-    "link_structure": q_link_structure,
-    "scd2_pages": q_scd2_pages,
-    "bool_search": q_bool_search,
-    "wrs_sample": q_wrs_sample,
-    "spike_zscore": q_spike_zscore,
-    "hll_by_source": q_hll_by_source,
-    "lang_source_mi": q_lang_source_mi,
-    "fd_census": q_fd_census,
-    "theilsen_trend": q_theilsen_trend,
-    "event_paths3": q_event_paths3,
-    "cms_join_est": q_cms_join_est,
-    "psi_value_drift": q_psi_value_drift,
-    "negative_samples": q_negative_samples,
-    "k_anon_docs": q_k_anon_docs,
-    "dataset_fingerprint": q_dataset_fingerprint,
-    "prefix_jaccard_pairs": q_prefix_jaccard_pairs,
-    "props_key_drift": q_props_key_drift,
-    "concurrency_peak": q_concurrency_peak,
-    "source_cosine": q_source_cosine,
-    "rolling_users_hll": q_rolling_users_hll,
-    "fk_integrity": q_fk_integrity,
-    "homoglyph_spoof": q_homoglyph_spoof,
-    "dow_chi2": q_dow_chi2,
-    "bloom_prefilter_join": q_bloom_prefilter_join,
-    "neyman_plan": q_neyman_plan,
-    "contract_checks": q_contract_checks,
-    "log_quantile_sketch": q_log_quantile_sketch,
-    "hll_overlap": q_hll_overlap,
-    "stream_cms": q_stream_cms,
-    "km_conversion": q_km_conversion,
-    "rbo_source_rankings": q_rbo_source_rankings,
-    "keep_ab_test": q_keep_ab_test,
-    "vocab_coverage": q_vocab_coverage,
-    "cdc_docs": q_cdc_docs,
-    "late_census": q_late_census,
-    "funnel3": q_funnel3,
-    "emd_length_drift": q_emd_length_drift,
-    "doc_novelty": q_doc_novelty,
-    "daily_xcorr": q_daily_xcorr,
-    "term_adaptation": q_term_adaptation,
-    "bigram_cond_entropy": q_bigram_cond_entropy,
-    "rfm_segments": q_rfm_segments,
-    "local_clustering": q_local_clustering,
-    "event_stationary": q_event_stationary,
-    "session_entry_exit": q_session_entry_exit,
-    "interarrival_quantiles": q_interarrival_quantiles,
-    "order_status_audit": q_order_status_audit,
-    "dup_rate_by_source": q_dup_rate_by_source,
-    "centroid_confusion": q_centroid_confusion,
-    "hill_tail": q_hill_tail,
-    "simpson_probe": q_simpson_probe,
-    "trending_terms": q_trending_terms,
-    "mase_forecast": q_mase_forecast,
-    "vocab_growth": q_vocab_growth,
-    "mix_rate_decomposition": q_mix_rate_decomposition,
-    "page_churn_census": q_page_churn_census,
-    "skew_audit": q_skew_audit,
-    "qq_shift": q_qq_shift,
-    "consistent_hash": q_consistent_hash,
-    "keep_discriminative_terms": q_keep_discriminative_terms,
-    "theta_vocab_by_source": q_theta_vocab_by_source,
-    "theta_vocab_overlap": q_theta_vocab_overlap,
-    "label_prop_communities": q_label_prop_communities,
-    "cocitation_pairs": q_cocitation_pairs,
-    "cdc_chunk_census": q_cdc_chunk_census,
-    "linear_probe_train": q_linear_probe_train,
-    "trustrank_links": q_trustrank_links,
-    "dedup_cc_best": q_dedup_cc_best,
-    "bpe_merges": q_bpe_merges,
-    "stream_dedup": q_stream_dedup,
-    "rrf_hybrid_search": q_rrf_hybrid_search,
-    "pq_topk": q_pq_topk,
-    "quantile_normalize": q_quantile_normalize,
-    "dow_seasonal_anomaly": q_dow_seasonal_anomaly,
-    "dsir_weights": q_dsir_weights,
-    "bigram_lm_ppl": q_bigram_lm_ppl,
-    "conformal_bounds": q_conformal_bounds,
-    "energy_drift": q_energy_drift,
-    "coverage_select": q_coverage_select,
-    "mmr_rerank": q_mmr_rerank,
-    "stream_stream_join": q_stream_stream_join,
-    "stream_left_join": q_stream_left_join,
-    "lsh_recall_eval": q_lsh_recall_eval,
-    "split_by_cluster": q_split_by_cluster,
-    "hashed_tf_knn": q_hashed_tf_knn,
-    "slot_apportionment": q_slot_apportionment,
-    "dedup_family_kappa": q_dedup_family_kappa,
-    "filter_cascade_plan": q_filter_cascade_plan,
-    "keep_rate_wilson": q_keep_rate_wilson,
-    "term_burstiness": q_term_burstiness,
-    "dedup_cc_incr": q_dedup_cc_incr,
-    "ivf_recall_curve": q_ivf_recall_curve,
-    "lsh_candidate_forecast": q_lsh_candidate_forecast,
-    "dedup_audit_sample": q_dedup_audit_sample,
-    "winnow_overlap": q_winnow_overlap,
-    "bpe_fertility": q_bpe_fertility,
-    "flesch_reading": q_flesch_reading,
-    "ks_length_drift": q_ks_length_drift,
-    "triangle_census": q_triangle_census,
-    "containment_pairs": q_containment_pairs,
-    "script_profile": q_script_profile,
-    "minhash_calibration": q_minhash_calibration,
-    "o8_min_cost_supplier": q_o8_min_cost_supplier,
-    "boilerplate_prefix": q_boilerplate_prefix,
-    "keep_rate_curve": q_keep_rate_curve,
-    "unigram_kl_drift": q_unigram_kl_drift,
-    "dedup_provenance": q_dedup_provenance,
-    "stream_gopher_score": q_stream_gopher_score,
-    "keep_rate_by_lang": q_keep_rate_by_lang,
-    "redirect_resolve": q_redirect_resolve,
-    "phrase_search": q_phrase_search,
-    "bm25_topk": q_bm25_topk,
-    "phrase_search_indexed": q_phrase_search_indexed,
-    "snapshot_diff": q_snapshot_diff,
-    "zorder_values": q_zorder_values,
-    "chunk_plan_strided": q_chunk_plan_strided,
-    "mixture_temperature": q_mixture_temperature,
-    "fd_violations": q_fd_violations,
-    "int8_topk": q_int8_topk,
-    "dedup_exact_best": q_dedup_exact_best,
-    "emb_dim_stats": q_emb_dim_stats,
-    "benford_census": q_benford_census,
-    "incremental_curation_e2e": q_incremental_curation_e2e,
-    "o7_top_supplier": q_o7_top_supplier,
-    "dup_cross_source": q_dup_cross_source,
-    "s3_stratified_sample": q_s3_stratified_sample,
-    "s3_fixed_n_per_group": q_s3_fixed_n_per_group,
-    "p5_uid64": q_p5_uid64,
-    "p7_scrub": q_p7_scrub,
-    "knn_bruteforce": q_knn_bruteforce,
-    "embedding_neardup": q_embedding_neardup,
-    "score_core": q_score_core,
-    "cot_envelope": q_cot_envelope,
-    "cot_enhanced": q_cot_enhanced,
-    "gen_fanout": q_gen_fanout,
-    "stream_windowed_agg": q_stream_windowed_agg,
-    "sink_roundtrip": q_sink_roundtrip,
-    "s8_output_naming": q_s8_output_naming,
-    # rows-only (non-SQL-expressible)
-    "pipeline_score_documents": q_pipeline_score_documents,
-    "dedup_minhash_full": q_dedup_minhash_full,
-    "dedup_simhash": q_dedup_simhash,
-    "ann_topk": q_ann_topk,
-    "ivf_topk": q_ivf_topk,
-    "ivf_topk_indexed": q_ivf_topk_indexed,
-    "multimodal_features": q_multimodal_features,
+# The query registry, one entry per query: name → (Spark query, DuckDB
+# twin). A twin is its SQL string; a zero-argument function that builds
+# it, called only by oracle_map() so that fetching the oracle SQL needs
+# no SparkSession; or None for a rows-only query.
+_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
+                           str | Callable[[], str] | None]] = {
+    "p1_validation_filter": (q_p1_validation_filter, SQL_P1),
+    "s7_field_mapping": (q_s7_field_mapping, SQL_S7),
+    "s7_metadata_absorb": (q_s7_metadata_absorb, _sql_s7_metadata_absorb),
+    "p3_normalization": (q_p3_normalization, SQL_P3),
+    "p4_weighted_score": (q_p4_weighted_score, SQL_P4),
+    "f1_keep_filter": (q_f1_keep_filter, SQL_F1),
+    "f2_drop_lane": (q_f2_drop_lane, SQL_F2),
+    "p6_error_default": (q_p6_error_default, _sql_p6),
+    "p8_cost": (q_p8_cost, SQL_P8),
+    "p9_format_conversion": (q_p9_format_conversion, _sql_p9),
+    "p2_category": (q_p2_category, _sql_p2),
+    "f1_category_filter": (q_f1_category_filter, _sql_f1_category),
+    "p10_improvement_suggestions": (q_p10_improvement_suggestions, SQL_P10),
+    "a1_batch_metrics": (q_a1_batch_metrics, SQL_A1),
+    "a2_event_totals": (q_a2_event_totals, SQL_A2),
+    "a3_source_distribution": (q_a3_source_distribution, SQL_A3),
+    "a4_token_stats": (q_a4_token_stats, SQL_A4),
+    "j1_anti_join_resume": (q_j1_anti_join_resume, SQL_J1),
+    "j2_last_wins_dedup": (q_j2_last_wins_dedup, SQL_J2),
+    "u1_union": (q_u1_union, SQL_U1),
+    "o1_sort_limit": (q_o1_sort_limit, SQL_O1),
+    "s3_sample": (q_s3_sample, SQL_S3),
+    "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
+    "dedup_wordset": (q_dedup_wordset, SQL_DEDUP_WORDSET),
+    "dedup_minhash_pairs": (q_dedup_minhash_pairs, SQL_DEDUP_MINHASH_PAIRS),
+    "dedup_ngram_jaccard": (q_dedup_ngram_jaccard, SQL_DEDUP_NGRAM_JACCARD),
+    "dedup_cc": (q_dedup_cc, SQL_DEDUP_CC),
+    "lang_id_heuristic": (q_lang_id_heuristic, SQL_LANG_ID),
+    "doc_fingerprint": (q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+    "token_count": (q_token_count, SQL_TOKEN_COUNT),
+    "tf_top_terms": (q_tf_top_terms, SQL_TF_TOP_TERMS),
+    "a6_token_quantiles": (q_a6_token_quantiles, SQL_A6_TOKEN_QUANTILES),
+    "o2_topn_per_group": (q_o2_topn_per_group, SQL_O2_TOPN),
+    "sessionize_events": (q_sessionize_events, SQL_SESSIONIZE),
+    "a7_event_pivot": (q_a7_event_pivot, SQL_A7_PIVOT),
+    "a8_langs_per_source": (q_a8_langs_per_source, SQL_A8_LANGS),
+    "asof_purchase_attach": (q_asof_purchase_attach, SQL_ASOF),
+    "range_join_error_windows": (q_range_join_error_windows, SQL_RANGE_JOIN),
+    "rolling_value_avg": (q_rolling_value_avg, SQL_ROLLING_AVG),
+    "a9_rollup_report": (q_a9_rollup_report, SQL_A9_ROLLUP),
+    "a10_quality_tiles": (q_a10_quality_tiles, SQL_A10_TILES),
+    "u2_set_ops": (q_u2_set_ops, SQL_U2_SET_OPS),
+    "dedup_lev_pairs": (q_dedup_lev_pairs, SQL_DEDUP_LEV),
+    "funnel_conversion": (q_funnel_conversion, SQL_FUNNEL),
+    "a11_feature_corr": (q_a11_feature_corr, SQL_A11_CORR),
+    "p11_json_props": (q_p11_json_props, SQL_P11_JSON),
+    "j4_reconcile": (q_j4_reconcile, SQL_J4_RECONCILE),
+    "a12_distinct_exact": (q_a12_distinct_exact, SQL_A12_DISTINCT),
+    "cohort_retention": (q_cohort_retention, SQL_COHORT_RETENTION),
+    "boilerplate_shingles": (q_boilerplate_shingles, SQL_BOILERPLATE),
+    "a13_trimmed_mean": (q_a13_trimmed_mean, SQL_A13_TRIMMED),
+    "a14_source_share": (q_a14_source_share, SQL_A14_SHARE),
+    "lexical_diversity": (q_lexical_diversity, SQL_LEXICAL_DIVERSITY),
+    "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF),
+    "pmi_bigrams": (q_pmi_bigrams, SQL_PMI),
+    "a15_zscore_outliers": (q_a15_zscore_outliers, SQL_A15_ZSCORE),
+    "cc_cluster_histogram": (q_cc_cluster_histogram, SQL_CC_HISTOGRAM),
+    "a16_daily_gapfill": (q_a16_daily_gapfill, SQL_A16_GAPFILL),
+    "a17_user_percentile": (q_a17_user_percentile, SQL_A17_PERCENTILE),
+    "gopher_stats": (q_gopher_stats, SQL_GOPHER_STATS),
+    "a18_median_mad": (q_a18_median_mad, SQL_A18_MAD),
+    "a19_event_lift": (q_a19_event_lift, SQL_A19_LIFT),
+    "a20_length_log2_hist": (q_a20_length_log2_hist, SQL_A20_LOG2),
+    "decon_benchmark_overlap": (q_decon_benchmark_overlap, SQL_DECON),
+    "oov_rate": (q_oov_rate, SQL_OOV),
+    "mixture_plan": (q_mixture_plan, SQL_MIXTURE),
+    "chunk_plan": (q_chunk_plan, SQL_CHUNK),
+    "pack_bins": (q_pack_bins, SQL_PACK),
+    "char_diversity": (q_char_diversity, SQL_CHAR_DIVERSITY),
+    "s3_weighted_sample": (q_s3_weighted_sample, SQL_S3_WEIGHTED),
+    "ngram_repetition": (q_ngram_repetition, SQL_NGRAM_REPETITION),
+    "token_entropy": (q_token_entropy, SQL_TOKEN_ENTROPY),
+    "stopword_coverage": (
+        q_stopword_coverage,
+        lambda: SQL_STOPWORD_COVERAGE.replace(
+            "{stoplist}", _stopword_list_sql()
+        ),
+    ),
+    "dedup_canonical": (q_dedup_canonical, SQL_DEDUP_CANONICAL),
+    "burst_users": (q_burst_users, SQL_BURST_USERS),
+    "a21_length_band": (q_a21_length_band, SQL_A21_BAND),
+    "lang_confusion": (q_lang_confusion, _lang_confusion_sql),
+    "pii_prevalence": (q_pii_prevalence, _pii_prevalence_sql),
+    "calibration_curve": (q_calibration_curve, _calibration_curve_sql),
+    "props_key_census": (q_props_key_census, SQL_PROPS_KEY_CENSUS),
+    "emb_norm_stats": (q_emb_norm_stats, SQL_EMB_NORM_STATS),
+    "a24_first_last_event": (q_a24_first_last_event, SQL_A24_FIRST_LAST),
+    "a25_event_transitions": (q_a25_event_transitions, SQL_A25_TRANSITIONS),
+    "a26_lang_deciles": (q_a26_lang_deciles, SQL_A26_LANG_DECILES),
+    "dedup_spans": (q_dedup_spans, SQL_DEDUP_SPANS),
+    "a28_vocab_census": (q_a28_vocab_census, SQL_A28_VOCAB_CENSUS),
+    "dedup_spans_within": (q_dedup_spans_within, SQL_DEDUP_SPANS_WITHIN),
+    "term_df_scrub": (q_term_df_scrub, SQL_TERM_DF_SCRUB),
+    "dedup_minhash_incr": (q_dedup_minhash_incr, SQL_DEDUP_MINHASH_INCR),
+    "domain_blocklist_filter": (q_domain_blocklist, SQL_DOMAIN_BLOCKLIST),
+    "host_quota_sample": (q_host_quota_sample, SQL_HOST_QUOTA_SAMPLE),
+    "url_dedup_lastwins": (q_url_dedup, _sql_url_dedup),
+    "split_leak_safe": (q_split_leak_safe, SQL_SPLIT_LEAK_SAFE),
+    "robots_filter": (q_robots_filter, SQL_ROBOTS_FILTER),
+    "link_pagerank": (q_link_pagerank, _sql_pagerank),
+    "link_degree_census": (q_link_degree_census, SQL_LINK_DEGREE_CENSUS),
+    "mixture_apply": (q_mixture_apply, SQL_MIXTURE_APPLY),
+    "normalize_punct": (q_normalize_punct, _sql_normalize_punct),
+    "web_curation_e2e": (q_web_curation_e2e, SQL_WEB_CURATION_E2E),
+    "ivf_append_probe": (q_ivf_append_probe, _sql_ivf_incr),
+    "tok_bytes_ratio": (q_tok_bytes_ratio, SQL_TOK_BYTES_RATIO),
+    "hapax_rate": (q_hapax_rate, SQL_HAPAX_RATE),
+    "a39_salted_hot_agg": (q_a39_salted_hot_agg, SQL_A39_SALTED_HOT_AGG),
+    "zipf_slope": (q_zipf_slope, SQL_ZIPF_SLOPE),
+    "hll_vocab": (q_hll_vocab, SQL_HLL_VOCAB),
+    "cms_terms": (q_cms_terms, SQL_CMS_TERMS),
+    "bloom_custkeys": (q_bloom_custkeys, SQL_BLOOM_CUSTKEYS),
+    "gini_sources": (q_gini_sources, SQL_GINI_SOURCES),
+    "cusum_drift": (q_cusum_drift, SQL_CUSUM_DRIFT),
+    "hits_scores": (q_hits_scores, SQL_HITS_SCORES),
+    "skyline_orders": (q_skyline_orders, SQL_SKYLINE_ORDERS),
+    "session_window_native": (q_session_window_native, SQL_SESSION_WINDOW_NATIVE),
+    "profile_documents": (q_profile_documents, SQL_PROFILE_DOCUMENTS),
+    "stream_hll": (q_stream_hll, SQL_STREAM_HLL),
+    "kcore_links": (q_kcore_links, SQL_KCORE_LINKS),
+    "link_structure": (q_link_structure, SQL_LINK_STRUCTURE),
+    "scd2_pages": (q_scd2_pages, SQL_SCD2_PAGES),
+    "bool_search": (q_bool_search, SQL_BOOL_SEARCH),
+    "wrs_sample": (q_wrs_sample, SQL_WRS_SAMPLE),
+    "spike_zscore": (q_spike_zscore, SQL_SPIKE_ZSCORE),
+    "hll_by_source": (q_hll_by_source, SQL_HLL_BY_SOURCE),
+    "lang_source_mi": (q_lang_source_mi, SQL_LANG_SOURCE_MI),
+    "fd_census": (q_fd_census, SQL_FD_CENSUS),
+    "theilsen_trend": (q_theilsen_trend, SQL_THEILSEN_TREND),
+    "event_paths3": (q_event_paths3, SQL_EVENT_PATHS3),
+    "cms_join_est": (q_cms_join_est, SQL_CMS_JOIN_EST),
+    "psi_value_drift": (q_psi_value_drift, SQL_PSI_VALUE_DRIFT),
+    "negative_samples": (q_negative_samples, SQL_NEGATIVE_SAMPLES),
+    "k_anon_docs": (q_k_anon_docs, SQL_K_ANON_DOCS),
+    "dataset_fingerprint": (q_dataset_fingerprint, SQL_DATASET_FINGERPRINT),
+    "prefix_jaccard_pairs": (q_prefix_jaccard_pairs, SQL_PREFIX_JACCARD_PAIRS),
+    "props_key_drift": (q_props_key_drift, SQL_PROPS_KEY_DRIFT),
+    "concurrency_peak": (q_concurrency_peak, SQL_CONCURRENCY_PEAK),
+    "source_cosine": (q_source_cosine, SQL_SOURCE_COSINE),
+    "rolling_users_hll": (q_rolling_users_hll, SQL_ROLLING_USERS_HLL),
+    "homoglyph_spoof": (q_homoglyph_spoof, SQL_HOMOGLYPH_SPOOF),
+    "dow_chi2": (q_dow_chi2, SQL_DOW_CHI2),
+    "bloom_prefilter_join": (q_bloom_prefilter_join, SQL_BLOOM_PREFILTER_JOIN),
+    "neyman_plan": (q_neyman_plan, SQL_NEYMAN_PLAN),
+    "contract_checks": (q_contract_checks, SQL_CONTRACT_CHECKS),
+    "log_quantile_sketch": (q_log_quantile_sketch, SQL_LOG_QUANTILE_SKETCH),
+    "hll_overlap": (q_hll_overlap, SQL_HLL_OVERLAP),
+    "stream_cms": (q_stream_cms, SQL_STREAM_CMS),
+    "km_conversion": (q_km_conversion, SQL_KM_CONVERSION),
+    "rbo_source_rankings": (q_rbo_source_rankings, SQL_RBO_SOURCE_RANKINGS),
+    "keep_ab_test": (q_keep_ab_test, SQL_KEEP_AB_TEST),
+    "vocab_coverage": (q_vocab_coverage, SQL_VOCAB_COVERAGE),
+    "cdc_docs": (q_cdc_docs, SQL_CDC_DOCS),
+    "late_census": (q_late_census, SQL_LATE_CENSUS),
+    "funnel3": (q_funnel3, SQL_FUNNEL3),
+    "emd_length_drift": (q_emd_length_drift, SQL_EMD_LENGTH_DRIFT),
+    "doc_novelty": (q_doc_novelty, SQL_DOC_NOVELTY),
+    "daily_xcorr": (q_daily_xcorr, SQL_DAILY_XCORR),
+    "term_adaptation": (q_term_adaptation, SQL_TERM_ADAPTATION),
+    "bigram_cond_entropy": (q_bigram_cond_entropy, SQL_BIGRAM_COND_ENTROPY),
+    "rfm_segments": (q_rfm_segments, SQL_RFM_SEGMENTS),
+    "local_clustering": (q_local_clustering, SQL_LOCAL_CLUSTERING),
+    "event_stationary": (q_event_stationary, SQL_EVENT_STATIONARY),
+    "session_entry_exit": (q_session_entry_exit, SQL_SESSION_ENTRY_EXIT),
+    "interarrival_quantiles": (q_interarrival_quantiles, SQL_INTERARRIVAL_QUANTILES),
+    "dup_rate_by_source": (q_dup_rate_by_source, SQL_DUP_RATE_BY_SOURCE),
+    "centroid_confusion": (q_centroid_confusion, SQL_CENTROID_CONFUSION),
+    "hill_tail": (q_hill_tail, SQL_HILL_TAIL),
+    "simpson_probe": (q_simpson_probe, SQL_SIMPSON_PROBE),
+    "trending_terms": (q_trending_terms, SQL_TRENDING_TERMS),
+    "mase_forecast": (q_mase_forecast, SQL_MASE_FORECAST),
+    "vocab_growth": (q_vocab_growth, SQL_VOCAB_GROWTH),
+    "mix_rate_decomposition": (q_mix_rate_decomposition, SQL_MIX_RATE_DECOMPOSITION),
+    "page_churn_census": (q_page_churn_census, SQL_PAGE_CHURN_CENSUS),
+    "qq_shift": (q_qq_shift, SQL_QQ_SHIFT),
+    "keep_discriminative_terms": (q_keep_discriminative_terms, SQL_KEEP_DISCRIMINATIVE_TERMS),
+    "theta_vocab_by_source": (q_theta_vocab_by_source, SQL_THETA_VOCAB_BY_SOURCE),
+    "theta_vocab_overlap": (q_theta_vocab_overlap, SQL_THETA_VOCAB_OVERLAP),
+    "label_prop_communities": (q_label_prop_communities, _sql_label_prop),
+    "cocitation_pairs": (q_cocitation_pairs, SQL_COCITATION_PAIRS),
+    "cdc_chunk_census": (q_cdc_chunk_census, SQL_CDC_CHUNK_CENSUS),
+    "linear_probe_train": (q_linear_probe_train, SQL_LINEAR_PROBE_TRAIN),
+    "trustrank_links": (q_trustrank_links, _sql_trustrank),
+    "dedup_cc_best": (q_dedup_cc_best, SQL_DEDUP_CC_BEST),
+    "bpe_merges": (q_bpe_merges, SQL_BPE_MERGES),
+    "stream_dedup": (q_stream_dedup, SQL_STREAM_DEDUP),
+    "rrf_hybrid_search": (q_rrf_hybrid_search, _sql_rrf_hybrid),
+    "pq_topk": (q_pq_topk, _sql_pq_topk),
+    "quantile_normalize": (q_quantile_normalize, SQL_QUANTILE_NORMALIZE),
+    "dow_seasonal_anomaly": (q_dow_seasonal_anomaly, SQL_DOW_SEASONAL_ANOMALY),
+    "dsir_weights": (q_dsir_weights, SQL_DSIR_WEIGHTS),
+    "bigram_lm_ppl": (q_bigram_lm_ppl, SQL_BIGRAM_LM_PPL),
+    "conformal_bounds": (q_conformal_bounds, SQL_CONFORMAL_BOUNDS),
+    "energy_drift": (q_energy_drift, SQL_ENERGY_DRIFT),
+    "coverage_select": (q_coverage_select, SQL_COVERAGE_SELECT),
+    "mmr_rerank": (q_mmr_rerank, SQL_MMR_RERANK),
+    "stream_stream_join": (q_stream_stream_join, SQL_STREAM_STREAM_JOIN),
+    "stream_left_join": (q_stream_left_join, SQL_STREAM_LEFT_JOIN),
+    "lsh_recall_eval": (q_lsh_recall_eval, SQL_LSH_RECALL_EVAL),
+    "split_by_cluster": (q_split_by_cluster, SQL_SPLIT_BY_CLUSTER),
+    "hashed_tf_knn": (q_hashed_tf_knn, SQL_HASHED_TF_KNN),
+    "slot_apportionment": (q_slot_apportionment, SQL_SLOT_APPORTIONMENT),
+    "dedup_family_kappa": (q_dedup_family_kappa, _sql_dedup_family_kappa),
+    "filter_cascade_plan": (q_filter_cascade_plan, SQL_FILTER_CASCADE_PLAN),
+    "keep_rate_wilson": (q_keep_rate_wilson, SQL_KEEP_RATE_WILSON),
+    "term_burstiness": (q_term_burstiness, SQL_TERM_BURSTINESS),
+    "dedup_cc_incr": (q_dedup_cc_incr, SQL_DEDUP_CC_INCR),
+    "ivf_recall_curve": (q_ivf_recall_curve, SQL_IVF_RECALL_CURVE),
+    "lsh_candidate_forecast": (q_lsh_candidate_forecast, SQL_LSH_CANDIDATE_FORECAST),
+    "dedup_audit_sample": (q_dedup_audit_sample, _sql_dedup_audit_sample),
+    "winnow_overlap": (q_winnow_overlap, SQL_WINNOW_OVERLAP),
+    "bpe_fertility": (q_bpe_fertility, SQL_BPE_FERTILITY),
+    "flesch_reading": (q_flesch_reading, SQL_FLESCH_READING),
+    "ks_length_drift": (q_ks_length_drift, SQL_KS_LENGTH_DRIFT),
+    "triangle_census": (q_triangle_census, SQL_TRIANGLE_CENSUS),
+    "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
+    "script_profile": (q_script_profile, _script_profile_sql),
+    "minhash_calibration": (q_minhash_calibration, SQL_MINHASH_CALIBRATION),
+    "boilerplate_prefix": (q_boilerplate_prefix, SQL_BOILERPLATE_PREFIX),
+    "keep_rate_curve": (q_keep_rate_curve, _sql_keep_rate_curve),
+    "unigram_kl_drift": (q_unigram_kl_drift, SQL_UNIGRAM_KL_DRIFT),
+    "dedup_provenance": (q_dedup_provenance, _sql_dedup_provenance),
+    "stream_gopher_score": (q_stream_gopher_score, SQL_STREAM_GOPHER_SCORE),
+    "keep_rate_by_lang": (q_keep_rate_by_lang, _sql_keep_rate_by_lang),
+    "redirect_resolve": (q_redirect_resolve, SQL_REDIRECT_RESOLVE),
+    "phrase_search": (q_phrase_search, SQL_PHRASE_SEARCH),
+    "bm25_topk": (q_bm25_topk, _sql_bm25_topk),
+    "phrase_search_indexed": (q_phrase_search_indexed, SQL_PHRASE_SEARCH),
+    "snapshot_diff": (q_snapshot_diff, SQL_SNAPSHOT_DIFF),
+    "zorder_values": (q_zorder_values, _sql_zorder_values),
+    "chunk_plan_strided": (q_chunk_plan_strided, SQL_CHUNK_STRIDED),
+    "mixture_temperature": (q_mixture_temperature, SQL_MIXTURE_TEMPERATURE),
+    "fd_violations": (q_fd_violations, SQL_FD_VIOLATIONS),
+    "int8_topk": (q_int8_topk, SQL_INT8_TOPK),
+    "dedup_exact_best": (q_dedup_exact_best, SQL_DEDUP_EXACT_BEST),
+    "emb_dim_stats": (q_emb_dim_stats, SQL_EMB_DIM_STATS),
+    "benford_census": (q_benford_census, _sql_benford_census),
+    "incremental_curation_e2e": (q_incremental_curation_e2e, _sql_incremental_curation),
+    "dup_cross_source": (q_dup_cross_source, _dup_cross_source_sql),
+    "s3_stratified_sample": (q_s3_stratified_sample, SQL_S3_STRATIFIED),
+    "s3_fixed_n_per_group": (q_s3_fixed_n_per_group, SQL_S3_FIXED_N),
+    "p5_uid64": (q_p5_uid64, SQL_P5_UID64),
+    "p7_scrub": (q_p7_scrub, _scrub_sql),
+    "knn_bruteforce": (q_knn_bruteforce, SQL_KNN),
+    "embedding_neardup": (q_embedding_neardup, SQL_EMB_NEARDUP),
+    "score_core": (q_score_core, _sql_score_core),
+    "cot_envelope": (q_cot_envelope, _sql_cot_envelope),
+    "cot_enhanced": (q_cot_enhanced, _sql_cot_enhanced),
+    "gen_fanout": (q_gen_fanout, SQL_GEN_FANOUT),
+    "stream_windowed_agg": (q_stream_windowed_agg, SQL_STREAM_WINDOWED_AGG),
+    "sink_roundtrip": (q_sink_roundtrip, SQL_SINK_ROUNDTRIP),
+    "s8_output_naming": (q_s8_output_naming, SQL_S8_OUTPUT_NAMING),
+    "pipeline_score_documents": (q_pipeline_score_documents, None),
+    "dedup_minhash_full": (q_dedup_minhash_full, SQL_DEDUP_MINHASH_FULL),
+    "dedup_simhash": (q_dedup_simhash, _sql_dedup_simhash),
+    "ann_topk": (q_ann_topk, _sql_ann_topk),
+    "ivf_topk": (q_ivf_topk, _sql_ivf_topk),
+    "ivf_topk_indexed": (q_ivf_topk_indexed, _sql_ivf_topk),
+    "multimodal_features": (q_multimodal_features, SQL_MULTIMODAL),
 }
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    name: fn for name, (fn, _) in _REGISTRY.items()}
 
 
 def oracle_map() -> dict[str, str]:
-    return {
-        "p1_validation_filter": SQL_P1,
-        "s7_field_mapping": SQL_S7,
-        "s7_metadata_absorb": _sql_s7_metadata_absorb(),
-        "p3_normalization": SQL_P3,
-        "p4_weighted_score": SQL_P4,
-        "f1_keep_filter": SQL_F1,
-        "f2_drop_lane": SQL_F2,
-        "p6_error_default": _sql_p6(),
-        "p8_cost": SQL_P8,
-        "p9_format_conversion": _sql_p9(),
-        "p2_category": _sql_p2(),
-        "f1_category_filter": _sql_f1_category(),
-        "p10_improvement_suggestions": SQL_P10,
-        "a1_batch_metrics": SQL_A1,
-        "a2_event_totals": SQL_A2,
-        "a3_source_distribution": SQL_A3,
-        "a4_token_stats": SQL_A4,
-        "a5_lineitem_summary": SQL_A5,
-        "j1_anti_join_resume": SQL_J1,
-        "j2_last_wins_dedup": SQL_J2,
-        "u1_union": SQL_U1,
-        "o1_sort_limit": SQL_O1,
-        "s3_sample": SQL_S3,
-        "dedup_exact": SQL_DEDUP_EXACT,
-        "dedup_wordset": SQL_DEDUP_WORDSET,
-        "dedup_minhash_pairs": SQL_DEDUP_MINHASH_PAIRS,
-        "dedup_ngram_jaccard": SQL_DEDUP_NGRAM_JACCARD,
-        "dedup_minhash_incr": SQL_DEDUP_MINHASH_INCR,
-        "domain_blocklist_filter": SQL_DOMAIN_BLOCKLIST,
-        "host_quota_sample": SQL_HOST_QUOTA_SAMPLE,
-        "url_dedup_lastwins": _sql_url_dedup(),
-        "a30_cust_order_dist": SQL_A30_CUST_ORDER_DIST,
-        "a31_small_qty_revenue": SQL_A31_SMALL_QTY_REVENUE,
-        "a32_idle_rich_customers": SQL_A32_IDLE_RICH_CUSTOMERS,
-        "a33_waiting_suppliers": SQL_A33_WAITING_SUPPLIERS,
-        "a34_market_share": SQL_A34_MARKET_SHARE,
-        "split_leak_safe": SQL_SPLIT_LEAK_SAFE,
-        "robots_filter": SQL_ROBOTS_FILTER,
-        "link_pagerank": _sql_pagerank(),
-        "link_degree_census": SQL_LINK_DEGREE_CENSUS,
-        "a35_supplier_census": SQL_A35_SUPPLIER_CENSUS,
-        "a36_revenue_delta": SQL_A36_REVENUE_DELTA,
-        "a37_dominant_suppliers": SQL_A37_DOMINANT_SUPPLIERS,
-        "mixture_apply": SQL_MIXTURE_APPLY,
-        "normalize_punct": _sql_normalize_punct(),
-        "web_curation_e2e": SQL_WEB_CURATION_E2E,
-        "ivf_append_probe": _sql_ivf_incr(),
-        "a38_nation_profit": SQL_A38_NATION_PROFIT,
-        "tok_bytes_ratio": SQL_TOK_BYTES_RATIO,
-        "hapax_rate": SQL_HAPAX_RATE,
-        "a39_salted_hot_agg": SQL_A39_SALTED_HOT_AGG,
-        "zipf_slope": SQL_ZIPF_SLOPE,
-        "hll_vocab": SQL_HLL_VOCAB,
-        "cms_terms": SQL_CMS_TERMS,
-        "bloom_custkeys": SQL_BLOOM_CUSTKEYS,
-        "gini_sources": SQL_GINI_SOURCES,
-        "cusum_drift": SQL_CUSUM_DRIFT,
-        "hits_scores": SQL_HITS_SCORES,
-        "skyline_orders": SQL_SKYLINE_ORDERS,
-        "a40_revenue_concentration": SQL_A40_REVENUE_CONCENTRATION,
-        "session_window_native": SQL_SESSION_WINDOW_NATIVE,
-        "profile_documents": SQL_PROFILE_DOCUMENTS,
-        "stream_hll": SQL_STREAM_HLL,
-        "kcore_links": SQL_KCORE_LINKS,
-        "link_structure": SQL_LINK_STRUCTURE,
-        "scd2_pages": SQL_SCD2_PAGES,
-        "bool_search": SQL_BOOL_SEARCH,
-        "wrs_sample": SQL_WRS_SAMPLE,
-        "spike_zscore": SQL_SPIKE_ZSCORE,
-        "hll_by_source": SQL_HLL_BY_SOURCE,
-        "lang_source_mi": SQL_LANG_SOURCE_MI,
-        "fd_census": SQL_FD_CENSUS,
-        "theilsen_trend": SQL_THEILSEN_TREND,
-        "event_paths3": SQL_EVENT_PATHS3,
-        "cms_join_est": SQL_CMS_JOIN_EST,
-        "psi_value_drift": SQL_PSI_VALUE_DRIFT,
-        "negative_samples": SQL_NEGATIVE_SAMPLES,
-        "k_anon_docs": SQL_K_ANON_DOCS,
-        "dataset_fingerprint": SQL_DATASET_FINGERPRINT,
-        "prefix_jaccard_pairs": SQL_PREFIX_JACCARD_PAIRS,
-        "props_key_drift": SQL_PROPS_KEY_DRIFT,
-        "concurrency_peak": SQL_CONCURRENCY_PEAK,
-        "source_cosine": SQL_SOURCE_COSINE,
-        "rolling_users_hll": SQL_ROLLING_USERS_HLL,
-        "fk_integrity": SQL_FK_INTEGRITY,
-        "homoglyph_spoof": SQL_HOMOGLYPH_SPOOF,
-        "dow_chi2": SQL_DOW_CHI2,
-        "bloom_prefilter_join": SQL_BLOOM_PREFILTER_JOIN,
-        "neyman_plan": SQL_NEYMAN_PLAN,
-        "contract_checks": SQL_CONTRACT_CHECKS,
-        "log_quantile_sketch": SQL_LOG_QUANTILE_SKETCH,
-        "hll_overlap": SQL_HLL_OVERLAP,
-        "stream_cms": SQL_STREAM_CMS,
-        "km_conversion": SQL_KM_CONVERSION,
-        "rbo_source_rankings": SQL_RBO_SOURCE_RANKINGS,
-        "keep_ab_test": SQL_KEEP_AB_TEST,
-        "vocab_coverage": SQL_VOCAB_COVERAGE,
-        "cdc_docs": SQL_CDC_DOCS,
-        "late_census": SQL_LATE_CENSUS,
-        "funnel3": SQL_FUNNEL3,
-        "emd_length_drift": SQL_EMD_LENGTH_DRIFT,
-        "doc_novelty": SQL_DOC_NOVELTY,
-        "daily_xcorr": SQL_DAILY_XCORR,
-        "term_adaptation": SQL_TERM_ADAPTATION,
-        "bigram_cond_entropy": SQL_BIGRAM_COND_ENTROPY,
-        "rfm_segments": SQL_RFM_SEGMENTS,
-        "local_clustering": SQL_LOCAL_CLUSTERING,
-        "event_stationary": SQL_EVENT_STATIONARY,
-        "session_entry_exit": SQL_SESSION_ENTRY_EXIT,
-        "interarrival_quantiles": SQL_INTERARRIVAL_QUANTILES,
-        "order_status_audit": SQL_ORDER_STATUS_AUDIT,
-        "dup_rate_by_source": SQL_DUP_RATE_BY_SOURCE,
-        "centroid_confusion": SQL_CENTROID_CONFUSION,
-        "hill_tail": SQL_HILL_TAIL,
-        "simpson_probe": SQL_SIMPSON_PROBE,
-        "trending_terms": SQL_TRENDING_TERMS,
-        "mase_forecast": SQL_MASE_FORECAST,
-        "vocab_growth": SQL_VOCAB_GROWTH,
-        "mix_rate_decomposition": SQL_MIX_RATE_DECOMPOSITION,
-        "page_churn_census": SQL_PAGE_CHURN_CENSUS,
-        "skew_audit": SQL_SKEW_AUDIT,
-        "qq_shift": SQL_QQ_SHIFT,
-        "consistent_hash": SQL_CONSISTENT_HASH,
-        "keep_discriminative_terms": SQL_KEEP_DISCRIMINATIVE_TERMS,
-        "theta_vocab_by_source": SQL_THETA_VOCAB_BY_SOURCE,
-        "theta_vocab_overlap": SQL_THETA_VOCAB_OVERLAP,
-        "label_prop_communities": _sql_label_prop(),
-        "cocitation_pairs": SQL_COCITATION_PAIRS,
-        "cdc_chunk_census": SQL_CDC_CHUNK_CENSUS,
-        "linear_probe_train": SQL_LINEAR_PROBE_TRAIN,
-        "trustrank_links": _sql_trustrank(),
-        "dedup_cc_best": SQL_DEDUP_CC_BEST,
-        "bpe_merges": SQL_BPE_MERGES,
-        "stream_dedup": SQL_STREAM_DEDUP,
-        "rrf_hybrid_search": _sql_rrf_hybrid(),
-        "pq_topk": _sql_pq_topk(),
-        "quantile_normalize": SQL_QUANTILE_NORMALIZE,
-        "dow_seasonal_anomaly": SQL_DOW_SEASONAL_ANOMALY,
-        "dsir_weights": SQL_DSIR_WEIGHTS,
-        "bigram_lm_ppl": SQL_BIGRAM_LM_PPL,
-        "conformal_bounds": SQL_CONFORMAL_BOUNDS,
-        "energy_drift": SQL_ENERGY_DRIFT,
-        "coverage_select": SQL_COVERAGE_SELECT,
-        "mmr_rerank": SQL_MMR_RERANK,
-        "stream_stream_join": SQL_STREAM_STREAM_JOIN,
-        "stream_left_join": SQL_STREAM_LEFT_JOIN,
-        "lsh_recall_eval": SQL_LSH_RECALL_EVAL,
-        "split_by_cluster": SQL_SPLIT_BY_CLUSTER,
-        "hashed_tf_knn": SQL_HASHED_TF_KNN,
-        "slot_apportionment": SQL_SLOT_APPORTIONMENT,
-        "dedup_family_kappa": _sql_dedup_family_kappa(),
-        "filter_cascade_plan": SQL_FILTER_CASCADE_PLAN,
-        "keep_rate_wilson": SQL_KEEP_RATE_WILSON,
-        "term_burstiness": SQL_TERM_BURSTINESS,
-        "dedup_cc_incr": SQL_DEDUP_CC_INCR,
-        "ivf_recall_curve": SQL_IVF_RECALL_CURVE,
-        "lsh_candidate_forecast": SQL_LSH_CANDIDATE_FORECAST,
-        "dedup_audit_sample": _sql_dedup_audit_sample(),
-        "winnow_overlap": SQL_WINNOW_OVERLAP,
-        "bpe_fertility": SQL_BPE_FERTILITY,
-        "flesch_reading": SQL_FLESCH_READING,
-        "ks_length_drift": SQL_KS_LENGTH_DRIFT,
-        "triangle_census": SQL_TRIANGLE_CENSUS,
-        "containment_pairs": SQL_CONTAINMENT_PAIRS,
-        "script_profile": _script_profile_sql(),
-        "minhash_calibration": SQL_MINHASH_CALIBRATION,
-        "o8_min_cost_supplier": SQL_O8_MIN_COST_SUPPLIER,
-        "boilerplate_prefix": SQL_BOILERPLATE_PREFIX,
-        "keep_rate_curve": _sql_keep_rate_curve(),
-        "unigram_kl_drift": SQL_UNIGRAM_KL_DRIFT,
-        "dedup_provenance": _sql_dedup_provenance(),
-        "stream_gopher_score": SQL_STREAM_GOPHER_SCORE,
-        "keep_rate_by_lang": _sql_keep_rate_by_lang(),
-        "redirect_resolve": SQL_REDIRECT_RESOLVE,
-        "phrase_search": SQL_PHRASE_SEARCH,
-        "bm25_topk": _sql_bm25_topk(),
-        "phrase_search_indexed": SQL_PHRASE_SEARCH,
-        "snapshot_diff": SQL_SNAPSHOT_DIFF,
-        "zorder_values": _sql_zorder_values(),
-        "chunk_plan_strided": SQL_CHUNK_STRIDED,
-        "mixture_temperature": SQL_MIXTURE_TEMPERATURE,
-        "fd_violations": SQL_FD_VIOLATIONS,
-        "int8_topk": SQL_INT8_TOPK,
-        "dedup_exact_best": SQL_DEDUP_EXACT_BEST,
-        "emb_dim_stats": SQL_EMB_DIM_STATS,
-        "benford_census": _sql_benford_census(),
-        "incremental_curation_e2e": _sql_incremental_curation(),
-        "lang_id_heuristic": SQL_LANG_ID,
-        "doc_fingerprint": SQL_DOC_FINGERPRINT,
-        "token_count": SQL_TOKEN_COUNT,
-        "tf_top_terms": SQL_TF_TOP_TERMS,
-        "a6_token_quantiles": SQL_A6_TOKEN_QUANTILES,
-        "o2_topn_per_group": SQL_O2_TOPN,
-        "sessionize_events": SQL_SESSIONIZE,
-        "a7_event_pivot": SQL_A7_PIVOT,
-        "a8_langs_per_source": SQL_A8_LANGS,
-        "asof_purchase_attach": SQL_ASOF,
-        "j3_dim_broadcast": SQL_J3_DIM,
-        "range_join_error_windows": SQL_RANGE_JOIN,
-        "rolling_value_avg": SQL_ROLLING_AVG,
-        "a9_rollup_report": SQL_A9_ROLLUP,
-        "a10_quality_tiles": SQL_A10_TILES,
-        "u2_set_ops": SQL_U2_SET_OPS,
-        "dedup_lev_pairs": SQL_DEDUP_LEV,
-        "funnel_conversion": SQL_FUNNEL,
-        "a11_feature_corr": SQL_A11_CORR,
-        "p11_json_props": SQL_P11_JSON,
-        "j4_reconcile": SQL_J4_RECONCILE,
-        "a12_distinct_exact": SQL_A12_DISTINCT,
-        "cohort_retention": SQL_COHORT_RETENTION,
-        "boilerplate_shingles": SQL_BOILERPLATE,
-        "a13_trimmed_mean": SQL_A13_TRIMMED,
-        "a14_source_share": SQL_A14_SHARE,
-        "lexical_diversity": SQL_LEXICAL_DIVERSITY,
-        "tfidf_top_terms": SQL_TFIDF,
-        "pmi_bigrams": SQL_PMI,
-        "a15_zscore_outliers": SQL_A15_ZSCORE,
-        "cc_cluster_histogram": SQL_CC_HISTOGRAM,
-        "a16_daily_gapfill": SQL_A16_GAPFILL,
-        "a17_user_percentile": SQL_A17_PERCENTILE,
-        "gopher_stats": SQL_GOPHER_STATS,
-        "a18_median_mad": SQL_A18_MAD,
-        "a19_event_lift": SQL_A19_LIFT,
-        "a20_length_log2_hist": SQL_A20_LOG2,
-        "decon_benchmark_overlap": SQL_DECON,
-        "oov_rate": SQL_OOV,
-        "mixture_plan": SQL_MIXTURE,
-        "chunk_plan": SQL_CHUNK,
-        "pack_bins": SQL_PACK,
-        "char_diversity": SQL_CHAR_DIVERSITY,
-        "s3_weighted_sample": SQL_S3_WEIGHTED,
-        "ngram_repetition": SQL_NGRAM_REPETITION,
-        "token_entropy": SQL_TOKEN_ENTROPY,
-        "stopword_coverage": SQL_STOPWORD_COVERAGE.replace(
-            "{stoplist}", _stopword_list_sql()
-        ),
-        "dedup_canonical": SQL_DEDUP_CANONICAL,
-        "burst_users": SQL_BURST_USERS,
-        "a21_length_band": SQL_A21_BAND,
-        "lang_confusion": _lang_confusion_sql(),
-        "pii_prevalence": _pii_prevalence_sql(),
-        "calibration_curve": _calibration_curve_sql(),
-        "props_key_census": SQL_PROPS_KEY_CENSUS,
-        "emb_norm_stats": SQL_EMB_NORM_STATS,
-        "o3_shipping_priority": SQL_O3_SHIPPING,
-        "a22_late_ship_priority": SQL_A22_LATE_SHIP,
-        "o4_regional_volume": SQL_O4_REGIONAL_VOLUME,
-        "a23_promo_share": SQL_A23_PROMO_SHARE,
-        "f3_disjunctive_parts": SQL_F3_DISJUNCTIVE,
-        "a24_first_last_event": SQL_A24_FIRST_LAST,
-        "a25_event_transitions": SQL_A25_TRANSITIONS,
-        "a26_lang_deciles": SQL_A26_LANG_DECILES,
-        "dedup_spans": SQL_DEDUP_SPANS,
-        "o5_returned_revenue": SQL_O5_RETURNED_REVENUE,
-        "a27_linestatus_priority": SQL_A27_LINESTATUS_PRIORITY,
-        "o6_large_orders": SQL_O6_LARGE_ORDERS,
-        "a29_nation_flows": SQL_A29_NATION_FLOWS,
-        "a28_vocab_census": SQL_A28_VOCAB_CENSUS,
-        "dedup_spans_within": SQL_DEDUP_SPANS_WITHIN,
-        "term_df_scrub": SQL_TERM_DF_SCRUB,
-        "o7_top_supplier": SQL_O7_TOP_SUPPLIER,
-        "dup_cross_source": _dup_cross_source_sql(),
-        "s3_stratified_sample": SQL_S3_STRATIFIED,
-        "s3_fixed_n_per_group": SQL_S3_FIXED_N,
-        "p5_uid64": SQL_P5_UID64,
-        "p7_scrub": _scrub_sql(),
-        "knn_bruteforce": SQL_KNN,
-        "embedding_neardup": SQL_EMB_NEARDUP,
-        "score_core": _sql_score_core(),
-        "cot_envelope": _sql_cot_envelope(),
-        "cot_enhanced": _sql_cot_enhanced(),
-        "gen_fanout": SQL_GEN_FANOUT,
-        "stream_windowed_agg": SQL_STREAM_WINDOWED_AGG,
-        "sink_roundtrip": SQL_SINK_ROUNDTRIP,
-        "s8_output_naming": SQL_S8_OUTPUT_NAMING,
-        "dedup_minhash_full": SQL_DEDUP_MINHASH_FULL,
-        "dedup_simhash": _sql_dedup_simhash(),
-        "dedup_cc": SQL_DEDUP_CC,
-        "ann_topk": _sql_ann_topk(),
-        "ivf_topk": _sql_ivf_topk(),
-        "ivf_topk_indexed": _sql_ivf_topk(),
-        "multimodal_features": SQL_MULTIMODAL,
-    }
+    return {name: twin() if callable(twin) else twin
+            for name, (_, twin) in _REGISTRY.items() if twin is not None}
