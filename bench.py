@@ -692,8 +692,6 @@ def main() -> None:
         "lang_id_heuristic",
         "p7_scrub",
         "token_count",
-        "knn_bruteforce",
-        "embedding_neardup",
         "pipeline_score_documents",
     ]
     for name in ops:

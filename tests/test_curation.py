@@ -613,35 +613,6 @@ def test_mixture_temperature_limits_and_direction(spark):
         mixture_plan_temperature(df, temperature=0.0)
 
 
-def test_benford_digit_extraction_edges(spark):
-    """First-significant-digit extraction must survive negatives,
-    sub-1 magnitudes, and interior zeros (stripping [0.,] keeps the
-    significant digits in order — interior zeros are never FIRST)."""
-    import os
-    import tempfile
-
-    import xdan_dqa_spark.plans.entry_queries as eq
-
-    rows = [
-        (1, -123.4),    # -> 1
-        (2, 0.00456),   # -> 4
-        (3, 102.5),     # -> 1 (interior zero must not shift)
-        (4, 0.0),       # filtered out
-        (5, 900.0),     # -> 9
-    ]
-    df = spark.createDataFrame(
-        [(i, __import__("datetime").datetime(2024, 1, 1), 7, "t", v, "{}")
-         for i, v in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        df.write.parquet(os.path.join(tmp, "events.parquet"))
-        got = {r["digit"]: r["n"]
-               for r in eq.QUERIES["benford_census"](spark, tmp).collect()}
-    assert got == {1: 2, 4: 1, 9: 1}
-
-
 def test_scd2_intervals_runs_and_reappearance(spark):
     """A -> B -> A over one page: three intervals (re-appearing content
     opens a NEW interval), contiguous valid ranges, exactly one current."""
@@ -841,3 +812,13 @@ def test_hamilton_apportionment_sums_exactly(spark):
     by_w = sorted(rows, key=lambda x: x["w"])
     bases = [x["base"] for x in by_w]
     assert bases == sorted(bases)
+
+
+def test_conformal_bounds_guarantee_on_fixture(spark):
+    from xdan_dqa_spark.plans.entry_queries import q_conformal_bounds
+
+    r = q_conformal_bounds(spark, "/root/testdata/sf0.001").collect()[0]
+    assert r["lo_bound"] <= r["hi_bound"]
+    assert r["n_covered"] <= r["n_test"]
+    # 90%-nominal split conformal: allow finite-sample slack
+    assert r["coverage"] >= 0.8

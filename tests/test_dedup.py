@@ -788,6 +788,18 @@ def test_cc_dedup_best_collapse_value_identity(spark):
     assert a == b and len(a) > 0
 
 
+
+@pytest.mark.parametrize("fn", ["exact_dedup_best", "cc_dedup_best"])
+def test_best_dedup_rejects_non_integral_id_at_call_time(spark, fn):
+    """The lowest-id tie-break negates the id: a string id must raise
+    TypeError when the plan is built, not fail once an action runs."""
+    from xdan_dqa_spark.operators import dedup
+
+    df = spark.createDataFrame([("a", "same text", 1), ("b", "same text", 1)],
+                               "doc_id string, text string, score long")
+    with pytest.raises(TypeError, match="doc_id.*string"):
+        getattr(dedup, fn)(df, "score")
+
 def test_cc_incremental_bridges_and_fixed_points(spark):
     """New edges that BRIDGE two old components merge them to the
     global min label; untouched components pass through unchanged; new

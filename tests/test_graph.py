@@ -177,28 +177,6 @@ def test_hits_rejects_bad_params(spark):
         hits_scores(_edges(spark, [(1, 2)]), n_iter=0)
 
 
-def test_pareto_frontier_matches_bruteforce(spark):
-    """Staircase construction == quadratic dominance definition on a
-    corpus with duplicate x groups, duplicate y, and full ties."""
-    from xdan_dqa_spark.operators.metrics import pareto_frontier_2d
-
-    rows = [(1, 10.0, 5), (2, 10.0, 9), (3, 8.0, 9), (4, 8.0, 12),
-            (5, 12.0, 1), (6, 12.0, 1), (7, 3.0, 20), (8, 3.0, 20),
-            (9, 2.0, 2)]
-    df = spark.createDataFrame(rows, "id long, x double, y long")
-    got = sorted(r["id"] for r in pareto_frontier_2d(df, "x", "y").collect())
-
-    def dominated(a, b):   # b dominates a
-        return (b[1] >= a[1] and b[2] >= a[2]
-                and (b[1] > a[1] or b[2] > a[2]))
-
-    want = sorted(a[0] for a in rows
-                  if not any(dominated(a, b) for b in rows if b[0] != a[0]))
-    assert got == want
-    # ties on BOTH coords survive together; dominated duplicates die
-    assert 7 in got and 8 in got and 5 in got and 6 in got and 1 not in got
-
-
 def test_kcore_keeps_clique_drops_pendants(spark):
     """K4 + a pendant chain: every K4 node has degree 3 and survives a
     3-core peel; pendants (degree <= 2) peel away round by round."""
@@ -272,26 +250,6 @@ def test_local_clustering_clique_vs_star(spark):
         assert got[n]["clustering"] == 1.0 and got[n]["n_triangles"] == 3
     assert got[10]["clustering"] == 0.0          # star center: no triangles
     assert 11 not in got                          # degree-1 leaves filtered
-
-
-def test_markov_stationary_known_chain(spark):
-    from xdan_dqa_spark.operators.graph import markov_stationary
-
-    # deterministic 2-cycle: stationary is exactly (0.5, 0.5)
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "a")] * 50, "prev string, cur string")
-    got = {r["state"]: r["stationary_share"]
-           for r in markov_stationary(pairs, n_iter=4).collect()}
-    assert got == {"a": 0.5, "b": 0.5}
-    # absorbing-ish chain: b self-loops 9/10, a leaks to b -> mass piles on b
-    rows = [("a", "b")] * 10 + [("b", "b")] * 90 + [("b", "a")] * 10 + [("a", "a")] * 10
-    p2 = spark.createDataFrame(rows, "prev string, cur string")
-    got2 = {r["state"]: r["stationary_share"]
-            for r in markov_stationary(p2, n_iter=8).collect()}
-    assert got2["b"] > 0.6 > got2["a"]
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        markov_stationary(pairs, n_iter=0)
 
 
 # --------------------------------------------------- label propagation

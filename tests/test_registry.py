@@ -1,6 +1,7 @@
 """The query registry: every query but the flagship has a DuckDB twin,
 the twins are plain SQL strings, fetching them needs no SparkSession,
-and a twin returns the same pandas dtypes as its Spark query."""
+and every twin reads only the `documents` table, bar the two reference
+contracts that aggregate `events`."""
 
 from __future__ import annotations
 
@@ -40,22 +41,32 @@ def test_oracle_sql_needs_no_spark_session():
     assert out.stdout.strip() == "ok"
 
 
-def test_j4_reconcile_twin_matches_spark_dtypes(spark):
-    """DuckDB sums BIGINT to HUGEINT, which pandas reads as float64; the
-    twin casts its order count back to BIGINT so both engines give int64."""
+# Reference contracts that read the clickstream table: A2's per-type
+# event totals and S2's streaming windowed aggregate (SURVEY §2.9).
+EVENTS_READERS = {"a2_event_totals", "stream_windowed_agg"}
+
+
+def test_every_twin_reads_only_the_document_surface():
+    """Bind each twin against a catalog holding `documents` alone (plus
+    `events` for EVENTS_READERS); a twin that reads any other table
+    fails to bind."""
     import duckdb
 
     import __spark_entry__ as e
 
-    got = e.queries()["j4_reconcile"](spark, SF).toPandas()
-    con = duckdb.connect()
-    for t in ("customer", "orders"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    want = con.execute(e.oracle_sql()["j4_reconcile"]).df()
+    def catalog(tables):
+        con = duckdb.connect()
+        for t in tables:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+        return con
 
-    assert list(got.columns) == list(want.columns)
-    assert dict(got.dtypes) == dict(want.dtypes)
-    key = "segment"
-    got = got.sort_values(key).reset_index(drop=True)
-    want = want.sort_values(key).reset_index(drop=True)
-    assert got.to_dict("records") == want.to_dict("records")
+    docs_only = catalog(["documents"])
+    with_events = catalog(["documents", "events"])
+    off_surface = []
+    for name, sql in e.oracle_sql().items():
+        con = with_events if name in EVENTS_READERS else docs_only
+        try:
+            con.execute("EXPLAIN " + sql)
+        except duckdb.CatalogException as ex:
+            off_surface.append(f"{name}: {str(ex).splitlines()[0]}")
+    assert not off_surface, "\n".join(off_surface)

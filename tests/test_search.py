@@ -157,24 +157,3 @@ def test_boolean_and_search_requires_every_term(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         boolean_and_search(df, [])
-
-
-def test_rrf_fusion_semantics(spark):
-    """A doc present in BOTH lists outranks docs holding rank 1 in only
-    one list (1/61+1/62 > 1/61); missing-from-one docs still score; the
-    k and tie-break contracts hold."""
-    from xdan_dqa_spark.operators.search import rrf_fuse
-
-    a = spark.createDataFrame([(10, 1), (20, 2), (30, 3)], "doc_id long, rank int")
-    b = spark.createDataFrame([(20, 1), (40, 2), (10, 3)], "doc_id long, rank int")
-    rows = rrf_fuse([a, b], top_k=10).collect()
-    order = [r["doc_id"] for r in rows]
-    by_id = {r["doc_id"]: r for r in rows}
-    # 20: 1/62+1/61; 10: 1/61+1/63 -> 20 first, 10 second
-    assert order[:2] == [20, 10]
-    assert by_id[20]["n_lists"] == 2 and by_id[30]["n_lists"] == 1
-    assert abs(by_id[20]["rrf_score"] - (round(1 / 62, 9) + round(1 / 61, 9))) < 1e-12
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        rrf_fuse([])

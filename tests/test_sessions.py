@@ -147,46 +147,3 @@ def test_burst_users_rolling_window_no_seams(spark):
     assert set(out) == {1}
     assert out[1]["max_burst"] == 4          # events at 30..90 share a 60 s frame
     assert out[1]["n_events"] == 5
-
-
-def test_session_entry_exit_flow(spark):
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    t0 = dt.datetime(2025, 3, 1)
-    rows = [
-        # user 1, one session: view .. purchase
-        (1, 1, "view", str(t0)),
-        (1, 2, "click", str(t0 + dt.timedelta(minutes=5))),
-        (1, 3, "purchase", str(t0 + dt.timedelta(minutes=10))),
-        # user 1, second session 2h later: click only
-        (1, 4, "click", str(t0 + dt.timedelta(hours=3))),
-        # user 2: single-event session (entry == exit)
-        (2, 5, "error", str(t0)),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, event_type string, ts string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    import __spark_entry__  # noqa: F401  (ensures package path set in repo ctx)
-    from xdan_dqa_spark.plans.entry_queries import q_session_entry_exit  # noqa: F401
-
-    # exercise the same construction directly
-    from pyspark.sql import Window
-    tus = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = Window.partitionBy("user_id").orderBy("tus", "event_id")
-    e = df.select("user_id", "event_id", "event_type", tus.alias("tus"))
-    prev = F.lag("tus").over(w)
-    flagged = e.withColumn(
-        "_new",
-        F.when(prev.isNull() | ((F.col("tus") - prev) > 1800 * 1_000_000), 1)
-        .otherwise(0))
-    sid = flagged.withColumn(
-        "_sid", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    key = F.concat(F.lpad(F.col("tus").cast("string"), 20, "0"), F.lit("|"),
-                   F.lpad(F.col("event_id").cast("string"), 20, "0"))
-    per = sid.groupBy("user_id", "_sid").agg(
-        F.min_by("event_type", key).alias("entry"),
-        F.max_by("event_type", key).alias("exit"))
-    got = {(r["entry"], r["exit"]) for r in per.collect()}
-    assert got == {("view", "purchase"), ("click", "click"), ("error", "error")}

@@ -212,34 +212,6 @@ def test_stratified_hash_sample_deterministic_and_rated(spark):
     assert {r["doc_id"] for r in again.select("doc_id").collect()} == ids
 
 
-def test_j4_reconcile_exercises_all_three_segments(spark, tmp_path):
-    """The sf fixtures are referentially intact (only 'both' appears), so
-    pin the customer_only / order_only branches on a synthetic mismatch."""
-    import datetime as dt
-
-    from xdan_dqa_spark.plans.entry_queries import q_j4_reconcile
-
-    spark.createDataFrame(
-        [(1, "a", 0, 1.0, "SEG"), (2, "b", 0, 2.0, "SEG")],
-        "c_custkey long, c_name string, c_nationkey long, c_acctbal double, c_mktsegment string",
-    ).write.parquet(str(tmp_path / "customer.parquet"))
-    spark.createDataFrame(
-        [(10, 1, "O", 100.0, dt.datetime(2024, 1, 1), "1-URGENT"),
-         (11, 1, "O", 50.0, dt.datetime(2024, 1, 2), "1-URGENT"),
-         (12, 99, "O", 7.0, dt.datetime(2024, 1, 3), "1-URGENT")],
-        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double, "
-        "o_orderdate timestamp_ntz, o_orderpriority string",
-    ).write.parquet(str(tmp_path / "orders.parquet"))
-
-    got = {r["segment"]: (r["n_keys"], r["n_orders"], r["order_value"])
-           for r in q_j4_reconcile(spark, str(tmp_path)).collect()}
-    assert got == {
-        "both": (1, 2, 150.0),          # customer 1 with two orders
-        "customer_only": (1, 0, 0.0),   # customer 2, no orders
-        "order_only": (1, 1, 7.0),      # order for unknown custkey 99
-    }
-
-
 def test_a15_zscore_outliers_hand_computed(spark, tmp_path):
     import math
 
@@ -259,55 +231,6 @@ def test_a15_zscore_outliers_hand_computed(spark, tmp_path):
     mean = sx / n
     var = (sx2 - sx * sx / n) / (n - 1)
     assert got[0]["z"] == round((1000 - mean) / math.sqrt(var), 9)
-
-
-def _write_events(spark, tmp_path, rows):
-    import datetime as dt
-
-    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc).replace(tzinfo=None)
-    data = [(i, base + dt.timedelta(seconds=sec), uid, et, val, "{}")
-            for i, (sec, uid, et, val) in enumerate(rows)]
-    spark.createDataFrame(
-        data,
-        "event_id long, ts timestamp_ntz, user_id long, event_type string, "
-        "value double, props string",
-    ).write.parquet(str(tmp_path / "events.parquet"))
-
-
-def test_a16_daily_gapfill_zero_fills_missing_day(spark, tmp_path):
-    from xdan_dqa_spark.plans.entry_queries import q_a16_daily_gapfill
-
-    day = 86400
-    # 'click': days 0 and 2 active, day 1 silent → must appear as zeros
-    _write_events(spark, tmp_path, [
-        (10, 1, "click", 1.5), (20, 2, "click", 2.5),
-        (2 * day + 30, 1, "click", 4.0),
-        (5, 9, "buy", 10.0),          # single-day type → one row, no fill
-    ])
-    got = {(r["event_type"], r["day"]): (r["n_events"], r["total_value"])
-           for r in q_a16_daily_gapfill(spark, str(tmp_path)).collect()}
-    d0 = 19723  # 2024-01-01 epoch days
-    assert got[("click", d0)] == (2, 4.0)
-    assert got[("click", d0 + 1)] == (0, 0.0)
-    assert got[("click", d0 + 2)] == (1, 4.0)
-    assert got[("buy", d0)] == (1, 10.0)
-    assert len(got) == 4
-
-
-def test_a17_user_percentile_hand_computed(spark, tmp_path):
-    from xdan_dqa_spark.plans.entry_queries import q_a17_user_percentile
-
-    # user event counts: u1=1, u2=1, u3=2, u4=4  (N=4, N-1=3)
-    counts = {1: 1, 2: 1, 3: 2, 4: 4}
-    rows = [(u * 100 + k, u, "e", 0.0)
-            for u, n in counts.items() for k in range(n)]
-    _write_events(spark, tmp_path, rows)
-    got = {r["user_id"]: (r["n_events"], r["pct_rank"], r["tier"])
-           for r in q_a17_user_percentile(spark, str(tmp_path)).collect()}
-    assert got[1] == (1, 0.0, "light")          # 0 smaller / 3
-    assert got[2] == (1, 0.0, "light")          # tie shares the rank
-    assert got[3] == (2, round(2 / 3, 9), "normal")
-    assert got[4] == (4, 1.0, "heavy")
 
 
 def test_cc_cluster_histogram_identical_pair_plus_singletons(spark, tmp_path):
@@ -353,22 +276,6 @@ def test_gopher_stats_hand_computed(spark, tmp_path):
     assert r["alpha_ratio"] == 1.0
     assert r["distinct_word_ratio"] == round(4 / 5, 9)
     assert got[2]["n_words"] == 0 and got[2]["mean_word_len"] == 0.0
-
-
-def test_a19_event_lift_hand_computed(spark, tmp_path):
-    from xdan_dqa_spark.plans.entry_queries import q_a19_event_lift
-
-    # users: 1 {x,y}, 2 {x,y}, 3 {x}, 4 {y,z} → N=4
-    # n_x=3, n_y=3, n_z=1; pairs: (x,y)=2, (y,z)=1
-    rows = [(0, 1, "x", 0.0), (1, 1, "y", 0.0), (2, 2, "x", 0.0),
-            (3, 2, "y", 0.0), (4, 3, "x", 0.0), (5, 4, "y", 0.0),
-            (6, 4, "z", 0.0), (7, 1, "x", 0.0)]   # dup (1,x) must not count
-    _write_events(spark, tmp_path, rows)
-    got = {(r["type_a"], r["type_b"]): (r["n_ab"], r["n_a"], r["n_b"], r["lift"])
-           for r in q_a19_event_lift(spark, str(tmp_path)).collect()}
-    assert got[("x", "y")] == (2, 3, 3, round((2 / 4) / ((3 / 4) * (3 / 4)), 9))
-    assert got[("y", "z")] == (1, 3, 1, round((1 / 4) / ((3 / 4) * (1 / 4)), 9))
-    assert ("x", "z") not in got
 
 
 def test_a20_log2_hist_bucket_edges(spark, tmp_path):

@@ -8,7 +8,7 @@ the UNION + WINDOW trick: tag both sides, sort each key's rows once by
 (time, side), and carry the latest right ROW forward with
 ``last(..., ignorenulls=True)`` — ONE shuffle on the key, linear work,
 whole-stage codegen, no UDFs. (Same idea Flink's temporal join and
-kdb's aj use; DuckDB's native ASOF JOIN is the oracle twin.)
+kdb's aj use.)
 
 The right side is first deduped to one row per (key, time) with a
 deterministic last-wins rule so ties cannot make the match depend on

@@ -1101,55 +1101,6 @@ def scd2_intervals(df: DataFrame, key_col: str = "canonical_url",
     ).withColumn("is_current", F.col("valid_to").isNull())
 
 
-def psi_drift(df: DataFrame, value_col: str, split_col,
-              bucket_width: float = 10.0) -> DataFrame:
-    """Population Stability Index between two slices of a numeric
-    column — the industry-standard drift score model monitors alarm on
-    (PSI < 0.1 stable, 0.1–0.25 moderate, > 0.25 population shift).
-    ``split_col`` is a boolean Column marking the reference slice;
-    values bucket at fixed ``bucket_width``. Returns one row
-    (n_buckets, n_skipped, psi).
-
-    PSI = Σ_b (p_b − q_b)·ln(p_b/q_b) over buckets observed in BOTH
-    slices; one-sided buckets make the term infinite, so they are
-    EXCLUDED and counted in ``n_skipped`` — no silent epsilon fudge,
-    the report says exactly what it dropped (the standard alternative,
-    epsilon-smoothing, is a documented swap).
-
-    Determinism discipline: bucket = floor(value/width) — one IEEE
-    division+floor, identical cross-engine; p, q are exact integer
-    counts over slice totals; each bucket's term is ONE fixed IEEE
-    sequence rounded to 9 dp and DECIMAL-summed (order-free — the
-    mutual_information pattern). Shape: one (slice, bucket) fold
-    (bounded by the bucket count), a pivot to per-bucket (ref, cur)
-    counts, a 1-row total broadcast, one bounded final fold."""
-    b = F.floor(F.col(value_col).cast("double") / F.lit(float(bucket_width)))
-    cells = df.select(
-        b.alias("bucket"),
-        F.when(split_col, F.lit("ref")).otherwise(F.lit("cur")).alias("side"),
-    ).groupBy("bucket").agg(
-        F.sum(F.when(F.col("side") == "ref", 1).otherwise(0)).alias("n_ref"),
-        F.sum(F.when(F.col("side") == "cur", 1).otherwise(0)).alias("n_cur"),
-    )
-    tot = cells.agg(
-        F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
-    )
-    j = cells.crossJoin(F.broadcast(tot))
-    p = F.col("n_ref").cast("double") / F.col("t_ref").cast("double")
-    q = F.col("n_cur").cast("double") / F.col("t_cur").cast("double")
-    both = (F.col("n_ref") > 0) & (F.col("n_cur") > 0)
-    term = (p - q) * F.log(p / q)
-    return j.select(
-        both.alias("_both"),
-        F.when(both, F.round(term, 9)).otherwise(F.lit(0.0))
-        .cast("decimal(20,9)").alias("_t"),
-    ).agg(
-        F.sum(F.when(F.col("_both"), 1).otherwise(0)).alias("n_buckets"),
-        F.sum(F.when(~F.col("_both"), 1).otherwise(0)).alias("n_skipped"),
-        F.round(F.sum("_t").cast("double"), 6).alias("psi"),
-    )
-
-
 def negative_samples(docs: DataFrame, n_negatives: int = 3,
                      n_buckets: int = 64,
                      id_col: str = "doc_id", group_col: str = "source",

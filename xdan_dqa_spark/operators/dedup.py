@@ -21,6 +21,7 @@ import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ..functions.tokenize import WS_PLUS
 
@@ -910,6 +911,16 @@ def dedup_provenance(df: DataFrame, text_col: str = "text",
     return res.withColumn("n_families_dropped", n_dropped)
 
 
+def _require_integral_id(df: DataFrame, id_col: str) -> None:
+    """The best-member dedups break score ties on the negated id, which
+    needs an integral id; raise before any plan runs rather than fail
+    with CAST_INVALID_INPUT after the dedup work."""
+    dtype = df.schema[id_col].dataType
+    if not isinstance(dtype, IntegralType):
+        raise TypeError(f"id column {id_col!r} must be an integral type "
+                        f"for the lowest-id tie-break, got {dtype.simpleString()}")
+
+
 def exact_dedup_best(df: DataFrame, score_col: str, text_col: str = "text",
                      id_col: str = "doc_id") -> DataFrame:
     """Exact dedup keeping the BEST-SCORING member of each
@@ -926,7 +937,10 @@ def exact_dedup_best(df: DataFrame, score_col: str, text_col: str = "text",
     (one cookie-banner page duplicated 10⁹×), and a window would sort
     that entire cluster in one task, while the struct-max folds it
     map-side. Selection is deterministic: lexicographic (score, −id)
-    max ⇒ highest score, ties to the LOWEST id."""
+    max ⇒ highest score, ties to the LOWEST id. ``id_col`` must be an
+    integral type (the tie-break negates it); any other type raises
+    TypeError at call time."""
+    _require_integral_id(df, id_col)
     keyed = df.withColumn("_k", F.md5(F.col(text_col)))
     reps = keyed.groupBy("_k").agg(
         F.max(F.struct(F.col(score_col).alias("_s"),
@@ -1159,7 +1173,10 @@ def cc_dedup_best(df: DataFrame, score_col: str, text_col: str = "text",
     identical texts always land in the same component (J = 1 edges).
     Value-identity is pinned in tests; the DuckDB twin computes the
     argmax over the UNCOLLAPSED component, so the oracle check itself
-    verifies the equivalence."""
+    verifies the equivalence. ``id_col`` must be an integral type (the
+    tie-break negates it); any other type raises TypeError at call
+    time."""
+    _require_integral_id(df, id_col)
     base = (
         exact_dedup_best(df, score_col, text_col, id_col)
         if collapse_exact else df

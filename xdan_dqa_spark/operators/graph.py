@@ -533,69 +533,6 @@ def local_clustering(links: DataFrame, top_k: int = 20, min_degree: int = 2,
     )
 
 
-def markov_stationary(events_pairs: DataFrame, n_iter: int = 4,
-                      prev_col: str = "prev", cur_col: str = "cur") -> DataFrame:
-    """Stationary distribution of a first-order Markov chain given its
-    observed transition PAIRS — (state, stationary_share): the
-    long-run state mix the transition structure implies, to hold
-    against the EMPIRICAL mix (divergence means the chain is
-    non-stationary over the window — a regime change the transition
-    matrix alone can't show). Power iteration from uniform, ``n_iter``
-    fixed rounds.
-
-    Determinism (pagerank's discipline at 1e6 scale): pi is BIGINT
-    fixed-point; each flow pi_i·c_ij/c_i is round-half-up integral
-    ((2·pi·c_ij + c_i) DIV (2·c_i)) — with pi <= ~1e6 and counts <=
-    ~1e9 the product stays ~1e15 << 2^63; states with no outgoing
-    edges self-loop (keep their mass). One join + one combinable fold
-    per round over the BOUNDED (states²) matrix; the loop builds the
-    plan only."""
-    if n_iter < 1:
-        raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    scale = 10 ** 6
-    c = events_pairs.groupBy(
-        F.col(prev_col).alias("i"), F.col(cur_col).alias("j")
-    ).agg(F.count("*").alias("cij"))
-    rowsum = c.groupBy("i").agg(F.sum("cij").alias("ci"))
-    trans = c.join(rowsum, "i")
-    states = (
-        events_pairs.select(F.col(prev_col).alias("s"))
-        .unionByName(events_pairs.select(F.col(cur_col).alias("s")))
-        .distinct()
-    )
-    n_states = states.agg(F.count("*").alias("_ns"))
-    pi = states.crossJoin(F.broadcast(n_states)).select(
-        "s", F.expr(f"({scale} * 2 + _ns) DIV (_ns * 2)").alias("p")
-    )
-    has_out = rowsum.select(F.col("i").alias("s")).withColumn("_o", F.lit(1))
-    for _ in range(n_iter):
-        flows = (
-            trans.join(pi.withColumnRenamed("s", "i"), "i")
-            .select(
-                F.col("j").alias("s"),
-                F.expr("(2 * p * cij + ci) DIV (2 * ci)").alias("fl"),
-            )
-            .groupBy("s")
-            .agg(F.sum("fl").alias("inflow"))
-        )
-        dangling = (
-            pi.join(has_out, "s", "left")
-            .filter(F.col("_o").isNull())
-            .select("s", F.col("p").alias("inflow"))
-        )
-        pi = (
-            flows.unionByName(dangling)
-            .groupBy("s")
-            .agg(F.sum("inflow").alias("p"))
-        )
-    return pi.select(
-        F.col("s").alias("state"),
-        F.round(F.col("p").cast("double") / F.lit(float(scale)), 6).alias(
-            "stationary_share"
-        ),
-    )
-
-
 def label_propagation(links: DataFrame, n_rounds: int = 3,
                       src_col: str = "src", dst_col: str = "dst") -> DataFrame:
     """(node, label) community labels after ``n_rounds`` of SYNCHRONOUS

@@ -210,37 +210,3 @@ def boolean_and_search(df: DataFrame, terms: list[str],
         .agg(F.count("*").alias("n_terms_matched"))
         .filter(F.col("n_terms_matched") == len(terms))
     )
-
-
-def rrf_fuse(rankings: list[DataFrame], id_col: str = "doc_id",
-             k: int = 60, top_k: int = 20) -> DataFrame:
-    """Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009)
-    of N ranked lists: score(d) = Σ 1/(k + rankᵢ(d)) over the lists
-    containing d — the standard hybrid-search combiner (BM25 ⊕ vector)
-    because it needs NO score calibration between modalities, only
-    ranks. Returns (id, n_lists, rrf_score), top_k rows, ties → lowest
-    id. Each input must carry (id_col, rank) with 1-based deterministic
-    ranks.
-
-    Determinism discipline: each 1/(k+rank) term is one fixed IEEE
-    division rounded to 9 dp, and the per-doc sum rides DECIMAL(28,9)
-    (order-independent) — so fused scores, hence the fused ranking, are
-    bit-identical cross-engine at any parallelism. Scale shape: inputs
-    are already top-k lists (bounded), so the union, the fold, and the
-    final TakeOrdered all run on ≤ N·top_k rows — fusion cost is
-    independent of corpus size by construction."""
-    if not rankings:
-        raise ValueError("rankings must contain at least one ranked list")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    u = rankings[0].select(F.col(id_col), F.col("rank"))
-    for r in rankings[1:]:
-        u = u.unionByName(r.select(F.col(id_col), F.col("rank")))
-    term = F.round(F.lit(1.0) / (F.lit(k) + F.col("rank").cast("double")), 9)
-    fused = u.groupBy(id_col).agg(
-        F.count("*").alias("n_lists"),
-        F.round(
-            F.sum(term.cast("decimal(28,9)")).cast("double"), 9
-        ).alias("rrf_score"),
-    )
-    return fused.orderBy(F.desc("rrf_score"), F.asc(id_col)).limit(top_k)

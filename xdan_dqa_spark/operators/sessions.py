@@ -37,7 +37,7 @@ def sessionize(
     duration. A session breaks when the gap to the previous event of the
     same user exceeds ``gap_sec``. Ordering ties on ``ts`` are broken by
     ``id_col`` so the session assignment is deterministic under any
-    partitioning (and matches the SQL twin exactly)."""
+    partitioning."""
     # NTZ→LTZ cast first: unix_micros needs an instant, and with the
     # session tz pinned UTC the NTZ wall-clock IS the UTC instant — the
     # same convention DuckDB's epoch_us applies to naive timestamps.
@@ -94,7 +94,7 @@ def funnel_conversion(
     no self-join of A-events against B-events (which would be a second
     shuffle plus a range-join blow-up on busy users). Ordering ties on
     ``ts`` break by ``id_col`` so the carry is deterministic under any
-    partitioning and matches the SQL twin. Nullable outputs are
+    partitioning. Nullable outputs are
     sentinel-coalesced (-1 / 0 / 0.0) — the portable null convention used
     by the as-of join. Returns one bounded row per user:
     (user, first_a_us, first_b_after_us, converted, delay_sec)."""

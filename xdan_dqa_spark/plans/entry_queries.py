@@ -595,189 +595,6 @@ FROM documents
 QUALIFY rn <= 3
 """
 
-# Gap-based sessionization over events (operators/sessions.py): one
-# shuffle on user_id, lag → flag → running-sum windows, hash agg.
-# Timestamps compared as epoch-µs longs (session tz pinned UTC) so the
-# arithmetic is integral and engine-portable.
-
-def q_sessionize_events(spark, sf_dir):
-    from ..operators.sessions import sessionize
-
-    return sessionize(_t(spark, sf_dir, "events"), gap_sec=1800)
-
-
-SQL_SESSIONIZE = """
-WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
-m AS (
-  SELECT user_id, event_id, tus,
-         CASE WHEN lag(tus) OVER w IS NULL
-                OR tus - lag(tus) OVER w > 1800000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)
-),
-s AS (
-  SELECT user_id, tus,
-         CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY tus, event_id
-                                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-  FROM m
-)
-SELECT user_id, session_seq, COUNT(*) AS n_events,
-       MIN(tus) AS start_us, MAX(tus) AS end_us,
-       CAST(MAX(tus) - MIN(tus) AS DOUBLE) / 1e6 AS duration_sec
-FROM s GROUP BY user_id, session_seq
-"""
-
-# As-of join (operators/asof.py): attach the most recent purchase at or
-# before each click, per user — union+window carry, ONE shuffle on the
-# key; twin is DuckDB's native ASOF LEFT JOIN. Nullable outputs are
-# coalesced to sentinels on BOTH sides (a nullable BIGINT round-trips
-# as float64-NaN in one engine and object-None in the other, which
-# would break the value hash, not the semantics).
-
-def q_asof_purchase_attach(spark, sf_dir):
-    from ..operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "tus", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "tus"
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id"),
-        F.col("tus"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("value").alias("purchase_value"),
-    )
-    out = asof_join(
-        clicks, purchases,
-        key_col="user_id", time_col="tus",
-        value_cols=["purchase_id", "purchase_value"], tie_col="purchase_id",
-    )
-    return out.select(
-        "event_id", "user_id", "tus",
-        F.coalesce(F.col("purchase_id"), F.lit(-1)).alias("purchase_id"),
-        F.coalesce(F.col("purchase_value"), F.lit(0.0)).alias("purchase_value"),
-    )
-
-
-SQL_ASOF = """
-WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS tus, value, event_type FROM events),
-l AS (SELECT event_id, user_id, tus FROM ev WHERE event_type = 'click'),
-r0 AS (SELECT user_id, tus, event_id AS purchase_id, value AS purchase_value,
-              row_number() OVER (PARTITION BY user_id, tus ORDER BY event_id DESC) AS rn
-       FROM ev WHERE event_type = 'purchase'),
-r AS (SELECT user_id, tus, purchase_id, purchase_value FROM r0 WHERE rn = 1)
-SELECT l.event_id, l.user_id, l.tus,
-       COALESCE(r.purchase_id, -1) AS purchase_id,
-       COALESCE(r.purchase_value, 0.0) AS purchase_value
-FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.tus >= r.tus
-"""
-
-# Bucketed range join (operators/rangejoin.py): clicks falling inside
-# the 6-hour window after each error, per user. The naive inequality
-# join is a nested loop; bucketizing time makes it ONE equi-shuffle
-# (bucket + user key) plus an exact refine filter. Twin: DuckDB plain
-# BETWEEN join (fine at oracle scale).
-
-def q_range_join_error_windows(spark, sf_dir):
-    from ..operators.rangejoin import interval_join
-
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "tus", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), "user_id", "tus"
-    )
-    window_us = 21600 * 1_000_000
-    errors = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"),
-        F.col("user_id"),
-        F.col("tus").alias("start_us"),
-        (F.col("tus") + F.lit(window_us)).alias("end_us"),
-    )
-    out = interval_join(
-        clicks, errors, time_col="tus", start_col="start_us",
-        end_col="end_us", bucket_width=window_us, by_cols=["user_id"],
-    )
-    return out.select(
-        "click_id", "user_id", "err_id",
-        ((F.col("tus") - F.col("start_us")).cast("double") / F.lit(1e6))
-        .alias("delay_sec"),
-    )
-
-
-SQL_RANGE_JOIN = """
-WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS tus, event_type FROM events),
-c AS (SELECT event_id AS click_id, user_id, tus FROM ev WHERE event_type = 'click'),
-e AS (SELECT event_id AS err_id, user_id, tus AS start_us,
-             tus + 21600000000 AS end_us
-      FROM ev WHERE event_type = 'error')
-SELECT c.click_id, c.user_id, e.err_id,
-       CAST(c.tus - e.start_us AS DOUBLE) / 1e6 AS delay_sec
-FROM c JOIN e ON c.user_id = e.user_id
-             AND c.tus BETWEEN e.start_us AND e.end_us
-"""
-
-# Rolling time-range aggregate: per-user trailing-1-hour mean of
-# `value` at each event — a RANGE-frame window (rangeBetween on
-# epoch-µs), the streaming-features primitive for rate/velocity
-# signals. One shuffle on the key; the frame is evaluated with a
-# sliding two-pointer pass inside each partition, never a self-join.
-# DECIMAL(20,6) sum discipline keeps the mean bit-identical in both
-# engines.
-
-def q_rolling_value_avg(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("tus"),
-        "value",
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("tus")
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    vdec = F.col("value").cast("decimal(20,6)")
-    return ev.select(
-        "event_id", "user_id", "tus",
-        (F.sum(vdec).over(w).cast("double")
-         / F.count("*").over(w).cast("double")).alias("avg_value_1h"),
-    )
-
-
-SQL_ROLLING_AVG = """
-WITH ev AS (SELECT event_id, user_id, epoch_us(ts) AS tus, value FROM events)
-SELECT event_id, user_id, tus,
-       CAST(SUM(CAST(value AS DECIMAL(20,6))) OVER w AS DOUBLE)
-       / CAST(COUNT(*) OVER w AS DOUBLE) AS avg_value_1h
-FROM ev
-WINDOW w AS (PARTITION BY user_id ORDER BY tus
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-"""
-
-# A7 per-user event-type pivot (Spark relational pivot with an EXPLICIT
-# value list — an inferred list would add a driver-side distinct scan
-# and make the output schema data-dependent)
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def q_a7_event_pivot(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .pivot("event_type", _EVENT_TYPES)
-        .count()
-        .na.fill(0, _EVENT_TYPES)
-    )
-
-
-SQL_A7_PIVOT = "SELECT user_id, " + ", ".join(
-    f"CAST(SUM(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END) AS BIGINT) AS {t}"
-    for t in _EVENT_TYPES
-) + " FROM events GROUP BY user_id"
-
 # S3 deterministic sampling (reference src/data_loader.py:97-100, seed=42)
 
 def q_s3_sample(spark, sf_dir):
@@ -1085,50 +902,6 @@ def _scrub_count_sql() -> str:
         t = f"regexp_replace({t}, '{p}', '{repl}', 'g')"
     return "CAST(" + " + ".join(exprs) + " AS INT)"
 
-
-# Embedding brute-force top-k (ANN baseline)
-
-def q_knn_bruteforce(spark, sf_dir):
-    from ..operators.similarity import brute_force_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-    query = [float(x) for x in row[0][0]] if row else [0.0]
-    return brute_force_topk(emb, query, k=10).select(
-        "vec_id", F.round(F.col("cosine"), 6).alias("cosine_r")
-    )
-
-
-SQL_KNN = """
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-scored AS (
-  SELECT e.vec_id,
-         list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(q.qv AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))) AS cosine
-  FROM embeddings e, q
-)
-SELECT vec_id, round(cosine, 6) AS cosine_r FROM scored
-ORDER BY cosine DESC, vec_id LIMIT 10
-"""
-
-# Embedding near-dup pairs (label-blocked)
-
-def q_embedding_neardup(spark, sf_dir):
-    from ..operators.similarity import pairwise_neardup
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return pairwise_neardup(emb, threshold=0.35).select("a", "b")
-
-
-SQL_EMB_NEARDUP = """
-SELECT l.vec_id AS a, r.vec_id AS b
-FROM embeddings l JOIN embeddings r ON l.label = r.label AND l.vec_id < r.vec_id
-WHERE list_dot_product(CAST(l.embedding AS DOUBLE[]), CAST(r.embedding AS DOUBLE[]))
-      / (sqrt(list_dot_product(CAST(l.embedding AS DOUBLE[]), CAST(l.embedding AS DOUBLE[])))
-         * sqrt(list_dot_product(CAST(r.embedding AS DOUBLE[]), CAST(r.embedding AS DOUBLE[])))) >= 0.35
-"""
-
 # A2-style totals over events (sum of processing time analogue)
 
 def q_a2_event_totals(spark, sf_dir):
@@ -1394,90 +1167,6 @@ SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT b FROM dups)
 """
 
 
-# Hyperplane-LSH ANN top-k: the 3 frozen seed planes (hyperplane_planes
-# dim=64, bits=3, seed=42) inlined as SQL literals; bucket membership +
-# 1-bit multiprobe + exact rescore, all in DuckDB double arithmetic.
-
-def _sql_ann_topk(dim: int = 64, bits: int = 3, k: int = 10) -> str:
-    from ..operators.similarity import hyperplane_planes
-
-    planes = hyperplane_planes(dim, bits)
-    plane_lits = ",\n       ".join(
-        "[" + ", ".join(repr(float(x)) for x in p) + "]::DOUBLE[] AS p%d" % i
-        for i, p in enumerate(planes)
-    )
-    bucket = " + ".join(
-        f"CASE WHEN list_dot_product(v, p.p{i}) > 0 THEN {1 << i} ELSE 0 END"
-        for i in range(bits)
-    )
-    qbucket = " + ".join(
-        f"CASE WHEN list_dot_product(q.qv, p.p{i}) > 0 THEN {1 << i} ELSE 0 END"
-        for i in range(bits)
-    )
-    probes = ", ".join(["qb.qbucket"] + [f"xor(qb.qbucket, {1 << i})" for i in range(bits)])
-    return f"""
-WITH p AS (SELECT {plane_lits}),
-q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-b AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-bk AS (SELECT b.vec_id, b.v, {bucket} AS bucket FROM b, p),
-qb AS (SELECT {qbucket} AS qbucket FROM q, p)
-SELECT bk.vec_id
-FROM bk, qb, q
-WHERE bk.bucket IN ({probes})
-ORDER BY list_dot_product(bk.v, q.qv)
-         / (sqrt(list_dot_product(bk.v, bk.v)) * sqrt(list_dot_product(q.qv, q.qv))) DESC,
-         bk.vec_id
-LIMIT {k}
-"""
-
-
-# IVF-Flat top-k: md5-ordered seed centroids, argmax-cosine assignment
-# (first-max tie-break = ROW_NUMBER over cos DESC, list ASC), probe the
-# n_probe closest lists, exact rescore.
-
-def _sql_ivf_topk(n_lists: int = 8, n_probe: int = 4, k: int = 10) -> str:
-    return f"""
-WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-cents AS (
-  SELECT (ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)))) - 1 AS li,
-         CAST(embedding AS DOUBLE[]) AS cv
-  FROM embeddings ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {n_lists}
-),
-scored AS (
-  SELECT e.vec_id, c.li,
-         list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cv)
-         / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(c.cv, c.cv))) AS cos,
-         ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-           list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cv)
-           / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-              * sqrt(list_dot_product(c.cv, c.cv))) DESC, c.li) AS rn
-  FROM embeddings e CROSS JOIN cents c
-),
-assign AS (SELECT vec_id, li FROM scored WHERE rn = 1),
-probes AS (
-  SELECT li FROM (
-    SELECT c.li,
-           ROW_NUMBER() OVER (ORDER BY
-             list_dot_product(c.cv, q.qv)
-             / (sqrt(list_dot_product(c.cv, c.cv)) * sqrt(list_dot_product(q.qv, q.qv))) DESC,
-             c.li) AS rn
-    FROM cents c, q
-  ) WHERE rn <= {n_probe}
-)
-SELECT e.vec_id
-FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id, q
-WHERE a.li IN (SELECT li FROM probes)
-ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-         / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(q.qv, q.qv))) DESC,
-         e.vec_id
-LIMIT {k}
-"""
-
-
 # Multimodal features: byte entropy over the UTF-8 payload, DuckDB twin
 # via hex-string byte extraction (2 hex chars per byte), entropy rounded
 # to 6dp on both sides to absorb summation-order ulps.
@@ -1557,59 +1246,6 @@ def q_dedup_simhash(spark, sf_dir):
     from ..operators.dedup import simhash_dedup
 
     return simhash_dedup(_t(spark, sf_dir, "documents"), max_hamming=3).select("doc_id")
-
-
-def q_ann_topk(spark, sf_dir):
-    from ..operators.similarity import ann_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-    query = [float(x) for x in row[0][0]] if row else [0.0]
-    return ann_topk(emb, query, k=10, bits=3).select("vec_id")
-
-
-def q_ivf_topk(spark, sf_dir):
-    """IVF-Flat approximate top-k over the embeddings table (coarse
-    quantizer + n_probe inverted lists; exact when n_probe = n_lists)."""
-    from ..operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-    query = [float(x) for x in row[0][0]] if row else [0.0]
-    return ivf_topk(emb, query, k=10, n_lists=8, n_probe=4).select("vec_id")
-
-
-def q_ivf_topk_indexed(spark, sf_dir):
-    """Persisted-index IVF probe: write the embeddings table as parquet
-    PARTITIONED BY the inverted-list id, then answer the query by reading
-    only the n_probe probed directories — Catalyst partition pruning on
-    the _list isin() filter (proven via inputFiles() in
-    tests/test_similarity.py). Same spec (seed centroids, n_lists=8,
-    n_probe=4) and same result set as the in-line ivf_topk, so it shares
-    that query's DuckDB oracle."""
-    from ..operators.similarity import (
-        ivf_centroids,
-        ivf_topk_from_index,
-        write_ivf_index,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-    query = [float(x) for x in row[0][0]] if row else [0.0]
-    cents = ivf_centroids(emb, 8)
-    path = "/tmp/xdan_ivf_index_" + sf_dir.strip("/").replace("/", "_")
-    # Idempotent build: the index is a pure function of (input, spec) —
-    # seed centroids are deterministic — so an existing index whose
-    # frozen spec matches is reused instead of rewritten (a correctness
-    # query must not carry a redundant write side effect). The staging
-    # protocol unlinks the marker before any rewrite and republishes it
-    # atomically after (see _stage_with_spec).
-    spec = {"n_lists": 8, "centroids": cents}
-    marker = os.path.join(path, "_SPEC.json")
-    _stage_with_spec(marker, spec,
-                     lambda: write_ivf_index(emb, path, centroids=cents))
-    return ivf_topk_from_index(spark, path, cents, query, k=10,
-                               n_probe=4).select("vec_id")
 
 
 def q_multimodal_features(spark, sf_dir):
@@ -1996,10 +1632,9 @@ def q_stream_windowed_agg(spark, sf_dir):
     # The file stream source needs a DIRECTORY; stage the bounded input as
     # 4 files so maxFilesPerTrigger=1 yields 4 real micro-batches. The
     # staging is input plumbing, not the operator under test, so it is
-    # idempotent like q_ivf_topk_indexed's index: a deterministic
-    # sf-keyed dir plus a spec marker (atomic publish, guarded read),
-    # re-staged only when the input changes (mkdtemp-per-run accumulated
-    # unbounded /tmp copies).
+    # idempotent (_stage_with_spec): a deterministic sf-keyed dir plus a
+    # spec marker (atomic publish, guarded read), re-staged only when the
+    # input changes (mkdtemp-per-run accumulated unbounded /tmp copies).
     stage = "/tmp/xdan_stream_events_" + sf_dir.strip("/").replace("/", "_")
     spec = {"sf_dir": sf_dir, "rows": batch.count(), "n_files": 4}
     marker = os.path.join(stage, "_SPEC.json")
@@ -2156,35 +1791,6 @@ FROM (SELECT lang, n_chars,
 GROUP BY lang, tile
 """
 
-# U2 set-operation audience split: users who clicked but never purchased
-# (EXCEPT) vs users who did both (INTERSECT) — the retarget/holdout split.
-# Spark plans both as hash-aggregate + shuffle on user_id (distinct
-# semantics, same as SQL EXCEPT/INTERSECT); the two branches share the
-# deduped click set.
-
-def q_u2_set_ops(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("user_id").distinct()
-    buys = ev.filter(F.col("event_type") == "purchase").select("user_id").distinct()
-    click_only = clicks.subtract(buys).select(
-        F.lit("click_only").alias("segment"), "user_id"
-    )
-    both = clicks.intersect(buys).select(
-        F.lit("click_and_purchase").alias("segment"), "user_id"
-    )
-    return click_only.unionByName(both)
-
-
-SQL_U2_SET_OPS = """
-WITH c AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'click'),
-p AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase')
-SELECT 'click_only' AS segment, user_id
-FROM (SELECT user_id FROM c EXCEPT SELECT user_id FROM p)
-UNION ALL
-SELECT 'click_and_purchase' AS segment, user_id
-FROM (SELECT user_id FROM c INTERSECT SELECT user_id FROM p)
-"""
-
 # Edit-distance near-dup refine (operators/dedup.py levenshtein_pairs):
 # LSH candidates verified by levenshtein on a fixed 200-char prefix —
 # the character-level complement to set-based Jaccard for boilerplate
@@ -2212,41 +1818,6 @@ SELECT c.a, c.b, CAST(levenshtein(pa.p, pb.p) AS BIGINT) AS lev
 FROM cand c JOIN pre pa ON pa.doc_id = c.a JOIN pre pb ON pb.doc_id = c.b
 WHERE CAST(levenshtein(pa.p, pb.p) AS DOUBLE)
       <= 0.4 * CAST(greatest(length(pa.p), length(pb.p)) AS DOUBLE)
-"""
-
-# Two-step funnel (operators/sessions.py funnel_conversion): first click →
-# first purchase at-or-after it, per user. One shuffle; the running-min
-# window carries "earliest click so far" so no click×purchase self-join.
-
-def q_funnel_conversion(spark, sf_dir):
-    from ..operators.sessions import funnel_conversion
-
-    return funnel_conversion(_t(spark, sf_dir, "events"))
-
-
-SQL_FUNNEL = """
-WITH ev AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events),
-w AS (
-  SELECT user_id, event_type, tus,
-         MIN(CASE WHEN event_type = 'click' THEN tus END) OVER
-           (PARTITION BY user_id ORDER BY tus, event_id
-            ROWS UNBOUNDED PRECEDING) AS a_seen
-  FROM ev
-),
-agg AS (
-  SELECT user_id,
-         MIN(CASE WHEN event_type = 'click' THEN tus END) AS fa,
-         MIN(CASE WHEN event_type = 'purchase' AND a_seen IS NOT NULL
-                       AND tus >= a_seen THEN tus END) AS fb
-  FROM w GROUP BY user_id
-)
-SELECT user_id,
-       COALESCE(fa, -1) AS first_a_us,
-       COALESCE(fb, -1) AS first_b_after_us,
-       CAST(fb IS NOT NULL AS INTEGER) AS converted,
-       CASE WHEN fb IS NOT NULL THEN CAST(fb - fa AS DOUBLE) / 1e6
-            ELSE 0.0 END AS delay_sec
-FROM agg
 """
 
 # A11 per-language feature correlation (operators/metrics.py
@@ -2289,131 +1860,8 @@ SELECT lang, CAST(n AS BIGINT) AS n,
 FROM m
 """
 
-# P11 semi-structured props ingestion: per-type stats of a JSON-extracted
-# field — the open-schema sidecar pattern (absorb what you need, leave
-# the blob). get_json_object is a JVM-side path evaluator (no UDF);
-# exact DECIMAL(38,0) sum matches DuckDB's hugeint SUM.
-
-def q_p11_json_props(spark, sf_dir):
-    k = F.get_json_object(F.col("props"), "$.k").cast("bigint")
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.count(k).alias("n_with_k"),
-            F.coalesce(F.min(k), F.lit(-1)).alias("min_k"),
-            F.coalesce(F.max(k), F.lit(-1)).alias("max_k"),
-            F.coalesce(F.sum(k.cast("decimal(38,0)")).cast("long"), F.lit(0)).alias("sum_k"),
-        )
-    )
-
-
-SQL_P11_JSON = """
-SELECT event_type, COUNT(*) AS n_events,
-       COUNT(CAST(props->>'$.k' AS BIGINT)) AS n_with_k,
-       COALESCE(MIN(CAST(props->>'$.k' AS BIGINT)), -1) AS min_k,
-       COALESCE(MAX(CAST(props->>'$.k' AS BIGINT)), -1) AS max_k,
-       COALESCE(CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT), 0) AS sum_k
-FROM events GROUP BY event_type
-"""
-
 
 # ------------------------------------------------------------- round-5 batch 3
-# J4 full-outer reconcile audit: customer ↔ orders discrepancy report —
-# the data-quality join (which keys exist on only one side, and how much
-# value rides on them). Orders are pre-aggregated to the custkey grain
-# BEFORE the full-outer join, so the join's shuffle carries one bounded
-# row per key per side (skew-resistant) instead of every order row; the
-# classification then folds to three bounded audit rows.
-
-def q_j4_reconcile(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    ord_agg = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.count("*").alias("_n_orders"),
-             _dec_sum(F.col("o_totalprice"), "_value"))
-    )
-    joined = cust.join(ord_agg, cust.c_custkey == ord_agg.o_custkey, "full_outer")
-    segment = (
-        F.when(F.col("c_custkey").isNull(), "order_only")
-        .when(F.col("o_custkey").isNull(), "customer_only")
-        .otherwise("both")
-    )
-    return joined.groupBy(segment.alias("segment")).agg(
-        F.count("*").alias("n_keys"),
-        F.coalesce(F.sum("_n_orders"), F.lit(0)).alias("n_orders"),
-        F.coalesce(
-            F.sum(F.col("_value").cast("decimal(38,6)")).cast("double"), F.lit(0.0)
-        ).alias("order_value"),
-    )
-
-
-SQL_J4_RECONCILE = """
-WITH oa AS (
-  SELECT o_custkey, COUNT(*) AS n_orders,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(20,6))) AS DOUBLE) AS value
-  FROM orders GROUP BY o_custkey
-)
-SELECT CASE WHEN c.c_custkey IS NULL THEN 'order_only'
-            WHEN oa.o_custkey IS NULL THEN 'customer_only'
-            ELSE 'both' END AS segment,
-       COUNT(*) AS n_keys,
-       CAST(COALESCE(SUM(n_orders), 0) AS BIGINT) AS n_orders,
-       COALESCE(CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE), 0.0) AS order_value
-FROM customer c FULL OUTER JOIN oa ON c.c_custkey = oa.o_custkey
-GROUP BY 1
-"""
-
-# A12 multi-distinct audit: per event type, exact distinct users and
-# distinct active days in ONE statement. Spark plans multiple COUNT
-# DISTINCTs via the Expand operator (one input row fans to one row per
-# distinct spec, each partially aggregated map-side) — still a single
-# shuffle, no per-group value buffering, vs approx_count_distinct which
-# could never be oracle-paired bit-for-bit. Day index is integral
-# epoch-µs arithmetic (no calendar semantics to disagree cross-engine).
-
-def q_a12_distinct_exact(spark, sf_dir):
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    return (
-        _t(spark, sf_dir, "events")
-        .select("event_type", "user_id", day.alias("_day"))
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.countDistinct("_day").alias("n_days"),
-        )
-    )
-
-
-SQL_A12_DISTINCT = """
-SELECT event_type, COUNT(*) AS n_events,
-       COUNT(DISTINCT user_id) AS n_users,
-       COUNT(DISTINCT epoch_us(ts) // 86400000000) AS n_days
-FROM events GROUP BY event_type
-"""
-
-# Weekly retention cohorts (operators/sessions.py cohort_retention):
-# first-activity week × return-week offset, distinct users per cell.
-
-def q_cohort_retention(spark, sf_dir):
-    from ..operators.sessions import cohort_retention
-
-    return cohort_retention(_t(spark, sf_dir, "events"))
-
-
-SQL_COHORT_RETENTION = """
-WITH uw AS (
-  SELECT DISTINCT user_id AS u, epoch_us(ts) // 604800000000 AS week
-  FROM events
-),
-c AS (SELECT u, week, MIN(week) OVER (PARTITION BY u) AS cohort_week FROM uw)
-SELECT cohort_week, week - cohort_week AS week_offset, COUNT(*) AS n_users
-FROM c GROUP BY cohort_week, week - cohort_week
-"""
-
 # Boilerplate shingle prevalence (operators/textstats.py
 # shingle_prevalence): fraction of each doc's distinct 3-gram shingles
 # appearing in ≥2 documents — the inter-document repetition signal.
@@ -2687,103 +2135,6 @@ def q_cc_cluster_histogram(spark, sf_dir):
     )
 
 
-# A16 gap-filled daily series: per event type, one row per calendar day
-# between that type's first and last activity, zero-filled — the report
-# shape monitoring dashboards need (a missing day must show AS a zero,
-# not vanish). Days are integral epoch-µs arithmetic. The sequence()
-# explode runs over the BOUNDED (type × span) table — span is calendar
-# time, never row count — and the left join back is keyed on the same
-# bounded grain.
-
-def q_a16_daily_gapfill(spark, sf_dir):
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    agg = (
-        _t(spark, sf_dir, "events")
-        .select("event_type", day.alias("day"), "value")
-        .groupBy("event_type", "day")
-        .agg(F.count("*").alias("n_events"), _dec_sum(F.col("value"), "_v"))
-    )
-    span = agg.groupBy("event_type").agg(F.min("day").alias("_d0"),
-                                         F.max("day").alias("_d1"))
-    grid = span.select(
-        "event_type", F.explode(F.sequence("_d0", "_d1")).alias("day")
-    )
-    return grid.join(agg, ["event_type", "day"], "left").select(
-        "event_type", "day",
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        F.coalesce("_v", F.lit(0.0)).alias("total_value"),
-    )
-
-
-SQL_A16_GAPFILL = """
-WITH e AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day, value FROM events),
-a AS (
-  SELECT event_type, day, COUNT(*) AS n,
-         CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS v
-  FROM e GROUP BY event_type, day
-),
-s AS (SELECT event_type, MIN(day) AS d0, MAX(day) AS d1 FROM a GROUP BY event_type),
-g AS (SELECT event_type, unnest(generate_series(d0, d1)) AS day FROM s)
-SELECT g.event_type, g.day, COALESCE(n, 0) AS n_events,
-       COALESCE(v, 0.0) AS total_value
-FROM g LEFT JOIN a ON g.event_type = a.event_type AND g.day = a.day
-"""
-
-# A17 per-user activity percentile (bot/power-user triage). A naive
-# percent_rank() is an UNPARTITIONED window over one row per user — a
-# single-task sort at 10⁹ users. Same values, scale-safe shape: the
-# cumulative "how many users are less active" count runs over the BOUNDED
-# activity-count histogram (distinct n_events values ≤ max activity,
-# never user-scaled), broadcast back onto the user table — the user table
-# itself never total-orders. percent_rank ≡ (#smaller)/(N-1) with ties
-# sharing the value, exactly the window function's definition.
-
-def q_a17_user_percentile(spark, sf_dir):
-    cnts = (
-        _t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_events"))
-    )
-    hist = cnts.groupBy("n_events").agg(F.count("*").alias("_c"))
-    w = (
-        Window.partitionBy().orderBy("n_events")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = hist.select(
-        "n_events",
-        F.coalesce(F.sum("_c").over(w), F.lit(0)).alias("_smaller"),
-    )
-    total = cnts.agg(F.count("*").alias("_N"))
-    out = (
-        cnts.join(F.broadcast(cum), "n_events")
-        .crossJoin(F.broadcast(total))
-    )
-    pr = F.when(
-        F.col("_N") > 1,
-        F.col("_smaller").cast("double") / (F.col("_N") - 1).cast("double"),
-    ).otherwise(F.lit(0.0))
-    tier = (
-        F.when(pr >= 0.9, "heavy").when(pr >= 0.5, "normal").otherwise("light")
-    )
-    return out.select(
-        "user_id", "n_events",
-        F.round(pr, 9).alias("pct_rank"), tier.alias("tier"),
-    )
-
-
-SQL_A17_PERCENTILE = """
-WITH c AS (SELECT user_id, COUNT(*) AS n_events FROM events GROUP BY user_id),
-p AS (SELECT user_id, n_events,
-             percent_rank() OVER (ORDER BY n_events) AS pr
-      FROM c)
-SELECT user_id, n_events, round(pr, 9) AS pct_rank,
-       CASE WHEN pr >= 0.9 THEN 'heavy'
-            WHEN pr >= 0.5 THEN 'normal'
-            ELSE 'light' END AS tier
-FROM p
-"""
-
-
 
 
 # Gopher/C4 heuristic signals over REAL text, directly oracle-paired —
@@ -2878,66 +2229,6 @@ SELECT lang,
        round(quantile_cont(CAST(n_chars AS DOUBLE), 0.5), 6) AS median_chars,
        round(mad(CAST(n_chars AS DOUBLE)), 6) AS mad_chars
 FROM documents GROUP BY lang
-"""
-
-# A19 event co-occurrence lift (market-basket over user sessions): for
-# each event-type pair, how much more often do the two co-occur in one
-# user's history than independence predicts. The self-join is keyed on
-# user_id with each side pre-deduped to the (user, type) grain — per-user
-# type sets are bounded by the type ENUM, so join output is linear in
-# users × C(T,2), never event-count-squared. Totals and per-type counts
-# ride broadcast joins (≤#types rows).
-
-def q_a19_event_lift(spark, sf_dir):
-    ut = (
-        _t(spark, sf_dir, "events")
-        .select("user_id", "event_type")
-        .distinct()
-    )
-    n_users = ut.select("user_id").distinct().agg(
-        F.count("*").alias("_n")
-    )
-    per_type = ut.groupBy("event_type").agg(F.count("*").alias("n_t"))
-    a = ut.select("user_id", F.col("event_type").alias("type_a"))
-    b = ut.select("user_id", F.col("event_type").alias("type_b"))
-    pairs = (
-        a.join(b, "user_id")
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count("*").alias("n_ab"))
-    )
-    na = per_type.select(F.col("event_type").alias("type_a"),
-                         F.col("n_t").alias("n_a"))
-    nb = per_type.select(F.col("event_type").alias("type_b"),
-                         F.col("n_t").alias("n_b"))
-    nd = F.col("_n").cast("double")
-    lift = (F.col("n_ab").cast("double") / nd) / (
-        (F.col("n_a").cast("double") / nd) * (F.col("n_b").cast("double") / nd)
-    )
-    return (
-        pairs.join(F.broadcast(na), "type_a")
-        .join(F.broadcast(nb), "type_b")
-        .crossJoin(F.broadcast(n_users))
-        .select("type_a", "type_b", "n_ab", "n_a", "n_b",
-                F.round(lift, 9).alias("lift"))
-    )
-
-
-SQL_A19_LIFT = """
-WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
-n AS (SELECT CAST(COUNT(DISTINCT user_id) AS DOUBLE) AS nd FROM ut),
-t AS (SELECT event_type, COUNT(*) AS n_t FROM ut GROUP BY event_type),
-p AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b, COUNT(*) AS n_ab
-  FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT type_a, type_b, n_ab, ta.n_t AS n_a, tb.n_t AS n_b,
-       round((CAST(n_ab AS DOUBLE) / nd)
-             / ((CAST(ta.n_t AS DOUBLE) / nd) * (CAST(tb.n_t AS DOUBLE) / nd)),
-             9) AS lift
-FROM p JOIN t ta ON p.type_a = ta.event_type
-       JOIN t tb ON p.type_b = tb.event_type, n
 """
 
 # A20 doc-length magnitude histogram: per (lang, power-of-two bucket)
@@ -3161,8 +2452,7 @@ WHERE (CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
 # ------------------------------------------------------------- round-5 batch 8
 # Within-doc repetition, join-based stopword coverage (the one Gopher
 # signal the regex form could not oracle-pair), token entropy,
-# quantile-band length filtering, canonical-form dedup, and rolling-
-# window burst detection over events.
+# quantile-band length filtering, and canonical-form dedup.
 
 
 def q_ngram_repetition(spark, sf_dir):
@@ -3262,27 +2552,6 @@ SELECT k.doc_id, k.lang, k.source, k.n_chars FROM k JOIN r USING (_k, doc_id)
 """
 
 
-def q_burst_users(spark, sf_dir):
-    from ..operators.sessions import burst_users
-
-    return burst_users(_t(spark, sf_dir, "events"),
-                       window_sec=86400, min_events=8)
-
-
-SQL_BURST_USERS = """
-WITH e AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
-w AS (
-  SELECT user_id,
-         COUNT(*) OVER (PARTITION BY user_id ORDER BY tus
-                        RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)
-           AS c
-  FROM e
-)
-SELECT user_id, COUNT(*) AS n_events, MAX(c) AS max_burst
-FROM w GROUP BY user_id HAVING MAX(c) >= 8
-"""
-
-
 def q_a21_length_band(spark, sf_dir):
     # Per-language [p05, p95] doc-length keep band (outlier trim before
     # mixing): the ≤#langs quantile table comes from the bounded-state
@@ -3323,8 +2592,7 @@ WHERE CAST(d.n_chars AS DOUBLE) >= lo AND CAST(d.n_chars AS DOUBLE) <= hi
 # Pipeline-health reports composed from the already-verified signal
 # machinery: language-confusion matrix (declared vs heuristic label),
 # per-source PII prevalence by rule, score-calibration deciles over the
-# full score_core tree, JSON-schema key census, and embedding-norm
-# profiles per label.
+# full score_core tree.
 
 
 def q_lang_confusion(spark, sf_dir):
@@ -3433,70 +2701,6 @@ def _calibration_curve_sql() -> str:
     )
 
 
-def q_props_key_census(spark, sf_dir):
-    # JSON-schema drift census: which keys appear in the open `props`
-    # sidecar, per event type. json_object_keys is a JVM-side evaluator
-    # (no UDF); invalid/NULL JSON yields NULL and explode drops it.
-    ex = (
-        _t(spark, sf_dir, "events")
-        .select(
-            "event_type",
-            F.explode(F.expr("json_object_keys(props)")).alias("key"),
-        )
-    )
-    return ex.groupBy("event_type", "key").agg(F.count("*").alias("n_events"))
-
-
-SQL_PROPS_KEY_CENSUS = """
-WITH ex AS (
-  SELECT event_type, unnest(json_keys(props)) AS key FROM events
-)
-SELECT event_type, key, COUNT(*) AS n_events FROM ex GROUP BY 1, 2
-"""
-
-
-def q_emb_norm_stats(spark, sf_dir):
-    # Per-label embedding L2-norm profile (broken-encoder detection: a
-    # batch of zero/exploded vectors shifts its label's norm band).
-    # Map-only fold over the array (strict left-to-right, the same
-    # sequential order DuckDB's list_dot_product sums in), rounded once
-    # to 6 dp; per-label mean is a DECIMAL sum of the rounded norms.
-    dot = F.expr(
-        "aggregate(embedding, CAST(0.0 AS DOUBLE), "
-        "(a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-    )
-    norm = F.round(F.sqrt(dot), 6)
-    return (
-        _t(spark, sf_dir, "embeddings")
-        .select("label", norm.alias("_norm"))
-        .groupBy("label")
-        .agg(
-            F.count("*").alias("n_vecs"),
-            F.min("_norm").alias("min_norm"),
-            F.max("_norm").alias("max_norm"),
-            F.round(
-                F.sum(F.col("_norm").cast("decimal(20,6)")).cast("double")
-                / F.count("*").cast("double"),
-                6,
-            ).alias("mean_norm"),
-        )
-    )
-
-
-SQL_EMB_NORM_STATS = """
-WITH n AS (
-  SELECT label,
-         round(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                     CAST(embedding AS DOUBLE[]))), 6) AS norm
-  FROM embeddings
-)
-SELECT label, COUNT(*) AS n_vecs, MIN(norm) AS min_norm, MAX(norm) AS max_norm,
-       round(CAST(SUM(CAST(norm AS DECIMAL(20,6))) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS mean_norm
-FROM n GROUP BY label
-"""
-
-
 # ------------------------------------------------------------ round-5 batch 10
 # The cross-source near-dup contamination matrix composed from the
 # verified LSH pair machinery.
@@ -3541,76 +2745,7 @@ GROUP BY 1, 2
 
 
 # ------------------------------------------------------------ round-5 batch 11
-# Three event/document sequence reports (min_by/max_by endpoints,
-# lag-based transition matrix, integer-exact per-language deciles).
-
-
-def q_a24_first_last_event(spark, sf_dir):
-    # Per-user session endpoints via min_by/max_by — ONE map-side-
-    # combinable aggregate instead of the row_number-over-window +
-    # filter double shuffle. Determinism: the selection key is the
-    # zero-padded '%020d|%020d' string over (epoch-µs, event_id);
-    # event_id is unique, so lexicographic == numeric order and ties
-    # cannot occur. DuckDB's arg_min/arg_max use the identical key
-    # (its arg_min rejects struct keys, hence the string encoding).
-    ev = _t(spark, sf_dir, "events")
-    key = F.format_string(
-        "%020d|%020d", F.unix_micros(F.col("ts").cast("timestamp")),
-        F.col("event_id"),
-    )
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return ev.groupBy("user_id").agg(
-        F.min_by("event_type", key).alias("first_type"),
-        F.max_by("event_type", key).alias("last_type"),
-        F.min(us).alias("first_ts_us"),
-        F.max(us).alias("last_ts_us"),
-        F.count("*").alias("n_events"),
-    )
-
-
-SQL_A24_FIRST_LAST = """
-SELECT user_id,
-       arg_min(event_type, printf('%020d|%020d', epoch_us(ts), event_id))
-         AS first_type,
-       arg_max(event_type, printf('%020d|%020d', epoch_us(ts), event_id))
-         AS last_type,
-       MIN(epoch_us(ts)) AS first_ts_us,
-       MAX(epoch_us(ts)) AS last_ts_us,
-       COUNT(*) AS n_events
-FROM events GROUP BY user_id
-"""
-
-
-def q_a25_event_transitions(spark, sf_dir):
-    # First-order Markov transition matrix over per-user event streams:
-    # lag(event_type) over (user_id, ts, event_id) then a count per
-    # (prev, cur) pair. One shuffle partitions by user_id for the
-    # window (users are independent, so the window state is bounded by
-    # the largest single user, not the table), and the 5×5 matrix
-    # aggregate is map-side combined. The ordering key includes
-    # event_id so same-µs ties are deterministic.
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.select(
-            "user_id", "event_type",
-            F.lag("event_type").over(w).alias("prev_type"),
-        )
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "event_type")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-SQL_A25_TRANSITIONS = """
-WITH seq AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev_type
-  FROM events)
-SELECT prev_type, event_type, COUNT(*) AS n
-FROM seq WHERE prev_type IS NOT NULL GROUP BY 1, 2
-"""
+# Integer-exact per-language deciles and span-level dedup reports.
 
 
 def q_a26_lang_deciles(spark, sf_dir):
@@ -3694,9 +2829,8 @@ def q_a28_vocab_census(spark, sf_dir):
     # the per-DOC type/token signal; this is the corpus-level one that
     # says whether a source's vocabulary is still growing (healthy prose)
     # or saturated (template spam). EXACT distinct via Spark's Expand
-    # planning (one shuffle, map-side partials — same machinery as
-    # a12_distinct_exact), never approx; the tokens-per-type ratio is one
-    # exact integer division rounded at 6 dp.
+    # planning (one shuffle, map-side partials), never approx; the
+    # tokens-per-type ratio is one exact integer division rounded at 6 dp.
     from ..functions.tokenize import WS_PLUS
 
     d = _t(spark, sf_dir, "documents")
@@ -3818,9 +2952,9 @@ def q_dedup_minhash_incr(spark, sf_dir):
     corpus = docs.filter(F.col("doc_id") % 4 != 0)
     batch = docs.filter(F.col("doc_id") % 4 == 0)
     path = "/tmp/xdan_minhash_index_" + sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    # idempotent build, same staging protocol as q_ivf_topk_indexed: the
-    # index is a pure function of (corpus rows, LSH spec); the corpus row
-    # count is folded into the spec so a regenerated fixture restages.
+    # idempotent build (_stage_with_spec): the index is a pure function
+    # of (corpus rows, LSH spec); the corpus row count is folded into the
+    # spec so a regenerated fixture restages.
     spec = {"split": "doc_id%4!=0", "bands": 4, "rows": 2,
             "n_shingle": 3, "n_corpus": corpus.count()}
     marker = os.path.join(path, "_SPEC.json")
@@ -4375,89 +3509,6 @@ SELECT keyed.doc_id, keyed.host FROM keyed JOIN reps USING (k, doc_id)
 """
 
 
-def q_ivf_append_probe(spark, sf_dir):
-    """Incremental ANN ingest (operators/similarity.py:ivf_append): the
-    corpus slice (vec_id % 4 != 0) is indexed ONCE under seed centroids
-    frozen from that slice; the new batch (vec_id % 4 == 0) is assigned
-    to the SAME frozen centroids and appended under its _list partition
-    directories — existing lists untouched, probe pruning unchanged.
-    The probe over the combined index must equal a from-scratch IVF
-    over all vectors with those centroids, which is what the DuckDB
-    twin computes symbolically. Steady-state pair of
-    dedup_minhash_incr for the embedding side."""
-    from ..operators.similarity import (
-        ivf_append,
-        ivf_centroids,
-        ivf_topk_from_index,
-        write_ivf_index,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") % 4 != 0)
-    batch = emb.filter(F.col("vec_id") % 4 == 0)
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-    query = [float(x) for x in row[0][0]] if row else [0.0]
-    cents = ivf_centroids(corpus, 8)
-    path = "/tmp/xdan_ivf_incr_" + sf_dir.strip("/").replace("/", "_")
-    # one staging unit: build-over-corpus THEN append-batch — the spec
-    # pins the final combined state, so a matching marker skips both and
-    # a mismatched one restages from scratch (append is not idempotent
-    # on its own; the marker-unlink-first protocol makes the pair safe).
-    spec = {"split": "vec_id%4", "n_lists": 8, "centroids": cents,
-            "n_corpus": corpus.count(), "n_batch": batch.count()}
-    marker = os.path.join(path, "_SPEC.json")
-
-    def _stage():
-        write_ivf_index(corpus, path, centroids=cents)
-        ivf_append(batch, path, cents)
-
-    _stage_with_spec(marker, spec, _stage)
-    return ivf_topk_from_index(spark, path, cents, query, k=10,
-                               n_probe=4).select("vec_id")
-
-
-def _sql_ivf_incr(n_lists: int = 8, n_probe: int = 4, k: int = 10) -> str:
-    """Twin of q_ivf_append_probe: seed centroids come from the CORPUS
-    slice only (frozen-centroid contract), assignment covers ALL
-    vectors — exactly what index-build + append materializes."""
-    return f"""
-WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-cents AS (
-  SELECT (ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)))) - 1 AS li,
-         CAST(embedding AS DOUBLE[]) AS cv
-  FROM embeddings WHERE vec_id % 4 <> 0
-  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {n_lists}
-),
-scored AS (
-  SELECT e.vec_id, c.li,
-         ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-           list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cv)
-           / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-              * sqrt(list_dot_product(c.cv, c.cv))) DESC, c.li) AS rn
-  FROM embeddings e CROSS JOIN cents c
-),
-assign AS (SELECT vec_id, li FROM scored WHERE rn = 1),
-probes AS (
-  SELECT li FROM (
-    SELECT c.li,
-           ROW_NUMBER() OVER (ORDER BY
-             list_dot_product(c.cv, q.qv)
-             / (sqrt(list_dot_product(c.cv, c.cv)) * sqrt(list_dot_product(q.qv, q.qv))) DESC,
-             c.li) AS rn
-    FROM cents c, q
-  ) WHERE rn <= {n_probe}
-)
-SELECT e.vec_id
-FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id, q
-WHERE a.li IN (SELECT li FROM probes)
-ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-         / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(q.qv, q.qv))) DESC,
-         e.vec_id
-LIMIT {k}
-"""
-
-
 def q_tok_bytes_ratio(spark, sf_dir):
     # Tokenizer-fertility profile per language: bytes-per-whitespace-token
     # is the standard proxy for how expensive a language is to tokenize
@@ -4547,38 +3598,6 @@ SELECT source,
                   / CAST(COUNT(*) AS DECIMAL(38,12)), 6)
             AS DOUBLE) AS hapax_share
 FROM per_term GROUP BY 1
-"""
-
-
-def q_a39_salted_hot_agg(spark, sf_dir):
-    # The north-star's "explicit salting for skewed hosts" as a
-    # first-class oracle-paired operator: a hot grouping key is split
-    # into 16 salt shards (pmod of the row id — deterministic, uniform),
-    # partially aggregated per (key, salt), then folded to key grain.
-    # The hot key's shuffle rows are bounded by partitions×16 partials
-    # instead of its raw row count, so one Zipf-headed key can no longer
-    # pin a single reducer. Value-identity is exact BECAUSE the leaf sum
-    # is the DECIMAL(20,6) cast-sum — decimal addition is associative, so
-    # two-stage == one-stage bit-for-bit and the twin can stay a plain
-    # GROUP BY. (A double sum here would be order-sensitive and
-    # hash-flaky by design.)
-    e = _t(spark, sf_dir, "events")
-    salted = e.withColumn("_salt", F.pmod(F.col("event_id"), F.lit(16)))
-    partial = salted.groupBy("event_type", "_salt").agg(
-        F.sum(F.col("value").cast("decimal(20,6)")).alias("_psum"),
-        F.count("*").alias("_pcnt"),
-    )
-    return partial.groupBy("event_type").agg(
-        F.sum("_psum").cast("double").alias("total_value"),
-        F.sum("_pcnt").alias("n_events"),
-    )
-
-
-SQL_A39_SALTED_HOT_AGG = """
-SELECT event_type,
-       CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS total_value,
-       COUNT(*) AS n_events
-FROM events GROUP BY 1
 """
 
 
@@ -5421,62 +4440,6 @@ FROM powed CROSS JOIN norm
 """
 
 
-def q_fd_violations(spark, sf_dir):
-    """Functional-dependency audit (operators/metrics.py:fd_violations)
-    over events: which users violate 'one user ⇒ one event_type' —
-    i.e. the census a declared DQ rule produces when it does NOT hold.
-    Two stacked aggregates (groupBy(lhs, rhs) → groupBy(lhs)) so
-    per-group state stays bounded at any rhs cardinality."""
-    from ..operators.metrics import fd_violations
-
-    return fd_violations(_t(spark, sf_dir, "events"), "user_id", "event_type")
-
-
-SQL_FD_VIOLATIONS = """
-WITH pairs AS (
-  SELECT user_id, event_type, COUNT(*) AS c FROM events GROUP BY 1, 2
-)
-SELECT user_id, SUM(c) AS n_rows, COUNT(*) AS n_distinct_rhs
-FROM pairs GROUP BY 1 HAVING COUNT(*) > 1
-"""
-
-
-def q_int8_topk(spark, sf_dir):
-    """INT8-quantized brute-force top-k (operators/similarity.py:
-    int8_topk) — FAISS-SQ8-style 4× scan-byte reduction; the inner
-    product is EXACT INTEGER arithmetic so the quantized ranking is
-    bit-identical cross-engine by construction (only two scalar
-    rescales are floats, one fixed sequence each)."""
-    from ..operators.similarity import int8_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-    query = [float(x) for x in row[0][0]] if row else [0.0]
-    return int8_topk(emb, query, k=10)
-
-
-SQL_INT8_TOPK = """
-WITH q0 AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-qq AS (SELECT qv, list_max(list_transform(qv, x -> abs(x))) AS qm FROM q0),
-qc AS (SELECT qm, [CAST(round(x * 127.0 / qm) AS BIGINT) FOR x IN qv] AS qcodes FROM qq),
-s AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))) AS m
-  FROM embeddings
-),
-sc AS (
-  SELECT s.vec_id,
-         CASE WHEN m > 0 THEN
-           round(CAST(list_sum([CAST(round(v[i] * 127.0 / m) AS BIGINT) * qcodes[i]
-                                FOR i IN range(1, len(v) + 1)]) AS DOUBLE)
-                 * (m / 127.0) * (qm / 127.0), 6)
-         ELSE 0.0 END AS score
-  FROM s CROSS JOIN qc
-)
-SELECT vec_id, score FROM sc ORDER BY score DESC, vec_id LIMIT 10
-"""
-
-
 def q_dedup_exact_best(spark, sf_dir):
     """Quality-aware exact dedup (operators/dedup.py:exact_dedup_best):
     byte-identical clusters collapse to their HIGHEST-n_chars member
@@ -5497,96 +4460,6 @@ ranked AS (
   FROM keyed
 )
 SELECT doc_id, lang, source, n_chars FROM ranked WHERE rn = 1
-"""
-
-
-def q_emb_dim_stats(spark, sf_dir):
-    """Per-label per-dimension embedding mean/variance
-    (operators/similarity.py:embedding_dim_stats) — representation-
-    space drift monitor (the third leg of the drift trio). One
-    posexplode into one bounded (label, dim) aggregate; exact decimal
-    moments."""
-    from ..operators.similarity import embedding_dim_stats
-
-    return embedding_dim_stats(_t(spark, sf_dir, "embeddings"))
-
-
-SQL_EMB_DIM_STATS = """
-WITH ex AS (
-  SELECT label,
-         unnest(range(0, len(embedding))) AS dim,
-         unnest(CAST(embedding AS DOUBLE[])) AS x
-  FROM embeddings
-),
-agg AS (
-  SELECT label, dim, COUNT(*) AS n,
-         SUM(CAST(round(x, 9) AS DECIMAL(30,9))) AS sx,
-         SUM(CAST(round(x * x, 9) AS DECIMAL(30,9))) AS sxx
-  FROM ex GROUP BY 1, 2
-)
-SELECT label, dim, n,
-       round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_val,
-       round(CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE)
-             - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-               * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS var_val
-FROM agg
-"""
-
-
-def q_benford_census(spark, sf_dir):
-    """Benford first-digit audit over events.value — the classic
-    fabricated-numbers alarm: natural multi-scale magnitudes follow
-    P(d) = log10(1 + 1/d); synthetic or truncated feeds don't. One
-    map-only digit extraction + one 9-row aggregate; observed shares
-    are integers divided once; expected shares are fixed literals
-    generated from the same formula on both sides."""
-    import math
-
-    e = _t(spark, sf_dir, "events").filter(F.abs(F.col("value")) > 0)
-    digit = F.substring(
-        F.regexp_replace(
-            F.format_number(F.abs(F.col("value")), 12), r"[0.,]", ""
-        ), 1, 1
-    ).cast("int")
-    counts = e.select(digit.alias("digit")).groupBy("digit").agg(
-        F.count("*").alias("n")
-    )
-    tot = counts.agg(F.sum("n").alias("_t"))
-    exp_map = F.create_map(
-        *[x for d in range(1, 10)
-          for x in (F.lit(d), F.lit(round(math.log10(1 + 1 / d), 9)))]
-    )
-    return (
-        counts.crossJoin(F.broadcast(tot))
-        .select(
-            "digit", "n",
-            F.round(F.col("n").cast("double") / F.col("_t").cast("double"), 9)
-            .alias("obs_share"),
-            exp_map[F.col("digit")].alias("benford_share"),
-        )
-    )
-
-
-def _sql_benford_census() -> str:
-    import math
-
-    exp_case = " ".join(
-        f"WHEN {d} THEN {round(math.log10(1 + 1 / d), 9)!r}"
-        for d in range(1, 10)
-    )
-    return f"""
-WITH e AS (SELECT abs(value) AS v FROM events WHERE abs(value) > 0),
-d AS (
-  SELECT CAST(substr(regexp_replace(format('{{:.12f}}', v), '[0.,]', '', 'g'), 1, 1)
-              AS INT) AS digit
-  FROM e
-),
-c AS (SELECT digit, COUNT(*) AS n FROM d GROUP BY 1),
-t AS (SELECT SUM(n) AS t FROM c)
-SELECT digit, n,
-       round(CAST(n AS DOUBLE) / CAST(t AS DOUBLE), 9) AS obs_share,
-       CASE digit {exp_case} END AS benford_share
-FROM c CROSS JOIN t
 """
 
 
@@ -5671,9 +4544,9 @@ SELECT doc_id, nb AS n_bytes_clean FROM ranked WHERE rn = 1
 
 # ------------------------------------------------------------ round-5 batch 37
 # Probabilistic-sketch family (operators/sketches.py): md5-derived
-# deterministic HyperLogLog, count-min, and Bloom filter — the whole
-# sketch state is oracle-checkable, not just its contract — plus Gini
-# source concentration and a CUSUM changepoint detector (curation.py).
+# deterministic HyperLogLog and count-min — the whole sketch state is
+# oracle-checkable, not just its contract — plus Gini source
+# concentration.
 
 _HLL_RAW_NUM = repr((0.7213 / (1.0 + 1.079 / 256.0)) * 256 * 256 * float(1 << 57))
 
@@ -5793,66 +4666,6 @@ FROM est
 """
 
 
-def q_bloom_custkeys(spark, sf_dir):
-    """Bloom-filter membership report: a 65 536-bit / 4-hash filter
-    built over orders.o_custkey, probed by every customer key, per
-    market segment (operators/sketches.py:bloom_probe_report) — the
-    explicit, oracle-checkable form of the runtime bloom join
-    pre-filter; claimed >= actual (no false negatives) with the real
-    false-positive rate per segment."""
-    from ..operators.sketches import bloom_probe_report
-
-    return bloom_probe_report(
-        _t(spark, sf_dir, "orders"), "o_custkey",
-        _t(spark, sf_dir, "customer"), "c_custkey",
-        group_col="c_mktsegment",
-    ).orderBy("c_mktsegment")
-
-
-SQL_BLOOM_CUSTKEYS = """
-WITH ks AS (SELECT unnest([0, 1, 2, 3]) AS k),
-bits AS (
-  SELECT DISTINCT
-         CAST('0x' || substr(md5(CAST(k AS VARCHAR) || ':'
-                                 || CAST(o_custkey AS VARCHAR)), 1, 8) AS BIGINT)
-         % 65536 AS pos
-  FROM orders CROSS JOIN ks
-),
-probes AS (
-  SELECT DISTINCT c_mktsegment AS grp, CAST(c_custkey AS VARCHAR) AS key
-  FROM customer
-),
-ex AS (
-  SELECT grp, key,
-         CAST('0x' || substr(md5(CAST(k AS VARCHAR) || ':' || key), 1, 8) AS BIGINT)
-         % 65536 AS pos
-  FROM probes CROSS JOIN ks
-),
-claimed AS (
-  SELECT grp, key FROM ex JOIN bits USING (pos)
-  GROUP BY grp, key HAVING COUNT(*) = 4
-),
-actual AS (SELECT DISTINCT CAST(o_custkey AS VARCHAR) AS key FROM orders),
-marked AS (
-  SELECT p.grp,
-         (c.key IS NOT NULL) AS claimed,
-         (a.key IS NOT NULL) AS actual
-  FROM probes p
-  LEFT JOIN claimed c ON c.grp = p.grp AND c.key = p.key
-  LEFT JOIN actual a ON a.key = p.key
-)
-SELECT grp AS c_mktsegment,
-       COUNT(*) AS n_probes,
-       SUM(CASE WHEN claimed THEN 1 ELSE 0 END) AS n_claimed_present,
-       SUM(CASE WHEN actual THEN 1 ELSE 0 END) AS n_actually_present,
-       SUM(CASE WHEN claimed AND NOT actual THEN 1 ELSE 0 END) AS n_false_positives,
-       round(CAST(SUM(CASE WHEN claimed AND NOT actual THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(greatest(SUM(CASE WHEN NOT actual THEN 1 ELSE 0 END), 1) AS DOUBLE),
-             6) AS fp_rate
-FROM marked GROUP BY grp ORDER BY grp
-"""
-
-
 def q_gini_sources(spark, sf_dir):
     """One-row Gini coefficient of document concentration across
     sources (operators/curation.py:gini_concentration) — the
@@ -5885,53 +4698,9 @@ FROM agg
 """
 
 
-def q_cusum_drift(spark, sf_dir):
-    """Per-event-type CUSUM changepoint over daily value totals
-    (operators/curation.py:cusum_changepoint) — the exact-arithmetic
-    level-shift detector (D_t = n*P_t - t*T, all DECIMAL), one float
-    division per group at the end."""
-    from ..operators.curation import cusum_changepoint
-
-    return cusum_changepoint(_t(spark, sf_dir, "events"))
-
-
-SQL_CUSUM_DRIFT = """
-WITH daily AS (
-  SELECT event_type AS grp, CAST(ts AS DATE) AS day,
-         SUM(CAST(value AS DECIMAL(20,6))) AS x
-  FROM events GROUP BY 1, 2
-),
-st AS (
-  SELECT grp, day,
-         row_number() OVER (PARTITION BY grp ORDER BY day) AS t,
-         SUM(x) OVER (PARTITION BY grp ORDER BY day
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p,
-         COUNT(*) OVER (PARTITION BY grp) AS n,
-         SUM(x) OVER (PARTITION BY grp) AS tot
-  FROM daily
-),
-scored AS (
-  SELECT grp, day, n,
-         abs(CAST(n AS DECIMAL(10,0)) * CAST(p AS DECIMAL(26,6))
-             - CAST(t AS DECIMAL(10,0)) * CAST(tot AS DECIMAL(26,6))) AS absd
-  FROM st
-),
-pick AS (
-  SELECT grp, day, n, absd,
-         row_number() OVER (PARTITION BY grp ORDER BY absd DESC, day) AS rk
-  FROM scored
-)
-SELECT grp AS event_type, n AS n_days, day AS changepoint_day,
-       round(CAST(absd AS DOUBLE) / CAST(n AS DOUBLE), 6) AS max_abs_cusum
-FROM pick WHERE rk = 1
-"""
-
-
 
 # ------------------------------------------------------------ round-5 batch 38
-# Graph authority scores, multi-objective skyline, Spark's native
-# session_window pinned against a first-principles gap-logic twin, and a
-# column-completeness profiler.
+# Graph authority scores and a column-completeness profiler.
 
 
 def q_hits_scores(spark, sf_dir):
@@ -5990,87 +4759,6 @@ FROM h{n_iter} h JOIN a{n_iter} a ON a.node = h.node
 
 
 SQL_HITS_SCORES = _sql_hits(2)
-
-
-def q_skyline_orders(spark, sf_dir):
-    """2-D Pareto frontier over orders: the orders not dominated on
-    (o_totalprice, o_orderdate) — "newest AND highest-value" shortlist
-    (operators/metrics.py:pareto_frontier_2d). Staircase construction
-    (per-x maxima fold -> running-max window over the bounded distinct-x
-    table -> broadcast join back), never the quadratic NOT-EXISTS
-    self-join; pure comparisons so floats/timestamps are engine-exact."""
-    from ..operators.metrics import pareto_frontier_2d
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice",
-        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("order_tus"),
-    )
-    return pareto_frontier_2d(o, "o_totalprice", "order_tus")
-
-
-SQL_SKYLINE_ORDERS = """
-WITH o AS (
-  SELECT o_orderkey, o_totalprice, epoch_us(o_orderdate) AS order_tus
-  FROM orders
-),
-g AS (SELECT o_totalprice AS x, MAX(order_tus) AS gy FROM o GROUP BY 1),
-k AS (
-  SELECT x, gy,
-         MAX(gy) OVER (ORDER BY x DESC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev
-  FROM g
-),
-kept AS (SELECT x, gy FROM k WHERE prev IS NULL OR gy > prev)
-SELECT o.o_orderkey, o.o_totalprice, o.order_tus
-FROM o JOIN kept ON o.o_totalprice = kept.x AND o.order_tus = kept.gy
-"""
-
-
-def q_session_window_native(spark, sf_dir):
-    """Spark's NATIVE session_window (30-minute gap) over events,
-    pinned value-for-value against a first-principles gap-logic twin
-    (lag -> new-session flag -> running-sum id -> fold): proves the
-    built-in operator's merge semantics (session end = last event +
-    gap, exclusive boundary) match the hand-rolled definition
-    sessionize_events uses — so the two are interchangeable and the
-    cheaper native form can serve batch AND streaming. Timestamps
-    emitted as epoch-us longs (repo discipline)."""
-    ev = _t(spark, sf_dir, "events")
-    out = ev.groupBy(
-        "user_id", F.session_window(F.col("ts"), "30 minutes").alias("w")
-    ).agg(F.count("*").alias("n_events"))
-    return out.select(
-        "user_id",
-        F.unix_micros(F.col("w.start").cast("timestamp")).alias("session_start_us"),
-        F.unix_micros(F.col("w.end").cast("timestamp")).alias("session_end_us"),
-        "n_events",
-    )
-
-
-SQL_SESSION_WINDOW_NATIVE = """
-WITH e AS (
-  SELECT user_id, epoch_us(ts) AS tus FROM events
-),
-flagged AS (
-  SELECT user_id, tus,
-         CASE WHEN tus - lag(tus) OVER (PARTITION BY user_id ORDER BY tus)
-                   >= 1800000000
-              OR lag(tus) OVER (PARTITION BY user_id ORDER BY tus) IS NULL
-              THEN 1 ELSE 0 END AS new_s
-  FROM e
-),
-sid AS (
-  SELECT user_id, tus,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY tus
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-  FROM flagged
-)
-SELECT user_id,
-       MIN(tus) AS session_start_us,
-       MAX(tus) + 1800000000 AS session_end_us,
-       COUNT(*) AS n_events
-FROM sid GROUP BY user_id, s
-"""
 
 
 def q_profile_documents(spark, sf_dir):
@@ -6397,8 +5085,8 @@ GROUP BY doc_id HAVING COUNT(*) = 3
 
 
 # ------------------------------------------------------------ round-5 batch 40
-# Exact-k weighted sampling, spike detection, grouped HLL, mutual
-# information, and pairwise FD discovery.
+# Exact-k weighted sampling, grouped HLL, mutual information, and
+# pairwise FD discovery.
 
 
 def q_wrs_sample(spark, sf_dir):
@@ -6428,43 +5116,6 @@ WITH s AS (
 )
 SELECT doc_id, n_chars, wrs_key FROM s
 ORDER BY wrs_key DESC, doc_id LIMIT 100
-"""
-
-
-def q_spike_zscore(spark, sf_dir):
-    """Per-type daily-volume spike detector: each day's event count
-    z-scored against the trailing 7 FULL days (operators/sessions.py:
-    daily_spike_zscore) — exact integer window sums, one fixed IEEE z
-    per row, zero-variance guarded."""
-    from ..operators.sessions import daily_spike_zscore
-
-    return daily_spike_zscore(_t(spark, sf_dir, "events"))
-
-
-SQL_SPIKE_ZSCORE = """
-WITH daily AS (
-  SELECT event_type AS grp, CAST(ts AS DATE) AS day, COUNT(*) AS n_events
-  FROM events GROUP BY 1, 2
-),
-st AS (
-  SELECT grp, day, n_events,
-         COUNT(*) OVER w AS np,
-         SUM(n_events) OVER w AS sx,
-         SUM(n_events * n_events) OVER w AS sxx
-  FROM daily
-  WINDOW w AS (PARTITION BY grp ORDER BY day
-               ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-)
-SELECT grp AS event_type, day, n_events,
-       round(CASE WHEN CAST(sxx AS DOUBLE) / 7.0
-                       - (CAST(sx AS DOUBLE) / 7.0) * (CAST(sx AS DOUBLE) / 7.0)
-                       > 0
-                  THEN (CAST(n_events AS DOUBLE) - CAST(sx AS DOUBLE) / 7.0)
-                       / sqrt(CAST(sxx AS DOUBLE) / 7.0
-                              - (CAST(sx AS DOUBLE) / 7.0)
-                                * (CAST(sx AS DOUBLE) / 7.0))
-                  ELSE 0.0 END, 6) AS z
-FROM st WHERE np = 7
 """
 
 
@@ -6601,167 +5252,8 @@ SQL_FD_CENSUS = "\nUNION ALL\n".join(
 )
 
 
-
 # ------------------------------------------------------------ round-5 batch 41
-# Robust trend (Theil-Sen), behavioral path mining, sketch-composed
-# join-size estimation, PSI drift, and contrastive negative sampling.
-
-
-def q_theilsen_trend(spark, sf_dir):
-    """Per-type Theil-Sen median slope of daily event volume
-    (operators/sessions.py:theilsen_daily_trend) — the robust trend a
-    glitch day cannot move; pairwise slopes over the BOUNDED per-group
-    day table, rank-selected median."""
-    from ..operators.sessions import theilsen_daily_trend
-
-    return theilsen_daily_trend(_t(spark, sf_dir, "events"))
-
-
-SQL_THEILSEN_TREND = """
-WITH daily AS (
-  SELECT event_type AS grp, CAST(ts AS DATE) AS day, COUNT(*) AS c
-  FROM events GROUP BY 1, 2
-),
-t AS (
-  SELECT grp, row_number() OVER (PARTITION BY grp ORDER BY day) AS t, c
-  FROM daily
-),
-pairs AS (
-  SELECT a.grp, a.t AS i, b.t AS j,
-         CAST(b.c - a.c AS DOUBLE) / CAST(b.t - a.t AS DOUBLE) AS slope
-  FROM t a JOIN t b ON a.grp = b.grp AND a.t < b.t
-),
-ranked AS (
-  SELECT grp, slope,
-         row_number() OVER (PARTITION BY grp ORDER BY slope, i, j) AS rk,
-         COUNT(*) OVER (PARTITION BY grp) AS np
-  FROM pairs
-),
-mid AS (
-  SELECT grp, slope, np FROM ranked
-  WHERE rk = floor((np + 1) / 2) OR rk = ceil((np + 1) / 2)
-),
-med AS (
-  SELECT grp, MAX(np) AS n_pairs, SUM(slope) / COUNT(*) AS m
-  FROM mid GROUP BY grp
-),
-days AS (SELECT grp, MAX(t) AS n_days FROM t GROUP BY grp)
-SELECT med.grp AS event_type, n_days, n_pairs, round(m, 6) AS slope_per_day
-FROM med JOIN days ON med.grp = days.grp
-"""
-
-
-def q_event_paths3(spark, sf_dir):
-    """Top-20 3-event behavioral paths (operators/sessions.py:
-    event_paths) — path mining over per-user event order; one user-key
-    shuffle, map-side path fold, TakeOrderedAndProject selection."""
-    from ..operators.sessions import event_paths
-
-    return event_paths(_t(spark, sf_dir, "events"))
-
-
-SQL_EVENT_PATHS3 = """
-WITH o AS (
-  SELECT event_type,
-         lag(event_type, 2) OVER w AS e1,
-         lag(event_type, 1) OVER w AS e2
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_type)
-)
-SELECT e1 || '>' || e2 || '>' || event_type AS path,
-       COUNT(*) AS n_occurrences
-FROM o WHERE e1 IS NOT NULL
-GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 20
-"""
-
-
-def q_cms_join_est(spark, sf_dir):
-    """Join-size estimation by count-min inner product
-    (operators/sketches.py:cms_join_cardinality): |orders x customer on
-    custkey| estimated from two 4 096-counter sketches (min over rows
-    of the cell-wise product sum — never an underestimate), next to
-    the exact count it replaces at planning time."""
-    from ..operators.sketches import cms_join_cardinality
-
-    return cms_join_cardinality(
-        _t(spark, sf_dir, "orders"), "o_custkey",
-        _t(spark, sf_dir, "customer"), "c_custkey",
-    )
-
-
-SQL_CMS_JOIN_EST = """
-WITH ds AS (SELECT unnest([0, 1, 2, 3]) AS d),
-c1 AS (
-  SELECT d AS row_id,
-         CAST('0x' || substr(md5(CAST(d AS VARCHAR) || ':'
-                                 || CAST(o_custkey AS VARCHAR)), 1, 8) AS BIGINT)
-         % 1024 AS col_id
-  FROM orders CROSS JOIN ds
-),
-s1 AS (SELECT row_id, col_id, COUNT(*) AS cnt FROM c1 GROUP BY 1, 2),
-c2 AS (
-  SELECT d AS row_id,
-         CAST('0x' || substr(md5(CAST(d AS VARCHAR) || ':'
-                                 || CAST(c_custkey AS VARCHAR)), 1, 8) AS BIGINT)
-         % 1024 AS col_id
-  FROM customer CROSS JOIN ds
-),
-s2 AS (SELECT row_id, col_id, COUNT(*) AS cnt2 FROM c2 GROUP BY 1, 2),
-ip AS (
-  SELECT s1.row_id,
-         SUM(CAST(s1.cnt AS DECIMAL(19,0)) * CAST(s2.cnt2 AS DECIMAL(18,0))) AS ipd
-  FROM s1 JOIN s2 ON s1.row_id = s2.row_id AND s1.col_id = s2.col_id
-  GROUP BY 1
-),
-est AS (SELECT CAST(MIN(ipd) AS BIGINT) AS cms_estimate FROM ip),
-ex AS (
-  SELECT COUNT(*) AS exact_join_count
-  FROM orders o JOIN customer c
-  ON CAST(o.o_custkey AS VARCHAR) = CAST(c.c_custkey AS VARCHAR)
-)
-SELECT cms_estimate, exact_join_count,
-       cms_estimate - exact_join_count AS overcount
-FROM est CROSS JOIN ex
-"""
-
-
-def q_psi_value_drift(spark, sf_dir):
-    """Population Stability Index of events.value, first half of
-    January vs second (operators/curation.py:psi_drift) — the
-    industry-standard drift score with an explicit skipped-bucket
-    census instead of a silent epsilon."""
-    from ..operators.curation import psi_drift
-
-    ev = _t(spark, sf_dir, "events")
-    ref = F.unix_micros(F.col("ts").cast("timestamp")) < 1705363200000000
-    return psi_drift(ev, "value", ref)
-
-
-SQL_PSI_VALUE_DRIFT = """
-WITH cells AS (
-  SELECT floor(CAST(value AS DOUBLE) / 10.0) AS bucket,
-         SUM(CASE WHEN epoch_us(ts) < 1705363200000000 THEN 1 ELSE 0 END) AS n_ref,
-         SUM(CASE WHEN epoch_us(ts) < 1705363200000000 THEN 0 ELSE 1 END) AS n_cur
-  FROM events GROUP BY 1
-),
-tot AS (SELECT SUM(n_ref) AS t_ref, SUM(n_cur) AS t_cur FROM cells),
-j AS (
-  SELECT (n_ref > 0 AND n_cur > 0) AS is_both,
-         CASE WHEN n_ref > 0 AND n_cur > 0
-              THEN CAST(round(
-                (CAST(n_ref AS DOUBLE) / CAST(t_ref AS DOUBLE)
-                 - CAST(n_cur AS DOUBLE) / CAST(t_cur AS DOUBLE))
-                * ln((CAST(n_ref AS DOUBLE) / CAST(t_ref AS DOUBLE))
-                     / (CAST(n_cur AS DOUBLE) / CAST(t_cur AS DOUBLE))), 9)
-              AS DECIMAL(20,9))
-              ELSE CAST(0.0 AS DECIMAL(20,9)) END AS t
-  FROM cells CROSS JOIN tot
-)
-SELECT SUM(CASE WHEN is_both THEN 1 ELSE 0 END) AS n_buckets,
-       SUM(CASE WHEN is_both THEN 0 ELSE 1 END) AS n_skipped,
-       round(CAST(SUM(t) AS DOUBLE), 6) AS psi
-FROM j
-"""
+# Contrastive negative sampling.
 
 
 def q_negative_samples(spark, sf_dir):
@@ -6801,8 +5293,7 @@ WHERE negative_id <> anchor_id
 
 
 # ------------------------------------------------------------ round-5 batch 42
-# Privacy risk census, order-insensitive dataset fingerprints, EXACT
-# set-similarity join (prefix filtering), and props-key schema drift.
+# Privacy risk census and EXACT set-similarity join (prefix filtering).
 
 
 def q_k_anon_docs(spark, sf_dir):
@@ -6837,66 +5328,6 @@ SELECT COUNT(*) AS n_classes, SUM(n) AS n_rows,
        MIN(l) AS min_l
 FROM classes
 """
-
-
-def q_dataset_fingerprint(spark, sf_dir):
-    """Order-insensitive replica fingerprints for two tables
-    (operators/metrics.py:commutative_fingerprint): (table, n_rows,
-    Σ row-hash as DECIMAL) — byte-equality across clusters checked
-    from two scans and no shuffle-heavy diff. Doubles/timestamps are
-    canonicalized (DECIMAL(18,2) price, epoch-us date) BEFORE
-    serialization so the string form is engine-exact."""
-    from ..operators.metrics import commutative_fingerprint
-
-    docs = _t(spark, sf_dir, "documents")
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus",
-        F.col("o_totalprice").cast("decimal(18,2)").alias("price_c"),
-        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("date_us"),
-        "o_orderpriority",
-    )
-    f1 = commutative_fingerprint(
-        docs, ["doc_id", "text", "lang", "source", "n_chars"], "documents"
-    )
-    f2 = commutative_fingerprint(
-        orders,
-        ["o_orderkey", "o_custkey", "o_orderstatus", "price_c", "date_us",
-         "o_orderpriority"],
-        "orders",
-    )
-    return f1.unionByName(f2)
-
-
-_FPSEP = "chr(31)"
-_FPNULL = "chr(0) || 'NULL'"
-
-
-def _sql_fingerprint(table_expr: str, label: str, cols: list[str]) -> str:
-    canon = f" || {_FPSEP} || ".join(
-        f"coalesce(CAST({c} AS VARCHAR), {_FPNULL})" for c in cols
-    )
-    return f"""
-SELECT '{label}' AS table_name, COUNT(*) AS n_rows,
-       CAST(SUM(CAST(CAST('0x' || substr(md5({canon}), 1, 15) AS BIGINT)
-                AS DECIMAL(38,0))) AS VARCHAR) AS checksum
-FROM {table_expr}
-"""
-
-
-SQL_DATASET_FINGERPRINT = (
-    _sql_fingerprint("documents", "documents",
-                     ["doc_id", "text", "lang", "source", "n_chars"])
-    + "\nUNION ALL\n"
-    + _sql_fingerprint(
-        """(SELECT o_orderkey, o_custkey, o_orderstatus,
-                   CAST(o_totalprice AS DECIMAL(18,2)) AS price_c,
-                   epoch_us(o_orderdate) AS date_us,
-                   o_orderpriority FROM orders)""",
-        "orders",
-        ["o_orderkey", "o_custkey", "o_orderstatus", "price_c", "date_us",
-         "o_orderpriority"],
-    )
-)
 
 
 def q_prefix_jaccard_pairs(spark, sf_dir):
@@ -6953,116 +5384,8 @@ WHERE s.n_shared * 10 >= 9 * (za.s + zb.s - s.n_shared)
 """
 
 
-def q_props_key_drift(spark, sf_dir):
-    """JSON-schema DRIFT census of the open props sidecar: keys that
-    appear in only ONE half of the month flag as drifted, per event
-    type — the upstream-deploy detector behind props_key_census (a key
-    vanishing or appearing mid-month is a producer schema change); the
-    full censused matrix is emitted so a stable feed still yields a
-    non-trivial, hash-checked report."""
-    ev = _t(spark, sf_dir, "events")
-    first = F.unix_micros(F.col("ts").cast("timestamp")) < 1705363200000000
-    ex = ev.select(
-        "event_type",
-        first.alias("_h1"),
-        F.explode(F.expr("json_object_keys(props)")).alias("key"),
-    )
-    agg = ex.groupBy("event_type", "key").agg(
-        F.max(F.when(F.col("_h1"), 1).otherwise(0)).alias("_f"),
-        F.max(F.when(~F.col("_h1"), 1).otherwise(0)).alias("_s"),
-    )
-    return agg.select(
-        "event_type", "key",
-        (F.col("_f") == 1).alias("in_first_half"),
-        (F.col("_s") == 1).alias("in_second_half"),
-        (F.col("_f") != F.col("_s")).alias("drifted"),
-    )
-
-
-SQL_PROPS_KEY_DRIFT = """
-WITH ex AS (
-  SELECT event_type,
-         epoch_us(ts) < 1705363200000000 AS h1,
-         unnest(json_keys(props)) AS key
-  FROM events
-),
-agg AS (
-  SELECT event_type, key,
-         MAX(CASE WHEN h1 THEN 1 ELSE 0 END) AS f,
-         MAX(CASE WHEN h1 THEN 0 ELSE 1 END) AS s
-  FROM ex GROUP BY 1, 2
-)
-SELECT event_type, key, f = 1 AS in_first_half, s = 1 AS in_second_half,
-       f <> s AS drifted
-FROM agg
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 43
-# Sweep-line concurrency, source-profile cosine map, and rolling
-# windowed HLL.
-
-
-def q_concurrency_peak(spark, sf_dir):
-    """Peak concurrent sessions (operators/sessions.py:
-    concurrency_peak): 30-min session windows per user swept as
-    +1/-1 boundary events with a running sum — end-before-start tie
-    order so touching sessions don't overlap; argmax via one
-    struct-max fold."""
-    from ..operators.sessions import concurrency_peak
-
-    ev = _t(spark, sf_dir, "events")
-    sessions = ev.groupBy(
-        "user_id", F.session_window(F.col("ts"), "30 minutes").alias("w")
-    ).agg(F.count("*").alias("_n")).select(
-        F.lit("all").alias("scope"),
-        F.unix_micros(F.col("w.start").cast("timestamp")).alias("s_us"),
-        F.unix_micros(F.col("w.end").cast("timestamp")).alias("e_us"),
-    )
-    return concurrency_peak(sessions, "s_us", "e_us", group_col="scope")
-
-
-SQL_CONCURRENCY_PEAK = """
-WITH e AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
-flagged AS (
-  SELECT user_id, tus,
-         CASE WHEN tus - lag(tus) OVER (PARTITION BY user_id ORDER BY tus)
-                   >= 1800000000
-              OR lag(tus) OVER (PARTITION BY user_id ORDER BY tus) IS NULL
-              THEN 1 ELSE 0 END AS new_s
-  FROM e
-),
-sid AS (
-  SELECT user_id, tus,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY tus
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-  FROM flagged
-),
-sess AS (
-  SELECT MIN(tus) AS s_us, MAX(tus) + 1800000000 AS e_us
-  FROM sid GROUP BY user_id, s
-),
-pts AS (
-  SELECT s_us AS t, 1 AS delta FROM sess
-  UNION ALL
-  SELECT e_us AS t, -1 AS delta FROM sess
-),
-run AS (
-  SELECT t, SUM(delta) OVER (ORDER BY t, delta
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         AS conc
-  FROM pts
-),
-agg AS (
-  SELECT COUNT(*) / 2 AS n_intervals,
-         MAX(struct_pack(c := conc, nt := -t)) AS m
-  FROM run
-)
-SELECT 'all' AS scope, CAST(n_intervals AS BIGINT) AS n_intervals,
-       m.c AS peak_concurrency, -m.nt AS peak_at
-FROM agg
-"""
+# Source-profile cosine map.
 
 
 def q_source_cosine(spark, sf_dir):
@@ -7098,112 +5421,8 @@ FROM crossed JOIN norms na ON a = na.src JOIN norms nb ON b = nb.src
 """
 
 
-def q_rolling_users_hll(spark, sf_dir):
-    """Rolling 7-day distinct-user estimate from WINDOWED HyperLogLog
-    register merges (operators/sketches.py:hll_rolling_estimate) next
-    to the exact rolling distinct it approximates — the 'weekly active
-    users' dashboard at sketch cost: one 256-row register table per
-    day, max()-merged over a trailing calendar frame."""
-    from ..operators.sketches import hll_rolling_estimate
-
-    ev = _t(spark, sf_dir, "events")
-    est = hll_rolling_estimate(ev, "user_id", "ts", window_days=7)
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000").cast("long")
-    ud = ev.select(day.alias("eday"), F.col("user_id")).distinct()
-    days = est.select("day")
-    exact = (
-        days.join(
-            ud,
-            (F.col("eday") >= F.col("day") - 6) & (F.col("eday") <= F.col("day")),
-        )
-        .groupBy("day")
-        .agg(F.count_distinct("user_id").alias("exact_distinct"))
-    )
-    return est.join(exact, "day").select(
-        "day", "hll_estimate", "exact_distinct",
-        F.round(
-            (F.col("hll_estimate") - F.col("exact_distinct").cast("double"))
-            / F.col("exact_distinct").cast("double"),
-            6,
-        ).alias("rel_error"),
-    )
-
-
-SQL_ROLLING_USERS_HLL = """
-WITH ev AS (
-  SELECT epoch_us(ts) // 86400000000 AS day,
-         CAST(user_id AS VARCHAR) AS v
-  FROM events
-),
-h AS (
-  SELECT day,
-         CAST('0x' || substr(md5('hl:' || v), 1, 8) AS BIGINT) AS hl,
-         CAST('0x' || substr(md5('hh:' || v), 1, 8) AS BIGINT) AS hh
-  FROM ev
-),
-r AS (SELECT day, hl & 255 AS idx, (hl >> 8) * 4294967296 + hh AS w FROM h),
-daily AS (
-  SELECT day, idx,
-         MAX(CASE WHEN w = 0 THEN 57 ELSE 57 - length(bin(w)) END) AS rho
-  FROM r GROUP BY 1, 2
-),
-span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM daily),
-grid AS (
-  SELECT gs.day, ix.idx
-  FROM (SELECT unnest(generate_series(d0, d1)) AS day FROM span) gs
-  CROSS JOIN (SELECT DISTINCT idx FROM daily) ix
-),
-filled AS (
-  SELECT g.day, g.idx, d.rho
-  FROM grid g LEFT JOIN daily d ON g.day = d.day AND g.idx = d.idx
-),
-rolled AS (
-  SELECT day, idx,
-         MAX(rho) OVER (PARTITION BY idx ORDER BY day
-                        ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS rho
-  FROM filled
-),
-regs AS (SELECT day, idx, rho FROM rolled WHERE rho IS NOT NULL),
-s AS (
-  SELECT day, COUNT(*) AS n_present,
-         SUM(CAST((CAST(1 AS BIGINT) << CAST(57 - rho AS INT)) AS DECIMAL(38,0))) AS s_present
-  FROM regs GROUP BY 1
-),
-t AS (
-  SELECT day, 256 - n_present AS nz,
-         s_present + CAST(256 - n_present AS DECIMAL(38,0))
-                     * CAST(144115188075855872 AS DECIMAL(38,0)) AS s_total
-  FROM s
-),
-est AS (
-  SELECT day, nz, {HLLNUM} / CAST(s_total AS DOUBLE) AS raw FROM t
-),
-fin AS (
-  SELECT day,
-         round(CASE WHEN raw <= 640.0 AND nz > 0
-                    THEN 256.0 * ln(256.0 / CAST(nz AS DOUBLE))
-                    ELSE raw END, 4) AS hll_estimate
-  FROM est
-),
-ud AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS eday, user_id FROM events),
-exact AS (
-  SELECT f.day, COUNT(DISTINCT u.user_id) AS exact_distinct
-  FROM fin f JOIN ud u ON u.eday >= f.day - 6 AND u.eday <= f.day
-  GROUP BY 1
-)
-SELECT f.day, f.hll_estimate, e.exact_distinct,
-       round((f.hll_estimate - CAST(e.exact_distinct AS DOUBLE))
-             / CAST(e.exact_distinct AS DOUBLE), 6) AS rel_error
-FROM fin f JOIN exact e ON f.day = e.day
-"""
-
-
-SQL_ROLLING_USERS_HLL = SQL_ROLLING_USERS_HLL.replace("{HLLNUM}", _HLL_RAW_NUM)
-
-
 # ------------------------------------------------------------ round-5 batch 44
-# Homoglyph spoof census, day-of-week chi-square uniformity, measured
-# Bloom join pre-filter, and Neyman-optimal sample allocation.
+# Homoglyph spoof census and Neyman-optimal sample allocation.
 
 
 def q_homoglyph_spoof(spark, sf_dir):
@@ -7240,93 +5459,6 @@ SELECT source, COUNT(*) AS n_docs,
                            <> coalesce(text, '') THEN 1 ELSE 0 END) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE), 9) AS spoof_rate
 FROM staged GROUP BY source
-"""
-
-
-def q_dow_chi2(spark, sf_dir):
-    """Per-type day-of-week chi-square uniformity
-    (operators/sessions.py:dow_uniformity_chi2) — bot feeds are flat,
-    human traffic has weekly rhythm; the statistic is exact-integer up
-    to ONE terminal division ((7o-n)^2 form), day-of-week is integral
-    epoch-day arithmetic (no calendar/tz functions)."""
-    from ..operators.sessions import dow_uniformity_chi2
-
-    return dow_uniformity_chi2(_t(spark, sf_dir, "events"))
-
-
-SQL_DOW_CHI2 = """
-WITH cells AS (
-  SELECT event_type AS grp,
-         (epoch_us(ts) // 86400000000 + 4) % 7 AS dow,
-         COUNT(*) AS o
-  FROM events GROUP BY 1, 2
-),
-tot AS (SELECT grp, SUM(o) AS n FROM cells GROUP BY 1),
-j AS (
-  SELECT c.grp, t.n,
-         CAST(7 AS DECIMAL(19,0)) * CAST(c.o AS DECIMAL(18,0))
-         - CAST(t.n AS DECIMAL(37,0)) AS term
-  FROM cells c JOIN tot t ON c.grp = t.grp
-),
-agg AS (
-  SELECT grp, n,
-         SUM(CAST(CAST(term AS DECIMAL(19,0)) * CAST(term AS DECIMAL(18,0))
-                  AS DECIMAL(38,0))) AS num
-  FROM j GROUP BY 1, 2
-)
-SELECT grp AS event_type, n AS n_events,
-       round(CAST(num AS DOUBLE) / (7.0 * CAST(n AS DOUBLE)), 6) AS chi2,
-       round(CAST(num AS DOUBLE) / (7.0 * CAST(n AS DOUBLE)), 6) > 12.592
-         AS uniform_rejected
-FROM agg
-"""
-
-
-def q_bloom_prefilter_join(spark, sf_dir):
-    """The Bloom join pre-filter measured end-to-end
-    (operators/sketches.py:bloom_join_prefilter_report): filter over
-    the p_size < 15 part keys, lineitem passed through it — one row
-    quantifying pruning power and false passes (no false negatives by
-    construction)."""
-    from ..operators.sketches import bloom_join_prefilter_report
-
-    dim = _t(spark, sf_dir, "part").filter(F.col("p_size") < 15)
-    return bloom_join_prefilter_report(
-        _t(spark, sf_dir, "lineitem"), "l_partkey", dim, "p_partkey"
-    )
-
-
-SQL_BLOOM_PREFILTER_JOIN = """
-WITH dim AS (SELECT p_partkey FROM part WHERE p_size < 15),
-ks AS (SELECT unnest([0, 1, 2, 3]) AS k),
-bits AS (
-  SELECT DISTINCT
-         CAST('0x' || substr(md5(CAST(k AS VARCHAR) || ':'
-                                 || CAST(p_partkey AS VARCHAR)), 1, 8) AS BIGINT)
-         % 65536 AS pos
-  FROM dim CROSS JOIN ks
-),
-f AS (SELECT CAST(l_partkey AS VARCHAR) AS fk FROM lineitem),
-ex AS (
-  SELECT fk,
-         CAST('0x' || substr(md5(CAST(k AS VARCHAR) || ':' || fk), 1, 8) AS BIGINT)
-         % 65536 AS pos
-  FROM (SELECT DISTINCT fk FROM f) CROSS JOIN ks
-),
-passed AS (
-  SELECT fk FROM ex JOIN bits USING (pos) GROUP BY fk HAVING COUNT(*) = 4
-),
-keys AS (SELECT DISTINCT CAST(p_partkey AS VARCHAR) AS fk FROM dim),
-m AS (
-  SELECT (SELECT COUNT(*) FROM f) AS n_fact_rows,
-         (SELECT COUNT(*) FROM f JOIN passed USING (fk)) AS n_pass_bloom,
-         (SELECT COUNT(*) FROM f JOIN keys USING (fk)) AS n_true_match
-)
-SELECT n_fact_rows, n_pass_bloom, n_true_match,
-       n_pass_bloom - n_true_match AS n_false_pass,
-       round(CAST(n_fact_rows - n_pass_bloom AS DOUBLE)
-             / CAST(n_fact_rows AS DOUBLE), 6) AS pruned_frac
-FROM m
 """
 
 
@@ -7370,8 +5502,8 @@ FROM w CROSS JOIN tot
 
 
 # ------------------------------------------------------------ round-5 batch 45
-# Data-contract gate, mergeable log-bucket quantile sketch, HLL
-# set-overlap, and count-min as streaming state.
+# Data-contract gate, mergeable log-bucket quantile sketch, and
+# count-min as streaming state.
 
 
 def q_contract_checks(spark, sf_dir):
@@ -7480,86 +5612,6 @@ SELECT e.quantile, round(e.est, 6) AS est, round(x.exact, 6) AS exact,
        round(e.est / x.exact, 6) AS ratio
 FROM est e JOIN exact x ON e.quantile = x.quantile
 """
-
-
-def q_hll_overlap(spark, sf_dir):
-    """Distinct-user overlap between the two halves of the month by
-    HLL inclusion-exclusion (operators/sketches.py:hll_set_overlap):
-    |A∩B| from three 256-row register states, never joining the raw
-    sets; exact overlap alongside with the (error-amplifying)
-    subtraction's rel_error made visible."""
-    from ..operators.sketches import hll_set_overlap
-
-    ev = _t(spark, sf_dir, "events")
-    first = F.unix_micros(F.col("ts").cast("timestamp")) < 1705363200000000
-    a = ev.filter(first).select("user_id")
-    b = ev.filter(~first).select("user_id")
-    return hll_set_overlap(a, b, "user_id")
-
-
-_SQL_HLL_EST_FRAGMENT = """
-  SELECT round(CASE WHEN raw <= 640.0 AND nz > 0
-               THEN 256.0 * ln(256.0 / CAST(nz AS DOUBLE))
-               ELSE raw END, 4) AS e
-  FROM (
-    SELECT nz, {num} / CAST(st AS DOUBLE) AS raw FROM (
-      SELECT 256 - COUNT(*) AS nz,
-             SUM(CAST((CAST(1 AS BIGINT) << CAST(57 - rho AS INT)) AS DECIMAL(38,0)))
-             + CAST(256 - COUNT(*) AS DECIMAL(38,0))
-               * CAST(144115188075855872 AS DECIMAL(38,0)) AS st
-      FROM {regs}
-    )
-  )
-"""
-
-
-def _sql_hll_overlap() -> str:
-    regs_tpl = """
-(SELECT idx, MAX(rho) AS rho FROM (
-  SELECT hl & 255 AS idx,
-         CASE WHEN (hl >> 8) * 4294967296 + hh = 0 THEN 57
-              ELSE 57 - length(bin((hl >> 8) * 4294967296 + hh)) END AS rho
-  FROM (
-    SELECT CAST('0x' || substr(md5('hl:' || v), 1, 8) AS BIGINT) AS hl,
-           CAST('0x' || substr(md5('hh:' || v), 1, 8) AS BIGINT) AS hh
-    FROM {src}
-  )
-) GROUP BY idx)"""
-    src_a = ("(SELECT CAST(user_id AS VARCHAR) AS v FROM events "
-             "WHERE epoch_us(ts) < 1705363200000000)")
-    src_b = ("(SELECT CAST(user_id AS VARCHAR) AS v FROM events "
-             "WHERE NOT (epoch_us(ts) < 1705363200000000))")
-    ra = regs_tpl.format(src=src_a)
-    rb = regs_tpl.format(src=src_b)
-    ru = f"""
-(SELECT idx, MAX(rho) AS rho FROM (
-  SELECT idx, rho FROM {ra} UNION ALL SELECT idx, rho FROM {rb}
-) GROUP BY idx)"""
-    ea = _SQL_HLL_EST_FRAGMENT.format(num=_HLL_RAW_NUM, regs=ra)
-    eb = _SQL_HLL_EST_FRAGMENT.format(num=_HLL_RAW_NUM, regs=rb)
-    eu = _SQL_HLL_EST_FRAGMENT.format(num=_HLL_RAW_NUM, regs=ru)
-    return f"""
-WITH ea AS ({ea}), eb AS ({eb}), eu AS ({eu}),
-exact AS (
-  SELECT COUNT(*) AS exact_overlap FROM (
-    SELECT DISTINCT user_id FROM events
-    WHERE epoch_us(ts) < 1705363200000000
-  ) a
-  WHERE EXISTS (
-    SELECT 1 FROM events b
-    WHERE NOT (epoch_us(b.ts) < 1705363200000000) AND b.user_id = a.user_id
-  )
-)
-SELECT ea.e AS est_a, eb.e AS est_b, eu.e AS est_union,
-       round(ea.e + eb.e - eu.e, 4) AS est_overlap,
-       exact_overlap,
-       round((round(ea.e + eb.e - eu.e, 4) - CAST(exact_overlap AS DOUBLE))
-             / greatest(CAST(exact_overlap AS DOUBLE), 1.0), 6) AS rel_error
-FROM ea CROSS JOIN eb CROSS JOIN eu CROSS JOIN exact
-"""
-
-
-SQL_HLL_OVERLAP = _sql_hll_overlap()
 
 
 def q_stream_cms(spark, sf_dir):
@@ -7682,78 +5734,9 @@ FROM est
 """
 
 
-
 # ------------------------------------------------------------ round-5 batch 46
-# Kaplan-Meier conversion survival, rank-biased overlap, keep-rate
-# two-proportion A/B test, and the vocabulary coverage curve.
-
-
-def q_km_conversion(spark, sf_dir):
-    """Kaplan-Meier click->purchase survival curve with right
-    censoring (operators/sessions.py:km_survival) — never-converting
-    users are censored at their last event, not dropped; log-space
-    cumulative product with rounded DECIMAL-summed terms."""
-    from ..operators.sessions import km_survival
-
-    return km_survival(_t(spark, sf_dir, "events"))
-
-
-SQL_KM_CONVERSION = """
-WITH e AS (
-  SELECT user_id AS u, event_type AS ty, epoch_us(ts) AS tus FROM events
-),
-carried AS (
-  SELECT u, ty, tus,
-         MIN(CASE WHEN ty = 'click' THEN tus END)
-           OVER (PARTITION BY u ORDER BY tus
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS entry
-  FROM e
-),
-per_user AS (
-  SELECT u,
-         MIN(CASE WHEN ty = 'click' THEN tus END) AS e0,
-         MIN(CASE WHEN ty = 'purchase' AND entry IS NOT NULL
-                   AND tus >= entry THEN tus END) AS ev,
-         MAX(tus) AS last
-  FROM carried GROUP BY u
-),
-durations AS (
-  SELECT CASE WHEN ev IS NOT NULL THEN ev - e0 ELSE last - e0 END AS dur_us,
-         ev IS NOT NULL AS converted
-  FROM per_user WHERE e0 IS NOT NULL
-),
-total AS (SELECT COUNT(*) AS n0 FROM durations),
-grid AS (
-  SELECT dur_us,
-         SUM(CASE WHEN converted THEN 1 ELSE 0 END) AS d,
-         COUNT(*) AS leave_n
-  FROM durations GROUP BY 1
-),
-staged AS (
-  SELECT dur_us, d,
-         n0 - coalesce(SUM(leave_n) OVER (ORDER BY dur_us
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS n_risk
-  FROM grid CROSS JOIN total
-),
-ev_only AS (SELECT * FROM staged WHERE d > 0),
-curve AS (
-  SELECT dur_us, d, n_risk,
-         SUM(CAST(CASE WHEN d < n_risk
-                  THEN round(ln(1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)), 9)
-                  ELSE 0.0 END AS DECIMAL(20,9)))
-           OVER (ORDER BY dur_us
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ls,
-         MAX(CASE WHEN d = n_risk THEN 1 ELSE 0 END)
-           OVER (ORDER BY dur_us
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS dead
-  FROM ev_only
-)
-SELECT CAST(dur_us AS DOUBLE) / 1e6 AS t_sec, n_risk, d AS n_events,
-       CASE WHEN dead = 1 THEN 0.0
-            ELSE round(exp(CAST(ls AS DOUBLE)), 6) END AS survival
-FROM curve
-"""
+# Rank-biased overlap, keep-rate two-proportion A/B test, and the
+# vocabulary coverage curve.
 
 
 def q_rbo_source_rankings(spark, sf_dir):
@@ -7960,8 +5943,7 @@ FROM (
 
 
 # ------------------------------------------------------------ round-5 batch 47
-# CDC changelog apply (MERGE semantics), watermark-lateness census,
-# and a strict three-step funnel.
+# CDC changelog apply (MERGE semantics).
 
 
 def q_cdc_docs(spark, sf_dir):
@@ -8044,90 +6026,9 @@ WHERE w IS NULL OR w.o <> 'D'
 """
 
 
-def q_late_census(spark, sf_dir):
-    """Watermark-tuning lateness census
-    (operators/sessions.py:lateness_census): events replayed in ingest
-    (event_id) order, lateness = running-max event time minus event
-    time, bucketed — including how many a 10-minute watermark would
-    DROP, read from batch data instead of production incidents."""
-    from ..operators.sessions import lateness_census
-
-    return lateness_census(_t(spark, sf_dir, "events"))
-
-
-SQL_LATE_CENSUS = """
-WITH e AS (
-  SELECT event_type AS grp, event_id AS aid, epoch_us(ts) AS tus FROM events
-),
-staged AS (
-  SELECT grp,
-         MAX(tus) OVER (PARTITION BY grp ORDER BY aid
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - tus AS late_us
-  FROM e
-)
-SELECT grp AS event_type, COUNT(*) AS n_events,
-       SUM(CASE WHEN late_us = 0 THEN 1 ELSE 0 END) AS n_on_time,
-       SUM(CASE WHEN late_us > 0 AND late_us <= 60000000 THEN 1 ELSE 0 END)
-         AS n_late_1m,
-       SUM(CASE WHEN late_us > 60000000 AND late_us <= 600000000
-                THEN 1 ELSE 0 END) AS n_late_10m,
-       SUM(CASE WHEN late_us > 600000000 THEN 1 ELSE 0 END) AS n_very_late,
-       SUM(CASE WHEN late_us > 600000000 THEN 1 ELSE 0 END)
-         AS n_dropped_at_watermark
-FROM staged GROUP BY grp
-"""
-
-
-def q_funnel3(spark, sf_dir):
-    """Strict view->click->purchase three-step funnel
-    (operators/sessions.py:funnel3_strict): greedy chained carries
-    (optimal for existence) over ONE user-key shuffle — never a 3-way
-    self-join; -1 sentinels, reached in {1,2,3}."""
-    from ..operators.sessions import funnel3_strict
-
-    return funnel3_strict(_t(spark, sf_dir, "events"))
-
-
-SQL_FUNNEL3 = """
-WITH e AS (
-  SELECT user_id AS u, event_id AS i, event_type AS ty, epoch_us(ts) AS tus
-  FROM events
-),
-e1 AS (
-  SELECT *, MIN(CASE WHEN ty = 'view' THEN tus END)
-              OVER (PARTITION BY u ORDER BY tus, i
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS t1s
-  FROM e
-),
-e2 AS (
-  SELECT *, MIN(CASE WHEN ty = 'click' AND t1s IS NOT NULL AND tus >= t1s
-                     THEN tus END)
-              OVER (PARTITION BY u ORDER BY tus, i
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS t2s
-  FROM e1
-),
-agg AS (
-  SELECT u,
-         MIN(CASE WHEN ty = 'view' THEN tus END) AS t1,
-         MIN(CASE WHEN ty = 'click' AND t1s IS NOT NULL AND tus >= t1s
-                  THEN tus END) AS t2,
-         MIN(CASE WHEN ty = 'purchase' AND t2s IS NOT NULL AND tus >= t2s
-                  THEN tus END) AS t3
-  FROM e2 GROUP BY u
-)
-SELECT u AS user_id, t1 AS t1_us,
-       coalesce(t2, -1) AS t2_us,
-       coalesce(t3, -1) AS t3_us,
-       1 + CAST(t2 IS NOT NULL AS INT) + CAST(t3 IS NOT NULL AS INT) AS reached
-FROM agg WHERE t1 IS NOT NULL
-"""
-
-
 
 # ------------------------------------------------------------ round-5 batch 48
-# 1-D Wasserstein drift, per-doc novelty scoring, and lagged daily
-# cross-correlation.
+# 1-D Wasserstein drift and per-doc novelty scoring.
 
 
 def q_emd_length_drift(spark, sf_dir):
@@ -8224,59 +6125,9 @@ SELECT * FROM hi UNION ALL SELECT * FROM lo
 """
 
 
-def q_daily_xcorr(spark, sf_dir):
-    """Lagged cross-correlation of click vs purchase daily volumes,
-    lags -3..+3 (operators/sessions.py:daily_xcorr) — the lead/lag
-    discovery behind attribution; exact moment sums per lag over the
-    bounded matched-day table."""
-    from ..operators.sessions import daily_xcorr
-
-    return daily_xcorr(_t(spark, sf_dir, "events"))
-
-
-def _sql_daily_xcorr(max_lag: int = 3) -> str:
-    parts = []
-    for lag in range(-max_lag, max_lag + 1):
-        parts.append(f"""
-SELECT {lag} AS lag, nn AS n_days,
-       round(CASE WHEN CAST(nn AS DOUBLE) * sxx - sx * sx > 0
-                   AND CAST(nn AS DOUBLE) * syy - sy * sy > 0
-                  THEN (CAST(nn AS DOUBLE) * sxy - sx * sy)
-                       / (sqrt(CAST(nn AS DOUBLE) * sxx - sx * sx)
-                          * sqrt(CAST(nn AS DOUBLE) * syy - sy * sy))
-                  ELSE 0.0 END, 6) AS r
-FROM (
-  SELECT CAST(SUM(CAST(x AS DECIMAL(38,0))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(38,0))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(CAST(x AS DECIMAL(19,0)) * CAST(y AS DECIMAL(18,0))
-                  AS DECIMAL(38,0))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(CAST(x AS DECIMAL(19,0)) * CAST(x AS DECIMAL(18,0))
-                  AS DECIMAL(38,0))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(CAST(y AS DECIMAL(19,0)) * CAST(y AS DECIMAL(18,0))
-                  AS DECIMAL(38,0))) AS DOUBLE) AS syy,
-         COUNT(*) AS nn
-  FROM (
-    SELECT xx.x, yy.y FROM
-    (SELECT epoch_us(ts) // 86400000000 AS day, COUNT(*) AS x
-     FROM events WHERE event_type = 'click' GROUP BY 1) xx
-    JOIN
-    (SELECT epoch_us(ts) // 86400000000 - ({lag}) AS day, COUNT(*) AS y
-     FROM events WHERE event_type = 'purchase'
-     GROUP BY epoch_us(ts) // 86400000000) yy
-    ON xx.day = yy.day
-  )
-)
-""")
-    return "\nUNION ALL\n".join(parts)
-
-
-SQL_DAILY_XCORR = _sql_daily_xcorr(3)
-
-
 
 # ------------------------------------------------------------ round-5 batch 49
-# Church-Gale term adaptation, bigram conditional entropy, and RFM
-# segmentation.
+# Church-Gale term adaptation and bigram conditional entropy.
 
 
 def q_term_adaptation(spark, sf_dir):
@@ -8351,40 +6202,9 @@ FROM hxy JOIN hx ON hxy.g = hx.g JOIN tot ON hxy.g = tot.g
 """
 
 
-def q_rfm_segments(spark, sf_dir):
-    """RFM quintile segmentation census over users
-    (operators/sessions.py:rfm_segments) — the engagement-triage cube;
-    ntile ranks over the bounded user-grain table with explicit
-    tie-breaks, census bounded at 125 cells."""
-    from ..operators.sessions import rfm_segments
-
-    return rfm_segments(_t(spark, sf_dir, "events"))
-
-
-SQL_RFM_SEGMENTS = """
-WITH per_user AS (
-  SELECT user_id AS u, MAX(epoch_us(ts)) AS last_us, COUNT(*) AS freq,
-         SUM(CAST(value AS DECIMAL(20,6))) AS money
-  FROM events GROUP BY 1
-),
-scored AS (
-  SELECT u, money,
-         ntile(5) OVER (ORDER BY last_us, u) AS r,
-         ntile(5) OVER (ORDER BY freq, u) AS f,
-         ntile(5) OVER (ORDER BY money, u) AS m
-  FROM per_user
-)
-SELECT r, f, m, COUNT(*) AS n_users,
-       round(CAST(SUM(money) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-         AS mean_monetary
-FROM scored GROUP BY 1, 2, 3
-"""
-
-
 
 # ------------------------------------------------------------ round-5 batch 50
-# Per-node local clustering and the Markov stationary distribution of
-# the event chain.
+# Per-node local clustering.
 
 
 def q_local_clustering(spark, sf_dir):
@@ -8444,221 +6264,8 @@ SELECT node, degree, n_triangles, clustering FROM (
 """
 
 
-def q_event_stationary(spark, sf_dir):
-    """Stationary distribution of the first-order event-type chain
-    (operators/graph.py:markov_stationary, 4 power-iteration rounds at
-    1e6 integer fixed point) next to the EMPIRICAL event mix —
-    divergence flags a non-stationary window the transition matrix
-    alone can't show. Transitions come from per-user lag pairs (the
-    a25 construction)."""
-    from ..operators.graph import markov_stationary
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.unix_micros(F.col("ts").cast("timestamp")), F.col("event_id")
-    )
-    pairs = ev.select(
-        F.lag("event_type").over(w).alias("prev"),
-        F.col("event_type").alias("cur"),
-    ).filter(F.col("prev").isNotNull())
-    stat = markov_stationary(pairs)
-    emp = ev.groupBy(F.col("event_type").alias("state")).agg(
-        F.count("*").alias("_c")
-    )
-    tot = emp.agg(F.sum("_c").alias("_t"))
-    emp_share = emp.crossJoin(F.broadcast(tot)).select(
-        "state",
-        F.round(
-            F.col("_c").cast("double") / F.col("_t").cast("double"), 6
-        ).alias("empirical_share"),
-    )
-    return stat.join(emp_share, "state").select(
-        "state", "stationary_share", "empirical_share",
-        F.round(
-            F.col("stationary_share") - F.col("empirical_share"), 6
-        ).alias("delta"),
-    )
-
-
-def _sql_event_stationary(n_iter: int = 4) -> str:
-    scale = 10 ** 6
-    parts = [f"""
-WITH ev AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events
-),
-pairs AS (
-  SELECT lag(event_type) OVER (PARTITION BY user_id ORDER BY tus, event_id)
-           AS prev,
-         event_type AS cur
-  FROM ev
-),
-c AS (
-  SELECT prev AS i, cur AS j, COUNT(*) AS cij
-  FROM pairs WHERE prev IS NOT NULL GROUP BY 1, 2
-),
-rowsum AS (SELECT i, SUM(cij) AS ci FROM c GROUP BY 1),
-trans AS (SELECT c.i, c.j, c.cij, r.ci FROM c JOIN rowsum r ON c.i = r.i),
-states AS (
-  SELECT DISTINCT s FROM (
-    SELECT prev AS s FROM pairs WHERE prev IS NOT NULL
-    UNION SELECT cur FROM pairs WHERE prev IS NOT NULL
-  )
-),
-ns AS (SELECT COUNT(*) AS n FROM states),
-p0 AS (
-  SELECT s, ({scale} * 2 + n) // (n * 2) AS p FROM states CROSS JOIN ns
-)"""]
-    prev = "p0"
-    for k in range(1, n_iter + 1):
-        parts.append(f""",
-p{k} AS (
-  SELECT s, SUM(fl) AS p FROM (
-    SELECT t.j AS s, (2 * r.p * t.cij + t.ci) // (2 * t.ci) AS fl
-    FROM trans t JOIN {prev} r ON t.i = r.s
-    UNION ALL
-    SELECT r.s, r.p FROM {prev} r
-    WHERE NOT EXISTS (SELECT 1 FROM rowsum w WHERE w.i = r.s)
-  ) GROUP BY s
-)""")
-        prev = f"p{k}"
-    parts.append(f""",
-emp AS (
-  SELECT event_type AS state, COUNT(*) AS cc FROM events GROUP BY 1
-),
-tot AS (SELECT SUM(cc) AS t FROM emp)
-SELECT st.s AS state,
-       round(CAST(st.p AS DOUBLE) / {float(scale)}, 6) AS stationary_share,
-       round(CAST(e.cc AS DOUBLE) / CAST(t.t AS DOUBLE), 6) AS empirical_share,
-       round(round(CAST(st.p AS DOUBLE) / {float(scale)}, 6)
-             - round(CAST(e.cc AS DOUBLE) / CAST(t.t AS DOUBLE), 6), 6) AS delta
-FROM {prev} st JOIN emp e ON st.s = e.state CROSS JOIN tot t
-""")
-    return "".join(parts)
-
-
-SQL_EVENT_STATIONARY = _sql_event_stationary(4)
-
-
-
-# ------------------------------------------------------------ round-5 batch 51
-# Session entry/exit flow and inter-arrival quantiles.
-
-
-def q_session_entry_exit(spark, sf_dir):
-    """Session ENTRY -> EXIT type flow census: per 30-min user session,
-    the first and last event types, folded to the bounded (entry, exit)
-    matrix — the landing/abandonment flow report behind a25's
-    step-to-step transitions. One user-key shuffle; per-session
-    endpoints via min/max over the zero-padded (tus|event_id) key (the
-    a24 argmin/argmax discipline — no window beyond the session id)."""
-    ev = _t(spark, sf_dir, "events")
-    tus = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = Window.partitionBy("user_id").orderBy("tus", "event_id")
-    e = ev.select("user_id", "event_id", "event_type", tus.alias("tus"))
-    prev = F.lag("tus").over(w)
-    flagged = e.withColumn(
-        "_new",
-        F.when(prev.isNull() | ((F.col("tus") - prev) > 1800 * 1_000_000), 1)
-        .otherwise(0),
-    )
-    sid = flagged.withColumn(
-        "_sid", F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    key = F.concat(
-        F.lpad(F.col("tus").cast("string"), 20, "0"), F.lit("|"),
-        F.lpad(F.col("event_id").cast("string"), 20, "0"),
-    )
-    per_sess = sid.groupBy("user_id", "_sid").agg(
-        F.min_by("event_type", key).alias("entry_type"),
-        F.max_by("event_type", key).alias("exit_type"),
-    )
-    return per_sess.groupBy("entry_type", "exit_type").agg(
-        F.count("*").alias("n_sessions")
-    )
-
-
-SQL_SESSION_ENTRY_EXIT = """
-WITH e AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events
-),
-flagged AS (
-  SELECT *, CASE WHEN lag(tus) OVER w IS NULL
-                  OR tus - lag(tus) OVER w > 1800000000
-                 THEN 1 ELSE 0 END AS new_s
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)
-),
-sid AS (
-  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY tus, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS s
-  FROM flagged
-),
-keyed AS (
-  SELECT user_id, s, event_type,
-         lpad(CAST(tus AS VARCHAR), 20, '0') || '|'
-           || lpad(CAST(event_id AS VARCHAR), 20, '0') AS k
-  FROM sid
-),
-per_sess AS (
-  SELECT arg_min(event_type, k) AS entry_type,
-         arg_max(event_type, k) AS exit_type
-  FROM keyed GROUP BY user_id, s
-)
-SELECT entry_type, exit_type, COUNT(*) AS n_sessions
-FROM per_sess GROUP BY 1, 2
-"""
-
-
-def q_interarrival_quantiles(spark, sf_dir):
-    """Per-type inter-event arrival-gap quantiles (p50/p90/p99 seconds)
-    over the exact value-compressed histogram (the a6 machinery —
-    bounded aggregation state where built-in percentile buffers every
-    value) — the feed-cadence profile next to spike/CUSUM health
-    signals. Gaps are integral-second lags within each type's time
-    order."""
-    from ..operators.textstats import exact_quantiles_histogram
-
-    ev = _t(spark, sf_dir, "events")
-    tus = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = Window.partitionBy("event_type").orderBy("tus", "event_id")
-    gaps = (
-        ev.select("event_type", "event_id", tus.alias("tus"))
-        .withColumn("_gap", F.col("tus") - F.lag("tus").over(w))
-        .filter(F.col("_gap").isNotNull())
-        .select(
-            F.col("event_type").alias("g"),
-            F.expr("_gap DIV 1000000").alias("v"),
-        )
-    )
-    out = exact_quantiles_histogram(gaps, (0.5, 0.9, 0.99))
-    return out.select(
-        F.col("g").alias("event_type"),
-        F.col("p50").alias("p50_sec"),
-        F.col("p90").alias("p90_sec"),
-        F.col("p99").alias("p99_sec"),
-    )
-
-
-SQL_INTERARRIVAL_QUANTILES = """
-WITH e AS (
-  SELECT event_type, event_id, epoch_us(ts) AS tus FROM events
-),
-gaps AS (
-  SELECT event_type AS g,
-         (tus - lag(tus) OVER (PARTITION BY event_type
-                               ORDER BY tus, event_id)) // 1000000 AS v
-  FROM e
-)
-SELECT g AS event_type,
-       round(quantile_cont(v, 0.5), 6) AS p50_sec,
-       round(quantile_cont(v, 0.9), 6) AS p90_sec,
-       round(quantile_cont(v, 0.99), 6) AS p99_sec
-FROM gaps WHERE v IS NOT NULL GROUP BY 1
-"""
-
-
 # ------------------------------------------------------------ round-5 batch 52
-# Per-source exact-dup rate and the nearest-centroid confusion matrix.
+# Per-source exact-dup rate.
 
 
 def q_dup_rate_by_source(spark, sf_dir):
@@ -8692,45 +6299,6 @@ SELECT source, SUM(c) AS n_docs, COUNT(*) AS n_unique_texts,
        round(CAST(SUM(c) - COUNT(*) AS DOUBLE) / CAST(SUM(c) AS DOUBLE), 6)
          AS dup_rate
 FROM per GROUP BY 1
-"""
-
-
-def q_centroid_confusion(spark, sf_dir):
-    """Nearest-centroid label confusion matrix over the embeddings
-    table (operators/similarity.py:nearest_centroid_confusion) — the
-    cheapest separability read on the embedding space; rounded-decimal
-    centroid means and dot products, label-ASC argmax ties."""
-    from ..operators.similarity import nearest_centroid_confusion
-
-    return nearest_centroid_confusion(_t(spark, sf_dir, "embeddings"))
-
-
-SQL_CENTROID_CONFUSION = """
-WITH ex AS (
-  SELECT vec_id, label AS t,
-         unnest(range(0, len(embedding))) AS dim,
-         unnest(CAST(embedding AS DOUBLE[])) AS x
-  FROM embeddings
-),
-cent AS (
-  SELECT t AS cl, dim,
-         round(CAST(SUM(CAST(round(x, 9) AS DECIMAL(30,9))) AS DOUBLE)
-               / CAST(COUNT(*) AS DOUBLE), 6) AS c
-  FROM ex GROUP BY 1, 2
-),
-scored AS (
-  SELECT e.vec_id, e.t, ct.cl,
-         SUM(CAST(round(e.x * ct.c, 9) AS DECIMAL(30,9))) AS dot
-  FROM ex e JOIN cent ct ON e.dim = ct.dim
-  GROUP BY 1, 2, 3
-),
-best AS (
-  SELECT vec_id, t, cl,
-         row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cl) AS rk
-  FROM scored
-)
-SELECT t AS true_label, cl AS pred_label, COUNT(*) AS n
-FROM best WHERE rk = 1 GROUP BY 1, 2
 """
 
 
@@ -8888,8 +6456,7 @@ GROUP BY 1, 2, 3
 
 
 # ------------------------------------------------------------ round-5 batch 54
-# Recency-decayed trending terms, naive-seasonal forecast error (MASE),
-# and the vocabulary growth curve.
+# Recency-decayed trending terms and the vocabulary growth curve.
 
 
 def q_trending_terms(spark, sf_dir):
@@ -8946,75 +6513,6 @@ SELECT term, raw_cnt, decayed_score FROM (
   SELECT *, row_number() OVER (ORDER BY decayed_score DESC, term) AS rk
   FROM scored
 ) WHERE rk <= 10
-"""
-
-
-def q_mase_forecast(spark, sf_dir):
-    """Per-type MASE of the seasonal-naive lag-7 forecast on daily
-    volumes: MAE(lag-7 forecast) / MAE(lag-1 naive) — the standard
-    scale-free forecastability score (MASE < 1: weekly seasonality
-    beats the random walk — the series is schedulable). Absolute
-    errors are exact integers summed as DECIMAL; one terminal
-    division; both MAEs share the day table."""
-    ev = _t(spark, sf_dir, "events")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000").cast("long")
-    daily = ev.groupBy(F.col("event_type").alias("grp"), day.alias("day")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.partitionBy("grp").orderBy("day")
-    staged = daily.select(
-        "grp", "day", "c",
-        F.lag("c", 7).over(w).alias("_l7"),
-        F.lag("c", 1).over(w).alias("_l1"),
-    )
-    agg = staged.groupBy("grp").agg(
-        F.sum(
-            F.when(F.col("_l7").isNotNull(),
-                   F.abs(F.col("c") - F.col("_l7")).cast("decimal(38,0)"))
-        ).alias("_e7"),
-        F.sum(F.when(F.col("_l7").isNotNull(), 1).otherwise(0)).alias("_n7"),
-        F.sum(
-            F.when(F.col("_l1").isNotNull(),
-                   F.abs(F.col("c") - F.col("_l1")).cast("decimal(38,0)"))
-        ).alias("_e1"),
-        F.sum(F.when(F.col("_l1").isNotNull(), 1).otherwise(0)).alias("_n1"),
-    )
-    mase = (
-        (F.col("_e7").cast("double") / F.col("_n7").cast("double"))
-        / (F.col("_e1").cast("double") / F.col("_n1").cast("double"))
-    )
-    return agg.filter((F.col("_n7") > 0) & (F.col("_e1") > 0)).select(
-        F.col("grp").alias("event_type"),
-        F.col("_n7").alias("n_forecast_days"),
-        F.round(mase, 6).alias("mase"),
-    )
-
-
-SQL_MASE_FORECAST = """
-WITH daily AS (
-  SELECT event_type AS grp, epoch_us(ts) // 86400000000 AS day, COUNT(*) AS c
-  FROM events GROUP BY 1, 2
-),
-staged AS (
-  SELECT grp, day, c,
-         lag(c, 7) OVER (PARTITION BY grp ORDER BY day) AS l7,
-         lag(c, 1) OVER (PARTITION BY grp ORDER BY day) AS l1
-  FROM daily
-),
-agg AS (
-  SELECT grp,
-         SUM(CASE WHEN l7 IS NOT NULL
-                  THEN CAST(abs(c - l7) AS DECIMAL(38,0)) END) AS e7,
-         SUM(CASE WHEN l7 IS NOT NULL THEN 1 ELSE 0 END) AS n7,
-         SUM(CASE WHEN l1 IS NOT NULL
-                  THEN CAST(abs(c - l1) AS DECIMAL(38,0)) END) AS e1,
-         SUM(CASE WHEN l1 IS NOT NULL THEN 1 ELSE 0 END) AS n1
-  FROM staged GROUP BY 1
-)
-SELECT grp AS event_type, n7 AS n_forecast_days,
-       round((CAST(e7 AS DOUBLE) / CAST(n7 AS DOUBLE))
-             / (CAST(e1 AS DOUBLE) / CAST(n1 AS DOUBLE)), 6) AS mase
-FROM agg WHERE n7 > 0 AND e1 > 0
 """
 
 
@@ -9234,81 +6732,6 @@ chg AS (
 per_page AS (SELECT page, COUNT(*) AS n_versions FROM chg GROUP BY 1)
 SELECT n_versions, COUNT(*) AS n_pages FROM per_page GROUP BY 1
 """
-
-
-
-# ------------------------------------------------------------ round-5 batch 56
-# Per-quantile drift table.
-
-
-def q_qq_shift(spark, sf_dir):
-    """Per-quantile drift table: p10..p90 of events.value in the first
-    vs second half of the month, with deltas — the readable
-    complement to KS (max deviation) and EMD (mass distance): WHICH
-    quantiles moved, and by how much. Exact type-7 quantiles over the
-    value-compressed histogram on both sides (values pre-rounded to
-    2 dp so the histogram key set stays bounded)."""
-    from ..operators.textstats import exact_quantiles_histogram
-
-    ev = _t(spark, sf_dir, "events")
-    first = F.unix_micros(F.col("ts").cast("timestamp")) < 1705363200000000
-    # centi-units via an explicit round BEFORE the integer cast: a bare
-    # double->long cast TRUNCATES in Spark but ROUNDS in DuckDB
-    gv = ev.select(
-        F.when(first, F.lit("h1")).otherwise(F.lit("h2")).alias("g"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("v"),
-    )
-    qs = (0.1, 0.25, 0.5, 0.75, 0.9)
-    out = exact_quantiles_histogram(gv, qs)
-    h1 = out.filter(F.col("g") == "h1").drop("g")
-    h2 = out.filter(F.col("g") == "h2").drop("g")
-    cols = [f"p{int(p * 100)}" for p in qs]
-    rows = []
-    for c in cols:
-        rows.append(
-            h1.select(
-                F.lit(c).alias("quantile"),
-                (F.col(c) / 100.0).alias("h1_value"),
-            ).crossJoin(
-                h2.select((F.col(c) / 100.0).alias("h2_value"))
-            )
-        )
-    res = rows[0]
-    for r in rows[1:]:
-        res = res.unionByName(r)
-    return res.select(
-        "quantile",
-        F.round("h1_value", 6).alias("h1_value"),
-        F.round("h2_value", 6).alias("h2_value"),
-        F.round(F.col("h2_value") - F.col("h1_value"), 6).alias("delta"),
-    )
-
-
-def _sql_qq_shift() -> str:
-    qs = [(10, 0.1), (25, 0.25), (50, 0.5), (75, 0.75), (90, 0.9)]
-    parts = []
-    for tag, p in qs:
-        parts.append(f"""
-SELECT 'p{tag}' AS quantile,
-       round(h1 / 100.0, 6) AS h1_value,
-       round(h2 / 100.0, 6) AS h2_value,
-       round(h2 / 100.0 - h1 / 100.0, 6) AS delta
-FROM (
-  SELECT (SELECT quantile_cont(v, {p}) FROM vals WHERE g = 'h1') AS h1,
-         (SELECT quantile_cont(v, {p}) FROM vals WHERE g = 'h2') AS h2
-)""")
-    body = "\nUNION ALL\n".join(parts)
-    return f"""
-WITH vals AS (
-  SELECT CASE WHEN epoch_us(ts) < 1705363200000000 THEN 'h1' ELSE 'h2' END AS g,
-         CAST(round(value * 100) AS BIGINT) AS v
-  FROM events
-)
-{body}
-"""
-
-
-SQL_QQ_SHIFT = _sql_qq_shift()
 
 
 
@@ -9943,127 +7366,6 @@ FROM documents GROUP BY source
 """
 
 
-def q_rrf_hybrid_search(spark, sf_dir):
-    """Hybrid retrieval by reciprocal-rank fusion
-    (operators/search.py:rrf_fuse): the BM25 top-20 for a 3-term query
-    fused with the cosine top-10 around vec 0 (vec_id ≡ doc_id), score
-    = Σ 1/(60+rank) — the calibration-free combiner hybrid search
-    stacks default to. Both input rankings are bit-deterministic
-    (rounded scores, id tie-breaks), the fusion terms are one fixed
-    IEEE division rounded 9 dp DECIMAL-summed, and everything past the
-    two retrievals runs on ≤30 rows."""
-    from ..operators.search import bm25_topk, rrf_fuse
-    from ..operators.similarity import brute_force_topk
-
-    d = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
-    text = bm25_topk(d, ["fast", "scan", "table"], k=20)
-    wt = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    tr = text.select("doc_id", F.row_number().over(wt).alias("rank"))
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-    query = [float(x) for x in row[0][0]] if row else [0.0]
-    knn = brute_force_topk(emb, query, k=10).select(
-        F.col("vec_id").alias("doc_id"), F.round(F.col("cosine"), 6).alias("c")
-    )
-    wv = Window.orderBy(F.desc("c"), F.asc("doc_id"))
-    vr = knn.select("doc_id", F.row_number().over(wv).alias("rank"))
-    return rrf_fuse([tr, vr], top_k=20)
-
-
-def _sql_rrf_hybrid() -> str:
-    bm25 = _sql_bm25_topk()
-    return f"""
-WITH bm AS ({bm25}),
-tr AS (SELECT doc_id,
-              row_number() OVER (ORDER BY score DESC, doc_id) AS rank
-       FROM bm),
-q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-scored AS (
-  SELECT e.vec_id AS doc_id,
-         round(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(q.qv AS DOUBLE[]), CAST(q.qv AS DOUBLE[])))), 6) AS c
-  FROM embeddings e, q
-),
-kn AS (SELECT doc_id, c FROM scored ORDER BY c DESC, doc_id LIMIT 10),
-vr AS (SELECT doc_id,
-              row_number() OVER (ORDER BY c DESC, doc_id) AS rank
-       FROM kn),
-u AS (SELECT doc_id, rank FROM tr UNION ALL SELECT doc_id, rank FROM vr)
-SELECT doc_id, COUNT(*) AS n_lists,
-       round(CAST(SUM(CAST(round(1.0 / (60 + rank), 9) AS DECIMAL(28,9)))
-                  AS DOUBLE), 9) AS rrf_score
-FROM u GROUP BY doc_id
-ORDER BY rrf_score DESC, doc_id LIMIT 20
-"""
-
-
-def q_pq_topk(spark, sf_dir):
-    """Product-quantization ADC top-10 with exact rerank evidence
-    (operators/similarity.py:pq_topk): 4 subspaces × 8 codewords seeded
-    by the smallest-md5(id) rule (the whole index spec reproducible
-    from the data in any engine), query-side lookup table of rounded
-    subspace inner products, compressed-domain scoring that reads ONLY
-    the 4-byte codes — the 64x footprint cut that makes billion-vector
-    rerank RAM-resident — then exact cosine on the ≤10 winners."""
-    from ..operators.similarity import pq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-    query = [float(x) for x in row[0][0]] if row else [0.0] * 64
-    return pq_topk(emb, query, k=10)
-
-
-def _sql_pq_topk(n_codes: int = 8, m_sub: int = 4, dim: int = 64) -> str:
-    d = dim // m_sub
-    return f"""
-WITH seeds AS (
-  SELECT CAST(embedding AS DOUBLE[]) AS v,
-         row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS j
-  FROM embeddings ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {n_codes}
-),
-ms AS (SELECT unnest(range({m_sub})) AS m),
-cb AS (
-  SELECT m, j, v[m * {d} + 1 : m * {d} + {d}] AS sub FROM seeds CROSS JOIN ms
-),
-q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-lut AS (
-  SELECT m, j,
-         round(list_dot_product(qv[m * {d} + 1 : m * {d} + {d}], sub), 9) AS ip
-  FROM cb CROSS JOIN q
-),
-subdots AS (
-  SELECT e.vec_id, cb.m, cb.j,
-         list_dot_product(
-           CAST(e.embedding AS DOUBLE[])[cb.m * {d} + 1 : cb.m * {d} + {d}],
-           cb.sub) AS dd
-  FROM embeddings e CROSS JOIN cb
-),
-codes AS (
-  SELECT vec_id, m, j FROM (
-    SELECT vec_id, m, j,
-           row_number() OVER (PARTITION BY vec_id, m
-                              ORDER BY dd DESC, j ASC) AS rn
-    FROM subdots) WHERE rn = 1
-),
-scored AS (
-  SELECT c.vec_id,
-         round(CAST(SUM(CAST(l.ip AS DECIMAL(28,9))) AS DOUBLE), 9)
-           AS pq_score
-  FROM codes c JOIN lut l ON c.m = l.m AND c.j = l.j
-  GROUP BY c.vec_id
-),
-top AS (SELECT vec_id, pq_score FROM scored
-        ORDER BY pq_score DESC, vec_id LIMIT 10)
-SELECT t.vec_id, t.pq_score,
-       round(list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-             / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                      CAST(e.embedding AS DOUBLE[])))
-                * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cosine_r
-FROM top t JOIN embeddings e ON t.vec_id = e.vec_id CROSS JOIN q
-"""
-
-
 def q_quantile_normalize(spark, sf_dir):
     """Cross-source quantile normalization of doc length
     (operators/curation.py:quantile_normalize) — batch-effect
@@ -10103,72 +7405,6 @@ hist AS (
 )
 SELECT doc_id, g AS source, v AS n_chars, hv AS norm_n_chars
 FROM tgt JOIN hist ON idx >= lo AND idx <= hi
-"""
-
-
-def q_dow_seasonal_anomaly(spark, sf_dir):
-    """Day-of-week-adjusted robust anomaly detection over the events
-    stream: per-day counts, the per-dow exact median as the seasonal
-    baseline, and a 3-MAD flag on the residuals — the robust STL-lite
-    that catches a quiet Tuesday a raw rolling z-score (spike_zscore)
-    would call normal and a uniformity test (dow_chi2) can't localize.
-    Medians ride the value-compressed exact-histogram helper (bounded
-    state); residuals are rounded to 6 dp BEFORE the MAD pass so both
-    engines take the median of identical values; dow is integral
-    epoch-day mod 7 (no calendar semantics)."""
-    from ..operators.textstats import exact_quantiles_histogram
-
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.select(F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-                  .alias("day"))
-        .groupBy("day").agg(F.count("*").alias("n_events"))
-        .withColumn("dow", F.pmod(F.col("day"), F.lit(7)))
-    )
-    med = exact_quantiles_histogram(
-        daily.select(F.col("dow").alias("g"),
-                     F.col("n_events").cast("double").alias("v")),
-        (0.5,),
-    ).select(F.col("g").alias("dow"), F.col("p50").alias("dow_median"))
-    resid = daily.join(med, "dow").withColumn(
-        "resid",
-        F.round(F.col("n_events").cast("double") - F.col("dow_median"), 6),
-    )
-    mad = exact_quantiles_histogram(
-        resid.select(F.lit(0).alias("g"), F.abs(F.col("resid")).alias("v")),
-        (0.5,),
-    ).select(F.col("p50").alias("mad"))
-    return (
-        resid.crossJoin(F.broadcast(mad))
-        .select(
-            "day", "dow", "n_events", "dow_median", "resid",
-            (F.abs(F.col("resid")) > F.lit(3.0) * F.col("mad"))
-            .alias("is_anomaly"),
-        )
-    )
-
-
-SQL_DOW_SEASONAL_ANOMALY = """
-WITH daily AS (
-  SELECT CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-         COUNT(*) AS n_events
-  FROM events GROUP BY 1
-),
-d2 AS (SELECT day, n_events, day % 7 AS dow FROM daily),
-med AS (
-  SELECT dow, round(quantile_cont(CAST(n_events AS DOUBLE), 0.5), 6)
-           AS dow_median
-  FROM d2 GROUP BY dow
-),
-resid AS (
-  SELECT d2.day, d2.dow, d2.n_events, med.dow_median,
-         round(CAST(d2.n_events AS DOUBLE) - med.dow_median, 6) AS resid
-  FROM d2 JOIN med USING (dow)
-),
-mad AS (SELECT round(quantile_cont(abs(resid), 0.5), 6) AS mad FROM resid)
-SELECT day, dow, n_events, dow_median, resid,
-       abs(resid) > 3.0 * mad AS is_anomaly
-FROM resid CROSS JOIN mad
 """
 
 
@@ -10434,61 +7670,6 @@ FROM test CROSS JOIN bounds
 """
 
 
-def q_energy_drift(spark, sf_dir):
-    """Energy-distance drift between the even- and odd-id embedding
-    halves (operators/similarity.py:energy_distance) — the multivariate
-    two-sample statistic that catches correlated drift per-dimension
-    stats miss. Deterministic md5-smallest 100-row subsamples per side
-    (subsampling IS the scale strategy for an all-pairs statistic);
-    distances rounded 6 dp with DECIMAL means."""
-    from ..operators.similarity import energy_distance
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return energy_distance(emb.filter(F.col("vec_id") % 2 == 0),
-                           emb.filter(F.col("vec_id") % 2 == 1))
-
-
-SQL_ENERGY_DRIFT = """
-WITH sa AS (
-  SELECT vec_id AS ia, CAST(embedding AS DOUBLE[]) AS va
-  FROM embeddings WHERE vec_id % 2 = 0
-  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 100
-),
-sb AS (
-  SELECT vec_id AS ib, CAST(embedding AS DOUBLE[]) AS vb
-  FROM embeddings WHERE vec_id % 2 = 1
-  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 100
-),
-bt AS (
-  SELECT round(CAST(SUM(CAST(round(sqrt(list_dot_product(d, d)), 6)
-                            AS DECIMAL(28,6))) / COUNT(*) AS DOUBLE), 6)
-           AS mean_between
-  FROM (SELECT list_transform(va, (x, i) -> x - vb[i]) AS d
-        FROM sa CROSS JOIN sb)
-),
-wa AS (
-  SELECT round(CAST(SUM(CAST(round(sqrt(list_dot_product(d, d)), 6)
-                            AS DECIMAL(28,6))) / COUNT(*) AS DOUBLE), 6)
-           AS mean_within_a
-  FROM (SELECT list_transform(l.va, (x, i) -> x - r.va[i]) AS d
-        FROM sa l JOIN sa r ON l.ia < r.ia)
-),
-wb AS (
-  SELECT round(CAST(SUM(CAST(round(sqrt(list_dot_product(d, d)), 6)
-                            AS DECIMAL(28,6))) / COUNT(*) AS DOUBLE), 6)
-           AS mean_within_b
-  FROM (SELECT list_transform(l.vb, (x, i) -> x - r.vb[i]) AS d
-        FROM sb l JOIN sb r ON l.ib < r.ib)
-),
-na AS (SELECT COUNT(*) AS n_a FROM sa),
-nb AS (SELECT COUNT(*) AS n_b FROM sb)
-SELECT n_a, n_b, mean_between, mean_within_a, mean_within_b,
-       round(2.0 * mean_between - mean_within_a - mean_within_b, 6)
-         AS energy_distance
-FROM na, nb, bt, wa, wb
-"""
-
-
 def q_coverage_select(spark, sf_dir):
     """Greedy maximum-coverage selection of 3 documents
     (operators/curation.py:greedy_coverage_select) — the submodular
@@ -10536,302 +7717,6 @@ UNION ALL
 SELECT 2, s2.doc_id, s2.gain, s1.gain + s2.gain FROM s1, s2
 UNION ALL
 SELECT 3, s3.doc_id, s3.gain, s1.gain + s2.gain + s3.gain FROM s1, s2, s3
-"""
-
-
-def q_mmr_rerank(spark, sf_dir):
-    """MMR diversity rerank of the cosine top-10 around vec 0
-    (operators/similarity.py:mmr_rerank): greedy λ=0.7 pick of 5,
-    penalizing similarity to already-selected results — the
-    de-redundancy pass that keeps a results page from being five
-    near-copies of the best hit. Retrieval is the distributed part;
-    the sequential greedy runs on the collected ≤10-row pool with all
-    sims pre-rounded to 6 dp, so the twin's unrolled 5-step CTEs
-    compare identical values."""
-    from ..operators.similarity import mmr_rerank
-
-    emb = _t(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-    query = [float(x) for x in row[0][0]] if row else [0.0] * 64
-    return mmr_rerank(emb, query, k=5, pool=10).select(
-        "step", F.col("vec_id").alias("doc_id"), "qsim", "mmr_score"
-    )
-
-
-SQL_MMR_RERANK = """
-WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-           WHERE vec_id = 0),
-scored AS (
-  SELECT e.vec_id AS doc_id, CAST(e.embedding AS DOUBLE[]) AS v,
-         list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-         / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                  CAST(e.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(q.qv, q.qv))) AS qsr
-  FROM embeddings e, q
-),
--- pool selection orders by the RAW cosine (matching brute_force_topk);
--- the greedy compares only the rounded values
-cand AS (SELECT doc_id, v, round(qsr, 6) AS qs FROM scored
-         ORDER BY qsr DESC, doc_id LIMIT 10),
-sims AS (
-  SELECT l.doc_id AS a, r.doc_id AS b,
-         round(list_dot_product(l.v, r.v)
-               / (sqrt(list_dot_product(l.v, l.v))
-                  * sqrt(list_dot_product(r.v, r.v))), 6) AS sim
-  FROM cand l JOIN cand r ON l.doc_id <> r.doc_id
-),
-sel1 AS (SELECT doc_id, qs, round(0.7 * qs, 6) AS sc
-         FROM cand ORDER BY round(0.7 * qs, 6) DESC, doc_id LIMIT 1),
-m2 AS (
-  SELECT c.doc_id, c.qs,
-         round(0.7 * c.qs - 0.3 * (SELECT max(s.sim) FROM sims s
-               WHERE s.a = c.doc_id AND s.b IN (SELECT doc_id FROM sel1)), 6) AS sc
-  FROM cand c WHERE c.doc_id NOT IN (SELECT doc_id FROM sel1)
-),
-sel2 AS (SELECT doc_id, qs, sc FROM m2
-           ORDER BY sc DESC, doc_id LIMIT 1),
-m3 AS (
-  SELECT c.doc_id, c.qs,
-         round(0.7 * c.qs - 0.3 * (SELECT max(s.sim) FROM sims s
-               WHERE s.a = c.doc_id AND s.b IN (SELECT doc_id FROM sel1 UNION ALL SELECT doc_id FROM sel2)), 6) AS sc
-  FROM cand c WHERE c.doc_id NOT IN (SELECT doc_id FROM sel1 UNION ALL SELECT doc_id FROM sel2)
-),
-sel3 AS (SELECT doc_id, qs, sc FROM m3
-           ORDER BY sc DESC, doc_id LIMIT 1),
-m4 AS (
-  SELECT c.doc_id, c.qs,
-         round(0.7 * c.qs - 0.3 * (SELECT max(s.sim) FROM sims s
-               WHERE s.a = c.doc_id AND s.b IN (SELECT doc_id FROM sel1 UNION ALL SELECT doc_id FROM sel2 UNION ALL SELECT doc_id FROM sel3)), 6) AS sc
-  FROM cand c WHERE c.doc_id NOT IN (SELECT doc_id FROM sel1 UNION ALL SELECT doc_id FROM sel2 UNION ALL SELECT doc_id FROM sel3)
-),
-sel4 AS (SELECT doc_id, qs, sc FROM m4
-           ORDER BY sc DESC, doc_id LIMIT 1),
-m5 AS (
-  SELECT c.doc_id, c.qs,
-         round(0.7 * c.qs - 0.3 * (SELECT max(s.sim) FROM sims s
-               WHERE s.a = c.doc_id AND s.b IN (SELECT doc_id FROM sel1 UNION ALL SELECT doc_id FROM sel2 UNION ALL SELECT doc_id FROM sel3 UNION ALL SELECT doc_id FROM sel4)), 6) AS sc
-  FROM cand c WHERE c.doc_id NOT IN (SELECT doc_id FROM sel1 UNION ALL SELECT doc_id FROM sel2 UNION ALL SELECT doc_id FROM sel3 UNION ALL SELECT doc_id FROM sel4)
-),
-sel5 AS (SELECT doc_id, qs, sc FROM m5
-           ORDER BY sc DESC, doc_id LIMIT 1)
-SELECT 1 AS step, doc_id, qs AS qsim, sc AS mmr_score FROM sel1
-UNION ALL
-SELECT 2 AS step, doc_id, qs AS qsim, sc AS mmr_score FROM sel2
-UNION ALL
-SELECT 3 AS step, doc_id, qs AS qsim, sc AS mmr_score FROM sel3
-UNION ALL
-SELECT 4 AS step, doc_id, qs AS qsim, sc AS mmr_score FROM sel4
-UNION ALL
-SELECT 5 AS step, doc_id, qs AS qsim, sc AS mmr_score FROM sel5
-"""
-
-
-def q_stream_stream_join(spark, sf_dir):
-    """Streaming STREAM-STREAM inner join — the last streaming shape in
-    the family (windowed agg, stateful dedup, stateful counters):
-    clicks join purchases by user within [click_ts, click_ts + 1h],
-    both sides watermarked at a REAL 2-hour delay so the join state is
-    bounded, over 4 genuine micro-batches — proven ≡ the batch
-    time-range join bit-for-bit.
-
-    Staging detail that MAKES stream ≡ batch at a bounded watermark:
-    the input is split into four disjoint time slabs written as
-    explicitly mtime-ordered single files (FileStreamSource consumes
-    oldest-modification-first), so BOTH file sources advance through
-    event time in lockstep and nothing ever arrives behind the
-    watermark. The first cut staged via repartitionByRange in one
-    commit — the two sources then consumed the part files in different
-    orders, one raced the watermark past the other's pending slabs,
-    and 7 of 33 matches were late-dropped; delivery ORDER, not slab
-    shape, is what the watermark contract is about. Append-mode memory
-    sink (complete is not defined for stream-stream joins); event-time
-    columns cast NTZ→LTZ (watermarks need an instant; session tz is
-    pinned UTC) and only ids + the integral µs gap are output, so the
-    interpretation cancels cross-engine."""
-    import glob
-    import shutil
-
-    batch = _t(spark, sf_dir, "events")
-    stage = "/tmp/xdan_stream_ssj_" + sf_dir.strip("/").replace("/", "_")
-    spec = {"sf_dir": sf_dir, "rows": batch.count(), "n_files": 4,
-            "layout": "mtime-ordered-slabs-v2"}
-    marker = os.path.join(stage, "_SPEC.json")
-
-    def _build():
-        shutil.rmtree(os.path.join(stage, "events"), ignore_errors=True)
-        os.makedirs(os.path.join(stage, "events"), exist_ok=True)
-        w = Window.orderBy("ts", "event_id")
-        slabbed = batch.withColumn("_q", F.ntile(4).over(w))
-        for i in range(1, 5):
-            tmp = os.path.join(stage, f"_b{i}")
-            (slabbed.filter(F.col("_q") == i).drop("_q")
-             .coalesce(1).write.mode("overwrite").parquet(tmp))
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, "events", f"{i:05d}.parquet")
-            shutil.move(part, dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-            shutil.rmtree(tmp)
-
-    _stage_with_spec(marker, spec, _build)
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{stage}/events")
-    )
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select("user_id", F.col("event_id").alias("click_id"),
-                F.col("ts").cast("timestamp").alias("cts"))
-        .withWatermark("cts", "2 hours")
-    )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").cast("timestamp").alias("pts"))
-        .withWatermark("pts", "2 hours")
-    )
-    j = clicks.join(
-        purchases,
-        F.expr("user_id = p_user AND pts >= cts "
-               "AND pts <= cts + INTERVAL 1 HOUR"),
-    ).select(
-        "user_id", "click_id", "purchase_id",
-        F.expr("unix_micros(pts) - unix_micros(cts)").alias("gap_us"),
-    )
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    name = f"stream_ssj_{key}_{next(_STREAM_QUERY_SEQ)}"
-    q = (
-        j.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    local = spark.createDataFrame(out.collect(), schema=out.schema)
-    spark.catalog.dropTempView(name)
-    return local
-
-
-SQL_STREAM_STREAM_JOIN = """
-SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-       epoch_us(p.ts) - epoch_us(c.ts) AS gap_us
-FROM events c JOIN events p
-  ON c.user_id = p.user_id
-WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
-"""
-
-
-def q_stream_left_join(spark, sf_dir):
-    """Streaming stream-stream LEFT OUTER join — the semantically hard
-    streaming shape: matched pairs emit immediately, but an unmatched
-    click may only emit its null row once the watermark PASSES the end
-    of its join window (cts + 1h < watermark) — earlier emission could
-    be contradicted by a late purchase. With availableNow the final
-    no-data batch flushes every click whose window closed under the
-    terminal watermark min(max cts, max pts) − 2h; clicks still inside
-    the 2-hour safety margin are correctly WITHHELD, and the oracle
-    twin reproduces exactly that emission rule (strict <, verified
-    empirically) rather than pretending stream equals a plain batch
-    left join. Same mtime-ordered slab staging as
-    q_stream_stream_join (shared stage dir)."""
-    import glob
-    import shutil
-
-    batch = _t(spark, sf_dir, "events")
-    stage = "/tmp/xdan_stream_ssj_" + sf_dir.strip("/").replace("/", "_")
-    spec = {"sf_dir": sf_dir, "rows": batch.count(), "n_files": 4,
-            "layout": "mtime-ordered-slabs-v2"}
-    marker = os.path.join(stage, "_SPEC.json")
-
-    def _build():
-        shutil.rmtree(os.path.join(stage, "events"), ignore_errors=True)
-        os.makedirs(os.path.join(stage, "events"), exist_ok=True)
-        w = Window.orderBy("ts", "event_id")
-        slabbed = batch.withColumn("_q", F.ntile(4).over(w))
-        for i in range(1, 5):
-            tmp = os.path.join(stage, f"_b{i}")
-            (slabbed.filter(F.col("_q") == i).drop("_q")
-             .coalesce(1).write.mode("overwrite").parquet(tmp))
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, "events", f"{i:05d}.parquet")
-            shutil.move(part, dst)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-            shutil.rmtree(tmp)
-
-    _stage_with_spec(marker, spec, _build)
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{stage}/events")
-    )
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select("user_id", F.col("event_id").alias("click_id"),
-                F.col("ts").cast("timestamp").alias("cts"))
-        .withWatermark("cts", "2 hours")
-    )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").cast("timestamp").alias("pts"))
-        .withWatermark("pts", "2 hours")
-    )
-    j = clicks.join(
-        purchases,
-        F.expr("user_id = p_user AND pts >= cts "
-               "AND pts <= cts + INTERVAL 1 HOUR"),
-        "leftOuter",
-    ).select(
-        "user_id", "click_id", "purchase_id",
-        F.expr("unix_micros(pts) - unix_micros(cts)").alias("gap_us"),
-    )
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    name = f"stream_slj_{key}_{next(_STREAM_QUERY_SEQ)}"
-    q = (
-        j.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    local = spark.createDataFrame(out.collect(), schema=out.schema)
-    spark.catalog.dropTempView(name)
-    return local
-
-
-SQL_STREAM_LEFT_JOIN = """
-WITH c AS (
-  SELECT user_id, event_id AS click_id, ts AS cts
-  FROM events WHERE event_type = 'click'
-),
-p AS (
-  SELECT user_id AS p_user, event_id AS purchase_id, ts AS pts
-  FROM events WHERE event_type = 'purchase'
-),
-wm AS (
-  SELECT least((SELECT max(cts) FROM c), (SELECT max(pts) FROM p))
-         - INTERVAL 2 HOUR AS w
-),
-matched AS (
-  SELECT c.user_id, c.click_id, p.purchase_id,
-         epoch_us(p.pts) - epoch_us(c.cts) AS gap_us
-  FROM c JOIN p
-    ON c.user_id = p.p_user
-   AND p.pts >= c.cts AND p.pts <= c.cts + INTERVAL 1 HOUR
-),
-unmatched AS (
-  SELECT c.user_id, c.click_id,
-         CAST(NULL AS BIGINT) AS purchase_id,
-         CAST(NULL AS BIGINT) AS gap_us
-  FROM c CROSS JOIN wm
-  WHERE NOT EXISTS (
-          SELECT 1 FROM p
-          WHERE p.p_user = c.user_id
-            AND p.pts >= c.cts AND p.pts <= c.cts + INTERVAL 1 HOUR)
-    AND c.cts + INTERVAL 1 HOUR < wm.w
-)
-SELECT * FROM matched UNION ALL SELECT * FROM unmatched
 """
 
 
@@ -11478,128 +8363,6 @@ SELECT node, comp FROM comp
 """
 
 
-def q_ivf_recall_curve(spark, sf_dir):
-    """IVF recall@10 as a FUNCTION of n_probe (1, 2, 4, 8 of 8 lists) —
-    the measured accuracy/IO tradeoff curve an ANN rollout tunes
-    before picking its probe budget: each row is (n_probe, n_hits,
-    recall) vs the exact cosine top-10, and n_probe = n_lists must
-    read back recall 1.0 (full probe ≡ exact, which the last row
-    checks by construction). Centroids are the deterministic
-    smallest-md5 seeds shared by every probe level, so the curve
-    isolates the probe knob; at scale each level's scan reads
-    n_probe/n_lists of the partitioned index bytes (partition-pruning
-    proven in tests/test_similarity.py)."""
-    from ..operators.similarity import brute_force_topk, ivf_centroids, ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-    query = [float(x) for x in row[0][0]] if row else [0.0] * 64
-    cents = ivf_centroids(emb, 8)
-    exact = brute_force_topk(emb, query, k=10).select("vec_id")
-    out = None
-    for np_ in (1, 2, 4, 8):
-        approx = ivf_topk(emb, query, k=10, n_lists=8, n_probe=np_,
-                          centroids=cents).select("vec_id")
-        hits = approx.join(exact, "vec_id", "left_semi").agg(
-            F.count("*").alias("n_hits")
-        ).select(F.lit(np_).alias("n_probe"), "n_hits")
-        out = hits if out is None else out.unionByName(hits)
-    return out.select(
-        "n_probe", "n_hits",
-        F.round(F.col("n_hits").cast("double") / F.lit(10.0), 6).alias("recall"),
-    )
-
-
-SQL_IVF_RECALL_CURVE = """
-WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-           WHERE vec_id = 0),
-cents AS (
-  SELECT (ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)))) - 1 AS li,
-         CAST(embedding AS DOUBLE[]) AS cv
-  FROM embeddings ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 8
-),
-scored AS (
-  SELECT e.vec_id, c.li,
-         ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-           list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cv)
-           / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                    CAST(e.embedding AS DOUBLE[])))
-              * sqrt(list_dot_product(c.cv, c.cv))) DESC, c.li) AS rn
-  FROM embeddings e CROSS JOIN cents c
-),
-assign AS (SELECT vec_id, li FROM scored WHERE rn = 1),
-pr AS (
-  SELECT c.li,
-         ROW_NUMBER() OVER (ORDER BY
-           list_dot_product(c.cv, q.qv)
-           / (sqrt(list_dot_product(c.cv, c.cv))
-              * sqrt(list_dot_product(q.qv, q.qv))) DESC, c.li) AS prn
-  FROM cents c, q
-),
-exact AS (
-  SELECT e.vec_id
-  FROM embeddings e, q
-  ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-           / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                    CAST(e.embedding AS DOUBLE[])))
-              * sqrt(list_dot_product(q.qv, q.qv))) DESC, e.vec_id
-  LIMIT 10
-),
-curve AS (
-SELECT 1 AS n_probe,
-       (SELECT COUNT(*) FROM (
-          SELECT e.vec_id
-          FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id, q
-          WHERE a.li IN (SELECT li FROM pr WHERE prn <= 1)
-          ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(q.qv, q.qv))) DESC, e.vec_id
-          LIMIT 10) iv
-        WHERE iv.vec_id IN (SELECT vec_id FROM exact)) AS n_hits
-UNION ALL
-SELECT 2 AS n_probe,
-       (SELECT COUNT(*) FROM (
-          SELECT e.vec_id
-          FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id, q
-          WHERE a.li IN (SELECT li FROM pr WHERE prn <= 2)
-          ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(q.qv, q.qv))) DESC, e.vec_id
-          LIMIT 10) iv
-        WHERE iv.vec_id IN (SELECT vec_id FROM exact)) AS n_hits
-UNION ALL
-SELECT 4 AS n_probe,
-       (SELECT COUNT(*) FROM (
-          SELECT e.vec_id
-          FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id, q
-          WHERE a.li IN (SELECT li FROM pr WHERE prn <= 4)
-          ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(q.qv, q.qv))) DESC, e.vec_id
-          LIMIT 10) iv
-        WHERE iv.vec_id IN (SELECT vec_id FROM exact)) AS n_hits
-UNION ALL
-SELECT 8 AS n_probe,
-       (SELECT COUNT(*) FROM (
-          SELECT e.vec_id
-          FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id, q
-          WHERE a.li IN (SELECT li FROM pr WHERE prn <= 8)
-          ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(q.qv, q.qv))) DESC, e.vec_id
-          LIMIT 10) iv
-        WHERE iv.vec_id IN (SELECT vec_id FROM exact)) AS n_hits
-)
-SELECT n_probe, n_hits,
-       round(CAST(n_hits AS DOUBLE) / 10.0, 6) AS recall
-FROM curve
-"""
-
-
 def q_lsh_candidate_forecast(spark, sf_dir):
     """Candidate-pair VOLUME forecast from the band-bucket histogram —
     the cost model a dedup run consults BEFORE paying the self-join:
@@ -11863,22 +8626,11 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "tf_top_terms": (q_tf_top_terms, SQL_TF_TOP_TERMS),
     "a6_token_quantiles": (q_a6_token_quantiles, SQL_A6_TOKEN_QUANTILES),
     "o2_topn_per_group": (q_o2_topn_per_group, SQL_O2_TOPN),
-    "sessionize_events": (q_sessionize_events, SQL_SESSIONIZE),
-    "a7_event_pivot": (q_a7_event_pivot, SQL_A7_PIVOT),
     "a8_langs_per_source": (q_a8_langs_per_source, SQL_A8_LANGS),
-    "asof_purchase_attach": (q_asof_purchase_attach, SQL_ASOF),
-    "range_join_error_windows": (q_range_join_error_windows, SQL_RANGE_JOIN),
-    "rolling_value_avg": (q_rolling_value_avg, SQL_ROLLING_AVG),
     "a9_rollup_report": (q_a9_rollup_report, SQL_A9_ROLLUP),
     "a10_quality_tiles": (q_a10_quality_tiles, SQL_A10_TILES),
-    "u2_set_ops": (q_u2_set_ops, SQL_U2_SET_OPS),
     "dedup_lev_pairs": (q_dedup_lev_pairs, SQL_DEDUP_LEV),
-    "funnel_conversion": (q_funnel_conversion, SQL_FUNNEL),
     "a11_feature_corr": (q_a11_feature_corr, SQL_A11_CORR),
-    "p11_json_props": (q_p11_json_props, SQL_P11_JSON),
-    "j4_reconcile": (q_j4_reconcile, SQL_J4_RECONCILE),
-    "a12_distinct_exact": (q_a12_distinct_exact, SQL_A12_DISTINCT),
-    "cohort_retention": (q_cohort_retention, SQL_COHORT_RETENTION),
     "boilerplate_shingles": (q_boilerplate_shingles, SQL_BOILERPLATE),
     "a13_trimmed_mean": (q_a13_trimmed_mean, SQL_A13_TRIMMED),
     "a14_source_share": (q_a14_source_share, SQL_A14_SHARE),
@@ -11887,11 +8639,8 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "pmi_bigrams": (q_pmi_bigrams, SQL_PMI),
     "a15_zscore_outliers": (q_a15_zscore_outliers, SQL_A15_ZSCORE),
     "cc_cluster_histogram": (q_cc_cluster_histogram, SQL_CC_HISTOGRAM),
-    "a16_daily_gapfill": (q_a16_daily_gapfill, SQL_A16_GAPFILL),
-    "a17_user_percentile": (q_a17_user_percentile, SQL_A17_PERCENTILE),
     "gopher_stats": (q_gopher_stats, SQL_GOPHER_STATS),
     "a18_median_mad": (q_a18_median_mad, SQL_A18_MAD),
-    "a19_event_lift": (q_a19_event_lift, SQL_A19_LIFT),
     "a20_length_log2_hist": (q_a20_length_log2_hist, SQL_A20_LOG2),
     "decon_benchmark_overlap": (q_decon_benchmark_overlap, SQL_DECON),
     "oov_rate": (q_oov_rate, SQL_OOV),
@@ -11909,15 +8658,10 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
         ),
     ),
     "dedup_canonical": (q_dedup_canonical, SQL_DEDUP_CANONICAL),
-    "burst_users": (q_burst_users, SQL_BURST_USERS),
     "a21_length_band": (q_a21_length_band, SQL_A21_BAND),
     "lang_confusion": (q_lang_confusion, _lang_confusion_sql),
     "pii_prevalence": (q_pii_prevalence, _pii_prevalence_sql),
     "calibration_curve": (q_calibration_curve, _calibration_curve_sql),
-    "props_key_census": (q_props_key_census, SQL_PROPS_KEY_CENSUS),
-    "emb_norm_stats": (q_emb_norm_stats, SQL_EMB_NORM_STATS),
-    "a24_first_last_event": (q_a24_first_last_event, SQL_A24_FIRST_LAST),
-    "a25_event_transitions": (q_a25_event_transitions, SQL_A25_TRANSITIONS),
     "a26_lang_deciles": (q_a26_lang_deciles, SQL_A26_LANG_DECILES),
     "dedup_spans": (q_dedup_spans, SQL_DEDUP_SPANS),
     "a28_vocab_census": (q_a28_vocab_census, SQL_A28_VOCAB_CENSUS),
@@ -11934,19 +8678,13 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "mixture_apply": (q_mixture_apply, SQL_MIXTURE_APPLY),
     "normalize_punct": (q_normalize_punct, _sql_normalize_punct),
     "web_curation_e2e": (q_web_curation_e2e, SQL_WEB_CURATION_E2E),
-    "ivf_append_probe": (q_ivf_append_probe, _sql_ivf_incr),
     "tok_bytes_ratio": (q_tok_bytes_ratio, SQL_TOK_BYTES_RATIO),
     "hapax_rate": (q_hapax_rate, SQL_HAPAX_RATE),
-    "a39_salted_hot_agg": (q_a39_salted_hot_agg, SQL_A39_SALTED_HOT_AGG),
     "zipf_slope": (q_zipf_slope, SQL_ZIPF_SLOPE),
     "hll_vocab": (q_hll_vocab, SQL_HLL_VOCAB),
     "cms_terms": (q_cms_terms, SQL_CMS_TERMS),
-    "bloom_custkeys": (q_bloom_custkeys, SQL_BLOOM_CUSTKEYS),
     "gini_sources": (q_gini_sources, SQL_GINI_SOURCES),
-    "cusum_drift": (q_cusum_drift, SQL_CUSUM_DRIFT),
     "hits_scores": (q_hits_scores, SQL_HITS_SCORES),
-    "skyline_orders": (q_skyline_orders, SQL_SKYLINE_ORDERS),
-    "session_window_native": (q_session_window_native, SQL_SESSION_WINDOW_NATIVE),
     "profile_documents": (q_profile_documents, SQL_PROFILE_DOCUMENTS),
     "stream_hll": (q_stream_hll, SQL_STREAM_HLL),
     "kcore_links": (q_kcore_links, SQL_KCORE_LINKS),
@@ -11954,57 +8692,34 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "scd2_pages": (q_scd2_pages, SQL_SCD2_PAGES),
     "bool_search": (q_bool_search, SQL_BOOL_SEARCH),
     "wrs_sample": (q_wrs_sample, SQL_WRS_SAMPLE),
-    "spike_zscore": (q_spike_zscore, SQL_SPIKE_ZSCORE),
     "hll_by_source": (q_hll_by_source, SQL_HLL_BY_SOURCE),
     "lang_source_mi": (q_lang_source_mi, SQL_LANG_SOURCE_MI),
     "fd_census": (q_fd_census, SQL_FD_CENSUS),
-    "theilsen_trend": (q_theilsen_trend, SQL_THEILSEN_TREND),
-    "event_paths3": (q_event_paths3, SQL_EVENT_PATHS3),
-    "cms_join_est": (q_cms_join_est, SQL_CMS_JOIN_EST),
-    "psi_value_drift": (q_psi_value_drift, SQL_PSI_VALUE_DRIFT),
     "negative_samples": (q_negative_samples, SQL_NEGATIVE_SAMPLES),
     "k_anon_docs": (q_k_anon_docs, SQL_K_ANON_DOCS),
-    "dataset_fingerprint": (q_dataset_fingerprint, SQL_DATASET_FINGERPRINT),
     "prefix_jaccard_pairs": (q_prefix_jaccard_pairs, SQL_PREFIX_JACCARD_PAIRS),
-    "props_key_drift": (q_props_key_drift, SQL_PROPS_KEY_DRIFT),
-    "concurrency_peak": (q_concurrency_peak, SQL_CONCURRENCY_PEAK),
     "source_cosine": (q_source_cosine, SQL_SOURCE_COSINE),
-    "rolling_users_hll": (q_rolling_users_hll, SQL_ROLLING_USERS_HLL),
     "homoglyph_spoof": (q_homoglyph_spoof, SQL_HOMOGLYPH_SPOOF),
-    "dow_chi2": (q_dow_chi2, SQL_DOW_CHI2),
-    "bloom_prefilter_join": (q_bloom_prefilter_join, SQL_BLOOM_PREFILTER_JOIN),
     "neyman_plan": (q_neyman_plan, SQL_NEYMAN_PLAN),
     "contract_checks": (q_contract_checks, SQL_CONTRACT_CHECKS),
     "log_quantile_sketch": (q_log_quantile_sketch, SQL_LOG_QUANTILE_SKETCH),
-    "hll_overlap": (q_hll_overlap, SQL_HLL_OVERLAP),
     "stream_cms": (q_stream_cms, SQL_STREAM_CMS),
-    "km_conversion": (q_km_conversion, SQL_KM_CONVERSION),
     "rbo_source_rankings": (q_rbo_source_rankings, SQL_RBO_SOURCE_RANKINGS),
     "keep_ab_test": (q_keep_ab_test, SQL_KEEP_AB_TEST),
     "vocab_coverage": (q_vocab_coverage, SQL_VOCAB_COVERAGE),
     "cdc_docs": (q_cdc_docs, SQL_CDC_DOCS),
-    "late_census": (q_late_census, SQL_LATE_CENSUS),
-    "funnel3": (q_funnel3, SQL_FUNNEL3),
     "emd_length_drift": (q_emd_length_drift, SQL_EMD_LENGTH_DRIFT),
     "doc_novelty": (q_doc_novelty, SQL_DOC_NOVELTY),
-    "daily_xcorr": (q_daily_xcorr, SQL_DAILY_XCORR),
     "term_adaptation": (q_term_adaptation, SQL_TERM_ADAPTATION),
     "bigram_cond_entropy": (q_bigram_cond_entropy, SQL_BIGRAM_COND_ENTROPY),
-    "rfm_segments": (q_rfm_segments, SQL_RFM_SEGMENTS),
     "local_clustering": (q_local_clustering, SQL_LOCAL_CLUSTERING),
-    "event_stationary": (q_event_stationary, SQL_EVENT_STATIONARY),
-    "session_entry_exit": (q_session_entry_exit, SQL_SESSION_ENTRY_EXIT),
-    "interarrival_quantiles": (q_interarrival_quantiles, SQL_INTERARRIVAL_QUANTILES),
     "dup_rate_by_source": (q_dup_rate_by_source, SQL_DUP_RATE_BY_SOURCE),
-    "centroid_confusion": (q_centroid_confusion, SQL_CENTROID_CONFUSION),
     "hill_tail": (q_hill_tail, SQL_HILL_TAIL),
     "simpson_probe": (q_simpson_probe, SQL_SIMPSON_PROBE),
     "trending_terms": (q_trending_terms, SQL_TRENDING_TERMS),
-    "mase_forecast": (q_mase_forecast, SQL_MASE_FORECAST),
     "vocab_growth": (q_vocab_growth, SQL_VOCAB_GROWTH),
     "mix_rate_decomposition": (q_mix_rate_decomposition, SQL_MIX_RATE_DECOMPOSITION),
     "page_churn_census": (q_page_churn_census, SQL_PAGE_CHURN_CENSUS),
-    "qq_shift": (q_qq_shift, SQL_QQ_SHIFT),
     "keep_discriminative_terms": (q_keep_discriminative_terms, SQL_KEEP_DISCRIMINATIVE_TERMS),
     "theta_vocab_by_source": (q_theta_vocab_by_source, SQL_THETA_VOCAB_BY_SOURCE),
     "theta_vocab_overlap": (q_theta_vocab_overlap, SQL_THETA_VOCAB_OVERLAP),
@@ -12016,18 +8731,11 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "dedup_cc_best": (q_dedup_cc_best, SQL_DEDUP_CC_BEST),
     "bpe_merges": (q_bpe_merges, SQL_BPE_MERGES),
     "stream_dedup": (q_stream_dedup, SQL_STREAM_DEDUP),
-    "rrf_hybrid_search": (q_rrf_hybrid_search, _sql_rrf_hybrid),
-    "pq_topk": (q_pq_topk, _sql_pq_topk),
     "quantile_normalize": (q_quantile_normalize, SQL_QUANTILE_NORMALIZE),
-    "dow_seasonal_anomaly": (q_dow_seasonal_anomaly, SQL_DOW_SEASONAL_ANOMALY),
     "dsir_weights": (q_dsir_weights, SQL_DSIR_WEIGHTS),
     "bigram_lm_ppl": (q_bigram_lm_ppl, SQL_BIGRAM_LM_PPL),
     "conformal_bounds": (q_conformal_bounds, SQL_CONFORMAL_BOUNDS),
-    "energy_drift": (q_energy_drift, SQL_ENERGY_DRIFT),
     "coverage_select": (q_coverage_select, SQL_COVERAGE_SELECT),
-    "mmr_rerank": (q_mmr_rerank, SQL_MMR_RERANK),
-    "stream_stream_join": (q_stream_stream_join, SQL_STREAM_STREAM_JOIN),
-    "stream_left_join": (q_stream_left_join, SQL_STREAM_LEFT_JOIN),
     "lsh_recall_eval": (q_lsh_recall_eval, SQL_LSH_RECALL_EVAL),
     "split_by_cluster": (q_split_by_cluster, SQL_SPLIT_BY_CLUSTER),
     "hashed_tf_knn": (q_hashed_tf_knn, SQL_HASHED_TF_KNN),
@@ -12037,7 +8745,6 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "keep_rate_wilson": (q_keep_rate_wilson, SQL_KEEP_RATE_WILSON),
     "term_burstiness": (q_term_burstiness, SQL_TERM_BURSTINESS),
     "dedup_cc_incr": (q_dedup_cc_incr, SQL_DEDUP_CC_INCR),
-    "ivf_recall_curve": (q_ivf_recall_curve, SQL_IVF_RECALL_CURVE),
     "lsh_candidate_forecast": (q_lsh_candidate_forecast, SQL_LSH_CANDIDATE_FORECAST),
     "dedup_audit_sample": (q_dedup_audit_sample, _sql_dedup_audit_sample),
     "winnow_overlap": (q_winnow_overlap, SQL_WINNOW_OVERLAP),
@@ -12062,19 +8769,13 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "zorder_values": (q_zorder_values, _sql_zorder_values),
     "chunk_plan_strided": (q_chunk_plan_strided, SQL_CHUNK_STRIDED),
     "mixture_temperature": (q_mixture_temperature, SQL_MIXTURE_TEMPERATURE),
-    "fd_violations": (q_fd_violations, SQL_FD_VIOLATIONS),
-    "int8_topk": (q_int8_topk, SQL_INT8_TOPK),
     "dedup_exact_best": (q_dedup_exact_best, SQL_DEDUP_EXACT_BEST),
-    "emb_dim_stats": (q_emb_dim_stats, SQL_EMB_DIM_STATS),
-    "benford_census": (q_benford_census, _sql_benford_census),
     "incremental_curation_e2e": (q_incremental_curation_e2e, _sql_incremental_curation),
     "dup_cross_source": (q_dup_cross_source, _dup_cross_source_sql),
     "s3_stratified_sample": (q_s3_stratified_sample, SQL_S3_STRATIFIED),
     "s3_fixed_n_per_group": (q_s3_fixed_n_per_group, SQL_S3_FIXED_N),
     "p5_uid64": (q_p5_uid64, SQL_P5_UID64),
     "p7_scrub": (q_p7_scrub, _scrub_sql),
-    "knn_bruteforce": (q_knn_bruteforce, SQL_KNN),
-    "embedding_neardup": (q_embedding_neardup, SQL_EMB_NEARDUP),
     "score_core": (q_score_core, _sql_score_core),
     "cot_envelope": (q_cot_envelope, _sql_cot_envelope),
     "cot_enhanced": (q_cot_enhanced, _sql_cot_enhanced),
@@ -12085,9 +8786,6 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "pipeline_score_documents": (q_pipeline_score_documents, None),
     "dedup_minhash_full": (q_dedup_minhash_full, SQL_DEDUP_MINHASH_FULL),
     "dedup_simhash": (q_dedup_simhash, _sql_dedup_simhash),
-    "ann_topk": (q_ann_topk, _sql_ann_topk),
-    "ivf_topk": (q_ivf_topk, _sql_ivf_topk),
-    "ivf_topk_indexed": (q_ivf_topk_indexed, _sql_ivf_topk),
     "multimodal_features": (q_multimodal_features, SQL_MULTIMODAL),
 }
 
