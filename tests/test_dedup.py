@@ -825,3 +825,91 @@ def test_cc_incremental_bridges_and_fixed_points(spark):
                  spark.createDataFrame(list(got.items()), "node long, comp long"),
                  empty).collect()}
     assert again == got
+
+
+SHINGLE_TEXTS = [
+    (1, None),
+    (2, ""),
+    (3, " \t\r\n "),
+    (4, "one"),
+    (5, "one two"),
+    (6, "one two three"),
+    (7, "  lead and trail  "),
+    (8, "tab\tsep\x0bvt\x0cff\r\ncrlf"),
+    (9, "runs   of \t\t blanks\n\n\nhere now"),
+    (10, "nb\xa0sp inside a\xa0token stays one token"),
+    (11, "a b c d e f g h i"),
+    (12, "line\u2028sep and\x85nel are not whitespace"),
+    (13, "x y"),
+]
+
+
+def _ref_shingles(text, n):
+    import re
+
+    words = [w for w in re.split(r"[ \t\n\x0B\f\r]+", text or "") if w]
+    if len(words) < n:
+        return [" ".join(words)]
+    return [" ".join(words[i:i + n]) for i in range(len(words) - n + 1)]
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_shingles_match_reference_forms(spark, n):
+    """The regex shingles() equals " ".join(words[i:i+n]) over the
+    explicit 6-char whitespace split (U+00A0 is not whitespace), with
+    the whole text as the one shingle below n tokens and [""] for
+    NULL/blank text; for n=3 it also equals the DuckDB twin."""
+    import duckdb
+
+    from xdan_dqa_spark.operators.dedup import shingles
+    from xdan_dqa_spark.plans.entry_queries import _SHINGLES_SQL
+
+    df = spark.createDataFrame(SHINGLE_TEXTS, "doc_id long, text string")
+    got = {r[0]: r[1] for r in df.select("doc_id", shingles("text", n)).collect()}
+    assert got == {i: _ref_shingles(t, n) for i, t in SHINGLE_TEXTS}
+    if n == 3:
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", SHINGLE_TEXTS)
+        duck = dict(con.execute(f"SELECT doc_id, {_SHINGLES_SQL} FROM documents").fetchall())
+        assert duck == got
+
+
+def test_minhash_hash_family_is_exact(spark):
+    """Every h_j, evaluated by Spark with ANSI on (overflow would abort)
+    and by the DuckDB twin expression, equals Python integer arithmetic
+    at the key-range edges."""
+    import duckdb
+
+    from xdan_dqa_spark.operators.dedup import MINHASH_COEFFS, minhash_hash
+    from xdan_dqa_spark.plans.entry_queries import _minhash_hash_sql
+
+    xs = [0, 1, (1 << 30) - 1, 1 << 30, (1 << 31) - 1, 1 << 31, (1 << 60) - 1]
+    want = [[(a * x + b) % ((1 << 61) - 1) for a, b in MINHASH_COEFFS] for x in xs]
+    ks = range(len(MINHASH_COEFFS))
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x long")
+        rows = df.orderBy("i").select(*[minhash_hash(F.col("x"), j) for j in ks]).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert [list(r) for r in rows] == want
+    cols = ", ".join(_minhash_hash_sql(j, "x") for j in ks)
+    values = ", ".join(f"({i}, {x}::BIGINT)" for i, x in enumerate(xs))
+    duck = duckdb.sql(f"SELECT {cols} FROM (VALUES {values}) t(i, x) ORDER BY i").fetchall()
+    assert [list(r) for r in duck] == want
+
+
+def test_minhash_rejects_md5_string_band_index(spark, tmp_path):
+    """An index whose band_key is an md5 hex string (the pre-integer
+    layout) fails analysis on the join key type; it is never joined."""
+    from pyspark.errors import AnalysisException
+
+    from xdan_dqa_spark.operators.dedup import minhash_incremental_dedup
+
+    corpus = spark.createDataFrame(DOCS[:4], "doc_id long, text string")
+    batch = spark.createDataFrame([(101, DOCS[0][1])], "doc_id long, text string")
+    old = spark.createDataFrame([(1, 0, "0" * 32)], "doc_id long, band_id int, band_key string")
+    with pytest.raises(AnalysisException, match="(?i)type"):
+        minhash_incremental_dedup(batch, corpus, old).collect()

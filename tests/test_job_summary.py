@@ -135,11 +135,11 @@ def test_dedup_job_subprocess_end_to_end(tmp_path):
 
 # --- lineage from the written files: one scoring pass per run --------------
 
-def _job():
+def _job(name="quality_filter_job"):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "quality_filter_job", os.path.join(REPO, "jobs", "quality_filter_job.py"))
+        name, os.path.join(REPO, "jobs", f"{name}.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -247,6 +247,22 @@ def test_job_scores_each_document_once(spark, webtext, tmp_path, monkeypatch, ca
     plans = [p for i, p in _sql_executions(spark) if i not in before]
     assert len(plans) > 1
     assert sum("ArrowEvalPython" in p for p in plans) == 1
+
+
+def test_dedup_job_shingles_each_document_once(spark, tmp_path):
+    """One dedup_job --method minhash run executes the shingle extraction
+    (regexp_extract_all) in exactly one SQL plan, and not in the write:
+    the materialised shingle-key table feeds both the signature and the
+    Jaccard verify."""
+    before = {i for i, _ in _sql_executions(spark)}
+    assert _job("dedup_job").main([
+        "--input", "synth:400", "--output", str(tmp_path / "dd"), "--method", "minhash",
+        "--run-id", "once", "--master", "local[4]"]) == 0
+    plans = [p for i, p in _sql_executions(spark) if i not in before]
+    assert len(plans) > 1
+    shingling = [p for p in plans if "regexp_extract_all" in p]
+    assert len(shingling) == 1
+    assert "InsertIntoHadoopFsRelationCommand" not in shingling[0]
 
 
 def test_job_lineage_empty_runs(spark, webtext, tmp_path, monkeypatch, capsys):

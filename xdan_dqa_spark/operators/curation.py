@@ -29,6 +29,7 @@ from .dedup import (
     exact_dedup,
     jaccard_verify,
     minhash_candidate_pairs,
+    shingle_keys,
     shingles,
 )
 
@@ -38,14 +39,6 @@ def _words(text_col: str) -> F.Column:
         F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
         lambda w: w != F.lit(""),
     )
-
-
-def _shingle_keys(text_col: str, n: int) -> F.Column:
-    """Distinct word-n-gram shingles as 60-bit md5-derived longs (the
-    fixed 8-byte shuffle-key discipline from operators/dedup.py — keys
-    ship as longs, never as shingle strings)."""
-    key = lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")  # noqa: E731
-    return F.array_distinct(F.transform(shingles(text_col, n), key))
 
 
 def benchmark_overlap(docs: DataFrame, bench: DataFrame, n: int = 3,
@@ -66,12 +59,12 @@ def benchmark_overlap(docs: DataFrame, bench: DataFrame, n: int = 3,
     Returns (doc_id, n_shingles, n_hits, hit_frac) for contaminated docs.
     """
     bench_keys = (
-        bench.select(F.explode(_shingle_keys(text_col, n)).alias("k"))
+        bench.select(F.explode(shingle_keys(text_col, n)).alias("k"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
     ex = docs.select(
-        F.col(id_col), F.explode(_shingle_keys(text_col, n)).alias("k")
+        F.col(id_col), F.explode(shingle_keys(text_col, n)).alias("k")
     )
     return (
         ex.join(F.broadcast(bench_keys), "k", "left")

@@ -7,12 +7,18 @@ SimHash, n-gram Jaccard) as DataFrame compositions.
 
 Design notes for scale:
   * Exact/word-set dedup is one shuffle on the content key.
-  * MinHash-LSH is the linear-time near-dup path: signature (map-side,
-    pure exprs) → explode bands (×B rows) → self-join per band bucket →
-    verified pairs. No O(n²) anywhere; AQE handles hot buckets.
-  * The hash family is md5(prefix:token) — chosen because it's available
-    and bit-identical in DuckDB too, so every operator here is
-    oracle-checkable end to end.
+  * MinHash-LSH is the linear-time near-dup path: shingle keys → signature
+    (map-side, pure exprs) → explode bands (×B rows) → self-join per band
+    bucket → verified pairs. No O(n²) anywhere; AQE handles hot buckets.
+  * Each document is shingled once, into 60-bit md5-prefix keys
+    (``shingle_keys``); the end-to-end dedups materialise that
+    (id, keys) table once and read it for both the signature and the
+    Jaccard verify.
+  * The MinHash family is integer arithmetic on those keys,
+    (a·x + b) mod (2^61 − 1) reduced exactly in 64-bit steps
+    (``MINHASH_COEFFS``), and a band key is the band's min-hash longs. md5 and that arithmetic are
+    bit-identical in DuckDB, so every operator here is oracle-checkable
+    end to end.
 """
 
 from __future__ import annotations
@@ -107,61 +113,184 @@ def wordset_dedup(df: DataFrame, text_col: str = "text",
 
 
 def shingles(text_col: str, n: int = 3) -> F.Column:
-    """Word n-gram shingles as an array column (pure exprs, no UDF).
+    """Word n-gram shingles as an array column (pure exprs, no lambda).
 
-    Built with arrays_zip over n shifted slices so the lambda body is
-    O(1) per element — `transform(sequence(...), i -> slice(words, i, n))`
-    would re-evaluate the tokenization per element (O(words²) per doc)."""
-    words = F.filter(F.split(F.col(text_col), WS_PLUS), lambda w: F.length(w) > 0)
-    count = F.greatest(F.size(words) - (n - 1), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(words, i + 1, count) for i in range(n)])
-    return F.when(count <= 0, F.array(F.concat_ws(" ", words))).otherwise(
-        F.transform(zipped, lambda t: F.concat_ws(" ", *[t[str(i)] for i in range(n)]))
+    The text is normalised once (every whitespace run → one space, edges
+    trimmed); one ``regexp_extract_all`` then captures, at every token
+    start, the next n tokens through a zero-width lookahead. Its second
+    alternative matches only at position 0 once the first has failed
+    there — a text of fewer than n tokens — and captures the whole
+    normalised text as the one shingle (``[""]`` for an empty or NULL
+    text). One regex, no CASE around it: callers wrap shingles in
+    ``transform``, which is interpreted and would evaluate a repeated
+    subexpression twice. Output equals joining each run of n
+    whitespace-split tokens with single spaces, the form the DuckDB twins
+    build with list slices."""
+    t = F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS, " "))
+    gram = f"[^ ]+(?: [^ ]+){{{n - 1}}}"
+    return F.regexp_extract_all(t, F.lit(f"(?<![^ ])(?=({gram}|^(?s:.*)))"), F.lit(1))
+
+
+def shingle_hashes(text_col: str, n: int = 3) -> F.Column:
+    """Each shingle, in order and with repeats, as a 60-bit long: the
+    first 15 hex chars of its md5. DuckDB computes the same key as
+    ``CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)``."""
+    return F.transform(
+        shingles(text_col, n),
+        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
     )
+
+
+def shingle_keys(text_col: str, n: int = 3) -> F.Column:
+    """Distinct shingle keys (``shingle_hashes``, first occurrence kept) as
+    ``array<long>`` — the one shingle representation the MinHash signature,
+    the Jaccard/containment verifies and the corpus-overlap operators read.
+
+    Keying is equality-preserving in practice: collision odds across a
+    pair's union of ~10⁴ shingles are ≈ 1e-11, and a collision moves one
+    intersect count by 1. The joins ship fixed 8-byte keys instead of
+    shingle strings; measured on a pair-heavy corpus (73 146 candidate
+    pairs, local[16]) the verify took 22.8 s on raw strings, 26.4 s on md5
+    hex strings and 9.2 s on these longs."""
+    return F.array_distinct(shingle_hashes(text_col, n))
+
+
+def _key_table(df: DataFrame, text_col: str, id_col: str,
+               n_shingle: int = 3) -> DataFrame:
+    """(id, _sk) — each document's distinct shingle keys."""
+    return df.select(F.col(id_col), shingle_keys(text_col, n_shingle).alias("_sk"))
+
+
+# MinHash family over a 60-bit shingle key x:
+#   h_j(x) = (a_j·x + b_j) mod p,  p = 2^61 − 1,  1 ≤ a_j < p,  0 ≤ b_j < p.
+# a·x needs ~121 bits, so it is reduced exactly in 64-bit steps: with
+# a = a1·2^31 + a0 and x = x1·2^31 + x0,
+#   a·x ≡ 2·a1·x1 + (m >> 30) + (m & (2^30 − 1))·2^31 + a0·x0   (mod p),
+# where m = a1·x0 + a0·x1, since 2^61 ≡ 1. Every product is < 2^62 and the
+# sum < 2^63, so no step overflows a signed long (Spark's ANSI mode would
+# abort the job) or a DuckDB BIGINT. Full-width multipliers matter: a
+# no-overflow form with 31-bit multipliers over the key's 30-bit halves
+# wraps mod p at most twice, so its h_j order keys almost linearly and the
+# k minima correlate — in simulation it missed 30% more J = 0.8 pairs
+# than the (1 − (1 − J²)^4) the 4×2 banding promises; this family matches
+# it. These constants are shared with the DuckDB twins.
+MINHASH_PRIME = (1 << 61) - 1
+MINHASH_SPLIT = 31
+MINHASH_COEFFS = (
+    (523058302180427487, 1741543744033906142),
+    (316501778418769914, 554570041940685189),
+    (449408978314474671, 2013524058692908992),
+    (1842420402029128830, 2244279285154407619),
+    (519663551669967372, 1701398656455481699),
+    (1275041656923717829, 381304437056787934),
+    (1305981947948977974, 374750465175100789),
+    (2160129370991698122, 899788734160730194),
+)
+
+
+def minhash_hash(x: F.Column, j: int) -> F.Column:
+    """h_j over a long key column in [0, 2^60) (see MINHASH_COEFFS)."""
+    a, b = MINHASH_COEFFS[j]
+    a1, a0 = a >> MINHASH_SPLIT, a & ((1 << MINHASH_SPLIT) - 1)
+    x1 = F.shiftright(x, MINHASH_SPLIT)
+    x0 = x.bitwiseAND(F.lit((1 << MINHASH_SPLIT) - 1))
+    m = F.lit(a1) * x0 + F.lit(a0) * x1
+    s = (F.lit(2 * a1) * x1 + F.shiftright(m, 30)
+         + F.shiftleft(m.bitwiseAND(F.lit((1 << 30) - 1)), MINHASH_SPLIT) + F.lit(a0) * x0)
+    return (s % F.lit(MINHASH_PRIME) + F.lit(b)) % F.lit(MINHASH_PRIME)
+
+
+def _signatures(keys: DataFrame, id_col: str, k: int) -> DataFrame:
+    if not 1 <= k <= len(MINHASH_COEFFS):
+        raise ValueError(f"k must be in [1, {len(MINHASH_COEFFS)}] (got {k})")
+    ex = keys.select(F.col(id_col), F.explode("_sk").alias("_x"))
+    return ex.groupBy(id_col).agg(
+        *[F.min(minhash_hash(F.col("_x"), j)).alias(f"h{j}") for j in range(k)]
+    )
+
+
+def _bands(sig: DataFrame, id_col: str, bands: int, rows: int) -> DataFrame:
+    # one explode, not a union of per-band selects — a union re-executes
+    # the signature aggregate once per band
+    band_structs = F.array(*[
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.array(*[F.col(f"h{b * rows + r}") for r in range(rows)]).alias("band_key"),
+        )
+        for b in range(bands)
+    ])
+    return sig.select(F.col(id_col), F.explode(band_structs).alias("_b")).select(
+        F.col(id_col), F.col("_b.band_id").alias("band_id"), F.col("_b.band_key").alias("band_key")
+    )
+
+
+def _band_pairs(bandsdf: DataFrame, id_col: str) -> DataFrame:
+    left = bandsdf.select(F.col("band_id"), F.col("band_key"), F.col(id_col).alias("a"))
+    right = bandsdf.select(F.col("band_id"), F.col("band_key"), F.col(id_col).alias("b"))
+    return (
+        left.join(right, ["band_id", "band_key"])
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+        .distinct()
+    )
+
+
+def _candidates(keys: DataFrame, id_col: str, max_bucket: int | None) -> DataFrame:
+    sig = _signatures(keys, id_col, MINHASH_BANDS * MINHASH_ROWS)
+    bandsdf = _bands(sig, id_col, MINHASH_BANDS, MINHASH_ROWS)
+    return _band_pairs(cap_band_buckets(bandsdf, id_col, max_bucket), id_col)
+
+
+def _pair_keys(keys: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """pairs joined to both sides' keys as (a, b, …, _sha, _shb)."""
+    a = keys.select(F.col(id_col).alias("a"), F.col("_sk").alias("_sha"))
+    b = keys.select(F.col(id_col).alias("b"), F.col("_sk").alias("_shb"))
+    return pairs.join(a, "a").join(b, "b")
+
+
+def _jaccard(keys: DataFrame, pairs: DataFrame, id_col: str,
+             threshold: float) -> DataFrame:
+    joined = _pair_keys(keys, pairs, id_col)
+    inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
+    union = F.size(F.array_union("_sha", "_shb")).cast("double")
+    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    return (
+        joined.withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
+    )
+
+
+def _verified_pairs(df: DataFrame, text_col: str, id_col: str, threshold: float,
+                    max_bucket: int | None) -> DataFrame:
+    """LSH candidates verified by exact Jaccard, (a, b, jaccard), from ONE
+    shingling of ``df``: its key table is materialised once and read by
+    both the signature and the verify."""
+    keys = _key_table(df, text_col, id_col).localCheckpoint(eager=True)
+    return _jaccard(keys, _candidates(keys, id_col, max_bucket), id_col, threshold)
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        n_shingle: int = 3,
                        k: int = MINHASH_BANDS * MINHASH_ROWS) -> DataFrame:
-    """(id, h0..h{k-1}) min-hash signature table.
+    """(id, h0..h{k-1}) min-hash signature table: h_j is the minimum of the
+    integer hash h_j (MINHASH_COEFFS) over the document's shingle keys.
 
-    hash_j(s) = md5('<j>:'+s), min taken lexicographically (a
-    uniform-permutation proxy; identical bytes in any engine with md5).
-
-    Shape: explode(shingles) → groupBy(id).agg(k mins). The k hashes ride
-    one hash-aggregate with map-side partial combine — shuffle rows out =
-    docs, not shingles — and stay inside whole-stage codegen. (A nested
-    transform/array_min formulation is interpreted per-element and was
-    ~100x slower.)"""
-    ex = df.select(F.col(id_col), F.explode(shingles(text_col, n_shingle)).alias("_sh"))
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("_sh")))).alias(f"h{j}")
-        for j in range(k)
-    ]
-    return ex.groupBy(id_col).agg(*aggs)
+    Shape: explode(shingle keys) → groupBy(id).agg(k mins). The k hashes
+    are long arithmetic inside one whole-stage-codegen hash aggregate with
+    map-side partial combine — shuffle rows out = docs, not shingles. (A
+    nested transform/array_min formulation is interpreted per element and
+    was ~100x slower.)"""
+    return _signatures(_key_table(df, text_col, id_col, n_shingle), id_col, k)
 
 
 def minhash_bands(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   n_shingle: int = 3, bands: int = MINHASH_BANDS,
                   rows: int = MINHASH_ROWS) -> DataFrame:
-    """(id, band_id, band_key) — one row per band per doc."""
+    """(id, band_id, band_key) — one row per band per doc; ``band_key`` is
+    the band's ``rows`` min-hashes as ``array<long>``."""
     sig = minhash_signatures(df, text_col, id_col, n_shingle, bands * rows)
-    # one explode, not a union of per-band selects — a union re-executes
-    # the signature aggregate once per band
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws("|", *[F.col(f"h{b * rows + r}") for r in range(rows)])
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select(F.col(id_col), F.explode(band_structs).alias("_b")).select(
-        F.col(id_col), F.col("_b.band_id").alias("band_id"), F.col("_b.band_key").alias("band_key")
-    )
+    return _bands(sig, id_col, bands, rows)
 
 
 def minhash_candidate_pairs(df: DataFrame, text_col: str = "text",
@@ -174,51 +303,16 @@ def minhash_candidate_pairs(df: DataFrame, text_col: str = "text",
     bucket to its lowest-id members before the join, for template-spam
     clusters whose members are near-identical without being byte-identical
     (see cap_band_buckets — logged, bounded-recall). Returns (a, b)."""
-    bandsdf = cap_band_buckets(
-        minhash_bands(df, text_col, id_col), id_col, max_bucket
-    )
-    left = bandsdf.select(F.col("band_id"), F.col("band_key"), F.col(id_col).alias("a"))
-    right = bandsdf.select(F.col("band_id"), F.col("band_key"), F.col(id_col).alias("b"))
-    return (
-        left.join(right, ["band_id", "band_key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    return _candidates(_key_table(df, text_col, id_col), id_col, max_bucket)
 
 
 def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id", threshold: float = 0.7) -> DataFrame:
     """Exact word-shingle Jaccard on candidate pairs; keeps pairs ≥ threshold.
-    Returns (a, b, jaccard).
-
-    Each shingle is keyed to a 60-bit integer (md5 prefix) before the
-    pair join: equality-preserving in practice (collision odds across a
-    pair's union of ~10⁴ shingles ≈ 1e-11, and a collision perturbs one
-    intersect count by 1), so intersect/union sizes — hence the Jaccard
-    value — are unchanged, while the join ships fixed 8-byte keys instead
-    of shingle strings and compares longs instead of strings. Measured
-    same-window on a pair-heavy corpus (2 400 near-dup docs × 300 tokens,
-    73 146 candidate pairs, local[16]): raw strings 22.8 s, md5 HEX
-    strings 26.4 s (32-char hex is LONGER than the 15.5-char average
-    shingle — a pessimization), 60-bit longs 9.2 s (2.5×). The DuckDB
-    oracle twin computes the identical key, so values stay bit-green."""
-    key = lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")  # noqa: E731
-    sh = df.select(
-        F.col(id_col),
-        F.array_distinct(F.transform(shingles(text_col), key)).alias("_sh"),
-    )
-    a = sh.select(F.col(id_col).alias("a"), F.col("_sh").alias("_sha"))
-    b = sh.select(F.col(id_col).alias("b"), F.col("_sh").alias("_shb"))
-    joined = pairs.join(a, "a").join(b, "b")
-    inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
-    union = F.size(F.array_union("_sha", "_shb")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        joined.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    Returns (a, b, jaccard). Sets are the ``shingle_keys`` longs, so the
+    pair join ships fixed 8-byte keys and the DuckDB twin computes the
+    identical value."""
+    return _jaccard(_key_table(df, text_col, id_col), pairs, id_col, threshold)
 
 
 def containment_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
@@ -232,9 +326,9 @@ def containment_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
     doc pasted verbatim inside a long one has J = |A|/|B| ≈ 0 but
     C(A→B) = 1 — the aggregation-page / quote-farm signature, and the
     dedup policy question "is this article already inside that digest?".
-    Same fixed-8-byte-key discipline as jaccard_verify (shingles ship
-    as 60-bit md5-derived longs, never strings); intersect/size counts
-    are integers divided once, so values are oracle-exact.
+    Reads the same ``shingle_keys`` longs as jaccard_verify;
+    intersect/size counts are integers divided once, so values are
+    oracle-exact.
 
     Recall caveat (documented, inherent): candidates here come from
     Jaccard-tuned MinHash bands, which under-sample high-containment /
@@ -242,14 +336,12 @@ def containment_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
     containment search at scale, band the SMALL side's full signature
     against per-size-stratum signatures of the large side, or use the
     spans index (span_dedup) whose granularity is containment-native."""
-    key = lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")  # noqa: E731
-    sh = df.select(
-        F.col(id_col),
-        F.array_distinct(F.transform(shingles(text_col), key)).alias("_sh"),
-    )
-    a = sh.select(F.col(id_col).alias("a"), F.col("_sh").alias("_sha"))
-    b = sh.select(F.col(id_col).alias("b"), F.col("_sh").alias("_shb"))
-    joined = pairs.join(a, "a").join(b, "b")
+    return _containment(_key_table(df, text_col, id_col), pairs, id_col, threshold)
+
+
+def _containment(keys: DataFrame, pairs: DataFrame, id_col: str,
+                 threshold: float) -> DataFrame:
+    joined = _pair_keys(keys, pairs, id_col)
     inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
     ca = F.when(F.size("_sha") > 0, inter / F.size("_sha").cast("double")).otherwise(F.lit(0.0))
     cb = F.when(F.size("_shb") > 0, inter / F.size("_shb").cast("double")).otherwise(F.lit(0.0))
@@ -269,8 +361,8 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     """LSH candidates + containment verify end-to-end; (a, b,
     cont_a_in_b, cont_b_in_a) — see containment_verify for semantics
     and the recall caveat."""
-    pairs = minhash_candidate_pairs(df, text_col, id_col, max_bucket)
-    return containment_verify(df, pairs, text_col, id_col, threshold)
+    keys = _key_table(df, text_col, id_col).localCheckpoint(eager=True)
+    return _containment(keys, _candidates(keys, id_col, max_bucket), id_col, threshold)
 
 
 def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -298,9 +390,8 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     ``max_bucket`` opts into bounded LSH buckets for near-identical
     template-spam clusters (see cap_band_buckets)."""
     base = exact_dedup(df, text_col, id_col) if collapse_exact else df
-    pairs = minhash_candidate_pairs(base, text_col, id_col, max_bucket)
     dups = (
-        jaccard_verify(base, pairs, text_col, id_col, threshold)
+        _verified_pairs(base, text_col, id_col, threshold, max_bucket)
         .select(F.col("b").alias(id_col))
         .distinct()
     )
@@ -353,8 +444,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
                         max_bucket: int | None = None) -> DataFrame:
     """All-pairs n-gram Jaccard via LSH candidates (the scalable route to
     'n-gram Jaccard dedup'); returns (a, b, jaccard)."""
-    pairs = minhash_candidate_pairs(df, text_col, id_col, max_bucket)
-    return jaccard_verify(df, pairs, text_col, id_col, threshold)
+    return _verified_pairs(df, text_col, id_col, threshold, max_bucket)
 
 
 # ------------------------------------------------- connected components
@@ -427,10 +517,7 @@ def cc_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     quadratic hot band bucket AND its quadratic edge set from the CC
     input."""
     base = exact_dedup(df, text_col, id_col) if collapse_exact else df
-    pairs = jaccard_verify(base,
-                           minhash_candidate_pairs(base, text_col, id_col,
-                                                   max_bucket),
-                           text_col, id_col, threshold)
+    pairs = _verified_pairs(base, text_col, id_col, threshold, max_bucket)
     labels = connected_components(pairs.select("a", "b"))
     drop = labels.filter(F.col("node") != F.col("comp")).select(
         F.col("node").alias(id_col)
@@ -747,9 +834,17 @@ def minhash_index_write(df: DataFrame, path: str, text_col: str = "text",
     bands (``mode="append"``), instead of re-shingling petabytes per
     increment. Partitioning by band_id means a probe that joins on
     (band_id, band_key) prunes to the matching band directories; within
-    a band the key is uniform md5, so files split evenly. The row
-    payload is (doc_id, band_key) — 8 bytes + 32 hex chars — so the
-    index is ~1/1000th of the corpus bytes."""
+    a band the key's longs are uniform mod 2^61 − 1, so files split
+    evenly. The row payload is (doc_id, band_key) — 8 bytes plus
+    ``rows`` longs — so the index is ~1/1000th of the corpus bytes.
+
+    An index written before band keys became ``array<long>`` holds md5
+    hex strings; :func:`minhash_incremental_dedup` rejects it with a
+    type error at plan time (string vs array<bigint> join key) instead
+    of joining it silently. An index of ``array<long>`` keys built with
+    other ``MINHASH_COEFFS`` has the same type and WOULD join silently,
+    matching almost nothing: rebuild the index whenever the family
+    changes."""
     minhash_bands(df, text_col, id_col, n_shingle).write.partitionBy(
         "band_id"
     ).mode(mode).parquet(path)
@@ -785,16 +880,19 @@ def minhash_incremental_dedup(new_df: DataFrame, corpus_df: DataFrame,
         band self-join for within-batch pairs; ``max_bucket`` bounds
         template-spam buckets on BOTH the self-join and the index probe
         (see cap_band_buckets).
-      * verify: cross and within-batch pairs are unioned and verified in
-        ONE jaccard pass, so the batch is shingled once.
+      * the batch's shingle-key table is materialised once and read by
+        its signature and by the verify; cross and within-batch pairs are
+        unioned and verified in ONE jaccard pass.
 
     Corpus and batch ids must be DISJOINT (they are distinct ingests;
     id collisions would conflate verify texts).
 
     Returns the surviving rows of ``new_df`` (post exact-collapse)."""
     base = exact_dedup(new_df, text_col, id_col) if collapse_exact else new_df
+    keys = _key_table(base, text_col, id_col).localCheckpoint(eager=True)
+    sig = _signatures(keys, id_col, MINHASH_BANDS * MINHASH_ROWS)
     new_bands = cap_band_buckets(
-        minhash_bands(base, text_col, id_col), id_col, max_bucket
+        _bands(sig, id_col, MINHASH_BANDS, MINHASH_ROWS), id_col, max_bucket
     )
     old_bands = cap_band_buckets(index_bands, id_col, max_bucket)
 
@@ -805,25 +903,17 @@ def minhash_incremental_dedup(new_df: DataFrame, corpus_df: DataFrame,
         probe.join(idx, ["band_id", "band_key"]).select("a", "b").distinct()
     )
     # within-batch candidates: standard lowest-id-wins band self-join
-    left = new_bands.select("band_id", "band_key", F.col(id_col).alias("a"))
-    right = new_bands.select("band_id", "band_key", F.col(id_col).alias("b"))
-    within = (
-        left.join(right, ["band_id", "band_key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    within = _band_pairs(new_bands, id_col)
     pairs = cross.unionByName(within).distinct()
 
-    # verify texts: corpus pruned to candidate ids BEFORE the pair join
+    # corpus keys: only the candidate ids are shingled, pruned BEFORE the
+    # pair join
     cand_old = corpus_df.join(
         cross.select(F.col("a").alias(id_col)).distinct(), id_col, "left_semi"
     )
-    both = cand_old.select(F.col(id_col), F.col(text_col)).unionByName(
-        base.select(F.col(id_col), F.col(text_col))
-    )
+    both = _key_table(cand_old, text_col, id_col).unionByName(keys)
     dropped = (
-        jaccard_verify(both, pairs, text_col, id_col, threshold)
+        _jaccard(both, pairs, id_col, threshold)
         .select(F.col("b").alias(id_col))
         .distinct()
     )
@@ -845,11 +935,12 @@ def minhash_calibration(df: DataFrame, text_col: str = "text",
     variance is J(1−J)/k by construction — the report makes that
     visible on real pairs instead of asserted.
 
-    Scale: candidates only (never all-pairs); the signature table is
-    ONE map-side-combined aggregate reused by the pair join; counts
-    are integers divided once."""
-    sig = minhash_signatures(df, text_col, id_col, k=k)
-    pairs = minhash_candidate_pairs(df, text_col, id_col)
+    Scale: candidates only (never all-pairs); the shingle-key table is
+    materialised once and feeds the signature and the exact Jaccard;
+    counts are integers divided once."""
+    keys = _key_table(df, text_col, id_col).localCheckpoint(eager=True)
+    sig = _signatures(keys, id_col, k)
+    pairs = _candidates(keys, id_col, None)
     sa = sig.select(F.col(id_col).alias("a"),
                     *[F.col(f"h{j}").alias(f"_a{j}") for j in range(k)])
     sb = sig.select(F.col(id_col).alias("b"),
@@ -866,7 +957,7 @@ def minhash_calibration(df: DataFrame, text_col: str = "text",
             F.round(F.col("n_match").cast("double") / F.lit(float(k)), 6),
         )
     )
-    exact = jaccard_verify(df, pairs, text_col, id_col, threshold=0.0).select(
+    exact = _jaccard(keys, pairs, id_col, threshold=0.0).select(
         "a", "b", F.round(F.col("jaccard"), 6).alias("jaccard")
     )
     return est_tbl.join(exact, ["a", "b"])
@@ -1181,11 +1272,7 @@ def cc_dedup_best(df: DataFrame, score_col: str, text_col: str = "text",
         exact_dedup_best(df, score_col, text_col, id_col)
         if collapse_exact else df
     )
-    pairs = jaccard_verify(
-        base,
-        minhash_candidate_pairs(base, text_col, id_col, max_bucket),
-        text_col, id_col, threshold,
-    )
+    pairs = _verified_pairs(base, text_col, id_col, threshold, max_bucket)
     labels = connected_components(pairs.select("a", "b"))
     lab = (
         base.select(F.col(id_col), F.col(score_col))

@@ -254,15 +254,9 @@ def shingle_prevalence(df: DataFrame, text_col: str = "text",
     """
     from pyspark.sql import Window
 
-    from .dedup import shingles
+    from .dedup import shingle_keys
 
-    key = lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")  # noqa: E731
-    sh = df.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(F.transform(shingles(text_col, n), key))
-        ).alias("_k"),
-    )
+    sh = df.select(F.col(id_col), F.explode(shingle_keys(text_col, n)).alias("_k"))
     # rows are distinct per (doc, key), so count-over-key = #docs containing
     n_docs = F.count("*").over(Window.partitionBy("_k"))
     per_doc = (
@@ -1032,12 +1026,9 @@ def winnow_word_fingerprints(text_col: str, n: int = 3, w: int = 4) -> F.Column:
     fingerprint, while selecting only ~2/(w+1) of the shingles — the
     MOSS partial-overlap detector: bounded fingerprints per doc,
     robust to surrounding edits."""
-    from ..operators.dedup import shingles
+    from ..operators.dedup import shingle_hashes
 
-    h = F.transform(
-        shingles(text_col, n),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-    )
+    h = shingle_hashes(text_col, n)
     n_win = F.greatest(F.size(h) - (w - 1), F.lit(1))
     mins = F.transform(
         F.sequence(F.lit(1), n_win),
@@ -1072,12 +1063,9 @@ def winnow_overlap_pairs(df: DataFrame, min_shared: int = 2,
     # frame clips at the partition end, so a <w-shingle doc yields the
     # min of all its hashes — identical to winnow_word_fingerprints'
     # single-window case (equivalence pinned by test).
-    from ..operators.dedup import shingles
+    from ..operators.dedup import shingle_hashes
 
-    h = F.transform(
-        shingles(text_col, 3),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-    )
+    h = shingle_hashes(text_col, 3)
     ex = df.select(F.col(id_col), F.posexplode(h).alias("_pos", "_h"))
     wf = Window.partitionBy(id_col).orderBy("_pos").rowsBetween(0, 3)
     wp = Window.partitionBy(id_col)

@@ -646,25 +646,48 @@ def q_dedup_minhash_pairs(spark, sf_dir):
     return minhash_candidate_pairs(_t(spark, sf_dir, "documents"))
 
 
-# DuckDB twin of the exact same md5-minhash/band construction
-# (4 bands × 2 rows, word-3-gram shingles).
+# DuckDB twin of the MinHash/band construction (operators/dedup.py): word
+# 3-gram shingles, each keyed to the 60-bit long of its md5 prefix; h_j is
+# the min over the keys of (a_j·x + b_j) mod (2^61 − 1), reduced in the
+# operator's exact 64-bit steps with its MINHASH_COEFFS; a band key is the
+# list of its 2 min-hashes
+# (4 bands × 2 rows). A blank text is the one shingle '' as in Spark
+# (DuckDB's array_to_string of an empty list is NULL, hence the coalesce).
 _SHINGLES_SQL = f"""
 CASE WHEN len({_WORDS_WS_SQL}) < 3
-     THEN [array_to_string({_WORDS_WS_SQL}, ' ')]
+     THEN [coalesce(array_to_string({_WORDS_WS_SQL}, ' '), '')]
      ELSE [array_to_string(({_WORDS_WS_SQL})[i:i+2], ' ')
            FOR i IN range(1, len({_WORDS_WS_SQL}) - 1)]
 END
 """
 
 
+def _minhash_hash_sql(j: int, x: str) -> str:
+    from ..operators.dedup import MINHASH_COEFFS, MINHASH_PRIME, MINHASH_SPLIT
+
+    a, b = MINHASH_COEFFS[j]
+    a1, a0 = a >> MINHASH_SPLIT, a & ((1 << MINHASH_SPLIT) - 1)
+    x1, x0 = f"({x} >> {MINHASH_SPLIT})", f"({x} & {(1 << MINHASH_SPLIT) - 1})"
+    m = f"({a1} * {x0} + {a0} * {x1})"
+    s = (f"{2 * a1} * {x1} + ({m} >> 30) + (({m} & {(1 << 30) - 1}) << {MINHASH_SPLIT}) "
+         f"+ {a0} * {x0}")
+    return f"(({s}) % {MINHASH_PRIME} + {b}) % {MINHASH_PRIME}"
+
+
 def _minhash_sql(j: int) -> str:
-    return f"list_min([md5('{j}:' || s) FOR s IN sh])"
+    keys = "[CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) FOR s IN sh]"
+    return f"list_min([{_minhash_hash_sql(j, 'x')} FOR x IN {keys}])"
 
 
-_BANDS_SQL = " UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band_id, md5({_minhash_sql(2 * b)} || '|' || {_minhash_sql(2 * b + 1)}) AS band_key FROM sigs"
-    for b in range(4)
-)
+def _bands_sql_over(sigs: str) -> str:
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band_id, "
+        f"[{_minhash_sql(2 * b)}, {_minhash_sql(2 * b + 1)}] AS band_key FROM {sigs}"
+        for b in range(4)
+    )
+
+
+_BANDS_SQL = _bands_sql_over("sigs")
 
 SQL_DEDUP_MINHASH_PAIRS = f"""
 WITH sigs AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM documents),
@@ -2946,32 +2969,29 @@ def q_dedup_minhash_incr(spark, sf_dir):
     corpus. The steady-state web-ingest shape — the reference re-reads
     its full hub dataset per run (src/data_transformer.py:458-473).
     Returns surviving new doc ids."""
-    from ..operators.dedup import minhash_incremental_dedup, minhash_index_write
+    from ..operators.dedup import (
+        MINHASH_COEFFS,
+        minhash_incremental_dedup,
+        minhash_index_write,
+    )
 
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 4 != 0)
     batch = docs.filter(F.col("doc_id") % 4 == 0)
     path = "/tmp/xdan_minhash_index_" + sf_dir.strip("/").replace("/", "_").replace(".", "_")
     # idempotent build (_stage_with_spec): the index is a pure function
-    # of (corpus rows, LSH spec); the corpus row count is folded into the
-    # spec so a regenerated fixture restages.
+    # of (corpus rows, LSH spec); the corpus row count and the hash family
+    # are folded into the spec so a regenerated fixture or a changed
+    # family restages.
     spec = {"split": "doc_id%4!=0", "bands": 4, "rows": 2,
-            "n_shingle": 3, "n_corpus": corpus.count()}
+            "n_shingle": 3, "minhash_coeffs": [list(c) for c in MINHASH_COEFFS],
+            "n_corpus": corpus.count()}
     marker = os.path.join(path, "_SPEC.json")
     _stage_with_spec(marker, spec, lambda: minhash_index_write(corpus, path))
     idx = spark.read.parquet(path)
     return minhash_incremental_dedup(
         batch, corpus, idx, threshold=0.5
     ).select("doc_id")
-
-
-def _bands_sql_over(sigs: str, alias: str) -> str:
-    return " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_id, "
-        f"md5({_minhash_sql(2 * b)} || '|' || {_minhash_sql(2 * b + 1)}) AS band_key "
-        f"FROM {sigs}"
-        for b in range(4)
-    )
 
 
 SQL_DEDUP_MINHASH_INCR = f"""
@@ -2981,8 +3001,8 @@ WITH newd AS (
 old AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 <> 0),
 sigs_new AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM newd),
 sigs_old AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM old),
-bands_new AS ({_bands_sql_over('sigs_new', 'bn')}),
-bands_old AS ({_bands_sql_over('sigs_old', 'bo')}),
+bands_new AS ({_bands_sql_over('sigs_new')}),
+bands_old AS ({_bands_sql_over('sigs_old')}),
 cand AS (
   SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
   FROM bands_old l JOIN bands_new r
@@ -3857,7 +3877,7 @@ def q_minhash_calibration(spark, sf_dir):
 
 _SIGS_H_SQL = ", ".join(f"{_minhash_sql(j)} AS h{j}" for j in range(8))
 _BANDS_FROM_H_SQL = " UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band_id, md5(h{2 * b} || '|' || h{2 * b + 1}) AS band_key FROM sigs"
+    f"SELECT doc_id, {b} AS band_id, [h{2 * b}, h{2 * b + 1}] AS band_key FROM sigs"
     for b in range(4)
 )
 _NMATCH_SQL = " + ".join(
@@ -8302,12 +8322,12 @@ def q_term_burstiness(spark, sf_dir):
         - F.col("total").cast("double") * F.col("total").cast("double")
     ) / (nd * nd)
     fano = F.round(var / mean, 6)
-    wnd = Window.orderBy(F.desc("fano"), F.asc("term"))
+    # a top-k sort (TakeOrderedAndProject: per-task top 20, then merge),
+    # not a row_number over one unpartitioned window
     return (
         j.select("term", "total", fano.alias("fano"))
-        .withColumn("_rk", F.row_number().over(wnd))
-        .filter(F.col("_rk") <= 20)
-        .drop("_rk")
+        .orderBy(F.desc("fano"), F.asc("term"))
+        .limit(20)
     )
 
 
