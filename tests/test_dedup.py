@@ -875,6 +875,26 @@ def test_shingles_match_reference_forms(spark, n):
         assert duck == got
 
 
+def test_ngram_jaccard_pairs_honours_n(spark):
+    """ngram_jaccard_pairs(n=...) shingles at n, for both the LSH
+    candidates and the verify: one edited token in 60 distinct words
+    moves n of the n-grams, so the pair's Jaccard differs at n=2 and n=5
+    and equals the set Jaccard of " ".join(words[i:i+n]) at each."""
+    from xdan_dqa_spark.operators.dedup import ngram_jaccard_pairs
+
+    a = " ".join(f"w{i}" for i in range(60))
+    b = a.replace("w30", "edited")
+    docs = spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
+    want = {}
+    for n in (2, 5):
+        sa, sb = set(_ref_shingles(a, n)), set(_ref_shingles(b, n))
+        want[n] = len(sa & sb) / len(sa | sb)
+        got = [(r["a"], r["b"], r["jaccard"])
+               for r in ngram_jaccard_pairs(docs, n=n, threshold=0.5).collect()]
+        assert got == [(1, 2, want[n])]
+    assert want[2] != want[5]
+
+
 def test_minhash_hash_family_is_exact(spark):
     """Every h_j, evaluated by Spark with ANSI on (overflow would abort)
     and by the DuckDB twin expression, equals Python integer arithmetic

@@ -1,10 +1,13 @@
 """The query registry: every query but the flagship has a DuckDB twin,
 the twins are plain SQL strings, fetching them needs no SparkSession,
-and every twin reads only the `documents` table, bar the two reference
-contracts that aggregate `events`."""
+every twin reads only the `documents` table, bar the two reference
+contracts that aggregate `events`, and every package module is imported
+from something that runs outside the tests."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import subprocess
 import sys
@@ -70,3 +73,79 @@ def test_every_twin_reads_only_the_document_surface():
         except duckdb.CatalogException as ex:
             off_surface.append(f"{name}: {str(ex).splitlines()[0]}")
     assert not off_surface, "\n".join(off_surface)
+
+
+# Package modules that nothing outside the tests imports, with the reason
+# each one stays.
+UNREACHED_ALLOWED = {
+    "xdan_dqa_spark/streaming/stream.py": (
+        "holds score_stream, the streaming form of the filter job, whose "
+        "lineage matches the batch job's; whether to keep it is its own "
+        "decision"
+    ),
+}
+
+
+def test_every_package_module_is_reached():
+    """Walk `import` / `from ... import` statements (module level and
+    inside functions) transitively from the jobs, perfbench, bench.py,
+    scripts/ and __spark_entry__.py; every xdan_dqa_spark module other
+    than an __init__.py must be reached, bar UNREACHED_ALLOWED. Parses
+    source only: no module is imported."""
+    root = os.path.abspath(REPO)
+
+    def rel(path):
+        return os.path.relpath(path, root).replace(os.sep, "/")
+
+    files = {}  # dotted module name -> repo-relative path
+    for pattern in ("xdan_dqa_spark/**/*.py", "perfbench/*.py"):
+        for path in glob.glob(os.path.join(root, pattern), recursive=True):
+            r = rel(path)
+            parts = r[:-3].split("/")
+            if parts[-1] == "__init__":
+                parts.pop()
+            files[".".join(parts)] = r
+
+    def imported(path, name):
+        """Dotted names of the repo modules ``path`` (module ``name``) imports."""
+        is_pkg = path.endswith("__init__.py")
+        with open(os.path.join(root, path)) as fh:
+            tree = ast.parse(fh.read(), path)
+        out = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                cands = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module.split(".") if node.module else []
+                if node.level:
+                    pkg = name.split(".") if is_pkg else name.split(".")[:-1]
+                    base = pkg[:len(pkg) - node.level + 1] + base
+                cands = [".".join(base)] + [".".join(base + [a.name]) for a in node.names]
+            else:
+                continue
+            for c in cands:
+                parts = c.split(".")
+                # importing a.b.c also runs a/__init__ and a/b/__init__
+                out.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
+        return {m for m in out if m in files}
+
+    roots = [rel(p) for pattern in ("jobs/*.py", "perfbench/*.py", "scripts/*.py",
+                                    "bench.py", "__spark_entry__.py")
+             for p in glob.glob(os.path.join(root, pattern))]
+    todo = [(p, p[:-3].replace("/", ".").removesuffix(".__init__")) for p in roots]
+    seen = set(roots)
+    while todo:
+        path, name = todo.pop()
+        for mod in imported(path, name):
+            if files[mod] not in seen:
+                seen.add(files[mod])
+                todo.append((files[mod], mod))
+    unreached = sorted(
+        p for p in files.values()
+        if p.startswith("xdan_dqa_spark/") and not p.endswith("__init__.py")
+        and p not in seen
+    )
+    dead = [p for p in unreached if p not in UNREACHED_ALLOWED]
+    stale = [p for p in UNREACHED_ALLOWED if p not in unreached]
+    assert not dead, f"package modules nothing outside the tests imports: {dead}"
+    assert not stale, f"allow-listed modules that are reached now: {stale}"

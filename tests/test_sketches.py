@@ -1,13 +1,11 @@
 """Sketch invariants (operators/sketches.py): HyperLogLog must land
 within its theoretical error band and its register state must merge by
-max; count-min must never undercount; the Bloom filter must have zero
-false negatives and a measured false-positive rate near theory; Gini
-and CUSUM (operators/curation.py) hit their closed-form extremes.
+max; count-min must never undercount; theta samples must intersect as
+sets; Gini (operators/curation.py) hits its closed-form extremes.
 Value-level cross-engine identity is pinned by the DuckDB twins
 (hll_vocab / cms_terms / gini_sources in plans/entry_queries.py);
 these tests pin the probabilistic contracts and merge algebra the
-oracle can't see. The Bloom, CUSUM and event-stream operators have no
-registry query, so the tests below are their only check."""
+oracle can't see."""
 
 from __future__ import annotations
 
@@ -15,20 +13,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from xdan_dqa_spark.operators.sketches import (
-    BLOOM_K,
     HLL_M,
-    bloom_build,
-    bloom_probe_report,
-    bloom_theoretical_fp,
     cms_heavy_hitters,
     cms_table,
     hll_estimate,
     hll_registers,
 )
-from xdan_dqa_spark.operators.curation import (
-    cusum_changepoint,
-    gini_concentration,
-)
+from xdan_dqa_spark.operators.curation import gini_concentration
 
 
 @pytest.fixture(scope="module")
@@ -108,38 +99,6 @@ def test_cms_table_state_is_bounded(spark):
     assert all(r["s"] == 50_000 for r in per_row)
 
 
-def test_bloom_no_false_negatives_and_fp_near_theory(spark):
-    build = spark.range(2_000).select(
-        F.concat(F.lit("in-"), F.col("id")).alias("k"))
-    probe_in = build
-    probe_out = spark.range(20_000).select(
-        F.concat(F.lit("out-"), F.col("id")).alias("k"))
-    rep_in = bloom_probe_report(build, "k", probe_in, "k").collect()[0]
-    assert rep_in["n_claimed_present"] == rep_in["n_probes"] == 2_000
-    assert rep_in["n_false_positives"] == 0
-    rep_out = bloom_probe_report(build, "k", probe_out, "k").collect()[0]
-    assert rep_out["n_actually_present"] == 0
-    theory = bloom_theoretical_fp(2_000)
-    # 20k negative probes: the measured rate should be within ~3x of
-    # theory (binomial noise at this sample size is far tighter; the
-    # slack covers md5's mild non-uniformity over structured keys)
-    assert rep_out["fp_rate"] <= 3 * theory + 1e-4
-    assert rep_out["n_claimed_present"] == rep_out["n_false_positives"]
-
-
-def test_bloom_bitset_is_bounded_and_broadcast(spark):
-    build = spark.range(3_000).select(F.col("id").cast("string").alias("k"))
-    bits = bloom_build(build, "k")
-    n_bits = bits.count()
-    assert n_bits <= min(65_536, 3_000 * BLOOM_K)
-    probe = spark.range(100).select(F.col("id").cast("string").alias("k"))
-    plan = (
-        bloom_probe_report(build, "k", probe, "k")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan
-
-
 def test_gini_extremes(spark):
     even = spark.createDataFrame(
         [(f"s{i % 4}",) for i in range(400)], "source string")
@@ -156,33 +115,7 @@ def test_gini_extremes(spark):
     assert g_w["gini"] == 0.0
 
 
-def test_cusum_finds_injected_level_shift(spark):
-    # 30 days at 10/day, then 30 days at 50/day: the max |D_t| of a
-    # clean step function sits exactly at the step boundary (day 30)
-    import datetime as dt
-
-    rows = []
-    for d in range(60):
-        day = dt.date(2024, 1, 1) + dt.timedelta(days=d)
-        rows.append(("feed", f"{day} 00:00:00", 10.0 if d < 30 else 50.0))
-    df = spark.createDataFrame(rows, "event_type string, ts string, value double")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    out = cusum_changepoint(df).collect()[0]
-    assert out["n_days"] == 60
-    assert str(out["changepoint_day"]) == "2024-01-30"
-    # D_30 = n*P_30 - 30*T = 60*300 - 30*1800 = -36000 -> /n = 600
-    assert out["max_abs_cusum"] == 600.0
-
-
-def test_cusum_flat_series_is_null_signal(spark):
-    rows = [("flat", f"2024-03-{d + 1:02d} 12:00:00", 7.0) for d in range(20)]
-    df = spark.createDataFrame(rows, "event_type string, ts string, value double")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    out = cusum_changepoint(df).collect()[0]
-    assert out["max_abs_cusum"] == 0.0
-
-
-# ---- batch 40: weighted reservoir, spike z, MI, FD discovery ----
+# ---- batch 40: weighted reservoir, MI, FD discovery ----
 
 
 def test_wrs_exact_k_weight_bias_and_partition_invariance(spark):
@@ -212,46 +145,6 @@ def test_wrs_excludes_nonpositive_weights(spark):
         [(1, 5), (2, 0), (3, -2), (4, 5)], "doc_id long, w long")
     got = sorted(r["doc_id"] for r in weighted_reservoir_topk(df, 10, "w").collect())
     assert got == [1, 4]
-
-
-def test_spike_zscore_flags_injected_burst(spark):
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from xdan_dqa_spark.operators.sessions import daily_spike_zscore
-
-    rows = []
-    for d in range(10):
-        day = dt.date(2024, 5, 1) + dt.timedelta(days=d)
-        n = 100 if d != 8 else 500          # burst on day index 8
-        jitter = d % 3                       # baseline variance > 0
-        for i in range(n + jitter):
-            rows.append(("click", f"{day} 01:00:00"))
-    df = spark.createDataFrame(rows, "event_type string, ts string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    out = {str(r["day"]): r["z"] for r in daily_spike_zscore(df).collect()}
-    # first 7 days have no complete trailing window
-    assert len(out) == 3
-    assert out["2024-05-09"] > 5          # the burst
-    assert abs(out["2024-05-08"]) < 3
-
-
-def test_spike_zscore_zero_variance_guard(spark):
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from xdan_dqa_spark.operators.sessions import daily_spike_zscore
-
-    rows = []
-    for d in range(9):
-        day = dt.date(2024, 6, 1) + dt.timedelta(days=d)
-        rows += [("flat", f"{day} 01:00:00")] * 10
-    df = spark.createDataFrame(rows, "event_type string, ts string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    zs = [r["z"] for r in daily_spike_zscore(df).collect()]
-    assert zs and all(z == 0.0 for z in zs)
 
 
 def test_mutual_information_extremes(spark):
@@ -287,57 +180,7 @@ def test_fd_discovery_census(spark):
         fd_discovery(df, ["city"])
 
 
-# ---- batch 41: Theil-Sen, paths, CMS join estimate, negatives ----
-
-
-def test_theilsen_exact_on_linear_and_robust_to_outlier(spark):
-    import datetime as dt
-
-    from xdan_dqa_spark.operators.sessions import theilsen_daily_trend
-
-    rows = []
-    for d in range(12):
-        day = dt.date(2024, 7, 1) + dt.timedelta(days=d)
-        n = 10 + 5 * d if d != 6 else 500     # linear +5/day, one glitch day
-        rows += [("feed", f"{day} 01:00:00")] * n
-    df = spark.createDataFrame(rows, "event_type string, ts string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    out = theilsen_daily_trend(df).collect()[0]
-    assert out["n_days"] == 12 and out["n_pairs"] == 66
-    # median pairwise slope stays 5.0 despite the 500-count outlier
-    assert out["slope_per_day"] == 5.0
-
-
-def test_event_paths_counts_known_sequences(spark):
-    import datetime as dt
-
-    from xdan_dqa_spark.operators.sessions import event_paths
-
-    rows = []
-    t0 = dt.datetime(2024, 8, 1)
-    for u in range(10):
-        for i, e in enumerate(["view", "click", "buy", "view"]):
-            rows.append((u, str(t0 + dt.timedelta(minutes=i)), e))
-    df = spark.createDataFrame(rows, "user_id long, ts string, event_type string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    got = {r["path"]: r["n_occurrences"] for r in event_paths(df).collect()}
-    assert got == {"view>click>buy": 10, "click>buy>view": 10}
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        event_paths(df, n=1)
-
-
-def test_cms_join_estimate_never_underestimates(spark):
-    from xdan_dqa_spark.operators.sketches import cms_join_cardinality
-
-    left = spark.createDataFrame(
-        [(i % 50,) for i in range(500)], "k long")        # 10 rows per key
-    right = spark.createDataFrame(
-        [(i,) for i in range(40)], "k long")              # keys 0..39
-    out = cms_join_cardinality(left, "k", right, "k").collect()[0]
-    assert out["exact_join_count"] == 400                 # 40 keys x 10
-    assert out["cms_estimate"] >= 400
-    assert out["overcount"] == out["cms_estimate"] - 400
+# ---- batch 41: negatives ----
 
 
 def test_negative_samples_contract(spark):
@@ -412,21 +255,7 @@ def test_prefix_filter_matches_bruteforce(spark):
         prefix_filter_pairs(df, threshold_num=0, threshold_den=3)
 
 
-# ---- batch 43: concurrency sweep, source cosine, rolling HLL ----
-
-
-def test_concurrency_peak_sweep_and_touching_boundary(spark):
-    from xdan_dqa_spark.operators.sessions import concurrency_peak
-
-    rows = [("a", 0, 100), ("a", 50, 150), ("a", 90, 200),   # triple overlap at 90
-            ("a", 150, 160),                                  # starts AT an end: no overlap bump
-            ("b", 0, 10), ("b", 10, 20)]                      # touching -> peak 1
-    df = spark.createDataFrame(rows, "scope string, s long, e long")
-    got = {r["scope"]: r for r in
-           concurrency_peak(df, "s", "e", group_col="scope").collect()}
-    assert got["a"]["peak_concurrency"] == 3 and got["a"]["peak_at"] == 90
-    assert got["a"]["n_intervals"] == 4
-    assert got["b"]["peak_concurrency"] == 1
+# ---- batch 43: source cosine ----
 
 
 def test_source_cosine_extremes(spark):
@@ -444,41 +273,7 @@ def test_source_cosine_extremes(spark):
     assert ("s1", "s3") not in got      # zero shared terms -> no row
 
 
-def test_rolling_hll_window1_equals_daily_and_window_covers_span(spark):
-    import datetime as dt
-
-    from xdan_dqa_spark.operators.sketches import (
-        hll_estimate,
-        hll_rolling_estimate,
-    )
-
-    rows = []
-    for d in range(4):
-        day = dt.date(2024, 9, 1) + dt.timedelta(days=d)
-        for u in range(100 * (d + 1)):
-            rows.append((f"u{d}-{u}", f"{day} 10:00:00"))
-    df = spark.createDataFrame(rows, "user_id string, ts string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    # a window spanning the whole fixture equals the global estimate on
-    # the LAST day (register merge == union of all days)
-    whole = hll_rolling_estimate(df, "user_id", "ts", window_days=10)
-    last = max(r["day"] for r in whole.collect())
-    got_last = {r["day"]: r["hll_estimate"] for r in whole.collect()}[last]
-    glob = hll_estimate(df, "user_id").collect()[0]["hll_estimate"]
-    assert got_last == glob
-    # window=1 equals each day's own estimate
-    w1 = {r["day"]: r["hll_estimate"]
-          for r in hll_rolling_estimate(df, "user_id", "ts",
-                                        window_days=1).collect()}
-    for d in range(4):
-        day_df = df.filter(
-            F.to_date("ts") == str(dt.date(2024, 9, 1) + dt.timedelta(days=d)))
-        solo = hll_estimate(day_df, "user_id").collect()[0]["hll_estimate"]
-        dkey = sorted(w1)[d]
-        assert w1[dkey] == solo
-
-
-# ---- batch 44: homoglyphs, DOW chi2, bloom prefilter, Neyman ----
+# ---- batch 44: homoglyphs, Neyman ----
 
 
 def test_homoglyph_census_flags_only_spoofed(spark):
@@ -499,41 +294,6 @@ def test_homoglyph_census_flags_only_spoofed(spark):
     assert folded[1]["f"] == "paypal login"
 
 
-def test_dow_chi2_flat_vs_weekly_rhythm(spark):
-    import datetime as dt
-
-    from xdan_dqa_spark.operators.sessions import dow_uniformity_chi2
-
-    rows = []
-    for d in range(28):
-        day = dt.date(2024, 1, 1) + dt.timedelta(days=d)
-        rows += [("bot", f"{day} 01:00:00")] * 50                 # flat
-        n = 10 if day.weekday() >= 5 else 60                      # human dip
-        rows += [("human", f"{day} 01:00:00")] * n
-    df = spark.createDataFrame(rows, "event_type string, ts string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    got = {r["event_type"]: r for r in dow_uniformity_chi2(df).collect()}
-    assert got["bot"]["chi2"] == 0.0 and not got["bot"]["uniform_rejected"]
-    assert got["human"]["chi2"] > 12.592 and got["human"]["uniform_rejected"]
-
-
-def test_bloom_prefilter_report_contract_with_duplicate_fact_keys(spark):
-    from xdan_dqa_spark.operators.sketches import bloom_join_prefilter_report
-
-    # fact repeats every key 5x — the probe must count fact ROWS, and a
-    # repeated key must not fail the K-position test (regression: the
-    # per-row explode accumulated 4r hits)
-    fact = spark.createDataFrame(
-        [(i % 200,) for i in range(1000)], "k long")
-    dim = spark.createDataFrame([(i,) for i in range(50)], "k long")
-    r = bloom_join_prefilter_report(fact, "k", dim, "k").collect()[0]
-    assert r["n_fact_rows"] == 1000
-    assert r["n_true_match"] == 250            # keys 0..49, 5 rows each
-    assert r["n_pass_bloom"] >= r["n_true_match"]
-    assert r["n_false_pass"] == r["n_pass_bloom"] - r["n_true_match"]
-    assert 0 < r["pruned_frac"] <= 0.75
-
-
 def test_neyman_allocation_proportional_and_zero_variance(spark):
     from xdan_dqa_spark.operators.metrics import neyman_allocation
 
@@ -551,7 +311,7 @@ def test_neyman_allocation_proportional_and_zero_variance(spark):
         neyman_allocation(df, "g", "y", total_k=0)
 
 
-# ---- batch 45: contract gate, log-quantile sketch, HLL overlap ----
+# ---- batch 45: contract gate, log-quantile sketch ----
 
 
 def test_contract_report_counts_violations(spark):
@@ -586,50 +346,7 @@ def test_log_quantile_sketch_respects_2x_bound(spark):
     # sketch state is bounded: <= 64 power-of-two buckets regardless of n
 
 
-def test_hll_overlap_extremes(spark):
-    from xdan_dqa_spark.operators.sketches import hll_set_overlap
-
-    a = spark.range(2000).select(F.col("id").cast("string").alias("k"))
-    same = hll_set_overlap(a, a, "k").collect()[0]
-    # identical sets: union est == each est -> overlap est == set est
-    assert same["est_union"] == same["est_a"] == same["est_b"]
-    assert same["est_overlap"] == same["est_a"]
-    assert same["exact_overlap"] == 2000
-    b = spark.range(2000, 4000).select(F.col("id").cast("string").alias("k"))
-    disj = hll_set_overlap(a, b, "k").collect()[0]
-    assert disj["exact_overlap"] == 0
-    # inclusion-exclusion noise stays small relative to the set sizes
-    assert abs(disj["est_overlap"]) < 0.3 * 2000
-
-
-# ---- batch 46: KM survival, RBO, coverage curve ----
-
-
-def test_km_survival_hand_computed_with_censoring(spark):
-    import datetime as dt
-
-    from xdan_dqa_spark.operators.sessions import km_survival
-
-    t0 = dt.datetime(2024, 10, 1)
-
-    def ev(u, ty, sec):
-        return (u, ty, str(t0 + dt.timedelta(seconds=sec)))
-
-    rows = [
-        ev(1, "click", 0), ev(1, "purchase", 10),     # converts at 10
-        ev(2, "click", 0), ev(2, "purchase", 20),     # converts at 20
-        ev(3, "click", 0), ev(3, "view", 15),         # censored at 15
-        ev(4, "view", 5),                             # never enters
-    ]
-    df = spark.createDataFrame(rows, "user_id long, event_type string, ts string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    out = {r["t_sec"]: r for r in km_survival(df).collect()}
-    # risk sets: t=10 -> 3 at risk, 1 event -> S = 2/3
-    # t=15 censor leaves; t=20 -> 1 at risk, 1 event -> S = 0 (d == n_risk)
-    assert set(out) == {10.0, 20.0}
-    assert out[10.0]["n_risk"] == 3 and out[10.0]["n_events"] == 1
-    assert abs(out[10.0]["survival"] - 2 / 3) < 1e-6
-    assert out[20.0]["n_risk"] == 1 and out[20.0]["survival"] == 0.0
+# ---- batch 46: RBO, coverage curve ----
 
 
 def test_rbo_extremes(spark):
@@ -661,7 +378,7 @@ def test_vocab_coverage_monotone_and_saturates(spark):
     assert out[1]["covered_tokens"] == 5000      # 'the' dominates
 
 
-# ---- batch 47: CDC apply, lateness census, strict 3-step funnel ----
+# ---- batch 47: CDC apply ----
 
 
 def test_cdc_apply_merge_semantics(spark):
@@ -684,56 +401,7 @@ def test_cdc_apply_merge_semantics(spark):
     assert again == got
 
 
-def test_lateness_census_buckets(spark):
-    import datetime as dt
-
-    from xdan_dqa_spark.operators.sessions import lateness_census
-
-    t0 = dt.datetime(2024, 11, 1)
-
-    def ev(i, sec):
-        return ("t", i, str(t0 + dt.timedelta(seconds=sec)))
-
-    # arrival order i: event times go 0, 100, then a straggler from t=40
-    # (60s late), then 200, then a very-late one from t=-700 (900s late)
-    rows = [ev(1, 0), ev(2, 100), ev(3, 40), ev(4, 200), ev(5, -700)]
-    df = spark.createDataFrame(rows, "event_type string, event_id long, ts string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    r = lateness_census(df, watermark_sec=600).collect()[0]
-    assert r["n_events"] == 5 and r["n_on_time"] == 3
-    assert r["n_late_1m"] == 1          # the 60s straggler
-    assert r["n_very_late"] == 1 and r["n_dropped_at_watermark"] == 1
-
-
-def test_funnel3_strict_order_required(spark):
-    import datetime as dt
-
-    from xdan_dqa_spark.operators.sessions import funnel3_strict
-
-    t0 = dt.datetime(2024, 12, 1)
-
-    def ev(u, i, ty, sec):
-        return (u, i, ty, str(t0 + dt.timedelta(seconds=sec)))
-
-    rows = [
-        # user 1: full ordered funnel
-        ev(1, 1, "view", 0), ev(1, 2, "click", 10), ev(1, 3, "purchase", 20),
-        # user 2: purchase BEFORE the chained click -> reached 2
-        ev(2, 4, "view", 0), ev(2, 5, "purchase", 5), ev(2, 6, "click", 10),
-        # user 3: click before any view -> that click can't chain; a later
-        # view alone -> reached 1
-        ev(3, 7, "click", 0), ev(3, 8, "view", 10),
-        # user 4: never views -> absent
-        ev(4, 9, "click", 0),
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, event_type string, ts string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    got = {r["user_id"]: r["reached"] for r in funnel3_strict(df).collect()}
-    assert got == {1: 3, 2: 2, 3: 1}
-
-
-# ---- batch 48: EMD drift, doc novelty, daily xcorr ----
+# ---- batch 48: EMD drift, doc novelty ----
 
 
 def test_emd_shift_equals_offset(spark):
@@ -767,27 +435,7 @@ def test_doc_novelty_templates_score_low(spark):
     assert ends["least_novel"] != 100
 
 
-def test_daily_xcorr_detects_injected_lag(spark):
-    import datetime as dt
-
-    from xdan_dqa_spark.operators.sessions import daily_xcorr
-
-    rows = []
-    base = [10, 50, 20, 80, 30, 90, 40, 70, 15, 60, 25, 85, 35, 95]
-    for d, n in enumerate(base):
-        day = dt.date(2025, 1, 1) + dt.timedelta(days=d)
-        rows += [("click", f"{day} 01:00:00")] * n
-        # purchases echo clicks exactly two days later
-        day2 = dt.date(2025, 1, 3) + dt.timedelta(days=d)
-        rows += [("purchase", f"{day2} 01:00:00")] * n
-    df = spark.createDataFrame(rows, "event_type string, ts string")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    got = {r["lag"]: r["r"] for r in daily_xcorr(df).collect()}
-    assert got[2] == 1.0                       # perfect echo at +2
-    assert all(got[lag] < 1.0 for lag in got if lag != 2)
-
-
-# ---- batch 49: adaptation, bigram conditional entropy, RFM ----
+# ---- batch 49: adaptation, bigram conditional entropy ----
 
 
 def test_term_adaptation_content_vs_glue(spark):
@@ -817,24 +465,6 @@ def test_bigram_cond_entropy_extremes(spark):
         "doc_id long, text string, lang string")
     r2 = bigram_conditional_entropy(mixed).collect()[0]
     assert r2["cond_entropy_nats"] > 0.0
-
-
-def test_rfm_segments_census_is_bounded_and_complete(spark):
-    import datetime as dt
-
-    from xdan_dqa_spark.operators.sessions import rfm_segments
-
-    rows = []
-    t0 = dt.datetime(2025, 2, 1)
-    for u in range(50):
-        for k in range(1 + u % 7):
-            rows.append((u, str(t0 + dt.timedelta(hours=u + k)), float(u)))
-    df = spark.createDataFrame(rows, "user_id long, ts string, value double")
-    df = df.withColumn("ts", F.to_timestamp("ts"))
-    out = rfm_segments(df).collect()
-    assert sum(r["n_users"] for r in out) == 50
-    for r in out:
-        assert 1 <= r["r"] <= 5 and 1 <= r["f"] <= 5 and 1 <= r["m"] <= 5
 
 
 # ---- cross-cutting: repartition invariance of round-5 operators ----

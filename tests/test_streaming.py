@@ -83,58 +83,6 @@ def test_windowed_metrics_watermark(spark, webtext, tmp_path):
     assert {"window_start", "window_end", "lang", "n_docs", "avg_text_len"} <= cols
 
 
-def test_host_state_survives_restart(spark, webtext, tmp_path):
-    """applyInPandasWithState: per-host cumulative counters are keyed
-    state in the checkpoint's state store — a SECOND availableNow run
-    over newly-landed files resumes the counters instead of starting
-    from zero, and the final per-host totals equal a batch recompute
-    over ALL input."""
-    from xdan_dqa_spark.pipeline import score_webtext, with_doc_id
-    from xdan_dqa_spark.streaming.stateful import (
-        host_column,
-        host_state_stream,
-        latest_host_state,
-    )
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    base = webtext.select("url", "warc_ts", "html", "text", "lang")
-    first = base.limit(300)
-    first.write.parquet(inp)
-
-    q = host_state_stream(spark, inp, out, ckpt)
-    q.awaitTermination(180)
-    s1 = {r["host"]: r["docs_seen"] for r in latest_host_state(spark, out).collect()}
-    assert s1 and sum(s1.values()) > 0
-
-    second = base.orderBy(F.desc("url")).limit(150)
-    second.write.mode("append").parquet(inp)
-    q2 = host_state_stream(spark, inp, out, ckpt)
-    q2.awaitTermination(180)
-
-    got = {
-        r["host"]: (r["docs_seen"], r["kept"], r["scrub_total"])
-        for r in latest_host_state(spark, out).collect()
-    }
-    # batch recompute over everything the stream has seen
-    all_scored = score_webtext(with_doc_id(spark.read.parquet(inp)))
-    expected = {
-        r["host"]: (r["d"], r["k"], r["s"])
-        for r in all_scored.groupBy(host_column("url").alias("host"))
-        .agg(
-            F.count("*").alias("d"),
-            F.sum(F.col("keep").cast("long")).alias("k"),
-            F.sum("scrub_count").alias("s"),
-        )
-        .collect()
-    }
-    assert got == expected
-    # state actually GREW across the restart (not recomputed from scratch)
-    assert sum(d for d, _, _ in got.values()) > sum(s1.values())
-
-
 def test_update_mode_windowed_metrics_restart(spark, webtext, tmp_path):
     """Production update-mode path: foreachBatch parquet deltas + last-wins
     readback. A SECOND availableNow run over newly-landed files (same

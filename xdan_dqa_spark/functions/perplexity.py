@@ -1,4 +1,4 @@
-"""KenLM-style character-trigram perplexity as a numpy-vectorized pandas UDF.
+"""KenLM-style character-trigram perplexity, numpy-vectorized per Arrow batch.
 
 Deterministic replacement for the reference's LLM "fluency" judgment
 (the reasoning_depth/correctness dimensions of ``src/models.py:17-45``).
@@ -35,8 +35,6 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..synth import WORDS, ZH_CHARS
 from .ngram_core import (
@@ -227,13 +225,3 @@ def ppl_batch_by_lang(s: pd.Series, langs: pd.Series) -> pd.Series:
     """Per-language-model perplexity for a batch of (text, pred_lang)."""
     txt = s.fillna("").str.lower().str.slice(0, MAX_CHARS)
     return ppl_encoded_by_lang(encode_batch(txt), langs.fillna("und").to_numpy())
-
-
-@F.pandas_udf(T.DoubleType())
-def ppl_udf(text: pd.Series) -> pd.Series:
-    return ppl_batch(text)
-
-
-@F.pandas_udf(T.DoubleType())
-def ppl_by_lang_udf(text: pd.Series, pred_lang: pd.Series) -> pd.Series:
-    return ppl_batch_by_lang(text, pred_lang)

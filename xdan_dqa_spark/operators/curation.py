@@ -991,68 +991,6 @@ def gini_concentration(df: DataFrame, group_col: str = "source",
     )
 
 
-def cusum_changepoint(events: DataFrame, ts_col: str = "ts",
-                      value_col: str = "value",
-                      group_col: str = "event_type") -> DataFrame:
-    """Per-group CUSUM changepoint report over DAILY value totals:
-    (group, n_days, changepoint_day, max_abs_cusum) — the
-    level-shift detector a feed-health monitor runs per source/type
-    (a crawler that silently halves its yield flags here in one pass,
-    without any model fitting).
-
-    The classic statistic C_t = sum_{i<=t}(x_i - mean) needs the mean
-    — a division that would force floats into the cumulative sum. It
-    is kept EXACT by multiplying through by n: D_t = n*P_t - t*T
-    (P_t = running prefix sum, T = grand total, both DECIMAL), which
-    has the same argmax; the changepoint estimate is argmax_t |D_t|
-    (ties -> earliest day) and the reported magnitude is
-    max|D_t|/n — ONE float division per group at the end.
-
-    Scale shape: the day grain is first folded by a map-side-combinable
-    aggregate (shuffle rows = groups x days), and every window below
-    runs over that bounded per-group day table (hundreds of rows per
-    partition), never over raw events. Daily sums are DECIMAL(20,6) —
-    order-independent — so the whole report is oracle-exact."""
-    daily = (
-        events.groupBy(
-            F.col(group_col).alias("grp"),
-            F.to_date(F.col(ts_col)).alias("day"),
-        )
-        .agg(F.sum(F.col(value_col).cast("decimal(20,6)")).alias("x"))
-    )
-    wd = Window.partitionBy("grp").orderBy("day")
-    wall = Window.partitionBy("grp")
-    staged = (
-        daily.withColumn("t", F.row_number().over(wd))
-        .withColumn("p", F.sum("x").over(wd))
-        .withColumn("n", F.count("*").over(wall))
-        .withColumn("tot", F.sum("x").over(wall))
-    )
-    # precision discipline: day-count operands at DECIMAL(10,0), prefix/
-    # total sums at DECIMAL(26,6) — each product is exactly DECIMAL(37,6)
-    # under both engines' rules (10+26+1), and the subtraction widens to
-    # DECIMAL(38,6) WITHOUT hitting either engine's 38-digit clamp, so
-    # no scale reduction/truncation path is ever taken.
-    d = (
-        F.col("n").cast("decimal(10,0)") * F.col("p").cast("decimal(26,6)")
-        - F.col("t").cast("decimal(10,0)") * F.col("tot").cast("decimal(26,6)")
-    )
-    scored = staged.withColumn("_absd", F.abs(d))
-    pick = Window.partitionBy("grp").orderBy(F.desc("_absd"), F.asc("day"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(pick))
-        .filter(F.col("_rk") == 1)
-        .select(
-            F.col("grp").alias(group_col),
-            F.col("n").alias("n_days"),
-            F.col("day").alias("changepoint_day"),
-            F.round(
-                F.col("_absd").cast("double") / F.col("n").cast("double"), 6
-            ).alias("max_abs_cusum"),
-        )
-    )
-
-
 def scd2_intervals(df: DataFrame, key_col: str = "canonical_url",
                    ts_col: str = "crawl_ts",
                    hash_col: str = "content_hash") -> DataFrame:

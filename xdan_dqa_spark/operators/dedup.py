@@ -262,11 +262,11 @@ def _jaccard(keys: DataFrame, pairs: DataFrame, id_col: str,
 
 
 def _verified_pairs(df: DataFrame, text_col: str, id_col: str, threshold: float,
-                    max_bucket: int | None) -> DataFrame:
-    """LSH candidates verified by exact Jaccard, (a, b, jaccard), from ONE
-    shingling of ``df``: its key table is materialised once and read by
-    both the signature and the verify."""
-    keys = _key_table(df, text_col, id_col).localCheckpoint(eager=True)
+                    max_bucket: int | None, n_shingle: int = 3) -> DataFrame:
+    """LSH candidates verified by exact word-``n_shingle``-gram Jaccard,
+    (a, b, jaccard), from ONE shingling of ``df``: its key table is
+    materialised once and read by both the signature and the verify."""
+    keys = _key_table(df, text_col, id_col, n_shingle).localCheckpoint(eager=True)
     return _jaccard(keys, _candidates(keys, id_col, max_bucket), id_col, threshold)
 
 
@@ -444,7 +444,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
                         max_bucket: int | None = None) -> DataFrame:
     """All-pairs n-gram Jaccard via LSH candidates (the scalable route to
     'n-gram Jaccard dedup'); returns (a, b, jaccard)."""
-    return _verified_pairs(df, text_col, id_col, threshold, max_bucket)
+    return _verified_pairs(df, text_col, id_col, threshold, max_bucket, n)
 
 
 # ------------------------------------------------- connected components

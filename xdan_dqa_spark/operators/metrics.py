@@ -123,18 +123,6 @@ def format_summary_table(s: dict) -> str:
     return "\n".join(lines)
 
 
-def batch_metrics(scored: DataFrame) -> DataFrame:
-    """Whole-run metrics row (reference src/processor.py:404-421 shape)."""
-    return scored.agg(
-        F.count("*").alias("total_items"),
-        F.avg("score").alias("average_score"),
-        F.min("score").alias("min_score"),
-        F.max("score").alias("max_score"),
-        F.avg(F.col("keep").cast("double")).alias("success_rate"),
-        F.sum(F.col("scrub_count").cast("long")).alias("scrub_count"),
-    )
-
-
 def feature_correlation(df: DataFrame, x_col: str, y_col: str,
                         by: str) -> DataFrame:
     """Per-group Pearson correlation of two integer feature columns via

@@ -221,9 +221,3 @@ def score_webtext(
         *[f"_h_{k}" for k in h_exprs],
         *[f"_cat_{c}" for c in cat_scores],
     )
-
-
-def split_keep_drop(scored: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """F2 success/failure split (reference src/processor.py:363-402) as two
-    filters over one scored plan — single pass when the input is cached."""
-    return scored.filter(F.col("keep")), scored.filter(~F.col("keep"))

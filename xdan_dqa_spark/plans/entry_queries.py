@@ -6910,7 +6910,7 @@ def q_theta_vocab_overlap(spark, sf_dir):
     """Vocabulary overlap between the even- and odd-doc_id halves of the
     corpus by intersecting two coordinated theta samples
     (operators/sketches.py:theta_set_overlap) — the set-algebra query
-    HLL answers only by inclusion-exclusion (hll_overlap): because both
+    HLL answers only by inclusion-exclusion: because both
     halves keep exactly the terms hashing below the SAME threshold,
     sample(A) ∩ sample(B) IS sample(A∩B) — a set identity — so the
     intersection error scales with the overlap itself, not with the
