@@ -10,6 +10,8 @@ from xdan_dqa_spark.functions.category import (
     CATEGORY_PRIORITY,
     DEFAULT_CATEGORY,
     category_expr,
+    category_scores_from_lower,
+    lower_col,
 )
 
 
@@ -132,3 +134,37 @@ def test_allowed_categories_filter(spark, webtext):
     scored = score_webtext(webtext, cfg)
     bad = scored.filter(F.col("keep") & (F.col("category") != "CODE_GENERATION"))
     assert bad.count() == 0
+
+
+# Delimiter edge cases for the marker regex: adjacent markers sharing one
+# space, a marker before a final newline (no token: "me\n"), after a tab
+# (no token: "x\tyou"), at the text's start and end, upper case, and the
+# two letters whose lower() differs from case-insensitive matching.
+MARKER_EDGES = [
+    "you me", "you me you", "call me\n", "x\tyou", "you", "me and you",
+    "YOU Me\r\n", " you  me ", "İn the iſt", "def\ndef def", "",
+]
+
+
+def _marker_counts_oracle(text: str) -> dict[str, int]:
+    """Pure-Python token semantics: single-space split of the lowered
+    text, empties dropped, every token equal to a marker counts."""
+    tokens = [t for t in text.lower().split(" ") if t]
+    return {cat: sum(t in ms for t in tokens) for cat, ms in CATEGORY_MARKERS.items()}
+
+
+def test_marker_counts_match_token_oracle(spark, webtext):
+    texts = [r["text"] for r in webtext.select("text").collect()] + MARKER_EDGES
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    scores = category_scores_from_lower(lower_col("text"))
+    rows = df.select("i", *[v.alias(k) for k, v in scores.items()]).collect()
+    assert len(rows) == len(texts)
+    bad = [(texts[r["i"]][:60], cat, r[cat], want)
+           for r in rows
+           for cat, want in _marker_counts_oracle(texts[r["i"]]).items()
+           if r[cat] != want]
+    assert not bad, bad[:5]
+    edges = {texts[r["i"]]: r["CONVERSATION"] for r in rows[-len(MARKER_EDGES):]}
+    assert edges["you me"] == 2 and edges["you me you"] == 3
+    assert edges["call me\n"] == 0 and edges["x\tyou"] == 0
+    assert edges["YOU Me\r\n"] == 1 and edges[" you  me "] == 2

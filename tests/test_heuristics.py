@@ -3,10 +3,16 @@
 
 from __future__ import annotations
 
+import unicodedata
+
 import pytest
 from pyspark.sql import functions as F
 
-from xdan_dqa_spark.functions.heuristics import heuristic_columns
+from xdan_dqa_spark.functions.heuristics import (
+    _STOPWORD_RE,
+    STOPWORDS,
+    heuristic_columns,
+)
 
 def _signals(spark, text: str) -> dict[str, float]:
     df = spark.createDataFrame([(text,)], "text string")
@@ -89,3 +95,65 @@ def test_pandas_oracle_on_fixture_docs(spark, webtext):
     for _, r in pdf.iterrows():
         assert got.loc[r["url"], "nc"] == float(len(r["text"]))
         assert got.loc[r["url"], "nw"] == float(len(r["text"].split()))
+
+
+# Case and boundary edge cases for the stopword regex: 'İn' and 'iſt' match
+# 'in'/'ist' under (?iU) (simple case folding) although lower() maps them
+# elsewhere; '_' and digits are word chars, so 'the_end' and 'the2' are
+# single non-stopword words; a prefix or extension of a stopword
+# ('th', 'thee', 'dess') is no hit.
+STOPWORD_EDGES = [
+    "İn the iſt", "THE And OF", "the_end the2 theory th thee", "de des der dess dem",
+    "tab\tthe\nand\r\nof", "Für más über", "(the) [and], {of}.", "",
+    "это и в не", "في من على", "그리고 하지만 수",
+]
+
+
+def _java_word_char(ch: str) -> bool:
+    # Java (?U)\w: Alphabetic, Nd, Mn/Mc/Me, Pc and the join controls.
+    cat = unicodedata.category(ch)
+    return cat[0] == "L" or cat in ("Nd", "Nl", "Mn", "Mc", "Me", "Pc") or ch in "\u200c\u200d"
+
+
+def _java_fold(ch: str) -> str:
+    # Java's (?iU) single-char match: toLowerCase(toUpperCase(ch)) with
+    # SIMPLE (one-char) case mappings; Python's str methods use the full
+    # ones, so keep a char whose full mapping is longer than one char.
+    up = ch.upper() if len(ch.upper()) == 1 else ch
+    low = up.lower()
+    return low[0] if len(low) > 1 else low
+
+
+def _stopword_hits_oracle(text: str) -> int:
+    """Maximal word-char runs equal to a stopword under simple folding."""
+    words, run = [], ""
+    for ch in text + " ":
+        if _java_word_char(ch):
+            run += ch
+        elif run:
+            words.append(run)
+            run = ""
+    return sum("".join(map(_java_fold, w)) in STOPWORDS for w in words)
+
+
+def test_stopword_hits_match_token_oracle(spark, webtext):
+    """The prefix-factored regex counts exactly what the flat 125-word
+    alternation counts, and both equal a pure-Python word oracle."""
+    flat = r"(?iU)\b(?:" + "|".join(STOPWORDS) + r")\b"
+    texts = [r["text"] for r in webtext.select("text").collect()] + STOPWORD_EDGES
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    rows = df.select(
+        "i",
+        F.regexp_count("text", F.lit(_STOPWORD_RE)).alias("factored"),
+        F.regexp_count("text", F.lit(flat)).alias("flat"),
+    ).collect()
+    assert len(rows) == len(texts)
+    bad = [(texts[r["i"]][:60], r["factored"], r["flat"], _stopword_hits_oracle(texts[r["i"]]))
+           for r in rows
+           if not r["factored"] == r["flat"] == _stopword_hits_oracle(texts[r["i"]])]
+    assert not bad, bad[:5]
+    assert sum(r["factored"] for r in rows) > 1000  # the fixture exercises the rule
+    edges = {texts[r["i"]]: r["factored"] for r in rows[-len(STOPWORD_EDGES):]}
+    assert edges["İn the iſt"] == 3
+    assert edges["the_end the2 theory th thee"] == 0
+    assert edges["de des der dess dem"] == 4

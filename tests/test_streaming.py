@@ -183,14 +183,13 @@ def test_stream_gopher_score_equals_batch(spark):
     the 'same keep decision, streaming or batch' contract."""
     from pyspark.sql import functions as F
 
-    from xdan_dqa_spark.functions.heuristics import heuristic_columns, words_col
+    from xdan_dqa_spark.functions.heuristics import heuristic_columns
     from xdan_dqa_spark.plans.entry_queries import QUERIES, _t
 
     sf = "/root/testdata/sf0.001"
     got = sorted(map(tuple, QUERIES["stream_gopher_score"](spark, sf).collect()))
     docs = _t(spark, sf, "documents")
-    w = words_col(F.col("text"))
-    h = heuristic_columns(F.col("text"), w)
+    h = heuristic_columns("text")
     want = sorted(map(tuple, docs.select(
         "doc_id",
         h["n_words"].cast("long").alias("n_words"),

@@ -68,6 +68,16 @@ def extract_score_udf(html: pd.Series) -> pd.DataFrame:
     return out
 
 
+# Deterministic in fact, but marked nondeterministic so Catalyst never
+# copies the call: the pipeline filters on the extracted text, and a
+# deterministic UDF lets that Filter be pushed below the projection that
+# holds the call, substituting the call into it — the whole
+# extract+langid+ppl pass then ran twice per row, in two ArrowEvalPython
+# nodes. Only the html path needs this: the text path filters its input
+# column before the UDF.
+extract_score_udf = extract_score_udf.asNondeterministic()
+
+
 @F.pandas_udf(SCORE_ONLY_SCHEMA)
 def score_text_udf(text: pd.Series) -> pd.DataFrame:
     return _score_texts(text.fillna(""))

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sqltext import arg, lit
+
 # Masked-token vocabulary mirrors common web-pipeline conventions.
 PROFANITY_LEXICON = ["damn", "hell", "crap", "bastard", "bollocks", "bugger"]
 
@@ -37,25 +39,11 @@ SCRUB_RULES: list[tuple[str, str, str]] = [
 ]
 
 
-def scrub_columns(text: Column) -> tuple[Column, Column]:
-    """Return (scrubbed_text, scrub_count) columns.
-
-    Counts are taken on the intermediate text before each replacement so
-    overlapping rule classes are not double-counted.
-    """
-    t = F.coalesce(text, F.lit(""))
-    count = F.lit(0)
+def scrub_sql(text: str) -> str:
+    """The replacement chain as SQL text — 4 regex passes, no counting."""
+    t = f"coalesce({text}, '')"
     for _name, pat, repl in SCRUB_RULES:
-        count = count + F.regexp_count(t, F.lit(pat))
-        t = F.regexp_replace(t, pat, repl)
-    return t, count.cast("int")
-
-
-def scrub_expr(text: Column) -> Column:
-    """The replacement chain only (no counting) — 4 regex passes."""
-    t = F.coalesce(text, F.lit(""))
-    for _name, pat, repl in SCRUB_RULES:
-        t = F.regexp_replace(t, pat, repl)
+        t = f"regexp_replace({t}, {lit(pat)}, {lit(repl)})"
     return t
 
 
@@ -64,24 +52,45 @@ def scrub_expr(text: Column) -> Column:
 _MASKS_RE = "|".join(repl for _n, _p, repl in SCRUB_RULES)
 
 
-def mask_token_count(col: Column) -> Column:
-    """Total occurrences of the mask tokens in ``col`` — ONE regexp_count
-    scan of a literal alternation (masks are disjoint literals, so total
-    matches == per-token sum). Replaces the 4x ``replace``+length-diff
-    passes, which allocated a full string copy per mask per row
-    (measured: scrub_count +8.9s → +4.2s /240k docs at local[16])."""
-    return F.regexp_count(col, F.lit(_MASKS_RE))
-
-
-def scrub_count_cheap(original: Column, scrubbed: Column) -> Column:
+def scrub_count_cheap_sql(original: str, scrubbed: str) -> str:
     """Number of replacements made, without re-running the scrub regexes.
 
     Every match becomes exactly one mask token and no rule can destroy or
     create another rule's mask (patterns cannot match '<'-delimited
-    tokens), so: replacements = masks(scrubbed) - masks(original). Equals
-    the per-rule ``regexp_count`` sum of ``scrub_columns`` (tested), at
-    literal-scan cost instead of 4 extra regex passes."""
-    return (mask_token_count(scrubbed) - mask_token_count(F.coalesce(original, F.lit("")))).cast("int")
+    tokens), so: replacements = masks(scrubbed) - masks(original). Each
+    side is ONE regexp_count scan of the literal mask alternation (masks
+    are disjoint literals, so total matches == per-token sum); the 4x
+    ``replace``+length-diff form allocated a full string copy per mask per
+    row (measured: scrub_count +8.9s → +4.2s /240k docs at local[16]).
+    Equals the per-rule ``regexp_count`` sum of ``scrub_columns``
+    (tested), at literal-scan cost instead of 4 extra regex passes."""
+    masks = lit(_MASKS_RE)
+    return (f"CAST(regexp_count({scrubbed}, {masks})"
+            f" - regexp_count(coalesce({original}, ''), {masks}) AS INT)")
+
+
+def scrub_columns(text: Column | str) -> tuple[Column, Column]:
+    """Return (scrubbed_text, scrub_count) columns.
+
+    Counts are taken on the intermediate text before each replacement so
+    overlapping rule classes are not double-counted.
+    """
+    t = f"coalesce({arg(text)}, '')"
+    counts = []
+    for _name, pat, repl in SCRUB_RULES:
+        counts.append(f"regexp_count({t}, {lit(pat)})")
+        t = f"regexp_replace({t}, {lit(pat)}, {lit(repl)})"
+    return F.expr(t), F.expr(f"CAST({' + '.join(counts)} AS INT)")
+
+
+def scrub_expr(text: Column | str) -> Column:
+    """``scrub_sql`` as a Column."""
+    return F.expr(scrub_sql(arg(text)))
+
+
+def scrub_count_cheap(original: Column | str, scrubbed: Column | str) -> Column:
+    """``scrub_count_cheap_sql`` as a Column."""
+    return F.expr(scrub_count_cheap_sql(arg(original), arg(scrubbed)))
 
 
 def scrub_sql_expr(col_name: str) -> str:

@@ -8,7 +8,9 @@ Re-implements the reference's scoring contract deterministically:
   * keep/drop filter ``score >= min_score AND category ∈ allowed`` —
     ``filter_results`` ``src/processor.py:423-435``
 
-All of it is one Column expression tree — whole-stage codegen, no UDF.
+All of it is written once as Spark SQL text over column names
+(``*_sql``) — whole-stage codegen, no UDF; the Column functions wrap the
+same text in ``F.expr``.
 """
 
 from __future__ import annotations
@@ -17,6 +19,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..functions.sqltext import arg, dbl, lit
 
 
 @dataclass(frozen=True)
@@ -84,20 +88,25 @@ class QualityConfig:
 UNSEGMENTED = ("zh", "ja")
 
 
-def _clip01(c: Column) -> Column:
-    return F.least(F.greatest(c, F.lit(0.0)), F.lit(1.0))
+def _clip01(e: str) -> str:
+    return f"least(greatest({e}, 0.0D), 1.0D)"
 
 
-def dimension_columns(h: dict[str, Column], pred_lang: Column, lang_score: Column,
-                      ppl: Column, declared_lang: Column | None,
-                      cfg: QualityConfig) -> dict[str, Column]:
-    """The five [0,10] quality dimensions from raw signals."""
+def _isin(e: str, values: tuple[str, ...]) -> str:
+    return f"{e} IN ({', '.join(lit(v) for v in values)})"
+
+
+def dimension_sql(h: dict[str, str], pred_lang: str, lang_score: str, ppl: str,
+                  declared_lang: str | None, cfg: QualityConfig) -> dict[str, str]:
+    """The five [0,10] quality dimensions from raw signals, as SQL text
+    over the heuristic columns ``h`` (``heuristic_sql`` keys) and the
+    language/perplexity columns."""
     lang_agree = (
-        F.when(pred_lang == declared_lang, F.lit(1.0)).otherwise(F.lit(0.2))
+        f"CASE WHEN {pred_lang} = {declared_lang} THEN 1.0D ELSE 0.2D END"
         if declared_lang is not None and cfg.require_lang_match
-        else F.lit(1.0)
+        else "1.0D"
     )
-    d_lang = F.lit(10.0) * _clip01(lang_score * 2.0) * lang_agree
+    d_lang = f"10.0D * {_clip01(f'{lang_score} * 2.0D')} * {lang_agree}"
 
     # log-linear ppl ramp: ppl_good→10, ppl_bad→0, with PER-LANGUAGE
     # good/bad levels (every language incl. zh has its own frozen
@@ -107,52 +116,40 @@ def dimension_columns(h: dict[str, Column], pred_lang: Column, lang_score: Colum
     # calibration; user-set floats override) genuinely are the
     # unknown-language fallback.
     res_good, res_bad = cfg.resolved_ppl_levels()
+    good, bad = dbl(res_good), dbl(res_bad)
     if cfg.per_lang_ppl:
         from ..functions.perplexity import PPL_CALIBRATION
 
-        good = F.lit(res_good)
-        bad = F.lit(res_bad)
-        for lang, (g, b) in PPL_CALIBRATION.items():
-            if lang == "und":
-                continue
-            good = F.when(pred_lang == lang, F.lit(g)).otherwise(good)
-            bad = F.when(pred_lang == lang, F.lit(b)).otherwise(bad)
-    else:
-        good = F.lit(res_good)
-        bad = F.lit(res_bad)
-    d_fluency = F.lit(10.0) * _clip01(
-        F.lit(1.0) - F.log2(F.greatest(ppl, F.lit(1.0)) / good) / F.log2(bad / good)
-    )
+        per_lang = [(lang, g, b) for lang, (g, b) in PPL_CALIBRATION.items() if lang != "und"]
+        good = ("CASE " + " ".join(f"WHEN {pred_lang} = {lit(lang)} THEN {dbl(g)}"
+                                   for lang, g, _ in per_lang) + f" ELSE {good} END")
+        bad = ("CASE " + " ".join(f"WHEN {pred_lang} = {lit(lang)} THEN {dbl(b)}"
+                                  for lang, _, b in per_lang) + f" ELSE {bad} END")
+    d_fluency = "10.0D * " + _clip01(
+        f"1.0D - log2(greatest({ppl}, 1.0D) / {good}) / log2({bad} / {good})")
 
     # Unsegmented scripts take the CJK-ratio clarity branch and skip the
     # word-shape gates (whitespace tokenization is meaningless for them);
     # heuristics.CJK_CLASS covers han + kana, so the same signals serve
     # zh AND ja. ko/ru/ar are space-segmented: they ride the word paths,
     # with their stopwords in heuristics.STOPWORDS.
-    unseg = pred_lang.isin(*UNSEGMENTED)
-    d_clarity = F.when(
-        unseg, F.lit(10.0) * _clip01(h["cjk_ratio"] / F.lit(0.5))
-    ).otherwise(F.lit(10.0) * _clip01(h["stopword_ratio"] / F.lit(0.25)))
+    unseg = _isin(pred_lang, UNSEGMENTED)
+    d_clarity = (f"CASE WHEN {unseg} THEN 10.0D * {_clip01(h['cjk_ratio'] + ' / 0.5D')}"
+                 f" ELSE 10.0D * {_clip01(h['stopword_ratio'] + ' / 0.25D')} END")
+    alpha = f"CASE WHEN {unseg} THEN 1.0D ELSE {h['alpha_ratio']} / 0.8D END"
+    d_clean = (f"5.0D * {_clip01('1.0D - ' + h['symbol_ratio'] + ' / 0.1D')}"
+               f" + 5.0D * {_clip01(alpha)}")
 
-    d_clean = F.lit(5.0) * _clip01(F.lit(1.0) - h["symbol_ratio"] / F.lit(0.10)) + F.lit(
-        5.0
-    ) * _clip01(
-        F.when(unseg, F.lit(1.0)).otherwise(h["alpha_ratio"] / F.lit(0.8))
-    )
-
-    len_ok = (h["n_chars"] >= cfg.min_chars) & (h["n_chars"] <= cfg.max_chars)
-    mwl_ok = F.when(unseg, F.lit(True)).otherwise(
-        (h["mean_word_len"] >= cfg.min_mean_word_len)
-        & (h["mean_word_len"] <= cfg.max_mean_word_len)
-    )
+    nc, mwl = h["n_chars"], h["mean_word_len"]
+    len_ok = f"{nc} >= {dbl(cfg.min_chars)} AND {nc} <= {dbl(cfg.max_chars)}"
+    mwl_ok = (f"CASE WHEN {unseg} THEN true ELSE {mwl} >= {dbl(cfg.min_mean_word_len)}"
+              f" AND {mwl} <= {dbl(cfg.max_mean_word_len)} END")
     d_structure = (
-        F.lit(10.0)
-        * _clip01(F.lit(1.0) - h["dup_line_frac"] / F.lit(float(cfg.max_dup_line_frac)))
-        * _clip01(h["distinct_word_ratio"] / F.lit(0.25))
-        * F.when(len_ok, F.lit(1.0)).otherwise(F.lit(0.0))
-        * F.when(mwl_ok, F.lit(1.0)).otherwise(F.lit(0.3))
+        f"10.0D * {_clip01('1.0D - ' + h['dup_line_frac'] + ' / ' + dbl(cfg.max_dup_line_frac))}"
+        f" * {_clip01(h['distinct_word_ratio'] + ' / 0.25D')}"
+        f" * CASE WHEN {len_ok} THEN 1.0D ELSE 0.0D END"
+        f" * CASE WHEN ({mwl_ok}) THEN 1.0D ELSE 0.3D END"
     )
-
     return {
         "d_lang": d_lang,
         "d_fluency": d_fluency,
@@ -162,13 +159,13 @@ def dimension_columns(h: dict[str, Column], pred_lang: Column, lang_score: Colum
     }
 
 
-def normalize_score(c: Column) -> Column:
+def normalize_score_sql(e: str) -> str:
     """Reference ``_normalize_scores`` src/processor.py:302-311: clamp >10
     down to 10, leave low values untouched."""
-    return F.least(c, F.lit(10.0))
+    return f"least({e}, 10.0D)"
 
 
-def weighted_score(dims: dict[str, Column], cfg: QualityConfig) -> Column:
+def weighted_score_sql(dims: dict[str, str], cfg: QualityConfig) -> str:
     """Σ(d_i·w_i)/Σw_i rounded to 2dp (reference src/processor.py:200-221)."""
     pairs = [
         (dims["d_lang"], cfg.w_lang),
@@ -178,11 +175,8 @@ def weighted_score(dims: dict[str, Column], cfg: QualityConfig) -> Column:
         (dims["d_structure"], cfg.w_structure),
     ]
     total_w = sum(w for _, w in pairs)
-    s = None
-    for d, w in pairs:
-        term = normalize_score(d) * F.lit(w)
-        s = term if s is None else s + term
-    return F.round(s / F.lit(total_w), 2)
+    s = " + ".join(f"{normalize_score_sql(d)} * {dbl(w)}" for d, w in pairs)
+    return f"round(({s}) / {dbl(total_w)}, 2)"
 
 
 # Deterministic ImprovementSuggestion rules (reference src/models.py:165-169
@@ -190,71 +184,87 @@ def weighted_score(dims: dict[str, Column], cfg: QualityConfig) -> Column:
 # improvement_priority high=1/medium=2/low=3). Each rule fires when its
 # signal is below par; priority escalates with severity.
 _SUGGESTION_RULES = (
-    # (aspect, fire_signal, severe_signal, suggestion)
-    ("length", "n_words", 100.0, 20.0, "expand the document body"),
-    ("chars", "n_chars", 500.0, 100.0, "add substantive content"),
+    # (aspect, signal, fire_below, severe_below, suggestion, mild_priority)
+    ("length", "n_words", 100.0, 20.0, "expand the document body", 2),
+    ("chars", "n_chars", 500.0, 100.0, "add substantive content", 2),
+    ("diversity", "distinct_word_ratio", 0.5, 0.2, "reduce repetition", 3),
 )
 
 
-def suggestion_structs(h: dict[str, Column]) -> Column:
+def suggestion_sql(h: dict[str, str]) -> str:
     """array<struct<aspect,suggestion,priority>> of fired improvement rules
     — the deterministic stand-in for the LLM's improvement_suggestions
-    (reference src/models.py:165-175). Pure Column exprs."""
-    entries = []
-    for aspect, sig, fire_below, severe_below, text in _SUGGESTION_RULES:
-        entries.append(
-            F.when(
-                h[sig] < F.lit(fire_below),
-                F.struct(
-                    F.lit(aspect).alias("aspect"),
-                    F.lit(text).alias("suggestion"),
-                    F.when(h[sig] < F.lit(severe_below), F.lit(1))
-                    .otherwise(F.lit(2))
-                    .alias("priority"),
-                ),
-            ).otherwise(F.lit(None))
-        )
-    entries.append(
-        F.when(
-            h["distinct_word_ratio"] < F.lit(0.5),
-            F.struct(
-                F.lit("diversity").alias("aspect"),
-                F.lit("reduce repetition").alias("suggestion"),
-                F.when(h["distinct_word_ratio"] < F.lit(0.2), F.lit(1))
-                .otherwise(F.lit(3))
-                .alias("priority"),
-            ),
-        ).otherwise(F.lit(None))
+    (reference src/models.py:165-175)."""
+    entries = ", ".join(
+        f"CASE WHEN {h[sig]} < {dbl(fire)} THEN struct({lit(aspect)} AS aspect,"
+        f" {lit(text)} AS suggestion,"
+        f" CASE WHEN {h[sig]} < {dbl(severe)} THEN 1 ELSE {mild} END AS priority)"
+        f" ELSE NULL END"
+        for aspect, sig, fire, severe, text, mild in _SUGGESTION_RULES
     )
-    return F.filter(F.array(*entries), lambda x: x.isNotNull())
+    return f"filter(array({entries}), x -> x IS NOT NULL)"
 
 
-def keep_column(score: Column, pred_lang: Column, h: dict[str, Column],
-                declared_lang: Column | None, cfg: QualityConfig,
-                category: Column | None = None) -> Column:
+def keep_sql(score: str, pred_lang: str, h: dict[str, str], declared_lang: str | None,
+             cfg: QualityConfig, category: str | None = None) -> str:
     """F1 keep/drop predicate (reference src/processor.py:432) + hard rules."""
-    keep = score >= F.lit(cfg.min_score)
+    keep = [f"{score} >= {dbl(cfg.min_score)}"]
     if cfg.allowed_langs:
-        keep = keep & pred_lang.isin(*cfg.allowed_langs)
+        keep.append(_isin(pred_lang, cfg.allowed_langs))
     if cfg.allowed_categories and category is not None:
-        keep = keep & category.isin(*cfg.allowed_categories)
+        keep.append(_isin(category, cfg.allowed_categories))
     if cfg.require_lang_match and declared_lang is not None:
-        keep = keep & (pred_lang == declared_lang)
-    keep = (
-        keep
-        & (h["n_chars"] >= cfg.min_chars)
-        & (h["n_chars"] <= cfg.max_chars)
+        keep.append(f"{pred_lang} = {declared_lang}")
+    keep += [
+        f"{h['n_chars']} >= {dbl(cfg.min_chars)}",
+        f"{h['n_chars']} <= {dbl(cfg.max_chars)}",
         # length floor: word count for segmented scripts, CJK chars for
         # the unsegmented ones (n_cjk counts han+kana, so it serves ja)
-        & F.when(pred_lang.isin(*UNSEGMENTED),
-                 h["n_cjk"] >= cfg.min_cjk_chars).otherwise(
-            h["n_words"] >= cfg.min_words
-        )
-        & (h["dup_line_frac"] <= cfg.max_dup_line_frac)
-        & (h["symbol_ratio"] <= cfg.max_symbol_ratio)
-        & (h["distinct_word_ratio"] >= cfg.min_distinct_ratio)
-    )
-    return keep
+        f"CASE WHEN {_isin(pred_lang, UNSEGMENTED)} THEN {h['n_cjk']} >= {dbl(cfg.min_cjk_chars)}"
+        f" ELSE {h['n_words']} >= {dbl(cfg.min_words)} END",
+        f"{h['dup_line_frac']} <= {dbl(cfg.max_dup_line_frac)}",
+        f"{h['symbol_ratio']} <= {dbl(cfg.max_symbol_ratio)}",
+        f"{h['distinct_word_ratio']} >= {dbl(cfg.min_distinct_ratio)}",
+    ]
+    return " AND ".join(f"({k})" for k in keep)
+
+
+def _args(h: dict[str, Column | str]) -> dict[str, str]:
+    return {k: arg(v) for k, v in h.items()}
+
+
+def dimension_columns(h: dict[str, Column | str], pred_lang: Column | str,
+                      lang_score: Column | str, ppl: Column | str,
+                      declared_lang: Column | str | None,
+                      cfg: QualityConfig) -> dict[str, Column]:
+    """``dimension_sql`` as Columns."""
+    dims = dimension_sql(_args(h), arg(pred_lang), arg(lang_score), arg(ppl),
+                         None if declared_lang is None else arg(declared_lang), cfg)
+    return {k: F.expr(v) for k, v in dims.items()}
+
+
+def normalize_score(c: Column | str) -> Column:
+    """``normalize_score_sql`` as a Column."""
+    return F.expr(normalize_score_sql(arg(c)))
+
+
+def weighted_score(dims: dict[str, Column | str], cfg: QualityConfig) -> Column:
+    """``weighted_score_sql`` as a Column."""
+    return F.expr(weighted_score_sql(_args(dims), cfg))
+
+
+def suggestion_structs(h: dict[str, Column | str]) -> Column:
+    """``suggestion_sql`` as a Column."""
+    return F.expr(suggestion_sql(_args(h)))
+
+
+def keep_column(score: Column | str, pred_lang: Column | str, h: dict[str, Column | str],
+                declared_lang: Column | str | None, cfg: QualityConfig,
+                category: Column | str | None = None) -> Column:
+    """``keep_sql`` as a Column."""
+    return F.expr(keep_sql(arg(score), arg(pred_lang), _args(h),
+                           None if declared_lang is None else arg(declared_lang), cfg,
+                           None if category is None else arg(category)))
 
 
 def linear_probe_train(df, text_col: str = "text", lam: int = 1):

@@ -2,16 +2,21 @@
 
 One lazy DataFrame chain (SURVEY.md §3.1 Spark-native lifecycle):
 
-    read → filter(non-empty)            [P1 validation]
-         → extract_text (pandas UDF)    [input prep]
-         → langid + ppl (pandas UDFs)   [P2 replacement]
-         → heuristic struct (Col exprs) [Gopher/C4]
-         → weighted score (P4) → keep (F1) → scrub (P7 replacement)
+    read → filter(non-empty)             [P1 validation]
+         → extract + langid + ppl        [fused pandas UDF: input prep, P2]
+         → heuristic signals (SQL exprs) [Gopher/C4]
+         → category → weighted score (P4) → keep (F1) → scrub (P7)
 
-Catalyst places both pandas UDFs in adjacent ArrowEvalPython stages with
-only the needed columns projected in; everything else is whole-stage
-codegen. ``html`` is dropped immediately after extraction so the wide
-binary column never reaches a shuffle (SURVEY.md §7 Arrow-memory risk).
+Extraction, language ID and perplexity run in ONE pandas UDF, so the
+executed plan holds one ArrowEvalPython stage with only the needed
+columns projected in; everything else is whole-stage codegen. ``html``
+is dropped immediately after extraction so the wide binary column never
+reaches a shuffle (SURVEY.md §7 Arrow-memory risk).
+
+The expression layer is SQL text (``heuristic_sql``, ``category_*_sql``,
+``dimension_sql``, ``weighted_score_sql``, ``keep_sql``, ``scrub_sql``…):
+each projection level is one ``selectExpr``, so building the plan costs
+~150-250 py4j round trips instead of ~5k node-by-node Column calls.
 """
 
 from __future__ import annotations
@@ -19,22 +24,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .functions.tokenize import NONWS_PLUS
-
-from .functions.category import (
-    category_label_from_scores,
-    category_scores_from_lower,
-    lower_col,
-)
+from .functions.category import category_label_sql, category_score_sql, lower_sql
 from .functions.fused import extract_score_udf, score_text_udf
-from .functions.heuristics import heuristic_columns, words_col
-from .functions.scrub import scrub_count_cheap, scrub_expr
+from .functions.heuristics import heuristic_sql, words_sql
+from .functions.scrub import scrub_count_cheap_sql, scrub_sql
+from .functions.sqltext import dbl, lit, quote
+from .functions.tokenize import NONWS_PLUS
 from .operators.score import (
     QualityConfig,
-    dimension_columns,
-    keep_column,
-    suggestion_structs,
-    weighted_score,
+    dimension_sql,
+    keep_sql,
+    suggestion_sql,
+    weighted_score_sql,
 )
 
 SALT_BUCKETS = 64  # salt modulus for skewed-host partitioning
@@ -78,6 +79,18 @@ def salted_repartition(df: DataFrame, n_partitions: int | None = None,
     return df.repartition(F.xxhash64(F.col(url_col)), salt)
 
 
+def _project(df: DataFrame, keep: list[str],
+             new: dict[str, str]) -> tuple[DataFrame, list[str]]:
+    """One projection level as ONE ``selectExpr``: the ``keep`` columns in
+    order, and each ``new`` column (SQL text over the current columns)
+    in place of the kept column of that name, as ``withColumns`` does, or
+    appended. Returns the DataFrame and its column names."""
+    out = keep + [n for n in new if n not in keep]
+    return df.selectExpr(
+        *[f"{new[c]} AS {quote(c)}" if c in new else quote(c) for c in out]
+    ), out
+
+
 def score_webtext(
     df: DataFrame,
     cfg: QualityConfig | None = None,
@@ -91,21 +104,21 @@ def score_webtext(
     pre-extracted text (e.g. the driver's ``documents`` table).
     """
     cfg = cfg or QualityConfig()
+    cols = df.columns
+    nonempty = "extracted_text IS NOT NULL AND length(trim(extracted_text)) > 0"
+    fields = {"pred_lang": "_scored.lang", "lang_score": "_scored.lang_score",
+              "ppl": "_scored.ppl"}
 
     # Extraction + langid + ppl fused into ONE ArrowEvalPython stage — one
     # Python round trip per batch (see functions/fused.py).
     if text_col is None:
-        df = df.withColumn("_scored", extract_score_udf(F.col("html")))
         # Drop the heavy binary immediately — keeps shuffles/Arrow light.
-        df = df.drop("html")
-        df = df.withColumn("extracted_text", F.col("_scored.extracted_text"))
+        df = df.withColumn("_scored", extract_score_udf(F.col("html"))).drop("html")
+        cols = [c for c in cols if c != "html"]
+        fields = {"extracted_text": "_scored.extracted_text", **fields}
     else:
         # P1 validation runs pre-UDF here (pure JVM predicate on input text).
-        df = df.withColumn("extracted_text", F.col(text_col))
-        df = df.filter(
-            F.col("extracted_text").isNotNull()
-            & (F.length(F.trim(F.col("extracted_text"))) > 0)
-        )
+        df, cols = _project(df, cols, {"extracted_text": quote(text_col)})
         # Ship only the scored prefix through Arrow: the models read at
         # most MAX_CHARS post-lowercase chars, and lowercasing never
         # shrinks a string, so lower(s[:MAX_CHARS])[:MAX_CHARS] ==
@@ -113,111 +126,88 @@ def score_webtext(
         # JVM→Python traffic on long documents.
         from .functions.ngram_core import MAX_CHARS
 
-        df = df.withColumn(
+        df = df.filter(nonempty).withColumn(
             "_scored",
             score_text_udf(F.substring(F.col("extracted_text"), 1, MAX_CHARS)),
         )
-    text = F.col("extracted_text")
-
-    df = (
-        df.withColumn("pred_lang", F.col("_scored.lang"))
-        .withColumn("lang_score", F.col("_scored.lang_score"))
-        .withColumn("ppl", F.col("_scored.ppl"))
-        .drop("_scored")
-    )
-
+    df, cols = _project(df, cols, fields)
     # P1 validation: empty extractions are dropped before scoring columns.
-    df = df.filter(text.isNotNull() & (F.length(F.trim(text)) > 0))
+    df = df.filter(nonempty)
 
-    df = with_doc_id(df) if "url" in df.columns else df.withColumn(
-        "doc_id", F.xxhash64(text)
-    )
+    # Materialize the tokenization, every heuristic signal, the lowered
+    # text, the category scores and the scrubbed text ONCE as real
+    # columns, one projection level each. Downstream consumers (the
+    # quality_metrics struct, the five dimensions, the keep predicate, the
+    # category CASE, the token counts) then reference plain attributes —
+    # cheap to Catalyst, so CollapseProject keeps the levels apart instead
+    # of inlining the regex/array subtrees 2-3x (measured: -9s/240k docs at
+    # local[32]).
+    text = "extracted_text"
+    df, cols = _project(df, cols, {
+        "doc_id": "xxhash64(url)" if "url" in cols else f"xxhash64({text})",
+        "_words": words_sql(text),
+    })
+    h_sql = heuristic_sql(text, "_words")
+    h = {k: f"_h_{k}" for k in h_sql}
+    cat_sql = category_score_sql("_cat_t")
+    cat = {c: f"_cat_{c}" for c in cat_sql}
+    # The result: the columns so far, then the scored ones (a scored name
+    # the input already had stays in its place, as withColumn keeps it).
+    temps = {"_words", "_cat_t", *h.values(), *cat.values()}
+    outputs = ["quality_metrics", "category", "improvement_suggestions", "score", "keep",
+               "scrubbed_text", "scrub_count", "token_info"]
+    result = [c for c in cols if c not in temps] + [c for c in outputs if c not in cols]
+    df, cols = _project(df, cols, {
+        **{h[k]: v for k, v in h_sql.items()},
+        # P2's topical label (8-way DataCategory, reference
+        # src/models.py:6-15) — one regexp_count pass per category over one
+        # lowered text column.
+        "_cat_t": lower_sql(text),
+        # Scrub: materialize the replacement chain once; the count is then
+        # derived by literal mask-token counting — no second regex chain.
+        "scrubbed_text": scrub_sql(text),
+    })
 
-    # Materialize the tokenization and every heuristic signal ONCE as real
-    # columns. Downstream consumers (quality_metrics struct, the five
-    # dimensions, the keep predicate) then reference plain attributes —
-    # cheap to Catalyst, so CollapseProject dedups instead of inlining the
-    # regex/array subtrees 2-3x (measured: -9s/240k docs at local[32]).
-    df = df.withColumn("_words", words_col(text))
-    h_exprs = heuristic_columns(text, words=F.col("_words"))
-    df = df.select("*", *[v.alias(f"_h_{k}") for k, v in h_exprs.items()])
-    h = {k: F.col(f"_h_{k}") for k in h_exprs}
-
-    declared = F.col(declared_lang_col) if declared_lang_col and declared_lang_col in df.columns else None
-    dims = dimension_columns(h, F.col("pred_lang"), F.col("lang_score"), F.col("ppl"), declared, cfg)
-
-    df = df.withColumn(
-        "quality_metrics",
-        F.struct(
-            h["n_chars"].alias("n_chars"),
-            h["n_words"].alias("n_words"),
-            h["mean_word_len"].alias("mean_word_len"),
-            h["stopword_ratio"].alias("stopword_ratio"),
-            h["symbol_ratio"].alias("symbol_ratio"),
-            h["dup_line_frac"].alias("dup_line_frac"),
-            h["alpha_ratio"].alias("alpha_ratio"),
-            F.col("lang_score").alias("lang_score"),
-            F.col("ppl").alias("ppl"),
-        ),
-    )
-    # P2's topical label (8-way DataCategory, reference src/models.py:6-15)
-    # — one regexp_count pass per category over one materialized lowered
-    # text column. Scores are materialized as real columns too (same trick
-    # as the heuristics above): the argmax CASE references each score ~9×,
-    # and attributes are free to duplicate.
-    df = df.withColumn("_cat_t", lower_col(text))
-    cat_scores = category_scores_from_lower(F.col("_cat_t"))
-    df = df.select("*", *[v.alias(f"_cat_{c}") for c, v in cat_scores.items()])
-    df = df.withColumn(
-        "category",
-        category_label_from_scores({c: F.col(f"_cat_{c}") for c in cat_scores}),
-    )
-
-    # ProcessingMetadata.improvement_suggestions analogue (reference
-    # src/models.py:165-175) — fired-rule structs, pure exprs over the
-    # already-materialized heuristics.
-    df = df.withColumn("improvement_suggestions", suggestion_structs(h))
-
-    df = df.withColumn("score", weighted_score(dims, cfg))
-    df = df.withColumn(
-        "keep",
-        keep_column(F.col("score"), F.col("pred_lang"), h, declared, cfg,
-                    category=F.col("category")),
-    )
-
-    # Scrub: materialize the replacement chain once, then derive the count
-    # by literal mask-token counting — no second run of the regex chain.
-    df = df.withColumn("scrubbed_text", scrub_expr(text))
-    df = df.withColumn("scrub_count", scrub_count_cheap(text, F.col("scrubbed_text")))
-
+    declared = (declared_lang_col if declared_lang_col and declared_lang_col in cols
+                else None)
+    dims = dimension_sql(h, "pred_lang", "lang_score", "ppl", declared, cfg)
+    metrics = [*[h[k] for k in ("n_chars", "n_words", "mean_word_len", "stopword_ratio",
+                                "symbol_ratio", "dup_line_frac", "alpha_ratio")],
+               "lang_score", "ppl"]
     # Token-accounting envelope (reference TokenInfo src/data_types.py:6-12,
     # cost formula src/data_transformer.py:181-192): input = tokens of the
     # extracted text, output = tokens of the scrubbed text we publish.
     # out_tok counts \S+ runs directly — value-identical to
-    # size(words_col(...)) (verified 0 mismatches / 240k docs incl. PII
+    # size(words_sql(...)) (verified 0 mismatches / 240k docs incl. PII
     # rows) but allocation-free: the split materializes a full string
     # array per row just to take its size. (A pure-arithmetic derivation
     # from input tokens is UNSOUND: a phone match can span whitespace, so
-    # scrubbing merges tokens.) Measured cost of this column: 5.8 s /
-    # 240k docs at local[16] in one window, indistinguishable from
-    # hypervisor noise interleaved — see BASELINE.md round-3 notes.
-    in_tok = F.col("_h_n_words").cast("long")
-    out_tok = F.regexp_count(F.col("scrubbed_text"), F.lit(NONWS_PLUS)).cast("long")
-    df = df.withColumn(
-        "token_info",
-        F.struct(
-            in_tok.alias("input_tokens"),
-            out_tok.alias("output_tokens"),
-            (in_tok + out_tok).alias("total_tokens"),
-            (
-                in_tok.cast("double") * F.lit(cfg.price_in_per_million / 1e6)
-                + out_tok.cast("double") * F.lit(cfg.price_out_per_million / 1e6)
-            ).alias("estimated_cost"),
-            F.lit(cfg.currency).alias("currency"),
-        ),
-    )
-    return df.drop(
-        "_words", "_cat_t",
-        *[f"_h_{k}" for k in h_exprs],
-        *[f"_cat_{c}" for c in cat_scores],
-    )
+    # scrubbing merges tokens.)
+    in_tok = f"CAST({h['n_words']} AS BIGINT)"
+    out_tok = f"CAST(regexp_count(scrubbed_text, {lit(NONWS_PLUS)}) AS BIGINT)"
+    df, cols = _project(df, cols, {
+        **{cat[c]: v for c, v in cat_sql.items()},
+        "quality_metrics": "struct(" + ", ".join(
+            f"{m} AS {m.removeprefix('_h_')}" for m in metrics) + ")",
+        # ProcessingMetadata.improvement_suggestions analogue (reference
+        # src/models.py:165-175) — fired-rule structs.
+        "improvement_suggestions": suggestion_sql(h),
+        "score": weighted_score_sql(dims, cfg),
+        "scrub_count": scrub_count_cheap_sql(text, "scrubbed_text"),
+        "token_info": (
+            f"struct({in_tok} AS input_tokens, {out_tok} AS output_tokens,"
+            f" {in_tok} + {out_tok} AS total_tokens,"
+            f" CAST({in_tok} AS DOUBLE) * {dbl(cfg.price_in_per_million / 1e6)}"
+            f" + CAST({out_tok} AS DOUBLE) * {dbl(cfg.price_out_per_million / 1e6)}"
+            f" AS estimated_cost, {lit(cfg.currency)} AS currency)"),
+    })
+
+    # The argmax CASE repeats the max over the materialized scores 16×;
+    # attributes are free to duplicate. keep tests the same CASE when
+    # categories are restricted.
+    label = category_label_sql(cat)
+    df, _ = _project(df, result, {
+        "category": label,
+        "keep": keep_sql("score", "pred_lang", h, declared, cfg, category=f"({label})"),
+    })
+    return df

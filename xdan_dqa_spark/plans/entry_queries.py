@@ -2170,11 +2170,10 @@ def q_cc_cluster_histogram(spark, sf_dir):
 # whitespace/symbol strips; \p{{L}} is RE2-portable for alpha_ratio.
 
 def q_gopher_stats(spark, sf_dir):
-    from ..functions.heuristics import heuristic_columns, words_col
+    from ..functions.heuristics import heuristic_columns
 
     docs = _t(spark, sf_dir, "documents")
-    w = words_col(F.col("text"))
-    h = heuristic_columns(F.col("text"), w)
+    h = heuristic_columns("text")
     return docs.select(
         "doc_id",
         h["n_words"].cast("long").alias("n_words"),
@@ -4115,7 +4114,7 @@ def q_stream_gopher_score(spark, sf_dir):
     naming and staging discipline mirror q_stream_windowed_agg
     (idempotent sf-keyed stage dir + atomic spec marker; per-invocation
     memory-sink name; immediate detach + view drop)."""
-    from ..functions.heuristics import heuristic_columns, words_col
+    from ..functions.heuristics import heuristic_columns
 
     batch = _t(spark, sf_dir, "documents")
     stage = "/tmp/xdan_stream_docs_" + sf_dir.strip("/").replace("/", "_")
@@ -4131,8 +4130,7 @@ def q_stream_gopher_score(spark, sf_dir):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{stage}/documents")
     )
-    w = words_col(F.col("text"))
-    h = heuristic_columns(F.col("text"), w)
+    h = heuristic_columns("text")
     scored = src.select(
         "doc_id",
         h["n_words"].cast("long").alias("n_words"),
@@ -4493,7 +4491,7 @@ def q_incremental_curation_e2e(spark, sf_dir):
     rule, dedup_exact_best); the chain proves they compose. Scale
     shapes are preserved: md5 diff join, map-only heuristics,
     struct-max dedup — no windows over raw docs anywhere."""
-    from ..functions.heuristics import heuristic_columns, words_col
+    from ..functions.heuristics import heuristic_columns
     from ..operators.curation import snapshot_diff
     from ..operators.dedup import exact_dedup_best
 
@@ -4511,7 +4509,7 @@ def q_incremental_curation_e2e(spark, sf_dir):
         .select("doc_id")
     )
     work = new.join(todo, "doc_id", "left_semi")
-    h = heuristic_columns(F.col("text"), words_col(F.col("text")))
+    h = heuristic_columns("text")
     kept = work.select(
         "doc_id", "text",
         h["n_words"].cast("long").alias("_w"),
@@ -5823,11 +5821,10 @@ def q_keep_ab_test(spark, sf_dir):
     source A's keep rate REALLY lower, or binomial noise?); pooled-SE
     z from exact integer counts, one fixed IEEE sequence per pair,
     |z| > 1.96 at alpha = 0.05."""
-    from ..functions.heuristics import heuristic_columns, words_col
+    from ..functions.heuristics import heuristic_columns
 
     d = _t(spark, sf_dir, "documents")
-    w = words_col(F.col("text"))
-    h = heuristic_columns(F.col("text"), w)
+    h = heuristic_columns("text")
     keep = (
         (F.round(h["symbol_ratio"], 9) <= 0.1)
         & (h["n_words"].cast("long") >= 5)
@@ -6366,11 +6363,10 @@ def q_simpson_probe(spark, sf_dir):
     difference). ALL sign logic is exact integer cross-multiplication
     (k_a·n_b vs k_b·n_a) — no float anywhere; returns (a, b,
     overall_sign, n_langs_compared, n_reversed, full_reversal)."""
-    from ..functions.heuristics import heuristic_columns, words_col
+    from ..functions.heuristics import heuristic_columns
 
     d = _t(spark, sf_dir, "documents")
-    w = words_col(F.col("text"))
-    h = heuristic_columns(F.col("text"), w)
+    h = heuristic_columns("text")
     keep = (
         (F.round(h["symbol_ratio"], 9) <= 0.1)
         & (h["n_words"].cast("long") >= 5)
@@ -6601,11 +6597,10 @@ def q_mix_rate_decomposition(spark, sf_dir):
     terminal rounding (self-checking output). Every share/rate is an
     exact-integer ratio; each stratum term is ONE fixed IEEE sequence
     rounded 9 dp and DECIMAL-summed."""
-    from ..functions.heuristics import heuristic_columns, words_col
+    from ..functions.heuristics import heuristic_columns
 
     d = _t(spark, sf_dir, "documents")
-    w = words_col(F.col("text"))
-    h = heuristic_columns(F.col("text"), w)
+    h = heuristic_columns("text")
     keep = (
         (F.round(h["symbol_ratio"], 9) <= 0.1)
         & (h["n_words"].cast("long") >= 5)
@@ -6768,12 +6763,11 @@ def q_keep_discriminative_terms(spark, sf_dir):
     rollout publishes next to its keep rate. Counts exact integers;
     one fixed IEEE sequence per term rounded 6 dp; selection by the
     rounded score with term tie-break."""
-    from ..functions.heuristics import heuristic_columns, words_col
+    from ..functions.heuristics import heuristic_columns
     from ..functions.tokenize import WS_PLUS
 
     d = _t(spark, sf_dir, "documents")
-    w = words_col(F.col("text"))
-    h = heuristic_columns(F.col("text"), w)
+    h = heuristic_columns("text")
     keep = (
         (F.round(h["symbol_ratio"], 9) <= 0.1)
         & (h["n_words"].cast("long") >= 5)
@@ -7974,11 +7968,10 @@ def q_slot_apportionment(spark, sf_dir):
     precisely — no float rounding drift ever leaves slots unassigned.
     All-integer; the remainder rank is a window over the ≤#sources
     aggregate, never the corpus."""
-    from ..functions.heuristics import heuristic_columns, words_col
+    from ..functions.heuristics import heuristic_columns
 
     d = _t(spark, sf_dir, "documents")
-    w = words_col(F.col("text"))
-    h = heuristic_columns(F.col("text"), w)
+    h = heuristic_columns("text")
     keep = (
         (F.round(h["symbol_ratio"], 9) <= 0.1)
         & (h["n_words"].cast("long") >= 5)
@@ -8118,11 +8111,10 @@ def q_filter_cascade_plan(spark, sf_dir):
     drop_count·1000 DIV cost — integer, so the ordering never rides a
     float ULP. One scan computes every rule's flag; counts fold
     map-side."""
-    from ..functions.heuristics import heuristic_columns, words_col
+    from ..functions.heuristics import heuristic_columns
 
     d = _t(spark, sf_dir, "documents")
-    w = words_col(F.col("text"))
-    h = heuristic_columns(F.col("text"), w)
+    h = heuristic_columns("text")
     rules = [
         ("min_words", h["n_words"].cast("long") < 5, 2),
         ("symbol_ratio", F.round(h["symbol_ratio"], 9) > 0.1, 1),
@@ -8211,11 +8203,10 @@ def q_keep_rate_wilson(spark, sf_dir):
     web keep rates live). Counts are exact integers; the interval is
     one fixed IEEE sequence per source (z = 1.96 literal) rounded 6
     dp."""
-    from ..functions.heuristics import heuristic_columns, words_col
+    from ..functions.heuristics import heuristic_columns
 
     d = _t(spark, sf_dir, "documents")
-    w = words_col(F.col("text"))
-    h = heuristic_columns(F.col("text"), w)
+    h = heuristic_columns("text")
     keep = (
         (F.round(h["symbol_ratio"], 9) <= 0.1)
         & (h["n_words"].cast("long") >= 5)
