@@ -32,3 +32,18 @@ def scored(spark, webtext):
     from xdan_dqa_spark.pipeline import score_webtext
 
     return score_webtext(webtext).cache()
+
+
+@pytest.fixture()
+def full_plan_strings(spark):
+    """Untruncated operator field lists in plan strings for one test: by
+    default each operator's expressions are cut at the 25th, so an
+    expression past it goes unseen."""
+    key = "spark.sql.debug.maxToStringFields"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "100000")
+    yield
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)

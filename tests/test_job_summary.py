@@ -235,10 +235,12 @@ def _sql_executions(spark):
             for e in (execs.apply(i) for i in range(execs.size()))]
 
 
-def test_job_scores_each_document_once(spark, webtext, tmp_path, monkeypatch, capsys):
-    """Exactly one executed SQL plan per job run holds the fused Arrow UDF:
-    the write. Lineage, the summary and the RESULT read-back must not
-    evaluate the scoring plan again."""
+def test_job_scores_each_document_once(spark, webtext, tmp_path, monkeypatch, capsys,
+                                       full_plan_strings):
+    """The executed SQL plans of one job run hold exactly one fused Arrow
+    UDF node, in the write. Lineage, the summary and the RESULT read-back
+    must not evaluate the scoring plan again, and the write must not run
+    the UDF twice per row."""
     inputs = _webtext_inputs(webtext, tmp_path)
     before = {i for i, _ in _sql_executions(spark)}
     out = _run_in_process(monkeypatch, capsys, [
@@ -246,10 +248,14 @@ def test_job_scores_each_document_once(spark, webtext, tmp_path, monkeypatch, ca
     assert _total_items(out) == 200
     plans = [p for i, p in _sql_executions(spark) if i not in before]
     assert len(plans) > 1
-    assert sum("ArrowEvalPython" in p for p in plans) == 1
+    # The status store keeps the formatted explain, which details each
+    # node once under a "(<id>) <node>" header line.
+    nodes = [p for p in plans for _ in re.finditer(r"^\(\d+\) ArrowEvalPython\b", p, re.M)]
+    assert len(nodes) == 1
+    assert "InsertIntoHadoopFsRelationCommand" in nodes[0]
 
 
-def test_dedup_job_shingles_each_document_once(spark, tmp_path):
+def test_dedup_job_shingles_each_document_once(spark, tmp_path, full_plan_strings):
     """One dedup_job --method minhash run executes the shingle extraction
     (regexp_extract_all) in exactly one SQL plan, and not in the write:
     the materialised shingle-key table feeds both the signature and the

@@ -4,8 +4,6 @@ plan built from SQL text in a few hundred py4j round trips."""
 
 from __future__ import annotations
 
-import pytest
-
 # Textual counts in the executed plan of score_webtext(fixture). A level
 # collapsed into its consumer re-inlines a regex/array subtree 2-3x and
 # raises these; the column-API build before the SQL-text one had the same
@@ -19,19 +17,6 @@ LOWER_CALLS = 2    # the lowered text once, the tokens in distinct_word_ratio on
 # leaves room for small pipeline edits, not for a return to node-by-node
 # Column construction.
 MAX_BUILD_ROUND_TRIPS = 300
-
-
-@pytest.fixture()
-def full_plan_strings(spark):
-    # Untruncated operator field lists, so every expression is counted.
-    key = "spark.sql.debug.maxToStringFields"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "100000")
-    yield
-    if old is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, old)
 
 
 def test_score_webtext_plan_shape(spark, webtext, full_plan_strings):

@@ -1,8 +1,10 @@
 """The query registry: every query but the flagship has a DuckDB twin,
 the twins are plain SQL strings, fetching them needs no SparkSession,
 every twin reads only the `documents` table, bar the two reference
-contracts that aggregate `events`, and every package module is imported
-from something that runs outside the tests."""
+contracts that aggregate `events`, every package module is imported
+from something that runs outside the tests, and every top-level
+definition in plans/entry_queries.py is reached from what is imported
+from it."""
 
 from __future__ import annotations
 
@@ -15,6 +17,17 @@ import sys
 from tests.test_plan_audit import SF
 
 REPO = os.path.join(os.path.dirname(__file__), "..")
+ROOT = os.path.abspath(REPO)
+
+
+def _parse(path):
+    """The AST of the repo-relative source file ``path``."""
+    with open(os.path.join(ROOT, path)) as fh:
+        return ast.parse(fh.read(), path)
+
+
+def _rel(path):
+    return os.path.relpath(path, ROOT).replace(os.sep, "/")
 
 
 def test_every_query_but_the_flagship_has_a_twin():
@@ -92,15 +105,10 @@ def test_every_package_module_is_reached():
     scripts/ and __spark_entry__.py; every xdan_dqa_spark module other
     than an __init__.py must be reached, bar UNREACHED_ALLOWED. Parses
     source only: no module is imported."""
-    root = os.path.abspath(REPO)
-
-    def rel(path):
-        return os.path.relpath(path, root).replace(os.sep, "/")
-
     files = {}  # dotted module name -> repo-relative path
     for pattern in ("xdan_dqa_spark/**/*.py", "perfbench/*.py"):
-        for path in glob.glob(os.path.join(root, pattern), recursive=True):
-            r = rel(path)
+        for path in glob.glob(os.path.join(ROOT, pattern), recursive=True):
+            r = _rel(path)
             parts = r[:-3].split("/")
             if parts[-1] == "__init__":
                 parts.pop()
@@ -109,10 +117,8 @@ def test_every_package_module_is_reached():
     def imported(path, name):
         """Dotted names of the repo modules ``path`` (module ``name``) imports."""
         is_pkg = path.endswith("__init__.py")
-        with open(os.path.join(root, path)) as fh:
-            tree = ast.parse(fh.read(), path)
         out = set()
-        for node in ast.walk(tree):
+        for node in ast.walk(_parse(path)):
             if isinstance(node, ast.Import):
                 cands = [a.name for a in node.names]
             elif isinstance(node, ast.ImportFrom):
@@ -129,9 +135,9 @@ def test_every_package_module_is_reached():
                 out.update(".".join(parts[:i]) for i in range(1, len(parts) + 1))
         return {m for m in out if m in files}
 
-    roots = [rel(p) for pattern in ("jobs/*.py", "perfbench/*.py", "scripts/*.py",
-                                    "bench.py", "__spark_entry__.py")
-             for p in glob.glob(os.path.join(root, pattern))]
+    roots = [_rel(p) for pattern in ("jobs/*.py", "perfbench/*.py", "scripts/*.py",
+                                     "bench.py", "__spark_entry__.py")
+             for p in glob.glob(os.path.join(ROOT, pattern))]
     todo = [(p, p[:-3].replace("/", ".").removesuffix(".__init__")) for p in roots]
     seen = set(roots)
     while todo:
@@ -149,3 +155,55 @@ def test_every_package_module_is_reached():
     stale = [p for p in UNREACHED_ALLOWED if p not in unreached]
     assert not dead, f"package modules nothing outside the tests imports: {dead}"
     assert not stale, f"allow-listed modules that are reached now: {stale}"
+
+
+ENTRY_QUERIES = "xdan_dqa_spark/plans/entry_queries.py"
+
+
+def test_every_entry_queries_definition_is_reached():
+    """Every top-level function, class and assignment in
+    plans/entry_queries.py is reached, through the names each definition
+    uses, from a name that a test, bench.py or __spark_entry__.py imports
+    from it (``QUERIES`` and ``oracle_map`` reach all of ``_REGISTRY``).
+    A query deleted from the registry must take its helpers with it.
+    Parses source only: no module is imported."""
+    uses = {}  # top-level name -> names its definition uses
+    for st in _parse(ENTRY_QUERIES).body:
+        if isinstance(st, (ast.FunctionDef, ast.ClassDef)):
+            targets = [st.name]
+        elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+            lhs = st.targets if isinstance(st, ast.Assign) else [st.target]
+            targets = [n.id for t in lhs for n in ast.walk(t) if isinstance(n, ast.Name)]
+        else:
+            continue
+        names = {n.id for n in ast.walk(st) if isinstance(n, ast.Name)}
+        for t in targets:
+            uses.setdefault(t, set()).update(names)
+
+    module = ENTRY_QUERIES[:-3].replace("/", ".")
+    package, _, leaf = module.rpartition(".")
+    roots = set()
+    for path in [_rel(p) for p in glob.glob(os.path.join(ROOT, "tests", "*.py"))] + [
+            "bench.py", "__spark_entry__.py"]:
+        tree = _parse(path)
+        aliases = set()  # local names bound to the module itself
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == module:
+                roots.update(a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom) and node.module == package:
+                aliases.update(a.asname or a.name for a in node.names if a.name == leaf)
+            elif isinstance(node, ast.Import):
+                aliases.update(a.asname for a in node.names if a.name == module and a.asname)
+        roots.update(node.attr for node in ast.walk(tree)
+                     if isinstance(node, ast.Attribute)
+                     and isinstance(node.value, ast.Name) and node.value.id in aliases)
+
+    reached, todo = set(), list(roots)
+    while todo:
+        name = todo.pop()
+        if name in reached or name not in uses:
+            continue
+        reached.add(name)
+        todo.extend(uses[name] - reached)
+    orphans = sorted(set(uses) - reached)
+    assert not orphans, f"entry_queries definitions nothing reaches: {orphans}"

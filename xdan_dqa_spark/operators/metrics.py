@@ -304,8 +304,7 @@ def neyman_allocation(df: DataFrame, stratum_col: str, y_col: str,
     n, sd, alloc_k) with alloc_k proportional to n_h * sd_h — the
     survey-sampling allocation that minimizes estimator variance for a
     fixed budget (high-variance strata get more of the sample than
-    proportional allocation would give). Feed alloc_k to
-    s3_fixed_n_per_group for the draw itself.
+    proportional allocation would give).
 
     Determinism: per-stratum sd comes from EXACT DECIMAL moment sums
     (population variance closed form) with ONE sqrt; the allocation

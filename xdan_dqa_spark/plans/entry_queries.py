@@ -319,29 +319,6 @@ SELECT lang,
 FROM documents GROUP BY lang
 """
 
-# A8 per-source language roster: sorted-distinct set agg rendered as a
-# canonical CSV string. collect_set here is BOUNDED (≤ #languages per
-# group — an enum, not row-scaled), so the aggregation state stays tiny
-# at any corpus size; the sort canonicalizes engine-dependent set order.
-
-def q_a8_langs_per_source(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(
-            F.array_join(F.array_sort(F.collect_set("lang")), ",").alias("langs"),
-            F.count_distinct("lang").alias("n_langs"),
-        )
-    )
-
-
-SQL_A8_LANGS = """
-SELECT source,
-       string_agg(DISTINCT lang, ',' ORDER BY lang) AS langs,
-       COUNT(DISTINCT lang) AS n_langs
-FROM documents GROUP BY source
-"""
-
 # P2 topical category classification (reference DataCategory
 # src/models.py:6-15, config/category.yaml:2-41) — deterministic 8-way
 # marker-scoring replacement for the LLM's category pick.
@@ -573,27 +550,6 @@ def q_o1_sort_limit(spark, sf_dir):
 
 
 SQL_O1 = "SELECT doc_id, source, n_chars FROM documents ORDER BY doc_id LIMIT 100"
-
-# O2 top-N per group (row_number window — the per-language "best docs"
-# report; one shuffle on lang, per-partition heap, deterministic
-# tie-break on doc_id ASC)
-
-def q_o2_topn_per_group(spark, sf_dir):
-    w = Window.partitionBy("lang").orderBy(F.desc("n_chars"), F.asc("doc_id"))
-    return (
-        _t(spark, sf_dir, "documents")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("lang", "doc_id", "n_chars", "rn")
-    )
-
-
-SQL_O2_TOPN = """
-SELECT lang, doc_id, n_chars,
-       row_number() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id ASC) AS rn
-FROM documents
-QUALIFY rn <= 3
-"""
 
 # S3 deterministic sampling (reference src/data_loader.py:97-100, seed=42)
 
@@ -849,30 +805,6 @@ SQL_S3_STRATIFIED = """
 SELECT doc_id, lang, source FROM documents
 WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100
       < CASE lang WHEN 'en' THEN 5 WHEN 'zh' THEN 25 ELSE 10 END
-"""
-
-# S3 variant 2: EXACTLY-N-per-stratum sample — row_number over an
-# md5-keyed order inside each stratum (deterministic "shuffle"), ≤ N
-# kept. One shuffle on the stratum key; rate-based sampling can't
-# guarantee exact counts, this can (the reference's num_samples knob
-# per dataset, re-expressed per-stratum).
-
-def q_s3_fixed_n_per_group(spark, sf_dir):
-    w = Window.partitionBy("lang").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    return (
-        _t(spark, sf_dir, "documents")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 10)
-        .select("doc_id", "lang")
-    )
-
-
-SQL_S3_FIXED_N = """
-SELECT doc_id, lang FROM documents
-QUALIFY row_number() OVER (PARTITION BY lang
-                           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) <= 10
 """
 
 # P5 unique-id generation, oracle-portable form (pipeline.uid64_md5):
@@ -1751,69 +1683,6 @@ SQL_SINK_ROUNDTRIP = "SELECT doc_id, text, lang, source, n_chars FROM documents"
 
 
 # ------------------------------------------------------------- round-5 batch 2
-# A9 ROLLUP report: the (source × lang) ingest cube with subtotal and
-# grand-total levels in ONE pass — Spark's rollup() emits all levels from
-# a single shuffle with partial aggregation; computing each level as its
-# own groupBy would re-scan the fact table three times. grouping_id()
-# disambiguates rollup-NULLs from data-NULLs engine-portably (Spark's
-# bit order matches SQL-standard GROUPING(source, lang)).
-
-def q_a9_rollup_report(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "documents")
-        .rollup("source", "lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            _dec_sum(F.col("n_chars"), "total_chars"),
-            F.grouping_id().cast("long").alias("gid"),
-        )
-        .select(
-            F.coalesce(F.col("source"), F.lit("ALL")).alias("source"),
-            F.coalesce(F.col("lang"), F.lit("ALL")).alias("lang"),
-            "gid", "n_docs", "total_chars",
-        )
-    )
-
-
-SQL_A9_ROLLUP = """
-SELECT CASE WHEN GROUPING(source) = 1 THEN 'ALL' ELSE source END AS source,
-       CASE WHEN GROUPING(lang) = 1 THEN 'ALL' ELSE lang END AS lang,
-       CAST(GROUPING(source, lang) AS BIGINT) AS gid,
-       COUNT(*) AS n_docs,
-       CAST(SUM(CAST(n_chars AS DECIMAL(20,6))) AS DOUBLE) AS total_chars
-FROM documents GROUP BY ROLLUP(source, lang)
-"""
-
-# A10 equal-count quality tiles: ntile(4) PER LANGUAGE over (n_chars,
-# doc_id) — the quality-tier bucketing step of a training-mix builder
-# (keep top quartile, downsample the rest). The window partitions by
-# lang, so the sort is per-stratum, never global; at extreme scale where
-# one language dominates, derive tile BOUNDARIES from the
-# a6_token_quantiles histogram instead and assign map-only (approximate
-# equal-count); ntile is kept for its exact equal-count semantics on
-# bounded strata. Output is the bounded (lang × 4) tier report.
-
-def q_a10_quality_tiles(spark, sf_dir):
-    w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
-    tiled = _t(spark, sf_dir, "documents").select(
-        "lang", "n_chars", F.ntile(4).over(w).cast("long").alias("tile")
-    )
-    return tiled.groupBy("lang", "tile").agg(
-        F.count("*").alias("n_docs"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-    )
-
-
-SQL_A10_TILES = """
-SELECT lang, tile, COUNT(*) AS n_docs,
-       MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
-FROM (SELECT lang, n_chars,
-             ntile(4) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS tile
-      FROM documents)
-GROUP BY lang, tile
-"""
-
 # Edit-distance near-dup refine (operators/dedup.py levenshtein_pairs):
 # LSH candidates verified by levenshtein on a fixed 200-char prefix —
 # the character-level complement to set-based Jaccard for boilerplate
@@ -1914,85 +1783,6 @@ SELECT doc_id, COUNT(*) AS n_shingles,
        round(CAST(SUM(CASE WHEN docs > 1 THEN 1 ELSE 0 END) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE), 9) AS shared_frac
 FROM cnt GROUP BY doc_id
-"""
-
-# A13 trimmed mean (robust per-language length statistic): drop the
-# bottom and top 5% BY RANK (deterministic (n_chars, doc_id) order —
-# value-threshold trims are ambiguous on ties), then an exact DECIMAL
-# mean over the kept band. One window shuffle on the stratum key + one
-# hash aggregate; at extreme stratum sizes, derive the trim boundaries
-# from the a6-style value-compressed histogram instead (bounded state)
-# and trim map-only.
-
-def q_a13_trimmed_mean(spark, sf_dir):
-    w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
-    wc = Window.partitionBy("lang")
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("lang", "n_chars", "doc_id")
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("_n", F.count("*").over(wc))
-    )
-    cut = F.floor(F.col("_n") * F.lit(0.05)).cast("long")
-    kept = d.filter((F.col("_rn") > cut) & (F.col("_rn") <= F.col("_n") - cut))
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("n_kept"),
-        (F.sum(F.col("n_chars").cast("decimal(38,0)")).cast("double")
-         / F.count("*").cast("double")).alias("trimmed_mean_chars"),
-    )
-
-
-SQL_A13_TRIMMED = """
-WITH r AS (
-  SELECT lang, n_chars,
-         ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
-         COUNT(*) OVER (PARTITION BY lang) AS n
-  FROM documents
-)
-SELECT lang, COUNT(*) AS n_kept,
-       CAST(SUM(CAST(n_chars AS HUGEINT)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-         AS trimmed_mean_chars
-FROM r
-WHERE rn > CAST(floor(n * 0.05) AS BIGINT) AND rn <= n - CAST(floor(n * 0.05) AS BIGINT)
-GROUP BY lang
-"""
-
-# A14 share-of-total mix report: each source's share of corpus chars,
-# ranked. The unpartitioned window runs over the ALREADY-AGGREGATED
-# bounded source table (≤ #sources rows), never the fact table — the
-# grand total rides the same window pass as exact DECIMAL, so the share
-# division is one correctly-rounded double op per row.
-
-def q_a14_source_share(spark, sf_dir):
-    agg = (
-        _t(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(F.sum(F.col("n_chars").cast("decimal(38,0)")).alias("_chars"),
-             F.count("*").alias("n_docs"))
-    )
-    w = Window.partitionBy()
-    share = (F.col("_chars").cast("double")
-             / F.sum("_chars").over(w).cast("double"))
-    rnk = F.rank().over(
-        Window.partitionBy().orderBy(F.col("_chars").desc(), F.col("source"))
-    )
-    return agg.select(
-        "source", "n_docs",
-        F.col("_chars").cast("double").alias("total_chars"),
-        F.round(share, 9).alias("share"),
-        rnk.cast("long").alias("rank"),
-    )
-
-
-SQL_A14_SHARE = """
-WITH a AS (
-  SELECT source, COUNT(*) AS n_docs, SUM(CAST(n_chars AS HUGEINT)) AS chars
-  FROM documents GROUP BY source
-)
-SELECT source, n_docs, CAST(chars AS DOUBLE) AS total_chars,
-       round(CAST(chars AS DOUBLE) / CAST(SUM(chars) OVER () AS DOUBLE), 9) AS share,
-       CAST(RANK() OVER (ORDER BY chars DESC, source) AS BIGINT) AS rank
-FROM a
 """
 
 
@@ -2279,8 +2069,8 @@ FROM documents GROUP BY lang, length(bin(n_chars))
 # ------------------------------------------------------------- round-5 batch 7
 # Training-data curation specials (operators/curation.py): benchmark
 # decontamination, OOV profiling, mixture rebalancing, context-window
-# chunking, sequence packing, char-diversity gibberish signal, and
-# quality-weighted deterministic sampling. The benchmark set is carved
+# chunking, sequence packing and the char-diversity gibberish signal.
+# The benchmark set is carved
 # deterministically from the corpus (doc_id % 97 == 0) so the query is
 # self-contained on the fixture tables.
 
@@ -2441,33 +2231,6 @@ SELECT lang, COUNT(*) AS n_docs, SUM(n_distinct) AS sum_distinct_chars,
                            AS DECIMAL(20,9))) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE), 9) AS mean_simpson
 FROM pd GROUP BY lang
-"""
-
-# Quality-weighted deterministic sampling: keep probability proportional
-# to n_chars (capped at 1 above 3000 chars), decided by the same md5
-# bucket discipline as s3_stratified_sample — PURE integer comparison
-# (bucket·3000 < n_chars·10⁶), map-only, no shuffle, reproducible across
-# engines/partitionings. The sampling stage a mixture_plan's per-source
-# rates feed at 10¹² docs.
-
-
-def q_s3_weighted_sample(spark, sf_dir):
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("long"),
-        F.lit(1000000),
-    )
-    return (
-        _t(spark, sf_dir, "documents")
-        .filter(bucket * F.lit(3000) < F.col("n_chars") * F.lit(1000000))
-        .select("doc_id", "lang", "source", "n_chars")
-    )
-
-
-SQL_S3_WEIGHTED = """
-SELECT doc_id, lang, source, n_chars FROM documents
-WHERE (CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-       % 1000000) * 3000 < n_chars * 1000000
 """
 
 
@@ -2767,43 +2530,7 @@ GROUP BY 1, 2
 
 
 # ------------------------------------------------------------ round-5 batch 11
-# Integer-exact per-language deciles and span-level dedup reports.
-
-
-def q_a26_lang_deciles(spark, sf_dir):
-    # Per-language length-decile census: row_number over (n_chars,
-    # doc_id) — a unique key, so the rank is total — then the decile is
-    # INTEGER arithmetic ((rn-1)*10 div max(n-1,1), clamped to 9), never
-    # a float percent_rank, so both engines agree bit-for-bit with no
-    # rounding epsilon. One shuffle on lang for the window; the decile
-    # rollup is map-side combined.
-    d = _t(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
-    ranked = d.select(
-        "lang",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("lang")).alias("n"),
-    )
-    decile = F.least(
-        F.expr("(rn - 1) * 10 div greatest(n - 1, 1)"), F.lit(9).cast("long")
-    )
-    return (
-        ranked.select("lang", decile.alias("decile"))
-        .groupBy("lang", "decile")
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
-SQL_A26_LANG_DECILES = """
-WITH ranked AS (
-  SELECT lang,
-         row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
-         COUNT(*) OVER (PARTITION BY lang) AS n
-  FROM documents)
-SELECT lang, least((rn - 1) * 10 // greatest(n - 1, 1), 9) AS decile,
-       COUNT(*) AS n_docs
-FROM ranked GROUP BY 1, 2
-"""
+# Span-level dedup reports.
 
 
 def q_dedup_spans(spark, sf_dir):
@@ -2842,46 +2569,6 @@ SELECT d.doc_id,
        coalesce(a.n_spans_kept, 0) AS n_spans_kept,
        coalesce(a.text_clean, '') AS text_clean
 FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
-
-
-def q_a28_vocab_census(spark, sf_dir):
-    # Corpus-grain vocabulary census per source (Heaps'-law probe): total
-    # tokens, DISTINCT terms, and tokens-per-type. lexical_diversity is
-    # the per-DOC type/token signal; this is the corpus-level one that
-    # says whether a source's vocabulary is still growing (healthy prose)
-    # or saturated (template spam). EXACT distinct via Spark's Expand
-    # planning (one shuffle, map-side partials), never approx; the
-    # tokens-per-type ratio is one exact integer division rounded at 6 dp.
-    from ..functions.tokenize import WS_PLUS
-
-    d = _t(spark, sf_dir, "documents")
-    words = F.filter(
-        F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    ex = d.select("source", F.explode(words).alias("term"))
-    return ex.groupBy("source").agg(
-        F.count("*").alias("n_tokens"),
-        F.count_distinct("term").alias("n_terms"),
-        F.round(
-            F.count("*").cast("decimal(38,12)")
-            / F.count_distinct("term").cast("decimal(38,12)"),
-            6,
-        ).cast("double").alias("tokens_per_type"),
-    )
-
-
-SQL_A28_VOCAB_CENSUS = f"""
-WITH ex AS (
-  SELECT source, unnest({_WORDS_WS_SQL}) AS term FROM documents)
-SELECT source,
-       COUNT(*) AS n_tokens,
-       COUNT(DISTINCT term) AS n_terms,
-       CAST(round(CAST(COUNT(*) AS DECIMAL(38,12))
-                  / CAST(COUNT(DISTINCT term) AS DECIMAL(38,12)), 6)
-            AS DOUBLE) AS tokens_per_type
-FROM ex GROUP BY 1
 """
 
 
@@ -3288,85 +2975,6 @@ WHERE NOT EXISTS (SELECT 1 FROM rules r
 """
 
 
-def _link_edges(spark, sf_dir):
-    """Deterministic 3-out-link graph over the documents table: doc i
-    links to (13i + 101k) mod 499 for k ∈ {1,2,3}. Targets need not be
-    document ids — pagerank nodes are the src∪dst union, exactly like a
-    crawl frontier where most link targets are not yet fetched."""
-    d = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("src"))
-    k = F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("k")
-    return d.select("src", k).select(
-        "src", F.pmod(F.col("src") * 13 + F.col("k") * 101, F.lit(499)).alias("dst")
-    )
-
-
-_SQL_LINK_EDGES = """
-  SELECT doc_id AS src, (doc_id * 13 + k * 101) % 499 AS dst
-  FROM documents, UNNEST([1, 2, 3]) AS t(k)
-"""
-
-
-def q_link_pagerank(spark, sf_dir):
-    """3-iteration PageRank over the synthesized link graph
-    (operators/graph.py:pagerank) — crawl-frontier prioritization /
-    link-farm demotion. All arithmetic is 1e12-scaled INTEGER
-    fixed-point with round-half-up integral division (float sums are
-    order-dependent; Spark's decimal division truncates scale on
-    precision overflow), so the ranks are bit-identical cross-engine at
-    any parallelism; ONE dst-keyed shuffle per round, map-side partial
-    sums, no driver collect."""
-    from ..operators.graph import pagerank
-
-    return pagerank(_link_edges(spark, sf_dir), n_iter=3)
-
-
-def _sql_pagerank() -> str:
-    s = 10 ** 12
-    it = f"""
-SELECT nd.node,
-  (({3 * s} * 2 + n.n * 20) // (n.n * 20 * 2))
-  + ((coalesce(s.received, 0) * 17 * 2 + 20) // 40) AS fp
-FROM nodes nd CROSS JOIN n
-LEFT JOIN (
-  SELECT e.dst AS node, SUM((r.fp * 2 + d.deg) // (d.deg * 2)) AS received
-  FROM e JOIN {{R}} r ON e.src = r.node JOIN deg d ON e.src = d.src
-  GROUP BY e.dst) s
-ON nd.node = s.node
-"""
-    return f"""
-WITH e AS ({_SQL_LINK_EDGES}),
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-n AS (SELECT count(*) AS n FROM nodes),
-deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-r0 AS (SELECT node, ({s} * 2 + n) // (n * 2) AS fp FROM nodes CROSS JOIN n),
-r1 AS ({it.format(R='r0')}),
-r2 AS ({it.format(R='r1')}),
-r3 AS ({it.format(R='r2')})
-SELECT node, CAST(fp AS DOUBLE) / 1e12 AS rank FROM r3
-"""
-
-
-def q_link_degree_census(spark, sf_dir):
-    """Per-node in/out degree census over the link graph
-    (operators/graph.py:degree_census) — the structural spam signal
-    (doorway pages: in 0; link farms: out ≫ distinct in). Two map-side
-    folds full-outer merged at node grain."""
-    from ..operators.graph import degree_census
-
-    return degree_census(_link_edges(spark, sf_dir))
-
-
-SQL_LINK_DEGREE_CENSUS = f"""
-WITH e AS ({_SQL_LINK_EDGES}),
-o AS (SELECT src AS node, COUNT(*) AS out_degree FROM e GROUP BY src),
-i AS (SELECT dst AS node, COUNT(*) AS in_degree FROM e GROUP BY dst)
-SELECT coalesce(o.node, i.node) AS node,
-       coalesce(out_degree, 0) AS out_degree,
-       coalesce(in_degree, 0) AS in_degree
-FROM o FULL OUTER JOIN i ON o.node = i.node
-"""
-
-
 def q_mixture_apply(spark, sf_dir):
     """Materialized uniform-mixture resample
     (operators/curation.py:mixture_apply): each source is repeated to
@@ -3528,98 +3136,6 @@ SELECT keyed.doc_id, keyed.host FROM keyed JOIN reps USING (k, doc_id)
 """
 
 
-def q_tok_bytes_ratio(spark, sf_dir):
-    # Tokenizer-fertility profile per language: bytes-per-whitespace-token
-    # is the standard proxy for how expensive a language is to tokenize
-    # (BPE fertility tracks it closely) and drives per-language token
-    # budgets in mixture planning (pairs with mixture_plan, which spends
-    # budget in TOKENS while storage is billed in BYTES). Byte counts use
-    # octet_length (Spark) / strlen (DuckDB) — both bytes-not-codepoints,
-    # so multi-byte scripts diverge from n_chars exactly as they should.
-    # One explode-free aggregate: token counts come from the codegen'd
-    # size(filter(split(...))) expression, so shuffle rows = langs.
-    from ..functions.tokenize import WS_PLUS
-
-    d = _t(spark, sf_dir, "documents")
-    toks = F.size(
-        F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-            lambda w: F.length(w) > 0,
-        )
-    )
-    nbytes = F.octet_length(F.coalesce(F.col("text"), F.lit("")))
-    return d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(toks.cast("long")).alias("n_tokens"),
-        F.sum(nbytes.cast("long")).alias("n_bytes"),
-        F.round(
-            F.sum(nbytes.cast("decimal(38,12)"))
-            / F.sum(toks.cast("decimal(38,12)")),
-            6,
-        ).cast("double").alias("bytes_per_token"),
-    )
-
-
-SQL_TOK_BYTES_RATIO = f"""
-SELECT lang,
-       COUNT(*) AS n_docs,
-       SUM(len({_WORDS_WS_SQL})) AS n_tokens,
-       SUM(strlen(coalesce(text, ''))) AS n_bytes,
-       CAST(round(SUM(CAST(strlen(coalesce(text, '')) AS DECIMAL(38,12)))
-                  / SUM(CAST(len({_WORDS_WS_SQL}) AS DECIMAL(38,12))), 6)
-            AS DOUBLE) AS bytes_per_token
-FROM documents GROUP BY 1
-"""
-
-
-def q_hapax_rate(spark, sf_dir):
-    # Hapax-legomena share of each source's vocabulary: the fraction of
-    # terms seen EXACTLY once. Complements a28_vocab_census's
-    # tokens-per-type — a healthy prose source keeps a fat hapax tail
-    # (Zipf), template spam has almost none, and OCR/mojibake noise
-    # pushes it toward 1.0; both extremes are curation drop signals.
-    # Shape: explode → ONE (source, term) count aggregate (map-side
-    # combined, the same single-shuffle shape as the census) → a
-    # source-grain fold of the term counts. No window, no second pass
-    # over the text.
-    from ..functions.tokenize import WS_PLUS
-
-    d = _t(spark, sf_dir, "documents")
-    words = F.filter(
-        F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    per_term = (
-        d.select("source", F.explode(words).alias("term"))
-        .groupBy("source", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    return per_term.groupBy("source").agg(
-        F.count("*").alias("n_terms"),
-        F.sum(F.when(F.col("tf") == 1, 1).otherwise(0)).alias("n_hapax"),
-        F.round(
-            F.sum(F.when(F.col("tf") == 1, 1).otherwise(0)).cast("decimal(38,12)")
-            / F.count("*").cast("decimal(38,12)"),
-            6,
-        ).cast("double").alias("hapax_share"),
-    )
-
-
-SQL_HAPAX_RATE = f"""
-WITH per_term AS (
-  SELECT source, term, COUNT(*) AS tf
-  FROM (SELECT source, unnest({_WORDS_WS_SQL}) AS term FROM documents)
-  GROUP BY 1, 2)
-SELECT source,
-       COUNT(*) AS n_terms,
-       SUM(CASE WHEN tf = 1 THEN 1 ELSE 0 END) AS n_hapax,
-       CAST(round(CAST(SUM(CASE WHEN tf = 1 THEN 1 ELSE 0 END) AS DECIMAL(38,12))
-                  / CAST(COUNT(*) AS DECIMAL(38,12)), 6)
-            AS DOUBLE) AS hapax_share
-FROM per_term GROUP BY 1
-"""
-
-
 # ------------------------------------------------------------ round-5 batch 15
 # Distribution-shape and graph-structure health signals: Zipf
 # rank-frequency fit, Flesch readability, two-sample KS drift,
@@ -3744,6 +3260,24 @@ SELECT g AS source, n_in, _N - n_in AS n_rest,
            END) AS ks_stat
 FROM st2 CROSS JOIN n
 GROUP BY 1, 2, 3
+"""
+
+
+def _link_edges(spark, sf_dir):
+    """Deterministic 3-out-link graph over the documents table: doc i
+    links to (13i + 101k) mod 499 for k ∈ {1,2,3}. Targets need not be
+    document ids — graph nodes are the src∪dst union, exactly like a
+    crawl frontier where most link targets are not yet fetched."""
+    d = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("src"))
+    k = F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("k")
+    return d.select("src", k).select(
+        "src", F.pmod(F.col("src") * 13 + F.col("k") * 101, F.lit(499)).alias("dst")
+    )
+
+
+_SQL_LINK_EDGES = """
+  SELECT doc_id AS src, (doc_id * 13 + k * 101) % 499 AS dst
+  FROM documents, UNNEST([1, 2, 3]) AS t(k)
 """
 
 
@@ -4204,126 +3738,6 @@ FROM j GROUP BY 1
 """
 
 
-def q_redirect_resolve(spark, sf_dir):
-    """Redirect-chain canonicalization via pointer doubling
-    (operators/graph.py:resolve_redirects): a synthesized functional
-    redirect graph (doc d redirects to d−1 unless d ≡ 0 mod 7, so
-    chains are up to 6 hops ending at multiples of 7) resolved to
-    terminals in log₂(chain) join rounds. The DuckDB twin walks the
-    SAME chains with a recursive CTE and keeps each node's terminal
-    row — two entirely different algorithms, identical answer."""
-    from ..operators.graph import resolve_redirects
-
-    d = _t(spark, sf_dir, "documents")
-    edges = d.filter(F.pmod(F.col("doc_id"), F.lit(7)) != 0).select(
-        F.col("doc_id").alias("src"), (F.col("doc_id") - 1).alias("dst")
-    )
-    return resolve_redirects(edges)
-
-
-SQL_REDIRECT_RESOLVE = """
-WITH RECURSIVE e AS (
-  SELECT doc_id AS src, doc_id - 1 AS dst FROM documents WHERE doc_id % 7 <> 0
-),
-walk AS (
-  SELECT src AS node, dst AS ptr FROM e
-  UNION ALL
-  SELECT w.node, e.dst FROM walk w JOIN e ON w.ptr = e.src
-)
-SELECT node, ptr AS terminal,
-       ptr NOT IN (SELECT src FROM e) AS resolved
-FROM walk WHERE ptr NOT IN (SELECT src FROM e)
-"""
-
-
-def q_phrase_search(spark, sf_dir):
-    """Exact-phrase search via positional posting-list join
-    (operators/search.py:phrase_search) — each join leg is filtered to
-    ONE phrase term before any exchange, so the join touches two
-    posting lists, never the corpus token stream."""
-    from ..operators.search import phrase_search
-
-    return phrase_search(_t(spark, sf_dir, "documents"), "table value")
-
-
-SQL_PHRASE_SEARCH = f"""
-WITH base AS (SELECT doc_id, {_WORDS_WS_SQL} AS ws FROM documents),
-ex AS (
-  SELECT doc_id, unnest(range(1, len(ws) + 1)) AS pos, unnest(ws) AS term
-  FROM base
-),
-l0 AS (SELECT doc_id, pos AS p0 FROM ex WHERE term = 'table'),
-l1 AS (SELECT doc_id, pos - 1 AS p0 FROM ex WHERE term = 'value')
-SELECT doc_id, COUNT(*) AS n_matches
-FROM l0 JOIN l1 USING (doc_id, p0) GROUP BY 1
-"""
-
-
-def q_bm25_topk(spark, sf_dir):
-    """BM25 top-20 for a 3-term query (operators/search.py:bm25_topk) —
-    postings filtered to the query terms before aggregation, corpus
-    stats broadcast, TakeOrdered top-k; scores bit-deterministic (see
-    the operator's float discipline) so the ranked SET is
-    engine-identical."""
-    from ..operators.search import bm25_topk
-
-    return bm25_topk(_t(spark, sf_dir, "documents"),
-                     ["fast", "scan", "table"], k=20)
-
-
-def _sql_bm25_topk(k1: float = 1.2, b: float = 0.75) -> str:
-    terms = "'fast', 'scan', 'table'"
-    avgdl = "(CAST(L AS DOUBLE) / CAST(N AS DOUBLE))"
-    idf = ("ln(1.0 + (CAST(N AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)"
-           " / (CAST(df AS DOUBLE) + 0.5))")
-    denom = (f"(CAST(tf AS DOUBLE) + {k1!r} * (1.0 - {b!r}"
-             f" + {b!r} * CAST(dl AS DOUBLE) / {avgdl}))")
-    contrib = f"round({idf} * CAST(tf AS DOUBLE) * {k1 + 1.0!r} / {denom}, 9)"
-    return f"""
-WITH base AS (SELECT doc_id, {_WORDS_WS_SQL} AS ws FROM documents),
-lens AS (SELECT doc_id, len(ws) AS dl FROM base),
-stats AS (SELECT COUNT(*) AS N, SUM(dl) AS L FROM lens),
-ex AS (SELECT doc_id, unnest(ws) AS term FROM base),
-tf AS (
-  SELECT doc_id, term, COUNT(*) AS tf FROM ex
-  WHERE term IN ({terms}) GROUP BY 1, 2
-),
-dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-j AS (
-  SELECT tf.doc_id, {contrib} AS contrib
-  FROM tf JOIN dfq USING (term) JOIN lens ON lens.doc_id = tf.doc_id
-  CROSS JOIN stats
-)
-SELECT doc_id,
-       round(CAST(SUM(CAST(contrib AS DECIMAL(28,9))) AS DOUBLE), 6) AS score
-FROM j GROUP BY 1
-ORDER BY score DESC, doc_id LIMIT 20
-"""
-
-
-def q_phrase_search_indexed(spark, sf_dir):
-    """Phrase search against the PERSISTED posting index
-    (operators/search.py:posting_index_write / phrase_search_indexed):
-    the index is staged once per sf_dir (idempotent atomic-marker
-    protocol shared with the IVF index), then the probe reads ONLY the
-    phrase terms' bucket directories — the xxhash64 bucket predicate is
-    constant-folded so Catalyst prunes partitions (inputFiles-proven in
-    tests). Same answer as phrase_search, same oracle twin — the index
-    is plumbing; the result is what's checked."""
-    from ..operators.search import phrase_search_indexed, posting_index_write
-
-    docs = _t(spark, sf_dir, "documents")
-    stage = "/tmp/xdan_posting_idx_" + sf_dir.strip("/").replace("/", "_")
-    spec = {"sf_dir": sf_dir, "rows": docs.count(), "n_buckets": 64, "v": 1}
-    marker = os.path.join(stage, "_SPEC.json")
-    _stage_with_spec(
-        marker, spec,
-        lambda: posting_index_write(docs, f"{stage}/postings", n_buckets=64),
-    )
-    return phrase_search_indexed(spark, f"{stage}/postings", "table value",
-                                 n_buckets=64)
-
-
 def q_snapshot_diff(spark, sf_dir):
     """Crawl snapshot diff (operators/curation.py:snapshot_diff):
     snapshot A = doc_id < 400 of documents; snapshot B = doc_id ≥ 100
@@ -4717,139 +4131,9 @@ FROM agg
 
 
 
-# ------------------------------------------------------------ round-5 batch 38
-# Graph authority scores and a column-completeness profiler.
-
-
-def q_hits_scores(spark, sf_dir):
-    """2-iteration HITS hubs/authorities over the synthesized link
-    graph (operators/graph.py:hits_scores) — the complementary link
-    signal to PageRank (link farms light up hub AND authority at once).
-    1e6-scaled integer fixed-point with round-half-up integral
-    renormalization, bit-identical cross-engine."""
-    from ..operators.graph import hits_scores
-
-    return hits_scores(_link_edges(spark, sf_dir), n_iter=2)
-
-
-def _sql_hits(n_iter: int = 2) -> str:
-    s = 10 ** 6
-    parts = [f"""
-WITH e AS ({_SQL_LINK_EDGES}),
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-h0 AS (SELECT node, CAST({s} AS BIGINT) AS h FROM nodes)"""]
-    prev_h = "h0"
-    for i in range(1, n_iter + 1):
-        parts.append(f""",
-a{i}_full AS (
-  SELECT nd.node, coalesce(x.a, 0) AS a
-  FROM nodes nd LEFT JOIN (
-    SELECT e.dst AS node, SUM(r.h) AS a
-    FROM e JOIN {prev_h} r ON e.src = r.node GROUP BY e.dst) x
-  ON nd.node = x.node
-),
-a{i}_mx AS (SELECT MAX(a) AS mx FROM a{i}_full),
-a{i} AS (
-  SELECT node,
-         CASE WHEN mx > 0 THEN (a * {s} * 2 + mx) // (mx * 2) ELSE 0 END AS a
-  FROM a{i}_full CROSS JOIN a{i}_mx
-),
-h{i}_full AS (
-  SELECT nd.node, coalesce(x.h, 0) AS h
-  FROM nodes nd LEFT JOIN (
-    SELECT e.src AS node, SUM(r.a) AS h
-    FROM e JOIN a{i} r ON e.dst = r.node GROUP BY e.src) x
-  ON nd.node = x.node
-),
-h{i}_mx AS (SELECT MAX(h) AS mx FROM h{i}_full),
-h{i} AS (
-  SELECT node,
-         CASE WHEN mx > 0 THEN (h * {s} * 2 + mx) // (mx * 2) ELSE 0 END AS h
-  FROM h{i}_full CROSS JOIN h{i}_mx
-)""")
-        prev_h = f"h{i}"
-    parts.append(f"""
-SELECT h.node, CAST(h.h AS DOUBLE) / 1e6 AS hub,
-       CAST(a.a AS DOUBLE) / 1e6 AS authority
-FROM h{n_iter} h JOIN a{n_iter} a ON a.node = h.node
-""")
-    return "".join(parts)
-
-
-SQL_HITS_SCORES = _sql_hits(2)
-
-
-def q_profile_documents(spark, sf_dir):
-    """Column-completeness profile of the documents table — per column:
-    row count, nulls, empty strings, exact distincts. The data-quality
-    profiling report every ingest gate runs first; ONE wide aggregate
-    (Spark plans the multi-distinct via Expand — one shuffle, map-side
-    partials), unpivoted to long form over a bounded literal stack."""
-    d = _t(spark, sf_dir, "documents")
-    cols = ["doc_id", "text", "lang", "source", "n_chars"]
-    aggs = [F.count("*").alias("_n")]
-    for c in cols:
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"_null_{c}"))
-        aggs.append(F.count_distinct(F.col(c)).alias(f"_dist_{c}"))
-        if c in ("text", "lang", "source"):
-            aggs.append(
-                F.sum(F.when(F.col(c) == "", 1).otherwise(0)).alias(f"_emp_{c}")
-            )
-    wide = d.agg(*aggs)
-    rows = F.array(*[
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("_n").alias("n_rows"),
-            F.col(f"_null_{c}").cast("long").alias("n_null"),
-            (F.col(f"_emp_{c}").cast("long") if c in ("text", "lang", "source")
-             else F.lit(None).cast("long")).alias("n_empty"),
-            F.col(f"_dist_{c}").alias("n_distinct"),
-        )
-        for c in cols
-    ])
-    return wide.select(F.explode(rows).alias("_r")).select(
-        "_r.column", "_r.n_rows", "_r.n_null", "_r.n_empty", "_r.n_distinct"
-    )
-
-
-SQL_PROFILE_DOCUMENTS = """
-SELECT 'doc_id' AS "column", COUNT(*) AS n_rows,
-       SUM(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS n_null,
-       CAST(NULL AS BIGINT) AS n_empty,
-       COUNT(DISTINCT doc_id) AS n_distinct
-FROM documents
-UNION ALL
-SELECT 'text', COUNT(*),
-       SUM(CASE WHEN text IS NULL THEN 1 ELSE 0 END),
-       SUM(CASE WHEN text = '' THEN 1 ELSE 0 END),
-       COUNT(DISTINCT text)
-FROM documents
-UNION ALL
-SELECT 'lang', COUNT(*),
-       SUM(CASE WHEN lang IS NULL THEN 1 ELSE 0 END),
-       SUM(CASE WHEN lang = '' THEN 1 ELSE 0 END),
-       COUNT(DISTINCT lang)
-FROM documents
-UNION ALL
-SELECT 'source', COUNT(*),
-       SUM(CASE WHEN source IS NULL THEN 1 ELSE 0 END),
-       SUM(CASE WHEN source = '' THEN 1 ELSE 0 END),
-       COUNT(DISTINCT source)
-FROM documents
-UNION ALL
-SELECT 'n_chars', COUNT(*),
-       SUM(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END),
-       CAST(NULL AS BIGINT),
-       COUNT(DISTINCT n_chars)
-FROM documents
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 39
-# Streaming HLL (register state under a real micro-batch stream), k-core
-# peel, link reciprocity/assortativity report, SCD2 content-history
-# intervals, and boolean AND retrieval.
+# Streaming HLL (register state under a real micro-batch stream) and
+# SCD2 content-history intervals.
 
 
 def q_stream_hll(spark, sf_dir):
@@ -4937,90 +4221,6 @@ FROM est
 """
 
 
-def q_kcore_links(spark, sf_dir):
-    """3-round 3-core peel over the synthesized link graph
-    (operators/graph.py:kcore_peel) — the densely-interlinked kernel
-    that paid-link rings survive and organic neighborhoods don't.
-    Bounded rounds make the result a deterministic function of the
-    input (each round a monotone over-approximation of the true core),
-    so the unrolled-CTE twin matches exactly."""
-    from ..operators.graph import kcore_peel
-
-    return kcore_peel(_link_edges(spark, sf_dir), k=3, n_rounds=3)
-
-
-def _sql_kcore(k: int = 3, n_rounds: int = 3) -> str:
-    parts = [f"""
-WITH e AS ({_SQL_LINK_EDGES}),
-und AS (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM e WHERE src <> dst
-),
-s0 AS (SELECT u, v FROM und UNION ALL SELECT v AS u, u AS v FROM und)"""]
-    for i in range(1, n_rounds + 1):
-        parts.append(f""",
-k{i} AS (SELECT u FROM s{i - 1} GROUP BY u HAVING COUNT(*) >= {k}),
-s{i} AS (
-  SELECT s.u, s.v FROM s{i - 1} s
-  JOIN k{i} a ON s.u = a.u JOIN k{i} b ON s.v = b.u
-)""")
-    parts.append(f"""
-SELECT u AS node, COUNT(*) AS degree
-FROM s{n_rounds} GROUP BY u HAVING COUNT(*) >= {k}
-""")
-    return "".join(parts)
-
-
-SQL_KCORE_LINKS = _sql_kcore(3, 3)
-
-
-def q_link_structure(spark, sf_dir):
-    """One-row reciprocity + degree-assortativity report over the link
-    graph (operators/graph.py:link_structure_stats) — mutual-exchange
-    rings score high reciprocity, farm cliques positive assortativity;
-    exact DECIMAL moment sums, one terminal IEEE expression."""
-    from ..operators.graph import link_structure_stats
-
-    return link_structure_stats(_link_edges(spark, sf_dir))
-
-
-SQL_LINK_STRUCTURE = f"""
-WITH e0 AS ({_SQL_LINK_EDGES}),
-e AS (SELECT DISTINCT src AS u, dst AS v FROM e0 WHERE src <> dst),
-recip AS (
-  SELECT COUNT(*) AS nr FROM e a
-  WHERE EXISTS (SELECT 1 FROM e b WHERE b.u = a.v AND b.v = a.u)
-),
-deg AS (
-  SELECT node, COUNT(*) AS deg FROM (
-    SELECT u AS node FROM e UNION ALL SELECT v FROM e
-  ) GROUP BY node
-),
-paired AS (
-  SELECT du.deg AS dx, dv.deg AS dy
-  FROM e JOIN deg du ON e.u = du.node JOIN deg dv ON e.v = dv.node
-),
-m AS (
-  SELECT COUNT(*) AS n_edges,
-         CAST(SUM(CAST(dx AS HUGEINT)) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(dy AS HUGEINT)) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(dx AS HUGEINT) * dy) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(dx AS HUGEINT) * dx) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(dy AS HUGEINT) * dy) AS DOUBLE) AS syy
-  FROM paired
-)
-SELECT n_edges,
-       round(CAST(nr AS DOUBLE) / CAST(n_edges AS DOUBLE), 9) AS reciprocity,
-       round(CASE WHEN CAST(n_edges AS DOUBLE) * sxx - sx * sx > 0
-                   AND CAST(n_edges AS DOUBLE) * syy - sy * sy > 0
-                  THEN (CAST(n_edges AS DOUBLE) * sxy - sx * sy)
-                       / (sqrt(CAST(n_edges AS DOUBLE) * sxx - sx * sx)
-                          * sqrt(CAST(n_edges AS DOUBLE) * syy - sy * sy))
-                  ELSE 0.0 END, 9) AS assortativity
-FROM m CROSS JOIN recip
-"""
-
-
 def q_scd2_pages(spark, sf_dir):
     """SCD2 content-history intervals over a synthesized crawl log
     (operators/curation.py:scd2_intervals): 50 logical pages, ~10
@@ -5076,28 +4276,6 @@ SELECT page, content_hash,
        epoch_us(vt) AS valid_to_us,
        vt IS NULL AS is_current
 FROM iv
-"""
-
-
-def q_bool_search(spark, sf_dir):
-    """Boolean AND retrieval: documents containing ALL of
-    {join, hash, vector} (operators/search.py:boolean_and_search) —
-    posting-list intersection as a literal map-side term filter + one
-    count-k fold, no join at all."""
-    from ..operators.search import boolean_and_search
-
-    return boolean_and_search(
-        _t(spark, sf_dir, "documents"), ["join", "hash", "vector"]
-    )
-
-
-SQL_BOOL_SEARCH = f"""
-WITH ex AS (
-  SELECT doc_id, unnest(list_distinct({_WORDS_WS_SQL})) AS t FROM documents
-)
-SELECT doc_id, COUNT(*) AS n_terms_matched
-FROM ex WHERE t IN ('join', 'hash', 'vector')
-GROUP BY doc_id HAVING COUNT(*) = 3
 """
 
 
@@ -5753,8 +4931,7 @@ FROM est
 
 
 # ------------------------------------------------------------ round-5 batch 46
-# Rank-biased overlap, keep-rate two-proportion A/B test, and the
-# vocabulary coverage curve.
+# Rank-biased overlap and the vocabulary coverage curve.
 
 
 def q_rbo_source_rankings(spark, sf_dir):
@@ -5811,111 +4988,6 @@ SELECT 20 AS depth, 0.9 AS p,
                                  / CAST(d AS DOUBLE), 12)
                       AS DECIMAL(24,12))) AS DOUBLE), 6) AS rbo
 FROM overl
-"""
-
-
-def q_keep_ab_test(spark, sf_dir):
-    """Pairwise two-proportion z-test of the Gopher keep rate between
-    sources: (a, b, keep_a, keep_b, z, significant) — the statistical
-    form of the fairness question keep_rate_by_lang eyeballs (is
-    source A's keep rate REALLY lower, or binomial noise?); pooled-SE
-    z from exact integer counts, one fixed IEEE sequence per pair,
-    |z| > 1.96 at alpha = 0.05."""
-    from ..functions.heuristics import heuristic_columns
-
-    d = _t(spark, sf_dir, "documents")
-    h = heuristic_columns("text")
-    keep = (
-        (F.round(h["symbol_ratio"], 9) <= 0.1)
-        & (h["n_words"].cast("long") >= 5)
-        & (F.round(h["dup_line_frac"], 9) <= 0.3)
-    )
-    per = d.select("source", keep.alias("_k")).groupBy("source").agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("_k"), 1).otherwise(0)).alias("k"),
-    )
-    a = per.select(F.col("source").alias("a"), F.col("n").alias("na"),
-                   F.col("k").alias("ka"))
-    b = per.select(F.col("source").alias("b"), F.col("n").alias("nb"),
-                   F.col("k").alias("kb"))
-    pairs = a.join(b, F.col("a") < F.col("b"))
-    p1 = F.col("ka").cast("double") / F.col("na").cast("double")
-    p2 = F.col("kb").cast("double") / F.col("nb").cast("double")
-    pp = (F.col("ka") + F.col("kb")).cast("double") / (
-        F.col("na") + F.col("nb")
-    ).cast("double")
-    se = F.sqrt(
-        pp * (F.lit(1.0) - pp)
-        * (F.lit(1.0) / F.col("na").cast("double")
-           + F.lit(1.0) / F.col("nb").cast("double"))
-    )
-    z = F.when(se > 0, (p1 - p2) / se).otherwise(F.lit(0.0))
-    return pairs.select(
-        "a", "b",
-        F.round(p1, 6).alias("keep_a"),
-        F.round(p2, 6).alias("keep_b"),
-        F.round(z, 6).alias("z"),
-        (F.abs(F.round(z, 6)) > 1.96).alias("significant"),
-    )
-
-
-SQL_KEEP_AB_TEST = f"""
-WITH base AS (
-  SELECT source, coalesce(text, '') AS t, {_WORDS_WS_SQL} AS ws FROM documents
-),
-ln AS (
-  SELECT source, t, ws,
-         list_filter(regexp_split_to_array(t, '{_WS_CLASS_SQL}*\n{_WS_CLASS_SQL}*'),
-                     x -> x <> '') AS lines
-  FROM base
-),
-g AS (
-  SELECT source,
-         len(ws) AS n_words,
-         round(CASE WHEN len(ws) = 0 THEN 0.0
-                    ELSE CAST(length(t) - length(translate(t, {_SYM_TRANSLATE_SQL}, ''))
-                              AS DOUBLE) / len(ws) END, 9) AS symbol_ratio,
-         round(CASE WHEN len(lines) <= 1 THEN 0.0
-                    ELSE CAST(len(lines) - len(list_distinct(lines)) AS DOUBLE)
-                         / len(lines) END, 9) AS dup_line_frac
-  FROM ln
-),
-per AS (
-  SELECT source, COUNT(*) AS n,
-         SUM(CASE WHEN symbol_ratio <= 0.1 AND n_words >= 5
-                   AND dup_line_frac <= 0.3 THEN 1 ELSE 0 END) AS k
-  FROM g GROUP BY 1
-),
-pairs AS (
-  SELECT pa.source AS a, pb.source AS b,
-         pa.n AS na, pa.k AS ka, pb.n AS nb, pb.k AS kb
-  FROM per pa JOIN per pb ON pa.source < pb.source
-),
-zc AS (
-  SELECT a, b, na, ka, nb, kb,
-         CAST(ka AS DOUBLE) / CAST(na AS DOUBLE) AS p1,
-         CAST(kb AS DOUBLE) / CAST(nb AS DOUBLE) AS p2,
-         CAST(ka + kb AS DOUBLE) / CAST(na + nb AS DOUBLE) AS pp
-  FROM pairs
-)
-SELECT a, b, round(p1, 6) AS keep_a, round(p2, 6) AS keep_b,
-       round(CASE WHEN sqrt(pp * (1.0 - pp)
-                            * (1.0 / CAST(na AS DOUBLE)
-                               + 1.0 / CAST(nb AS DOUBLE))) > 0
-                  THEN (p1 - p2)
-                       / sqrt(pp * (1.0 - pp)
-                              * (1.0 / CAST(na AS DOUBLE)
-                                 + 1.0 / CAST(nb AS DOUBLE)))
-                  ELSE 0.0 END, 6) AS z,
-       abs(round(CASE WHEN sqrt(pp * (1.0 - pp)
-                            * (1.0 / CAST(na AS DOUBLE)
-                               + 1.0 / CAST(nb AS DOUBLE))) > 0
-                  THEN (p1 - p2)
-                       / sqrt(pp * (1.0 - pp)
-                              * (1.0 / CAST(na AS DOUBLE)
-                                 + 1.0 / CAST(nb AS DOUBLE)))
-                  ELSE 0.0 END, 6)) > 1.96 AS significant
-FROM zc
 """
 
 
@@ -6220,108 +5292,8 @@ FROM hxy JOIN hx ON hxy.g = hx.g JOIN tot ON hxy.g = tot.g
 
 
 
-# ------------------------------------------------------------ round-5 batch 50
-# Per-node local clustering.
-
-
-def q_local_clustering(spark, sf_dir):
-    """Top-20 most-clustered link-graph nodes
-    (operators/graph.py:local_clustering) — the NODE-level link-farm
-    fingerprint behind triangle_census' global count; degree-ordered
-    orientation with three-corner attribution."""
-    from ..operators.graph import local_clustering
-
-    return local_clustering(_link_edges(spark, sf_dir))
-
-
-SQL_LOCAL_CLUSTERING = f"""
-WITH e0 AS ({_SQL_LINK_EDGES}),
-e AS (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM e0 WHERE src <> dst
-),
-deg AS (
-  SELECT node, COUNT(*) AS deg FROM (
-    SELECT u AS node FROM e UNION ALL SELECT v FROM e
-  ) GROUP BY 1
-),
-o AS (
-  SELECT CASE WHEN (du.deg, e.u) < (dv.deg, e.v) THEN e.u ELSE e.v END AS a,
-         CASE WHEN (du.deg, e.u) < (dv.deg, e.v) THEN e.v ELSE e.u END AS b
-  FROM e JOIN deg du ON e.u = du.node JOIN deg dv ON e.v = dv.node
-),
-tris AS (
-  SELECT o1.a AS wa, o1.b AS wm, o2.b AS wc
-  FROM o o1 JOIN o o2 ON o1.b = o2.a
-  JOIN o o3 ON o3.a = o1.a AND o3.b = o2.b
-),
-per_node AS (
-  SELECT node, COUNT(*) AS n_triangles FROM (
-    SELECT wa AS node FROM tris
-    UNION ALL SELECT wm FROM tris
-    UNION ALL SELECT wc FROM tris
-  ) GROUP BY 1
-),
-joined AS (
-  SELECT d.node, d.deg, coalesce(p.n_triangles, 0) AS n_triangles
-  FROM deg d LEFT JOIN per_node p ON d.node = p.node
-  WHERE d.deg >= 2
-),
-scored AS (
-  SELECT node, deg AS degree, n_triangles,
-         round(2.0 * CAST(n_triangles AS DOUBLE)
-               / (CAST(deg AS DOUBLE) * CAST(deg - 1 AS DOUBLE)), 9)
-           AS clustering
-  FROM joined
-)
-SELECT node, degree, n_triangles, clustering FROM (
-  SELECT *, row_number() OVER (ORDER BY clustering DESC, node) AS rk
-  FROM scored
-) WHERE rk <= 20
-"""
-
-
-# ------------------------------------------------------------ round-5 batch 52
-# Per-source exact-dup rate.
-
-
-def q_dup_rate_by_source(spark, sf_dir):
-    """Within-source exact-duplicate rate: per source (n_docs,
-    n_unique_texts, dup_rate) — the corpus-health headline a dedup
-    rollout leads with (which feeds are re-crawling themselves); one
-    two-level fold (md5 inside source), exact integer ratio."""
-    d = _t(spark, sf_dir, "documents")
-    per = d.groupBy("source", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("_h")).agg(
-        F.count("*").alias("_c")
-    )
-    return per.groupBy("source").agg(
-        F.sum("_c").alias("n_docs"),
-        F.count("*").alias("n_unique_texts"),
-    ).withColumn(
-        "dup_rate",
-        F.round(
-            (F.col("n_docs") - F.col("n_unique_texts")).cast("double")
-            / F.col("n_docs").cast("double"),
-            6,
-        ),
-    )
-
-
-SQL_DUP_RATE_BY_SOURCE = """
-WITH per AS (
-  SELECT source, md5(coalesce(text, '')) AS h, COUNT(*) AS c
-  FROM documents GROUP BY 1, 2
-)
-SELECT source, SUM(c) AS n_docs, COUNT(*) AS n_unique_texts,
-       round(CAST(SUM(c) - COUNT(*) AS DOUBLE) / CAST(SUM(c) AS DOUBLE), 6)
-         AS dup_rate
-FROM per GROUP BY 1
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 53
-# Power-law tail index and a Simpson's-paradox reversal probe.
+# Power-law tail index.
 
 
 def q_hill_tail(spark, sf_dir):
@@ -6355,356 +5327,9 @@ FROM kept
 """
 
 
-def q_simpson_probe(spark, sf_dir):
-    """Simpson's-paradox probe on the Gopher keep rate: source pairs
-    whose OVERALL keep-rate ordering reverses inside language strata —
-    the aggregation-reversal audit (an overall "A is cleaner than B"
-    that flips within every language is a mix artifact, not a quality
-    difference). ALL sign logic is exact integer cross-multiplication
-    (k_a·n_b vs k_b·n_a) — no float anywhere; returns (a, b,
-    overall_sign, n_langs_compared, n_reversed, full_reversal)."""
-    from ..functions.heuristics import heuristic_columns
-
-    d = _t(spark, sf_dir, "documents")
-    h = heuristic_columns("text")
-    keep = (
-        (F.round(h["symbol_ratio"], 9) <= 0.1)
-        & (h["n_words"].cast("long") >= 5)
-        & (F.round(h["dup_line_frac"], 9) <= 0.3)
-    )
-    base = d.select("source", "lang", keep.alias("_k"))
-    per_sl = base.groupBy("source", "lang").agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("_k"), 1).otherwise(0)).alias("k"),
-    )
-    per_s = base.groupBy("source").agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("_k"), 1).otherwise(0)).alias("k"),
-    )
-    oa = per_s.select(F.col("source").alias("a"), F.col("n").alias("na"),
-                      F.col("k").alias("ka"))
-    ob = per_s.select(F.col("source").alias("b"), F.col("n").alias("nb"),
-                      F.col("k").alias("kb"))
-    cross = (
-        F.col("ka").cast("decimal(19,0)") * F.col("nb").cast("decimal(18,0)")
-        - F.col("kb").cast("decimal(19,0)") * F.col("na").cast("decimal(18,0)")
-    )
-    overall = oa.join(ob, F.col("a") < F.col("b")).select(
-        "a", "b", F.signum(cross.cast("double")).cast("int").alias("o_sign")
-    )
-    la = per_sl.select(F.col("source").alias("a"), "lang",
-                       F.col("n").alias("lna"), F.col("k").alias("lka"))
-    lb = per_sl.select(F.col("source").alias("b"), "lang",
-                       F.col("n").alias("lnb"), F.col("k").alias("lkb"))
-    lcross = (
-        F.col("lka").cast("decimal(19,0)") * F.col("lnb").cast("decimal(18,0)")
-        - F.col("lkb").cast("decimal(19,0)") * F.col("lna").cast("decimal(18,0)")
-    )
-    per_lang = la.join(lb, ["lang"]).filter(F.col("a") < F.col("b")).select(
-        "a", "b", "lang",
-        F.signum(lcross.cast("double")).cast("int").alias("l_sign"),
-    )
-    j = overall.join(per_lang, ["a", "b"])
-    return j.groupBy("a", "b", "o_sign").agg(
-        F.count("*").alias("n_langs_compared"),
-        F.sum(
-            F.when(F.col("l_sign") * F.col("o_sign") < 0, 1).otherwise(0)
-        ).alias("n_reversed"),
-    ).withColumn(
-        "full_reversal",
-        (F.col("n_reversed") == F.col("n_langs_compared"))
-        & (F.col("o_sign") != 0),
-    ).select("a", "b", F.col("o_sign").alias("overall_sign"),
-             "n_langs_compared", "n_reversed", "full_reversal")
-
-
-SQL_SIMPSON_PROBE = f"""
-WITH base AS (
-  SELECT source, lang, coalesce(text, '') AS t, {_WORDS_WS_SQL} AS ws
-  FROM documents
-),
-ln_t AS (
-  SELECT source, lang, t, ws,
-         list_filter(regexp_split_to_array(t, '{_WS_CLASS_SQL}*\n{_WS_CLASS_SQL}*'),
-                     x -> x <> '') AS lines
-  FROM base
-),
-g AS (
-  SELECT source, lang,
-         CASE WHEN (CASE WHEN len(ws) = 0 THEN 0.0
-                    ELSE CAST(length(t) - length(translate(t, {_SYM_TRANSLATE_SQL}, ''))
-                              AS DOUBLE) / len(ws) END) <= 0.1
-               AND len(ws) >= 5
-               AND (CASE WHEN len(lines) <= 1 THEN 0.0
-                    ELSE CAST(len(lines) - len(list_distinct(lines)) AS DOUBLE)
-                         / len(lines) END) <= 0.3
-              THEN 1 ELSE 0 END AS kp
-  FROM ln_t
-),
-per_sl AS (
-  SELECT source, lang, COUNT(*) AS n, SUM(kp) AS k FROM g GROUP BY 1, 2
-),
-per_s AS (SELECT source, COUNT(*) AS n, SUM(kp) AS k FROM g GROUP BY 1),
-overall AS (
-  SELECT pa.source AS a, pb.source AS b,
-         CAST(sign(CAST(CAST(pa.k AS DECIMAL(19,0)) * CAST(pb.n AS DECIMAL(18,0))
-                   - CAST(pb.k AS DECIMAL(19,0)) * CAST(pa.n AS DECIMAL(18,0))
-                   AS DOUBLE)) AS INT) AS o_sign
-  FROM per_s pa JOIN per_s pb ON pa.source < pb.source
-),
-per_lang AS (
-  SELECT la.source AS a, lb.source AS b, la.lang,
-         CAST(sign(CAST(CAST(la.k AS DECIMAL(19,0)) * CAST(lb.n AS DECIMAL(18,0))
-                   - CAST(lb.k AS DECIMAL(19,0)) * CAST(la.n AS DECIMAL(18,0))
-                   AS DOUBLE)) AS INT) AS l_sign
-  FROM per_sl la JOIN per_sl lb
-  ON la.lang = lb.lang AND la.source < lb.source
-)
-SELECT o.a, o.b, o.o_sign AS overall_sign,
-       COUNT(*) AS n_langs_compared,
-       SUM(CASE WHEN p.l_sign * o.o_sign < 0 THEN 1 ELSE 0 END) AS n_reversed,
-       SUM(CASE WHEN p.l_sign * o.o_sign < 0 THEN 1 ELSE 0 END) = COUNT(*)
-         AND o.o_sign <> 0 AS full_reversal
-FROM overall o JOIN per_lang p ON o.a = p.a AND o.b = p.b
-GROUP BY 1, 2, 3
-"""
-
-
-
-# ------------------------------------------------------------ round-5 batch 54
-# Recency-decayed trending terms and the vocabulary growth curve.
-
-
-def q_trending_terms(spark, sf_dir):
-    """Top-10 TRENDING terms by exponentially decayed daily counts
-    (lambda = 0.8 per day of age) next to the raw count rank — the
-    recency-weighted heavy-hitter ranking ("what is rising NOW") that
-    a plain frequency table hides. Documents get deterministic
-    synthetic days (doc_id mod 28 — the same fixture discipline as
-    scd2/url queries) since the table has no timestamp column; on real
-    crawl data the crawl day replaces it.
-
-    Determinism: decayed weight per (term, age) is count x lambda^age
-    with an INTEGER exponent (pow on integer exponents is correctly
-    rounded and engine-identical), rounded 9 dp and DECIMAL-summed;
-    selection orders by the rounded score with a term tie-break."""
-    from ..functions.tokenize import WS_PLUS
-
-    d = _t(spark, sf_dir, "documents")
-    day = (F.col("doc_id") % 28).alias("day")          # 0 = oldest
-    age = (F.lit(27) - (F.col("doc_id") % 28)).alias("age")
-    words = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda w: F.length(w) > 0)
-    ex = d.select(age, F.explode(words).alias("term"))
-    per = ex.groupBy("term", "age").agg(F.count("*").alias("c"))
-    wgt = F.round(
-        F.col("c").cast("double") * F.pow(F.lit(0.8), F.col("age")), 9
-    ).cast("decimal(24,9)")
-    scored = per.groupBy("term").agg(
-        F.sum("c").alias("raw_cnt"),
-        F.sum(wgt).alias("_dec"),
-    ).select(
-        "term", "raw_cnt",
-        F.round(F.col("_dec").cast("double"), 6).alias("decayed_score"),
-    )
-    w = Window.orderBy(F.desc("decayed_score"), F.asc("term"))
-    return scored.withColumn("_rk", F.row_number().over(w)).filter(
-        F.col("_rk") <= 10
-    ).select("term", "raw_cnt", "decayed_score")
-
-
-SQL_TRENDING_TERMS = f"""
-WITH ex AS (
-  SELECT 27 - (doc_id % 28) AS age, unnest({_WORDS_WS_SQL}) AS term
-  FROM documents
-),
-per AS (SELECT term, age, COUNT(*) AS c FROM ex GROUP BY 1, 2),
-scored AS (
-  SELECT term, SUM(c) AS raw_cnt,
-         round(CAST(SUM(CAST(round(CAST(c AS DOUBLE) * power(0.8, age), 9)
-                        AS DECIMAL(24,9))) AS DOUBLE), 6) AS decayed_score
-  FROM per GROUP BY 1
-)
-SELECT term, raw_cnt, decayed_score FROM (
-  SELECT *, row_number() OVER (ORDER BY decayed_score DESC, term) AS rk
-  FROM scored
-) WHERE rk <= 10
-"""
-
-
-def q_vocab_growth(spark, sf_dir):
-    """Vocabulary GROWTH curve over synthetic crawl days (doc_id mod
-    28, the trending_terms fixture): per day, terms whose FIRST corpus
-    occurrence falls on that day plus the cumulative vocabulary — the
-    Heaps-law-over-time read ("is this feed still teaching the
-    tokenizer new words, or saturated?"). First occurrence is a min()
-    fold (map-side combinable), the cumulative ride is a window over
-    the bounded day axis.
-
-    On THIS synthetic corpus the curve collapses to ~2 rows: the
-    template vocabulary is fully shared, so day 0 captures nearly all
-    first occurrences — which is precisely the "saturated feed"
-    verdict the query exists to deliver (a healthy crawl shows a long
-    Heaps tail instead)."""
-    from ..functions.tokenize import WS_PLUS
-
-    d = _t(spark, sf_dir, "documents")
-    day = (F.col("doc_id") % 28).alias("day")
-    words = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda w: F.length(w) > 0)
-    ex = d.select(day, F.explode(words).alias("term"))
-    firsts = ex.groupBy("term").agg(F.min("day").alias("first_day"))
-    per_day = firsts.groupBy(F.col("first_day").alias("day")).agg(
-        F.count("*").alias("n_new_terms")
-    )
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    return per_day.select(
-        "day", "n_new_terms",
-        F.sum("n_new_terms").over(w).alias("cum_vocab"),
-    )
-
-
-SQL_VOCAB_GROWTH = f"""
-WITH ex AS (
-  SELECT doc_id % 28 AS day, unnest({_WORDS_WS_SQL}) AS term FROM documents
-),
-firsts AS (SELECT term, MIN(day) AS first_day FROM ex GROUP BY 1),
-per_day AS (
-  SELECT first_day AS day, COUNT(*) AS n_new_terms FROM firsts GROUP BY 1
-)
-SELECT day, n_new_terms,
-       SUM(n_new_terms) OVER (ORDER BY day
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         AS cum_vocab
-FROM per_day
-"""
-
-
 
 # ------------------------------------------------------------ round-5 batch 55
-# Mix-vs-rate decomposition and SCD2 page-churn census.
-
-
-def q_mix_rate_decomposition(spark, sf_dir):
-    """Mix-vs-rate decomposition of the Gopher keep-rate gap between
-    even and odd doc-id halves, decomposed over language strata
-    (the Oaxaca/Kitagawa decomposition analytics teams reach for when
-    "the metric moved" — did per-stratum RATES change, or did the MIX
-    shift toward worse strata?):
-    overall_gap = Σ_l share_A(l)·(rate_A(l) − rate_B(l))   [rate effect]
-               + Σ_l (share_A(l) − share_B(l))·rate_B(l)   [mix effect]
-    — an exact identity, so the emitted residual MUST be 0 up to the
-    terminal rounding (self-checking output). Every share/rate is an
-    exact-integer ratio; each stratum term is ONE fixed IEEE sequence
-    rounded 9 dp and DECIMAL-summed."""
-    from ..functions.heuristics import heuristic_columns
-
-    d = _t(spark, sf_dir, "documents")
-    h = heuristic_columns("text")
-    keep = (
-        (F.round(h["symbol_ratio"], 9) <= 0.1)
-        & (h["n_words"].cast("long") >= 5)
-        & (F.round(h["dup_line_frac"], 9) <= 0.3)
-    )
-    base = d.select(
-        "lang",
-        (F.col("doc_id") % 2 == 0).alias("_A"),
-        keep.alias("_k"),
-    )
-    cell = base.groupBy("lang").agg(
-        F.sum(F.when(F.col("_A"), 1).otherwise(0)).alias("na"),
-        F.sum(F.when(F.col("_A") & F.col("_k"), 1).otherwise(0)).alias("ka"),
-        F.sum(F.when(~F.col("_A"), 1).otherwise(0)).alias("nb"),
-        F.sum(F.when(~F.col("_A") & F.col("_k"), 1).otherwise(0)).alias("kb"),
-    )
-    tot = cell.agg(
-        F.sum("na").alias("ta"), F.sum("nb").alias("tb"),
-        F.sum("ka").alias("kta"), F.sum("kb").alias("ktb"),
-    )
-    j = cell.crossJoin(F.broadcast(tot))
-    sha = F.col("na").cast("double") / F.col("ta").cast("double")
-    shb = F.col("nb").cast("double") / F.col("tb").cast("double")
-    ra = F.col("ka").cast("double") / F.col("na").cast("double")
-    rb = F.col("kb").cast("double") / F.col("nb").cast("double")
-    rate_term = F.round(sha * (ra - rb), 9).cast("decimal(20,9)")
-    mix_term = F.round((sha - shb) * rb, 9).cast("decimal(20,9)")
-    agg = j.agg(
-        F.sum(rate_term).alias("_re"),
-        F.sum(mix_term).alias("_me"),
-        F.max(
-            F.col("kta").cast("double") / F.col("ta").cast("double")
-            - F.col("ktb").cast("double") / F.col("tb").cast("double")
-        ).alias("_gap"),
-    )
-    return agg.select(
-        F.round(F.col("_gap"), 6).alias("overall_gap"),
-        F.round(F.col("_re").cast("double"), 6).alias("rate_effect"),
-        F.round(F.col("_me").cast("double"), 6).alias("mix_effect"),
-        F.round(
-            F.col("_gap")
-            - (F.col("_re").cast("double") + F.col("_me").cast("double")),
-            6,
-        ).alias("residual"),
-    )
-
-
-SQL_MIX_RATE_DECOMPOSITION = f"""
-WITH base AS (
-  SELECT lang, doc_id % 2 = 0 AS a_side, coalesce(text, '') AS t,
-         {_WORDS_WS_SQL} AS ws
-  FROM documents
-),
-ln_t AS (
-  SELECT lang, a_side, t, ws,
-         list_filter(regexp_split_to_array(t, '{_WS_CLASS_SQL}*\n{_WS_CLASS_SQL}*'),
-                     x -> x <> '') AS lines
-  FROM base
-),
-g AS (
-  SELECT lang, a_side,
-         CASE WHEN (CASE WHEN len(ws) = 0 THEN 0.0
-                    ELSE CAST(length(t) - length(translate(t, {_SYM_TRANSLATE_SQL}, ''))
-                              AS DOUBLE) / len(ws) END) <= 0.1
-               AND len(ws) >= 5
-               AND (CASE WHEN len(lines) <= 1 THEN 0.0
-                    ELSE CAST(len(lines) - len(list_distinct(lines)) AS DOUBLE)
-                         / len(lines) END) <= 0.3
-              THEN 1 ELSE 0 END AS kp
-  FROM ln_t
-),
-cell AS (
-  SELECT lang,
-         SUM(CASE WHEN a_side THEN 1 ELSE 0 END) AS na,
-         SUM(CASE WHEN a_side THEN kp ELSE 0 END) AS ka,
-         SUM(CASE WHEN a_side THEN 0 ELSE 1 END) AS nb,
-         SUM(CASE WHEN a_side THEN 0 ELSE kp END) AS kb
-  FROM g GROUP BY 1
-),
-tot AS (
-  SELECT SUM(na) AS ta, SUM(nb) AS tb, SUM(ka) AS kta, SUM(kb) AS ktb
-  FROM cell
-),
-terms AS (
-  SELECT
-    CAST(round((CAST(na AS DOUBLE) / CAST(ta AS DOUBLE))
-               * (CAST(ka AS DOUBLE) / CAST(na AS DOUBLE)
-                  - CAST(kb AS DOUBLE) / CAST(nb AS DOUBLE)), 9)
-         AS DECIMAL(20,9)) AS rt,
-    CAST(round((CAST(na AS DOUBLE) / CAST(ta AS DOUBLE)
-                - CAST(nb AS DOUBLE) / CAST(tb AS DOUBLE))
-               * (CAST(kb AS DOUBLE) / CAST(nb AS DOUBLE)), 9)
-         AS DECIMAL(20,9)) AS mt,
-    CAST(kta AS DOUBLE) / CAST(ta AS DOUBLE)
-      - CAST(ktb AS DOUBLE) / CAST(tb AS DOUBLE) AS gap
-  FROM cell CROSS JOIN tot
-)
-SELECT round(MAX(gap), 6) AS overall_gap,
-       round(CAST(SUM(rt) AS DOUBLE), 6) AS rate_effect,
-       round(CAST(SUM(mt) AS DOUBLE), 6) AS mix_effect,
-       round(MAX(gap) - (CAST(SUM(rt) AS DOUBLE) + CAST(SUM(mt) AS DOUBLE)), 6)
-         AS residual
-FROM terms
-"""
+# SCD2 page-churn census.
 
 
 def q_page_churn_census(spark, sf_dir):
@@ -6751,107 +5376,8 @@ SELECT n_versions, COUNT(*) AS n_pages FROM per_page GROUP BY 1
 
 
 # ------------------------------------------------------------ round-5 batch 57
-# Discriminative keep/drop vocabulary.
-
-
-def q_keep_discriminative_terms(spark, sf_dir):
-    """Discriminative keep/drop vocabulary: the 10 terms most
-    associated with KEPT docs and the 10 most associated with DROPPED
-    docs under the Gopher rule, by smoothed log-odds ratio
-    ln((k_t+1)/(K+V) ÷ (d_t+1)/(D+V)) — "what vocabulary predicts the
-    filter's decision", the feature-importance readout a filter
-    rollout publishes next to its keep rate. Counts exact integers;
-    one fixed IEEE sequence per term rounded 6 dp; selection by the
-    rounded score with term tie-break."""
-    from ..functions.heuristics import heuristic_columns
-    from ..functions.tokenize import WS_PLUS
-
-    d = _t(spark, sf_dir, "documents")
-    h = heuristic_columns("text")
-    keep = (
-        (F.round(h["symbol_ratio"], 9) <= 0.1)
-        & (h["n_words"].cast("long") >= 5)
-        & (F.round(h["dup_line_frac"], 9) <= 0.3)
-    )
-    words = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda x: F.length(x) > 0)
-    ex = d.select(keep.alias("_k"), F.explode(words).alias("term"))
-    per = ex.groupBy("term").agg(
-        F.sum(F.when(F.col("_k"), 1).otherwise(0)).alias("kt"),
-        F.sum(F.when(~F.col("_k"), 1).otherwise(0)).alias("dt"),
-    )
-    tot = per.agg(
-        F.sum("kt").alias("K"), F.sum("dt").alias("D"),
-        F.count("*").alias("V"),
-    )
-    j = per.crossJoin(F.broadcast(tot))
-    score = F.round(
-        F.log(
-            ((F.col("kt") + 1).cast("double")
-             / (F.col("K") + F.col("V")).cast("double"))
-            / ((F.col("dt") + 1).cast("double")
-               / (F.col("D") + F.col("V")).cast("double"))
-        ),
-        6,
-    )
-    scored = j.select("term", "kt", "dt", score.alias("log_odds"))
-    wk = Window.orderBy(F.desc("log_odds"), F.asc("term"))
-    wd = Window.orderBy(F.asc("log_odds"), F.asc("term"))
-    top_k = scored.withColumn("_rk", F.row_number().over(wk)).filter(
-        F.col("_rk") <= 10
-    ).withColumn("which_end", F.lit("keep_associated")).drop("_rk")
-    top_d = scored.withColumn("_rk", F.row_number().over(wd)).filter(
-        F.col("_rk") <= 10
-    ).withColumn("which_end", F.lit("drop_associated")).drop("_rk")
-    return top_k.unionByName(top_d)
-
-
-SQL_KEEP_DISCRIMINATIVE_TERMS = f"""
-WITH base AS (
-  SELECT coalesce(text, '') AS t, {_WORDS_WS_SQL} AS ws FROM documents
-),
-ln_t AS (
-  SELECT t, ws,
-         list_filter(regexp_split_to_array(t, '{_WS_CLASS_SQL}*\n{_WS_CLASS_SQL}*'),
-                     x -> x <> '') AS lines
-  FROM base
-),
-g AS (
-  SELECT ws,
-         (CASE WHEN len(ws) = 0 THEN 0.0
-               ELSE CAST(length(t) - length(translate(t, {_SYM_TRANSLATE_SQL}, ''))
-                         AS DOUBLE) / len(ws) END) <= 0.1
-         AND len(ws) >= 5
-         AND (CASE WHEN len(lines) <= 1 THEN 0.0
-              ELSE CAST(len(lines) - len(list_distinct(lines)) AS DOUBLE)
-                   / len(lines) END) <= 0.3 AS kp
-  FROM ln_t
-),
-ex AS (SELECT kp, unnest(ws) AS term FROM g),
-per AS (
-  SELECT term,
-         SUM(CASE WHEN kp THEN 1 ELSE 0 END) AS kt,
-         SUM(CASE WHEN kp THEN 0 ELSE 1 END) AS dt
-  FROM ex GROUP BY 1
-),
-tot AS (SELECT SUM(kt) AS kk, SUM(dt) AS dd, COUNT(*) AS vv FROM per),
-scored AS (
-  SELECT term, kt, dt,
-         round(ln((CAST(kt + 1 AS DOUBLE) / CAST(kk + vv AS DOUBLE))
-                  / (CAST(dt + 1 AS DOUBLE) / CAST(dd + vv AS DOUBLE))), 6)
-           AS log_odds
-  FROM per CROSS JOIN tot
-),
-top_k AS (
-  SELECT term, kt, dt, log_odds, 'keep_associated' AS which_end
-  FROM scored ORDER BY log_odds DESC, term LIMIT 10
-),
-top_d AS (
-  SELECT term, kt, dt, log_odds, 'drop_associated' AS which_end
-  FROM scored ORDER BY log_odds ASC, term LIMIT 10
-)
-SELECT * FROM top_k UNION ALL SELECT * FROM top_d
-"""
+# THETA-sketch vocabulary sizes, then the later dedup, sampling and
+# tokenizer reports.
 
 
 def q_theta_vocab_by_source(spark, sf_dir):
@@ -6956,80 +5482,6 @@ SELECT CAST(na * 64 AS BIGINT) AS est_a,
              / CAST(greatest(exact_intersect, 1) AS DOUBLE), 6)
          AS rel_error_intersect
 FROM na, nb, ni, exact
-"""
-
-
-def q_label_prop_communities(spark, sf_dir):
-    """3-round synchronous label propagation over the synthesized link
-    graph (operators/graph.py:label_propagation) — the linear-time
-    community detector that groups mirror rings / template families
-    where connected components is too coarse. Deterministic by
-    construction: synchronous rounds, integer vote counts, ties to the
-    smallest label — so the unrolled-CTE twin matches exactly; per
-    round ONE dst-keyed join and two map-side-combinable aggregates
-    (never a per-node window, which would sort a mega-hub's votes in
-    one task)."""
-    from ..operators.graph import label_propagation
-
-    return label_propagation(_link_edges(spark, sf_dir), n_rounds=3)
-
-
-def _sql_label_prop() -> str:
-    rnd = """
-SELECT v.node, MIN(v.label) AS label
-FROM (SELECT ue.u AS node, l.label, COUNT(*) AS c
-      FROM ue JOIN {L} l ON ue.v = l.node GROUP BY 1, 2) v
-JOIN (SELECT node, MAX(c) AS mc
-      FROM (SELECT ue.u AS node, l.label, COUNT(*) AS c
-            FROM ue JOIN {L} l ON ue.v = l.node GROUP BY 1, 2)
-      GROUP BY node) m
-ON v.node = m.node AND v.c = m.mc
-GROUP BY v.node
-"""
-    return f"""
-WITH e0 AS ({_SQL_LINK_EDGES}),
-ue AS (
-  SELECT DISTINCT u, v FROM (
-    SELECT src AS u, dst AS v FROM e0
-    UNION ALL SELECT dst, src FROM e0
-  )
-),
-l0 AS (SELECT DISTINCT u AS node, u AS label FROM ue),
-l1 AS ({rnd.format(L='l0')}),
-l2 AS ({rnd.format(L='l1')}),
-l3 AS ({rnd.format(L='l2')})
-SELECT node, label FROM l3
-"""
-
-
-def q_cocitation_pairs(spark, sf_dir):
-    """Co-citation similarity over the link graph
-    (operators/graph.py:cocitation_pairs): dst pairs cited by >= 2
-    common sources with the citer-set Jaccard — the content-free
-    "related pages" signal that groups mirrors ACROSS hosts. The
-    src-keyed self-join has the same quadratic-bucket geometry as an
-    LSH band bucket (out_degree² per src), with the same documented
-    mitigation at scale."""
-    from ..operators.graph import cocitation_pairs
-
-    return cocitation_pairs(_link_edges(spark, sf_dir), min_shared=2)
-
-
-SQL_COCITATION_PAIRS = f"""
-WITH e AS (SELECT DISTINCT src, dst FROM ({_SQL_LINK_EDGES})),
-shared AS (
-  SELECT l.dst AS a, r.dst AS b, COUNT(*) AS n_shared_citers
-  FROM e l JOIN e r ON l.src = r.src AND l.dst < r.dst
-  GROUP BY 1, 2
-  HAVING COUNT(*) >= 2
-),
-ind AS (SELECT dst, COUNT(*) AS ind FROM e GROUP BY dst)
-SELECT a, b, n_shared_citers,
-       round(CAST(n_shared_citers AS DOUBLE)
-             / CAST(ia.ind + ib.ind - n_shared_citers AS DOUBLE), 6)
-         AS cocite_jaccard
-FROM shared JOIN ind ia ON shared.a = ia.dst
-            JOIN ind ib ON shared.b = ib.dst
 """
 
 
@@ -7170,56 +5622,6 @@ FROM dets CROSS JOIN correct
 """
 
 
-def q_trustrank_links(spark, sf_dir):
-    """3-iteration TrustRank over the synthesized link graph with seeds
-    = nodes divisible by 50 (operators/graph.py:trustrank) — teleport
-    mass restricted to the trusted set, so pages reachable only from
-    spam neighborhoods score ~0 where uniform-teleport PageRank still
-    pays its (1−d)/N floor; rank-high + trust-low is the link-farm
-    flag. Same 1e12 integer fixed-point discipline as link_pagerank —
-    bit-identical vs the unrolled-CTE twin."""
-    from ..operators.graph import trustrank
-
-    e = _link_edges(spark, sf_dir)
-    nodes = e.select(F.col("src").alias("node")).unionByName(
-        e.select(F.col("dst").alias("node"))
-    ).distinct()
-    seeds = nodes.filter(F.col("node") % 50 == 0)
-    return trustrank(e, seeds, n_iter=3)
-
-
-def _sql_trustrank() -> str:
-    s = 10 ** 12
-    it = f"""
-SELECT sd.node, sd.is_seed,
-  (CASE WHEN sd.is_seed = 1
-        THEN ({3 * s} * 2 + st.s * 20) // (st.s * 20 * 2) ELSE 0 END)
-  + ((coalesce(rc.received, 0) * 17 * 2 + 20) // 40) AS fp
-FROM sd CROSS JOIN st
-LEFT JOIN (
-  SELECT e.dst AS node, SUM((r.fp * 2 + d.deg) // (d.deg * 2)) AS received
-  FROM e JOIN {{R}} r ON e.src = r.node JOIN deg d ON e.src = d.src
-  GROUP BY e.dst) rc
-ON sd.node = rc.node
-"""
-    return f"""
-WITH e AS ({_SQL_LINK_EDGES}),
-nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-sd AS (SELECT node, CASE WHEN node % 50 = 0 THEN 1 ELSE 0 END AS is_seed
-       FROM nodes),
-st AS (SELECT SUM(is_seed) AS s FROM sd),
-deg AS (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-r0 AS (SELECT sd.node, sd.is_seed,
-              CASE WHEN is_seed = 1 THEN ({s} * 2 + st.s) // (st.s * 2)
-                   ELSE 0 END AS fp
-       FROM sd CROSS JOIN st),
-r1 AS ({it.format(R='r0')}),
-r2 AS ({it.format(R='r1')}),
-r3 AS ({it.format(R='r2')})
-SELECT node, CAST(fp AS DOUBLE) / 1e12 AS trust FROM r3
-"""
-
-
 def q_dedup_cc_best(spark, sf_dir):
     """Quality-aware transitive near-dup dedup
     (operators/dedup.py:cc_dedup_best): each MinHash-verified connected
@@ -7332,51 +5734,6 @@ r3 AS (SELECT freq,
 SELECT 1 AS step, lhs, rhs, pair_count FROM m1
 UNION ALL SELECT 2, lhs, rhs, pair_count FROM m2
 UNION ALL SELECT 3, lhs, rhs, pair_count FROM m3
-"""
-
-
-def q_stream_dedup(spark, sf_dir):
-    """Streaming EXACT dedup: dropDuplicates on (source, md5(text))
-    over a real 4-micro-batch file stream of the documents table —
-    Spark's native stateful dedup operator (the state store carries the
-    seen-key set across micro-batches) — then per-source survivor
-    counts, proven ≡ batch DISTINCT bit-for-bit by the twin. Same
-    idempotent staging + per-invocation memory-sink naming as
-    q_stream_windowed_agg."""
-    batch = _t(spark, sf_dir, "documents")
-    stage = "/tmp/xdan_stream_docs_" + sf_dir.strip("/").replace("/", "_")
-    spec = {"sf_dir": sf_dir, "rows": batch.count(), "n_files": 4}
-    marker = os.path.join(stage, "_SPEC.json")
-    _stage_with_spec(
-        marker, spec,
-        lambda: batch.repartition(4).write.mode("overwrite")
-        .parquet(f"{stage}/documents"),
-    )
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{stage}/documents")
-    )
-    dd = src.select(
-        "source", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("_h")
-    ).dropDuplicates(["source", "_h"])
-    agg = dd.groupBy("source").agg(F.count("*").alias("n_unique"))
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    name = f"stream_dedup_{key}_{next(_STREAM_QUERY_SEQ)}"
-    q = (
-        agg.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    local = spark.createDataFrame(out.collect(), schema=out.schema)
-    spark.catalog.dropTempView(name)
-    return local
-
-
-SQL_STREAM_DEDUP = """
-SELECT source, COUNT(DISTINCT md5(coalesce(text, ''))) AS n_unique
-FROM documents GROUP BY source
 """
 
 
@@ -7886,78 +6243,6 @@ FROM (
 """
 
 
-def q_hashed_tf_knn(spark, sf_dir):
-    """Model-free document kNN by the HASHING TRICK, computed SPARSELY:
-    each doc becomes a 256-bucket hashed term-count vector, but the
-    vectors are never materialized — cosine to doc 0 is a sparse
-    relational dot (join on shared buckets, integer count products)
-    over the bucket tables, which is exactly how sparse similarity
-    scales (dense 256-dim arrays per doc would ship zeros; at 2^20
-    buckets the join form is the only viable one). Top-10 by rounded
-    cosine, ties → id."""
-    from ..functions.tokenize import WS_PLUS
-
-    d = _t(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda x: F.length(x) > 0)
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("htf:"), F.col("_w"))), 1, 8),
-               16, 10).cast("long") % 256
-    )
-    tb = (
-        d.select("doc_id", F.explode(words).alias("_w"))
-        .select("doc_id", bucket.alias("b"))
-        .groupBy("doc_id", "b").agg(F.count("*").alias("c"))
-    )
-    norms = tb.groupBy("doc_id").agg(F.sum(F.col("c") * F.col("c")).alias("_n2"))
-    q0 = tb.filter(F.col("doc_id") == 0).select(
-        F.col("b"), F.col("c").alias("c0"))
-    n0 = norms.filter(F.col("doc_id") == 0).select(
-        F.col("_n2").alias("_n0"))
-    dots = (
-        tb.join(F.broadcast(q0), "b")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("c") * F.col("c0")).alias("_dot"))
-    )
-    return (
-        dots.join(norms, "doc_id").crossJoin(F.broadcast(n0))
-        .select(
-            "doc_id",
-            F.round(
-                F.col("_dot").cast("double")
-                / (F.sqrt(F.col("_n2").cast("double"))
-                   * F.sqrt(F.col("_n0").cast("double"))),
-                6,
-            ).alias("cosine_r"),
-        )
-        .orderBy(F.desc("cosine_r"), F.asc("doc_id"))
-        .limit(10)
-    )
-
-
-SQL_HASHED_TF_KNN = f"""
-WITH ex AS (
-  SELECT doc_id,
-         CAST('0x' || substr(md5('htf:' || w), 1, 8) AS BIGINT) % 256 AS b
-  FROM (SELECT doc_id, unnest({_WORDS_WS_SQL}) AS w FROM documents)
-),
-tb AS (SELECT doc_id, b, COUNT(*) AS c FROM ex GROUP BY 1, 2),
-norms AS (SELECT doc_id, SUM(c * c) AS n2 FROM tb GROUP BY 1),
-q0 AS (SELECT b, c AS c0 FROM tb WHERE doc_id = 0),
-n0 AS (SELECT n2 AS nn0 FROM norms WHERE doc_id = 0),
-dots AS (
-  SELECT tb.doc_id, SUM(tb.c * q0.c0) AS dot
-  FROM tb JOIN q0 ON tb.b = q0.b GROUP BY tb.doc_id
-)
-SELECT d.doc_id,
-       round(CAST(dot AS DOUBLE)
-             / (sqrt(CAST(n2 AS DOUBLE)) * sqrt(CAST(nn0 AS DOUBLE))), 6)
-         AS cosine_r
-FROM dots d JOIN norms USING (doc_id) CROSS JOIN n0
-ORDER BY cosine_r DESC, doc_id LIMIT 10
-"""
-
-
 def q_slot_apportionment(spark, sf_dir):
     """Hamilton largest-remainder apportionment of a 1000-slot crawl /
     sampling budget across sources, weighted by kept-doc count under
@@ -8097,249 +6382,6 @@ SELECT n, n11, n10, n01, n00,
                    * CAST(n10 + n00 AS DOUBLE) / CAST(n AS DOUBLE))), 6)
          AS kappa
 FROM ct
-"""
-
-
-def q_filter_cascade_plan(spark, sf_dir):
-    """Filter-cascade ORDERING plan: per Gopher rule, the measured
-    solo drop count and selectivity, ranked cheapest-first-most-
-    selective-first — the predicate-ordering decision a 100 TB filter
-    stack makes once per corpus profile (run the rule that kills the
-    most docs per unit cost first; later rules see fewer rows). Cost
-    weights are the documented static proxies (translate=1, split=2,
-    line-split+distinct=3); the efficiency rank is
-    drop_count·1000 DIV cost — integer, so the ordering never rides a
-    float ULP. One scan computes every rule's flag; counts fold
-    map-side."""
-    from ..functions.heuristics import heuristic_columns
-
-    d = _t(spark, sf_dir, "documents")
-    h = heuristic_columns("text")
-    rules = [
-        ("min_words", h["n_words"].cast("long") < 5, 2),
-        ("symbol_ratio", F.round(h["symbol_ratio"], 9) > 0.1, 1),
-        ("dup_lines", F.round(h["dup_line_frac"], 9) > 0.3, 3),
-    ]
-    flags = d.select(*[
-        F.when(cond, 1).otherwise(0).alias(f"_f_{name}")
-        for name, cond, _ in rules
-    ])
-    agg = flags.agg(
-        F.count("*").alias("n"),
-        *[F.sum(f"_f_{name}").alias(f"_d_{name}") for name, _, _ in rules],
-    )
-    rows = []
-    for name, _, cost in rules:
-        rows.append(
-            agg.select(
-                F.lit(name).alias("rule"),
-                F.lit(cost).alias("cost"),
-                F.col(f"_d_{name}").alias("n_dropped_alone"),
-                F.round(
-                    F.col(f"_d_{name}").cast("double")
-                    / F.col("n").cast("double"), 6
-                ).alias("selectivity"),
-                F.expr(f"(_d_{name} * 1000) DIV {cost}").alias("efficiency"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    wnd = Window.orderBy(F.desc("efficiency"), F.asc("rule"))
-    return out.withColumn("run_order", F.row_number().over(wnd))
-
-
-SQL_FILTER_CASCADE_PLAN = f"""
-WITH base AS (
-  SELECT coalesce(text, '') AS t, {_WORDS_WS_SQL} AS ws FROM documents
-),
-ln_t AS (
-  SELECT t, ws,
-         list_filter(regexp_split_to_array(t, '{_WS_CLASS_SQL}*\n{_WS_CLASS_SQL}*'),
-                     x -> x <> '') AS lines
-  FROM base
-),
-fl AS (
-  SELECT CASE WHEN len(ws) < 5 THEN 1 ELSE 0 END AS f_min_words,
-         CASE WHEN (CASE WHEN len(ws) = 0 THEN 0.0
-               ELSE CAST(length(t) - length(translate(t, {_SYM_TRANSLATE_SQL}, ''))
-                         AS DOUBLE) / len(ws) END) > 0.1 THEN 1 ELSE 0 END
-           AS f_symbol_ratio,
-         CASE WHEN (CASE WHEN len(lines) <= 1 THEN 0.0
-               ELSE CAST(len(lines) - len(list_distinct(lines)) AS DOUBLE)
-                    / len(lines) END) > 0.3 THEN 1 ELSE 0 END AS f_dup_lines
-  FROM ln_t
-),
-agg AS (
-  SELECT COUNT(*) AS n, SUM(f_min_words) AS d_min_words,
-         SUM(f_symbol_ratio) AS d_symbol_ratio,
-         SUM(f_dup_lines) AS d_dup_lines
-  FROM fl
-),
-rules AS (
-  SELECT 'min_words' AS rule, 2 AS cost, d_min_words AS n_dropped_alone,
-         round(CAST(d_min_words AS DOUBLE) / n, 6) AS selectivity,
-         (d_min_words * 1000) // 2 AS efficiency FROM agg
-  UNION ALL
-  SELECT 'symbol_ratio', 1, d_symbol_ratio,
-         round(CAST(d_symbol_ratio AS DOUBLE) / n, 6),
-         (d_symbol_ratio * 1000) // 1 FROM agg
-  UNION ALL
-  SELECT 'dup_lines', 3, d_dup_lines,
-         round(CAST(d_dup_lines AS DOUBLE) / n, 6),
-         (d_dup_lines * 1000) // 3 FROM agg
-)
-SELECT rule, cost, n_dropped_alone, selectivity, efficiency,
-       row_number() OVER (ORDER BY efficiency DESC, rule) AS run_order
-FROM rules
-"""
-
-
-def q_keep_rate_wilson(spark, sf_dir):
-    """Per-source keep rate under the Gopher rule with the 95% WILSON
-    score interval — the honest uncertainty band small sources need
-    (a 10-doc source's 0.9 keep rate means far less than a 10⁶-doc
-    source's; normal-approximation intervals collapse near 0/1 where
-    web keep rates live). Counts are exact integers; the interval is
-    one fixed IEEE sequence per source (z = 1.96 literal) rounded 6
-    dp."""
-    from ..functions.heuristics import heuristic_columns
-
-    d = _t(spark, sf_dir, "documents")
-    h = heuristic_columns("text")
-    keep = (
-        (F.round(h["symbol_ratio"], 9) <= 0.1)
-        & (h["n_words"].cast("long") >= 5)
-        & (F.round(h["dup_line_frac"], 9) <= 0.3)
-    )
-    per = d.groupBy("source").agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(keep, 1).otherwise(0)).alias("k"),
-    )
-    nd = F.col("n").cast("double")
-    p = F.col("k").cast("double") / nd
-    z2 = F.lit(1.96 * 1.96)
-    denom = F.lit(1.0) + z2 / nd
-    center = (p + z2 / (F.lit(2.0) * nd)) / denom
-    half = (
-        F.lit(1.96)
-        * F.sqrt(p * (F.lit(1.0) - p) / nd + z2 / (F.lit(4.0) * nd * nd))
-        / denom
-    )
-    return per.select(
-        "source", "n", "k",
-        F.round(p, 6).alias("keep_rate"),
-        F.round(center - half, 6).alias("wilson_lo"),
-        F.round(center + half, 6).alias("wilson_hi"),
-    )
-
-
-SQL_KEEP_RATE_WILSON = f"""
-WITH base AS (
-  SELECT source, coalesce(text, '') AS t, {_WORDS_WS_SQL} AS ws
-  FROM documents
-),
-ln_t AS (
-  SELECT source, t, ws,
-         list_filter(regexp_split_to_array(t, '{_WS_CLASS_SQL}*\n{_WS_CLASS_SQL}*'),
-                     x -> x <> '') AS lines
-  FROM base
-),
-g AS (
-  SELECT source,
-         CASE WHEN (CASE WHEN len(ws) = 0 THEN 0.0
-               ELSE CAST(length(t) - length(translate(t, {_SYM_TRANSLATE_SQL}, ''))
-                         AS DOUBLE) / len(ws) END) <= 0.1
-          AND len(ws) >= 5
-          AND (CASE WHEN len(lines) <= 1 THEN 0.0
-               ELSE CAST(len(lines) - len(list_distinct(lines)) AS DOUBLE)
-                    / len(lines) END) <= 0.3
-         THEN 1 ELSE 0 END AS kp
-  FROM ln_t
-),
-per AS (SELECT source, COUNT(*) AS n, SUM(kp) AS k FROM g GROUP BY source)
-SELECT source, n, k,
-       round(CAST(k AS DOUBLE) / n, 6) AS keep_rate,
-       round(((CAST(k AS DOUBLE) / n + 3.8416 / (2 * n))
-              / (1.0 + 3.8416 / n))
-             - (1.96 * sqrt((CAST(k AS DOUBLE) / n)
-                            * (1.0 - CAST(k AS DOUBLE) / n) / n
-                            + 3.8416 / (4.0 * CAST(n AS DOUBLE) * n))
-                / (1.0 + 3.8416 / n)), 6) AS wilson_lo,
-       round(((CAST(k AS DOUBLE) / n + 3.8416 / (2 * n))
-              / (1.0 + 3.8416 / n))
-             + (1.96 * sqrt((CAST(k AS DOUBLE) / n)
-                            * (1.0 - CAST(k AS DOUBLE) / n) / n
-                            + 3.8416 / (4.0 * CAST(n AS DOUBLE) * n))
-                / (1.0 + 3.8416 / n)), 6) AS wilson_hi
-FROM per
-"""
-
-
-def q_term_burstiness(spark, sf_dir):
-    """Term BURSTINESS by the Fano factor (variance-to-mean ratio of
-    per-day counts): stable function words sit near Poisson (F ≈ 1),
-    event-driven vocabulary spikes (F ≫ 1) — the dispersion signal
-    that separates topical bursts from steady background where raw
-    frequency ranks can't. Top-20 over events.props-free text? No —
-    over the documents corpus keyed by doc_id-derived synthetic days
-    (doc_id DIV 50: deterministic, 10 days), since documents carry no
-    timestamp; the estimator is the point. Counts are exact integers;
-    the variance numerator n·Σx² − (Σx)² is integer products whose
-    magnitudes stay far inside double's 2^53 exact range, so the whole
-    statistic is two exact divisions. Terms below 30 total
-    occurrences are excluded (tiny-sample Fano is noise; documented
-    floor, not silent)."""
-    from ..functions.tokenize import WS_PLUS
-
-    d = _t(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda x: F.length(x) > 0)
-    ex = d.select(
-        (F.col("doc_id") / 50).cast("long").alias("day"),
-        F.explode(words).alias("term"),
-    )
-    daily = ex.groupBy("term", "day").agg(F.count("*").alias("c"))
-    days = daily.agg(F.count_distinct("day").alias("_nd"))
-    per = daily.groupBy("term").agg(
-        F.sum("c").alias("total"),
-        F.sum(F.col("c") * F.col("c")).alias("_s2"),
-    )
-    j = per.crossJoin(F.broadcast(days)).filter(F.col("total") >= 30)
-    nd = F.col("_nd").cast("double")
-    mean = F.col("total").cast("double") / nd
-    var = (
-        F.col("_nd").cast("double") * F.col("_s2").cast("double")
-        - F.col("total").cast("double") * F.col("total").cast("double")
-    ) / (nd * nd)
-    fano = F.round(var / mean, 6)
-    # a top-k sort (TakeOrderedAndProject: per-task top 20, then merge),
-    # not a row_number over one unpartitioned window
-    return (
-        j.select("term", "total", fano.alias("fano"))
-        .orderBy(F.desc("fano"), F.asc("term"))
-        .limit(20)
-    )
-
-
-SQL_TERM_BURSTINESS = f"""
-WITH ex AS (
-  SELECT doc_id // 50 AS day, unnest({_WORDS_WS_SQL}) AS term
-  FROM documents
-),
-daily AS (SELECT term, day, COUNT(*) AS c FROM ex GROUP BY 1, 2),
-days AS (SELECT COUNT(DISTINCT day) AS nd FROM daily),
-per AS (
-  SELECT term, SUM(c) AS total, SUM(c * c) AS s2 FROM daily GROUP BY term
-),
-f AS (
-  SELECT term, total,
-         round(((CAST(nd AS DOUBLE) * s2 - CAST(total AS DOUBLE) * total)
-                / (CAST(nd AS DOUBLE) * nd))
-               / (CAST(total AS DOUBLE) / nd), 6) AS fano
-  FROM per CROSS JOIN days WHERE total >= 30
-)
-SELECT term, total, fano FROM f ORDER BY fano DESC, term LIMIT 20
 """
 
 
@@ -8636,15 +6678,9 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "token_count": (q_token_count, SQL_TOKEN_COUNT),
     "tf_top_terms": (q_tf_top_terms, SQL_TF_TOP_TERMS),
     "a6_token_quantiles": (q_a6_token_quantiles, SQL_A6_TOKEN_QUANTILES),
-    "o2_topn_per_group": (q_o2_topn_per_group, SQL_O2_TOPN),
-    "a8_langs_per_source": (q_a8_langs_per_source, SQL_A8_LANGS),
-    "a9_rollup_report": (q_a9_rollup_report, SQL_A9_ROLLUP),
-    "a10_quality_tiles": (q_a10_quality_tiles, SQL_A10_TILES),
     "dedup_lev_pairs": (q_dedup_lev_pairs, SQL_DEDUP_LEV),
     "a11_feature_corr": (q_a11_feature_corr, SQL_A11_CORR),
     "boilerplate_shingles": (q_boilerplate_shingles, SQL_BOILERPLATE),
-    "a13_trimmed_mean": (q_a13_trimmed_mean, SQL_A13_TRIMMED),
-    "a14_source_share": (q_a14_source_share, SQL_A14_SHARE),
     "lexical_diversity": (q_lexical_diversity, SQL_LEXICAL_DIVERSITY),
     "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF),
     "pmi_bigrams": (q_pmi_bigrams, SQL_PMI),
@@ -8659,7 +6695,6 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "chunk_plan": (q_chunk_plan, SQL_CHUNK),
     "pack_bins": (q_pack_bins, SQL_PACK),
     "char_diversity": (q_char_diversity, SQL_CHAR_DIVERSITY),
-    "s3_weighted_sample": (q_s3_weighted_sample, SQL_S3_WEIGHTED),
     "ngram_repetition": (q_ngram_repetition, SQL_NGRAM_REPETITION),
     "token_entropy": (q_token_entropy, SQL_TOKEN_ENTROPY),
     "stopword_coverage": (
@@ -8673,9 +6708,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "lang_confusion": (q_lang_confusion, _lang_confusion_sql),
     "pii_prevalence": (q_pii_prevalence, _pii_prevalence_sql),
     "calibration_curve": (q_calibration_curve, _calibration_curve_sql),
-    "a26_lang_deciles": (q_a26_lang_deciles, SQL_A26_LANG_DECILES),
     "dedup_spans": (q_dedup_spans, SQL_DEDUP_SPANS),
-    "a28_vocab_census": (q_a28_vocab_census, SQL_A28_VOCAB_CENSUS),
     "dedup_spans_within": (q_dedup_spans_within, SQL_DEDUP_SPANS_WITHIN),
     "term_df_scrub": (q_term_df_scrub, SQL_TERM_DF_SCRUB),
     "dedup_minhash_incr": (q_dedup_minhash_incr, SQL_DEDUP_MINHASH_INCR),
@@ -8684,24 +6717,15 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "url_dedup_lastwins": (q_url_dedup, _sql_url_dedup),
     "split_leak_safe": (q_split_leak_safe, SQL_SPLIT_LEAK_SAFE),
     "robots_filter": (q_robots_filter, SQL_ROBOTS_FILTER),
-    "link_pagerank": (q_link_pagerank, _sql_pagerank),
-    "link_degree_census": (q_link_degree_census, SQL_LINK_DEGREE_CENSUS),
     "mixture_apply": (q_mixture_apply, SQL_MIXTURE_APPLY),
     "normalize_punct": (q_normalize_punct, _sql_normalize_punct),
     "web_curation_e2e": (q_web_curation_e2e, SQL_WEB_CURATION_E2E),
-    "tok_bytes_ratio": (q_tok_bytes_ratio, SQL_TOK_BYTES_RATIO),
-    "hapax_rate": (q_hapax_rate, SQL_HAPAX_RATE),
     "zipf_slope": (q_zipf_slope, SQL_ZIPF_SLOPE),
     "hll_vocab": (q_hll_vocab, SQL_HLL_VOCAB),
     "cms_terms": (q_cms_terms, SQL_CMS_TERMS),
     "gini_sources": (q_gini_sources, SQL_GINI_SOURCES),
-    "hits_scores": (q_hits_scores, SQL_HITS_SCORES),
-    "profile_documents": (q_profile_documents, SQL_PROFILE_DOCUMENTS),
     "stream_hll": (q_stream_hll, SQL_STREAM_HLL),
-    "kcore_links": (q_kcore_links, SQL_KCORE_LINKS),
-    "link_structure": (q_link_structure, SQL_LINK_STRUCTURE),
     "scd2_pages": (q_scd2_pages, SQL_SCD2_PAGES),
-    "bool_search": (q_bool_search, SQL_BOOL_SEARCH),
     "wrs_sample": (q_wrs_sample, SQL_WRS_SAMPLE),
     "hll_by_source": (q_hll_by_source, SQL_HLL_BY_SOURCE),
     "lang_source_mi": (q_lang_source_mi, SQL_LANG_SOURCE_MI),
@@ -8716,32 +6740,20 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "log_quantile_sketch": (q_log_quantile_sketch, SQL_LOG_QUANTILE_SKETCH),
     "stream_cms": (q_stream_cms, SQL_STREAM_CMS),
     "rbo_source_rankings": (q_rbo_source_rankings, SQL_RBO_SOURCE_RANKINGS),
-    "keep_ab_test": (q_keep_ab_test, SQL_KEEP_AB_TEST),
     "vocab_coverage": (q_vocab_coverage, SQL_VOCAB_COVERAGE),
     "cdc_docs": (q_cdc_docs, SQL_CDC_DOCS),
     "emd_length_drift": (q_emd_length_drift, SQL_EMD_LENGTH_DRIFT),
     "doc_novelty": (q_doc_novelty, SQL_DOC_NOVELTY),
     "term_adaptation": (q_term_adaptation, SQL_TERM_ADAPTATION),
     "bigram_cond_entropy": (q_bigram_cond_entropy, SQL_BIGRAM_COND_ENTROPY),
-    "local_clustering": (q_local_clustering, SQL_LOCAL_CLUSTERING),
-    "dup_rate_by_source": (q_dup_rate_by_source, SQL_DUP_RATE_BY_SOURCE),
     "hill_tail": (q_hill_tail, SQL_HILL_TAIL),
-    "simpson_probe": (q_simpson_probe, SQL_SIMPSON_PROBE),
-    "trending_terms": (q_trending_terms, SQL_TRENDING_TERMS),
-    "vocab_growth": (q_vocab_growth, SQL_VOCAB_GROWTH),
-    "mix_rate_decomposition": (q_mix_rate_decomposition, SQL_MIX_RATE_DECOMPOSITION),
     "page_churn_census": (q_page_churn_census, SQL_PAGE_CHURN_CENSUS),
-    "keep_discriminative_terms": (q_keep_discriminative_terms, SQL_KEEP_DISCRIMINATIVE_TERMS),
     "theta_vocab_by_source": (q_theta_vocab_by_source, SQL_THETA_VOCAB_BY_SOURCE),
     "theta_vocab_overlap": (q_theta_vocab_overlap, SQL_THETA_VOCAB_OVERLAP),
-    "label_prop_communities": (q_label_prop_communities, _sql_label_prop),
-    "cocitation_pairs": (q_cocitation_pairs, SQL_COCITATION_PAIRS),
     "cdc_chunk_census": (q_cdc_chunk_census, SQL_CDC_CHUNK_CENSUS),
     "linear_probe_train": (q_linear_probe_train, SQL_LINEAR_PROBE_TRAIN),
-    "trustrank_links": (q_trustrank_links, _sql_trustrank),
     "dedup_cc_best": (q_dedup_cc_best, SQL_DEDUP_CC_BEST),
     "bpe_merges": (q_bpe_merges, SQL_BPE_MERGES),
-    "stream_dedup": (q_stream_dedup, SQL_STREAM_DEDUP),
     "quantile_normalize": (q_quantile_normalize, SQL_QUANTILE_NORMALIZE),
     "dsir_weights": (q_dsir_weights, SQL_DSIR_WEIGHTS),
     "bigram_lm_ppl": (q_bigram_lm_ppl, SQL_BIGRAM_LM_PPL),
@@ -8749,12 +6761,8 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "coverage_select": (q_coverage_select, SQL_COVERAGE_SELECT),
     "lsh_recall_eval": (q_lsh_recall_eval, SQL_LSH_RECALL_EVAL),
     "split_by_cluster": (q_split_by_cluster, SQL_SPLIT_BY_CLUSTER),
-    "hashed_tf_knn": (q_hashed_tf_knn, SQL_HASHED_TF_KNN),
     "slot_apportionment": (q_slot_apportionment, SQL_SLOT_APPORTIONMENT),
     "dedup_family_kappa": (q_dedup_family_kappa, _sql_dedup_family_kappa),
-    "filter_cascade_plan": (q_filter_cascade_plan, SQL_FILTER_CASCADE_PLAN),
-    "keep_rate_wilson": (q_keep_rate_wilson, SQL_KEEP_RATE_WILSON),
-    "term_burstiness": (q_term_burstiness, SQL_TERM_BURSTINESS),
     "dedup_cc_incr": (q_dedup_cc_incr, SQL_DEDUP_CC_INCR),
     "lsh_candidate_forecast": (q_lsh_candidate_forecast, SQL_LSH_CANDIDATE_FORECAST),
     "dedup_audit_sample": (q_dedup_audit_sample, _sql_dedup_audit_sample),
@@ -8772,10 +6780,6 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "dedup_provenance": (q_dedup_provenance, _sql_dedup_provenance),
     "stream_gopher_score": (q_stream_gopher_score, SQL_STREAM_GOPHER_SCORE),
     "keep_rate_by_lang": (q_keep_rate_by_lang, _sql_keep_rate_by_lang),
-    "redirect_resolve": (q_redirect_resolve, SQL_REDIRECT_RESOLVE),
-    "phrase_search": (q_phrase_search, SQL_PHRASE_SEARCH),
-    "bm25_topk": (q_bm25_topk, _sql_bm25_topk),
-    "phrase_search_indexed": (q_phrase_search_indexed, SQL_PHRASE_SEARCH),
     "snapshot_diff": (q_snapshot_diff, SQL_SNAPSHOT_DIFF),
     "zorder_values": (q_zorder_values, _sql_zorder_values),
     "chunk_plan_strided": (q_chunk_plan_strided, SQL_CHUNK_STRIDED),
@@ -8784,7 +6788,6 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "incremental_curation_e2e": (q_incremental_curation_e2e, _sql_incremental_curation),
     "dup_cross_source": (q_dup_cross_source, _dup_cross_source_sql),
     "s3_stratified_sample": (q_s3_stratified_sample, SQL_S3_STRATIFIED),
-    "s3_fixed_n_per_group": (q_s3_fixed_n_per_group, SQL_S3_FIXED_N),
     "p5_uid64": (q_p5_uid64, SQL_P5_UID64),
     "p7_scrub": (q_p7_scrub, _scrub_sql),
     "score_core": (q_score_core, _sql_score_core),
