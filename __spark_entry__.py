@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship deterministic quality pipeline on
-sf0.001. ``queries()`` returns the 150 queries: the operators of
+sf0.001. ``queries()`` returns the 114 queries: the operators of
 SURVEY.md §2 plus the dedup and text-analysis stack. Every query reads
 the ``documents`` table, except two reference contracts over ``events``
 (``a2_event_totals``, ``stream_windowed_agg``).

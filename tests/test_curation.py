@@ -257,29 +257,6 @@ def test_blocklist_integer_boundary_is_exact(spark):
     assert blocked == {"a.x"}
 
 
-def test_host_quota_sample_thins_big_hosts_only(spark):
-    """Small hosts pass whole; a big host thins to ~quota in expectation;
-    the keep set is deterministic AND partitioning-invariant (the hash
-    test reads only (doc_id, n) — cluster size can't change fates)."""
-    from xdan_dqa_spark.operators.curation import host_quota_sample
-
-    rows = [(i, "https://big.example.com/%d" % i) for i in range(400)]
-    rows += [(1000 + i, "https://small.example.com/%d" % i) for i in range(3)]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    kept = host_quota_sample(df, quota=40)
-    got = sorted(r["doc_id"] for r in kept.collect())
-    small = [d for d in got if d >= 1000]
-    big = [d for d in got if d < 1000]
-    assert small == [1000, 1001, 1002]          # under quota: all kept
-    assert 10 <= len(big) <= 100                # ~40 expected of 400
-    # deterministic + repartition-invariant
-    again = sorted(r["doc_id"] for r in host_quota_sample(df.repartition(7), quota=40).collect())
-    assert again == got
-
-    with pytest.raises(ValueError):
-        host_quota_sample(df, quota=0)
-
-
 def test_canonical_url_variants_collapse(spark):
     """The five fixture mess patterns (tracking params, fragment,
     trailing slash, uppercase host, default port) all map to the clean
@@ -353,65 +330,6 @@ def test_leak_safe_split_keeps_variants_together(spark):
 
     with pytest.raises(ValueError):
         leak_safe_split(df, weights=(70, 10, 10))
-
-
-def test_robots_filter_drops_disallowed_prefixes(spark):
-    """Rows on a ruled host whose path starts with the disallow prefix
-    drop; same path on an unruled host and other paths on the ruled
-    host survive; the anti-join broadcasts the rule side."""
-    from xdan_dqa_spark.operators.curation import robots_filter
-
-    pages = spark.createDataFrame(
-        [
-            (1, "https://a.com/private/x"),   # ruled host + prefix → drop
-            (2, "https://a.com/public/x"),    # ruled host, other path → keep
-            (3, "https://b.com/private/x"),   # unruled host → keep
-            (4, "https://a.com/private"),     # exact prefix → drop
-            (5, "https://a.com"),             # no path → '/' → keep
-        ],
-        "doc_id long, url string",
-    )
-    rules = spark.createDataFrame(
-        [("a.com", "/private")], "host string, path_prefix string"
-    )
-    out = robots_filter(pages, rules)
-    assert sorted(r["doc_id"] for r in out.collect()) == [2, 3, 5]
-    assert "BroadcastHashJoin" in _plan(out) or "BroadcastNestedLoopJoin" in _plan(out)
-
-
-def test_mixture_apply_rebalances_and_is_deterministic(spark):
-    """After resampling, every source's token mass lands within one doc
-    of the uniform target T/S; copy_ids are dense 0..n-1 per doc; the
-    result is bit-identical under repartition (integer/hash arithmetic
-    only); zero-token sources drop."""
-    from pyspark.sql import functions as F
-
-    from xdan_dqa_spark.operators.curation import mixture_apply
-
-    rows = [(i, "w " * 20, "big", "big") for i in range(90)]          # 1800 tok
-    rows += [(100 + i, "w " * 20, "small", "small") for i in range(10)]  # 200 tok
-    rows += [(200, "", "empty", "empty")]
-    docs = spark.createDataFrame(
-        [(i, t.strip(), l, s) for i, t, l, s in rows],
-        "doc_id long, text string, lang string, source string",
-    )
-    out = mixture_apply(docs, by="source").cache()
-    got = out.collect()
-    assert not [r for r in got if r["source"] == "empty"]
-    # per-source resampled token mass ~ T/S = 2000/2 = 1000 → big thins
-    # to ~1000/1800 rate, small upsamples to 5 copies each
-    by_src = {}
-    for r in got:
-        by_src.setdefault(r["source"], []).append(r)
-    n_big = len(by_src["big"])
-    assert 30 <= n_big <= 70                     # ~50 expected of 90
-    assert len(by_src["small"]) == 50            # exact: epochs = 5.0
-    copies = sorted(r["copy_id"] for r in by_src["small"]
-                    if r["doc_id"] == 100)
-    assert copies == [0, 1, 2, 3, 4]
-    again = mixture_apply(docs.repartition(7), by="source")
-    assert sorted((r["doc_id"], r["copy_id"]) for r in again.collect()) \
-        == sorted((r["doc_id"], r["copy_id"]) for r in got)
 
 
 def test_normalize_punct_maps_and_is_idempotent(spark):
@@ -536,25 +454,6 @@ def test_unigram_kl_disjoint_sources_positive_and_ordered(spark):
     assert got["a"] > 0.3 and got["b"] > 0.3
 
 
-def test_snapshot_diff_statuses(spark):
-    from xdan_dqa_spark.operators.curation import (snapshot_diff,
-                                                   snapshot_diff_census)
-
-    old = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c"), (4, None)], "url long, text string"
-    )
-    new = spark.createDataFrame(
-        [(2, "b"), (3, "c CHANGED"), (4, None), (5, "new page")],
-        "url long, text string",
-    )
-    got = {r["url"]: r["status"] for r in snapshot_diff(old, new).collect()}
-    assert got == {1: "removed", 2: "unchanged", 3: "changed",
-                   4: "unchanged", 5: "added"}
-    census = {r["status"]: r["n"]
-              for r in snapshot_diff_census(old, new).collect()}
-    assert census == {"removed": 1, "unchanged": 2, "changed": 1, "added": 1}
-
-
 def test_chunk_plan_strided_coverage_and_overlap(spark):
     from xdan_dqa_spark.operators.curation import chunk_plan_strided
 
@@ -613,31 +512,6 @@ def test_mixture_temperature_limits_and_direction(spark):
         mixture_plan_temperature(df, temperature=0.0)
 
 
-def test_scd2_intervals_runs_and_reappearance(spark):
-    """A -> B -> A over one page: three intervals (re-appearing content
-    opens a NEW interval), contiguous valid ranges, exactly one current."""
-    from pyspark.sql import functions as F
-
-    from xdan_dqa_spark.operators.curation import scd2_intervals
-
-    rows = [("u", 100, "A"), ("u", 200, "A"), ("u", 300, "B"),
-            ("u", 400, "A"), ("u", 500, "A"), ("v", 100, "X")]
-    df = spark.createDataFrame(rows, "page string, t long, content_hash string")
-    df = df.withColumn("crawl_ts", F.timestamp_seconds(F.col("t")))
-    out = scd2_intervals(df, "page", "crawl_ts", "content_hash")
-    u = sorted(
-        ((r["content_hash"], r["valid_from"].timestamp(),
-          None if r["valid_to"] is None else r["valid_to"].timestamp(),
-          r["is_current"]) for r in out.filter(F.col("page") == "u").collect()),
-        key=lambda x: x[1],
-    )
-    assert [(h, vf, vt) for h, vf, vt, _ in u] == [
-        ("A", 100.0, 300.0), ("B", 300.0, 400.0), ("A", 400.0, None)]
-    assert [c for *_, c in u] == [False, False, True]
-    v = out.filter(F.col("page") == "v").collect()
-    assert len(v) == 1 and v[0]["is_current"]
-
-
 # ------------------------------------------------ quantile normalization
 
 def test_quantile_normalize_identical_distributions_are_identity(spark):
@@ -686,55 +560,6 @@ def test_quantile_normalize_singleton_group_maps_to_pooled_median(spark):
            for r in quantile_normalize(df, "n_chars", "source").collect()}
     # pooled rank (N+1) DIV 2 = 3rd of [10,20,30,40,999999] -> 30
     assert out[9] == 30
-
-
-# ------------------------------------------------------------- DSIR
-
-def test_dsir_target_like_docs_score_higher(spark):
-    """Docs sharing the target slice's vocabulary must outweigh docs
-    from a disjoint vocabulary — the selector's defining property."""
-    from pyspark.sql import functions as F
-
-    from xdan_dqa_spark.operators.curation import dsir_weights
-
-    rows = []
-    for i in range(30):          # target exemplars: vocab A
-        rows.append((i, "en", " ".join(f"alpha{j % 7}" for j in range(20))))
-    for i in range(30, 60):      # source-only: vocab B
-        rows.append((i, "zh", " ".join(f"beta{j % 7}" for j in range(20))))
-    # probes: one doc of each vocab, tagged outside the target slice
-    rows += [(100, "xx", " ".join(f"alpha{j % 7}" for j in range(20))),
-             (101, "xx", " ".join(f"beta{j % 7}" for j in range(20)))]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    w = {r["doc_id"]: r["dsir_weight"]
-         for r in dsir_weights(df, F.col("lang") == "en").collect()}
-    assert w[100] > 0 > w[101]
-
-
-def test_bigram_lm_frequent_patterns_score_lower_surprise(spark):
-    """A held-out doc repeating the train slice's dominant bigram must
-    have lower avg negative log prob than unseen-vocab gibberish."""
-    from xdan_dqa_spark.plans.entry_queries import q_bigram_lm_ppl
-    import duckdb, hashlib
-
-    # find doc_ids landing in the test bucket (md5 'sp:' rule, >= 80)
-    def bk(i):
-        return int(hashlib.md5(f"sp:{i}".encode()).hexdigest()[:8], 16) % 100
-
-    test_ids = [i for i in range(1000) if bk(i) >= 80]
-    train_ids = [i for i in range(1000) if bk(i) < 80][:40]
-    common = "the cat sat on the mat and the cat ran"
-    rows = [(i, common) for i in train_ids]
-    rows.append((test_ids[0], common))                     # familiar
-    rows.append((test_ids[1], "zzq qqz zqz qzz zzq wwx"))  # gibberish
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    import tempfile, os
-    tmp = tempfile.mkdtemp()
-    df.write.mode("overwrite").parquet(os.path.join(tmp, "documents.parquet"))
-    out = {r["doc_id"]: r["avg_neg_logprob"]
-           for r in q_bigram_lm_ppl(spark, tmp).collect()}
-    assert out[test_ids[0]] < out[test_ids[1]]
 
 
 # --------------------------------------------------- coverage selection
@@ -812,13 +637,3 @@ def test_hamilton_apportionment_sums_exactly(spark):
     by_w = sorted(rows, key=lambda x: x["w"])
     bases = [x["base"] for x in by_w]
     assert bases == sorted(bases)
-
-
-def test_conformal_bounds_guarantee_on_fixture(spark):
-    from xdan_dqa_spark.plans.entry_queries import q_conformal_bounds
-
-    r = q_conformal_bounds(spark, "/root/testdata/sf0.001").collect()[0]
-    assert r["lo_bound"] <= r["hi_bound"]
-    assert r["n_covered"] <= r["n_test"]
-    # 90%-nominal split conformal: allow finite-sample slack
-    assert r["coverage"] >= 0.8

@@ -457,34 +457,6 @@ def test_span_dedup_within_is_map_only_and_scrubs_self_repeats(spark):
     assert "Exchange" not in plan  # map-only contract
 
 
-def test_term_df_scrub_removes_corpus_boilerplate_tokens(spark):
-    """Tokens in > max_df_frac of docs are scrubbed everywhere; token
-    order inside each doc is preserved; all-scrubbed docs come back
-    empty, not missing."""
-    from xdan_dqa_spark.operators.curation import term_df_scrub
-
-    docs = spark.createDataFrame(
-        [
-            (1, "cookie alpha cookie beta"),
-            (2, "cookie gamma"),
-            (3, "cookie delta"),
-            (4, "cookie"),            # nothing survives
-        ],
-        "doc_id long, text string",
-    )
-    # 'cookie' df=4/4 > 0.5 → scrubbed; every other term df=1/4 → kept
-    got = {r["doc_id"]: r for r in term_df_scrub(docs, max_df_frac=0.5).collect()}
-    assert got[1]["text_scrubbed"] == "alpha beta"
-    assert got[1]["n_tokens"] == 4 and got[1]["n_tokens_kept"] == 2
-    assert got[2]["text_scrubbed"] == "gamma"
-    assert got[3]["text_scrubbed"] == "delta"
-    assert got[4]["text_scrubbed"] == "" and got[4]["n_tokens_kept"] == 0
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        term_df_scrub(docs, max_df_frac=1.5)
-
-
 def test_minhash_incremental_matches_union_dedup(spark, tmp_path):
     """Incremental dedup against a persisted band index must agree with
     one-shot minhash_dedup over corpus ∪ batch when corpus ids are all
@@ -642,28 +614,6 @@ def test_minhash_calibration_estimate_tracks_jaccard(spark):
     r = got[0]
     assert 0.5 <= r["jaccard"] < 1.0
     assert abs(r["est"] - r["jaccard"]) <= 3 / 8  # J(1-J)/8 variance scale
-
-
-def test_dedup_provenance_family_disagreement(spark):
-    """Exact dup dropped by all 4 families; a word-REORDERED copy is
-    kept by exact but dropped by word-set (and the similarity families,
-    whose signatures are order-sensitive only at shingle granularity);
-    an unrelated doc is kept by all."""
-    from xdan_dqa_spark.operators.dedup import dedup_provenance
-
-    base = " ".join(f"w{i}" for i in range(16))
-    reordered = " ".join(f"w{i}" for i in reversed(range(16)))
-    distinct = " ".join(f"z{i}" for i in range(16))
-    df = spark.createDataFrame(
-        [(1, base), (2, base), (3, reordered), (4, distinct)],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in dedup_provenance(df).collect()}
-    assert got[2]["n_families_dropped"] == 4          # byte-identical
-    assert got[1]["n_families_dropped"] == 0          # the survivor
-    assert got[4]["n_families_dropped"] == 0          # unrelated
-    assert got[3]["kept_exact"] is True               # different bytes
-    assert got[3]["kept_wordset"] is False            # same word set
 
 
 def test_exact_dedup_best_keeps_top_scoring_copy(spark):

@@ -62,13 +62,3 @@ def test_ks_drift_scan_prunes_to_group_and_value(spark):
     plan = _plan(QUERIES["ks_length_drift"](spark, SF))
     read = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "text" not in read  # ECDFs need only (source, n_chars)
-
-
-def test_triangle_census_equi_joins_only(spark):
-    from xdan_dqa_spark.plans.entry_queries import QUERIES
-
-    plan = _plan(QUERIES["triangle_census"](spark, SF))
-    # wedge + closing joins must be equi-keyed (hash/sort-merge), never a
-    # cartesian; the only nested-loop joins are the 1-row census folds.
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastNestedLoopJoin") <= 2

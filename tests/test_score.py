@@ -145,51 +145,3 @@ def test_keep_rate_by_lang_accounts_every_doc(spark):
     n_total = _t(spark, sf, "documents").count()
     assert sum(r["n_docs"] for r in rows) == n_total
     assert all(0 <= r["n_keep"] <= r["n_docs"] for r in rows)
-
-
-# ------------------------------------------------------- linear probe
-
-def test_linear_probe_matches_numpy_ridge(spark):
-    """The exact integer Cramer solve must agree with numpy's float
-    solve of the same (XᵀX + I)w = Xᵀy system to ~1e-6, and the exact
-    integer accuracy must equal a float re-check."""
-    import numpy as np
-
-    from xdan_dqa_spark.operators.score import linear_probe_train
-
-    texts = [
-        "clean prose with plenty of ordinary words here " * (i % 5 + 1)
-        for i in range(40)
-    ] + ["@#$% ^&*{} <>|~ `=+ @@@" for _ in range(10)] + ["tiny", ""]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    row = linear_probe_train(df).collect()[0]
-
-    X, y = [], []
-    for t in texts:
-        ws = [w for w in __import__("re").split(r"[ \t\n\x0b\f\r]+", t) if w]
-        x1 = len(ws)
-        x2 = sum(t.count(c) for c in "@#$%^&*{}<>|\\~`=+")
-        X.append([1.0, x1, x2])
-        y.append(1 if (x1 >= 5 and 10 * x2 <= x1) else 0)
-    X, y = np.array(X), np.array(y, dtype=float)
-    w = np.linalg.solve(X.T @ X + np.eye(3), X.T @ y)
-    assert abs(row["w0"] - w[0]) < 1e-5
-    assert abs(row["w1"] - w[1]) < 1e-5
-    assert abs(row["w2"] - w[2]) < 1e-5
-    pred = (X @ w >= 0.5).astype(int)
-    assert row["n_correct"] == int((pred == y).sum())
-    assert row["n_docs"] == len(texts) and row["n_keep"] == int(y.sum())
-
-
-def test_linear_probe_repartition_invariant(spark):
-    """DECIMAL(38,0) sums and integer determinants are
-    order-independent: any repartitioning is bit-identical."""
-    from xdan_dqa_spark.operators.score import linear_probe_train
-
-    df = spark.range(300).selectExpr(
-        "concat(repeat('word ', cast(id % 37 as int)), "
-        "repeat('@#$ ', cast(id % 5 as int))) AS text"
-    )
-    a = linear_probe_train(df).collect()[0]
-    b = linear_probe_train(df.repartition(17)).collect()[0]
-    assert a == b

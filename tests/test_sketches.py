@@ -255,24 +255,6 @@ def test_prefix_filter_matches_bruteforce(spark):
         prefix_filter_pairs(df, threshold_num=0, threshold_den=3)
 
 
-# ---- batch 43: source cosine ----
-
-
-def test_source_cosine_extremes(spark):
-    from xdan_dqa_spark.operators.textstats import source_similarity_matrix
-
-    rows = ([(1, "alpha beta gamma", "en", "s1")] * 5
-            + [(2, "alpha beta gamma", "en", "s2")] * 5       # identical profile
-            + [(3, "delta epsilon", "en", "s3")] * 5)          # disjoint vocab
-    df = spark.createDataFrame(
-        [(i * 10 + j, t, l, s) for j, (i, t, l, s) in enumerate(rows)],
-        "doc_id long, text string, lang string, source string")
-    got = {(r["a"], r["b"]): r["cosine"]
-           for r in source_similarity_matrix(df).collect()}
-    assert got[("s1", "s2")] == 1.0
-    assert ("s1", "s3") not in got      # zero shared terms -> no row
-
-
 # ---- batch 44: homoglyphs, Neyman ----
 
 
@@ -311,7 +293,7 @@ def test_neyman_allocation_proportional_and_zero_variance(spark):
         neyman_allocation(df, "g", "y", total_k=0)
 
 
-# ---- batch 45: contract gate, log-quantile sketch ----
+# ---- batch 45: contract gate ----
 
 
 def test_contract_report_counts_violations(spark):
@@ -335,138 +317,6 @@ def test_contract_report_counts_violations(spark):
         contract_report(df, {}, unique_cols=[])
 
 
-def test_log_quantile_sketch_respects_2x_bound(spark):
-    from xdan_dqa_spark.operators.sketches import log_histogram_quantiles
-
-    df = spark.range(1, 5001).select((F.col("id") * 3 + 7).alias("v"))
-    out = log_histogram_quantiles(df, "v", (0.5, 0.9, 0.99)).collect()
-    assert len(out) == 3
-    for r in out:
-        assert 0.5 <= r["ratio"] <= 2.0      # the guaranteed band
-    # sketch state is bounded: <= 64 power-of-two buckets regardless of n
-
-
-# ---- batch 46: RBO, coverage curve ----
-
-
-def test_rbo_extremes(spark):
-    from xdan_dqa_spark.operators.metrics import rank_biased_overlap
-
-    ra = spark.createDataFrame(
-        [(f"i{r}", r) for r in range(1, 21)], "item string, rank long")
-    same = rank_biased_overlap(ra, ra, "item", p=0.9, depth=20).collect()[0]
-    # identical rankings: truncated RBO = 1 - p^depth
-    assert abs(same["rbo"] - (1 - 0.9 ** 20)) < 1e-6
-    rb = spark.createDataFrame(
-        [(f"j{r}", r) for r in range(1, 21)], "item string, rank long")
-    disj = rank_biased_overlap(ra, rb, "item", p=0.9, depth=20).collect()[0]
-    assert disj["rbo"] == 0.0
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        rank_biased_overlap(ra, rb, "item", p=1.5)
-
-
-def test_vocab_coverage_monotone_and_saturates(spark):
-    from xdan_dqa_spark.operators.textstats import vocab_coverage_curve
-
-    rows = [(i, "the " * 50 + f"rare{i}") for i in range(100)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["k"]: r for r in
-           vocab_coverage_curve(df, ks=(1, 10, 1000)).collect()}
-    assert out[1]["coverage"] < out[10]["coverage"] <= out[1000]["coverage"]
-    assert out[1000]["coverage"] == 1.0          # budget >= vocab
-    assert out[1]["covered_tokens"] == 5000      # 'the' dominates
-
-
-# ---- batch 47: CDC apply ----
-
-
-def test_cdc_apply_merge_semantics(spark):
-    from xdan_dqa_spark.operators.resume import cdc_apply
-
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, v string")
-    chg = spark.createDataFrame(
-        [(1, 1, "U", "a1"), (1, 3, "U", "a3"), (1, 2, "U", "a2"),  # last-wins
-         (2, 1, "D", ""),                                          # delete
-         (9, 1, "I", "new")],                                      # insert
-        "k long, seq long, op string, v string")
-    got = {r["k"]: r["v"]
-           for r in cdc_apply(base, chg, "k", "seq").collect()}
-    assert got == {1: "a3", 3: "c", 9: "new"}
-    # partitioning must not change the winner
-    again = {r["k"]: r["v"]
-             for r in cdc_apply(base.repartition(5), chg.repartition(7),
-                                "k", "seq").collect()}
-    assert again == got
-
-
-# ---- batch 48: EMD drift, doc novelty ----
-
-
-def test_emd_shift_equals_offset(spark):
-    """Two distributions differing by a constant +300 shift must show
-    emd == 300 (the value-units property KS/KL don't have)."""
-    from xdan_dqa_spark.operators.curation import emd_length_drift
-
-    rows = ([("a", v) for v in (100, 200, 300, 400) * 25]
-            + [("b", v + 300) for v in (100, 200, 300, 400) * 25])
-    df = spark.createDataFrame(rows, "source string, n_chars long")
-    r = emd_length_drift(df, bucket_width=100).collect()[0]
-    assert (r["a"], r["b"]) == ("a", "b")
-    assert r["emd"] == 300.0
-    same = spark.createDataFrame(
-        [("x", v) for v in range(100)] + [("y", v) for v in range(100)],
-        "source string, n_chars long")
-    r2 = emd_length_drift(same, bucket_width=10).collect()[0]
-    assert r2["emd"] == 0.0
-
-
-def test_doc_novelty_templates_score_low(spark):
-    from xdan_dqa_spark.operators.curation import doc_novelty
-
-    common = "the quick brown fox " * 10
-    rows = ([(i, common) for i in range(20)]
-            + [(100, "zyzzyva qoph xylyl crwth")])       # rare vocab
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = doc_novelty(df, top_k=1).collect()
-    ends = {r["which_end"]: r["doc_id"] for r in out}
-    assert ends["most_novel"] == 100
-    assert ends["least_novel"] != 100
-
-
-# ---- batch 49: adaptation, bigram conditional entropy ----
-
-
-def test_term_adaptation_content_vs_glue(spark):
-    from xdan_dqa_spark.operators.textstats import term_adaptation
-
-    # 'spark' repeats within its docs (adapts); 'the' appears once per doc
-    rows = [(i, "the spark engine spark runs spark") for i in range(10)] + [
-        (100 + i, "the other engine") for i in range(10)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["term"]: r for r in term_adaptation(df, top_k=5).collect()}
-    assert got["spark"]["adaptation"] == 1.0      # always repeats
-    assert got["the"]["adaptation"] == 0.0        # never repeats
-    assert got["spark"]["df1"] == 10 and got["spark"]["df2"] == 10
-
-
-def test_bigram_cond_entropy_extremes(spark):
-    from xdan_dqa_spark.operators.textstats import bigram_conditional_entropy
-
-    det = spark.createDataFrame(
-        [(i, "a b a b a b a b", "det") for i in range(5)],
-        "doc_id long, text string, lang string")
-    r = bigram_conditional_entropy(det).collect()[0]
-    # a->b and b->a deterministically: H(Y|X) == 0
-    assert r["cond_entropy_nats"] == 0.0
-    mixed = spark.createDataFrame(
-        [(1, "a b a c a b a c a d a e", "mx")],
-        "doc_id long, text string, lang string")
-    r2 = bigram_conditional_entropy(mixed).collect()[0]
-    assert r2["cond_entropy_nats"] > 0.0
-
-
 # ---- cross-cutting: repartition invariance of round-5 operators ----
 
 
@@ -477,15 +327,11 @@ def test_round5_operators_repartition_invariant(spark):
     operators, 1 vs 13 partitions."""
     import datetime as dt
 
-    from xdan_dqa_spark.operators.curation import (
-        emd_length_drift,
-        gini_concentration,
-    )
+    from xdan_dqa_spark.operators.curation import gini_concentration
     from xdan_dqa_spark.operators.metrics import mutual_information
     from xdan_dqa_spark.operators.sketches import (
         cms_heavy_hitters,
         hll_estimate,
-        log_histogram_quantiles,
     )
 
     rows = []
@@ -500,15 +346,11 @@ def test_round5_operators_repartition_invariant(spark):
     def run(d):
         return (
             tuple(map(tuple, gini_concentration(d, "source").collect())),
-            tuple(sorted(map(tuple, emd_length_drift(d, "n_chars", "source",
-                                                     100).collect()))),
             tuple(map(tuple, mutual_information(d, "lang", "source").collect())),
             tuple(map(tuple, hll_estimate(d.select(
                 F.col("doc_id").cast("string").alias("v")), "v").collect())),
             tuple(sorted(map(tuple, cms_heavy_hitters(d.select(
                 F.col("source").alias("v")), "v", top_k=5).collect()))),
-            tuple(sorted(map(tuple, log_histogram_quantiles(
-                d, "n_chars").collect()))),
         )
 
     a, b = run(variants[0]), run(variants[1])

@@ -501,66 +501,6 @@ def test_hill_tail_index_recovers_pareto_alpha(spark):
         hill_tail_index(df, k=5)
 
 
-# ----------------------------------------------------------------- BPE
-
-def _py_bpe_merges(texts, n_merges=3):
-    """Pure-python BPE reference: freq-weighted pair counts over the
-    distinct-word vocab, greedy leftmost merge, ties to smallest pair."""
-    import re
-    from collections import Counter
-
-    vocab = Counter()
-    for t in texts:
-        for w in re.split(r"[ \t\n\x0b\f\r]+", t):
-            if w:
-                vocab[w] += 1
-    reprs = {w: list(w) for w in vocab}
-    merges = []
-    for step in range(1, n_merges + 1):
-        counts = Counter()
-        for w, syms in reprs.items():
-            for a, b in zip(syms, syms[1:]):
-                counts[(a, b)] += vocab[w]
-        (l, r), c = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((step, l, r, c))
-        for w, syms in reprs.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            reprs[w] = out
-    return merges
-
-
-def test_bpe_merges_match_python_reference(spark):
-    from xdan_dqa_spark.operators.textstats import bpe_merge_train
-
-    texts = [
-        "low lower lowest newer newest wider widest new new low",
-        "low low lower newer wide wide widest",
-        "banana bandana ananas",
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = [(r["step"], r["lhs"], r["rhs"], r["pair_count"])
-           for r in bpe_merge_train(df, n_merges=4).orderBy("step").collect()]
-    assert got == _py_bpe_merges(texts, 4)
-
-
-def test_bpe_merges_repartition_invariant(spark):
-    from xdan_dqa_spark.operators.textstats import bpe_merge_train
-
-    df = spark.range(200).selectExpr(
-        "concat('tok', cast(id % 23 as string), ' fixed suffix words') AS text"
-    )
-    a = sorted(map(tuple, bpe_merge_train(df, n_merges=3).collect()))
-    b = sorted(map(tuple, bpe_merge_train(df.repartition(13), n_merges=3).collect()))
-    assert a == b
-
-
 # ----------------------------------------------------------- winnowing
 
 def test_winnow_guarantee_fires_on_copied_passage(spark):

@@ -307,67 +307,6 @@ def stopword_coverage(docs: DataFrame, by: str = "lang",
     )
 
 
-def term_df_scrub(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  max_df_frac: float = 0.5) -> DataFrame:
-    """Induced-stoplist scrub: remove every token whose DOCUMENT frequency
-    exceeds ``max_df_frac`` of the corpus. A fixed lexicon (C4 bad-words,
-    stopword lists) only catches what its curators anticipated; the
-    data-driven twin scrubs the corpus-global boilerplate tokens the
-    crawl actually contains (site chrome, injected SEO terms) — the
-    token-level analogue of the span scrub.
-
-    Returns (doc_id, n_tokens, n_tokens_kept, text_scrubbed) for EVERY
-    input doc.
-
-    Scale shape: the DF table folds at (doc, term) grain map-side
-    (array_distinct per doc BEFORE the explode, so a term repeated 500×
-    in one doc ships once), then one term-keyed count. By Zipf, the
-    over-threshold set is TINY (few terms appear in >half the corpus),
-    so it broadcasts and the scrub join is a map-side left_anti — the
-    corpus rows never shuffle for the scrub itself; the only doc-grain
-    exchange is the rebuild groupBy, whose state is bounded by each
-    doc's own token count."""
-    if not 0.0 < max_df_frac < 1.0:
-        raise ValueError(f"max_df_frac must be in (0, 1) (got {max_df_frac})")
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    w = docs.select(F.col(id_col), words.alias("_ws"))
-    n_docs = docs.count()  # bounded driver scalar: one count, not a collect loop
-    df_tbl = (
-        w.select(F.explode(F.array_distinct("_ws")).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").alias("df"))
-    )
-    hot = df_tbl.filter(
-        F.col("df").cast("double") > F.lit(max_df_frac) * F.lit(float(n_docs))
-    ).select("term")
-    tok = w.select(
-        F.col(id_col), F.posexplode("_ws").alias("pos", "term")
-    )
-    kept = tok.join(F.broadcast(hot), "term", "left_anti")
-    agg = kept.groupBy(id_col).agg(
-        F.count("*").alias("n_tokens_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("term")))),
-                lambda s: s["term"],
-            ),
-            " ",
-        ).alias("text_scrubbed"),
-    )
-    return w.select(F.col(id_col), F.size("_ws").alias("n_tokens")).join(
-        agg, id_col, "left"
-    ).select(
-        F.col(id_col),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.coalesce(F.col("n_tokens_kept"), F.lit(0)).alias("n_tokens_kept"),
-        F.coalesce(F.col("text_scrubbed"), F.lit("")).alias("text_scrubbed"),
-    )
-
-
 def host_of(url_col) -> F.Column:
     """Lowercased host extracted from a URL column (name or Column):
     scheme-stripped authority with userinfo and port removed — a pure
@@ -416,7 +355,7 @@ def domain_reputation(df: DataFrame, url_col: str = "url",
 def domain_blocklist(rep: DataFrame) -> DataFrame:
     """Hosts whose mean score is below the corpus-wide mean — the
     data-induced blocklist (no curated lexicon; the corpus defines its
-    own floor, like term_df_scrub does for tokens).
+    own floor).
 
     The comparison is integer cross-multiplication
     (host_sum × total_docs < total_sum × host_docs), never a float
@@ -444,45 +383,6 @@ def blocklist_filter(df: DataFrame, blocked: DataFrame,
         host_of(url_col) == F.col("host"),
         "left_anti",
     )
-
-
-def host_quota_sample(df: DataFrame, quota: int, url_col: str = "url",
-                      id_col: str = "doc_id") -> DataFrame:
-    """Per-host proportional downsampling to ~``quota`` docs per host —
-    the over-represented-domain rebalance step (a handful of mega-hosts
-    otherwise dominate a crawl's token budget; cf. the per-source
-    mixture reweighting in :func:`mixture_plan`, here at host grain).
-
-    Each doc carries a uniform 60-bit key u = int(md5(doc_id)[:15], 16);
-    a doc on a host with n docs is kept iff n ≤ quota (small hosts pass
-    whole) or u·n < quota·2⁶⁰ — i.e. with probability quota/n, so every
-    host lands at ~quota docs in expectation. The comparison is
-    DECIMAL(38,0) integer cross-multiplication (u < 2⁶⁰ ≈ 1.2e18, n up
-    to 1e12 ⇒ product < 1.2e30, inside DECIMAL 38) — no float divide,
-    so the keep set is bit-identical in any engine, stable across runs
-    and cluster sizes, and a re-crawled doc keeps its fate.
-
-    Scale shape: ONE shuffle of the corpus at host grain to attach the
-    per-host count (counts fold map-side first; the count table is
-    host-grain so its side of the join is 1 row per host, and AQE
-    skew-splits a mega-host's doc partitions freely since the join key
-    is unique on the build side). A Window row_number ≤ quota would
-    instead sort each host's docs in one task — a 10⁹-page host becomes
-    one straggler — which is why the keep rule is a per-row hash test,
-    not a rank."""
-    if quota <= 0:
-        raise ValueError(f"quota must be positive, got {quota}")
-    host = host_of(url_col).alias("_host")
-    keyed = df.withColumn("_host", host_of(url_col))
-    counts = keyed.groupBy("_host").agg(F.count("*").alias("_n"))
-    u = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-    ).cast("decimal(38,0)")
-    keep = (F.col("_n") <= F.lit(quota)) | (
-        u * F.col("_n").cast("decimal(38,0)")
-        < F.lit(quota).cast("decimal(38,0)") * F.lit(2 ** 60).cast("decimal(38,0)")
-    )
-    return keyed.join(counts, "_host").filter(keep).drop("_host", "_n")
 
 
 def canonical_url(url_col) -> F.Column:
@@ -576,92 +476,6 @@ def leak_safe_split(df: DataFrame, text_col: str = "text",
         .otherwise(F.lit("test"))
     )
     return df.withColumn("split", split)
-
-
-def robots_filter(df: DataFrame, rules: DataFrame,
-                  url_col: str = "url") -> DataFrame:
-    """Drop every row whose URL matches a disallow rule — ``rules`` is
-    (host, path_prefix): a row is dropped iff its url's host equals a
-    rule host AND its path starts with that rule's prefix (the
-    robots.txt Disallow shape, evaluated corpus-side at ingest).
-
-    Scale shape: the rule table is robots-grain (≪ corpus — one site's
-    disallow list is tens of lines), so it is BROADCAST and the filter
-    is a map-side LEFT ANTI with the prefix test in the join condition;
-    the corpus never shuffles. Path extraction is the same RE2-safe
-    regexp discipline as :func:`host_of`."""
-    u = F.coalesce(F.col(url_col), F.lit(""))
-    path = F.regexp_replace(
-        F.regexp_extract(
-            u, r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/@?#]*@)?[^/?#]*(/[^?#]*)?", 1
-        ),
-        r"^$", "/",
-    )
-    probe = df.withColumn("_h", host_of(url_col)).withColumn("_p", path)
-    hit = (F.col("_h") == F.col("host")) & F.col("_p").startswith(
-        F.col("path_prefix")
-    )
-    return (
-        probe.join(F.broadcast(rules.select("host", "path_prefix")), hit, "left_anti")
-        .drop("_h", "_p")
-    )
-
-
-def mixture_apply(docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id", by: str = "source") -> DataFrame:
-    """Materialize the uniform-mixture resample :func:`mixture_plan`
-    PLANS: every source is repeated to epochs = T/(S·tokens_src) —
-    under-represented sources get whole extra copies plus a hashed
-    fractional copy, over-represented sources thin. Output is
-    (original columns…, copy_id): copy_id ≥ 1 rows are repeats, so the
-    epoch structure stays visible to a downstream shuffler.
-
-    Integer-exact throughout: epochs is the RATIONAL T/den (den =
-    S·tokens_src, both exact integer sums) — floor(T DIV den) whole
-    copies for every doc, plus membership in the last fractional copy
-    decided by u·den < (T mod den)·2⁶⁰ on the doc's 60-bit (id, copy)
-    hash, DECIMAL(38,0) cross-multiplied. No float rate ever exists, so
-    the materialized mixture is bit-identical across engines, runs, and
-    cluster sizes — re-ingesting the same corpus reproduces the same
-    epochs.
-
-    Scale shape: the plan table is source-grain (bounded) and attaches
-    by BROADCAST; copies come from exploding sequence(0, n_copies) —
-    map-side, output-linear; the only shuffle is the one token-count
-    aggregate the plan itself needs. Docs from sources with zero tokens
-    are dropped (undefined epochs)."""
-    per = docs.groupBy(by).agg(
-        F.sum(F.size(_words(text_col)).cast("long")).alias("_tok")
-    ).filter(F.col("_tok") > 0)
-    # S counts only token-bearing sources: an all-empty source can't
-    # absorb budget, so it must not dilute the uniform target share.
-    tot = per.agg(F.sum("_tok").alias("_t"), F.count("*").alias("_s"))
-    plan = (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            by,
-            (F.col("_s") * F.col("_tok")).alias("_den"),
-            F.col("_t").alias("_num"),
-        )
-    )
-    j = docs.join(F.broadcast(plan), by)
-    whole = F.expr("_num DIV _den")
-    rem = F.expr("_num % _den")
-    u = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.col(id_col).cast("string"),
-                              whole.cast("string"))), 1, 15), 16, 10
-    ).cast("decimal(38,0)")
-    frac_keep = u * F.col("_den").cast("decimal(38,0)") < (
-        rem.cast("decimal(38,0)") * F.lit(2 ** 60).cast("decimal(38,0)")
-    )
-    n_copies = whole + F.when(frac_keep, 1).otherwise(0)
-    return (
-        j.withColumn("_nc", n_copies)
-        .filter(F.col("_nc") > 0)
-        .withColumn("copy_id", F.explode(F.expr("sequence(0, _nc - 1)")))
-        .drop("_den", "_num", "_nc")
-    )
 
 
 def normalize_punct(text_col) -> F.Column:
@@ -803,47 +617,6 @@ def unigram_kl_drift(df: DataFrame, text_col: str = "text",
         .select(F.col("g").alias(group_col),
                 F.col("n_g").alias("n_tokens_vocab"),
                 "kl_vs_rest")
-    )
-
-
-def snapshot_diff(old: DataFrame, new: DataFrame, key_col: str = "url",
-                  text_col: str = "text") -> DataFrame:
-    """Crawl snapshot diff: per key, whether the document was ADDED,
-    REMOVED, CHANGED, or UNCHANGED between two crawls — the ingest
-    report that decides how much of an incremental crawl actually needs
-    re-scoring (the reference re-reads and re-scores the full dataset
-    per run, src/data_transformer.py:458-473; paired with the anti-join
-    resume this confines work to added ∪ changed).
-
-    Scale shape: content is hashed to a fixed 32-byte md5 map-side on
-    EACH side (document text never shuffles), then ONE full-outer
-    equi-join on the key; the status is a null-pattern CASE. Output is
-    one row per key in either snapshot — linear, no windows. Hash
-    collisions (2⁻¹²⁸) are the standard accepted risk of content-hash
-    diffing."""
-    o = old.select(F.col(key_col).alias("k"),
-                   F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("_ho"))
-    n = new.select(F.col(key_col).alias("k"),
-                   F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("_hn"))
-    j = o.join(n, "k", "full_outer")
-    status = (
-        F.when(F.col("_ho").isNull(), F.lit("added"))
-        .when(F.col("_hn").isNull(), F.lit("removed"))
-        .when(F.col("_ho") != F.col("_hn"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return j.select(F.col("k").alias(key_col), status.alias("status"))
-
-
-def snapshot_diff_census(old: DataFrame, new: DataFrame,
-                         key_col: str = "url",
-                         text_col: str = "text") -> DataFrame:
-    """Bounded census over :func:`snapshot_diff`: row counts per status
-    — the 4-row summary a crawl-ops dashboard plots per ingest."""
-    return (
-        snapshot_diff(old, new, key_col, text_col)
-        .groupBy("status")
-        .agg(F.count("*").alias("n"))
     )
 
 
@@ -991,47 +764,6 @@ def gini_concentration(df: DataFrame, group_col: str = "source",
     )
 
 
-def scd2_intervals(df: DataFrame, key_col: str = "canonical_url",
-                   ts_col: str = "crawl_ts",
-                   hash_col: str = "content_hash") -> DataFrame:
-    """Slowly-changing-dimension (type 2) content history: collapse a
-    crawl log (key, ts, content_hash) into validity INTERVALS —
-    (key, content_hash, valid_from, valid_to, is_current), one row per
-    maximal run of consecutive crawls with the same content. This is
-    the content-history table an incremental crawl keeps next to
-    snapshot_diff: "what did this page say during March" becomes an
-    interval probe instead of a scan over every crawl.
-
-    Construction: lag(hash) over the per-key crawl order marks change
-    rows (first crawl, or hash differs from the previous crawl); each
-    change row opens an interval; lead(valid_from) over the change rows
-    closes it (NULL = still current). Re-appearing content (A -> B -> A)
-    correctly opens a NEW interval — runs are consecutive, not global.
-
-    Scale shape: two windows, both partitioned by the page key and
-    bounded by that key's own crawl count (crawl history per page is
-    tens-to-thousands of rows — never corpus-scaled); the second window
-    runs over the ALREADY-FILTERED change rows, a further collapse.
-    Equal-timestamp duplicate crawls should be pre-collapsed
-    (url_dedup); ordering here adds the hash as a tie-break so even
-    un-collapsed input stays deterministic."""
-    w = Window.partitionBy(key_col).orderBy(F.col(ts_col), F.col(hash_col))
-    prev = F.lag(F.col(hash_col)).over(w)
-    chg = (
-        df.withColumn(
-            "_chg", prev.isNull() | (prev != F.col(hash_col))
-        )
-        .filter(F.col("_chg"))
-    )
-    w2 = Window.partitionBy(key_col).orderBy(F.col(ts_col), F.col(hash_col))
-    return chg.select(
-        F.col(key_col),
-        F.col(hash_col),
-        F.col(ts_col).alias("valid_from"),
-        F.lead(F.col(ts_col)).over(w2).alias("valid_to"),
-    ).withColumn("is_current", F.col("valid_to").isNull())
-
-
 def negative_samples(docs: DataFrame, n_negatives: int = 3,
                      n_buckets: int = 64,
                      id_col: str = "doc_id", group_col: str = "source",
@@ -1130,120 +862,6 @@ def homoglyph_census(docs: DataFrame, text_col: str = "text",
     )
 
 
-def emd_length_drift(docs: DataFrame, value_col: str = "n_chars",
-                     by: str = "source", bucket_width: int = 100) -> DataFrame:
-    """Pairwise 1-D Wasserstein (earth-mover) distance between groups'
-    value distributions — (a, b, emd): the drift metric that, unlike
-    KS (max deviation) or KL (support-sensitive), measures HOW FAR
-    mass must move, in value units — two sources whose length profiles
-    differ by a constant 500-char boilerplate header show emd ~ 500.
-
-    In 1-D the EMD has a closed form: W1 = Σ_buckets |CDF_a − CDF_b| ×
-    bucket_width. Exactness discipline: with counts c and totals n,
-    |cum_a/n_a − cum_b/n_b| = |cum_a·n_b − cum_b·n_a| / (n_a·n_b) — the
-    numerator is EXACT integer arithmetic summed as DECIMAL(38,0)
-    (widths (19,0)×(18,0)), and ONE terminal division+scale per pair
-    makes the value. Buckets are integral (value DIV width).
-
-    Shape: one (group, bucket) fold; the bucket grid gap-fills from
-    the observed span so every group's CDF is defined on the same
-    axis; cumulative sums ride per-group windows over the bounded
-    grid; the pairwise stage self-joins the grid on bucket (output
-    ≤ groups² × buckets — the mixing-table scale, tiny)."""
-    b = F.expr(f"cast({value_col} as bigint) div {bucket_width}")
-    cells = docs.groupBy(
-        F.col(by).alias("g"), b.alias("bkt")
-    ).agg(F.count("*").alias("c"))
-    span = cells.agg(F.min("bkt").alias("_b0"), F.max("bkt").alias("_b1"))
-    grid = span.select(
-        F.explode(F.sequence(F.col("_b0"), F.col("_b1"))).alias("bkt")
-    ).crossJoin(cells.select("g").distinct())
-    filled = grid.join(cells, ["g", "bkt"], "left").select(
-        "g", "bkt", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
-    w = Window.partitionBy("g").orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = filled.withColumn("cum", F.sum("c").over(w)).withColumn(
-        "n", F.sum("c").over(Window.partitionBy("g"))
-    )
-    a = cum.select(F.col("g").alias("a"), "bkt",
-                   F.col("cum").alias("ca"), F.col("n").alias("na"))
-    bb = cum.select(F.col("g").alias("b"), "bkt",
-                    F.col("cum").alias("cb"), F.col("n").alias("nb"))
-    pairs = a.join(bb, "bkt").filter(F.col("a") < F.col("b"))
-    term = F.abs(
-        F.col("ca").cast("decimal(19,0)") * F.col("nb").cast("decimal(18,0)")
-        - F.col("cb").cast("decimal(19,0)") * F.col("na").cast("decimal(18,0)")
-    )
-    agg = pairs.groupBy("a", "b", "na", "nb").agg(
-        F.sum(term.cast("decimal(38,0)")).alias("_s")
-    )
-    emd = (
-        F.col("_s").cast("double") * F.lit(float(bucket_width))
-        / (F.col("na").cast("double") * F.col("nb").cast("double"))
-    )
-    return agg.select("a", "b", F.round(emd, 6).alias("emd"))
-
-
-def doc_novelty(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id", top_k: int = 10) -> DataFrame:
-    """Per-document NOVELTY by cross-entropy against the corpus unigram
-    model: H(doc) = −(1/|d|)·Σ_t ln p_corpus(t) over the doc's tokens —
-    high = surprising vocabulary (genuinely novel content, or
-    gibberish), low = the corpus' most formulaic documents (templates).
-    Returns the top_k most AND least novel docs:
-    (doc_id, n_tokens, cross_entropy, which_end).
-
-    Determinism discipline: p_corpus comes from exact integer counts;
-    each token's −ln p term is rounded to 9 dp and DECIMAL-summed per
-    doc (order-free — the MI pattern); the per-doc mean is one
-    terminal division; selection orders by the ROUNDED value with an
-    id tie-break, so the k-boundary is engine-portable.
-
-    Shape: one vocab fold, token-keyed join of the corpus probability
-    back to the exploded tokens (vocab-keyed shuffle — never a blind
-    broadcast at web scale), one doc fold, two TakeOrdered selections."""
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    tok = docs.select(F.col(id_col), F.explode(words).alias("term"))
-    vocab = tok.groupBy("term").agg(F.count("*").alias("tc"))
-    total = vocab.agg(F.sum("tc").alias("_tt"))
-    p = vocab.crossJoin(F.broadcast(total)).select(
-        "term",
-        F.round(
-            -F.log(F.col("tc").cast("double") / F.col("_tt").cast("double")), 9
-        ).cast("decimal(20,9)").alias("_nl"),
-    )
-    per_doc = (
-        tok.join(p, "term")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.sum("_nl").alias("_s"),
-        )
-        .withColumn(
-            "cross_entropy",
-            F.round(
-                F.col("_s").cast("double") / F.col("n_tokens").cast("double"), 6
-            ),
-        )
-    )
-    hi = (
-        per_doc.orderBy(F.desc("cross_entropy"), F.asc(id_col)).limit(top_k)
-        .withColumn("which_end", F.lit("most_novel"))
-    )
-    lo = (
-        per_doc.orderBy(F.asc("cross_entropy"), F.asc(id_col)).limit(top_k)
-        .withColumn("which_end", F.lit("least_novel"))
-    )
-    return hi.unionByName(lo).select(
-        id_col, "n_tokens", "cross_entropy", "which_end"
-    )
-
-
 def quantile_normalize(df: DataFrame, value_col: str, group_col: str,
                        id_col: str = "doc_id") -> DataFrame:
     """Cross-group quantile normalization (the batch-effect correction
@@ -1295,72 +913,6 @@ def quantile_normalize(df: DataFrame, value_col: str, group_col: str,
             F.col("_g").alias(group_col),
             F.col("_v").alias(value_col),
             F.col("_hv").alias(f"norm_{value_col}"),
-        )
-    )
-
-
-def dsir_weights(df: DataFrame, target_filter, text_col: str = "text",
-                 id_col: str = "doc_id", n_buckets: int = 1024) -> DataFrame:
-    """Data Selection with Importance Resampling (DSIR, Xie et al.
-    2023), reduced to its deterministic core: score every document by
-    how target-like its HASHED unigram profile is, weight(d) =
-    Σ_{w∈d} ln( p_target(bucket(w)) / p_source(bucket(w)) ) with add-1
-    smoothing — the classifier-free data-selection signal ("give me
-    more docs that look like Wikipedia") that needs only two count
-    tables, no trained model. Returns (id, n_tokens, dsir_weight).
-
-    ``target_filter`` is a boolean Column selecting the target
-    exemplars (the source distribution is the whole corpus). Hashing
-    unigrams into ``n_buckets`` md5 buckets is DSIR's own trick and the
-    scale bound: both probability tables are ≤ n_buckets rows
-    regardless of vocabulary, so they BROADCAST, and the corpus-side
-    pass is explode → bucket → two broadcast lookups — no vocab-grain
-    shuffle at scoring time. Determinism: probabilities are exact
-    integer-ratio inputs to ONE ln per (bucket) pair, rounded 9 dp;
-    per-doc sums ride DECIMAL (order-free)."""
-    if n_buckets < 2:
-        raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("ds:"), F.col("_w"))), 1, 8),
-               16, 10).cast("long") % n_buckets
-    ).alias("_b")
-    ex = df.select(F.col(id_col), target_filter.alias("_t"),
-                   F.explode(words).alias("_w")).select(
-        F.col(id_col), F.col("_t"), bucket)
-    tgt = ex.filter(F.col("_t")).groupBy("_b").agg(F.count("*").alias("_ct"))
-    src = ex.groupBy("_b").agg(F.count("*").alias("_cs"))
-    totals = ex.agg(
-        F.sum(F.when(F.col("_t"), 1).otherwise(0)).alias("_nt"),
-        F.count("*").alias("_ns"),
-    )
-    ratio = (
-        src.join(tgt, "_b", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "_b",
-            F.round(
-                F.log(
-                    ((F.coalesce(F.col("_ct"), F.lit(0)) + 1).cast("double")
-                     / (F.col("_nt") + n_buckets).cast("double"))
-                    / ((F.col("_cs") + 1).cast("double")
-                       / (F.col("_ns") + n_buckets).cast("double"))
-                ),
-                9,
-            ).alias("_lr"),
-        )
-    )
-    return (
-        ex.join(F.broadcast(ratio), "_b")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_tokens"),
-            F.round(
-                F.sum(F.col("_lr").cast("decimal(28,9)")).cast("double"), 6
-            ).alias("dsir_weight"),
         )
     )
 

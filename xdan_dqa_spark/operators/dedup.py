@@ -963,45 +963,6 @@ def minhash_calibration(df: DataFrame, text_col: str = "text",
     return est_tbl.join(exact, ["a", "b"])
 
 
-def dedup_provenance(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", threshold: float = 0.7,
-                     max_hamming: int = 3) -> DataFrame:
-    """Per-document dedup PROVENANCE dashboard: for every input doc,
-    whether each family keeps it — exact hash, word-set, MinHash-
-    Jaccard pair policy, SimHash hamming — plus how many families drop
-    it. The triage report a dedup rollout runs to pick a policy: docs
-    dropped by all four are safe kills, docs dropped only by word-set
-    are reorderings worth eyeballing, and family disagreement rates
-    tell you which knob (threshold, hamming radius) is doing the work.
-
-    Diagnostics-grade cost, documented: this executes all four dedup
-    pipelines over the input (each with its own documented scale
-    shape) and four id-keyed left joins — run it on a sample or a
-    shard, not the full 100 TB, which is how such dashboards are used.
-    Output is one row per input doc regardless of family verdicts."""
-    fams = {
-        "exact": exact_dedup(df, text_col, id_col),
-        "wordset": wordset_dedup(df, text_col, id_col),
-        "minhash": minhash_dedup(df, text_col, id_col, threshold),
-        "simhash": simhash_dedup(df, text_col, id_col, max_hamming),
-    }
-    out = df.select(F.col(id_col))
-    kept_cols = []
-    for name, kept in fams.items():
-        marker = kept.select(F.col(id_col)).withColumn(
-            f"_k_{name}", F.lit(True)
-        )
-        out = out.join(marker, id_col, "left")
-        kept_cols.append(
-            F.coalesce(F.col(f"_k_{name}"), F.lit(False)).alias(f"kept_{name}")
-        )
-    res = out.select(F.col(id_col), *kept_cols)
-    n_dropped = F.lit(len(fams)) - sum(
-        F.col(f"kept_{n}").cast("int") for n in fams
-    )
-    return res.withColumn("n_families_dropped", n_dropped)
-
-
 def _require_integral_id(df: DataFrame, id_col: str) -> None:
     """The best-member dedups break score ties on the negated id, which
     needs an integral id; raise before any plan runs rather than fail

@@ -10,7 +10,7 @@ and a resumed run can prove which partitions committed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _LINEAGE_COLS = ("keep", "score", "scrub_count")
@@ -169,8 +169,8 @@ def mutual_information(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     columns — (n_rows, n_cells, mi_nats). MI(lang; source) near 0 means
     sources are language-balanced; high MI means language is predicted
     by source (a single-language source dominating its slice) — the
-    information-theoretic audit behind the lang_confusion /
-    keep_rate_by_lang fairness reports.
+    information-theoretic audit behind the keep_rate_by_lang fairness
+    report.
 
     Determinism discipline (token_entropy's pattern): a raw float sum
     of p·ln terms is accumulation-order-dependent, so each cell's term
@@ -377,55 +377,4 @@ def contract_report(df: DataFrame, row_rules: dict,
     return wide.select(F.explode(F.array(*entries)).alias("_r")).select(
         "_r.rule", "_r.n_violations",
         (F.col("_r.n_violations") == 0).alias("passed"),
-    )
-
-
-def rank_biased_overlap(ra: DataFrame, rb: DataFrame, item_col: str,
-                        rank_col: str = "rank", p: float = 0.9,
-                        depth: int = 20) -> DataFrame:
-    """Rank-biased overlap (Webber et al. 2010) between two rankings of
-    the same item universe, truncated at ``depth``: one row
-    (depth, p, rbo) with rbo = (1-p)·Σ_{d=1..D} p^(d-1)·|A_d ∩ B_d|/d
-    — the top-weighted ranking-similarity score used to quantify
-    search-ranking drift (swap a scorer, RBO against the old ranking
-    tells you how much the TOP moved, where users look).
-
-    Determinism discipline: the overlap-at-depth sequence is exact
-    integers (a COUNT over a rank-pair join per depth is avoided — ONE
-    join on item gives each shared item's (rank_a, rank_b), and
-    |A_d∩B_d| = count of items with max(rank_a, rank_b) <= d, a
-    cumulative count over the bounded depth grid); each weighted term
-    is one fixed IEEE sequence rounded to 12 dp and DECIMAL-summed.
-    p^(d-1) is computed by pow on integer exponents — correctly
-    rounded, identical cross-engine.
-
-    Shape: two depth-bounded inputs (callers pass top-``depth``
-    rankings), one item-keyed join, one explode over the <=depth grid —
-    everything bounded by the depth constant."""
-    if not (0 < p < 1):
-        raise ValueError(f"p must be in (0,1), got {p}")
-    a = ra.select(F.col(item_col).alias("_i"), F.col(rank_col).alias("_ra"))
-    b = rb.select(F.col(item_col).alias("_i"), F.col(rank_col).alias("_rb"))
-    shared = a.join(b, "_i").select(
-        F.greatest("_ra", "_rb").alias("_m")
-    ).filter(F.col("_m") <= depth)
-    grid = shared.groupBy("_m").agg(F.count("*").alias("_c"))
-    full = (
-        ra.sparkSession.range(1, depth + 1).select(F.col("id").alias("d"))
-        .join(grid, F.col("d") == F.col("_m"), "left")
-        .select("d", F.coalesce(F.col("_c"), F.lit(0)).alias("_c"))
-    )
-    wd = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    overl = full.withColumn("_ov", F.sum("_c").over(wd))
-    term = F.round(
-        F.pow(F.lit(p), F.col("d") - 1)
-        * F.col("_ov").cast("double") / F.col("d").cast("double"),
-        12,
-    ).cast("decimal(24,12)")
-    return overl.select(term.alias("_t")).agg(
-        F.lit(depth).alias("depth"),
-        F.lit(p).alias("p"),
-        F.round(
-            F.lit(1.0 - p) * F.sum("_t").cast("double"), 6
-        ).alias("rbo"),
     )

@@ -61,44 +61,3 @@ def last_wins_dedup(df: DataFrame, id_col: str = "doc_id",
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def cdc_apply(base: DataFrame, changelog: DataFrame, key_col: str,
-              seq_col: str, op_col: str = "op") -> DataFrame:
-    """Apply a CDC changelog (MERGE INTO semantics) to a base snapshot:
-    per key, the HIGHEST-sequence change wins — 'I'/'U' upsert the
-    payload, 'D' deletes; keys untouched by the changelog pass through.
-    Returns the merged table (base schema).
-
-    This is the state-reconstruction half of the incremental-crawl
-    pair: scd2_intervals keeps the HISTORY, cdc_apply materializes the
-    CURRENT state from a snapshot + the day's change feed — the shape
-    warehouse MERGE INTO executes, spelled as a plan any engine runs.
-
-    Scale shape: the winner per key is ONE map-side-combinable
-    max(struct(seq, op, payload)) fold over the changelog (never a
-    window — a hot key's churn folds map-side), then one key-grained
-    outer join against the base; rows emit where the winning op is not
-    'D' (changelog wins) or no change exists (base passes through).
-    Sequence ties are broken by op then payload lexicographically so a
-    malformed feed with duplicate sequence numbers stays deterministic
-    rather than partition-dependent."""
-    payload_cols = [c for c in base.columns if c != key_col]
-    win = changelog.groupBy(F.col(key_col)).agg(
-        F.max(
-            F.struct(
-                F.col(seq_col).alias("_seq"),
-                F.col(op_col).alias("_op"),
-                *[F.col(c).alias(f"_p_{c}") for c in payload_cols],
-            )
-        ).alias("_w")
-    )
-    joined = base.join(win, key_col, "full_outer")
-    keep = F.col("_w").isNull() | (F.col("_w._op") != F.lit("D"))
-    out_cols = [F.col(key_col)]
-    for c in payload_cols:
-        out_cols.append(
-            F.when(F.col("_w").isNotNull(), F.col(f"_w._p_{c}"))
-            .otherwise(F.col(c)).alias(c)
-        )
-    return joined.filter(keep).select(*out_cols)

@@ -265,114 +265,3 @@ def keep_column(score: Column | str, pred_lang: Column | str, h: dict[str, Colum
     return F.expr(keep_sql(arg(score), arg(pred_lang), _args(h),
                            None if declared_lang is None else arg(declared_lang), cfg,
                            None if category is None else arg(category)))
-
-
-def linear_probe_train(df, text_col: str = "text", lam: int = 1):
-    """Train a tiny linear quality probe CLOSED-FORM — the trainable
-    upgrade of the fixed-weight keep rule (the fastText-style "train a
-    filter on labels" step of CCNet-style pipelines, reduced to its
-    deterministic core): ridge-regress the integer keep label on two
-    integer document features (token count, symbol count) by solving
-    the 3×3 normal equations (XᵀX + λI)w = Xᵀy exactly, and report the
-    weights plus EXACT training accuracy. Returns ONE row:
-    (n_docs, n_keep, w0, w1, w2, n_correct, accuracy).
-
-    Why closed-form instead of gradient steps: the normal-equation
-    entries are integer sums of integer feature products — one
-    map-side-combinable DECIMAL(38,0) aggregate over the corpus, exact
-    and order-independent at any parallelism — and a 3×3 Cramer solve
-    is six integer determinants. Iterative training would compound
-    float rounding per step and break cross-engine value identity;
-    here the ONLY float ops are the three terminal weight divisions.
-    Even the accuracy avoids floats: predict keep ⟺ w·x ≥ 1/2 ⟺
-    2·(det₀ + det₁x₁ + det₂x₂) ≥ det(A) (valid since λ>0 makes A
-    positive definite, det>0) — an all-integer comparison per doc.
-
-    Label (all-integer Gopher keep, identical to the rule the
-    keep-rate queries publish): n_words ≥ 5 AND 10·n_sym ≤ n_words AND
-    duplicate-line fraction ≤ 0.3 via 10·(n_lines − n_distinct) ≤
-    3·n_lines. λ penalizes the intercept too (symmetric ridge —
-    documented choice, keeps A's diagonal uniform).
-
-    Scale: ONE aggregate over the corpus (9 decimal sums), a 1-row
-    broadcast back for the accuracy count, ONE more aggregate. At
-    100 TB this is two scans and two 1-row exchanges."""
-    from ..functions.heuristics import _SYMBOL_CHARS
-    from ..functions.tokenize import WS, WS_PLUS
-
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(t, WS_PLUS), lambda w: F.length(w) > 0)
-    lines = F.array_remove(F.split(t, f"{WS}*\\n{WS}*"), "")
-    x1 = F.size(words).cast("long")
-    x2 = (F.length(t) - F.length(F.translate(t, _SYMBOL_CHARS, ""))).cast("long")
-    n_lines = F.size(lines)
-    n_dist = F.size(F.array_distinct(lines))
-    keep = (
-        (x1 >= 5) & (10 * x2 <= x1)
-        & ((n_lines <= 1) | (10 * (n_lines - n_dist) <= 3 * n_lines))
-    )
-    feat = df.select(
-        x1.alias("x1"), x2.alias("x2"),
-        F.when(keep, F.lit(1)).otherwise(F.lit(0)).cast("long").alias("y"),
-    )
-
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    sums = feat.agg(
-        F.count("*").cast("decimal(38,0)").alias("n"),
-        F.sum(d(F.col("x1"))).alias("s1"),
-        F.sum(d(F.col("x2"))).alias("s2"),
-        F.sum(d(F.col("x1") * F.col("x1"))).alias("s11"),
-        F.sum(d(F.col("x1") * F.col("x2"))).alias("s12"),
-        F.sum(d(F.col("x2") * F.col("x2"))).alias("s22"),
-        F.sum(d(F.col("y"))).alias("sy"),
-        F.sum(d(F.col("x1") * F.col("y"))).alias("s1y"),
-        F.sum(d(F.col("x2") * F.col("y"))).alias("s2y"),
-    )
-    L = F.lit(lam).cast("decimal(38,0)")
-    a00, a01, a02 = F.col("n") + L, F.col("s1"), F.col("s2")
-    a11, a12, a22 = F.col("s11") + L, F.col("s12"), F.col("s22") + L
-    b0, b1, b2 = F.col("sy"), F.col("s1y"), F.col("s2y")
-
-    def det3(c00, c01, c02, c10, c11, c12, c20, c21, c22):
-        return (
-            c00 * (c11 * c22 - c12 * c21)
-            - c01 * (c10 * c22 - c12 * c20)
-            + c02 * (c10 * c21 - c11 * c20)
-        )
-
-    dets = sums.select(
-        F.col("n").cast("long").alias("n_docs"),
-        F.col("sy").cast("long").alias("n_keep"),
-        det3(a00, a01, a02, a01, a11, a12, a02, a12, a22).alias("dA"),
-        det3(b0, a01, a02, b1, a11, a12, b2, a12, a22).alias("d0"),
-        det3(a00, b0, a02, a01, b1, a12, a02, b2, a22).alias("d1"),
-        det3(a00, a01, b0, a01, a11, b1, a02, a12, b2).alias("d2"),
-    )
-    correct = (
-        feat.crossJoin(F.broadcast(dets))
-        .select(
-            (
-                (
-                    F.lit(2).cast("decimal(38,0)")
-                    * (F.col("d0") + F.col("d1") * d(F.col("x1"))
-                       + F.col("d2") * d(F.col("x2")))
-                    >= F.col("dA")
-                ).cast("long") == F.col("y")
-            ).cast("long").alias("ok")
-        )
-        .agg(F.sum("ok").alias("n_correct"))
-    )
-    w = lambda c: F.round(c.cast("double") / F.col("dA").cast("double"), 6)  # noqa: E731
-    return (
-        dets.crossJoin(correct)
-        .select(
-            "n_docs", "n_keep",
-            w(F.col("d0")).alias("w0"),
-            w(F.col("d1")).alias("w1"),
-            w(F.col("d2")).alias("w2"),
-            "n_correct",
-            F.round(
-                F.col("n_correct").cast("double") / F.col("n_docs").cast("double"), 6
-            ).alias("accuracy"),
-        )
-    )

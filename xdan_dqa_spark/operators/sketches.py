@@ -1,8 +1,8 @@
 """Distributed probabilistic sketches: HyperLogLog cardinality,
-count-min frequency, log-histogram quantiles and fixed-threshold theta
-samples — the sublinear-state summaries a 100 TB pipeline runs where
-exact answers would shuffle the corpus (vocabulary size per shard,
-heavy-hitter terms, length quantiles, vocabulary overlap).
+count-min frequency and fixed-threshold theta samples — the
+sublinear-state summaries a 100 TB pipeline runs where exact answers
+would shuffle the corpus (vocabulary size per shard, heavy-hitter
+terms, vocabulary overlap).
 
 Reference scope: the reference (src/processor.py) has no sketch surface;
 this module is part of the beyond-reference scale layer (SURVEY.md
@@ -17,9 +17,8 @@ at any parallelism. The float ops that remain are single terminal
 scalar expressions on already-aggregated values (deterministic: one
 round-to-nearest conversion, no reassociation).
 
-Cross-engine determinism discipline (shared with graph.py's fixed-point
-PageRank): aggregate in {max, integer sum, DECIMAL(38,0) sum} only;
-divide once at the end.
+Cross-engine determinism discipline: aggregate in {max, integer sum,
+DECIMAL(38,0) sum} only; divide once at the end.
 """
 
 from __future__ import annotations
@@ -109,10 +108,7 @@ def hll_estimate(df: DataFrame, col: str) -> DataFrame:
 def hll_estimate_from_registers(regs: DataFrame) -> DataFrame:
     """(m, n_zero_registers, hll_estimate) from an (idx, rho) register
     table — the MERGE-SIDE finisher: shard/day/stream register tables
-    union + max() into one table, and this turns it into the estimate.
-    Split out from hll_estimate so the STREAMING path (complete-mode
-    max() aggregation = the register table as streaming state) reuses
-    the identical arithmetic (q_stream_hll)."""
+    union + max() into one table, and this turns it into the estimate."""
     # 2^(57-rho) exactly: never float pow() — an integer shiftleft (the
     # max single contribution 2^56 fits a long), widened to DECIMAL(38,0)
     # before the sum because 256 registers x 2^56 can exceed 2^63. The
@@ -215,180 +211,6 @@ def cms_heavy_hitters(df: DataFrame, col: str, top_k: int = 20) -> DataFrame:
     return est.select(
         "value", "true_cnt", "cms_estimate",
         (F.col("cms_estimate") - F.col("true_cnt")).alias("overcount"),
-    )
-
-
-def hll_registers_by(df: DataFrame, col: str, by: str) -> DataFrame:
-    """(group, idx, rho) GROUPED HyperLogLog registers — one 256-row
-    register table per group, the per-slice cardinality monitor
-    (vocabulary per source/shard/day). Same construction as
-    hll_registers with the group key carried through the ONE map-side-
-    combined max aggregate; state is 256 rows × groups, merges across
-    shards with max() exactly like the global sketch."""
-    c = F.col(col).cast("string")
-    hl = _h32(c, "hl")
-    hh = _h32(c, "hh")
-    idx = hl.bitwiseAND(F.lit(HLL_M - 1))
-    w = F.shiftright(hl, HLL_P) * F.lit(1 << 32).cast("long") + hh
-    rho = F.when(w == 0, F.lit(_HLL_RHO_MAX)).otherwise(
-        F.lit(_HLL_RHO_MAX) - F.length(F.bin(w))
-    )
-    return (
-        df.select(F.col(by).alias("grp"), idx.alias("idx"), rho.alias("rho"))
-        .groupBy("grp", "idx")
-        .agg(F.max("rho").alias("rho"))
-    )
-
-
-def hll_estimate_by(df: DataFrame, col: str, by: str) -> DataFrame:
-    """Per-group HyperLogLog report: (group, m, n_zero_registers,
-    hll_estimate, exact_distinct, rel_error) — hll_estimate's math
-    applied group-wise (identical constants and op order, so each
-    group's estimate is bit-identical to running the global sketch on
-    that slice alone). The exact column rides a second aggregate over
-    the same scan for self-documentation; at 100 TB keep only the
-    grouped register table."""
-    regs = hll_registers_by(df, col, by)
-    contrib = F.expr(
-        f"cast(shiftleft(cast(1 as bigint), cast({_HLL_RHO_MAX} - rho as int)) "
-        "as decimal(38,0))"
-    )
-    s = regs.groupBy("grp").agg(
-        F.count("*").alias("n_present"),
-        F.sum(contrib).alias("s_present"),
-    )
-    alpha = 0.7213 / (1.0 + 1.079 / HLL_M)
-    staged = s.select(
-        "grp",
-        F.lit(HLL_M).alias("m"),
-        (F.lit(HLL_M) - F.col("n_present")).alias("n_zero_registers"),
-        (
-            F.col("s_present")
-            + (F.lit(HLL_M) - F.col("n_present")).cast("decimal(38,0)")
-            * F.lit(1 << 57).cast("decimal(38,0)")
-        ).alias("_s_total"),
-    )
-    raw = (
-        F.lit(alpha * HLL_M * HLL_M * float(1 << 57))
-        / F.col("_s_total").cast("double")
-    )
-    v = F.col("n_zero_registers").cast("double")
-    est = F.when(
-        (raw <= F.lit(2.5 * HLL_M)) & (v > 0),
-        F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / v),
-    ).otherwise(raw)
-    exact = df.groupBy(F.col(by).alias("grp")).agg(
-        F.count_distinct(F.col(col)).alias("exact_distinct")
-    )
-    return (
-        staged.join(exact, "grp")
-        .select(
-            F.col("grp").alias(by),
-            "m",
-            "n_zero_registers",
-            F.round(est, 4).alias("hll_estimate"),
-            "exact_distinct",
-            F.round(
-                (F.round(est, 4) - F.col("exact_distinct").cast("double"))
-                / F.col("exact_distinct").cast("double"),
-                6,
-            ).alias("rel_error"),
-        )
-    )
-
-
-def log_histogram_quantiles(df: DataFrame, col: str,
-                            quantiles: tuple = (0.5, 0.9, 0.99)) -> DataFrame:
-    """Mergeable QUANTILE SKETCH with a guaranteed 2x relative-error
-    bound: positive values bucket by power of two (bucket = bit length
-    — integral in both engines, no float log2), the sketch state is one
-    count per occupied bucket (<= 64 rows, mergeable by cell-wise sum
-    across shards/days), and a quantile estimate is the midpoint of the
-    bucket where the cumulative count crosses ceil(q*n). Returns
-    (quantile, est, exact, ratio) with the exact type-7 quantile
-    alongside — the bounded-state complement to the exact
-    value-compressed histogram (textstats.exact_quantiles_histogram),
-    for when even the distinct-value set is too large to shuffle.
-
-    Rank selection is EXACT integer arithmetic: target rank =
-    ceil(q*n) computed as (num*n + den - 1) DIV den from the rational
-    form of q (q is snapped to thousandths), so no float boundary can
-    move the chosen bucket. The estimate 3*2^(b-2) (bucket midpoint)
-    and the ratio are terminal float ops. Zero/negative values are
-    excluded (log buckets are undefined there) and surface via the
-    exact column diverging — callers shift such domains first."""
-    pos = df.select(F.col(col).cast("long").alias("v")).filter(F.col("v") > 0)
-    hist = pos.groupBy(F.length(F.bin(F.col("v"))).alias("b")).agg(
-        F.count("*").alias("c")
-    )
-    w = Window.orderBy("b")
-    staged = (
-        hist.withColumn("cum", F.sum("c").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("n", F.sum("c").over(
-            Window.partitionBy(F.lit(1))))
-    )
-    outs = []
-    for q in quantiles:
-        num = int(round(q * 1000))
-        target = F.expr(f"({num} * n + 999) DIV 1000")
-        picked = (
-            staged.filter(F.col("cum") >= target)
-            .orderBy("b")
-            .limit(1)
-            .select(
-                F.lit(float(num) / 1000.0).alias("quantile"),
-                F.when(F.col("b") == 1, F.lit(1.0)).otherwise(
-                    F.lit(3.0) * F.pow(F.lit(2.0), F.col("b") - 2)
-                ).alias("est"),
-            )
-        )
-        outs.append(picked)
-    est = outs[0]
-    for o in outs[1:]:
-        est = est.unionByName(o)
-    # exact type-7 quantile per q over the same positive-value set
-    vh = pos.groupBy("v").agg(F.count("*").alias("c"))
-    wv = Window.orderBy("v")
-    vh = (
-        vh.withColumn("cum", F.sum("c").over(
-            wv.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("cum_prev", F.col("cum") - F.col("c"))
-        .withColumn("n", F.sum("c").over(Window.partitionBy(F.lit(1))))
-    )
-    exacts = []
-    for q in quantiles:
-        qq = float(int(round(q * 1000))) / 1000.0
-        h = F.lit(qq) * (F.col("n") - 1).cast("double")
-        lo_rank = F.floor(h) + 1           # 1-based rank of lower value
-        lo = vh.filter(
-            (F.col("cum_prev") < lo_rank) & (F.col("cum") >= lo_rank)
-        ).agg(F.min("v").alias("_lo"))
-        hi = vh.filter(
-            (F.col("cum_prev") < lo_rank + 1) & (F.col("cum") >= lo_rank + 1)
-        ).agg(F.min("v").alias("_hi"))
-        frac = vh.agg(
-            (F.lit(qq) * (F.max("n") - 1).cast("double")
-             - F.floor(F.lit(qq) * (F.max("n") - 1).cast("double"))).alias("_f")
-        )
-        exacts.append(
-            lo.crossJoin(hi).crossJoin(frac).select(
-                F.lit(qq).alias("quantile"),
-                (
-                    F.col("_lo").cast("double")
-                    + F.col("_f")
-                    * (F.coalesce(F.col("_hi"), F.col("_lo"))
-                       - F.col("_lo")).cast("double")
-                ).alias("exact"),
-            )
-        )
-    ex = exacts[0]
-    for o in exacts[1:]:
-        ex = ex.unionByName(o)
-    return est.join(ex, "quantile").select(
-        "quantile", F.round("est", 6).alias("est"),
-        F.round("exact", 6).alias("exact"),
-        F.round(F.col("est") / F.col("exact"), 6).alias("ratio"),
     )
 
 

@@ -653,228 +653,6 @@ def script_profile(df: DataFrame, text_col: str = "text",
     )
 
 
-def source_similarity_matrix(docs: DataFrame, text_col: str = "text",
-                             by: str = "source") -> DataFrame:
-    """Pairwise unigram-profile cosine similarity between sources —
-    (a, b, n_shared_terms, cosine) for a < b — the corpus MAP a mixing
-    stage reads: near-duplicate sources (mirrors, syndication feeds)
-    sit at cosine → 1 and should not both be upweighted; the complement
-    to dup_cross_source's document-level contamination matrix at the
-    aggregate profile level.
-
-    Determinism discipline: cos = Σ c_a·c_b / (√Σc_a²·√Σc_b²) where
-    every sum is an EXACT DECIMAL(38,0) aggregate of integer term
-    counts (feature_correlation's widths: (19,0)×(18,0) products) —
-    order-free — and the two sqrt/one division run ONCE per pair on the
-    aggregated scalars.
-
-    Scale shape: term counts fold at (source, term) grain (map-side
-    combinable); norms fold that bounded table per source; the cross
-    term is a self-join ON TERM whose output is Σ_term s_t² rows with
-    s_t = sources containing the term — bounded by S²·vocab worst-case
-    and far less on real skew. At large S, block the join by source
-    buckets; S here is the mixing-table cardinality (tens-to-hundreds),
-    so the matrix is tiny."""
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    tc = (
-        docs.select(F.col(by).alias("src"), F.explode(words).alias("term"))
-        .groupBy("src", "term")
-        .agg(F.count("*").alias("c"))
-    )
-    c19 = F.col("c").cast("decimal(19,0)")
-    c18 = F.col("c").cast("decimal(18,0)")
-    norms = tc.groupBy("src").agg(
-        F.sum((c19 * c18).cast("decimal(38,0)")).alias("_n2")
-    )
-    ta = tc.select(F.col("src").alias("a"), "term",
-                   F.col("c").alias("_ca"))
-    tb = tc.select(F.col("src").alias("b"), "term",
-                   F.col("c").alias("_cb"))
-    cross = (
-        ta.join(tb, "term")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(
-            F.count("*").alias("n_shared_terms"),
-            F.sum(
-                (F.col("_ca").cast("decimal(19,0)")
-                 * F.col("_cb").cast("decimal(18,0)")).cast("decimal(38,0)")
-            ).alias("_dot"),
-        )
-    )
-    na = norms.select(F.col("src").alias("a"), F.col("_n2").alias("_na"))
-    nb = norms.select(F.col("src").alias("b"), F.col("_n2").alias("_nb"))
-    return (
-        cross.join(na, "a").join(nb, "b")
-        .select(
-            "a", "b", "n_shared_terms",
-            F.round(
-                F.col("_dot").cast("double")
-                / (F.sqrt(F.col("_na").cast("double"))
-                   * F.sqrt(F.col("_nb").cast("double"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
-
-
-def vocab_coverage_curve(docs: DataFrame, text_col: str = "text",
-                        ks: tuple = (100, 1000, 10000)) -> DataFrame:
-    """Token-mass coverage of the top-k vocabulary: for each budget k,
-    what share of all token OCCURRENCES the k most frequent terms
-    cover — (k, vocab_size, covered_tokens, total_tokens, coverage).
-    The tokenizer-budget curve (Zipf's law makes it concave: the first
-    100 types often cover half the corpus) read before fixing a vocab
-    size or a stoplist cutoff.
-
-    Shape: one term-count fold (map-side combinable), ONE frequency-
-    rank window over the VOCAB table (bounded by distinct terms —
-    the zipf_slope/oov_rate precedent), then per-k conditional sums in
-    one bounded aggregate. Rank ties break (count DESC, term ASC) so
-    every budget's term set is total-order deterministic. Counts are
-    exact integers; coverage is one terminal division per k."""
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    tc = (
-        docs.select(F.explode(words).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").alias("c"))
-    )
-    wv = Window.orderBy(F.desc("c"), F.asc("term"))
-    ranked = tc.withColumn("rk", F.row_number().over(wv))
-    aggs = [
-        F.count("*").alias("vocab_size"),
-        F.sum("c").alias("total_tokens"),
-    ]
-    for k in ks:
-        aggs.append(
-            F.sum(F.when(F.col("rk") <= k, F.col("c")).otherwise(0)).alias(f"_cov_{k}")
-        )
-    wide = ranked.agg(*aggs)
-    rows = F.array(*[
-        F.struct(
-            F.lit(k).alias("k"),
-            F.col("vocab_size"),
-            F.col(f"_cov_{k}").cast("long").alias("covered_tokens"),
-            F.col("total_tokens"),
-        )
-        for k in ks
-    ])
-    return wide.select(F.explode(rows).alias("_r")).select(
-        "_r.k", "_r.vocab_size", "_r.covered_tokens", "_r.total_tokens",
-        F.round(
-            F.col("_r.covered_tokens").cast("double")
-            / F.col("_r.total_tokens").cast("double"),
-            6,
-        ).alias("coverage"),
-    )
-
-
-def term_adaptation(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", top_k: int = 20) -> DataFrame:
-    """Church-Gale term ADAPTATION for the corpus' top terms: the
-    probability a term occurs AGAIN in a document given it occurred
-    once — adaptation = df2/df1 with df1 = docs containing the term,
-    df2 = docs containing it at least twice. Content words adapt
-    strongly (a doc about 'spark' says it many times); function words
-    don't — so (count, adaptation) separates topical vocabulary from
-    glue, a cleaner stoplist signal than raw frequency. Returns
-    (term, total_cnt, df1, df2, adaptation) for the top_k terms by
-    total count (ties term ASC).
-
-    All integer until one division per term: the per-(doc, term) fold
-    is map-side combinable (doc id in the key), df1/df2 are conditional
-    counts over that bounded table, selection is TakeOrdered."""
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    dt = (
-        docs.select(F.col(id_col), F.explode(words).alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count("*").alias("k"))
-    )
-    per_term = dt.groupBy("term").agg(
-        F.sum("k").alias("total_cnt"),
-        F.count("*").alias("df1"),
-        F.sum(F.when(F.col("k") >= 2, 1).otherwise(0)).alias("df2"),
-    )
-    w = Window.orderBy(F.desc("total_cnt"), F.asc("term"))
-    return (
-        per_term.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= top_k)
-        .select(
-            "term", "total_cnt", "df1", "df2",
-            F.round(
-                F.col("df2").cast("double") / F.col("df1").cast("double"), 6
-            ).alias("adaptation"),
-        )
-    )
-
-
-def bigram_conditional_entropy(docs: DataFrame, text_col: str = "text",
-                               by: str = "lang") -> DataFrame:
-    """Per-group conditional entropy of the next token given the
-    current one, H(Y|X) = H(bigrams) − H(unigram prefixes) — the
-    language-model-flavored predictability signal: prose sits high
-    (many plausible continuations), template spam collapses toward 0
-    (every token determines the next). Complements unigram
-    token_entropy, which repetitive BIGRAM structure can fool.
-
-    Determinism (token_entropy's discipline, applied twice): both
-    entropies are Σ (c/N)·ln(N/c) with exact integer counts, each
-    term rounded to 9 dp and DECIMAL-summed; the final subtraction is
-    one float op on two aggregated scalars. Bigrams come from
-    arrays_zip of two shifted slices (O(1) per element — the shingles
-    construction at n=2); prefix counts REUSE the bigram table (one
-    more fold), so the corpus is tokenized once."""
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    cnt = F.greatest(F.size(words) - 1, F.lit(0))
-    zipped = F.arrays_zip(
-        F.slice(words, 1, cnt), F.slice(words, 2, cnt)
-    )
-    bg = docs.select(
-        F.col(by).alias("g"),
-        F.explode(zipped).alias("_b"),
-    ).select(
-        "g", F.col("_b")["0"].alias("x"), F.col("_b")["1"].alias("y")
-    )
-    bc = bg.groupBy("g", "x", "y").agg(F.count("*").alias("c"))
-    tot = bc.groupBy("g").agg(F.sum("c").alias("n"))
-
-    def entropy(cells, keys):
-        j = cells.join(tot, "g")
-        term = F.round(
-            (F.col("c").cast("double") / F.col("n").cast("double"))
-            * F.log(F.col("n").cast("double") / F.col("c").cast("double")),
-            9,
-        ).cast("decimal(20,9)")
-        return j.select("g", term.alias("_t")).groupBy("g").agg(
-            F.sum("_t").alias(keys)
-        )
-    h_xy = entropy(bc, "_hxy")
-    xc = bc.groupBy("g", "x").agg(F.sum("c").alias("c"))
-    h_x = entropy(xc, "_hx")
-    return (
-        h_xy.join(h_x, "g").join(tot, "g")
-        .select(
-            F.col("g").alias(by),
-            F.col("n").alias("n_bigrams"),
-            F.round(
-                F.col("_hxy").cast("double") - F.col("_hx").cast("double"), 6
-            ).alias("cond_entropy_nats"),
-        )
-    )
-
-
 def hill_tail_index(docs: DataFrame, value_col: str = "n_chars",
                     k: int = 200) -> DataFrame:
     """Hill estimator of the power-law tail index over a value column —
@@ -918,102 +696,6 @@ def hill_tail_index(docs: DataFrame, value_col: str = "n_chars",
             F.lit(float(k)) / F.col("_s").cast("double"), 6
         ).alias("alpha"),
     )
-
-
-def bpe_merge_train(df: DataFrame, text_col: str = "text",
-                    n_merges: int = 3) -> DataFrame:
-    """Train the first ``n_merges`` BPE merges over the corpus (Sennrich
-    et al. 2016) — the tokenizer-FITTING step of a training-data
-    pipeline, run distributed: at each step the most frequent adjacent
-    symbol pair (ties → lexicographically smallest) is merged into one
-    symbol everywhere, starting from characters. Returns the merge
-    table: (step, lhs, rhs, pair_count).
-
-    Determinism + scale discipline:
-      * Training runs at VOCABULARY grain, not corpus grain — the
-        classic BPE trick: distinct words with their corpus frequencies
-        (one groupBy), so each merge step rescans |vocab| rows, not the
-        corpus, and pair counts are freq-weighted integer sums
-        (map-side combinable, order-independent).
-      * Each word is carried as a boundary-safe symbol string
-        " s1  s2  ...  sN " (single sentinel space at the edges, DOUBLE
-        space between symbols). Applying a merge is then ONE literal
-        replace of " lhs  rhs " with " lhs rhs "-joined — the pattern
-        consumes one boundary space per side so adjacent matches still
-        match ("a b a b" merges both pairs), while left-to-right
-        non-overlapping literal replace gives exactly BPE's greedy
-        semantics on overlaps ("a a a" → "aa a"). Both engines'
-        replace() scans identically, so the whole training loop is
-        oracle-checkable.
-      * The per-step argmax is a sort-limit over the PAIR table
-        (bounded by live vocab size, ~10⁷ rows at web scale — a single
-        TakeOrdered, never a corpus sort); it is broadcast back as a
-        1-row join.
-    n_merges is a small constant (the plan unrolls per step); for
-    real-tokenizer merge counts (~30k) this shape still works but wants
-    a checkpoint every ~10 steps and incremental pair-count updates.
-
-    Caveat (documented, not hit by the fixtures): the initial character
-    split uses Spark's split(w, ''), which splits at UTF-16 code-unit
-    boundaries — a non-BMP character (emoji, rare CJK ext-B) would
-    split into two surrogate halves while the DuckDB twin splits at
-    codepoints. For full astral-plane corpora, pre-split with a
-    codepoint-aware pandas UDF."""
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    wf = (
-        df.select(F.explode(words).alias("w"))
-        .groupBy("w").agg(F.count("*").alias("freq"))
-    )
-    chars = F.filter(F.split(F.col("w"), ""), lambda c: F.length(c) > 0)
-    cur = wf.select(
-        "freq",
-        F.concat(F.lit(" "), F.array_join(chars, "  "), F.lit(" ")).alias("_repr"),
-    )
-    merge_rows = []
-    for step in range(1, n_merges + 1):
-        toks = F.split(F.trim(F.col("_repr")), "  ")
-        pairs = F.filter(
-            F.zip_with(
-                toks,
-                F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-                lambda x, y: F.when(
-                    y.isNotNull(), F.struct(x.alias("lhs"), y.alias("rhs"))
-                ),
-            ),
-            lambda p: p.isNotNull(),
-        )
-        counts = (
-            cur.select("freq", F.explode(pairs).alias("_p"))
-            .groupBy(F.col("_p.lhs").alias("lhs"), F.col("_p.rhs").alias("rhs"))
-            .agg(F.sum("freq").alias("pair_count"))
-        )
-        top = counts.orderBy(
-            F.desc("pair_count"), F.asc("lhs"), F.asc("rhs")
-        ).limit(1)
-        merge_rows.append(top.select(F.lit(step).alias("step"),
-                                     "lhs", "rhs", "pair_count"))
-        cur = (
-            cur.crossJoin(F.broadcast(top.select(
-                F.col("lhs").alias("_ml"), F.col("rhs").alias("_mr"))))
-            .select(
-                "freq",
-                F.replace(
-                    F.col("_repr"),
-                    F.concat(F.lit(" "), F.col("_ml"), F.lit("  "),
-                             F.col("_mr"), F.lit(" ")),
-                    F.concat(F.lit(" "), F.col("_ml"), F.col("_mr"), F.lit(" ")),
-                ).alias("_repr"),
-            )
-        )
-    out = merge_rows[0]
-    for m in merge_rows[1:]:
-        out = out.unionByName(m)
-    return out
 
 
 def winnow_word_fingerprints(text_col: str, n: int = 3, w: int = 4) -> F.Column:
@@ -1084,82 +766,4 @@ def winnow_overlap_pairs(df: DataFrame, min_shared: int = 2,
         .groupBy("a", "b")
         .agg(F.count("*").alias("n_shared_fp"))
         .filter(F.col("n_shared_fp") >= min_shared)
-    )
-
-
-def bpe_fertility(df: DataFrame, text_col: str = "text",
-                  n_merges: int = 3) -> DataFrame:
-    """Apply the first ``n_merges`` trained BPE merges and report the
-    corpus TOKEN FERTILITY change — the number a tokenizer rollout
-    actually cares about: ONE row (n_distinct_words,
-    tokens_before, tokens_after, compression), where tokens_* are
-    frequency-weighted symbol counts across the corpus (before =
-    characters, after = symbols post-merge) and compression =
-    after/before. Shares :func:`bpe_merge_train`'s exact training loop
-    (vocab-grain reprs, freq-weighted integer pair counts,
-    boundary-safe literal replace), then folds the final symbol table
-    once — all integer until the one terminal division."""
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    wf = (
-        df.select(F.explode(words).alias("w"))
-        .groupBy("w").agg(F.count("*").alias("freq"))
-    )
-    chars = F.filter(F.split(F.col("w"), ""), lambda c: F.length(c) > 0)
-    cur = wf.select(
-        "freq",
-        F.concat(F.lit(" "), F.array_join(chars, "  "), F.lit(" ")).alias("_repr"),
-    )
-    for _ in range(n_merges):
-        toks = F.split(F.trim(F.col("_repr")), "  ")
-        pairs = F.filter(
-            F.zip_with(
-                toks,
-                F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-                lambda x, y: F.when(
-                    y.isNotNull(), F.struct(x.alias("lhs"), y.alias("rhs"))
-                ),
-            ),
-            lambda p: p.isNotNull(),
-        )
-        counts = (
-            cur.select("freq", F.explode(pairs).alias("_p"))
-            .groupBy(F.col("_p.lhs").alias("lhs"), F.col("_p.rhs").alias("rhs"))
-            .agg(F.sum("freq").alias("pair_count"))
-        )
-        top = counts.orderBy(
-            F.desc("pair_count"), F.asc("lhs"), F.asc("rhs")
-        ).limit(1)
-        cur = (
-            cur.crossJoin(F.broadcast(top.select(
-                F.col("lhs").alias("_ml"), F.col("rhs").alias("_mr"))))
-            .select(
-                "freq",
-                F.replace(
-                    F.col("_repr"),
-                    F.concat(F.lit(" "), F.col("_ml"), F.lit("  "),
-                             F.col("_mr"), F.lit(" ")),
-                    F.concat(F.lit(" "), F.col("_ml"), F.col("_mr"), F.lit(" ")),
-                ).alias("_repr"),
-            )
-        )
-    # tokens_before = per-word CHARACTER count: stripping the separator
-    # spaces from the final repr recovers exactly the original characters
-    # (merges only remove inter-symbol spaces), so one column serves both.
-    n_after = F.size(F.split(F.trim(F.col("_repr")), "  "))
-    n_chars = F.length(F.regexp_replace(F.col("_repr"), " ", ""))
-    return cur.agg(
-        F.count("*").alias("n_distinct_words"),
-        F.sum(F.col("freq") * n_chars).alias("tokens_before"),
-        F.sum(F.col("freq") * n_after).alias("tokens_after"),
-    ).select(
-        "n_distinct_words", "tokens_before", "tokens_after",
-        F.round(
-            F.col("tokens_after").cast("double")
-            / F.col("tokens_before").cast("double"), 6
-        ).alias("compression"),
     )

@@ -2236,8 +2236,8 @@ FROM pd GROUP BY lang
 
 # ------------------------------------------------------------- round-5 batch 8
 # Within-doc repetition, join-based stopword coverage (the one Gopher
-# signal the regex form could not oracle-pair), token entropy,
-# quantile-band length filtering, and canonical-form dedup.
+# signal the regex form could not oracle-pair), token entropy, and
+# canonical-form dedup.
 
 
 def q_ngram_repetition(spark, sf_dir):
@@ -2337,71 +2337,9 @@ SELECT k.doc_id, k.lang, k.source, k.n_chars FROM k JOIN r USING (_k, doc_id)
 """
 
 
-def q_a21_length_band(spark, sf_dir):
-    # Per-language [p05, p95] doc-length keep band (outlier trim before
-    # mixing): the ≤#langs quantile table comes from the bounded-state
-    # exact histogram (see a6), is BROADCAST back, and the document scan
-    # never shuffles — the filter itself is map-only. Both engines
-    # compare against the 6-dp-rounded type-7 quantile so the band
-    # boundary is bit-identical.
-    from ..operators.textstats import exact_quantiles_histogram
-
-    d = _t(spark, sf_dir, "documents")
-    gv = d.select(F.col("lang").alias("g"), F.col("n_chars").cast("double").alias("v"))
-    q = exact_quantiles_histogram(gv, (0.05, 0.95)).select(
-        F.col("g").alias("lang"), F.col("p5").alias("lo"), F.col("p95").alias("hi")
-    )
-    return (
-        d.join(F.broadcast(q), "lang")
-        .filter(
-            (F.col("n_chars").cast("double") >= F.col("lo"))
-            & (F.col("n_chars").cast("double") <= F.col("hi"))
-        )
-        .select("doc_id", "lang", "n_chars")
-    )
-
-
-SQL_A21_BAND = """
-WITH q AS (
-  SELECT lang,
-         round(quantile_cont(CAST(n_chars AS DOUBLE), 0.05), 6) AS lo,
-         round(quantile_cont(CAST(n_chars AS DOUBLE), 0.95), 6) AS hi
-  FROM documents GROUP BY lang
-)
-SELECT d.doc_id, d.lang, d.n_chars FROM documents d JOIN q USING (lang)
-WHERE CAST(d.n_chars AS DOUBLE) >= lo AND CAST(d.n_chars AS DOUBLE) <= hi
-"""
-
-
 # ------------------------------------------------------------- round-5 batch 9
-# Pipeline-health reports composed from the already-verified signal
-# machinery: language-confusion matrix (declared vs heuristic label),
-# per-source PII prevalence by rule, score-calibration deciles over the
-# full score_core tree.
-
-
-def q_lang_confusion(spark, sf_dir):
-    # Declared `lang` vs the heuristic predictor — the mislabel-rate
-    # matrix a corpus audit reads before trusting upstream metadata.
-    # One map-only predict pass + a fold to the bounded L×L matrix.
-    from ..operators.textstats import langid_heuristic_expr
-
-    return (
-        _t(spark, sf_dir, "documents")
-        .select("lang", langid_heuristic_expr("text").alias("lang_pred"))
-        .groupBy("lang", "lang_pred")
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
-def _lang_confusion_sql() -> str:
-    # SQL_LANG_ID carries exactly one row key (doc_id); re-keying the
-    # identical predictor CTE chain on `lang` yields the matrix twin.
-    inner = SQL_LANG_ID.replace("doc_id", "lang")
-    return (
-        f"SELECT lang, lang_pred, COUNT(*) AS n_docs FROM ({inner}) "
-        "GROUP BY lang, lang_pred"
-    )
+# Pipeline-health report composed from the already-verified signal
+# machinery: per-source PII prevalence by rule.
 
 
 def q_pii_prevalence(spark, sf_dir):
@@ -2452,81 +2390,6 @@ def _pii_prevalence_sql() -> str:
         f"CAST(SUM(CASE WHEN {tot} > 0 THEN 1 ELSE 0 END) AS BIGINT) "
         f"AS n_docs_with_pii FROM c GROUP BY source"
     )
-
-
-def q_calibration_curve(spark, sf_dir):
-    # Score-calibration deciles over the FULL score_core expression tree:
-    # per decile of the weighted score, how many docs and what fraction
-    # the keep rule actually keeps — the threshold-tuning curve a
-    # quality-filter rollout reads. floor(score·10) is the same IEEE op
-    # sequence in both engines, so even bucket boundaries are portable.
-    sc = q_score_core(spark, sf_dir)
-    return (
-        sc.groupBy(
-            F.floor(F.col("score") * 10).cast("int").alias("score_decile")
-        )
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("keep").cast("long").alias("n_keep"),
-        )
-        .withColumn(
-            "keep_rate",
-            F.round(F.col("n_keep").cast("double") / F.col("n_docs").cast("double"), 9),
-        )
-    )
-
-
-def _calibration_curve_sql() -> str:
-    return (
-        f"WITH sc AS ({_sql_score_core()}) "
-        "SELECT CAST(floor(score * 10) AS INT) AS score_decile, "
-        "COUNT(*) AS n_docs, CAST(SUM(keep) AS BIGINT) AS n_keep, "
-        "round(CAST(SUM(keep) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9) "
-        "AS keep_rate FROM sc GROUP BY 1"
-    )
-
-
-# ------------------------------------------------------------ round-5 batch 10
-# The cross-source near-dup contamination matrix composed from the
-# verified LSH pair machinery.
-
-
-def q_dup_cross_source(spark, sf_dir):
-    # Cross-source contamination matrix: verified near-dup pairs
-    # (MinHash-LSH candidates → exact Jaccard ≥ 0.5, the oracle-green
-    # dedup_ngram_jaccard machinery) rolled up to (source, source) —
-    # "how much of dataset A is near-copied in dataset B", the report
-    # that decides which source to drop before mixing. Pair sides fetch
-    # their source by doc_id-keyed joins (linear in verified pairs);
-    # (least, greatest) folds the symmetric matrix deterministically.
-    from ..operators.dedup import ngram_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(d, threshold=0.5).select("a", "b")
-    sa = d.select(F.col("doc_id").alias("a"), F.col("source").alias("_sa"))
-    sb = d.select(F.col("doc_id").alias("b"), F.col("source").alias("_sb"))
-    return (
-        pairs.join(sa, "a").join(sb, "b")
-        .select(
-            F.least("_sa", "_sb").alias("source_a"),
-            F.greatest("_sa", "_sb").alias("source_b"),
-        )
-        .groupBy("source_a", "source_b")
-        .agg(F.count("*").alias("n_pairs"))
-    )
-
-
-def _dup_cross_source_sql() -> str:
-    return f"""
-WITH pairs AS ({SQL_DEDUP_NGRAM_JACCARD})
-SELECT least(da.source, db.source) AS source_a,
-       greatest(da.source, db.source) AS source_b,
-       COUNT(*) AS n_pairs
-FROM pairs p
-JOIN documents da ON da.doc_id = p.a
-JOIN documents db ON db.doc_id = p.b
-GROUP BY 1, 2
-"""
 
 
 # ------------------------------------------------------------ round-5 batch 11
@@ -2606,43 +2469,6 @@ SELECT d.doc_id,
        coalesce(a.n_spans_kept, 0) AS n_spans_kept,
        coalesce(a.text_clean, '') AS text_clean
 FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
-
-
-def q_term_df_scrub(spark, sf_dir):
-    # Induced-stoplist scrub (see operators/curation.py:term_df_scrub):
-    # tokens present in > 30% of documents are corpus boilerplate and
-    # are removed from every doc. 0.3 sits inside the fixture's Zipf
-    # spread so both the hot set and the kept set are non-trivial.
-    from ..operators.curation import term_df_scrub
-
-    return term_df_scrub(_t(spark, sf_dir, "documents"), max_df_frac=0.3)
-
-
-SQL_TERM_DF_SCRUB = f"""
-WITH words AS (
-  SELECT doc_id, {_WORDS_WS_SQL} AS ws FROM documents),
-tok AS (
-  SELECT doc_id, ws, unnest(range(len(ws))) AS pos FROM words),
-tok2 AS (
-  SELECT doc_id, CAST(pos AS INT) AS pos, ws[pos + 1] AS term FROM tok),
-df AS (
-  SELECT term, COUNT(DISTINCT doc_id) AS df FROM tok2 GROUP BY 1),
-tot AS (SELECT COUNT(*) AS n FROM documents),
-hot AS (SELECT term FROM df, tot WHERE CAST(df AS DOUBLE) > 0.3 * CAST(n AS DOUBLE)),
-kept AS (
-  SELECT t.doc_id, t.pos, t.term FROM tok2 t
-  ANTI JOIN hot h ON t.term = h.term),
-agg AS (
-  SELECT doc_id,
-         COUNT(*) AS n_tokens_kept,
-         string_agg(term, ' ' ORDER BY pos) AS text_scrubbed
-  FROM kept GROUP BY doc_id)
-SELECT w.doc_id,
-       CAST(len(w.ws) AS BIGINT) AS n_tokens,
-       coalesce(a.n_tokens_kept, 0) AS n_tokens_kept,
-       coalesce(a.text_scrubbed, '') AS text_scrubbed
-FROM words w LEFT JOIN agg a USING (doc_id)
 """
 
 
@@ -2764,51 +2590,6 @@ WHERE host NOT IN (SELECT host FROM blocked)
 """
 
 
-def q_host_quota_sample(spark, sf_dir):
-    """Per-host proportional downsampling
-    (operators/curation.py:host_quota_sample): mega-hosts are thinned to
-    ~quota docs via a deterministic 60-bit hash test against the host's
-    doc count — integer cross-multiplication in DECIMAL(38,0), never a
-    float rate, so the keep set is bit-identical cross-engine and
-    cluster-size-invariant. One corpus shuffle at host grain; no Window
-    (a row_number quota would sort a mega-host in ONE task)."""
-    from ..operators.curation import host_of, host_quota_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://h"),
-        F.substring(
-            F.md5(F.concat(F.col("source"), F.lit(":"),
-                           (F.col("doc_id") % 8).cast("string"))), 1, 6),
-        F.lit(".example.com/"), F.col("doc_id").cast("string"),
-    )
-    pages = docs.withColumn("url", url)
-    # quota=2 so the hash-threshold branch (not just the small-host
-    # pass-through) is live at every fixture sf: sf0.01 has ~3 docs/host,
-    # sf0.1 ~31 — both above quota, so the oracle checks real thinning.
-    return host_quota_sample(pages, quota=2).select(
-        "doc_id", host_of("url").alias("host")
-    )
-
-
-SQL_HOST_QUOTA_SAMPLE = """
-WITH hosted AS (
-  SELECT doc_id,
-         lower(regexp_extract(
-           'https://h' || substr(md5(source || ':' || CAST(doc_id % 8 AS VARCHAR)), 1, 6)
-             || '.example.com/' || CAST(doc_id AS VARCHAR),
-           '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/@?#]*@)?([^/:?#]+)', 1)) AS host
-  FROM documents),
-counts AS (SELECT host, COUNT(*) AS n FROM hosted GROUP BY host)
-SELECT h.doc_id, h.host
-FROM hosted h JOIN counts c ON h.host = c.host
-WHERE c.n <= 2
-   OR CAST(CAST('0x' || substr(md5(CAST(h.doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS HUGEINT)
-        * c.n
-      < CAST(2 AS HUGEINT) * 1152921504606846976
-"""
-
-
 # DuckDB twin of operators/curation.py:canonical_url — the SAME RE2-safe
 # regexp chain (no lookarounds), backrefs spelled \\1 instead of $1 and
 # every replace flagged 'g' (Spark's regexp_replace is always global).
@@ -2924,98 +2705,6 @@ FROM (
 """
 
 
-def q_robots_filter(spark, sf_dir):
-    """Robots-style disallow filter (operators/curation.py:robots_filter):
-    pages whose host has a disallow rule AND whose path starts with the
-    rule prefix are dropped via a broadcast LEFT ANTI with the prefix
-    test in the join condition — the corpus never shuffles. Rules here:
-    each source's '…:0' host disallows paths starting '/1'."""
-    from ..operators.curation import host_of, robots_filter
-
-    docs = _t(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://h"),
-        F.substring(
-            F.md5(F.concat(F.col("source"), F.lit(":"),
-                           (F.col("doc_id") % 8).cast("string"))), 1, 6),
-        F.lit(".example.com/"), F.col("doc_id").cast("string"),
-    )
-    pages = docs.withColumn("url", url)
-    rules = (
-        docs.select(
-            F.concat(
-                F.lit("h"),
-                F.substring(F.md5(F.concat(F.col("source"), F.lit(":0"))), 1, 6),
-                F.lit(".example.com"),
-            ).alias("host")
-        )
-        .distinct()
-        .withColumn("path_prefix", F.lit("/1"))
-    )
-    return robots_filter(pages, rules).select(
-        "doc_id", host_of("url").alias("host")
-    )
-
-
-SQL_ROBOTS_FILTER = """
-WITH pages AS (
-  SELECT doc_id,
-         'h' || substr(md5(source || ':' || CAST(doc_id % 8 AS VARCHAR)), 1, 6)
-           || '.example.com' AS host,
-         '/' || CAST(doc_id AS VARCHAR) AS path
-  FROM documents),
-rules AS (
-  SELECT DISTINCT
-         'h' || substr(md5(source || ':0'), 1, 6) || '.example.com' AS host,
-         '/1' AS path_prefix
-  FROM documents)
-SELECT doc_id, host FROM pages p
-WHERE NOT EXISTS (SELECT 1 FROM rules r
-                  WHERE r.host = p.host AND starts_with(p.path, r.path_prefix))
-"""
-
-
-def q_mixture_apply(spark, sf_dir):
-    """Materialized uniform-mixture resample
-    (operators/curation.py:mixture_apply): each source is repeated to
-    its exact rational epoch factor — whole copies via integer DIV,
-    the fractional copy via a DECIMAL(38,0) hash cross-multiply — so
-    the resampled corpus is bit-identical across engines and cluster
-    sizes. Plan table broadcast; copies explode map-side."""
-    from ..operators.curation import mixture_apply
-
-    return mixture_apply(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "source", "copy_id"
-    )
-
-
-SQL_MIXTURE_APPLY = f"""
-WITH per AS (
-  SELECT source, SUM(len({_WORDS_WS_SQL})) AS tok
-  FROM documents GROUP BY source),
-pos AS (SELECT * FROM per WHERE tok > 0),
-tot AS (SELECT SUM(tok) AS t, COUNT(*) AS s FROM pos),
-plan AS (
-  SELECT source, s * tok AS den, t AS num
-  FROM pos, tot),
-j AS (
-  SELECT d.doc_id, d.source,
-         num // den AS whole, num % den AS rem, den
-  FROM documents d JOIN plan USING (source)),
-n AS (
-  SELECT doc_id, source,
-         whole + CASE WHEN
-           CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
-                                    || CAST(whole AS VARCHAR)), 1, 15) AS BIGINT)
-                AS HUGEINT) * den
-           < CAST(rem AS HUGEINT) * 1152921504606846976
-         THEN 1 ELSE 0 END AS n_copies
-  FROM j)
-SELECT doc_id, source, UNNEST(range(0, CAST(n_copies AS BIGINT))) AS copy_id
-FROM n WHERE n_copies > 0
-"""
-
-
 def q_normalize_punct(spark, sf_dir):
     """Web-text punctuation normalization
     (operators/curation.py:normalize_punct): four deterministic mess
@@ -3067,79 +2756,10 @@ def _sql_normalize_punct() -> str:
         "FROM messy\n"
     )
 
-def q_web_curation_e2e(spark, sf_dir):
-    """End-to-end crawl-curation composition: robots disallow filter →
-    per-host quota thinning → canonical exact dedup — the first three
-    rungs of a web-ingest pipeline CHAINED, oracle-checked as one plan
-    (composition is where subtle semantic drift hides; each stage is
-    also individually oracle-paired). Every stage keeps its scale
-    shape: broadcast anti, host-grain hash thinning, md5-key dedup."""
-    from ..operators.curation import host_of, host_quota_sample, robots_filter
-    from ..operators.dedup import canonical_dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    url = F.concat(
-        F.lit("https://h"),
-        F.substring(
-            F.md5(F.concat(F.col("source"), F.lit(":"),
-                           (F.col("doc_id") % 8).cast("string"))), 1, 6),
-        F.lit(".example.com/"), F.col("doc_id").cast("string"),
-    )
-    pages = docs.withColumn("url", url)
-    rules = (
-        docs.select(
-            F.concat(
-                F.lit("h"),
-                F.substring(F.md5(F.concat(F.col("source"), F.lit(":0"))), 1, 6),
-                F.lit(".example.com"),
-            ).alias("host")
-        )
-        .distinct()
-        .withColumn("path_prefix", F.lit("/1"))
-    )
-    allowed = robots_filter(pages, rules)
-    thinned = host_quota_sample(allowed, quota=2)
-    kept = canonical_dedup(thinned)
-    return kept.select("doc_id", host_of("url").alias("host"))
-
-
-SQL_WEB_CURATION_E2E = f"""
-WITH pages AS (
-  SELECT doc_id, text,
-         'h' || substr(md5(source || ':' || CAST(doc_id % 8 AS VARCHAR)), 1, 6)
-           || '.example.com' AS host,
-         '/' || CAST(doc_id AS VARCHAR) AS path
-  FROM documents),
-rules AS (
-  SELECT DISTINCT
-         'h' || substr(md5(source || ':0'), 1, 6) || '.example.com' AS host,
-         '/1' AS path_prefix
-  FROM documents),
-allowed AS (
-  SELECT * FROM pages p
-  WHERE NOT EXISTS (SELECT 1 FROM rules r
-                    WHERE r.host = p.host AND starts_with(p.path, r.path_prefix))),
-counts AS (SELECT host, COUNT(*) AS n FROM allowed GROUP BY host),
-thinned AS (
-  SELECT a.* FROM allowed a JOIN counts c ON a.host = c.host
-  WHERE c.n <= 2
-     OR CAST(CAST('0x' || substr(md5(CAST(a.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-             AS HUGEINT) * c.n
-        < CAST(2 AS HUGEINT) * 1152921504606846976),
-keyed AS (
-  SELECT doc_id, host,
-         md5(trim(regexp_replace(lower(coalesce(text, '')),
-                                 '{_WS_CLASS_SQL}+', ' ', 'g'))) AS k
-  FROM thinned),
-reps AS (SELECT k, min(doc_id) AS doc_id FROM keyed GROUP BY k)
-SELECT keyed.doc_id, keyed.host FROM keyed JOIN reps USING (k, doc_id)
-"""
-
 
 # ------------------------------------------------------------ round-5 batch 15
-# Distribution-shape and graph-structure health signals: Zipf
-# rank-frequency fit, Flesch readability, two-sample KS drift,
-# degree-ordered triangle census, and asymmetric-containment quote
+# Distribution-shape health signals: Zipf rank-frequency fit, Flesch
+# readability, two-sample KS drift, and asymmetric-containment quote
 # detection over LSH candidates.
 
 
@@ -3260,60 +2880,6 @@ SELECT g AS source, n_in, _N - n_in AS n_rest,
            END) AS ks_stat
 FROM st2 CROSS JOIN n
 GROUP BY 1, 2, 3
-"""
-
-
-def _link_edges(spark, sf_dir):
-    """Deterministic 3-out-link graph over the documents table: doc i
-    links to (13i + 101k) mod 499 for k ∈ {1,2,3}. Targets need not be
-    document ids — graph nodes are the src∪dst union, exactly like a
-    crawl frontier where most link targets are not yet fetched."""
-    d = _t(spark, sf_dir, "documents").select(F.col("doc_id").alias("src"))
-    k = F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("k")
-    return d.select("src", k).select(
-        "src", F.pmod(F.col("src") * 13 + F.col("k") * 101, F.lit(499)).alias("dst")
-    )
-
-
-_SQL_LINK_EDGES = """
-  SELECT doc_id AS src, (doc_id * 13 + k * 101) % 499 AS dst
-  FROM documents, UNNEST([1, 2, 3]) AS t(k)
-"""
-
-
-def q_triangle_census(spark, sf_dir):
-    """Degree-ordered triangle census over the synthesized link graph
-    (operators/graph.py:triangle_census) — the link-farm clique signal.
-    Orientation bounds every out-neighborhood at O(√m), so the wedge
-    join's output is O(m^1.5) even with celebrity nodes; three
-    equi-keyed shuffles, integer counts, no windows."""
-    from ..operators.graph import triangle_census
-
-    return triangle_census(_link_edges(spark, sf_dir))
-
-
-SQL_TRIANGLE_CENSUS = f"""
-WITH e0 AS ({_SQL_LINK_EDGES}),
-e AS (
-  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-  FROM e0 WHERE src <> dst
-),
-deg AS (
-  SELECT node, COUNT(*) AS deg
-  FROM (SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e)
-  GROUP BY 1
-),
-o AS (
-  SELECT CASE WHEN (du.deg, e.u) < (dv.deg, e.v) THEN e.u ELSE e.v END AS a,
-         CASE WHEN (du.deg, e.u) < (dv.deg, e.v) THEN e.v ELSE e.u END AS b
-  FROM e JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v
-),
-w AS (SELECT o1.a AS wa, o2.b AS wc FROM o o1 JOIN o o2 ON o1.b = o2.a),
-t AS (SELECT COUNT(*) AS n_triangles FROM w JOIN o ON w.wa = o.a AND w.wc = o.b)
-SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
-       (SELECT COUNT(*) FROM e) AS n_edges,
-       n_triangles
-FROM t
 """
 
 
@@ -3606,35 +3172,6 @@ GROUP BY 1, 2
 """
 
 
-def q_dedup_provenance(spark, sf_dir):
-    """Per-doc dedup provenance dashboard: which of the four content
-    families (exact / word-set / MinHash / SimHash) keeps each doc, and
-    how many drop it (operators/dedup.py:dedup_provenance) —
-    diagnostics-grade (executes all four pipelines; run on a shard at
-    100 TB, which is how such dashboards are used)."""
-    from ..operators.dedup import dedup_provenance
-
-    return dedup_provenance(_t(spark, sf_dir, "documents"))
-
-
-def _sql_dedup_provenance() -> str:
-    return f"""
-WITH flags AS (
-  SELECT d.doc_id,
-    d.doc_id IN (SELECT doc_id FROM ({SQL_DEDUP_EXACT}) t1) AS kept_exact,
-    d.doc_id IN (SELECT doc_id FROM ({SQL_DEDUP_WORDSET}) t2) AS kept_wordset,
-    d.doc_id IN (SELECT doc_id FROM ({SQL_DEDUP_MINHASH_FULL}) t3) AS kept_minhash,
-    d.doc_id IN (SELECT doc_id FROM ({_sql_dedup_simhash()}) t4) AS kept_simhash
-  FROM documents d
-)
-SELECT doc_id, kept_exact, kept_wordset, kept_minhash, kept_simhash,
-       4 - (CAST(kept_exact AS INT) + CAST(kept_wordset AS INT)
-            + CAST(kept_minhash AS INT) + CAST(kept_simhash AS INT))
-         AS n_families_dropped
-FROM flags
-"""
-
-
 def q_stream_gopher_score(spark, sf_dir):
     """The quality-filter heuristics running UNDER STRUCTURED STREAMING:
     the documents table is staged as 4 parquet files, streamed with
@@ -3735,47 +3272,6 @@ SELECT lang, COUNT(*) AS n_docs, SUM(keep) AS n_keep,
        round(CAST(SUM(CAST(score AS DECIMAL(20,6))) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE), 6) AS mean_score
 FROM j GROUP BY 1
-"""
-
-
-def q_snapshot_diff(spark, sf_dir):
-    """Crawl snapshot diff (operators/curation.py:snapshot_diff):
-    snapshot A = doc_id < 400 of documents; snapshot B = doc_id ≥ 100
-    with every doc_id ≡ 0 mod 5 're-crawled changed' (text suffixed).
-    One full-outer join on md5'd content — text never shuffles; the
-    per-key status feeds the resume stage so only added ∪ changed
-    re-score."""
-    from ..operators.curation import snapshot_diff
-
-    d = _t(spark, sf_dir, "documents")
-    old = d.filter(F.col("doc_id") < 400)
-    new = d.filter(F.col("doc_id") >= 100).select(
-        "doc_id",
-        F.when(F.pmod(F.col("doc_id"), F.lit(5)) == 0,
-               F.concat(F.coalesce(F.col("text"), F.lit("")), F.lit(" [rev2]")))
-        .otherwise(F.col("text")).alias("text"),
-    )
-    return snapshot_diff(old, new, key_col="doc_id")
-
-
-SQL_SNAPSHOT_DIFF = """
-WITH o AS (
-  SELECT doc_id AS k, md5(coalesce(text, '')) AS ho
-  FROM documents WHERE doc_id < 400
-),
-n AS (
-  SELECT doc_id AS k,
-         md5(CASE WHEN doc_id % 5 = 0
-                  THEN coalesce(text, '') || ' [rev2]'
-                  ELSE coalesce(text, '') END) AS hn
-  FROM documents WHERE doc_id >= 100
-)
-SELECT coalesce(o.k, n.k) AS doc_id,
-       CASE WHEN o.k IS NULL THEN 'added'
-            WHEN n.k IS NULL THEN 'removed'
-            WHEN ho <> hn THEN 'changed'
-            ELSE 'unchanged' END AS status
-FROM o FULL OUTER JOIN n ON o.k = n.k
 """
 
 
@@ -3893,85 +3389,6 @@ ranked AS (
 )
 SELECT doc_id, lang, source, n_chars FROM ranked WHERE rn = 1
 """
-
-
-def q_incremental_curation_e2e(spark, sf_dir):
-    """Round-5 capstone CHAIN, oracle-checked as ONE plan (composition
-    is where semantic drift hides — web_curation_e2e's discipline):
-    snapshot_diff picks the added ∪ changed docs of an incremental
-    crawl, ONLY those pass the Gopher keep rule, and survivors collapse
-    via quality-aware exact dedup (best = longest copy). Each stage is
-    individually oracle-paired (snapshot_diff, stream_gopher_score's
-    rule, dedup_exact_best); the chain proves they compose. Scale
-    shapes are preserved: md5 diff join, map-only heuristics,
-    struct-max dedup — no windows over raw docs anywhere."""
-    from ..functions.heuristics import heuristic_columns
-    from ..operators.curation import snapshot_diff
-    from ..operators.dedup import exact_dedup_best
-
-    d = _t(spark, sf_dir, "documents")
-    old = d.filter(F.col("doc_id") < 400)
-    new = d.filter(F.col("doc_id") >= 100).select(
-        "doc_id",
-        F.when(F.pmod(F.col("doc_id"), F.lit(5)) == 0,
-               F.concat(F.coalesce(F.col("text"), F.lit("")), F.lit(" [rev2]")))
-        .otherwise(F.coalesce(F.col("text"), F.lit(""))).alias("text"),
-    )
-    todo = (
-        snapshot_diff(old, new, key_col="doc_id")
-        .filter(F.col("status").isin("added", "changed"))
-        .select("doc_id")
-    )
-    work = new.join(todo, "doc_id", "left_semi")
-    h = heuristic_columns("text")
-    kept = work.select(
-        "doc_id", "text",
-        h["n_words"].cast("long").alias("_w"),
-        F.round(h["symbol_ratio"], 9).alias("_sym"),
-        F.round(h["dup_line_frac"], 9).alias("_dlf"),
-    ).filter(
-        (F.col("_sym") <= 0.1) & (F.col("_w") >= 5) & (F.col("_dlf") <= 0.3)
-    ).select("doc_id", "text", F.octet_length("text").alias("_nb"))
-    return exact_dedup_best(kept, score_col="_nb").select(
-        "doc_id", F.col("_nb").alias("n_bytes_clean")
-    )
-
-
-def _sql_incremental_curation() -> str:
-    gopher2 = SQL_GOPHER_STATS.replace("FROM documents", "FROM docs2")
-    assert "docs2" in gopher2 and "FROM documents" not in gopher2
-    return f"""
-WITH docs2 AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 5 = 0 THEN coalesce(text, '') || ' [rev2]'
-              ELSE coalesce(text, '') END AS text
-  FROM documents WHERE doc_id >= 100
-),
-o AS (
-  SELECT doc_id AS k, md5(coalesce(text, '')) AS ho
-  FROM documents WHERE doc_id < 400
-),
-nn AS (SELECT doc_id AS k, md5(text) AS hn FROM docs2),
-todo AS (
-  SELECT nn.k AS doc_id FROM nn LEFT JOIN o ON o.k = nn.k
-  WHERE o.k IS NULL OR o.ho <> nn.hn
-),
-g AS ({gopher2}),
-kept AS (
-  SELECT g.doc_id, d2.text, strlen(d2.text) AS nb
-  FROM g JOIN todo ON todo.doc_id = g.doc_id
-  JOIN docs2 d2 ON d2.doc_id = g.doc_id
-  WHERE round(g.symbol_ratio, 9) <= 0.1 AND g.n_words >= 5
-    AND round(g.dup_line_frac, 9) <= 0.3
-),
-ranked AS (
-  SELECT doc_id, nb,
-         row_number() OVER (PARTITION BY md5(text) ORDER BY nb DESC, doc_id) AS rn
-  FROM kept
-)
-SELECT doc_id, nb AS n_bytes_clean FROM ranked WHERE rn = 1
-"""
-
 
 
 # ------------------------------------------------------------ round-5 batch 37
@@ -4130,159 +3547,9 @@ FROM agg
 """
 
 
-
-# ------------------------------------------------------------ round-5 batch 39
-# Streaming HLL (register state under a real micro-batch stream) and
-# SCD2 content-history intervals.
-
-
-def q_stream_hll(spark, sf_dir):
-    """The HyperLogLog register table as STREAMING STATE: the corpus
-    term stream runs through a real 4-micro-batch file stream, the
-    (idx, max(rho)) aggregation is the stream's complete-mode state
-    (256 rows — the canonical streaming-sketch story), and the finisher
-    (operators/sketches.py:hll_estimate_from_registers) turns the final
-    register table into the estimate. The oracle is the batch SQL: max()
-    is batch-order-insensitive, so streaming registers MUST equal batch
-    registers bit-for-bit — the sketch mergeability guarantee run under
-    the real streaming engine, not asserted. Staging/naming discipline
-    mirrors q_stream_gopher_score."""
-    from ..functions.tokenize import WS_PLUS
-    from ..operators.sketches import hll_estimate_from_registers, hll_registers
-
-    batch = _t(spark, sf_dir, "documents")
-    stage = "/tmp/xdan_stream_docs_" + sf_dir.strip("/").replace("/", "_")
-    spec = {"sf_dir": sf_dir, "rows": batch.count(), "n_files": 4}
-    marker = os.path.join(stage, "_SPEC.json")
-    _stage_with_spec(
-        marker, spec,
-        lambda: batch.repartition(4).write.mode("overwrite")
-        .parquet(f"{stage}/documents"),
-    )
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{stage}/documents")
-    )
-    terms = src.select(
-        F.explode(
-            F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda w: F.length(w) > 0)
-        ).alias("v")
-    )
-    regs = hll_registers(terms, "v")
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    name = f"stream_hll_{key}_{next(_STREAM_QUERY_SEQ)}"
-    q = (
-        regs.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    local_regs = spark.createDataFrame(out.collect(), schema=out.schema)
-    spark.catalog.dropTempView(name)
-    return hll_estimate_from_registers(local_regs)
-
-
-SQL_STREAM_HLL = f"""
-WITH terms AS (SELECT unnest({_WORDS_WS_SQL}) AS v FROM documents),
-h AS (
-  SELECT CAST('0x' || substr(md5('hl:' || v), 1, 8) AS BIGINT) AS hl,
-         CAST('0x' || substr(md5('hh:' || v), 1, 8) AS BIGINT) AS hh
-  FROM terms
-),
-r AS (SELECT hl & 255 AS idx, (hl >> 8) * 4294967296 + hh AS w FROM h),
-regs AS (
-  SELECT idx,
-         MAX(CASE WHEN w = 0 THEN 57 ELSE 57 - length(bin(w)) END) AS rho
-  FROM r GROUP BY idx
-),
-s AS (
-  SELECT COUNT(*) AS n_present,
-         SUM(CAST((CAST(1 AS BIGINT) << CAST(57 - rho AS INT)) AS DECIMAL(38,0))) AS s_present
-  FROM regs
-),
-t AS (
-  SELECT 256 AS m,
-         256 - n_present AS n_zero_registers,
-         s_present + CAST(256 - n_present AS DECIMAL(38,0))
-                     * CAST(144115188075855872 AS DECIMAL(38,0)) AS s_total
-  FROM s
-),
-est AS (
-  SELECT m, n_zero_registers, {_HLL_RAW_NUM} / CAST(s_total AS DOUBLE) AS raw
-  FROM t
-)
-SELECT m, n_zero_registers,
-       round(CASE WHEN raw <= 640.0 AND n_zero_registers > 0
-                  THEN 256.0 * ln(256.0 / CAST(n_zero_registers AS DOUBLE))
-                  ELSE raw END, 4) AS hll_estimate
-FROM est
-"""
-
-
-def q_scd2_pages(spark, sf_dir):
-    """SCD2 content-history intervals over a synthesized crawl log
-    (operators/curation.py:scd2_intervals): 50 logical pages, ~10
-    crawls each at sf0.01, content version changing every 3rd crawl AND cycling
-    back (A->B->C->A) so re-appearing content provably opens a NEW
-    interval. The content-history table an incremental crawl keeps next
-    to snapshot_diff; timestamps emitted as epoch-us."""
-    from ..operators.curation import scd2_intervals
-
-    docs = _t(spark, sf_dir, "documents")
-    page = F.concat(F.lit("p"), (F.col("doc_id") % 50).cast("string"))
-    ts = F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id") * 37)
-    ver = F.expr("(doc_id DIV 150) % 3").cast("string")
-    crawls = docs.select(
-        page.alias("page"),
-        ts.alias("crawl_ts"),
-        F.md5(F.concat(page, F.lit(":"), ver)).alias("content_hash"),
-    )
-    out = scd2_intervals(crawls, "page", "crawl_ts", "content_hash")
-    return out.select(
-        "page", "content_hash",
-        F.unix_micros(F.col("valid_from")).alias("valid_from_us"),
-        F.unix_micros(F.col("valid_to")).alias("valid_to_us"),
-        "is_current",
-    )
-
-
-SQL_SCD2_PAGES = """
-WITH crawls AS (
-  SELECT 'p' || CAST(doc_id % 50 AS VARCHAR) AS page,
-         to_timestamp(1700000000 + doc_id * 37) AS crawl_ts,
-         md5('p' || CAST(doc_id % 50 AS VARCHAR) || ':'
-             || CAST((doc_id // 150) % 3 AS VARCHAR)) AS content_hash
-  FROM documents
-),
-flagged AS (
-  SELECT page, crawl_ts, content_hash,
-         lag(content_hash) OVER (PARTITION BY page
-                                 ORDER BY crawl_ts, content_hash) AS prev
-  FROM crawls
-),
-chg AS (
-  SELECT page, content_hash, crawl_ts AS vf
-  FROM flagged WHERE prev IS NULL OR prev <> content_hash
-),
-iv AS (
-  SELECT page, content_hash, vf,
-         lead(vf) OVER (PARTITION BY page ORDER BY vf, content_hash) AS vt
-  FROM chg
-)
-SELECT page, content_hash,
-       epoch_us(vf) AS valid_from_us,
-       epoch_us(vt) AS valid_to_us,
-       vt IS NULL AS is_current
-FROM iv
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 40
-# Exact-k weighted sampling, grouped HLL, mutual information, and
-# pairwise FD discovery.
+# Exact-k weighted sampling, mutual information, and pairwise FD
+# discovery.
 
 
 def q_wrs_sample(spark, sf_dir):
@@ -4312,74 +3579,6 @@ WITH s AS (
 )
 SELECT doc_id, n_chars, wrs_key FROM s
 ORDER BY wrs_key DESC, doc_id LIMIT 100
-"""
-
-
-def q_hll_by_source(spark, sf_dir):
-    """GROUPED HyperLogLog: per-source vocabulary estimate next to the
-    exact distinct (operators/sketches.py:hll_estimate_by) — one
-    256-row register table per source, merging across shards with
-    max(); identical constants/op order to the global sketch."""
-    from ..functions.tokenize import WS_PLUS
-    from ..operators.sketches import hll_estimate_by
-
-    docs = _t(spark, sf_dir, "documents")
-    terms = docs.select(
-        "source",
-        F.explode(
-            F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda w: F.length(w) > 0)
-        ).alias("v"),
-    )
-    return hll_estimate_by(terms, "v", "source")
-
-
-SQL_HLL_BY_SOURCE = f"""
-WITH terms AS (
-  SELECT source, unnest({_WORDS_WS_SQL}) AS v FROM documents
-),
-h AS (
-  SELECT source,
-         CAST('0x' || substr(md5('hl:' || v), 1, 8) AS BIGINT) AS hl,
-         CAST('0x' || substr(md5('hh:' || v), 1, 8) AS BIGINT) AS hh
-  FROM terms
-),
-r AS (SELECT source, hl & 255 AS idx, (hl >> 8) * 4294967296 + hh AS w FROM h),
-regs AS (
-  SELECT source, idx,
-         MAX(CASE WHEN w = 0 THEN 57 ELSE 57 - length(bin(w)) END) AS rho
-  FROM r GROUP BY 1, 2
-),
-s AS (
-  SELECT source, COUNT(*) AS n_present,
-         SUM(CAST((CAST(1 AS BIGINT) << CAST(57 - rho AS INT)) AS DECIMAL(38,0))) AS s_present
-  FROM regs GROUP BY 1
-),
-e AS (SELECT source, COUNT(DISTINCT v) AS exact_distinct FROM terms GROUP BY 1),
-t AS (
-  SELECT s.source, 256 AS m, 256 - n_present AS n_zero_registers,
-         s_present + CAST(256 - n_present AS DECIMAL(38,0))
-                     * CAST(144115188075855872 AS DECIMAL(38,0)) AS s_total,
-         exact_distinct
-  FROM s JOIN e ON s.source = e.source
-),
-est AS (
-  SELECT source, m, n_zero_registers, exact_distinct,
-         {_HLL_RAW_NUM} / CAST(s_total AS DOUBLE) AS raw
-  FROM t
-),
-fin AS (
-  SELECT source, m, n_zero_registers, exact_distinct,
-         CASE WHEN raw <= 640.0 AND n_zero_registers > 0
-              THEN 256.0 * ln(256.0 / CAST(n_zero_registers AS DOUBLE))
-              ELSE raw END AS est
-  FROM est
-)
-SELECT source, m, n_zero_registers, round(est, 4) AS hll_estimate,
-       exact_distinct,
-       round((round(est, 4) - CAST(exact_distinct AS DOUBLE))
-             / CAST(exact_distinct AS DOUBLE), 6) AS rel_error
-FROM fin
 """
 
 
@@ -4526,97 +3725,6 @@ FROM classes
 """
 
 
-def q_prefix_jaccard_pairs(spark, sf_dir):
-    """EXACT token-set similarity join at Jaccard >= 9/10 via prefix
-    filtering (operators/dedup.py:prefix_filter_pairs, the PPJoin
-    family) — guaranteed recall 1.0, the exact complement to
-    MinHash-LSH; all-integer verify with a rational boundary.
-
-    Scoped to a deterministic 1-in-5 shard: pair ENUMERATION over a
-    near-dup-dense corpus has quadratic TRUE output by definition (this
-    synthetic template corpus holds ~965k genuine pairs at tau = 0.9 at
-    sf0.1 — measured in both engines), so the enumeration form is a
-    shard-level diagnostic; the production path consumes CLUSTERS via
-    cc_dedup/minhash_dedup, which collapse without enumerating."""
-    from ..operators.dedup import prefix_filter_pairs
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    return prefix_filter_pairs(docs, threshold_num=9, threshold_den=10)
-
-
-SQL_PREFIX_JACCARD_PAIRS = f"""
-WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
-tok AS (
-  SELECT doc_id, unnest(list_distinct({_WORDS_WS_SQL})) AS term FROM base
-),
-vocab AS (SELECT term, COUNT(*) AS dfq FROM tok GROUP BY 1),
-ranks AS (
-  SELECT term, row_number() OVER (ORDER BY dfq, term) AS grank FROM vocab
-),
-sizes AS (SELECT doc_id, COUNT(*) AS s FROM tok GROUP BY 1),
-pref AS (
-  SELECT doc_id, term, s FROM (
-    SELECT t.doc_id, t.term, z.s,
-           row_number() OVER (PARTITION BY t.doc_id ORDER BY r.grank) AS dr
-    FROM tok t JOIN ranks r ON t.term = r.term JOIN sizes z ON t.doc_id = z.doc_id
-  ) WHERE dr <= s - (9 * s + 9) // 10 + 1
-),
-cand AS (
-  SELECT DISTINCT pa.doc_id AS a, pb.doc_id AS b
-  FROM pref pa JOIN pref pb ON pa.term = pb.term AND pa.doc_id < pb.doc_id
-   AND pb.s * 10 >= pa.s * 9 AND pa.s * 10 >= pb.s * 9
-),
-shared AS (
-  SELECT c.a, c.b, COUNT(*) AS n_shared
-  FROM cand c JOIN tok ta ON ta.doc_id = c.a
-  JOIN tok tb ON tb.doc_id = c.b AND tb.term = ta.term
-  GROUP BY 1, 2
-)
-SELECT s.a, s.b, s.n_shared,
-       round(CAST(s.n_shared AS DOUBLE)
-             / CAST(za.s + zb.s - s.n_shared AS DOUBLE), 6) AS jaccard
-FROM shared s JOIN sizes za ON za.doc_id = s.a JOIN sizes zb ON zb.doc_id = s.b
-WHERE s.n_shared * 10 >= 9 * (za.s + zb.s - s.n_shared)
-"""
-
-
-# ------------------------------------------------------------ round-5 batch 43
-# Source-profile cosine map.
-
-
-def q_source_cosine(spark, sf_dir):
-    """Pairwise unigram-profile cosine between sources
-    (operators/textstats.py:source_similarity_matrix) — the corpus map
-    that catches mirror/syndication source pairs before a mixing stage
-    upweights both; exact DECIMAL dot/norm sums, one terminal IEEE
-    expression per pair."""
-    from ..operators.textstats import source_similarity_matrix
-
-    return source_similarity_matrix(_t(spark, sf_dir, "documents"))
-
-
-SQL_SOURCE_COSINE = f"""
-WITH ex AS (SELECT source AS src, unnest({_WORDS_WS_SQL}) AS term FROM documents),
-tc AS (SELECT src, term, COUNT(*) AS c FROM ex GROUP BY 1, 2),
-norms AS (
-  SELECT src,
-         SUM(CAST(c AS DECIMAL(19,0)) * CAST(c AS DECIMAL(18,0))) AS n2
-  FROM tc GROUP BY 1
-),
-crossed AS (
-  SELECT ta.src AS a, tb.src AS b, COUNT(*) AS n_shared_terms,
-         SUM(CAST(ta.c AS DECIMAL(19,0)) * CAST(tb.c AS DECIMAL(18,0))) AS dot
-  FROM tc ta JOIN tc tb ON ta.term = tb.term AND ta.src < tb.src
-  GROUP BY 1, 2
-)
-SELECT a, b, n_shared_terms,
-       round(CAST(dot AS DOUBLE)
-             / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))),
-             6) AS cosine
-FROM crossed JOIN norms na ON a = na.src JOIN norms nb ON b = nb.src
-"""
-
-
 # ------------------------------------------------------------ round-5 batch 44
 # Homoglyph spoof census and Neyman-optimal sample allocation.
 
@@ -4698,8 +3806,7 @@ FROM w CROSS JOIN tot
 
 
 # ------------------------------------------------------------ round-5 batch 45
-# Data-contract gate, mergeable log-bucket quantile sketch, and
-# count-min as streaming state.
+# Data-contract gate.
 
 
 def q_contract_checks(spark, sf_dir):
@@ -4745,553 +3852,6 @@ SELECT rule, n_violations, n_violations = 0 AS passed FROM (
 """
 
 
-def q_log_quantile_sketch(spark, sf_dir):
-    """Mergeable power-of-two-bucket quantile sketch over doc lengths
-    (operators/sketches.py:log_histogram_quantiles) — <=64 counters,
-    cell-wise-sum mergeable, guaranteed 2x relative error; reported
-    next to the exact type-7 quantiles with the est/exact ratio."""
-    from ..operators.sketches import log_histogram_quantiles
-
-    return log_histogram_quantiles(
-        _t(spark, sf_dir, "documents"), "n_chars", (0.5, 0.9, 0.99)
-    )
-
-
-SQL_LOG_QUANTILE_SKETCH = """
-WITH pos AS (SELECT CAST(n_chars AS BIGINT) AS v FROM documents WHERE n_chars > 0),
-hist AS (SELECT length(bin(v)) AS b, COUNT(*) AS c FROM pos GROUP BY 1),
-staged AS (
-  SELECT b, c,
-         SUM(c) OVER (ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(c) OVER () AS n
-  FROM hist
-),
-qs AS (SELECT unnest([500, 900, 990]) AS num),
-est AS (
-  SELECT CAST(num AS DOUBLE) / 1000.0 AS quantile,
-         (SELECT CASE WHEN MIN(b) = 1 THEN 1.0
-                      ELSE 3.0 * power(2.0, MIN(b) - 2) END
-          FROM staged WHERE cum >= (num * n + 999) // 1000) AS est
-  FROM qs CROSS JOIN (SELECT DISTINCT n FROM staged)
-),
-vh AS (
-  SELECT v, c,
-         SUM(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(c) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - c AS cum_prev,
-         SUM(c) OVER () AS n
-  FROM (SELECT v, COUNT(*) AS c FROM pos GROUP BY 1)
-),
-ex AS (
-  SELECT CAST(q.num AS DOUBLE) / 1000.0 AS quantile,
-         (SELECT MIN(v) FROM vh
-          WHERE cum_prev < floor(CAST(q.num AS DOUBLE) / 1000.0
-                                 * CAST(t.n - 1 AS DOUBLE)) + 1
-            AND cum >= floor(CAST(q.num AS DOUBLE) / 1000.0
-                             * CAST(t.n - 1 AS DOUBLE)) + 1) AS lo,
-         (SELECT MIN(v) FROM vh
-          WHERE cum_prev < floor(CAST(q.num AS DOUBLE) / 1000.0
-                                 * CAST(t.n - 1 AS DOUBLE)) + 2
-            AND cum >= floor(CAST(q.num AS DOUBLE) / 1000.0
-                             * CAST(t.n - 1 AS DOUBLE)) + 2) AS hi,
-         CAST(q.num AS DOUBLE) / 1000.0 * CAST(t.n - 1 AS DOUBLE)
-           - floor(CAST(q.num AS DOUBLE) / 1000.0 * CAST(t.n - 1 AS DOUBLE)) AS f
-  FROM (SELECT unnest([500, 900, 990]) AS num) q
-  CROSS JOIN (SELECT DISTINCT n FROM vh) t
-),
-exact AS (
-  SELECT quantile,
-         CAST(lo AS DOUBLE) + f * CAST(coalesce(hi, lo) - lo AS DOUBLE) AS exact
-  FROM ex
-)
-SELECT e.quantile, round(e.est, 6) AS est, round(x.exact, 6) AS exact,
-       round(e.est / x.exact, 6) AS ratio
-FROM est e JOIN exact x ON e.quantile = x.quantile
-"""
-
-
-def q_stream_cms(spark, sf_dir):
-    """Count-min as STREAMING STATE: the term stream runs through the
-    4-micro-batch file stream with the (row_id, col_id) -> sum(cnt)
-    cells as complete-mode state (<= 4 096 rows), then the collected
-    sketch is probed for the top-10 true heavy hitters computed batch-
-    side — streaming cell sums MUST equal batch cell sums (sum is
-    batch-order-insensitive), the CMS mergeability twin of
-    q_stream_hll. Staging/naming mirrors q_stream_gopher_score."""
-    from ..functions.tokenize import WS_PLUS
-    from ..operators.sketches import CMS_D, CMS_WIDTH, _h32
-
-    batch = _t(spark, sf_dir, "documents")
-    stage = "/tmp/xdan_stream_docs_" + sf_dir.strip("/").replace("/", "_")
-    spec = {"sf_dir": sf_dir, "rows": batch.count(), "n_files": 4}
-    marker = os.path.join(stage, "_SPEC.json")
-    _stage_with_spec(
-        marker, spec,
-        lambda: batch.repartition(4).write.mode("overwrite")
-        .parquet(f"{stage}/documents"),
-    )
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{stage}/documents")
-    )
-    terms = src.select(
-        F.explode(
-            F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda w: F.length(w) > 0)
-        ).alias("v")
-    )
-    cells = F.array(*[
-        F.struct(
-            F.lit(d).alias("row_id"),
-            F.pmod(_h32(F.col("v"), d), F.lit(CMS_WIDTH)).alias("col_id"),
-        )
-        for d in range(CMS_D)
-    ])
-    sketch_stream = (
-        terms.select(F.explode(cells).alias("_c"))
-        .groupBy(F.col("_c.row_id").alias("row_id"),
-                 F.col("_c.col_id").alias("col_id"))
-        .agg(F.count("*").alias("cnt"))
-    )
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    name = f"stream_cms_{key}_{next(_STREAM_QUERY_SEQ)}"
-    q = (
-        sketch_stream.writeStream.outputMode("complete").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    sketch = spark.createDataFrame(out.collect(), schema=out.schema)
-    spark.catalog.dropTempView(name)
-
-    truth = batch.select(
-        F.explode(
-            F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda w: F.length(w) > 0)
-        ).alias("v")
-    ).groupBy(F.col("v").alias("value")).agg(F.count("*").alias("true_cnt"))
-    from pyspark.sql import Window as W
-
-    top = truth.withColumn(
-        "_rk",
-        F.row_number().over(W.orderBy(F.desc("true_cnt"), F.asc("value"))),
-    ).filter(F.col("_rk") <= 10).drop("_rk")
-    probes = top.select(
-        "value", "true_cnt",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(d).alias("row_id"),
-                F.pmod(_h32(F.col("value"), d), F.lit(CMS_WIDTH)).alias("col_id"),
-            )
-            for d in range(CMS_D)
-        ])).alias("_c"),
-    ).select("value", "true_cnt",
-             F.col("_c.row_id").alias("row_id"),
-             F.col("_c.col_id").alias("col_id"))
-    return (
-        probes.join(sketch, ["row_id", "col_id"])
-        .groupBy("value", "true_cnt")
-        .agg(F.min("cnt").alias("cms_estimate"))
-        .select("value", "true_cnt", "cms_estimate",
-                (F.col("cms_estimate") - F.col("true_cnt")).alias("overcount"))
-    )
-
-
-SQL_STREAM_CMS = f"""
-WITH terms AS (SELECT unnest({_WORDS_WS_SQL}) AS v FROM documents),
-ds AS (SELECT unnest([0, 1, 2, 3]) AS d),
-cells AS (
-  SELECT d AS row_id,
-         CAST('0x' || substr(md5(CAST(d AS VARCHAR) || ':' || v), 1, 8) AS BIGINT)
-         % 1024 AS col_id
-  FROM terms CROSS JOIN ds
-),
-sketch AS (SELECT row_id, col_id, COUNT(*) AS cnt FROM cells GROUP BY 1, 2),
-truth AS (SELECT v AS value, COUNT(*) AS true_cnt FROM terms GROUP BY 1),
-top AS (
-  SELECT value, true_cnt,
-         row_number() OVER (ORDER BY true_cnt DESC, value) AS rk
-  FROM truth QUALIFY rk <= 10
-),
-probes AS (
-  SELECT value, true_cnt, d AS row_id,
-         CAST('0x' || substr(md5(CAST(d AS VARCHAR) || ':' || value), 1, 8) AS BIGINT)
-         % 1024 AS col_id
-  FROM top CROSS JOIN ds
-),
-est AS (
-  SELECT value, true_cnt, MIN(cnt) AS cms_estimate
-  FROM probes JOIN sketch USING (row_id, col_id)
-  GROUP BY 1, 2
-)
-SELECT value, true_cnt, cms_estimate, cms_estimate - true_cnt AS overcount
-FROM est
-"""
-
-
-# ------------------------------------------------------------ round-5 batch 46
-# Rank-biased overlap and the vocabulary coverage curve.
-
-
-def q_rbo_source_rankings(spark, sf_dir):
-    """Rank-biased overlap between two source rankings — by document
-    count vs by token count (operators/metrics.py:rank_biased_overlap,
-    p=0.9, depth=20): the top-weighted ranking-drift score; if the two
-    orderings of the mixing table diverge, doc-count-based budgets and
-    token-count-based budgets disagree exactly where it matters."""
-    from ..functions.tokenize import WS_PLUS
-    from ..operators.metrics import rank_biased_overlap
-
-    d = _t(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda w: F.length(w) > 0)
-    per = d.groupBy("source").agg(
-        F.count("*").alias("nd"),
-        F.sum(F.size(words).cast("long")).alias("nt"),
-    )
-    wa = Window.orderBy(F.desc("nd"), F.asc("source"))
-    wb = Window.orderBy(F.desc("nt"), F.asc("source"))
-    ra = per.select("source", F.row_number().over(wa).alias("rank"))
-    rb = per.select("source", F.row_number().over(wb).alias("rank"))
-    return rank_biased_overlap(ra, rb, "source", p=0.9, depth=20)
-
-
-SQL_RBO_SOURCE_RANKINGS = f"""
-WITH per AS (
-  SELECT source, COUNT(*) AS nd,
-         SUM(CAST(len({_WORDS_WS_SQL}) AS BIGINT)) AS nt
-  FROM documents GROUP BY 1
-),
-ra AS (SELECT source, row_number() OVER (ORDER BY nd DESC, source) AS r FROM per),
-rb AS (SELECT source, row_number() OVER (ORDER BY nt DESC, source) AS r FROM per),
-shared AS (
-  SELECT greatest(ra.r, rb.r) AS m
-  FROM ra JOIN rb ON ra.source = rb.source
-  WHERE greatest(ra.r, rb.r) <= 20
-),
-grid AS (SELECT m, COUNT(*) AS c FROM shared GROUP BY 1),
-full_g AS (
-  SELECT d, coalesce(c, 0) AS c
-  FROM (SELECT unnest(generate_series(1, 20)) AS d)
-  LEFT JOIN grid ON d = m
-),
-overl AS (
-  SELECT d,
-         SUM(c) OVER (ORDER BY d
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ov
-  FROM full_g
-)
-SELECT 20 AS depth, 0.9 AS p,
-       round(0.09999999999999998 *
-             CAST(SUM(CAST(round(power(0.9, d - 1) * CAST(ov AS DOUBLE)
-                                 / CAST(d AS DOUBLE), 12)
-                      AS DECIMAL(24,12))) AS DOUBLE), 6) AS rbo
-FROM overl
-"""
-
-
-def q_vocab_coverage(spark, sf_dir):
-    """Token-mass coverage of the top-k vocabulary for k in
-    {100, 1000, 10000} (operators/textstats.py:vocab_coverage_curve) —
-    the tokenizer-budget curve (Zipf concavity) read before fixing a
-    vocab size or stoplist cutoff."""
-    from ..operators.textstats import vocab_coverage_curve
-
-    return vocab_coverage_curve(_t(spark, sf_dir, "documents"))
-
-
-SQL_VOCAB_COVERAGE = f"""
-WITH tc AS (
-  SELECT term, COUNT(*) AS c FROM (
-    SELECT unnest({_WORDS_WS_SQL}) AS term FROM documents
-  ) GROUP BY 1
-),
-ranked AS (
-  SELECT c, row_number() OVER (ORDER BY c DESC, term) AS rk FROM tc
-),
-wide AS (
-  SELECT COUNT(*) AS vocab_size, SUM(c) AS total_tokens,
-         SUM(CASE WHEN rk <= 100 THEN c ELSE 0 END) AS cov100,
-         SUM(CASE WHEN rk <= 1000 THEN c ELSE 0 END) AS cov1000,
-         SUM(CASE WHEN rk <= 10000 THEN c ELSE 0 END) AS cov10000
-  FROM ranked
-)
-SELECT k, vocab_size, covered_tokens, total_tokens,
-       round(CAST(covered_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE), 6)
-         AS coverage
-FROM (
-  SELECT 100 AS k, vocab_size, cov100 AS covered_tokens, total_tokens FROM wide
-  UNION ALL
-  SELECT 1000, vocab_size, cov1000, total_tokens FROM wide
-  UNION ALL
-  SELECT 10000, vocab_size, cov10000, total_tokens FROM wide
-)
-"""
-
-
-
-# ------------------------------------------------------------ round-5 batch 47
-# CDC changelog apply (MERGE semantics).
-
-
-def q_cdc_docs(spark, sf_dir):
-    """CDC changelog applied to the documents snapshot
-    (operators/resume.py:cdc_apply — MERGE INTO semantics): every 10th
-    doc carries TWO updates with conflicting sequence numbers (the
-    higher must win), every 10th+1 doc is deleted, every 100th spawns
-    an insert under a fresh key; the full merged table is emitted and
-    hash-checked. Winner-per-key is ONE struct-max fold (a hot key's
-    churn folds map-side), never a window."""
-    from ..operators.resume import cdc_apply
-
-    base = _t(spark, sf_dir, "documents")
-    pay = ["text", "lang", "source", "n_chars"]
-
-    def chg(filt, op, seq, text_expr, key_expr=None, n_chars_expr=None):
-        d = base.filter(filt)
-        return d.select(
-            (key_expr if key_expr is not None else F.col("doc_id")).alias("doc_id"),
-            F.lit(op).alias("op"),
-            F.lit(seq).alias("seq"),
-            text_expr.alias("text"),
-            F.col("lang"),
-            F.col("source"),
-            (n_chars_expr if n_chars_expr is not None
-             else F.col("n_chars")).alias("n_chars"),
-        )
-
-    u_old = chg(F.col("doc_id") % 10 == 0, "U", 1,
-                F.concat(F.lit("stale "), F.col("doc_id").cast("string")))
-    u_new = chg(F.col("doc_id") % 10 == 0, "U", 2,
-                F.concat(F.lit("updated "), F.col("doc_id").cast("string")))
-    dels = chg(F.col("doc_id") % 10 == 1, "D", 1, F.lit(""),
-               n_chars_expr=F.lit(0).cast("long"))
-    ins = chg(F.col("doc_id") % 100 == 0, "I", 1,
-              F.concat(F.lit("new "), F.col("doc_id").cast("string")),
-              key_expr=F.col("doc_id") + 1000000,
-              n_chars_expr=F.lit(4).cast("long"))
-    changelog = u_old.unionByName(u_new).unionByName(dels).unionByName(ins)
-    merged = cdc_apply(base.select("doc_id", *pay), changelog, "doc_id", "seq")
-    return merged.select("doc_id", "text", "lang", "source", "n_chars")
-
-
-SQL_CDC_DOCS = """
-WITH changelog AS (
-  SELECT doc_id, 'U' AS op, 1 AS seq,
-         'stale ' || CAST(doc_id AS VARCHAR) AS text, lang, source, n_chars
-  FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id, 'U', 2, 'updated ' || CAST(doc_id AS VARCHAR),
-         lang, source, n_chars
-  FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id, 'D', 1, '', lang, source, CAST(0 AS BIGINT)
-  FROM documents WHERE doc_id % 10 = 1
-  UNION ALL
-  SELECT doc_id + 1000000, 'I', 1, 'new ' || CAST(doc_id AS VARCHAR),
-         lang, source, CAST(4 AS BIGINT)
-  FROM documents WHERE doc_id % 100 = 0
-),
-win AS (
-  SELECT doc_id,
-         MAX(struct_pack(s := seq, o := op, p_text := text, p_lang := lang,
-                         p_source := source, p_n := n_chars)) AS w
-  FROM changelog GROUP BY doc_id
-),
-joined AS (
-  SELECT coalesce(b.doc_id, w.doc_id) AS doc_id,
-         b.text AS b_text, b.lang AS b_lang, b.source AS b_source,
-         b.n_chars AS b_n, w.w AS w
-  FROM documents b FULL OUTER JOIN win w ON b.doc_id = w.doc_id
-)
-SELECT doc_id,
-       CASE WHEN w IS NOT NULL THEN w.p_text ELSE b_text END AS text,
-       CASE WHEN w IS NOT NULL THEN w.p_lang ELSE b_lang END AS lang,
-       CASE WHEN w IS NOT NULL THEN w.p_source ELSE b_source END AS source,
-       CASE WHEN w IS NOT NULL THEN w.p_n ELSE b_n END AS n_chars
-FROM joined
-WHERE w IS NULL OR w.o <> 'D'
-"""
-
-
-
-# ------------------------------------------------------------ round-5 batch 48
-# 1-D Wasserstein drift and per-doc novelty scoring.
-
-
-def q_emd_length_drift(spark, sf_dir):
-    """Pairwise 1-D Wasserstein distance between sources' doc-length
-    distributions (operators/curation.py:emd_length_drift) — drift in
-    VALUE UNITS (how far mass must move), the complement to KS's max
-    deviation and KL's support sensitivity; exact integer CDF
-    cross-multiplication, one terminal division per pair."""
-    from ..operators.curation import emd_length_drift
-
-    return emd_length_drift(_t(spark, sf_dir, "documents"))
-
-
-SQL_EMD_LENGTH_DRIFT = """
-WITH cells AS (
-  SELECT source AS g, CAST(n_chars AS BIGINT) // 100 AS bkt, COUNT(*) AS c
-  FROM documents GROUP BY 1, 2
-),
-span AS (SELECT MIN(bkt) AS b0, MAX(bkt) AS b1 FROM cells),
-grid AS (
-  SELECT gs.bkt, s.g
-  FROM (SELECT unnest(generate_series(b0, b1)) AS bkt FROM span) gs
-  CROSS JOIN (SELECT DISTINCT g FROM cells) s
-),
-filled AS (
-  SELECT gr.g, gr.bkt, coalesce(c.c, 0) AS c
-  FROM grid gr LEFT JOIN cells c ON gr.g = c.g AND gr.bkt = c.bkt
-),
-cum AS (
-  SELECT g, bkt,
-         SUM(c) OVER (PARTITION BY g ORDER BY bkt
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(c) OVER (PARTITION BY g) AS n
-  FROM filled
-),
-pairs AS (
-  SELECT pa.g AS a, pb.g AS b, pa.na, pb.nb,
-         abs(CAST(pa.cum AS DECIMAL(19,0)) * CAST(pb.nb AS DECIMAL(18,0))
-             - CAST(pb.cum AS DECIMAL(19,0)) * CAST(pa.na AS DECIMAL(18,0)))
-           AS term
-  FROM (SELECT g, bkt, cum, n AS na FROM cum) pa
-  JOIN (SELECT g, bkt, cum, n AS nb FROM cum) pb
-  ON pa.bkt = pb.bkt AND pa.g < pb.g
-),
-agg AS (
-  SELECT a, b, na, nb, SUM(CAST(term AS DECIMAL(38,0))) AS s
-  FROM pairs GROUP BY 1, 2, 3, 4
-)
-SELECT a, b,
-       round(CAST(s AS DOUBLE) * 100.0
-             / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 6) AS emd
-FROM agg
-"""
-
-
-def q_doc_novelty(spark, sf_dir):
-    """Top-10 most and least novel documents by unigram cross-entropy
-    against the corpus model (operators/curation.py:doc_novelty) —
-    high = surprising vocabulary, low = the corpus' most formulaic
-    templates; rounded-term DECIMAL sums, rounded-value selection."""
-    from ..operators.curation import doc_novelty
-
-    return doc_novelty(_t(spark, sf_dir, "documents"))
-
-
-SQL_DOC_NOVELTY = f"""
-WITH tok AS (
-  SELECT doc_id, unnest({_WORDS_WS_SQL}) AS term FROM documents
-),
-vocab AS (SELECT term, COUNT(*) AS tc FROM tok GROUP BY 1),
-total AS (SELECT SUM(tc) AS tt FROM vocab),
-p AS (
-  SELECT term,
-         CAST(round(-ln(CAST(tc AS DOUBLE) / CAST(tt AS DOUBLE)), 9)
-              AS DECIMAL(20,9)) AS nl
-  FROM vocab CROSS JOIN total
-),
-per_doc AS (
-  SELECT t.doc_id, COUNT(*) AS n_tokens,
-         round(CAST(SUM(p.nl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-           AS cross_entropy
-  FROM tok t JOIN p ON t.term = p.term
-  GROUP BY 1
-),
-hi AS (
-  SELECT doc_id, n_tokens, cross_entropy, 'most_novel' AS which_end
-  FROM per_doc ORDER BY cross_entropy DESC, doc_id LIMIT 10
-),
-lo AS (
-  SELECT doc_id, n_tokens, cross_entropy, 'least_novel' AS which_end
-  FROM per_doc ORDER BY cross_entropy ASC, doc_id LIMIT 10
-)
-SELECT * FROM hi UNION ALL SELECT * FROM lo
-"""
-
-
-
-# ------------------------------------------------------------ round-5 batch 49
-# Church-Gale term adaptation and bigram conditional entropy.
-
-
-def q_term_adaptation(spark, sf_dir):
-    """Church-Gale adaptation (P(again | once) = df2/df1) for the
-    top-20 corpus terms (operators/textstats.py:term_adaptation) —
-    content words adapt, glue words don't; all-integer counts, one
-    division per term."""
-    from ..operators.textstats import term_adaptation
-
-    return term_adaptation(_t(spark, sf_dir, "documents"))
-
-
-SQL_TERM_ADAPTATION = f"""
-WITH dt AS (
-  SELECT doc_id, term, COUNT(*) AS k FROM (
-    SELECT doc_id, unnest({_WORDS_WS_SQL}) AS term FROM documents
-  ) GROUP BY 1, 2
-),
-per_term AS (
-  SELECT term, SUM(k) AS total_cnt, COUNT(*) AS df1,
-         SUM(CASE WHEN k >= 2 THEN 1 ELSE 0 END) AS df2
-  FROM dt GROUP BY 1
-),
-ranked AS (
-  SELECT *, row_number() OVER (ORDER BY total_cnt DESC, term) AS rk
-  FROM per_term
-)
-SELECT term, total_cnt, df1, df2,
-       round(CAST(df2 AS DOUBLE) / CAST(df1 AS DOUBLE), 6) AS adaptation
-FROM ranked WHERE rk <= 20
-"""
-
-
-def q_bigram_cond_entropy(spark, sf_dir):
-    """Per-language conditional next-token entropy H(Y|X) =
-    H(bigrams) − H(prefixes) (operators/textstats.py:
-    bigram_conditional_entropy) — predictability: prose high, template
-    spam toward 0; rounded-term DECIMAL sums on both entropies."""
-    from ..operators.textstats import bigram_conditional_entropy
-
-    return bigram_conditional_entropy(_t(spark, sf_dir, "documents"))
-
-
-SQL_BIGRAM_COND_ENTROPY = f"""
-WITH ws AS (SELECT lang AS g, {_WORDS_WS_SQL} AS w FROM documents),
-bg AS (
-  SELECT g, w[i] AS x, w[i + 1] AS y
-  FROM ws, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
-  WHERE len(w) >= 2
-),
-bc AS (SELECT g, x, y, COUNT(*) AS c FROM bg GROUP BY 1, 2, 3),
-tot AS (SELECT g, SUM(c) AS n FROM bc GROUP BY 1),
-hxy AS (
-  SELECT bc.g,
-         SUM(CAST(round((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-                        * ln(CAST(n AS DOUBLE) / CAST(c AS DOUBLE)), 9)
-             AS DECIMAL(20,9))) AS hxy
-  FROM bc JOIN tot ON bc.g = tot.g GROUP BY 1
-),
-xc AS (SELECT g, x, SUM(c) AS c FROM bc GROUP BY 1, 2),
-hx AS (
-  SELECT xc.g,
-         SUM(CAST(round((CAST(c AS DOUBLE) / CAST(n AS DOUBLE))
-                        * ln(CAST(n AS DOUBLE) / CAST(c AS DOUBLE)), 9)
-             AS DECIMAL(20,9))) AS hx
-  FROM xc JOIN tot ON xc.g = tot.g GROUP BY 1
-)
-SELECT hxy.g AS lang, tot.n AS n_bigrams,
-       round(CAST(hxy.hxy AS DOUBLE) - CAST(hx.hx AS DOUBLE), 6)
-         AS cond_entropy_nats
-FROM hxy JOIN hx ON hxy.g = hx.g JOIN tot ON hxy.g = tot.g
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 53
 # Power-law tail index.
 
@@ -5327,57 +3887,9 @@ FROM kept
 """
 
 
-
-# ------------------------------------------------------------ round-5 batch 55
-# SCD2 page-churn census.
-
-
-def q_page_churn_census(spark, sf_dir):
-    """SCD2 page-churn census: how many pages carry 1, 2, 3, ... content
-    versions over their crawl history (the scd2_pages interval table
-    folded to the version-count histogram) — the recrawl-budget signal:
-    a feed where most pages hold one version forever is over-crawled."""
-    from ..operators.curation import scd2_intervals
-
-    docs = _t(spark, sf_dir, "documents")
-    page = F.concat(F.lit("p"), (F.col("doc_id") % 50).cast("string"))
-    ts = F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id") * 37)
-    ver = F.expr("(doc_id DIV 150) % 3").cast("string")
-    crawls = docs.select(
-        page.alias("page"), ts.alias("crawl_ts"),
-        F.md5(F.concat(page, F.lit(":"), ver)).alias("content_hash"),
-    )
-    iv = scd2_intervals(crawls, "page", "crawl_ts", "content_hash")
-    per_page = iv.groupBy("page").agg(F.count("*").alias("n_versions"))
-    return per_page.groupBy("n_versions").agg(F.count("*").alias("n_pages"))
-
-
-SQL_PAGE_CHURN_CENSUS = """
-WITH crawls AS (
-  SELECT 'p' || CAST(doc_id % 50 AS VARCHAR) AS page,
-         to_timestamp(1700000000 + doc_id * 37) AS crawl_ts,
-         md5('p' || CAST(doc_id % 50 AS VARCHAR) || ':'
-             || CAST((doc_id // 150) % 3 AS VARCHAR)) AS content_hash
-  FROM documents
-),
-flagged AS (
-  SELECT page, content_hash,
-         lag(content_hash) OVER (PARTITION BY page
-                                 ORDER BY crawl_ts, content_hash) AS prev
-  FROM crawls
-),
-chg AS (
-  SELECT page FROM flagged WHERE prev IS NULL OR prev <> content_hash
-),
-per_page AS (SELECT page, COUNT(*) AS n_versions FROM chg GROUP BY 1)
-SELECT n_versions, COUNT(*) AS n_pages FROM per_page GROUP BY 1
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 57
-# THETA-sketch vocabulary sizes, then the later dedup, sampling and
-# tokenizer reports.
+# THETA-sketch vocabulary sizes, then the later dedup and sampling
+# reports.
 
 
 def q_theta_vocab_by_source(spark, sf_dir):
@@ -5548,80 +4060,6 @@ FROM documents d LEFT JOIN flagged ON d.doc_id = flagged.doc_id
 """
 
 
-def q_linear_probe_train(spark, sf_dir):
-    """Closed-form ridge training of a linear quality probe
-    (operators/score.py:linear_probe_train) — the deterministic core of
-    the "train a filter on labels" step (CCNet/fastText-style): the 3×3
-    normal equations are assembled from ONE map-side-combinable
-    DECIMAL(38,0) aggregate of integer feature products and solved by
-    exact integer Cramer determinants; training accuracy is an
-    all-integer margin comparison (2·(d₀+d₁x₁+d₂x₂) ≥ det A), so the
-    only float ops are three terminal weight divisions."""
-    from ..operators.score import linear_probe_train
-
-    return linear_probe_train(_t(spark, sf_dir, "documents"))
-
-
-SQL_LINEAR_PROBE_TRAIN = f"""
-WITH base AS (
-  SELECT coalesce(text, '') AS t, {_WORDS_WS_SQL} AS ws,
-         list_filter(regexp_split_to_array(coalesce(text, ''),
-                     '{_WS_CLASS_SQL}*\n{_WS_CLASS_SQL}*'), x -> x <> '')
-           AS lines
-  FROM documents
-),
-feat AS (
-  SELECT CAST(len(ws) AS HUGEINT) AS x1,
-         CAST(length(t) - length(translate(t, {_SYM_TRANSLATE_SQL}, ''))
-              AS HUGEINT) AS x2,
-         CAST(CASE WHEN len(ws) >= 5
-                    AND 10 * (length(t) - length(translate(t, {_SYM_TRANSLATE_SQL}, '')))
-                        <= len(ws)
-                    AND (len(lines) <= 1
-                         OR 10 * (len(lines) - len(list_distinct(lines)))
-                            <= 3 * len(lines))
-               THEN 1 ELSE 0 END AS HUGEINT) AS y
-  FROM base
-),
-sums AS (
-  SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-         SUM(x1) AS s1, SUM(x2) AS s2,
-         SUM(x1 * x1) AS s11, SUM(x1 * x2) AS s12, SUM(x2 * x2) AS s22,
-         SUM(y) AS sy, SUM(x1 * y) AS s1y, SUM(x2 * y) AS s2y
-  FROM feat
-),
-dets AS (
-  SELECT CAST(n AS BIGINT) AS n_docs, CAST(sy AS BIGINT) AS n_keep,
-         (n + 1) * ((s11 + 1) * (s22 + 1) - s12 * s12)
-           - s1 * (s1 * (s22 + 1) - s12 * s2)
-           + s2 * (s1 * s12 - (s11 + 1) * s2) AS dA,
-         sy * ((s11 + 1) * (s22 + 1) - s12 * s12)
-           - s1 * (s1y * (s22 + 1) - s12 * s2y)
-           + s2 * (s1y * s12 - (s11 + 1) * s2y) AS d0,
-         (n + 1) * (s1y * (s22 + 1) - s12 * s2y)
-           - sy * (s1 * (s22 + 1) - s12 * s2)
-           + s2 * (s1 * s2y - s1y * s2) AS d1,
-         (n + 1) * ((s11 + 1) * s2y - s1y * s12)
-           - s1 * (s1 * s2y - s1y * s2)
-           + sy * (s1 * s12 - (s11 + 1) * s2) AS d2
-  FROM sums
-),
-correct AS (
-  SELECT SUM(CASE WHEN (CASE WHEN 2 * (d0 + d1 * x1 + d2 * x2) >= dA
-                              THEN 1 ELSE 0 END) = y
-              THEN 1 ELSE 0 END) AS n_correct
-  FROM feat CROSS JOIN dets
-)
-SELECT n_docs, n_keep,
-       round(CAST(d0 AS DOUBLE) / CAST(dA AS DOUBLE), 6) AS w0,
-       round(CAST(d1 AS DOUBLE) / CAST(dA AS DOUBLE), 6) AS w1,
-       round(CAST(d2 AS DOUBLE) / CAST(dA AS DOUBLE), 6) AS w2,
-       n_correct,
-       round(CAST(n_correct AS DOUBLE) / CAST(n_docs AS DOUBLE), 6) AS accuracy
-FROM dets CROSS JOIN correct
-"""
-
-
 def q_dedup_cc_best(spark, sf_dir):
     """Quality-aware transitive near-dup dedup
     (operators/dedup.py:cc_dedup_best): each MinHash-verified connected
@@ -5652,88 +4090,6 @@ best AS (
 )
 SELECT a.doc_id, a.n_chars
 FROM allc a JOIN best b ON a.doc_id = b.doc_id
-"""
-
-
-def q_bpe_merges(spark, sf_dir):
-    """First 3 BPE merges trained over the corpus
-    (operators/textstats.py:bpe_merge_train) — distributed tokenizer
-    fitting: vocabulary-grain reprs with freq-weighted integer pair
-    counts (map-side combinable), greedy-leftmost literal-replace merge
-    application whose boundary-space scheme makes replace() semantics
-    identical in both engines, deterministic argmax (count desc, pair
-    asc). The twin unrolls the 3 training steps as CTEs."""
-    from ..operators.textstats import bpe_merge_train
-
-    return bpe_merge_train(_t(spark, sf_dir, "documents"), n_merges=3)
-
-
-SQL_BPE_MERGES = f"""
-WITH wf AS (
-  SELECT w, COUNT(*) AS freq
-  FROM (SELECT unnest({_WORDS_WS_SQL}) AS w FROM documents) GROUP BY w
-),
-r0 AS (
-  SELECT freq,
-         ' ' || array_to_string(
-           list_filter(regexp_split_to_array(w, ''), c -> c <> ''), '  ')
-         || ' ' AS r
-  FROM wf
-),
-p1 AS (
-  SELECT p[1] AS lhs, p[2] AS rhs, SUM(freq) AS pair_count
-  FROM (
-    SELECT freq,
-           unnest(list_filter(
-             list_transform(t, (x, i) ->
-               CASE WHEN i < len(t) THEN [x, t[i + 1]] END),
-             q -> q IS NOT NULL)) AS p
-    FROM (SELECT freq, regexp_split_to_array(trim(r), '  ') AS t FROM r0)
-  ) GROUP BY 1, 2
-),
-m1 AS (SELECT lhs, rhs, pair_count FROM p1
-         ORDER BY pair_count DESC, lhs, rhs LIMIT 1),
-r1 AS (SELECT freq,
-                replace(r, ' ' || m.lhs || '  ' || m.rhs || ' ',
-                           ' ' || m.lhs || m.rhs || ' ') AS r
-         FROM r0 CROSS JOIN m1 m),
-p2 AS (
-  SELECT p[1] AS lhs, p[2] AS rhs, SUM(freq) AS pair_count
-  FROM (
-    SELECT freq,
-           unnest(list_filter(
-             list_transform(t, (x, i) ->
-               CASE WHEN i < len(t) THEN [x, t[i + 1]] END),
-             q -> q IS NOT NULL)) AS p
-    FROM (SELECT freq, regexp_split_to_array(trim(r), '  ') AS t FROM r1)
-  ) GROUP BY 1, 2
-),
-m2 AS (SELECT lhs, rhs, pair_count FROM p2
-         ORDER BY pair_count DESC, lhs, rhs LIMIT 1),
-r2 AS (SELECT freq,
-                replace(r, ' ' || m.lhs || '  ' || m.rhs || ' ',
-                           ' ' || m.lhs || m.rhs || ' ') AS r
-         FROM r1 CROSS JOIN m2 m),
-p3 AS (
-  SELECT p[1] AS lhs, p[2] AS rhs, SUM(freq) AS pair_count
-  FROM (
-    SELECT freq,
-           unnest(list_filter(
-             list_transform(t, (x, i) ->
-               CASE WHEN i < len(t) THEN [x, t[i + 1]] END),
-             q -> q IS NOT NULL)) AS p
-    FROM (SELECT freq, regexp_split_to_array(trim(r), '  ') AS t FROM r2)
-  ) GROUP BY 1, 2
-),
-m3 AS (SELECT lhs, rhs, pair_count FROM p3
-         ORDER BY pair_count DESC, lhs, rhs LIMIT 1),
-r3 AS (SELECT freq,
-                replace(r, ' ' || m.lhs || '  ' || m.rhs || ' ',
-                           ' ' || m.lhs || m.rhs || ' ') AS r
-         FROM r2 CROSS JOIN m3 m)
-SELECT 1 AS step, lhs, rhs, pair_count FROM m1
-UNION ALL SELECT 2, lhs, rhs, pair_count FROM m2
-UNION ALL SELECT 3, lhs, rhs, pair_count FROM m3
 """
 
 
@@ -5776,268 +4132,6 @@ hist AS (
 )
 SELECT doc_id, g AS source, v AS n_chars, hv AS norm_n_chars
 FROM tgt JOIN hist ON idx >= lo AND idx <= hi
-"""
-
-
-def q_dsir_weights(spark, sf_dir):
-    """DSIR importance weights toward the English slice
-    (operators/curation.py:dsir_weights): hashed-unigram log-ratio
-    scoring with add-1 smoothing — the classifier-free "more docs like
-    the target" selector. Both probability tables are ≤1024 rows (the
-    hash-bucket bound is DSIR's own trick), so they broadcast and the
-    scoring pass never shuffles at vocab grain."""
-    from ..operators.curation import dsir_weights
-
-    d = _t(spark, sf_dir, "documents")
-    return dsir_weights(d, F.col("lang") == "en")
-
-
-SQL_DSIR_WEIGHTS = f"""
-WITH ex AS (
-  SELECT doc_id, lang = 'en' AS t,
-         CAST('0x' || substr(md5('ds:' || w), 1, 8) AS BIGINT) % 1024 AS b
-  FROM (SELECT doc_id, lang, unnest({_WORDS_WS_SQL}) AS w FROM documents)
-),
-tgt AS (SELECT b, COUNT(*) AS ct FROM ex WHERE t GROUP BY b),
-srcs AS (SELECT b, COUNT(*) AS cs FROM ex GROUP BY b),
-tot AS (
-  SELECT SUM(CASE WHEN t THEN 1 ELSE 0 END) AS nt, COUNT(*) AS ns FROM ex
-),
-ratio AS (
-  SELECT srcs.b,
-         round(ln((CAST(coalesce(ct, 0) + 1 AS DOUBLE)
-                   / CAST(nt + 1024 AS DOUBLE))
-                  / (CAST(cs + 1 AS DOUBLE)
-                     / CAST(ns + 1024 AS DOUBLE))), 9) AS lr
-  FROM srcs LEFT JOIN tgt ON srcs.b = tgt.b CROSS JOIN tot
-)
-SELECT doc_id, COUNT(*) AS n_tokens,
-       round(CAST(SUM(CAST(lr AS DECIMAL(28,9))) AS DOUBLE), 6)
-         AS dsir_weight
-FROM ex JOIN ratio ON ex.b = ratio.b
-GROUP BY doc_id
-"""
-
-
-def q_bigram_lm_ppl(spark, sf_dir):
-    """Held-out bigram language-model scoring — the "train a KenLM on
-    your corpus, score everything" CCNet step at its deterministic
-    core: an 80/20 md5-bucket split, add-1-smoothed bigram
-    probabilities from the train slice, per-test-doc mean negative log
-    prob. Train counts are one explode+groupBy; test bigrams join the
-    count tables on their natural keys (vocab-grain shuffles with
-    map-side combine); V and the unigram table ride the joins. Each
-    ln term is rounded 9 dp and DECIMAL-summed per doc."""
-    from ..functions.tokenize import WS_PLUS
-
-    d = _t(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda x: F.length(x) > 0)
-    bucket = F.conv(F.substring(F.md5(F.concat(F.lit("sp:"),
-                                               F.col("doc_id").cast("string"))),
-                                1, 8), 16, 10).cast("long") % 100
-    base = d.select("doc_id", words.alias("_ws"), bucket.alias("_bk"))
-    pairs = F.filter(
-        F.zip_with(
-            F.col("_ws"),
-            F.slice(F.col("_ws"), 2, F.greatest(F.size("_ws") - 1, F.lit(0))),
-            lambda x, y: F.when(y.isNotNull(),
-                                F.struct(x.alias("w1"), y.alias("w2"))),
-        ),
-        lambda p: p.isNotNull(),
-    )
-    train = base.filter(F.col("_bk") < 80)
-    test = base.filter(F.col("_bk") >= 80)
-    big = (
-        train.select(F.explode(pairs).alias("_p"))
-        .groupBy(F.col("_p.w1").alias("w1"), F.col("_p.w2").alias("w2"))
-        .agg(F.count("*").alias("c12"))
-    )
-    uni = (
-        train.select(F.explode(F.col("_ws")).alias("w1"))
-        .groupBy("w1").agg(F.count("*").alias("c1"))
-    )
-    vtbl = uni.agg(F.count("*").alias("_V"))
-    tb = test.select("doc_id", F.explode(pairs).alias("_p")).select(
-        "doc_id", F.col("_p.w1").alias("w1"), F.col("_p.w2").alias("w2")
-    )
-    scored = (
-        tb.join(big, ["w1", "w2"], "left")
-        .join(uni, "w1", "left")
-        .crossJoin(F.broadcast(vtbl))
-        .select(
-            "doc_id",
-            F.round(
-                F.log(
-                    (F.coalesce(F.col("c12"), F.lit(0)) + 1).cast("double")
-                    / (F.coalesce(F.col("c1"), F.lit(0)) + F.col("_V"))
-                    .cast("double")
-                ),
-                9,
-            ).alias("_lp"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_bigrams"),
-        F.round(
-            (-F.sum(F.col("_lp").cast("decimal(28,9)")).cast("double"))
-            / F.count("*").cast("double"),
-            6,
-        ).alias("avg_neg_logprob"),
-    )
-
-
-SQL_BIGRAM_LM_PPL = f"""
-WITH base AS (
-  SELECT doc_id, {_WORDS_WS_SQL} AS ws,
-         CAST('0x' || substr(md5('sp:' || CAST(doc_id AS VARCHAR)), 1, 8)
-              AS BIGINT) % 100 AS bk
-  FROM documents
-),
-pz AS (
-  SELECT doc_id, bk,
-         list_filter(
-           list_transform(ws, (x, i) ->
-             CASE WHEN i < len(ws) THEN [x, ws[i + 1]] END),
-           q -> q IS NOT NULL) AS prs,
-         ws
-  FROM base
-),
-big AS (
-  SELECT p[1] AS w1, p[2] AS w2, COUNT(*) AS c12
-  FROM (SELECT unnest(prs) AS p FROM pz WHERE bk < 80) GROUP BY 1, 2
-),
-uni AS (
-  SELECT w1, COUNT(*) AS c1
-  FROM (SELECT unnest(ws) AS w1 FROM pz WHERE bk < 80) GROUP BY 1
-),
-v AS (SELECT COUNT(*) AS vv FROM uni),
-tb AS (
-  SELECT doc_id, p[1] AS w1, p[2] AS w2
-  FROM (SELECT doc_id, unnest(prs) AS p FROM pz WHERE bk >= 80)
-),
-scored AS (
-  SELECT doc_id,
-         round(ln(CAST(coalesce(c12, 0) + 1 AS DOUBLE)
-                  / CAST(coalesce(c1, 0) + vv AS DOUBLE)), 9) AS lp
-  FROM tb LEFT JOIN big USING (w1, w2)
-          LEFT JOIN uni USING (w1)
-  CROSS JOIN v
-)
-SELECT doc_id, COUNT(*) AS n_bigrams,
-       round(-CAST(SUM(CAST(lp AS DECIMAL(28,9))) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS avg_neg_logprob
-FROM scored GROUP BY doc_id
-"""
-
-
-def q_conformal_bounds(spark, sf_dir):
-    """Split-conformal prediction bounds on doc length with the
-    finite-sample coverage guarantee (Vovk et al.; the distribution-free
-    data-validation recipe): calibration = md5 bucket < 50, bounds =
-    the floor((n+1)·0.05)-th and ceil((n+1)·0.95)-th order statistics
-    of calibration n_chars — EXACT integer ranks, no interpolation —
-    then measured coverage on the held-out slice. Guarantee: coverage ≥
-    0.9 in expectation over splits; the measured value is reported, not
-    asserted. Rank extraction rides the value-compressed histogram
-    (bounded state, no global row sort); everything is integer until
-    the one terminal coverage division."""
-    d = _t(spark, sf_dir, "documents")
-    bucket = F.conv(F.substring(F.md5(F.concat(F.lit("cf:"),
-                                               F.col("doc_id").cast("string"))),
-                                1, 8), 16, 10).cast("long") % 100
-    base = d.select("doc_id", F.col("n_chars"), bucket.alias("_bk"))
-    cal = base.filter(F.col("_bk") < 50)
-    test = base.filter(F.col("_bk") >= 50)
-    hist = (
-        cal.groupBy("n_chars").agg(F.count("*").alias("_c"))
-        .withColumn("_hi", F.sum("_c").over(Window.orderBy("n_chars")))
-        .withColumn("_lo", F.col("_hi") - F.col("_c") + 1)
-    )
-    n_tbl = cal.agg(F.count("*").alias("_n"))
-    ranks = n_tbl.select(
-        "_n",
-        F.expr("CAST(FLOOR((_n + 1) * 0.05) AS LONG)").alias("_rlo"),
-        F.expr("CAST(CEIL((_n + 1) * 0.95) AS LONG)").alias("_rhi"),
-    ).select(
-        "_n",
-        F.greatest(F.col("_rlo"), F.lit(1)).alias("_rlo"),
-        F.least(F.col("_rhi"), F.col("_n")).alias("_rhi"),
-    )
-    bounds = (
-        F.broadcast(ranks).join(
-            F.broadcast(hist),
-            (F.col("_rlo") >= F.col("_lo")) & (F.col("_rlo") <= F.col("_hi")),
-        ).select(F.col("_n"), F.col("_rhi"),
-                 F.col("n_chars").alias("lo_bound"))
-        .join(
-            F.broadcast(hist.select(F.col("n_chars").alias("_v2"),
-                                    F.col("_lo").alias("_lo2"),
-                                    F.col("_hi").alias("_hi2"))),
-            (F.col("_rhi") >= F.col("_lo2")) & (F.col("_rhi") <= F.col("_hi2")),
-        ).select(F.col("_n").alias("n_cal"), "lo_bound",
-                 F.col("_v2").alias("hi_bound"))
-    )
-    return (
-        test.crossJoin(F.broadcast(bounds))
-        .agg(
-            F.max("n_cal").alias("n_cal"),
-            F.max("lo_bound").alias("lo_bound"),
-            F.max("hi_bound").alias("hi_bound"),
-            F.count("*").alias("n_test"),
-            F.sum(
-                F.when(
-                    (F.col("n_chars") >= F.col("lo_bound"))
-                    & (F.col("n_chars") <= F.col("hi_bound")), 1
-                ).otherwise(0)
-            ).alias("n_covered"),
-        )
-        .withColumn(
-            "coverage",
-            F.round(F.col("n_covered").cast("double")
-                    / F.col("n_test").cast("double"), 6),
-        )
-    )
-
-
-SQL_CONFORMAL_BOUNDS = """
-WITH base AS (
-  SELECT doc_id, n_chars,
-         CAST('0x' || substr(md5('cf:' || CAST(doc_id AS VARCHAR)), 1, 8)
-              AS BIGINT) % 100 AS bk
-  FROM documents
-),
-cal AS (SELECT n_chars FROM base WHERE bk < 50),
-test AS (SELECT n_chars FROM base WHERE bk >= 50),
-hist AS (
-  SELECT n_chars, hi, hi - c + 1 AS lo FROM (
-    SELECT n_chars, COUNT(*) AS c,
-           SUM(COUNT(*)) OVER (ORDER BY n_chars) AS hi
-    FROM cal GROUP BY n_chars)
-),
-n AS (SELECT COUNT(*) AS nn FROM cal),
-rk AS (
-  SELECT nn,
-         greatest(CAST(FLOOR((nn + 1) * 0.05) AS BIGINT), 1) AS rlo,
-         least(CAST(CEIL((nn + 1) * 0.95) AS BIGINT), nn) AS rhi
-  FROM n
-),
-bounds AS (
-  SELECT rk.nn AS n_cal,
-         (SELECT n_chars FROM hist WHERE rk.rlo >= lo AND rk.rlo <= hi)
-           AS lo_bound,
-         (SELECT n_chars FROM hist WHERE rk.rhi >= lo AND rk.rhi <= hi)
-           AS hi_bound
-  FROM rk
-)
-SELECT max(n_cal) AS n_cal, max(lo_bound) AS lo_bound,
-       max(hi_bound) AS hi_bound, COUNT(*) AS n_test,
-       SUM(CASE WHEN n_chars >= lo_bound AND n_chars <= hi_bound
-            THEN 1 ELSE 0 END) AS n_covered,
-       round(CAST(SUM(CASE WHEN n_chars >= lo_bound AND n_chars <= hi_bound
-                       THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS coverage
-FROM test CROSS JOIN bounds
 """
 
 
@@ -6323,68 +4417,6 @@ CROSS JOIN lo
 """
 
 
-def q_dedup_family_kappa(spark, sf_dir):
-    """Inter-family agreement on keep/drop decisions: the exact 2×2
-    contingency between MinHash-Jaccard and SimHash verdicts plus
-    Cohen's kappa — the one-number answer to "are my two near-dup
-    detectors measuring the same thing", computed on top of the
-    dedup-provenance flags. Counts are exact integers; kappa is one
-    fixed IEEE sequence (po − pe)/(1 − pe) rounded 6 dp."""
-    from ..operators.dedup import dedup_provenance
-
-    prov = dedup_provenance(_t(spark, sf_dir, "documents"))
-    a = F.col("kept_minhash").cast("long")
-    b = F.col("kept_simhash").cast("long")
-    ct = prov.agg(
-        F.count("*").alias("n"),
-        F.sum(a * b).alias("n11"),
-        F.sum(a * (1 - b)).alias("n10"),
-        F.sum((1 - a) * b).alias("n01"),
-        F.sum((1 - a) * (1 - b)).alias("n00"),
-    )
-    nd = F.col("n").cast("double")
-    po = (F.col("n11") + F.col("n00")).cast("double") / nd
-    pe = (
-        ((F.col("n11") + F.col("n10")).cast("double") / nd)
-        * ((F.col("n11") + F.col("n01")).cast("double") / nd)
-        + ((F.col("n01") + F.col("n00")).cast("double") / nd)
-        * ((F.col("n10") + F.col("n00")).cast("double") / nd)
-    )
-    return ct.select(
-        "n", "n11", "n10", "n01", "n00",
-        F.round(po, 6).alias("po"),
-        F.round((po - pe) / (F.lit(1.0) - pe), 6).alias("kappa"),
-    )
-
-
-def _sql_dedup_family_kappa() -> str:
-    prov = _sql_dedup_provenance()
-    return f"""
-WITH prov AS ({prov}),
-ct AS (
-  SELECT COUNT(*) AS n,
-         SUM(CASE WHEN kept_minhash AND kept_simhash THEN 1 ELSE 0 END) AS n11,
-         SUM(CASE WHEN kept_minhash AND NOT kept_simhash THEN 1 ELSE 0 END) AS n10,
-         SUM(CASE WHEN NOT kept_minhash AND kept_simhash THEN 1 ELSE 0 END) AS n01,
-         SUM(CASE WHEN NOT kept_minhash AND NOT kept_simhash THEN 1 ELSE 0 END) AS n00
-  FROM prov
-)
-SELECT n, n11, n10, n01, n00,
-       round(CAST(n11 + n00 AS DOUBLE) / CAST(n AS DOUBLE), 6) AS po,
-       round((CAST(n11 + n00 AS DOUBLE) / CAST(n AS DOUBLE)
-              - (CAST(n11 + n10 AS DOUBLE) / CAST(n AS DOUBLE)
-                 * CAST(n11 + n01 AS DOUBLE) / CAST(n AS DOUBLE)
-                 + CAST(n01 + n00 AS DOUBLE) / CAST(n AS DOUBLE)
-                   * CAST(n10 + n00 AS DOUBLE) / CAST(n AS DOUBLE)))
-             / (1.0 - (CAST(n11 + n10 AS DOUBLE) / CAST(n AS DOUBLE)
-                 * CAST(n11 + n01 AS DOUBLE) / CAST(n AS DOUBLE)
-                 + CAST(n01 + n00 AS DOUBLE) / CAST(n AS DOUBLE)
-                   * CAST(n10 + n00 AS DOUBLE) / CAST(n AS DOUBLE))), 6)
-         AS kappa
-FROM ct
-"""
-
-
 def q_dedup_cc_incr(spark, sf_dir):
     """Incremental connected-component maintenance proven ≡ full
     recompute (operators/dedup.py:cc_incremental): labels built from
@@ -6454,67 +4486,6 @@ FROM per GROUP BY band_id ORDER BY band_id
 """
 
 
-def q_dedup_audit_sample(spark, sf_dir):
-    """Stratified human-audit sample of near-dup pairs: up to 3 pairs
-    per Jaccard decile, picked by md5 order — the labeling-queue
-    builder a dedup threshold review feeds (auditors must see pairs
-    ACROSS the similarity range, not the head a similarity-ranked list
-    would give; md5 keying keeps the queue stable across reruns so
-    labels attach durably). Verified pairs only — candidates, never
-    all-pairs — and the per-decile rank window runs over the bounded
-    pair table."""
-    from ..operators.dedup import jaccard_verify, minhash_candidate_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = jaccard_verify(d, minhash_candidate_pairs(d), threshold=0.0)
-    dec = F.least(F.floor(F.col("jaccard") * 10).cast("int"), F.lit(9))
-    keyed = pairs.select(
-        "a", "b", F.round(F.col("jaccard"), 6).alias("jaccard"),
-        dec.alias("decile"),
-        F.md5(F.concat_ws(":", F.col("a"), F.col("b"))).alias("_h"),
-    )
-    w = Window.partitionBy("decile").orderBy("_h")
-    return (
-        keyed.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= 3)
-        .select("decile", "a", "b", "jaccard")
-    )
-
-
-def _sql_dedup_audit_sample() -> str:
-    return f"""
-WITH sigs AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM documents),
-bands AS ({_BANDS_SQL}),
-cand AS (
-  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-  FROM bands l JOIN bands r ON l.band_id = r.band_id AND l.band_key = r.band_key
-  WHERE l.doc_id < r.doc_id
-),
-shd AS (SELECT doc_id,
-               list_distinct([CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)
-                              FOR x IN sh]) AS s
-        FROM sigs),
-vals AS (
-  SELECT c.a, c.b,
-         CASE WHEN len(list_distinct(list_cat(sa.s, sb.s))) > 0
-              THEN CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-                   / CAST(len(list_distinct(list_cat(sa.s, sb.s))) AS DOUBLE)
-              ELSE 0.0 END AS j
-  FROM cand c JOIN shd sa ON sa.doc_id = c.a JOIN shd sb ON sb.doc_id = c.b
-),
-keyed AS (
-  SELECT a, b, round(j, 6) AS jaccard,
-         least(CAST(FLOOR(j * 10) AS INT), 9) AS decile,
-         md5(CAST(a AS VARCHAR) || ':' || CAST(b AS VARCHAR)) AS h
-  FROM vals
-)
-SELECT decile, a, b, jaccard
-FROM (SELECT *, row_number() OVER (PARTITION BY decile ORDER BY h) AS rk
-      FROM keyed)
-WHERE rk <= 3
-"""
-
-
 def q_winnow_overlap(spark, sf_dir):
     """MOSS-style partial-overlap pairs by shared winnowing
     fingerprints (operators/textstats.py:winnow_overlap_pairs): doc
@@ -6550,93 +4521,6 @@ SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS n_shared_fp
 FROM ex l JOIN ex r ON l.f = r.f AND l.doc_id < r.doc_id
 GROUP BY 1, 2
 HAVING COUNT(*) >= 2
-"""
-
-
-def q_bpe_fertility(spark, sf_dir):
-    """Token-fertility change after applying the 3 trained BPE merges
-    (operators/textstats.py:bpe_fertility) — the train→APPLY lifecycle
-    number a tokenizer rollout reads: frequency-weighted corpus symbol
-    counts before (characters) and after the merges, plus the
-    compression ratio. Same exact training loop as bpe_merges; all
-    integer until the one terminal division."""
-    from ..operators.textstats import bpe_fertility
-
-    return bpe_fertility(_t(spark, sf_dir, "documents"), n_merges=3)
-
-
-SQL_BPE_FERTILITY = f"""
-WITH wf AS (
-  SELECT w, COUNT(*) AS freq
-  FROM (SELECT unnest({_WORDS_WS_SQL}) AS w FROM documents) GROUP BY w
-),
-r0 AS (
-  SELECT freq,
-         ' ' || array_to_string(
-           list_filter(regexp_split_to_array(w, ''), c -> c <> ''), '  ')
-         || ' ' AS r
-  FROM wf
-),
-p1 AS (
-  SELECT p[1] AS lhs, p[2] AS rhs, SUM(freq) AS pair_count
-  FROM (
-    SELECT freq,
-           unnest(list_filter(
-             list_transform(t, (x, i) ->
-               CASE WHEN i < len(t) THEN [x, t[i + 1]] END),
-             q -> q IS NOT NULL)) AS p
-    FROM (SELECT freq, regexp_split_to_array(trim(r), '  ') AS t FROM r0)
-  ) GROUP BY 1, 2
-),
-m1 AS (SELECT lhs, rhs, pair_count FROM p1
-         ORDER BY pair_count DESC, lhs, rhs LIMIT 1),
-r1 AS (SELECT freq,
-                replace(r, ' ' || m.lhs || '  ' || m.rhs || ' ',
-                           ' ' || m.lhs || m.rhs || ' ') AS r
-         FROM r0 CROSS JOIN m1 m),
-p2 AS (
-  SELECT p[1] AS lhs, p[2] AS rhs, SUM(freq) AS pair_count
-  FROM (
-    SELECT freq,
-           unnest(list_filter(
-             list_transform(t, (x, i) ->
-               CASE WHEN i < len(t) THEN [x, t[i + 1]] END),
-             q -> q IS NOT NULL)) AS p
-    FROM (SELECT freq, regexp_split_to_array(trim(r), '  ') AS t FROM r1)
-  ) GROUP BY 1, 2
-),
-m2 AS (SELECT lhs, rhs, pair_count FROM p2
-         ORDER BY pair_count DESC, lhs, rhs LIMIT 1),
-r2 AS (SELECT freq,
-                replace(r, ' ' || m.lhs || '  ' || m.rhs || ' ',
-                           ' ' || m.lhs || m.rhs || ' ') AS r
-         FROM r1 CROSS JOIN m2 m),
-p3 AS (
-  SELECT p[1] AS lhs, p[2] AS rhs, SUM(freq) AS pair_count
-  FROM (
-    SELECT freq,
-           unnest(list_filter(
-             list_transform(t, (x, i) ->
-               CASE WHEN i < len(t) THEN [x, t[i + 1]] END),
-             q -> q IS NOT NULL)) AS p
-    FROM (SELECT freq, regexp_split_to_array(trim(r), '  ') AS t FROM r2)
-  ) GROUP BY 1, 2
-),
-m3 AS (SELECT lhs, rhs, pair_count FROM p3
-         ORDER BY pair_count DESC, lhs, rhs LIMIT 1),
-r3 AS (SELECT freq,
-                replace(r, ' ' || m.lhs || '  ' || m.rhs || ' ',
-                           ' ' || m.lhs || m.rhs || ' ') AS r
-         FROM r2 CROSS JOIN m3 m)
-SELECT COUNT(*) AS n_distinct_words,
-       SUM(freq * length(replace(r, ' ', ''))) AS tokens_before,
-       SUM(freq * len(regexp_split_to_array(trim(r), '  ')))
-         AS tokens_after,
-       round(CAST(SUM(freq * len(regexp_split_to_array(trim(r), '  ')))
-                  AS DOUBLE)
-             / CAST(SUM(freq * length(replace(r, ' ', ''))) AS DOUBLE), 6)
-         AS compression
-FROM r3
 """
 
 
@@ -6704,89 +4588,53 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
         ),
     ),
     "dedup_canonical": (q_dedup_canonical, SQL_DEDUP_CANONICAL),
-    "a21_length_band": (q_a21_length_band, SQL_A21_BAND),
-    "lang_confusion": (q_lang_confusion, _lang_confusion_sql),
     "pii_prevalence": (q_pii_prevalence, _pii_prevalence_sql),
-    "calibration_curve": (q_calibration_curve, _calibration_curve_sql),
     "dedup_spans": (q_dedup_spans, SQL_DEDUP_SPANS),
     "dedup_spans_within": (q_dedup_spans_within, SQL_DEDUP_SPANS_WITHIN),
-    "term_df_scrub": (q_term_df_scrub, SQL_TERM_DF_SCRUB),
     "dedup_minhash_incr": (q_dedup_minhash_incr, SQL_DEDUP_MINHASH_INCR),
     "domain_blocklist_filter": (q_domain_blocklist, SQL_DOMAIN_BLOCKLIST),
-    "host_quota_sample": (q_host_quota_sample, SQL_HOST_QUOTA_SAMPLE),
     "url_dedup_lastwins": (q_url_dedup, _sql_url_dedup),
     "split_leak_safe": (q_split_leak_safe, SQL_SPLIT_LEAK_SAFE),
-    "robots_filter": (q_robots_filter, SQL_ROBOTS_FILTER),
-    "mixture_apply": (q_mixture_apply, SQL_MIXTURE_APPLY),
     "normalize_punct": (q_normalize_punct, _sql_normalize_punct),
-    "web_curation_e2e": (q_web_curation_e2e, SQL_WEB_CURATION_E2E),
     "zipf_slope": (q_zipf_slope, SQL_ZIPF_SLOPE),
     "hll_vocab": (q_hll_vocab, SQL_HLL_VOCAB),
     "cms_terms": (q_cms_terms, SQL_CMS_TERMS),
     "gini_sources": (q_gini_sources, SQL_GINI_SOURCES),
-    "stream_hll": (q_stream_hll, SQL_STREAM_HLL),
-    "scd2_pages": (q_scd2_pages, SQL_SCD2_PAGES),
     "wrs_sample": (q_wrs_sample, SQL_WRS_SAMPLE),
-    "hll_by_source": (q_hll_by_source, SQL_HLL_BY_SOURCE),
     "lang_source_mi": (q_lang_source_mi, SQL_LANG_SOURCE_MI),
     "fd_census": (q_fd_census, SQL_FD_CENSUS),
     "negative_samples": (q_negative_samples, SQL_NEGATIVE_SAMPLES),
     "k_anon_docs": (q_k_anon_docs, SQL_K_ANON_DOCS),
-    "prefix_jaccard_pairs": (q_prefix_jaccard_pairs, SQL_PREFIX_JACCARD_PAIRS),
-    "source_cosine": (q_source_cosine, SQL_SOURCE_COSINE),
     "homoglyph_spoof": (q_homoglyph_spoof, SQL_HOMOGLYPH_SPOOF),
     "neyman_plan": (q_neyman_plan, SQL_NEYMAN_PLAN),
     "contract_checks": (q_contract_checks, SQL_CONTRACT_CHECKS),
-    "log_quantile_sketch": (q_log_quantile_sketch, SQL_LOG_QUANTILE_SKETCH),
-    "stream_cms": (q_stream_cms, SQL_STREAM_CMS),
-    "rbo_source_rankings": (q_rbo_source_rankings, SQL_RBO_SOURCE_RANKINGS),
-    "vocab_coverage": (q_vocab_coverage, SQL_VOCAB_COVERAGE),
-    "cdc_docs": (q_cdc_docs, SQL_CDC_DOCS),
-    "emd_length_drift": (q_emd_length_drift, SQL_EMD_LENGTH_DRIFT),
-    "doc_novelty": (q_doc_novelty, SQL_DOC_NOVELTY),
-    "term_adaptation": (q_term_adaptation, SQL_TERM_ADAPTATION),
-    "bigram_cond_entropy": (q_bigram_cond_entropy, SQL_BIGRAM_COND_ENTROPY),
     "hill_tail": (q_hill_tail, SQL_HILL_TAIL),
-    "page_churn_census": (q_page_churn_census, SQL_PAGE_CHURN_CENSUS),
     "theta_vocab_by_source": (q_theta_vocab_by_source, SQL_THETA_VOCAB_BY_SOURCE),
     "theta_vocab_overlap": (q_theta_vocab_overlap, SQL_THETA_VOCAB_OVERLAP),
     "cdc_chunk_census": (q_cdc_chunk_census, SQL_CDC_CHUNK_CENSUS),
-    "linear_probe_train": (q_linear_probe_train, SQL_LINEAR_PROBE_TRAIN),
     "dedup_cc_best": (q_dedup_cc_best, SQL_DEDUP_CC_BEST),
-    "bpe_merges": (q_bpe_merges, SQL_BPE_MERGES),
     "quantile_normalize": (q_quantile_normalize, SQL_QUANTILE_NORMALIZE),
-    "dsir_weights": (q_dsir_weights, SQL_DSIR_WEIGHTS),
-    "bigram_lm_ppl": (q_bigram_lm_ppl, SQL_BIGRAM_LM_PPL),
-    "conformal_bounds": (q_conformal_bounds, SQL_CONFORMAL_BOUNDS),
     "coverage_select": (q_coverage_select, SQL_COVERAGE_SELECT),
     "lsh_recall_eval": (q_lsh_recall_eval, SQL_LSH_RECALL_EVAL),
     "split_by_cluster": (q_split_by_cluster, SQL_SPLIT_BY_CLUSTER),
     "slot_apportionment": (q_slot_apportionment, SQL_SLOT_APPORTIONMENT),
-    "dedup_family_kappa": (q_dedup_family_kappa, _sql_dedup_family_kappa),
     "dedup_cc_incr": (q_dedup_cc_incr, SQL_DEDUP_CC_INCR),
     "lsh_candidate_forecast": (q_lsh_candidate_forecast, SQL_LSH_CANDIDATE_FORECAST),
-    "dedup_audit_sample": (q_dedup_audit_sample, _sql_dedup_audit_sample),
     "winnow_overlap": (q_winnow_overlap, SQL_WINNOW_OVERLAP),
-    "bpe_fertility": (q_bpe_fertility, SQL_BPE_FERTILITY),
     "flesch_reading": (q_flesch_reading, SQL_FLESCH_READING),
     "ks_length_drift": (q_ks_length_drift, SQL_KS_LENGTH_DRIFT),
-    "triangle_census": (q_triangle_census, SQL_TRIANGLE_CENSUS),
     "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
     "script_profile": (q_script_profile, _script_profile_sql),
     "minhash_calibration": (q_minhash_calibration, SQL_MINHASH_CALIBRATION),
     "boilerplate_prefix": (q_boilerplate_prefix, SQL_BOILERPLATE_PREFIX),
     "keep_rate_curve": (q_keep_rate_curve, _sql_keep_rate_curve),
     "unigram_kl_drift": (q_unigram_kl_drift, SQL_UNIGRAM_KL_DRIFT),
-    "dedup_provenance": (q_dedup_provenance, _sql_dedup_provenance),
     "stream_gopher_score": (q_stream_gopher_score, SQL_STREAM_GOPHER_SCORE),
     "keep_rate_by_lang": (q_keep_rate_by_lang, _sql_keep_rate_by_lang),
-    "snapshot_diff": (q_snapshot_diff, SQL_SNAPSHOT_DIFF),
     "zorder_values": (q_zorder_values, _sql_zorder_values),
     "chunk_plan_strided": (q_chunk_plan_strided, SQL_CHUNK_STRIDED),
     "mixture_temperature": (q_mixture_temperature, SQL_MIXTURE_TEMPERATURE),
     "dedup_exact_best": (q_dedup_exact_best, SQL_DEDUP_EXACT_BEST),
-    "incremental_curation_e2e": (q_incremental_curation_e2e, _sql_incremental_curation),
-    "dup_cross_source": (q_dup_cross_source, _dup_cross_source_sql),
     "s3_stratified_sample": (q_s3_stratified_sample, SQL_S3_STRATIFIED),
     "p5_uid64": (q_p5_uid64, SQL_P5_UID64),
     "p7_scrub": (q_p7_scrub, _scrub_sql),
