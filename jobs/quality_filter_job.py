@@ -53,7 +53,11 @@ def main(argv: list[str]) -> int:
 
     from xdan_dqa_spark.session import get_spark
     from xdan_dqa_spark.pipeline import score_webtext, salted_repartition
-    from xdan_dqa_spark.operators.metrics import partition_metrics
+    from xdan_dqa_spark.operators.metrics import (
+        format_summary_table,
+        run_readback,
+        summarize_run,
+    )
     from xdan_dqa_spark.operators.resume import (
         committed_ids,
         committed_ids_table,
@@ -121,48 +125,34 @@ def main(argv: list[str]) -> int:
         cfg = replace(cfg, allowed_langs=tuple(x for x in args.langs.split(",") if x))
     scored = score_webtext(df, cfg)
 
-    # Score once: the write runs the scoring plan, and the lineage rows
-    # are read back from the part files that write committed (three small
-    # columns; part_id from each file's write task number) — never from a
-    # second evaluation of `scored`.
+    # Score once: the write runs the scoring plan. Then ONE grouped scan
+    # of the committed output (three small columns) serves the lineage
+    # rows (this run's files, grouped by write task), the run summary and
+    # the cumulative RESULT counts — never a second evaluation of `scored`.
     if args.bucketed_table:
         written = appended_files(
             lambda: write_scored_bucketed(scored, args.bucketed_table),
             spark, table=args.bucketed_table)
+        committed = spark.table(args.bucketed_table)
     else:
         written = appended_files(
             lambda: scored.write.mode("append").parquet(out_scored),
             spark, path=out_scored)
-    pm = partition_metrics(scored, args.run_id, written_files=written).persist()
-    pm.write.mode("append").parquet(out_metrics)
-
-    from pyspark.sql import functions as F
-
-    from xdan_dqa_spark.operators.metrics import format_summary_table, summarize_run
-
-    stats = (
-        (spark.table(args.bucketed_table) if args.bucketed_table
-         else spark.read.parquet(out_scored))
-        .agg(
-            F.count("doc_id").alias("n"),
-            F.avg(F.col("keep").cast("double")).alias("keep_rate"),
-        )
-        .collect()[0]
-    )
+        committed = spark.read.schema(scored.schema).parquet(out_scored)
+    rb = run_readback(committed, written, args.run_id)
+    rb.lineage.write.mode("append").parquet(out_metrics)
     wall = time.time() - t0
     # End-of-run stats table (reference src/cli.py:119-139) — THIS
-    # invocation's numbers, folded from the in-memory lineage rows just
-    # written (persisted above: a handful of partition rows, no re-scan).
+    # invocation's numbers, folded from the lineage rows just written.
     # Summarizing from the metrics PARQUET would over-count on a rerun
     # that reuses a run_id (append accumulates rows per run_id across
     # invocations); the RESULT line below is the cumulative view.
-    summary = summarize_run(pm, args.run_id, wall)
-    print(format_summary_table(summary))
-    pm.unpersist()
+    print(format_summary_table(summarize_run(rb.rows, args.run_id, wall)))
+    n = rb.committed_docs
     print(
-        f"RESULT run_id={args.run_id} committed_docs={stats['n']} "
-        f"keep_rate={stats['keep_rate']:.4f} wall_sec={wall:.2f} "
-        f"docs_per_sec={(stats['n'] / wall):.1f}"
+        f"RESULT run_id={args.run_id} committed_docs={n} "
+        f"keep_rate={rb.keep_rate:.4f} wall_sec={wall:.2f} "
+        f"docs_per_sec={(n / wall):.1f}"
     )
     spark.stop()
     return 0

@@ -5,14 +5,19 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.exactness import on_generated_pages, sql_mismatches
 from xdan_dqa_spark.functions.category import (
     CATEGORY_MARKERS,
     CATEGORY_PRIORITY,
     DEFAULT_CATEGORY,
+    _category_pattern,
     category_expr,
+    category_score_sql,
     category_scores_from_lower,
     lower_col,
+    lower_sql,
 )
+from xdan_dqa_spark.functions.sqltext import lit
 
 
 def _label(spark, text: str) -> str:
@@ -168,3 +173,29 @@ def test_marker_counts_match_token_oracle(spark, webtext):
     assert edges["you me"] == 2 and edges["you me you"] == 3
     assert edges["call me\n"] == 0 and edges["x\tyou"] == 0
     assert edges["YOU Me\r\n"] == 1 and edges[" you  me "] == 2
+
+
+# --- exactness of the one-pass category scores -------------------------------
+
+def _category_mismatches(spark, texts):
+    """The one-extraction scores against the previous form: one
+    regexp_count of each category's own pattern over the lowered text."""
+    previous = {cat: f"CAST(regexp_count(_t, {lit(_category_pattern(m))}) AS DOUBLE)"
+                for cat, m in CATEGORY_MARKERS.items()}
+    return sql_mismatches(spark, texts, category_score_sql("_t"), previous,
+                          levels=({"_t": lower_sql("text")},))
+
+
+def test_category_scores_equal_previous_sql_on_fixture(spark, webtext):
+    texts = [r["text"] for r in webtext.select("text").collect()] + MARKER_EDGES
+    texts += ["def definition defdef def", "definition\ndef", "you me you me"]
+    bad = _category_mismatches(spark, texts)
+    assert not bad, bad[:5]
+
+
+def test_category_scores_equal_previous_sql_on_generated_pages(spark):
+    def check(texts):
+        bad = _category_mismatches(spark, texts)
+        assert not bad, bad[:5]
+
+    on_generated_pages(check)

@@ -187,7 +187,6 @@ def test_host_of_parses_authority_variants(spark):
     """host_of strips scheme, userinfo, port, path/query/fragment and
     lowercases; malformed/NULL urls map to '' (never NULL — the
     blocklist join key must be total)."""
-    from pyspark.sql import functions as F
 
     from xdan_dqa_spark.operators.curation import host_of
 
@@ -314,7 +313,6 @@ def test_leak_safe_split_keeps_variants_together(spark):
     """A case/whitespace-variant copy must land in the SAME split as its
     original (the anti-leakage contract); assignment is map-only (zero
     Exchanges) and deterministic; bad weights raise."""
-    from pyspark.sql import functions as F
 
     from xdan_dqa_spark.operators.curation import leak_safe_split
 
@@ -399,7 +397,6 @@ def test_ks_drift_single_group_is_null(spark):
 def test_boilerplate_prefix_flags_shared_opening(spark):
     """Three docs of source s1 open with the same 8-token banner -> all
     three flagged, share = 3/4; the odd doc out is not flagged."""
-    from xdan_dqa_spark.plans.entry_queries import QUERIES  # noqa: F401
     import xdan_dqa_spark.plans.entry_queries as eq
     import os, tempfile
 
@@ -628,7 +625,6 @@ def test_hamilton_apportionment_sums_exactly(spark):
     """Largest-remainder slots must sum EXACTLY to the budget for any
     weight profile — the invariant float-proportional rounding breaks."""
     from xdan_dqa_spark.plans.entry_queries import q_slot_apportionment
-    import pyspark.sql.functions as F
 
     r = q_slot_apportionment(spark, "/root/testdata/sf0.001")
     rows = r.collect()

@@ -8,11 +8,18 @@ import unicodedata
 import pytest
 from pyspark.sql import functions as F
 
+from tests.exactness import on_generated_pages, sql_mismatches
 from xdan_dqa_spark.functions.heuristics import (
+    _LINE_SEP_RE,
     _STOPWORD_RE,
+    CJK_CLASS,
     STOPWORDS,
     heuristic_columns,
+    heuristic_sql,
+    words_sql,
 )
+from xdan_dqa_spark.functions.sqltext import lit
+
 
 def _signals(spark, text: str) -> dict[str, float]:
     df = spark.createDataFrame([(text,)], "text string")
@@ -157,3 +164,53 @@ def test_stopword_hits_match_token_oracle(spark, webtext):
     assert edges["İn the iſt"] == 3
     assert edges["the_end the2 theory th thee"] == 0
     assert edges["de des der dess dem"] == 4
+
+
+# --- exactness of the rewritten signals --------------------------------------
+
+# The translate char sets of the previous forms: Java \s, and SYMBOL_CLASS.
+_WS_CHARS = " \t\n\x0b\f\r"
+_SYMBOL_CHARS = "@#$%^&*{}<>|\\~`=+"
+
+
+def _previous_heuristic_sql(text: str, words: str) -> dict[str, str]:
+    """The four signals as they were written before their current form:
+    two translate passes, and the line array and the CJK count under a
+    CASE branch. The reference the current text must equal exactly."""
+    t, n = f"coalesce({text}, '')", f"size({words})"
+    lines = f"array_remove(split({t}, {lit(_LINE_SEP_RE)}), '')"
+    cjk = f"regexp_count({t}, {lit(CJK_CLASS)})"
+    return {
+        "mean_word_len": (
+            f"CASE WHEN {n} = 0 THEN 0.0D ELSE"
+            f" CAST(length(translate({t}, {lit(_WS_CHARS)}, '')) AS DOUBLE) / {n} END"),
+        "symbol_ratio": (
+            f"CASE WHEN {n} = 0 THEN 0.0D ELSE CAST(length({t})"
+            f" - length(translate({t}, {lit(_SYMBOL_CHARS)}, '')) AS DOUBLE) / {n} END"),
+        "dup_line_frac": (
+            f"CASE WHEN size({lines}) <= 1 THEN 0.0D ELSE CAST(size({lines})"
+            f" - size(array_distinct({lines})) AS DOUBLE) / size({lines}) END"),
+        "cjk_ratio": (f"CASE WHEN length({t}) = 0 THEN 0.0D"
+                      f" ELSE CAST({cjk} AS DOUBLE) / length({t}) END"),
+    }
+
+
+def _rewritten_signal_mismatches(spark, texts):
+    previous = _previous_heuristic_sql("text", "_w")
+    current = {k: v for k, v in heuristic_sql("text", "_w").items() if k in previous}
+    return sql_mismatches(spark, texts, current, previous, levels=({"_w": words_sql("text")},))
+
+
+def test_rewritten_signals_equal_previous_sql_on_fixture(spark, webtext):
+    texts = [r["text"] for r in webtext.select("text").collect()]
+    texts += ["", "\n", "a", "a\n", "a\na", "的", " \t", "x\r\n\r\nx\n"]
+    bad = _rewritten_signal_mismatches(spark, texts)
+    assert not bad, bad[:5]
+
+
+def test_rewritten_signals_equal_previous_sql_on_generated_pages(spark):
+    def check(texts):
+        bad = _rewritten_signal_mismatches(spark, texts)
+        assert not bad, bad[:5]
+
+    on_generated_pages(check)

@@ -21,7 +21,7 @@ def test_summarize_run_fields(spark, webtext):
     from xdan_dqa_spark.pipeline import score_webtext, with_doc_id
 
     scored = score_webtext(with_doc_id(webtext))
-    pm = partition_metrics(scored, "run-x").cache()
+    pm = partition_metrics(scored, "run-x").collect()
     s = summarize_run(pm, "run-x", wall_sec=2.0)
     assert s["total_items"] == 800
     assert s["total_items"] == s["successfully_processed"] + s["filtered_items"]
@@ -36,7 +36,6 @@ def test_summarize_run_fields(spark, webtext):
                   "Filtered Items", "Success Rate", "Processing Time",
                   "Items per Second"):
         assert label in table
-    pm.unpersist()
 
 
 def test_job_subprocess_end_to_end(tmp_path):
@@ -193,16 +192,17 @@ def test_job_lineage_equals_plan_lineage(spark, webtext, tmp_path, monkeypatch, 
     committed — equal partition_metrics evaluated on the same scored plan
     (part_id, every aggregate and the parquet schema, committed_at aside),
     on a fresh run and on a --resume run that adds new docs."""
-    from xdan_dqa_spark.operators import metrics
+    from xdan_dqa_spark import pipeline
+    from xdan_dqa_spark.operators.metrics import partition_metrics
 
-    plans = {}
-    orig = metrics.partition_metrics
+    plans = []
+    orig = pipeline.score_webtext
 
-    def spy(scored, run_id, written_files=None):
-        plans[run_id] = scored
-        return orig(scored, run_id, written_files)
+    def spy(*args, **kwargs):
+        plans.append(orig(*args, **kwargs))
+        return plans[-1]
 
-    monkeypatch.setattr(metrics, "partition_metrics", spy)
+    monkeypatch.setattr(pipeline, "score_webtext", spy)
     inputs = _webtext_inputs(webtext, tmp_path)
     out = str(tmp_path / "out")
     fresh = _run_in_process(monkeypatch, capsys, [
@@ -212,11 +212,11 @@ def test_job_lineage_equals_plan_lineage(spark, webtext, tmp_path, monkeypatch, 
     assert (_total_items(fresh), _total_items(resumed)) == (200, 100)
 
     job_tables = _part_tables(f"{out}/metrics")
-    for run_id, n_docs in (("fresh", 200), ("resume", 100)):
+    for plan, run_id, n_docs in zip(plans, ("fresh", "resume"), (200, 100), strict=True):
         # a plan's input file listing is fixed when the plan is built, so
         # evaluating it again after the write scores this run's docs only
         ref = str(tmp_path / f"ref-{run_id}")
-        orig(plans[run_id], run_id).write.parquet(ref)
+        partition_metrics(plan, run_id).write.parquet(ref)
         ref_tables = _part_tables(ref)
         got = _lineage_rows(job_tables, run_id)
         assert got == _lineage_rows(ref_tables, run_id)
@@ -255,6 +255,24 @@ def test_job_scores_each_document_once(spark, webtext, tmp_path, monkeypatch, ca
     assert "InsertIntoHadoopFsRelationCommand" in nodes[0]
 
 
+def test_job_runs_three_sql_executions(spark, webtext, tmp_path, monkeypatch, capsys):
+    """One job run is three SQL executions: the scored write, ONE grouped
+    read-back of the committed output (lineage, summary and RESULT all
+    come from it) and the lineage write, which reads local rows only."""
+    inputs = _webtext_inputs(webtext, tmp_path)
+    before = {i for i, _ in _sql_executions(spark)}
+    out = _run_in_process(monkeypatch, capsys, [
+        "--input", inputs[200], "--output", str(tmp_path / "out"), "--run-id", "three"])
+    assert _total_items(out) == 200
+    assert "RESULT run_id=three committed_docs=200 " in out
+    plans = [p for i, p in _sql_executions(spark) if i not in before]
+    assert len(plans) == 3
+    write, readback, lineage = plans
+    assert "ArrowEvalPython" in write and "InsertIntoHadoopFsRelationCommand" in write
+    assert "HashAggregate" in readback and "InsertIntoHadoopFsRelationCommand" not in readback
+    assert "InsertIntoHadoopFsRelationCommand" in lineage and "FileScan" not in lineage
+
+
 def test_dedup_job_shingles_each_document_once(spark, tmp_path, full_plan_strings):
     """One dedup_job --method minhash run executes the shingle extraction
     (regexp_extract_all) in exactly one SQL plan, and not in the write:
@@ -275,7 +293,7 @@ def test_job_lineage_empty_runs(spark, webtext, tmp_path, monkeypatch, capsys):
     """A --resume run with no new docs and a run over an empty input each
     write zero lineage rows and print "Total Items 0"; every metrics file
     keeps the lineage schema (part_id int32 not null)."""
-    from xdan_dqa_spark.operators.metrics import partition_metrics
+    from xdan_dqa_spark.operators.metrics import partition_metrics, run_readback
     from xdan_dqa_spark.pipeline import score_webtext, with_doc_id
 
     inputs = _webtext_inputs(webtext, tmp_path)
@@ -295,11 +313,13 @@ def test_job_lineage_empty_runs(spark, webtext, tmp_path, monkeypatch, capsys):
     part_id = tables[0].schema.field("part_id")
     assert str(part_id.type) == "int32" and not part_id.nullable
 
-    # nothing written at all: zero rows, no read of an empty path list
+    # nothing written at all: zero lineage rows, of the plan-evaluated
+    # lineage schema, while the cumulative counts still see the output
     scored = score_webtext(with_doc_id(webtext.limit(0)))
-    pm = partition_metrics(scored, "r", written_files=[])
-    assert pm.count() == 0
-    assert pm.schema == partition_metrics(scored, "r").schema
+    rb = run_readback(spark.read.schema(scored.schema).parquet(f"{out}/scored"), [], "r")
+    assert rb.rows == [] and rb.lineage.count() == 0
+    assert rb.lineage.schema == partition_metrics(scored, "r").schema
+    assert rb.committed_docs == 200
 
 
 def test_bucketed_job_lineage_sums_to_appended_rows(webtext, tmp_path):

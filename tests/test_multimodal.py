@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from xdan_dqa_spark.operators.multimodal import (
     EMBED_DIM,
-    MEDIA_META_SCHEMA,
     frame_sample,
     media_features,
     try_real_decoders,

@@ -6,10 +6,19 @@ from __future__ import annotations
 
 # Textual counts in the executed plan of score_webtext(fixture). A level
 # collapsed into its consumer re-inlines a regex/array subtree 2-3x and
-# raises these; the column-API build before the SQL-text one had the same
-# 21/5/2 (and two ArrowEvalPython).
-REGEX_CALLS = 21   # 17 regexp_count (as size(regexp_extract_all(…))) + 4 regexp_replace
-SPLIT_CALLS = 5    # the token array once, the line array in dup_line_frac 4x
+# raises these. A subtree written more than once inside ONE projection and
+# outside any CASE branch is evaluated once per row there (codegen's
+# common-subexpression elimination), and a guard's CASE runs one branch.
+# regexp_count prints as size(regexp_extract_all(…)).
+REGEX_CALLS = 34   # heuristics 5: stopword, symbol, alpha, CJK (in cjk_ratio and
+#                    n_cjk, evaluated once); category 16: the marker extraction in
+#                    each of the 8 scores (evaluated once) + 8 counts over its short
+#                    match list; scrub 8 regexp_replace: email 4, ssn 2, phone 1,
+#                    profanity 1 (a guard's CASE holds the chain below it in both
+#                    branches); 2 mask counts in scrub_count; the \S+ count of
+#                    output_tokens in token_info's 3 fields (evaluated once)
+SPLIT_CALLS = 4    # the token array once, the line array in dup_line_frac 3x
+#                    (two sizes and array_distinct, evaluated once)
 LOWER_CALLS = 2    # the lowered text once, the tokens in distinct_word_ratio once
 # The SQL-text build measured 146-234 round trips (py4j also sends one
 # when a freed Python proxy releases its JVM object, so garbage collection

@@ -271,3 +271,32 @@ def test_every_operator_is_named_outside_the_tests():
     stale = [n for n in OPERATORS_UNNAMED_ALLOWED if n not in unnamed]
     assert not dead, f"operators nothing outside the tests names: {dead}"
     assert not stale, f"allow-listed operators that are named now: {stale}"
+
+
+def test_every_import_is_used():
+    """Every name an `import` binds in the package, jobs/ or tests/ is
+    read in the scope that imports it: the whole file for a module-level
+    import, the function for one inside a function (`from __future__`
+    aside). No linter runs on this repo, so an import left behind by a
+    deletion would otherwise stay. Parses source only."""
+    unused = []
+    for pattern in ("xdan_dqa_spark/**/*.py", "jobs/*.py", "tests/*.py"):
+        for path in sorted(glob.glob(os.path.join(ROOT, pattern), recursive=True)):
+            rel = _rel(path)
+
+            def check(node, scope):
+                for child in ast.iter_child_nodes(node):
+                    if (isinstance(child, (ast.Import, ast.ImportFrom))
+                            and getattr(child, "module", None) != "__future__"):
+                        read = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+                        unused.extend(
+                            f"{rel}:{child.lineno} {name}"
+                            for name in (a.asname or a.name.split(".")[0]
+                                         for a in child.names if a.name != "*")
+                            if name not in read)
+                    inner = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    check(child, child if inner else scope)
+
+            tree = _parse(rel)
+            check(tree, tree)
+    assert not unused, f"imports never used: {unused}"

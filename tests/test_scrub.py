@@ -4,7 +4,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from xdan_dqa_spark.functions.scrub import scrub_columns
+from tests.exactness import on_generated_pages, sql_mismatches
+from xdan_dqa_spark.functions.scrub import (
+    _MASKS_RE,
+    SCRUB_RULES,
+    scrub_columns,
+    scrub_count_cheap_sql,
+    scrub_sql,
+)
+from xdan_dqa_spark.functions.sqltext import lit
+from xdan_dqa_spark.functions.tokenize import NONWS_PLUS
 
 CASES = [
     # (input, expected_scrubbed, expected_count)
@@ -101,3 +110,58 @@ def test_pii_prevalence_progressive_no_double_count(spark):
     assert a["n_docs_with_pii"] == 2
     b = rows["b"]
     assert b["n_docs_with_pii"] == 0 and b["n_email"] == 0
+
+
+# --- exactness of the guarded chain ------------------------------------------
+
+def _previous_scrub_sql(text: str) -> dict[str, str]:
+    """scrubbed_text and scrub_count as written before the guards: every
+    pass on every page, and both mask counts on every page."""
+    t = f"coalesce({text}, '')"
+    for _name, pat, repl in SCRUB_RULES:
+        t = f"regexp_replace({t}, {lit(pat)}, {lit(repl)})"
+    masks = lit(_MASKS_RE)
+    return {"s": t, "c": f"CAST(regexp_count({t}, {masks})"
+                         f" - regexp_count(coalesce({text}, ''), {masks}) AS INT)"}
+
+
+def _scrub_mismatches(spark, texts):
+    current = {"s": scrub_sql("text"), "c": scrub_count_cheap_sql("text", scrub_sql("text"))}
+    return sql_mismatches(spark, texts, current, _previous_scrub_sql("text"))
+
+
+def test_guarded_scrub_equals_previous_sql_on_fixture(spark, webtext):
+    texts = [r["text"] for r in webtext.select("text").collect()] + [t for t, _, _ in CASES]
+    bad = _scrub_mismatches(spark, texts)
+    assert not bad, bad[:5]
+
+
+def test_guarded_scrub_equals_previous_sql_on_generated_pages(spark):
+    def check(texts):
+        bad = _scrub_mismatches(spark, texts)
+        assert not bad, bad[:5]
+
+    on_generated_pages(check)
+
+
+def _output_token_mismatches(scored):
+    """The pipeline's output_tokens against the previous form: the \\S+
+    runs of the scrubbed text, counted on every page."""
+    previous = f"CAST(regexp_count(scrubbed_text, {lit(NONWS_PLUS)}) AS BIGINT)"
+    return (scored.selectExpr("extracted_text", "token_info.output_tokens AS new",
+                              f"{previous} AS old")
+            .filter("new <> old").collect())
+
+
+def test_output_tokens_equal_previous_sql(spark, scored):
+    from xdan_dqa_spark.pipeline import score_webtext
+
+    assert not _output_token_mismatches(scored)
+
+    def check(texts):
+        df = spark.createDataFrame([(f"u{i}", t) for i, t in enumerate(texts)],
+                                   "url string, text string")
+        bad = _output_token_mismatches(score_webtext(df, text_col="text"))
+        assert not bad, bad[:5]
+
+    on_generated_pages(check, examples=3)

@@ -119,7 +119,6 @@ def test_gini_extremes(spark):
 
 
 def test_wrs_exact_k_weight_bias_and_partition_invariance(spark):
-    from xdan_dqa_spark.operators.curation import gini_concentration  # noqa: F401
     from xdan_dqa_spark.sources.readers import weighted_reservoir_topk
 
     rows = ([(i, 1000) for i in range(50)]          # heavy
@@ -325,7 +324,6 @@ def test_round5_operators_repartition_invariant(spark):
     decimal sums, integer fixed-point, and struct-max argmins must give
     BIT-IDENTICAL results at any parallelism. One fixture, several
     operators, 1 vs 13 partitions."""
-    import datetime as dt
 
     from xdan_dqa_spark.operators.curation import gini_concentration
     from xdan_dqa_spark.operators.metrics import mutual_information

@@ -2,10 +2,8 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from xdan_dqa_spark.schemas import WEBTEXT_SCHEMA
 
 
 def _write_batch(spark, webtext, path, lo, hi):

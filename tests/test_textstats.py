@@ -485,7 +485,6 @@ def test_hill_tail_index_recovers_pareto_alpha(spark):
     """A Pareto(alpha=2) sample via inverse-CDF on a deterministic grid:
     the Hill estimate must land near 2 (the estimator is asymptotically
     unbiased; the grid removes sampling noise)."""
-    from pyspark.sql import functions as F
 
     from xdan_dqa_spark.operators.textstats import hill_tail_index
 

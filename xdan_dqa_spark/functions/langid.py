@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..synth import WORDS, ZH_CHARS
+from ..synth import WORDS
 from .ngram_core import MAX_CHARS, EncodedBatch, encode_batch, lookup, segment_sums, tri_keys
 
 LANGS = ["en", "es", "fr", "de", "zh", "ja", "ko", "ru", "ar"]  # fixed order

@@ -18,6 +18,7 @@ drop-the-blob-early rule the text pipeline applies to ``html``).
 
 from __future__ import annotations
 
+import importlib.util
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -56,9 +57,7 @@ EMBED_DIM = 16
 def try_real_decoders() -> bool:
     """True when a real image codec is importable (not in this sandbox)."""
     try:  # pragma: no cover - container has no PIL
-        import PIL.Image  # noqa: F401
-
-        return True
+        return importlib.util.find_spec("PIL.Image") is not None
     except ImportError:
         return False
 

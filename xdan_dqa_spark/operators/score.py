@@ -15,7 +15,7 @@ same text in ``F.expr``.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F

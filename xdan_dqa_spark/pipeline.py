@@ -160,8 +160,8 @@ def score_webtext(
     df, cols = _project(df, cols, {
         **{h[k]: v for k, v in h_sql.items()},
         # P2's topical label (8-way DataCategory, reference
-        # src/models.py:6-15) — one regexp_count pass per category over one
-        # lowered text column.
+        # src/models.py:6-15) — one marker-extraction pass over one lowered
+        # text column, shared by the eight category scores.
         "_cat_t": lower_sql(text),
         # Scrub: materialize the replacement chain once; the count is then
         # derived by literal mask-token counting — no second regex chain.
@@ -177,14 +177,17 @@ def score_webtext(
     # Token-accounting envelope (reference TokenInfo src/data_types.py:6-12,
     # cost formula src/data_transformer.py:181-192): input = tokens of the
     # extracted text, output = tokens of the scrubbed text we publish.
-    # out_tok counts \S+ runs directly — value-identical to
-    # size(words_sql(...)) (verified 0 mismatches / 240k docs incl. PII
-    # rows) but allocation-free: the split materializes a full string
-    # array per row just to take its size. (A pure-arithmetic derivation
-    # from input tokens is UNSOUND: a phone match can span whitespace, so
-    # scrubbing merges tokens.)
+    # A page the scrub left unchanged has the input's tokens: the size of
+    # the token array already built. Otherwise out_tok counts \S+ runs of
+    # the scrubbed text — value-identical to size(words_sql(...)) (verified
+    # 0 mismatches / 240k docs incl. PII rows). Spark rewrites
+    # regexp_count to size(regexp_extract_all(…)), so that count still
+    # allocates every match. (A pure-arithmetic derivation from input
+    # tokens is UNSOUND: a phone match can span whitespace, so scrubbing
+    # merges tokens.)
     in_tok = f"CAST({h['n_words']} AS BIGINT)"
-    out_tok = f"CAST(regexp_count(scrubbed_text, {lit(NONWS_PLUS)}) AS BIGINT)"
+    out_tok = (f"CASE WHEN scrubbed_text = coalesce({text}, '') THEN CAST(size(_words) AS BIGINT)"
+               f" ELSE CAST(regexp_count(scrubbed_text, {lit(NONWS_PLUS)}) AS BIGINT) END")
     df, cols = _project(df, cols, {
         **{cat[c]: v for c, v in cat_sql.items()},
         "quality_metrics": "struct(" + ", ".join(

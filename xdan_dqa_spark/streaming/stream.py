@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.metrics import partition_metrics
+from ..operators.metrics import run_readback
 from ..operators.score import QualityConfig
 from ..pipeline import score_webtext, with_doc_id
 from ..schemas import WEBTEXT_SCHEMA
@@ -65,8 +65,11 @@ def score_stream(
         out = f"{output_dir}/scored"
         written = appended_files(lambda: scored.write.mode("append").parquet(out),
                                  spark, path=out)
-        pm = partition_metrics(scored, f"{run_id}-b{batch_id}", written_files=written)
-        pm.write.mode("append").parquet(f"{output_dir}/metrics")
+        if written:
+            # this batch's files only: a micro-batch never re-reads older ones
+            batch = spark.read.schema(scored.schema).parquet(*written)
+            lineage = run_readback(batch, written, f"{run_id}-b{batch_id}").lineage
+            lineage.write.mode("append").parquet(f"{output_dir}/metrics")
 
     writer = (
         webtext_stream(spark, input_dir)
