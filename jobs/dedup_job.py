@@ -20,9 +20,13 @@ Scale notes live with each operator; this job adds only lifecycle:
     (overwrite), so a rerun never leaves old survivors next to new ones;
     the dir is not scoped to ``--run-id``, so two concurrent runs into
     one ``--output`` clobber each other;
-  * the report's input count is a separate ``count()`` over the input
-    (one more scan of the corpus, without the dedup work), and its
-    survivor count is read back from the written survivors;
+  * the report's counts come from two observations (``DataFrame.observe``)
+    on plans the run executes anyway, the input and the survivors write,
+    with no extra scan: the input count is taken where the dedup first
+    reads the input, the survivor count by the write itself (an input
+    the exact collapse empties is counted on its own, see _input_count);
+  * the report row is a local Arrow table, so its write reads nothing
+    and starts no Python worker;
   * ``--max-bucket`` forwards the LSH bucket cap (bounded-recall mode,
     logged by the operator — see dedup.cap_band_buckets).
 """
@@ -65,6 +69,20 @@ def _synth(spark, n: int):
     return base.withColumn("n_chars", F.length("text"))
 
 
+def _input_count(seen, docs) -> int:
+    """The input rows counted by the observation ``seen`` on ``docs``.
+    Adaptive execution drops the subtree under a join whose other side
+    turned out empty, collector included: an empty input, or one whose
+    ids or texts are all NULL, empties the exact collapse's side. The
+    observation then holds no row, and only then is the input counted."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return seen.get["n"]
+    except Py4JJavaError:
+        return docs.count()
+
+
 def main(argv: list[str]) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True,
@@ -83,6 +101,10 @@ def main(argv: list[str]) -> int:
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
+    import pyarrow as pa
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from xdan_dqa_spark.session import get_spark
     from xdan_dqa_spark.operators import dedup as D
 
@@ -92,6 +114,9 @@ def main(argv: list[str]) -> int:
         docs = _synth(spark, int(args.input.split(":", 1)[1]))
     else:
         docs = spark.read.parquet(args.input)
+    seen, written = Observation("dedup_input"), Observation("dedup_kept")
+    n_rows = F.count(F.lit(1)).alias("n")
+    source, docs = docs, docs.observe(seen, n_rows)
 
     method = args.method
     if method == "exact":
@@ -110,8 +135,6 @@ def main(argv: list[str]) -> int:
         kept = D.cc_dedup(docs, threshold=args.threshold,
                           max_bucket=args.max_bucket)
     else:  # cc_best — longest doc survives its cluster
-        from pyspark.sql import functions as F
-
         scored = docs if "n_chars" in docs.columns else docs.withColumn(
             "n_chars", F.length(F.coalesce(F.col("text"), F.lit("")))
         )
@@ -119,22 +142,19 @@ def main(argv: list[str]) -> int:
                                max_bucket=args.max_bucket)
 
     out = os.path.join(args.output, "deduped")
-    kept.write.mode("overwrite").parquet(out)
+    kept.observe(written, n_rows).write.mode("overwrite").parquet(out)
 
-    n_in = docs.count()
-    n_kept = spark.read.parquet(out).count()
+    n_in, n_kept = _input_count(seen, source), written.get["n"]
+    drop_rate = 1.0 - n_kept / max(n_in, 1)
     wall = time.time() - t0
-    report = spark.createDataFrame(
-        [(args.run_id, method, n_in, n_kept, n_in - n_kept,
-          round(1.0 - n_kept / max(n_in, 1), 6), round(wall, 3))],
-        "run_id string, method string, n_input long, n_kept long, "
-        "n_dropped long, drop_rate double, wall_sec double",
-    )
-    report.write.mode("overwrite").parquet(
+    report = pa.Table.from_pylist([{
+        "run_id": args.run_id, "method": method, "n_input": n_in, "n_kept": n_kept,
+        "n_dropped": n_in - n_kept, "drop_rate": round(drop_rate, 6),
+        "wall_sec": round(wall, 3)}])  # string, string, 3 × int64, double, double
+    spark.createDataFrame(report).write.mode("overwrite").parquet(
         os.path.join(args.output, "report"))
     print(f"RESULT run_id={args.run_id} method={method} n_input={n_in} "
-          f"n_kept={n_kept} drop_rate={1.0 - n_kept / max(n_in, 1):.4f} "
-          f"wall_sec={wall:.2f}")
+          f"n_kept={n_kept} drop_rate={drop_rate:.4f} wall_sec={wall:.2f}")
     return 0
 
 

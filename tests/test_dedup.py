@@ -846,13 +846,12 @@ def test_ngram_jaccard_pairs_honours_n(spark):
 
 
 def test_minhash_hash_family_is_exact(spark):
-    """Every h_j, evaluated by Spark with ANSI on (overflow would abort)
-    and by the DuckDB twin expression, equals Python integer arithmetic
-    at the key-range edges."""
+    """Every h_j, its one SQL text evaluated by Spark with ANSI on
+    (overflow would abort) and by DuckDB, equals Python integer
+    arithmetic at the key-range edges."""
     import duckdb
 
-    from xdan_dqa_spark.operators.dedup import MINHASH_COEFFS, minhash_hash
-    from xdan_dqa_spark.plans.entry_queries import _minhash_hash_sql
+    from xdan_dqa_spark.operators.dedup import MINHASH_COEFFS, minhash_hash_sql
 
     xs = [0, 1, (1 << 30) - 1, 1 << 30, (1 << 31) - 1, 1 << 31, (1 << 60) - 1]
     want = [[(a * x + b) % ((1 << 61) - 1) for a, b in MINHASH_COEFFS] for x in xs]
@@ -861,11 +860,11 @@ def test_minhash_hash_family_is_exact(spark):
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
         df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x long")
-        rows = df.orderBy("i").select(*[minhash_hash(F.col("x"), j) for j in ks]).collect()
+        rows = df.orderBy("i").selectExpr(*[minhash_hash_sql(j, "x") for j in ks]).collect()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
     assert [list(r) for r in rows] == want
-    cols = ", ".join(_minhash_hash_sql(j, "x") for j in ks)
+    cols = ", ".join(minhash_hash_sql(j, "x") for j in ks)
     values = ", ".join(f"({i}, {x}::BIGINT)" for i, x in enumerate(xs))
     duck = duckdb.sql(f"SELECT {cols} FROM (VALUES {values}) t(i, x) ORDER BY i").fetchall()
     assert [list(r) for r in duck] == want
@@ -883,3 +882,108 @@ def test_minhash_rejects_md5_string_band_index(spark, tmp_path):
     old = spark.createDataFrame([(1, 0, "0" * 32)], "doc_id long, band_id int, band_key string")
     with pytest.raises(AnalysisException, match="(?i)type"):
         minhash_incremental_dedup(batch, corpus, old).collect()
+
+
+# ------------------------------- survivors read by the key table's ids
+
+# DOCS plus a second row, with the same text, for a dropped id (2) and for
+# a kept id (4): a repeated id survives with all its rows, or with none.
+REPEATED_IDS = DOCS + [(2, DOCS[1][1]), (4, DOCS[3][1])]
+IDENTITY_CASES = [(DOCS, True), (DOCS, False), (REPEATED_IDS, True)]
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _parent_survivors(df, collapse_exact, policy, score_col=None):
+    """The survivors as ``exact_dedup(df) ▷ dropped`` (the best-member
+    form for cc_best), with the pairs, components and argmax computed
+    from the public operators and Python, not from the dedups under
+    test."""
+    from xdan_dqa_spark.operators.dedup import (
+        connected_components,
+        exact_dedup_best,
+        ngram_jaccard_pairs,
+    )
+
+    if not collapse_exact:
+        base = df
+    elif score_col:
+        base = exact_dedup_best(df, score_col)
+    else:
+        base = exact_dedup(df)
+    pairs = ngram_jaccard_pairs(base, threshold=0.5)
+    if policy == "pair":
+        return base.join(pairs.select(F.col("b").alias("doc_id")), "doc_id", "left_anti")
+    comp = {r["node"]: r["comp"] for r in connected_components(pairs).collect()}
+    if policy == "component":
+        return base.filter(~F.col("doc_id").isin([n for n, c in comp.items() if n != c]))
+    best = {}
+    for r in base.select("doc_id", score_col).collect():
+        c = comp.get(r["doc_id"], r["doc_id"])
+        best[c] = max(best.get(c, (r[score_col], -r["doc_id"])), (r[score_col], -r["doc_id"]))
+    return base.filter(F.col("doc_id").isin([-ni for _, ni in best.values()]))
+
+
+@pytest.mark.parametrize("rows, collapse_exact", IDENTITY_CASES)
+def test_dedups_equal_parent_survivor_formula(spark, rows, collapse_exact):
+    """minhash_dedup, cc_dedup and cc_dedup_best read their survivors from
+    the input by the ids of the materialised key table; the rows equal the
+    collapsed base minus the dropped ids, repeated ids included."""
+    from xdan_dqa_spark.operators.dedup import cc_dedup, cc_dedup_best
+
+    df = spark.createDataFrame(rows, "doc_id long, text string").withColumn(
+        "score", F.length("text"))
+    got = {
+        "pair": minhash_dedup(df, threshold=0.5, collapse_exact=collapse_exact),
+        "component": cc_dedup(df, threshold=0.5, collapse_exact=collapse_exact),
+        "best": cc_dedup_best(df, "score", threshold=0.5, collapse_exact=collapse_exact),
+    }
+    for policy, kept in got.items():
+        want = _parent_survivors(df, collapse_exact, policy,
+                                 "score" if policy == "best" else None)
+        assert _rows(kept) == _rows(want), policy
+    if rows is REPEATED_IDS:
+        assert [r[0] for r in _rows(got["pair"])].count(4) == 2
+
+
+@pytest.mark.parametrize("rows, collapse_exact", IDENTITY_CASES)
+def test_incremental_dedup_equals_parent_survivor_formula(spark, rows, collapse_exact):
+    """minhash_incremental_dedup's survivors equal its collapsed batch
+    minus the dropped ids, taken from one-shot minhash_dedup over corpus ∪
+    batch (equal policies while corpus ids are the lower ones)."""
+    from xdan_dqa_spark.operators.dedup import (
+        minhash_bands,
+        minhash_incremental_dedup,
+    )
+
+    corpus = spark.createDataFrame([(i + 1000, t) for i, (_, t) in enumerate(DOCS[3:])],
+                                   "doc_id long, text string")
+    # batch ids above the corpus ids
+    batch = spark.createDataFrame([(i + 2000, t) for i, t in rows], "doc_id long, text string")
+    kept = minhash_incremental_dedup(batch, corpus, minhash_bands(corpus), threshold=0.5,
+                                     collapse_exact=collapse_exact)
+    union_kept = minhash_dedup(corpus.unionByName(batch), threshold=0.5,
+                               collapse_exact=collapse_exact).select("doc_id")
+    base = exact_dedup(batch) if collapse_exact else batch
+    assert _rows(kept) == _rows(base.join(union_kept, "doc_id", "left_semi"))
+
+
+def test_minhash_dedup_build_round_trips(spark, docs, monkeypatch):
+    """Building minhash_dedup's plan (its key-table checkpoint included)
+    takes few py4j round trips: the hash, signature, bands, pairs and
+    verify are SQL text. The Column-built plan took ~3.2k; the text build
+    measured ~490."""
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    minhash_dedup(docs)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 1000

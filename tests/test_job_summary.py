@@ -289,6 +289,49 @@ def test_dedup_job_shingles_each_document_once(spark, tmp_path, full_plan_string
     assert "InsertIntoHadoopFsRelationCommand" not in shingling[0]
 
 
+def test_dedup_job_runs_each_stage_once(spark, tmp_path, full_plan_strings):
+    """One dedup_job run evaluates the exact collapse (the md5 content key)
+    in one executed plan, the key-table checkpoint, and no count pass: a
+    minhash run is three SQL executions (checkpoint, survivors write,
+    report write). The counts come from observations on the input and the
+    write, and the one-row report is written from a local table."""
+    import pyarrow.parquet as pq
+
+    for method in ("minhash", "cc", "cc_best"):
+        out = tmp_path / method
+        before = {i for i, _ in _sql_executions(spark)}
+        assert _job("dedup_job").main([
+            "--input", "synth:400", "--output", str(out), "--method", method,
+            "--run-id", "once", "--master", "local[4]"]) == 0
+        plans = [p for i, p in _sql_executions(spark) if i not in before]
+        assert sum("md5(" in p for p in plans) == 1, method
+        report = plans[-1]
+        assert "LocalTableScan" in report and "FileScan" not in report, method
+        rep = pq.read_table(out / "report").to_pylist()
+        assert len(rep) == 1 and rep[0]["n_input"] == 400, method
+        assert rep[0]["n_kept"] == pq.read_table(out / "deduped").num_rows, method
+        if method == "minhash":
+            assert len(plans) == 3
+            checkpoint, write, _ = plans
+            assert "md5(" in checkpoint and "InsertIntoHadoopFsRelationCommand" not in checkpoint
+            assert "InsertIntoHadoopFsRelationCommand" in write
+
+
+def test_dedup_job_counts_input_the_collapse_skips(spark, tmp_path):
+    """An input whose texts are all NULL empties the exact collapse, and
+    adaptive execution then skips the input's observation: the job counts
+    the input instead, and reports every row dropped."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "null_text")
+    spark.createDataFrame([(1, None), (2, None)], "doc_id long, text string").write.parquet(src)
+    out = tmp_path / "dd"
+    assert _job("dedup_job").main([
+        "--input", src, "--output", str(out), "--method", "minhash", "--master", "local[4]"]) == 0
+    rep = pq.read_table(out / "report").to_pylist()
+    assert [(r["n_input"], r["n_kept"]) for r in rep] == [(2, 0)]
+
+
 def test_job_lineage_empty_runs(spark, webtext, tmp_path, monkeypatch, capsys):
     """A --resume run with no new docs and a run over an empty input each
     write zero lineage rows and print "Total Items 0"; every metrics file

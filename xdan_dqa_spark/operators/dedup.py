@@ -12,13 +12,15 @@ Design notes for scale:
     bucket → verified pairs. No O(n²) anywhere; AQE handles hot buckets.
   * Each document is shingled once, into 60-bit md5-prefix keys
     (``shingle_keys``); the end-to-end dedups materialise that
-    (id, keys) table once and read it for both the signature and the
-    Jaccard verify.
+    (id, keys) table of the exact-collapsed input once and read it for
+    the signature, the Jaccard verify and the survivors' ids, so the
+    exact collapse runs once per dedup.
   * The MinHash family is integer arithmetic on those keys,
     (a·x + b) mod (2^61 − 1) reduced exactly in 64-bit steps
-    (``MINHASH_COEFFS``), and a band key is the band's min-hash longs. md5 and that arithmetic are
-    bit-identical in DuckDB, so every operator here is oracle-checkable
-    end to end.
+    (``MINHASH_COEFFS``), and a band key is the band's min-hash longs.
+    The arithmetic is one SQL text (``minhash_hash_sql``) that Spark and
+    the DuckDB twins both parse, and md5 is bit-identical in both, so
+    every operator here is oracle-checkable end to end.
 """
 
 from __future__ import annotations
@@ -156,9 +158,28 @@ def shingle_keys(text_col: str, n: int = 3) -> F.Column:
 
 
 def _key_table(df: DataFrame, text_col: str, id_col: str,
-               n_shingle: int = 3) -> DataFrame:
-    """(id, _sk) — each document's distinct shingle keys."""
-    return df.select(F.col(id_col), shingle_keys(text_col, n_shingle).alias("_sk"))
+               n_shingle: int = 3, extra: tuple[str, ...] = ()) -> DataFrame:
+    """(id, *extra, _sk) — each document's distinct shingle keys."""
+    return df.select(F.col(id_col), *extra, shingle_keys(text_col, n_shingle).alias("_sk"))
+
+
+def _survivors(df: DataFrame, keys: DataFrame, dropped: DataFrame, id_col: str,
+               collapse_exact: bool) -> DataFrame:
+    """The rows of ``df`` that survive a dedup whose key table ``keys`` was
+    built from ``df``'s exact-collapsed base: ``df ⋉ (key ids ▷ dropped)``.
+    The key table already holds the collapsed ids, so ``df`` is read once
+    and the exact collapse is not evaluated again. Without the collapse
+    it is ``df ▷ dropped``.
+
+    A repeated id keeps every row it has in ``df`` when it survives, as
+    the semi-join of the collapse does. The result differs from
+    ``exact_dedup(df) ▷ dropped`` only when one id carries two different
+    texts: a row whose text's lowest id is another id is kept here when
+    its own id survives through its other text."""
+    if not collapse_exact:
+        return df.join(dropped, id_col, "left_anti")
+    kept = keys.select(id_col).join(dropped, id_col, "left_anti")
+    return df.join(kept, id_col, "left_semi")
 
 
 # MinHash family over a 60-bit shingle key x:
@@ -173,7 +194,8 @@ def _key_table(df: DataFrame, text_col: str, id_col: str,
 # wraps mod p at most twice, so its h_j order keys almost linearly and the
 # k minima correlate — in simulation it missed 30% more J = 0.8 pairs
 # than the (1 − (1 − J²)^4) the 4×2 banding promises; this family matches
-# it. These constants are shared with the DuckDB twins.
+# it. ``minhash_hash_sql`` is the one text of h_j, read by the signature
+# aggregate and by the DuckDB twins.
 MINHASH_PRIME = (1 << 61) - 1
 MINHASH_SPLIT = 31
 MINHASH_COEFFS = (
@@ -188,49 +210,50 @@ MINHASH_COEFFS = (
 )
 
 
-def minhash_hash(x: F.Column, j: int) -> F.Column:
-    """h_j over a long key column in [0, 2^60) (see MINHASH_COEFFS)."""
+def minhash_hash_sql(j: int, x: str) -> str:
+    """h_j over a long key expression ``x`` in [0, 2^60), as SQL text that
+    Spark and DuckDB both parse and evaluate to the same long (see
+    MINHASH_COEFFS)."""
     a, b = MINHASH_COEFFS[j]
     a1, a0 = a >> MINHASH_SPLIT, a & ((1 << MINHASH_SPLIT) - 1)
-    x1 = F.shiftright(x, MINHASH_SPLIT)
-    x0 = x.bitwiseAND(F.lit((1 << MINHASH_SPLIT) - 1))
-    m = F.lit(a1) * x0 + F.lit(a0) * x1
-    s = (F.lit(2 * a1) * x1 + F.shiftright(m, 30)
-         + F.shiftleft(m.bitwiseAND(F.lit((1 << 30) - 1)), MINHASH_SPLIT) + F.lit(a0) * x0)
-    return (s % F.lit(MINHASH_PRIME) + F.lit(b)) % F.lit(MINHASH_PRIME)
+    x1, x0 = f"({x} >> {MINHASH_SPLIT})", f"({x} & {(1 << MINHASH_SPLIT) - 1})"
+    m = f"({a1} * {x0} + {a0} * {x1})"
+    s = (f"{2 * a1} * {x1} + ({m} >> 30) + (({m} & {(1 << 30) - 1}) << {MINHASH_SPLIT}) "
+         f"+ {a0} * {x0}")
+    return f"(({s}) % {MINHASH_PRIME} + {b}) % {MINHASH_PRIME}"
 
+
+# The signature, bands, pairs and verify are projected from SQL text: a
+# plan built Column by Column costs py4j round trips per node, and the k
+# hashes alone are hundreds of nodes.
 
 def _signatures(keys: DataFrame, id_col: str, k: int) -> DataFrame:
     if not 1 <= k <= len(MINHASH_COEFFS):
         raise ValueError(f"k must be in [1, {len(MINHASH_COEFFS)}] (got {k})")
-    ex = keys.select(F.col(id_col), F.explode("_sk").alias("_x"))
+    ex = keys.selectExpr(f"`{id_col}`", "explode(_sk) AS _x")
     return ex.groupBy(id_col).agg(
-        *[F.min(minhash_hash(F.col("_x"), j)).alias(f"h{j}") for j in range(k)]
+        *[F.expr(f"min({minhash_hash_sql(j, '_x')}) AS h{j}") for j in range(k)]
     )
 
 
 def _bands(sig: DataFrame, id_col: str, bands: int, rows: int) -> DataFrame:
-    # one explode, not a union of per-band selects — a union re-executes
+    # one inline, not a union of per-band selects — a union re-executes
     # the signature aggregate once per band
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.array(*[F.col(f"h{b * rows + r}") for r in range(rows)]).alias("band_key"),
-        )
+    structs = ", ".join(
+        f"struct({b} AS band_id, array({', '.join(f'h{b * rows + r}' for r in range(rows))})"
+        " AS band_key)"
         for b in range(bands)
-    ])
-    return sig.select(F.col(id_col), F.explode(band_structs).alias("_b")).select(
-        F.col(id_col), F.col("_b.band_id").alias("band_id"), F.col("_b.band_key").alias("band_key")
     )
+    return sig.selectExpr(f"`{id_col}`", f"inline(array({structs}))")
 
 
 def _band_pairs(bandsdf: DataFrame, id_col: str) -> DataFrame:
-    left = bandsdf.select(F.col("band_id"), F.col("band_key"), F.col(id_col).alias("a"))
-    right = bandsdf.select(F.col("band_id"), F.col("band_key"), F.col(id_col).alias("b"))
+    left = bandsdf.selectExpr("band_id", "band_key", f"`{id_col}` AS a")
+    right = bandsdf.selectExpr("band_id", "band_key", f"`{id_col}` AS b")
     return (
         left.join(right, ["band_id", "band_key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
+        .where("a < b")
+        .selectExpr("a", "b")
         .distinct()
     )
 
@@ -243,30 +266,30 @@ def _candidates(keys: DataFrame, id_col: str, max_bucket: int | None) -> DataFra
 
 def _pair_keys(keys: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     """pairs joined to both sides' keys as (a, b, …, _sha, _shb)."""
-    a = keys.select(F.col(id_col).alias("a"), F.col("_sk").alias("_sha"))
-    b = keys.select(F.col(id_col).alias("b"), F.col("_sk").alias("_shb"))
+    a = keys.selectExpr(f"`{id_col}` AS a", "_sk AS _sha")
+    b = keys.selectExpr(f"`{id_col}` AS b", "_sk AS _shb")
     return pairs.join(a, "a").join(b, "b")
 
 
 def _jaccard(keys: DataFrame, pairs: DataFrame, id_col: str,
              threshold: float) -> DataFrame:
-    joined = _pair_keys(keys, pairs, id_col)
-    inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
-    union = F.size(F.array_union("_sha", "_shb")).cast("double")
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    # |A ∪ B| = |A| + |B| − |A ∩ B|, exact because key arrays are
+    # distinct; never 0, because a key array is never empty (an empty
+    # text shingles to [""]). The intersection is projected once, below
+    # the division and the threshold filter that both read it.
+    sized = _pair_keys(keys, pairs, id_col).selectExpr(
+        "a", "b", "size(array_intersect(_sha, _shb)) AS _i", "size(_sha) + size(_shb) AS _n")
     return (
-        joined.withColumn("jaccard", jac)
+        sized.selectExpr("a", "b", "_i / (_n - _i) AS jaccard")
         .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
     )
 
 
-def _verified_pairs(df: DataFrame, text_col: str, id_col: str, threshold: float,
-                    max_bucket: int | None, n_shingle: int = 3) -> DataFrame:
-    """LSH candidates verified by exact word-``n_shingle``-gram Jaccard,
-    (a, b, jaccard), from ONE shingling of ``df``: its key table is
-    materialised once and read by both the signature and the verify."""
-    keys = _key_table(df, text_col, id_col, n_shingle).localCheckpoint(eager=True)
+def _verified_pairs(keys: DataFrame, id_col: str, threshold: float,
+                    max_bucket: int | None) -> DataFrame:
+    """LSH candidates verified by exact shingle Jaccard, (a, b, jaccard),
+    from ONE materialised key table, read by both the signature and the
+    verify."""
     return _jaccard(keys, _candidates(keys, id_col, max_bucket), id_col, threshold)
 
 
@@ -385,17 +408,18 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     Jaccard to every other doc, and the min-id rep drops exactly the rows
     the pair policy would), removes the quadratic bucket, and skips
     shingling the duplicates. Verified value-identical under 10%-identical
-    skew in tests/test_dedup.py.
+    skew in tests/test_dedup.py. The collapse runs once, into the
+    materialised key table, whose ids are then the collapsed base of the
+    survivors (see _survivors: a repeated id keeps all its rows, and only
+    an id carrying two different texts can differ from
+    ``exact_dedup(df) ▷ dropped``).
 
     ``max_bucket`` opts into bounded LSH buckets for near-identical
     template-spam clusters (see cap_band_buckets)."""
     base = exact_dedup(df, text_col, id_col) if collapse_exact else df
-    dups = (
-        _verified_pairs(base, text_col, id_col, threshold, max_bucket)
-        .select(F.col("b").alias(id_col))
-        .distinct()
-    )
-    return base.join(dups, id_col, "left_anti")
+    keys = _key_table(base, text_col, id_col).localCheckpoint(eager=True)
+    dups = _verified_pairs(keys, id_col, threshold, max_bucket).selectExpr(f"b AS `{id_col}`")
+    return _survivors(df, keys, dups, id_col, collapse_exact)
 
 
 def levenshtein_refine(df: DataFrame, pairs: DataFrame, text_col: str = "text",
@@ -444,7 +468,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
                         max_bucket: int | None = None) -> DataFrame:
     """All-pairs n-gram Jaccard via LSH candidates (the scalable route to
     'n-gram Jaccard dedup'); returns (a, b, jaccard)."""
-    return _verified_pairs(df, text_col, id_col, threshold, max_bucket, n)
+    keys = _key_table(df, text_col, id_col, n).localCheckpoint(eager=True)
+    return _verified_pairs(keys, id_col, threshold, max_bucket)
 
 
 # ------------------------------------------------- connected components
@@ -515,14 +540,15 @@ def cc_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     member has exactly the rep's neighbors, so component connectivity and
     the component-min survivor are unchanged — while removing the
     quadratic hot band bucket AND its quadratic edge set from the CC
-    input."""
+    input. The collapse runs once, into the materialised key table, and
+    the survivors are read from ``df`` by its ids (see _survivors for a
+    repeated id)."""
     base = exact_dedup(df, text_col, id_col) if collapse_exact else df
-    pairs = _verified_pairs(base, text_col, id_col, threshold, max_bucket)
+    keys = _key_table(base, text_col, id_col).localCheckpoint(eager=True)
+    pairs = _verified_pairs(keys, id_col, threshold, max_bucket)
     labels = connected_components(pairs.select("a", "b"))
-    drop = labels.filter(F.col("node") != F.col("comp")).select(
-        F.col("node").alias(id_col)
-    )
-    return base.join(drop, id_col, "left_anti")
+    drop = labels.where("node != comp").selectExpr(f"node AS `{id_col}`")
+    return _survivors(df, keys, drop, id_col, collapse_exact)
 
 
 # ---------------------------------------------------------------- SimHash
@@ -887,7 +913,9 @@ def minhash_incremental_dedup(new_df: DataFrame, corpus_df: DataFrame,
     Corpus and batch ids must be DISJOINT (they are distinct ingests;
     id collisions would conflate verify texts).
 
-    Returns the surviving rows of ``new_df`` (post exact-collapse)."""
+    Returns the surviving rows of ``new_df`` (post exact-collapse): the
+    batch is read once more, by the ids of its materialised key table, so
+    the collapse runs once (see _survivors for a repeated id)."""
     base = exact_dedup(new_df, text_col, id_col) if collapse_exact else new_df
     keys = _key_table(base, text_col, id_col).localCheckpoint(eager=True)
     sig = _signatures(keys, id_col, MINHASH_BANDS * MINHASH_ROWS)
@@ -912,12 +940,8 @@ def minhash_incremental_dedup(new_df: DataFrame, corpus_df: DataFrame,
         cross.select(F.col("a").alias(id_col)).distinct(), id_col, "left_semi"
     )
     both = _key_table(cand_old, text_col, id_col).unionByName(keys)
-    dropped = (
-        _jaccard(both, pairs, id_col, threshold)
-        .select(F.col("b").alias(id_col))
-        .distinct()
-    )
-    return base.join(dropped, id_col, "left_anti")
+    dropped = _jaccard(both, pairs, id_col, threshold).selectExpr(f"b AS `{id_col}`")
+    return _survivors(new_df, keys, dropped, id_col, collapse_exact)
 
 
 def minhash_calibration(df: DataFrame, text_col: str = "text",
@@ -1227,16 +1251,22 @@ def cc_dedup_best(df: DataFrame, score_col: str, text_col: str = "text",
     argmax over the UNCOLLAPSED component, so the oracle check itself
     verifies the equivalence. ``id_col`` must be an integral type (the
     tie-break negates it); any other type raises TypeError at call
-    time."""
+    time.
+
+    The collapse runs once, into the materialised key table, which
+    carries the score; the survivors are ``df ⋉ best ids``. A repeated id
+    keeps all its rows, and only an id carrying two different texts can
+    differ from ``exact_dedup_best(df) ⋉ best ids`` (see _survivors)."""
     _require_integral_id(df, id_col)
     base = (
         exact_dedup_best(df, score_col, text_col, id_col)
         if collapse_exact else df
     )
-    pairs = _verified_pairs(base, text_col, id_col, threshold, max_bucket)
+    keys = _key_table(base, text_col, id_col, extra=(score_col,)).localCheckpoint(eager=True)
+    pairs = _verified_pairs(keys, id_col, threshold, max_bucket)
     labels = connected_components(pairs.select("a", "b"))
     lab = (
-        base.select(F.col(id_col), F.col(score_col))
+        keys.select(F.col(id_col), F.col(score_col))
         .join(labels.withColumnRenamed("node", id_col), id_col, "left")
         .select(
             F.col(id_col), F.col(score_col),
@@ -1247,7 +1277,7 @@ def cc_dedup_best(df: DataFrame, score_col: str, text_col: str = "text",
         F.max(F.struct(F.col(score_col).alias("_s"),
                        (-F.col(id_col)).alias("_ni"))).alias("_m")
     ).select((-F.col("_m._ni")).alias(id_col))
-    return base.join(best, id_col, "left_semi")
+    return df.join(best, id_col, "left_semi")
 
 
 def cc_incremental(old_labels: DataFrame, new_pairs: DataFrame,

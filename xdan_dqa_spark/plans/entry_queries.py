@@ -609,11 +609,11 @@ def q_dedup_minhash_pairs(spark, sf_dir):
 
 # DuckDB twin of the MinHash/band construction (operators/dedup.py): word
 # 3-gram shingles, each keyed to the 60-bit long of its md5 prefix; h_j is
-# the min over the keys of (a_j·x + b_j) mod (2^61 − 1), reduced in the
-# operator's exact 64-bit steps with its MINHASH_COEFFS; a band key is the
-# list of its 2 min-hashes
-# (4 bands × 2 rows). A blank text is the one shingle '' as in Spark
-# (DuckDB's array_to_string of an empty list is NULL, hence the coalesce).
+# the min over the keys of (a_j·x + b_j) mod (2^61 − 1), written with the
+# operator's own hash text (dedup.minhash_hash_sql); a band key is the
+# list of its 2 min-hashes (4 bands × 2 rows). A blank text is the one
+# shingle '' as in Spark (DuckDB's array_to_string of an empty list is
+# NULL, hence the coalesce).
 _SHINGLES_SQL = f"""
 CASE WHEN len({_WORDS_WS_SQL}) < 3
      THEN [coalesce(array_to_string({_WORDS_WS_SQL}, ' '), '')]
@@ -623,21 +623,11 @@ END
 """
 
 
-def _minhash_hash_sql(j: int, x: str) -> str:
-    from ..operators.dedup import MINHASH_COEFFS, MINHASH_PRIME, MINHASH_SPLIT
-
-    a, b = MINHASH_COEFFS[j]
-    a1, a0 = a >> MINHASH_SPLIT, a & ((1 << MINHASH_SPLIT) - 1)
-    x1, x0 = f"({x} >> {MINHASH_SPLIT})", f"({x} & {(1 << MINHASH_SPLIT) - 1})"
-    m = f"({a1} * {x0} + {a0} * {x1})"
-    s = (f"{2 * a1} * {x1} + ({m} >> 30) + (({m} & {(1 << 30) - 1}) << {MINHASH_SPLIT}) "
-         f"+ {a0} * {x0}")
-    return f"(({s}) % {MINHASH_PRIME} + {b}) % {MINHASH_PRIME}"
-
-
 def _minhash_sql(j: int) -> str:
+    from ..operators.dedup import minhash_hash_sql
+
     keys = "[CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) FOR s IN sh]"
-    return f"list_min([{_minhash_hash_sql(j, 'x')} FOR x IN {keys}])"
+    return f"list_min([{minhash_hash_sql(j, 'x')} FOR x IN {keys}])"
 
 
 def _bands_sql_over(sigs: str) -> str:
