@@ -1,10 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship deterministic quality pipeline on
-sf0.001. ``queries()`` returns the 114 queries: the operators of
-SURVEY.md §2 plus the dedup and text-analysis stack. Every query reads
-the ``documents`` table, except two reference contracts over ``events``
-(``a2_event_totals``, ``stream_windowed_agg``).
+sf0.001. ``queries()`` returns every query in the registry: the
+operators of SURVEY.md §2 plus the dedup and text-analysis stack. Every
+query reads the ``documents`` table, except two reference contracts over
+``events`` (``a2_event_totals``, ``stream_windowed_agg``).
 ``oracle_sql()`` returns the DuckDB twin of each of them except the
 flagship ``pipeline_score_documents`` (rows-only); it builds the SQL
 strings without a SparkSession. Both come from the one registry table

@@ -73,7 +73,7 @@ def _input_count(seen, docs) -> int:
     """The input rows counted by the observation ``seen`` on ``docs``.
     Adaptive execution drops the subtree under a join whose other side
     turned out empty, collector included: an empty input, or one whose
-    ids or texts are all NULL, empties the exact collapse's side. The
+    ids are all NULL, empties the exact collapse's side. The
     observation then holds no row, and only then is the input counted."""
     from py4j.protocol import Py4JJavaError
 

@@ -619,17 +619,3 @@ def test_cluster_safe_split_covers_every_row_and_is_stable(spark):
     assert a == b and len(a) == 120
     splits = {s for _, _, s in a}
     assert splits <= {"train", "val", "test"} and "train" in splits
-
-
-def test_hamilton_apportionment_sums_exactly(spark):
-    """Largest-remainder slots must sum EXACTLY to the budget for any
-    weight profile — the invariant float-proportional rounding breaks."""
-    from xdan_dqa_spark.plans.entry_queries import q_slot_apportionment
-
-    r = q_slot_apportionment(spark, "/root/testdata/sf0.001")
-    rows = r.collect()
-    assert sum(x["slots"] for x in rows) == 1000
-    # monotone-ish: more weight never means fewer base slots
-    by_w = sorted(rows, key=lambda x: x["w"])
-    bases = [x["base"] for x in by_w]
-    assert bases == sorted(bases)

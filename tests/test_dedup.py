@@ -34,6 +34,29 @@ def test_exact_dedup(docs):
     assert kept == [1, 3, 4, 5, 6]  # 2 collapses into 1
 
 
+def test_exact_collapses_keep_one_null_text_like_their_twins(spark):
+    """NULL texts are one group of their own, as GROUP BY md5(text) makes
+    them in the SQL_DEDUP_EXACT twin: its lowest id survives, and an
+    empty text is a different group. Word-set dedup, like its twin, puts
+    a NULL text with the empty one."""
+    import duckdb
+
+    from xdan_dqa_spark.plans.entry_queries import SQL_DEDUP_EXACT, SQL_DEDUP_WORDSET
+
+    rows = [(1, None), (2, None), (3, "a"), (4, "a"), (5, ""), (6, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    exact = sorted(map(tuple, exact_dedup(df).select(
+        "doc_id", F.md5("text").alias("text_md5")).collect()))
+    assert exact == sorted(con.execute(SQL_DEDUP_EXACT).fetchall())
+    assert [i for i, _ in exact] == [1, 3, 5]
+    wordset = sorted(r[0] for r in wordset_dedup(df).select("doc_id").collect())
+    assert wordset == sorted(r[0] for r in con.execute(SQL_DEDUP_WORDSET).fetchall())
+    assert wordset == [1, 3]
+
+
 def test_wordset_dedup(docs):
     kept = sorted(r[0] for r in wordset_dedup(docs).select("doc_id").collect())
     # 2 (exact) and 3 (reordering, same word multiset→set) collapse into 1
@@ -384,77 +407,6 @@ def test_canonical_dedup_collapses_case_and_whitespace_variants(spark):
     # exact dedup keeps all four (no byte-identical pair) — canonical is
     # strictly stronger on reformatted copies.
     assert sorted(r["doc_id"] for r in exact_dedup(docs).collect()) == [1, 2, 3, 4]
-
-
-def test_span_dedup_scrubs_cross_doc_and_within_doc_repeats(spark):
-    """Span-granularity exact dedup (Lee et al. 2022 shape): the first
-    occurrence (lowest (doc_id, pos)) of each distinct span survives;
-    later cross-doc copies AND later within-doc repeats are scrubbed;
-    empty docs still come back with 0/0/''."""
-    from xdan_dqa_spark.operators.dedup import span_dedup
-
-    span = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"      # exactly one 10-token span
-    uniq1 = "a0 a1 a2 a3 a4 a5 a6 a7 a8 a9"
-    uniq2 = "b0 b1 b2"                            # short tail span
-    # Spans are token-aligned from each doc's OWN start (the documented
-    # approximation), so the shared span is placed at pos 0 of each doc.
-    docs = spark.createDataFrame(
-        [
-            (1, f"{span} {uniq1}"),
-            (2, f"{span} {uniq2}"),               # aligned duplicate of span
-            (3, f"{span} {span}"),                # within-doc aligned repeat
-            (4, ""),
-            (5, None),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in span_dedup(docs, span_tokens=10).collect()}
-    assert got[1]["n_spans"] == 2 and got[1]["n_spans_kept"] == 2
-    assert got[1]["text_clean"] == f"{span} {uniq1}"
-    # doc 2: its copy of `span` is scrubbed (doc 1 owns pos-min), tail kept
-    assert got[2]["n_spans"] == 2 and got[2]["n_spans_kept"] == 1
-    assert got[2]["text_clean"] == uniq2
-    # doc 3: both spans duplicate doc 1's — nothing survives
-    assert got[3]["n_spans"] == 2 and got[3]["n_spans_kept"] == 0
-    assert got[3]["text_clean"] == ""
-    # empty/null docs round-trip as 0/0/''
-    for d in (4, 5):
-        assert (got[d]["n_spans"], got[d]["n_spans_kept"], got[d]["text_clean"]) \
-            == (0, 0, "")
-
-
-def test_span_dedup_rejects_bad_span_tokens(spark):
-    import pytest as _pytest
-
-    from xdan_dqa_spark.operators.dedup import span_dedup
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with _pytest.raises(ValueError):
-        span_dedup(docs, span_tokens=0)
-
-
-def test_span_dedup_within_is_map_only_and_scrubs_self_repeats(spark):
-    """Within-doc scrub drops later repeats of a span INSIDE one doc but
-    never across docs; and the plan contains no Exchange (map-only)."""
-    from xdan_dqa_spark.operators.dedup import span_dedup_within
-
-    span = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"
-    docs = spark.createDataFrame(
-        [
-            (1, f"{span} {span}"),   # self-repeat → second copy scrubbed
-            (2, span),               # cross-doc copy of 1 → KEPT (within-doc only)
-            (3, ""),
-        ],
-        "doc_id long, text string",
-    )
-    res = span_dedup_within(docs, span_tokens=10)
-    got = {r["doc_id"]: r for r in res.collect()}
-    assert got[1]["n_spans"] == 2 and got[1]["n_spans_kept"] == 1
-    assert got[1]["text_clean"] == span
-    assert got[2]["n_spans_kept"] == 1 and got[2]["text_clean"] == span
-    assert (got[3]["n_spans"], got[3]["text_clean"]) == (0, "")
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # map-only contract
 
 
 def test_minhash_incremental_matches_union_dedup(spark, tmp_path):

@@ -318,18 +318,23 @@ def test_dedup_job_runs_each_stage_once(spark, tmp_path, full_plan_strings):
 
 
 def test_dedup_job_counts_input_the_collapse_skips(spark, tmp_path):
-    """An input whose texts are all NULL empties the exact collapse, and
+    """An input whose ids are all NULL empties the exact collapse, and
     adaptive execution then skips the input's observation: the job counts
-    the input instead, and reports every row dropped."""
+    the input instead, and reports every row dropped. Texts that are all
+    NULL are one exact-duplicate group, whose lowest id survives."""
     import pyarrow.parquet as pq
 
-    src = str(tmp_path / "null_text")
-    spark.createDataFrame([(1, None), (2, None)], "doc_id long, text string").write.parquet(src)
-    out = tmp_path / "dd"
-    assert _job("dedup_job").main([
-        "--input", src, "--output", str(out), "--method", "minhash", "--master", "local[4]"]) == 0
-    rep = pq.read_table(out / "report").to_pylist()
-    assert [(r["n_input"], r["n_kept"]) for r in rep] == [(2, 0)]
+    cases = {"null_id": ([(None, "a b c"), (None, "d e f")], (2, 0)),
+             "null_text": ([(1, None), (2, None)], (2, 1))}
+    for name, (rows, want) in cases.items():
+        src = str(tmp_path / name)
+        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src)
+        out = tmp_path / f"dd_{name}"
+        assert _job("dedup_job").main([
+            "--input", src, "--output", str(out), "--method", "minhash",
+            "--master", "local[4]"]) == 0
+        rep = pq.read_table(out / "report").to_pylist()
+        assert [(r["n_input"], r["n_kept"]) for r in rep] == [want], name
 
 
 def test_job_lineage_empty_runs(spark, webtext, tmp_path, monkeypatch, capsys):

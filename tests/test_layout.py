@@ -1,95 +1,8 @@
-"""Z-order layout (operators/layout.py): Morton-code correctness and the
-MEASURED data-skipping claim — row groups of a z-ordered write cover
-tight (x, y) rectangles, so a box predicate overlaps far fewer groups
-than in a hash-shuffled layout. Evidence read from parquet footers via
-DuckDB parquet_metadata, not asserted."""
+"""Partitioned layout: a hive-partitioned fact table joined to a filtered
+dim is read through dynamic partition pruning, checked in Spark's
+executed plan."""
 
 from __future__ import annotations
-
-import duckdb
-from pyspark.sql import functions as F
-
-
-def test_zvalue_matches_python_morton(spark):
-    from xdan_dqa_spark.operators.layout import zvalue
-
-    def morton(x, y):
-        z = 0
-        for i in range(16):
-            z |= ((x >> i) & 1) << (2 * i)
-            z |= ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    pts = [(0, 0), (1, 0), (0, 1), (65535, 65535), (12345, 54321), (7, 200)]
-    df = spark.createDataFrame(pts, "x long, y long")
-    got = {(r["x"], r["y"]): r["z"]
-           for r in df.select("x", "y", zvalue(F.col("x"), F.col("y")).alias("z")).collect()}
-    for x, y in pts:
-        assert got[(x, y)] == morton(x, y), (x, y)
-
-
-def _overlapping_groups(path: str, x_lo, x_hi, y_lo, y_hi) -> int:
-    """Row groups whose (x, y) min/max rectangle intersects the box —
-    exactly what a stats-pruning reader must scan."""
-    q = f"""
-    WITH m AS (
-      SELECT file_name, row_group_id,
-             max(CASE WHEN path_in_schema = 'x' THEN stats_min_value::BIGINT END) AS xmin,
-             max(CASE WHEN path_in_schema = 'x' THEN stats_max_value::BIGINT END) AS xmax,
-             max(CASE WHEN path_in_schema = 'y' THEN stats_min_value::BIGINT END) AS ymin,
-             max(CASE WHEN path_in_schema = 'y' THEN stats_max_value::BIGINT END) AS ymax
-      FROM parquet_metadata('{path}/*.parquet')
-      GROUP BY 1, 2
-    )
-    SELECT count(*) FROM m
-    WHERE xmax >= {x_lo} AND xmin <= {x_hi} AND ymax >= {y_lo} AND ymin <= {y_hi}
-    """
-    return duckdb.sql(q).fetchall()[0][0]
-
-
-def test_zorder_layout_prunes_box_queries(spark, tmp_path):
-    """A 1/8 × 1/8 box over a 4096-point grid: the z-ordered layout's
-    overlapping row-group count must be a small fraction of the
-    hash-shuffled layout's (which overlaps essentially everything)."""
-    from xdan_dqa_spark.operators.layout import zorder_write
-
-    pts = spark.range(4096).select(
-        (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("long").alias("y")
-    )
-    zpath, npath = str(tmp_path / "zord"), str(tmp_path / "naive")
-    zorder_write(pts, zpath, "x", "y", n_files=16)
-    pts.repartition(16).write.parquet(npath)
-
-    box = (8, 15, 8, 15)  # 1/64 of the area
-    z_hit = _overlapping_groups(zpath, *box)
-    n_hit = _overlapping_groups(npath, *box)
-    assert n_hit >= 14            # hash layout: nearly every group overlaps
-    assert z_hit <= 4             # z-order: a handful of rectangles
-    # and the data round-trips identically
-    back = spark.read.parquet(zpath)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, pts.collect()))
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    from xdan_dqa_spark.operators.layout import compact_parquet
-
-    src, dst = str(tmp_path / "small"), str(tmp_path / "compact")
-    df = spark.range(20000).select(
-        F.col("id"), (F.col("id") % 97).alias("k")
-    )
-    df.repartition(64).write.parquet(src)   # 64 tiny files
-    import glob
-    assert len(glob.glob(f"{src}/*.parquet")) == 64
-    n = compact_parquet(spark, src, dst, target_mb=128)
-    out_files = glob.glob(f"{dst}/*.parquet")
-    assert n == 1 and len(out_files) == 1   # tiny input -> one file
-    back = spark.read.parquet(dst)
-    assert back.count() == 20000
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-    # refuses to clobber an existing target (never compact in place)
-    import pytest as _pytest
-    with _pytest.raises(Exception):
-        compact_parquet(spark, src, dst, target_mb=128)
 
 
 def test_dynamic_partition_pruning_on_partitioned_fact(spark, tmp_path):

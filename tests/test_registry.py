@@ -91,13 +91,7 @@ def test_every_twin_reads_only_the_document_surface():
 
 # Package modules that nothing outside the tests imports, with the reason
 # each one stays.
-UNREACHED_ALLOWED = {
-    "xdan_dqa_spark/streaming/stream.py": (
-        "holds score_stream, the streaming form of the filter job, whose "
-        "lineage matches the batch job's; whether to keep it is its own "
-        "decision"
-    ),
-}
+UNREACHED_ALLOWED: dict[str, str] = {}
 
 
 def test_every_package_module_is_reached():
@@ -213,21 +207,9 @@ def test_every_entry_queries_definition_is_reached():
 # Public operators that nothing outside the tests names, with the reason
 # each one stays.
 OPERATORS_UNNAMED_ALLOWED = {
-    "layout.zorder_write": (
-        "the Z-ordered write layout; no job writes Z-ordered output yet, "
-        "and whether one should is an open decision"
-    ),
-    "layout.compact_parquet": (
-        "small-file compaction of a parquet directory; no job compacts "
-        "its output yet, and whether one should is an open decision"
-    ),
     "multimodal.frame_sample": (
         "the video frame grid beside media_features; multimodal_features "
         "checks only the per-item features"
-    ),
-    "resume.last_wins_dedup": (
-        "J2 last-wins merge as an operator; the j2_last_wins_dedup query "
-        "spells the same window inline"
     ),
     "score.normalize_score": (
         "the Column form of normalize_score_sql, which the flagship "
@@ -237,17 +219,25 @@ OPERATORS_UNNAMED_ALLOWED = {
         "one-row-per-doc profile of the textstats signals; no query "
         "projects all of them together"
     ),
+    "sinks.publish_table": (
+        "SURVEY §2.7's catalog-publish row, the reference's Hub push; no "
+        "job publishes to a catalog table yet"
+    ),
+    "sinks.write_keep_drop": (
+        "the keep/drop split write; only its tests call it, and deleting "
+        "them is left to the next registry cut (ROADMAP item 1)"
+    ),
 }
 
 
 def test_every_operator_is_named_outside_the_tests():
     """Every public top-level function or class in
-    xdan_dqa_spark/operators/*.py is named, outside its own definition,
-    in a file that runs outside the tests: the package, jobs/, perfbench/
-    (bar its tests), scripts/, bench.py or __spark_entry__.py, bar
-    OPERATORS_UNNAMED_ALLOWED. A query deleted from the registry must take
-    the operators only it called with it. Reads source text only: no
-    module is imported."""
+    xdan_dqa_spark/operators/*.py and xdan_dqa_spark/sources/*.py is
+    named, outside its own definition, in a file that runs outside the
+    tests: the package, jobs/, perfbench/ (bar its tests), scripts/,
+    bench.py or __spark_entry__.py, bar OPERATORS_UNNAMED_ALLOWED. A
+    query deleted from the registry must take the operators only it
+    called with it. Reads source text only: no module is imported."""
     sources = {}  # repo-relative path -> source lines
     for pattern in ("xdan_dqa_spark/**/*.py", "jobs/*.py", "perfbench/*.py",
                     "scripts/*.py", "bench.py", "__spark_entry__.py"):
@@ -256,7 +246,8 @@ def test_every_operator_is_named_outside_the_tests():
                 sources[_rel(path)] = fh.read().splitlines()
 
     unnamed = []
-    for path in sorted(p for p in sources if re.fullmatch(r"xdan_dqa_spark/operators/\w+\.py", p)):
+    checked = r"xdan_dqa_spark/(operators|sources)/\w+\.py"
+    for path in sorted(p for p in sources if re.fullmatch(checked, p)):
         for st in _parse(path).body:
             if not isinstance(st, (ast.FunctionDef, ast.ClassDef)) or st.name.startswith("_"):
                 continue

@@ -11,7 +11,6 @@ from xdan_dqa_spark.operators.textstats import (
     langid_heuristic_expr,
     text_profile,
     whitespace_token_count,
-    winnowing_fingerprints,
 )
 
 
@@ -41,16 +40,6 @@ def test_langid_heuristic(spark):
     assert _one(spark, "le chat est dans les jardins je crois", langid_heuristic_expr("text")) == "fr"
     assert _one(spark, "der hund und das haus nicht mit uns", langid_heuristic_expr("text")) == "de"
     assert _one(spark, "xyzzy 12345", langid_heuristic_expr("text")) == "und"
-
-
-def test_winnowing_properties(spark):
-    base = "the quick brown fox jumps over the lazy dog " * 3
-    fp1 = set(_one(spark, base, winnowing_fingerprints("text")))
-    fp2 = set(_one(spark, base + " extra tail words here", winnowing_fingerprints("text")))
-    overlap = len(fp1 & fp2) / len(fp1)
-    assert overlap > 0.7                      # shared prefix → shared fingerprints
-    fp3 = set(_one(spark, "completely different content about engines", winnowing_fingerprints("text")))
-    assert len(fp1 & fp3) / len(fp1) < 0.2
 
 
 def test_text_profile_on_documents(spark):
@@ -498,66 +487,3 @@ def test_hill_tail_index_recovers_pareto_alpha(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         hill_tail_index(df, k=5)
-
-
-# ----------------------------------------------------------- winnowing
-
-def test_winnow_guarantee_fires_on_copied_passage(spark):
-    """The winnowing theorem: any shared run of >= n+w-1 (= 6) words
-    yields at least one shared fingerprint — a copied passage inside
-    otherwise-disjoint documents must produce a pair, while fully
-    disjoint docs must not."""
-    from xdan_dqa_spark.operators.textstats import winnow_overlap_pairs
-
-    passage = "the quick brown fox jumps over the lazy dog today"
-    rows = [
-        (1, "totally unrelated header " + passage + " trailing words one"),
-        (2, "different prefix entirely " + passage + " other suffix here"),
-        (3, " ".join(f"disjoint{i}" for i in range(30))),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r["a"], r["b"]): r["n_shared_fp"]
-             for r in winnow_overlap_pairs(df, min_shared=1).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] >= 1
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_winnow_window_min_equals_hof_formulation(spark):
-    """The operator's posexplode+sliding-frame fingerprints must equal
-    the array-HOF definition (winnow_word_fingerprints) doc-for-doc,
-    including the <w-shingle single-window edge cases."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from xdan_dqa_spark.operators.dedup import shingles
-    from xdan_dqa_spark.operators.textstats import winnow_word_fingerprints
-
-    texts = [
-        " ".join(f"tok{(i * 7) % 31}" for i in range(50)),
-        "one two three",          # 1 shingle -> single window
-        "a b c d e f",            # 4 shingles -> exactly 1 window
-        "",
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
-                               "doc_id long, text string")
-    hof = {r["doc_id"]: sorted(r["f"]) for r in
-           df.select("doc_id",
-                     winnow_word_fingerprints("text").alias("f")).collect()}
-    h = F.transform(
-        shingles("text", 3),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-    )
-    ex = df.select("doc_id", F.posexplode(h).alias("_pos", "_h"))
-    wf = Window.partitionBy("doc_id").orderBy("_pos").rowsBetween(0, 3)
-    wp = Window.partitionBy("doc_id")
-    win = (
-        ex.withColumn("_m", F.min("_h").over(wf))
-        .withColumn("_mx", F.max("_pos").over(wp))
-        .filter(F.col("_pos") <= F.greatest(F.col("_mx") - 3, F.lit(0)))
-        .select("doc_id", "_m").distinct().collect()
-    )
-    got: dict[int, list] = {}
-    for r in win:
-        got.setdefault(r["doc_id"], []).append(r["_m"])
-    for k in hof:
-        assert sorted(got.get(k, [])) == hof[k], k

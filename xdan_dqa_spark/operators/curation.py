@@ -764,58 +764,6 @@ def gini_concentration(df: DataFrame, group_col: str = "source",
     )
 
 
-def negative_samples(docs: DataFrame, n_negatives: int = 3,
-                     n_buckets: int = 64,
-                     id_col: str = "doc_id", group_col: str = "source",
-                     anchor_filter=None) -> DataFrame:
-    """Deterministic hard-negative attachment for contrastive training:
-    for each anchor document, ``n_negatives`` other documents from the
-    SAME group (same-source docs share style/topic — the informative
-    negatives; random cross-source negatives are too easy). Returns
-    (anchor_id, neg_slot, negative_id).
-
-    Scale shape — deliberately NOT a per-group rank window (a
-    row_number over a mega-source is one task sorting 10⁹ rows):
-    every doc maps to one of ``n_buckets`` md5 buckets per group, each
-    (group, bucket) collapses to its min-id representative — ONE
-    map-side-combinable fold — and anchor j's negative is the
-    representative of bucket h(anchor‖j) mod B, attached by an
-    equi-join against the bounded (groups × B) rep table (broadcast at
-    any realistic group count). Self-negatives are filtered; a slot
-    whose bucket has no rep (or only the anchor) drops, so degenerate
-    tiny groups yield fewer negatives rather than wrong ones.
-
-    Everything is md5-derived — reproducible across runs, engines,
-    cluster sizes; no RNG."""
-    if n_negatives < 1:
-        raise ValueError(f"n_negatives must be >= 1 (got {n_negatives})")
-    h = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
-    reps = docs.groupBy(
-        F.col(group_col).alias("_g"),
-        F.pmod(h(F.col(id_col).cast("string")), F.lit(n_buckets)).alias("_b"),
-    ).agg(F.min(id_col).alias("negative_id"))
-    anchors = docs if anchor_filter is None else docs.filter(anchor_filter)
-    slots = anchors.select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(group_col).alias("_g"),
-        F.explode(F.array(*[F.lit(j) for j in range(1, n_negatives + 1)])).alias(
-            "neg_slot"
-        ),
-    ).withColumn(
-        "_b",
-        F.pmod(
-            h(F.concat(F.col("anchor_id").cast("string"), F.lit("#"),
-                       F.col("neg_slot").cast("string"))),
-            F.lit(n_buckets),
-        ),
-    )
-    return (
-        slots.join(F.broadcast(reps), ["_g", "_b"])
-        .filter(F.col("negative_id") != F.col("anchor_id"))
-        .select("anchor_id", "neg_slot", "negative_id")
-    )
-
-
 # Homoglyph fold map: the common Cyrillic/Greek lookalikes that spam
 # pipelines substitute to dodge exact-match filters ("pаypal" with a
 # Cyrillic а). Spelled as \u escapes on BOTH engines (the

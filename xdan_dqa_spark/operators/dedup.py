@@ -83,15 +83,29 @@ def cap_band_buckets(bandsdf: DataFrame, id_col: str,
     return ranked.filter(F.col("_rn") <= max_bucket).drop("_rn")
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup by content hash: keep the lowest id per distinct text.
+def _content_key(digest: F.Column) -> F.Column:
+    """An md5 ``digest`` as a group key that is never NULL. No md5 is
+    empty, so the NULL digest of a NULL text becomes a group of its own,
+    as in a SQL ``GROUP BY md5(text)``; a NULL key would match nothing in
+    the semi-join and drop every document of that group."""
+    return F.coalesce(digest, F.lit(""))
 
-    groupBy(md5) + min(id) + rejoin — one shuffle, no window, and the
-    representative choice is deterministic (unlike dropDuplicates)."""
-    keyed = df.withColumn("_k", F.md5(F.col(text_col)))
+
+def _min_id_per_key(df: DataFrame, digest: F.Column, id_col: str) -> DataFrame:
+    """The rows of ``df`` whose id is the lowest among the rows sharing
+    their ``digest``: groupBy(key) + min(id) + rejoin — one shuffle, no
+    window, and the representative choice is deterministic (unlike
+    dropDuplicates)."""
+    keyed = df.withColumn("_k", _content_key(digest))
     reps = keyed.groupBy("_k").agg(F.min(id_col).alias(id_col))
     return keyed.join(reps, ["_k", id_col], "left_semi").drop("_k")
+
+
+def exact_dedup(df: DataFrame, text_col: str = "text",
+                id_col: str = "doc_id") -> DataFrame:
+    """Exact dedup by content hash: keep the lowest id per distinct text
+    (one document of the NULL texts too)."""
+    return _min_id_per_key(df, F.md5(F.col(text_col)), id_col)
 
 
 def wordset_signature(text_col: str) -> F.Column:
@@ -100,8 +114,9 @@ def wordset_signature(text_col: str) -> F.Column:
     Java-``\\s`` class (``tokenize.WS_PLUS`` — RE2-portable, see that
     module) like ``shingles``/SimHash — a tab- or newline-separated
     duplicate of a space-separated doc collapses under all three dedup
-    families."""
-    words = F.filter(F.split(F.col(text_col), WS_PLUS), lambda w: F.length(w) > 0)
+    families. A NULL text has the empty word set, as in the DuckDB twin."""
+    words = F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
+                     lambda w: F.length(w) > 0)
     return F.array_join(F.array_sort(F.array_distinct(words)), " ")
 
 
@@ -109,9 +124,7 @@ def wordset_dedup(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
     """Bag-of-words dedup: docs with identical word SETS collapse to the
     lowest id (near-dup for shuffled/reordered spam pages)."""
-    keyed = df.withColumn("_k", F.md5(wordset_signature(text_col)))
-    reps = keyed.groupBy("_k").agg(F.min(id_col).alias(id_col))
-    return keyed.join(reps, ["_k", id_col], "left_semi").drop("_k")
+    return _min_id_per_key(df, F.md5(wordset_signature(text_col)), id_col)
 
 
 def shingles(text_col: str, n: int = 3) -> F.Column:
@@ -357,8 +370,7 @@ def containment_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
     Jaccard-tuned MinHash bands, which under-sample high-containment /
     low-Jaccard pairs with extreme size skew. For a dedicated
     containment search at scale, band the SMALL side's full signature
-    against per-size-stratum signatures of the large side, or use the
-    spans index (span_dedup) whose granularity is containment-native."""
+    against per-size-stratum signatures of the large side."""
     return _containment(_key_table(df, text_col, id_col), pairs, id_col, threshold)
 
 
@@ -682,147 +694,6 @@ def simhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return base.join(dups, id_col, "left_anti")
 
 
-def span_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-               span_tokens: int = 10) -> DataFrame:
-    """Corpus-wide exact duplicate-SPAN scrub: segment every document into
-    non-overlapping ``span_tokens``-token spans, keep only the FIRST
-    occurrence (lowest ``(doc_id, pos)``) of each distinct span anywhere
-    in the corpus, and rebuild each document from its surviving spans.
-
-    This is the span-granularity exact dedup of Lee et al. 2022
-    ("Deduplicating Training Data Makes Language Models Better") —
-    document-level dedup misses the boilerplate PARAGRAPHS (navbars,
-    cookie banners, license blurbs) that repeat across otherwise-distinct
-    pages; span-level scrubbing removes exactly those. (The paper's
-    suffix-array substring dedup needs a global sort of every suffix;
-    fixed non-overlapping spans are the shuffle-friendly approximation —
-    a duplicated region of length L is caught up to span alignment,
-    ≥ L − 2·span_tokens of it guaranteed.)
-
-    Returns (doc_id, n_spans, n_spans_kept, text_clean) for EVERY input
-    doc (empty/whitespace-only docs get 0/0/''). A span repeated WITHIN
-    one doc collapses too (its 2nd occurrence has a higher pos).
-
-    Scale shape: one explode (rows = tokens/span_tokens, ~10× fewer than
-    a shingle explode), then the first-occurrence rule is a
-    groupBy(span_hash).agg(min(struct(id, pos))) + rejoin — NOT a
-    row_number window, because a span repeated 10⁹ times (a universal
-    cookie banner at web scale) would put 10⁹ rows into ONE window
-    partition's sort, while the min-struct aggregate folds it map-side
-    and AQE can skew-split the flag join (output is 1 row per input row
-    — no blow-up). Reconstruction is one groupBy(doc_id) whose state is
-    bounded by the doc's own span count."""
-    if span_tokens < 1:
-        raise ValueError(f"span_tokens must be >= 1 (got {span_tokens})")
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    w = df.select(F.col(id_col), words.alias("_ws"))
-    n_seg = F.ceil(F.size("_ws") / F.lit(span_tokens)).cast("int")
-    # sequence(0, -1) would DESCEND in Spark — guard the empty-doc case.
-    idx = F.when(n_seg > 0, F.sequence(F.lit(0), n_seg - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    seg = lambda i: F.concat_ws(  # noqa: E731
-        " ", F.slice(F.col("_ws"), i * span_tokens + 1, span_tokens)
-    )
-    ex = (
-        w.select(
-            F.col(id_col),
-            F.explode(
-                F.transform(idx, lambda i: F.struct(i.alias("pos"), seg(i).alias("seg")))
-            ).alias("_s"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("_s.pos").alias("pos"),
-            F.col("_s.seg").alias("seg"),
-            F.md5(F.col("_s.seg")).alias("_k"),
-        )
-    )
-    firsts = ex.groupBy("_k").agg(
-        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("_first")
-    )
-    flagged = ex.join(firsts, "_k").select(
-        F.col(id_col),
-        F.col("pos"),
-        F.col("seg"),
-        (
-            (F.col(id_col) == F.col(f"_first.{id_col}"))
-            & (F.col("pos") == F.col("_first.pos"))
-        ).alias("_keep"),
-    )
-    agg = flagged.groupBy(id_col).agg(
-        F.count("*").alias("n_spans"),
-        F.sum(F.when(F.col("_keep"), 1).otherwise(0)).alias("n_spans_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("_keep"), F.struct(F.col("pos"), F.col("seg")))
-                    )
-                ),
-                lambda s: s["seg"],
-            ),
-            " ",
-        ).alias("text_clean"),
-    )
-    return df.select(F.col(id_col)).join(agg, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("n_spans"), F.lit(0)).alias("n_spans"),
-        F.coalesce(F.col("n_spans_kept"), F.lit(0)).alias("n_spans_kept"),
-        F.coalesce(F.col("text_clean"), F.lit("")).alias("text_clean"),
-    )
-
-
-def span_dedup_within(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      span_tokens: int = 10) -> DataFrame:
-    """MAP-ONLY within-document duplicate-span scrub: drop every repeat of
-    a span that already occurred EARLIER IN THE SAME DOC (template-spam
-    self-repetition — SEO pages that loop the same paragraph dozens of
-    times). The corpus-wide variant (``span_dedup``) needs a shuffle on
-    the span hash; this one needs NO exchange at all — each doc is
-    scrubbed from its own spans with higher-order array functions, so it
-    composes into the flagship's map-only scoring stage for free.
-
-    Same output contract as span_dedup: (doc_id, n_spans, n_spans_kept,
-    text_clean). Per-doc cost is O(k²) span compares with k =
-    tokens/span_tokens (a 100 KB doc ⇒ k≈2 000 ⇒ 4M compares — fine);
-    for adversarially huge single docs, md5 the spans first so each
-    compare is 32 bytes."""
-    if span_tokens < 1:
-        raise ValueError(f"span_tokens must be >= 1 (got {span_tokens})")
-    words = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), WS_PLUS),
-        lambda w: F.length(w) > 0,
-    )
-    w = df.select(F.col(id_col), words.alias("_ws"))
-    n_seg = F.ceil(F.size("_ws") / F.lit(span_tokens)).cast("int")
-    idx = F.when(n_seg > 0, F.sequence(F.lit(0), n_seg - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-    segs = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(F.col("_ws"), i * span_tokens + 1,
-                                                span_tokens))
-    )
-    staged = w.select(F.col(id_col), segs.alias("_segs"))
-    # keep seg i iff it does not appear among spans 0..i-1 (array_position
-    # over the length-i prefix; 0 = absent). The (x, i) filter lambda's
-    # index is 0-based.
-    kept = F.filter(
-        F.col("_segs"),
-        lambda s, i: F.array_position(F.slice(F.col("_segs"), 1, i), s) == 0,
-    )
-    return staged.select(
-        F.col(id_col),
-        F.size("_segs").alias("n_spans"),
-        F.size(kept).alias("n_spans_kept"),
-        F.array_join(kept, " ").alias("text_clean"),
-    )
-
-
 def canonical_dedup(df: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id") -> DataFrame:
     """Exact dedup after canonical whitespace/case normalization: keep
@@ -844,9 +715,7 @@ def canonical_dedup(df: DataFrame, text_col: str = "text",
             F.lower(F.coalesce(F.col(text_col), F.lit(""))), WS_PLUS, " "
         )
     )
-    keyed = df.withColumn("_k", F.md5(canon))
-    reps = keyed.groupBy("_k").agg(F.min(id_col).alias(id_col))
-    return keyed.join(reps, ["_k", id_col], "left_semi").drop("_k")
+    return _min_id_per_key(df, F.md5(canon), id_col)
 
 
 def minhash_index_write(df: DataFrame, path: str, text_col: str = "text",
@@ -1017,7 +886,7 @@ def exact_dedup_best(df: DataFrame, score_col: str, text_col: str = "text",
     integral type (the tie-break negates it); any other type raises
     TypeError at call time."""
     _require_integral_id(df, id_col)
-    keyed = df.withColumn("_k", F.md5(F.col(text_col)))
+    keyed = df.withColumn("_k", _content_key(F.md5(F.col(text_col))))
     reps = keyed.groupBy("_k").agg(
         F.max(F.struct(F.col(score_col).alias("_s"),
                        (-F.col(id_col)).alias("_ni"))).alias("_m")
@@ -1138,7 +1007,7 @@ def cdc_chunks(text_col: str, mask_bits: int = 4,
     splits after every token whose 32-bit md5 hash is ≡ 0 mod
     2^mask_bits (expected chunk length 2^mask_bits tokens). This is the
     Rabin/FastCDC boundary rule at token granularity — the property
-    fixed spans (span_dedup) lack is SHIFT RESISTANCE: inserting one
+    fixed-length spans lack is SHIFT RESISTANCE: inserting one
     token early in a doc shifts every fixed-span boundary after it, but
     content-defined boundaries re-synchronize at the next boundary
     token, so all later chunks hash identically again. That is what

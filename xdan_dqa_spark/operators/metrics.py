@@ -53,7 +53,8 @@ def partition_metrics(scored: DataFrame, run_id: str) -> DataFrame:
 
 @dataclass(frozen=True)
 class RunReadback:
-    """What one scan of a committed output tells a job after its write."""
+    """What one scan of a committed output tells quality_filter_job after
+    its write."""
 
     lineage: DataFrame     # this run's lineage rows (partition_metrics' schema), local
     rows: list[Row]        # the same rows on the driver, committed_at aside
@@ -318,86 +319,4 @@ def k_anonymity_census(df: DataFrame, qi_cols: list[str], k: int = 5,
         F.sum(F.when(F.col("_n") < k, F.col("_n")).otherwise(0)).alias("n_rows_at_risk"),
         F.min("_n").alias("min_class_size"),
         *lagg,
-    )
-
-
-def neyman_allocation(df: DataFrame, stratum_col: str, y_col: str,
-                      total_k: int = 1000) -> DataFrame:
-    """Neyman-optimal sample allocation plan: per stratum (stratum,
-    n, sd, alloc_k) with alloc_k proportional to n_h * sd_h — the
-    survey-sampling allocation that minimizes estimator variance for a
-    fixed budget (high-variance strata get more of the sample than
-    proportional allocation would give).
-
-    Determinism: per-stratum sd comes from EXACT DECIMAL moment sums
-    (population variance closed form) with ONE sqrt; the allocation
-    weight n_h*sd_h and its normalization are a fixed IEEE sequence on
-    those scalars, floored (floor, not round-half-even, so both
-    engines truncate identically); leftover budget from flooring is
-    reported in the fractional column rather than redistributed by a
-    tie-breaking scheme the reader would have to reverse-engineer.
-
-    Shape: one stratum-grain moment fold + a 1-row broadcast total."""
-    if total_k < 1:
-        raise ValueError(f"total_k must be >= 1 (got {total_k})")
-    y19 = F.col(y_col).cast("decimal(19,0)")
-    y18 = F.col(y_col).cast("decimal(18,0)")
-    m = df.groupBy(F.col(stratum_col).alias("stratum")).agg(
-        F.count("*").alias("n"),
-        F.sum(F.col(y_col).cast("decimal(38,0)")).alias("_sy"),
-        F.sum((y19 * y18).cast("decimal(38,0)")).alias("_syy"),
-    )
-    nD = F.col("n").cast("double")
-    sy, syy = F.col("_sy").cast("double"), F.col("_syy").cast("double")
-    var = syy / nD - (sy / nD) * (sy / nD)
-    staged = m.select(
-        "stratum", "n",
-        F.sqrt(F.greatest(var, F.lit(0.0))).alias("_sd"),
-    ).withColumn("_w", F.col("n").cast("double") * F.col("_sd"))
-    tot = staged.agg(F.sum("_w").alias("_tw"))
-    alloc = F.col("_w") * F.lit(float(total_k)) / F.col("_tw")
-    return staged.crossJoin(F.broadcast(tot)).select(
-        "stratum", "n",
-        F.round(F.col("_sd"), 6).alias("sd"),
-        F.floor(alloc).cast("long").alias("alloc_k"),
-        F.round(alloc - F.floor(alloc), 6).alias("alloc_frac"),
-    )
-
-
-def contract_report(df: DataFrame, row_rules: dict,
-                    unique_cols: list[str] | None = None) -> DataFrame:
-    """Declarative data-contract checker: evaluate a set of row-level
-    rules (name -> VIOLATION predicate Column) plus uniqueness rules in
-    ONE pass, returning (rule, n_violations, passed) per rule — the
-    ingest gate every feed crosses before entering the corpus, as a
-    single queryable report instead of N ad-hoc scans.
-
-    Shape: all row-rule counters ride ONE wide aggregate over one scan
-    (uniqueness rides the same aggregate as count - count_distinct,
-    planned via Expand); the per-rule rows unpivot from a bounded
-    literal stack. A rule whose predicate errors is a plan-time
-    failure, not a silent pass."""
-    unique_cols = unique_cols or []
-    if not row_rules and not unique_cols:
-        raise ValueError("at least one rule required")
-    aggs = [F.count("*").alias("_n")]
-    for name, pred in row_rules.items():
-        aggs.append(F.sum(F.when(pred, 1).otherwise(0)).alias(f"_v_{name}"))
-    for c in unique_cols:
-        aggs.append(F.count_distinct(F.col(c)).alias(f"_d_{c}"))
-    wide = df.agg(*aggs)
-    entries = []
-    for name in row_rules:
-        entries.append(F.struct(
-            F.lit(name).alias("rule"),
-            F.col(f"_v_{name}").cast("long").alias("n_violations"),
-        ))
-    for c in unique_cols:
-        entries.append(F.struct(
-            F.lit(f"unique:{c}").alias("rule"),
-            (F.col("_n") - F.col(f"_d_{c}")).cast("long").alias("n_violations"),
-        ))
-    return wide.select(F.explode(F.array(*entries)).alias("_r")).select(
-        "_r.rule", "_r.n_violations",
-        (F.col("_r.n_violations") == 0).alias("passed"),
     )

@@ -47,24 +47,6 @@ def doc_fingerprint(text_col: str) -> F.Column:
     return F.md5(norm)
 
 
-def winnowing_fingerprints(text_col: str, k: int = 8, w: int = 4) -> F.Column:
-    """Winnowing document fingerprints (Schleimer et al. 2003): k-char
-    shingle hashes, min per sliding window of w, distinct. Used for
-    robust partial-overlap detection; pure array exprs."""
-    norm = F.lower(F.regexp_replace(F.col(text_col), WS_PLUS, " "))
-    n_sh = F.greatest(F.length(norm) - (k - 1), F.lit(0))
-    hashes = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_sh, F.lit(1))),
-        lambda i: F.xxhash64(norm.substr(i, F.lit(k))),
-    )
-    n_win = F.greatest(F.size(hashes) - (w - 1), F.lit(1))
-    mins = F.transform(
-        F.sequence(F.lit(1), n_win),
-        lambda i: F.array_min(F.slice(hashes, i, w)),
-    )
-    return F.array_distinct(mins)
-
-
 def langid_heuristic_expr(text_col: str) -> F.Column:
     """Column-expression language ID (literal marker counting — the
     oracle-parity variant of the pandas-UDF scorer; literal `replace`
@@ -695,75 +677,4 @@ def hill_tail_index(docs: DataFrame, value_col: str = "n_chars",
         F.round(
             F.lit(float(k)) / F.col("_s").cast("double"), 6
         ).alias("alpha"),
-    )
-
-
-def winnow_word_fingerprints(text_col: str, n: int = 3, w: int = 4) -> F.Column:
-    """Winnowing fingerprints (Schleimer et al. 2003) over WORD n-gram
-    shingle hashes with an md5-derived 60-bit hash — the oracle-
-    portable variant of :func:`winnowing_fingerprints` (whose xxhash64
-    is Spark-only): take the min hash in each sliding window of ``w``
-    consecutive shingles, distinct the mins. Winnowing GUARANTEES any
-    shared run of ≥ n+w−1 words yields at least one shared
-    fingerprint, while selecting only ~2/(w+1) of the shingles — the
-    MOSS partial-overlap detector: bounded fingerprints per doc,
-    robust to surrounding edits."""
-    from ..operators.dedup import shingle_hashes
-
-    h = shingle_hashes(text_col, n)
-    n_win = F.greatest(F.size(h) - (w - 1), F.lit(1))
-    mins = F.transform(
-        F.sequence(F.lit(1), n_win),
-        lambda i: F.array_min(F.slice(h, i, w)),
-    )
-    return F.array_distinct(mins)
-
-
-def winnow_overlap_pairs(df: DataFrame, min_shared: int = 2,
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
-    """Partial-overlap pairs by shared winnowing fingerprints — the
-    MOSS-style plagiarism/quotation detector: (a, b, n_shared_fp) for
-    doc pairs sharing ≥ ``min_shared`` fingerprints. Complements the
-    Jaccard family: winnowing fires on a single COPIED PASSAGE inside
-    otherwise-different documents, where whole-doc Jaccard reads ~0.
-
-    Scale shape: fingerprints are ~2/(w+1) of the shingles, built
-    map-side; the detector is an equi-self-join on the fingerprint key
-    — a hot fingerprint (boilerplate sentence shared by K docs) has
-    the standard quadratic-bucket geometry, with the standard fix
-    (cap or drop fingerprints with document frequency above a bound;
-    here min_shared prunes the pair table after one combinable
-    count)."""
-    if min_shared < 1:
-        raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-    # Window-min formulation, NOT the array-HOF one: per-window
-    # F.slice+array_min lambdas are interpreted per element and cost
-    # O(shingles·w) Python-free-but-uncodegenned evaluation — measured
-    # 81 s for 240k docs' worth at sf0.1; posexplode + a native sliding
-    # ROWS frame min is one doc-keyed shuffle and runs in ~8 s. The
-    # frame clips at the partition end, so a <w-shingle doc yields the
-    # min of all its hashes — identical to winnow_word_fingerprints'
-    # single-window case (equivalence pinned by test).
-    from ..operators.dedup import shingle_hashes
-
-    h = shingle_hashes(text_col, 3)
-    ex = df.select(F.col(id_col), F.posexplode(h).alias("_pos", "_h"))
-    wf = Window.partitionBy(id_col).orderBy("_pos").rowsBetween(0, 3)
-    wp = Window.partitionBy(id_col)
-    fps = (
-        ex.withColumn("_m", F.min("_h").over(wf))
-        .withColumn("_maxpos", F.max("_pos").over(wp))
-        .filter(F.col("_pos") <= F.greatest(F.col("_maxpos") - 3, F.lit(0)))
-        .select(F.col(id_col), F.col("_m").alias("_fp"))
-        .distinct()
-    )
-    left = fps.select(F.col("_fp"), F.col(id_col).alias("a"))
-    right = fps.select(F.col("_fp"), F.col(id_col).alias("b"))
-    return (
-        left.join(right, "_fp")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_shared_fp"))
-        .filter(F.col("n_shared_fp") >= min_shared)
     )

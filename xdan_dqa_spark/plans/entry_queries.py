@@ -499,6 +499,8 @@ WHERE doc_id NOT IN (SELECT doc_id FROM documents WHERE doc_id % 10 < 3)
 # J2 last-wins merge dedup (reference src/data_transformer.py:303-311)
 
 def q_j2_last_wins_dedup(spark, sf_dir):
+    from ..operators.resume import last_wins_dedup
+
     df = _t(spark, sf_dir, "documents").select("doc_id", "text")
     v1 = df.withColumn("ingest_order", F.lit(1)).withColumn("payload", F.col("text"))
     v2 = (
@@ -507,12 +509,8 @@ def q_j2_last_wins_dedup(spark, sf_dir):
         .withColumn("payload", F.concat(F.lit("v2:"), F.col("text")))
     )
     unioned = v1.unionByName(v2)
-    w = Window.partitionBy("doc_id").orderBy(F.col("ingest_order").desc())
-    return (
-        unioned.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "ingest_order", F.md5(F.col("payload")).alias("payload_md5"))
-    )
+    return last_wins_dedup(unioned, order_col="ingest_order").select(
+        "doc_id", "ingest_order", F.md5(F.col("payload")).alias("payload_md5"))
 
 
 SQL_J2 = """
@@ -1567,15 +1565,13 @@ CROSS JOIN (SELECT unnest(range(4)) AS gen_idx) g
 
 # ------------------------------------------------------------------
 # stream_windowed_agg: the Structured-Streaming path oracle-paired. A
-# bounded file-source stream over `events` runs the event-time windowed
-# aggregation (streaming/stream.py windowed_metrics_stream's shape) in
-# COMPLETE output mode with availableNow — deterministic end-of-stream
-# state, no watermark cutoff — so the streamed result must equal the
-# plain batch GROUP BY bit-for-bit. maxFilesPerTrigger=1 forces one
+# bounded file-source stream over `events` runs an event-time windowed
+# aggregation in COMPLETE output mode with availableNow — deterministic
+# end-of-stream state, no watermark cutoff — so the streamed result must
+# equal the plain batch GROUP BY bit-for-bit. maxFilesPerTrigger=1 forces one
 # micro-batch per input file, so multi-batch incremental state merge is
 # what's actually under test (a single-batch run would trivially match).
-# The memory sink is the driver-collected correctness harness ONLY; the
-# production sink is the parquet/append path (streaming/stream.py).
+# The memory sink is the driver-collected correctness harness ONLY.
 
 def q_stream_windowed_agg(spark, sf_dir):
     batch = _t(spark, sf_dir, "events")
@@ -2388,83 +2384,8 @@ def _pii_prevalence_sql() -> str:
 
 
 # ------------------------------------------------------------ round-5 batch 11
-# Span-level dedup reports.
-
-
-def q_dedup_spans(spark, sf_dir):
-    # Corpus-wide exact duplicate-span scrub (Lee et al. 2022 granularity)
-    # — see operators/dedup.py:span_dedup for the skew-safe min-struct
-    # first-occurrence shape. The twin re-expresses the same first-
-    # occurrence rule as a row_number window (values identical: (doc_id,
-    # pos) is unique, so rank-1 ⇔ equality with the min struct).
-    from ..operators.dedup import span_dedup
-
-    return span_dedup(_t(spark, sf_dir, "documents"), span_tokens=10)
-
-
-SQL_DEDUP_SPANS = f"""
-WITH words AS (
-  SELECT doc_id, {_WORDS_WS_SQL} AS ws FROM documents),
-idx AS (
-  SELECT doc_id, ws, unnest(range((len(ws) + 9) // 10)) AS pos FROM words),
-segs AS (
-  SELECT doc_id, CAST(pos AS INT) AS pos,
-         array_to_string(ws[pos*10+1 : pos*10+10], ' ') AS seg
-  FROM idx),
-ranked AS (
-  SELECT doc_id, pos, seg,
-         row_number() OVER (PARTITION BY md5(seg) ORDER BY doc_id, pos) AS rn
-  FROM segs),
-agg AS (
-  SELECT doc_id,
-         COUNT(*) AS n_spans,
-         CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_spans_kept,
-         coalesce(string_agg(CASE WHEN rn = 1 THEN seg END, ' ' ORDER BY pos),
-                  '') AS text_clean
-  FROM ranked GROUP BY doc_id)
-SELECT d.doc_id,
-       coalesce(a.n_spans, 0) AS n_spans,
-       coalesce(a.n_spans_kept, 0) AS n_spans_kept,
-       coalesce(a.text_clean, '') AS text_clean
-FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
-
-
-def q_dedup_spans_within(spark, sf_dir):
-    # Map-only within-doc duplicate-span scrub (see span_dedup_within) —
-    # NO exchange in the Spark plan; the twin re-keys the same first-
-    # occurrence rule as a (doc_id, span) window, values identical.
-    from ..operators.dedup import span_dedup_within
-
-    return span_dedup_within(_t(spark, sf_dir, "documents"), span_tokens=5)
-
-
-SQL_DEDUP_SPANS_WITHIN = f"""
-WITH words AS (
-  SELECT doc_id, {_WORDS_WS_SQL} AS ws FROM documents),
-idx AS (
-  SELECT doc_id, ws, unnest(range((len(ws) + 4) // 5)) AS pos FROM words),
-segs AS (
-  SELECT doc_id, CAST(pos AS INT) AS pos,
-         array_to_string(ws[pos*5+1 : pos*5+5], ' ') AS seg
-  FROM idx),
-ranked AS (
-  SELECT doc_id, pos, seg,
-         row_number() OVER (PARTITION BY doc_id, md5(seg) ORDER BY pos) AS rn
-  FROM segs),
-agg AS (
-  SELECT doc_id,
-         CAST(COUNT(*) AS INT) AS n_spans,
-         CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS INT) AS n_spans_kept,
-         coalesce(string_agg(CASE WHEN rn = 1 THEN seg END, ' ' ORDER BY pos),
-                  '') AS text_clean
-  FROM ranked GROUP BY doc_id)
-SELECT d.doc_id,
-       coalesce(a.n_spans, 0) AS n_spans,
-       coalesce(a.n_spans_kept, 0) AS n_spans_kept,
-       coalesce(a.text_clean, '') AS text_clean
-FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
+# Incremental dedup against a persisted band index, then URL- and
+# split-level hygiene.
 
 
 def q_dedup_minhash_incr(spark, sf_dir):
@@ -3167,67 +3088,6 @@ GROUP BY 1, 2
 """
 
 
-def q_stream_gopher_score(spark, sf_dir):
-    """The quality-filter heuristics running UNDER STRUCTURED STREAMING:
-    the documents table is staged as 4 parquet files, streamed with
-    maxFilesPerTrigger=1 (4 real micro-batches), and the SAME Gopher
-    heuristic projection + keep rule that is hash-green in batch
-    (gopher_stats) is applied inside the stream — append mode, map-only,
-    so every micro-batch emits immediately with no state. The oracle is
-    the batch SQL: a map-only streaming query over a bounded source
-    must equal its batch projection bit-for-bit, which is exactly the
-    north rule's 'same decisions, streaming or batch' guarantee. Sink,
-    naming and staging discipline mirror q_stream_windowed_agg
-    (idempotent sf-keyed stage dir + atomic spec marker; per-invocation
-    memory-sink name; immediate detach + view drop)."""
-    from ..functions.heuristics import heuristic_columns
-
-    batch = _t(spark, sf_dir, "documents")
-    stage = "/tmp/xdan_stream_docs_" + sf_dir.strip("/").replace("/", "_")
-    spec = {"sf_dir": sf_dir, "rows": batch.count(), "n_files": 4}
-    marker = os.path.join(stage, "_SPEC.json")
-    _stage_with_spec(
-        marker, spec,
-        lambda: batch.repartition(4).write.mode("overwrite")
-        .parquet(f"{stage}/documents"),
-    )
-    src = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{stage}/documents")
-    )
-    h = heuristic_columns("text")
-    scored = src.select(
-        "doc_id",
-        h["n_words"].cast("long").alias("n_words"),
-        F.round(h["symbol_ratio"], 9).alias("symbol_ratio"),
-        F.round(h["dup_line_frac"], 9).alias("dup_line_frac"),
-    ).withColumn(
-        "keep",
-        (F.col("symbol_ratio") <= 0.1) & (F.col("n_words") >= 5)
-        & (F.col("dup_line_frac") <= 0.3),
-    )
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    name = f"stream_gopher_{key}_{next(_STREAM_QUERY_SEQ)}"
-    q = (
-        scored.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    out = spark.table(name)
-    local = spark.createDataFrame(out.collect(), schema=out.schema)
-    spark.catalog.dropTempView(name)
-    return local
-
-
-SQL_STREAM_GOPHER_SCORE = f"""
-WITH g AS ({SQL_GOPHER_STATS})
-SELECT doc_id, n_words, symbol_ratio, dup_line_frac,
-       symbol_ratio <= 0.1 AND n_words >= 5 AND dup_line_frac <= 0.3 AS keep
-FROM g
-"""
-
-
 def q_keep_rate_by_lang(spark, sf_dir):
     """Disparate-impact audit of the keep rule: per-language keep rate
     and mean score from the score_core stack. A quality filter that
@@ -3267,39 +3127,6 @@ SELECT lang, COUNT(*) AS n_docs, SUM(keep) AS n_keep,
        round(CAST(SUM(CAST(score AS DECIMAL(20,6))) AS DOUBLE)
              / CAST(COUNT(*) AS DOUBLE), 6) AS mean_score
 FROM j GROUP BY 1
-"""
-
-
-def q_zorder_values(spark, sf_dir):
-    """Morton Z-values over (doc_id mod 2¹⁶, n_chars mod 2¹⁶)
-    (operators/layout.py:zvalue) — the data-skipping sort key behind
-    OPTIMIZE ZORDER BY, as a pure bit-twiddling Column expression.
-    Integer-only (shifts/AND/OR with magic masks), bit-identical in any
-    engine; the layout's row-group pruning effect is measured from
-    parquet footers in tests/test_layout.py."""
-    from ..operators.layout import zvalue
-
-    d = _t(spark, sf_dir, "documents")
-    x = F.pmod(F.col("doc_id"), F.lit(65536)).cast("long")
-    y = F.pmod(F.col("n_chars"), F.lit(65536)).cast("long")
-    return d.select("doc_id", x.alias("x"), y.alias("y"),
-                    zvalue(x, y).alias("z"))
-
-
-def _sql_zorder_values() -> str:
-    def spread(e: str) -> str:
-        out = f"({e} & 65535)"
-        for sh, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F),
-                         (2, 0x33333333), (1, 0x55555555)):
-            out = f"(({out} | ({out} << {sh})) & {mask})"
-        return out
-
-    x = "(doc_id % 65536)"
-    y = "(n_chars % 65536)"
-    return f"""
-SELECT doc_id, {x} AS x, {y} AS y,
-       ({spread(x)} | ({spread(y)} << 1)) AS z
-FROM documents
 """
 
 
@@ -3387,127 +3214,7 @@ SELECT doc_id, lang, source, n_chars FROM ranked WHERE rn = 1
 
 
 # ------------------------------------------------------------ round-5 batch 37
-# Probabilistic-sketch family (operators/sketches.py): md5-derived
-# deterministic HyperLogLog and count-min — the whole sketch state is
-# oracle-checkable, not just its contract — plus Gini source
-# concentration.
-
-_HLL_RAW_NUM = repr((0.7213 / (1.0 + 1.079 / 256.0)) * 256 * 256 * float(1 << 57))
-
-
-def q_hll_vocab(spark, sf_dir):
-    """Deterministic HyperLogLog (m=256) over the corpus term stream
-    next to the exact distinct count (operators/sketches.py:
-    hll_estimate) — integer register max + DECIMAL harmonic sum, one
-    terminal float division, so the ESTIMATE itself is bit-identical
-    cross-engine at any parallelism."""
-    from ..functions.tokenize import WS_PLUS
-    from ..operators.sketches import hll_estimate
-
-    docs = _t(spark, sf_dir, "documents")
-    terms = docs.select(
-        F.explode(
-            F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda w: F.length(w) > 0)
-        ).alias("v")
-    )
-    return hll_estimate(terms, "v")
-
-
-SQL_HLL_VOCAB = f"""
-WITH terms AS (SELECT unnest({_WORDS_WS_SQL}) AS v FROM documents),
-h AS (
-  SELECT CAST('0x' || substr(md5('hl:' || v), 1, 8) AS BIGINT) AS hl,
-         CAST('0x' || substr(md5('hh:' || v), 1, 8) AS BIGINT) AS hh
-  FROM terms
-),
-r AS (SELECT hl & 255 AS idx, (hl >> 8) * 4294967296 + hh AS w FROM h),
-regs AS (
-  SELECT idx,
-         MAX(CASE WHEN w = 0 THEN 57 ELSE 57 - length(bin(w)) END) AS rho
-  FROM r GROUP BY idx
-),
-s AS (
-  SELECT COUNT(*) AS n_present,
-         SUM(CAST((CAST(1 AS BIGINT) << CAST(57 - rho AS INT)) AS DECIMAL(38,0))) AS s_present
-  FROM regs
-),
-e AS (SELECT COUNT(DISTINCT v) AS exact_distinct FROM terms),
-t AS (
-  SELECT 256 AS m,
-         256 - n_present AS n_zero_registers,
-         s_present + CAST(256 - n_present AS DECIMAL(38,0))
-                     * CAST(144115188075855872 AS DECIMAL(38,0)) AS s_total,
-         exact_distinct
-  FROM s CROSS JOIN e
-),
-est AS (
-  SELECT m, n_zero_registers, exact_distinct,
-         {_HLL_RAW_NUM} / CAST(s_total AS DOUBLE) AS raw
-  FROM t
-),
-fin AS (
-  SELECT m, n_zero_registers, exact_distinct,
-         CASE WHEN raw <= 640.0 AND n_zero_registers > 0
-              THEN 256.0 * ln(256.0 / CAST(n_zero_registers AS DOUBLE))
-              ELSE raw END AS est
-  FROM est
-)
-SELECT m, n_zero_registers, round(est, 4) AS hll_estimate, exact_distinct,
-       round((round(est, 4) - CAST(exact_distinct AS DOUBLE))
-             / CAST(exact_distinct AS DOUBLE), 6) AS rel_error
-FROM fin
-"""
-
-
-def q_cms_terms(spark, sf_dir):
-    """Count-min heavy hitters: top-20 corpus terms with true counts
-    next to their 4x1024-counter sketch estimates (operators/
-    sketches.py:cms_heavy_hitters) — estimate >= truth by construction,
-    the overcount column measures real collision error."""
-    from ..functions.tokenize import WS_PLUS
-    from ..operators.sketches import cms_heavy_hitters
-
-    docs = _t(spark, sf_dir, "documents")
-    terms = docs.select(
-        F.explode(
-            F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda w: F.length(w) > 0)
-        ).alias("v")
-    )
-    return cms_heavy_hitters(terms, "v", top_k=20)
-
-
-SQL_CMS_TERMS = f"""
-WITH terms AS (SELECT unnest({_WORDS_WS_SQL}) AS v FROM documents),
-ds AS (SELECT unnest([0, 1, 2, 3]) AS d),
-cells AS (
-  SELECT d AS row_id,
-         CAST('0x' || substr(md5(CAST(d AS VARCHAR) || ':' || v), 1, 8) AS BIGINT)
-         % 1024 AS col_id
-  FROM terms CROSS JOIN ds
-),
-sketch AS (SELECT row_id, col_id, COUNT(*) AS cnt FROM cells GROUP BY 1, 2),
-truth AS (SELECT v AS value, COUNT(*) AS true_cnt FROM terms GROUP BY 1),
-top AS (
-  SELECT value, true_cnt,
-         row_number() OVER (ORDER BY true_cnt DESC, value) AS rk
-  FROM truth QUALIFY rk <= 20
-),
-probes AS (
-  SELECT value, true_cnt, d AS row_id,
-         CAST('0x' || substr(md5(CAST(d AS VARCHAR) || ':' || value), 1, 8) AS BIGINT)
-         % 1024 AS col_id
-  FROM top CROSS JOIN ds
-),
-est AS (
-  SELECT value, true_cnt, MIN(cnt) AS cms_estimate
-  FROM probes JOIN sketch USING (row_id, col_id)
-  GROUP BY 1, 2
-)
-SELECT value, true_cnt, cms_estimate, cms_estimate - true_cnt AS overcount
-FROM est
-"""
+# Gini source concentration.
 
 
 def q_gini_sources(spark, sf_dir):
@@ -3642,46 +3349,6 @@ SQL_FD_CENSUS = "\nUNION ALL\n".join(
 )
 
 
-# ------------------------------------------------------------ round-5 batch 41
-# Contrastive negative sampling.
-
-
-def q_negative_samples(spark, sf_dir):
-    """Deterministic same-source hard negatives for contrastive
-    training (operators/curation.py:negative_samples): anchors are
-    every 100th doc, 3 negatives each from md5-bucket representatives
-    — no per-group rank window (scale-safe on mega-sources), no RNG."""
-    from ..operators.curation import negative_samples
-
-    d = _t(spark, sf_dir, "documents")
-    return negative_samples(
-        d, n_negatives=3, anchor_filter=(F.col("doc_id") % 100 == 0)
-    )
-
-
-SQL_NEGATIVE_SAMPLES = """
-WITH reps AS (
-  SELECT source AS g,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-         % 64 AS b,
-         MIN(doc_id) AS negative_id
-  FROM documents GROUP BY 1, 2
-),
-slots AS (
-  SELECT doc_id AS anchor_id, source AS g, j AS neg_slot,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#'
-                                 || CAST(j AS VARCHAR)), 1, 15) AS BIGINT)
-         % 64 AS b
-  FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS j)
-  WHERE doc_id % 100 = 0
-)
-SELECT anchor_id, neg_slot, negative_id
-FROM slots JOIN reps USING (g, b)
-WHERE negative_id <> anchor_id
-"""
-
-
-
 # ------------------------------------------------------------ round-5 batch 42
 # Privacy risk census and EXACT set-similarity join (prefix filtering).
 
@@ -3721,7 +3388,7 @@ FROM classes
 
 
 # ------------------------------------------------------------ round-5 batch 44
-# Homoglyph spoof census and Neyman-optimal sample allocation.
+# Homoglyph spoof census.
 
 
 def q_homoglyph_spoof(spark, sf_dir):
@@ -3761,92 +3428,6 @@ FROM staged GROUP BY source
 """
 
 
-def q_neyman_plan(spark, sf_dir):
-    """Neyman-optimal allocation plan for a 1000-doc stratified sample
-    over languages, y = n_chars (operators/metrics.py:
-    neyman_allocation) — variance-minimizing budget split; exact
-    decimal moments, one sqrt, floored allocation with the remainder
-    reported."""
-    from ..operators.metrics import neyman_allocation
-
-    return neyman_allocation(
-        _t(spark, sf_dir, "documents"), "lang", "n_chars", total_k=1000
-    )
-
-
-SQL_NEYMAN_PLAN = """
-WITH m AS (
-  SELECT lang AS stratum, COUNT(*) AS n,
-         SUM(CAST(n_chars AS DECIMAL(38,0))) AS sy,
-         SUM(CAST(CAST(n_chars AS DECIMAL(19,0))
-                  * CAST(n_chars AS DECIMAL(18,0)) AS DECIMAL(38,0))) AS syy
-  FROM documents GROUP BY 1
-),
-staged AS (
-  SELECT stratum, n,
-         sqrt(greatest(
-           CAST(syy AS DOUBLE) / CAST(n AS DOUBLE)
-           - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-             * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)), 0.0)) AS sd
-  FROM m
-),
-w AS (SELECT stratum, n, sd, CAST(n AS DOUBLE) * sd AS wgt FROM staged),
-tot AS (SELECT SUM(wgt) AS tw FROM w)
-SELECT stratum, n, round(sd, 6) AS sd,
-       CAST(floor(wgt * 1000.0 / tw) AS BIGINT) AS alloc_k,
-       round(wgt * 1000.0 / tw - floor(wgt * 1000.0 / tw), 6) AS alloc_frac
-FROM w CROSS JOIN tot
-"""
-
-
-
-# ------------------------------------------------------------ round-5 batch 45
-# Data-contract gate.
-
-
-def q_contract_checks(spark, sf_dir):
-    """Declarative data-contract gate over documents
-    (operators/metrics.py:contract_report): six rules — id/lang/source
-    non-null, n_chars in range, text non-empty, doc_id unique — ALL
-    evaluated in one wide aggregate over one scan, unpivoted to a
-    per-rule pass/fail report."""
-    from ..operators.metrics import contract_report
-
-    d = _t(spark, sf_dir, "documents")
-    rules = {
-        "doc_id_not_null": F.col("doc_id").isNull(),
-        "lang_not_null": F.col("lang").isNull(),
-        "source_not_null": F.col("source").isNull(),
-        "n_chars_in_range": F.col("n_chars").isNull()
-        | (F.col("n_chars") < 0) | (F.col("n_chars") > 1_000_000),
-        "text_not_empty": F.coalesce(F.col("text"), F.lit("")) == "",
-    }
-    return contract_report(d, rules, unique_cols=["doc_id"])
-
-
-SQL_CONTRACT_CHECKS = """
-WITH wide AS (
-  SELECT COUNT(*) AS n,
-         SUM(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END) AS v_id,
-         SUM(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS v_lang,
-         SUM(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS v_source,
-         SUM(CASE WHEN n_chars IS NULL OR n_chars < 0 OR n_chars > 1000000
-                  THEN 1 ELSE 0 END) AS v_range,
-         SUM(CASE WHEN coalesce(text, '') = '' THEN 1 ELSE 0 END) AS v_text,
-         COUNT(DISTINCT doc_id) AS d_id
-  FROM documents
-)
-SELECT rule, n_violations, n_violations = 0 AS passed FROM (
-  SELECT 'doc_id_not_null' AS rule, v_id AS n_violations FROM wide
-  UNION ALL SELECT 'lang_not_null', v_lang FROM wide
-  UNION ALL SELECT 'source_not_null', v_source FROM wide
-  UNION ALL SELECT 'n_chars_in_range', v_range FROM wide
-  UNION ALL SELECT 'text_not_empty', v_text FROM wide
-  UNION ALL SELECT 'unique:doc_id', n - d_id FROM wide
-)
-"""
-
-
 # ------------------------------------------------------------ round-5 batch 53
 # Power-law tail index.
 
@@ -3883,113 +3464,7 @@ FROM kept
 
 
 # ------------------------------------------------------------ round-5 batch 57
-# THETA-sketch vocabulary sizes, then the later dedup and sampling
-# reports.
-
-
-def q_theta_vocab_by_source(spark, sf_dir):
-    """Per-source vocabulary size by fixed-threshold THETA sampling
-    (operators/sketches.py:theta_distinct_by) — the coordinated-sample
-    distinct sketch: one map-side filter keeps the terms hashing below
-    2^32/64, every source's estimate reads off the same sample, and the
-    exchange carries ~1/64 of the vocabulary. The exact count rides
-    alongside as the audit column with the signed relative error
-    surfaced, not asserted."""
-    from ..functions.tokenize import WS_PLUS
-    from ..operators.sketches import theta_distinct_by
-
-    d = _t(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda x: F.length(x) > 0)
-    ex = d.select("source", F.explode(words).alias("term"))
-    return theta_distinct_by(ex, "term", "source")
-
-
-SQL_THETA_VOCAB_BY_SOURCE = f"""
-WITH ex AS (
-  SELECT source, unnest({_WORDS_WS_SQL}) AS v FROM documents
-),
-h AS (
-  SELECT source AS g,
-         CAST('0x' || substr(md5('th:' || v), 1, 8) AS BIGINT) AS h, v
-  FROM ex
-),
-samp AS (
-  SELECT g, COUNT(*) AS n_sampled
-  FROM (SELECT DISTINCT g, h FROM h WHERE h < 67108864)
-  GROUP BY g
-),
-exact AS (
-  SELECT g, COUNT(DISTINCT v) AS exact_distinct FROM h GROUP BY g
-)
-SELECT exact.g AS source,
-       coalesce(n_sampled, 0) AS n_sampled,
-       CAST(coalesce(n_sampled, 0) * 64 AS BIGINT) AS theta_estimate,
-       exact_distinct,
-       round((CAST(coalesce(n_sampled, 0) * 64 AS DOUBLE)
-              - CAST(exact_distinct AS DOUBLE))
-             / CAST(exact_distinct AS DOUBLE), 6) AS rel_error
-FROM exact LEFT JOIN samp ON exact.g = samp.g
-"""
-
-
-def q_theta_vocab_overlap(spark, sf_dir):
-    """Vocabulary overlap between the even- and odd-doc_id halves of the
-    corpus by intersecting two coordinated theta samples
-    (operators/sketches.py:theta_set_overlap) — the set-algebra query
-    HLL answers only by inclusion-exclusion: because both
-    halves keep exactly the terms hashing below the SAME threshold,
-    sample(A) ∩ sample(B) IS sample(A∩B) — a set identity — so the
-    intersection error scales with the overlap itself, not with the
-    union. Two map-side filters + hash-grain distincts; the semi-join
-    touches ~1/64 of the vocabulary."""
-    from ..functions.tokenize import WS_PLUS
-    from ..operators.sketches import theta_set_overlap
-
-    d = _t(spark, sf_dir, "documents")
-    words = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), WS_PLUS),
-                     lambda x: F.length(x) > 0)
-    ex = d.select("doc_id", F.explode(words).alias("term"))
-    a = ex.filter(F.col("doc_id") % 2 == 0)
-    b = ex.filter(F.col("doc_id") % 2 == 1)
-    return theta_set_overlap(a, b, "term")
-
-
-SQL_THETA_VOCAB_OVERLAP = f"""
-WITH ex AS (
-  SELECT doc_id, unnest({_WORDS_WS_SQL}) AS v FROM documents
-),
-sa AS (
-  SELECT DISTINCT CAST('0x' || substr(md5('th:' || v), 1, 8) AS BIGINT) AS h
-  FROM ex WHERE doc_id % 2 = 0
-    AND CAST('0x' || substr(md5('th:' || v), 1, 8) AS BIGINT) < 67108864
-),
-sb AS (
-  SELECT DISTINCT CAST('0x' || substr(md5('th:' || v), 1, 8) AS BIGINT) AS h
-  FROM ex WHERE doc_id % 2 = 1
-    AND CAST('0x' || substr(md5('th:' || v), 1, 8) AS BIGINT) < 67108864
-),
-na AS (SELECT COUNT(*) AS na FROM sa),
-nb AS (SELECT COUNT(*) AS nb FROM sb),
-ni AS (SELECT COUNT(*) AS ni FROM sa WHERE h IN (SELECT h FROM sb)),
-exact AS (
-  SELECT COUNT(*) AS exact_intersect FROM (
-    SELECT DISTINCT v FROM ex WHERE doc_id % 2 = 0
-    INTERSECT
-    SELECT DISTINCT v FROM ex WHERE doc_id % 2 = 1
-  )
-)
-SELECT CAST(na * 64 AS BIGINT) AS est_a,
-       CAST(nb * 64 AS BIGINT) AS est_b,
-       CAST((na + nb - ni) * 64 AS BIGINT) AS est_union,
-       CAST(ni * 64 AS BIGINT) AS est_intersect,
-       CAST((na - ni) * 64 AS BIGINT) AS est_a_only,
-       exact_intersect,
-       round(CAST(ni * 64 - exact_intersect AS DOUBLE)
-             / CAST(greatest(exact_intersect, 1) AS DOUBLE), 6)
-         AS rel_error_intersect
-FROM na, nb, ni, exact
-"""
+# The later dedup and sampling reports.
 
 
 def q_cdc_chunk_census(spark, sf_dir):
@@ -4332,86 +3807,6 @@ FROM (
 """
 
 
-def q_slot_apportionment(spark, sf_dir):
-    """Hamilton largest-remainder apportionment of a 1000-slot crawl /
-    sampling budget across sources, weighted by kept-doc count under
-    the Gopher rule — the quota-allocation primitive behind politeness
-    budgets and mixture quotas, done EXACTLY: base = floor(w·B/W) via
-    integer division, the B − Σbase leftover slots go to the largest
-    remainders (ties → source asc), so the slot column sums to B
-    precisely — no float rounding drift ever leaves slots unassigned.
-    All-integer; the remainder rank is a window over the ≤#sources
-    aggregate, never the corpus."""
-    from ..functions.heuristics import heuristic_columns
-
-    d = _t(spark, sf_dir, "documents")
-    h = heuristic_columns("text")
-    keep = (
-        (F.round(h["symbol_ratio"], 9) <= 0.1)
-        & (h["n_words"].cast("long") >= 5)
-        & (F.round(h["dup_line_frac"], 9) <= 0.3)
-    )
-    B = 1000
-    per = d.groupBy("source").agg(
-        F.sum(F.when(keep, 1).otherwise(0)).alias("w")
-    )
-    tot = per.agg(F.sum("w").alias("wtot"), F.count("*").alias("_g"))
-    j = per.crossJoin(F.broadcast(tot))
-    j = j.select(
-        "source", "w",
-        F.expr(f"(w * {B}) DIV wtot").alias("base"),
-        F.expr(f"(w * {B}) % wtot").alias("rem"),
-    )
-    used = j.agg(F.sum("base").alias("_used")).collect()[0]["_used"]
-    leftover = B - int(used)
-    wr = Window.orderBy(F.desc("rem"), F.asc("source"))
-    return (
-        j.withColumn("_rk", F.row_number().over(wr))
-        .select(
-            "source", "w", "base", "rem",
-            (F.col("base")
-             + F.when(F.col("_rk") <= leftover, 1).otherwise(0)).alias("slots"),
-        )
-    )
-
-
-SQL_SLOT_APPORTIONMENT = f"""
-WITH base AS (
-  SELECT source, coalesce(text, '') AS t, {_WORDS_WS_SQL} AS ws
-  FROM documents
-),
-ln_t AS (
-  SELECT source, t, ws,
-         list_filter(regexp_split_to_array(t, '{_WS_CLASS_SQL}*\n{_WS_CLASS_SQL}*'),
-                     x -> x <> '') AS lines
-  FROM base
-),
-g AS (
-  SELECT source,
-         CASE WHEN (CASE WHEN len(ws) = 0 THEN 0.0
-               ELSE CAST(length(t) - length(translate(t, {_SYM_TRANSLATE_SQL}, ''))
-                         AS DOUBLE) / len(ws) END) <= 0.1
-          AND len(ws) >= 5
-          AND (CASE WHEN len(lines) <= 1 THEN 0.0
-               ELSE CAST(len(lines) - len(list_distinct(lines)) AS DOUBLE)
-                    / len(lines) END) <= 0.3
-         THEN 1 ELSE 0 END AS kp
-  FROM ln_t
-),
-per AS (SELECT source, SUM(kp) AS w FROM g GROUP BY source),
-tot AS (SELECT SUM(w) AS ww FROM per),
-j AS (
-  SELECT source, w, (w * 1000) // ww AS base, (w * 1000) % ww AS rem
-  FROM per CROSS JOIN tot
-),
-lo AS (SELECT 1000 - SUM(base) AS leftover FROM j)
-SELECT source, w, base, rem,
-       base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS slots
-FROM (SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS rk FROM j)
-CROSS JOIN lo
-"""
-
-
 def q_dedup_cc_incr(spark, sf_dir):
     """Incremental connected-component maintenance proven ≡ full
     recompute (operators/dedup.py:cc_incremental): labels built from
@@ -4481,44 +3876,6 @@ FROM per GROUP BY band_id ORDER BY band_id
 """
 
 
-def q_winnow_overlap(spark, sf_dir):
-    """MOSS-style partial-overlap pairs by shared winnowing
-    fingerprints (operators/textstats.py:winnow_overlap_pairs): doc
-    pairs sharing ≥2 of their winnowed word-shingle fingerprints — the
-    copied-PASSAGE detector whole-doc Jaccard reads as ~0 (a single
-    shared run of ≥ n+w−1 words is guaranteed to fire by the winnowing
-    theorem, while only ~2/(w+1) of shingles are kept). Fingerprints
-    are md5-derived 60-bit mins, so the whole selection is
-    oracle-checkable; the detector is an equi-self-join with the
-    standard hot-key discipline."""
-    from ..operators.textstats import winnow_overlap_pairs
-
-    return winnow_overlap_pairs(_t(spark, sf_dir, "documents"),
-                                min_shared=2)
-
-
-SQL_WINNOW_OVERLAP = f"""
-WITH sh AS (SELECT doc_id, {_SHINGLES_SQL} AS s FROM documents),
-h AS (
-  SELECT doc_id,
-         [CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) FOR x IN s] AS hs
-  FROM sh
-),
-fp AS (
-  SELECT doc_id,
-         list_distinct(
-           list_transform(range(1, greatest(len(hs) - 3, 1) + 1),
-                          i -> list_min(hs[i:i+3]))) AS fps
-  FROM h
-),
-ex AS (SELECT doc_id, unnest(fps) AS f FROM fp)
-SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS n_shared_fp
-FROM ex l JOIN ex r ON l.f = r.f AND l.doc_id < r.doc_id
-GROUP BY 1, 2
-HAVING COUNT(*) >= 2
-"""
-
-
 # The query registry, one entry per query: name → (Spark query, DuckDB
 # twin). A twin is its SQL string; a zero-argument function that builds
 # it, called only by oracle_map() so that fetching the oracle SQL needs
@@ -4584,38 +3941,27 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     ),
     "dedup_canonical": (q_dedup_canonical, SQL_DEDUP_CANONICAL),
     "pii_prevalence": (q_pii_prevalence, _pii_prevalence_sql),
-    "dedup_spans": (q_dedup_spans, SQL_DEDUP_SPANS),
-    "dedup_spans_within": (q_dedup_spans_within, SQL_DEDUP_SPANS_WITHIN),
     "dedup_minhash_incr": (q_dedup_minhash_incr, SQL_DEDUP_MINHASH_INCR),
     "domain_blocklist_filter": (q_domain_blocklist, SQL_DOMAIN_BLOCKLIST),
     "url_dedup_lastwins": (q_url_dedup, _sql_url_dedup),
     "split_leak_safe": (q_split_leak_safe, SQL_SPLIT_LEAK_SAFE),
     "normalize_punct": (q_normalize_punct, _sql_normalize_punct),
     "zipf_slope": (q_zipf_slope, SQL_ZIPF_SLOPE),
-    "hll_vocab": (q_hll_vocab, SQL_HLL_VOCAB),
-    "cms_terms": (q_cms_terms, SQL_CMS_TERMS),
     "gini_sources": (q_gini_sources, SQL_GINI_SOURCES),
     "wrs_sample": (q_wrs_sample, SQL_WRS_SAMPLE),
     "lang_source_mi": (q_lang_source_mi, SQL_LANG_SOURCE_MI),
     "fd_census": (q_fd_census, SQL_FD_CENSUS),
-    "negative_samples": (q_negative_samples, SQL_NEGATIVE_SAMPLES),
     "k_anon_docs": (q_k_anon_docs, SQL_K_ANON_DOCS),
     "homoglyph_spoof": (q_homoglyph_spoof, SQL_HOMOGLYPH_SPOOF),
-    "neyman_plan": (q_neyman_plan, SQL_NEYMAN_PLAN),
-    "contract_checks": (q_contract_checks, SQL_CONTRACT_CHECKS),
     "hill_tail": (q_hill_tail, SQL_HILL_TAIL),
-    "theta_vocab_by_source": (q_theta_vocab_by_source, SQL_THETA_VOCAB_BY_SOURCE),
-    "theta_vocab_overlap": (q_theta_vocab_overlap, SQL_THETA_VOCAB_OVERLAP),
     "cdc_chunk_census": (q_cdc_chunk_census, SQL_CDC_CHUNK_CENSUS),
     "dedup_cc_best": (q_dedup_cc_best, SQL_DEDUP_CC_BEST),
     "quantile_normalize": (q_quantile_normalize, SQL_QUANTILE_NORMALIZE),
     "coverage_select": (q_coverage_select, SQL_COVERAGE_SELECT),
     "lsh_recall_eval": (q_lsh_recall_eval, SQL_LSH_RECALL_EVAL),
     "split_by_cluster": (q_split_by_cluster, SQL_SPLIT_BY_CLUSTER),
-    "slot_apportionment": (q_slot_apportionment, SQL_SLOT_APPORTIONMENT),
     "dedup_cc_incr": (q_dedup_cc_incr, SQL_DEDUP_CC_INCR),
     "lsh_candidate_forecast": (q_lsh_candidate_forecast, SQL_LSH_CANDIDATE_FORECAST),
-    "winnow_overlap": (q_winnow_overlap, SQL_WINNOW_OVERLAP),
     "flesch_reading": (q_flesch_reading, SQL_FLESCH_READING),
     "ks_length_drift": (q_ks_length_drift, SQL_KS_LENGTH_DRIFT),
     "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
@@ -4624,9 +3970,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
     "boilerplate_prefix": (q_boilerplate_prefix, SQL_BOILERPLATE_PREFIX),
     "keep_rate_curve": (q_keep_rate_curve, _sql_keep_rate_curve),
     "unigram_kl_drift": (q_unigram_kl_drift, SQL_UNIGRAM_KL_DRIFT),
-    "stream_gopher_score": (q_stream_gopher_score, SQL_STREAM_GOPHER_SCORE),
     "keep_rate_by_lang": (q_keep_rate_by_lang, _sql_keep_rate_by_lang),
-    "zorder_values": (q_zorder_values, _sql_zorder_values),
     "chunk_plan_strided": (q_chunk_plan_strided, SQL_CHUNK_STRIDED),
     "mixture_temperature": (q_mixture_temperature, SQL_MIXTURE_TEMPERATURE),
     "dedup_exact_best": (q_dedup_exact_best, SQL_DEDUP_EXACT_BEST),
